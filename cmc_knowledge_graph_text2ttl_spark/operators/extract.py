@@ -6,7 +6,7 @@ become in-process pure functions executed inside one Arrow-batched
 ``mapInPandas`` stage, dispatched on content sniffing. The per-row invariant
 is BYTE-IDENTICAL text per url: extraction is a deterministic pure function
 of the input bytes, so any partitioning / parallelism / rerun yields the
-same bytes (tested in tests/test_distributed_equivalence.py).
+same bytes (tested in tests/test_pipeline_spark.py).
 
 Semantics preserved from the reference:
 
@@ -30,9 +30,7 @@ import re
 
 from html import escape as _xml_escape
 from html.parser import HTMLParser
-from typing import Iterator, List, Optional
-
-import pandas as pd
+from typing import List, Optional
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
@@ -41,6 +39,8 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
+
+from .columns import map_rows
 
 EXTRACTED_SCHEMA = StructType(
     [
@@ -494,6 +494,14 @@ def extract_one(data: Optional[bytes]) -> tuple:
         return None, ctype, f"{type(ex).__name__}: {ex}"
 
 
+def resolve_text(raw: Optional[bytes], pre: Optional[str]) -> tuple:
+    """(text, content_type, error) for one page: a non-empty pre-filled
+    ``text`` (pre-textized corpora) wins, otherwise ``raw`` is extracted."""
+    if isinstance(pre, str) and pre:
+        return pre, "pretextized", None
+    return extract_one(bytes(raw) if raw is not None else None)
+
+
 def extract_text(pages: DataFrame, repartition_by_url: Optional[int] = None) -> DataFrame:
     """pages(url, warc_ts, html, text, lang) → extracted text table.
 
@@ -507,32 +515,12 @@ def extract_text(pages: DataFrame, repartition_by_url: Optional[int] = None) -> 
 
         pages = pages.repartition(repartition_by_url, F.xxhash64("url"))
 
-    cols = ["url", "warc_ts", "html", "text", "lang"]
+    def row_fn(url, warc_ts, raw, pre, lang):
+        text, ctype, err = resolve_text(raw, pre)
+        yield (url, warc_ts, text, lang, ctype, err)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            texts, ctypes, errors = [], [], []
-            for raw, pre in zip(pdf["html"], pdf["text"]):
-                if isinstance(pre, str) and pre:
-                    texts.append(pre)
-                    ctypes.append("pretextized")
-                    errors.append(None)
-                    continue
-                text, ctype, err = extract_one(
-                    bytes(raw) if raw is not None else None
-                )
-                texts.append(text)
-                ctypes.append(ctype)
-                errors.append(err)
-            yield pd.DataFrame(
-                {
-                    "url": pdf["url"],
-                    "warc_ts": pdf["warc_ts"],
-                    "text": texts,
-                    "lang": pdf["lang"],
-                    "content_type": ctypes,
-                    "extract_error": errors,
-                }
-            )
-
-    return pages.select(*cols).mapInPandas(run, schema=EXTRACTED_SCHEMA)
+    return map_rows(
+        pages.select("url", "warc_ts", "html", "text", "lang"),
+        EXTRACTED_SCHEMA,
+        lambda: row_fn,
+    )

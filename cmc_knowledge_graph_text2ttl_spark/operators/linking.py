@@ -117,17 +117,6 @@ def link_mentions(
     return out.withColumn("linked", F.col("canonical_iri").isNotNull())
 
 
-def extract_mentions(
-    triples: DataFrame, mention_pred: str
-) -> DataFrame:
-    """Pull mention literals for a predicate out of the triples table."""
-    return triples.filter(
-        (F.col("pred") == mention_pred) & (F.col("obj_kind") == "literal")
-    ).select(
-        F.col("subj").alias("doc_iri"), F.col("obj_lexical").alias("mention")
-    )
-
-
 def load_sameas_csv(spark: SparkSession, path: str) -> DataFrame:
     """sameas_edges.csv (src_iri,dst_iri) → edges DataFrame."""
     return (

@@ -26,9 +26,7 @@ import hashlib
 import re
 import struct
 import zlib
-from typing import Callable, Iterator, List, Optional, Sequence, Tuple
-
-import pandas as pd
+from typing import Callable, List, Optional, Sequence, Tuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -41,6 +39,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from .columns import map_rows
 
 MEDIA_META_SCHEMA = StructType(
     [
@@ -292,23 +292,21 @@ def image_exif(
     the orientation/provenance signals an image-dedup or curation
     pipeline keys on. Bytes-local like media_metadata; rows without
     EXIF yield all-null fields."""
+    return _header_facts(df, blob_col, id_col, EXIF_SCHEMA, parse_exif)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {f.name: [] for f in EXIF_SCHEMA.fields}
-            for mid, raw in zip(pdf[id_col], pdf[blob_col]):
-                tags = parse_exif(bytes(raw)) if raw is not None else {}
-                rows["media_id"].append(str(mid))
-                ori = tags.get("orientation")
-                rows["orientation"].append(
-                    int(ori) if ori is not None else None
-                )
-                rows["make"].append(tags.get("make"))
-                rows["model"].append(tags.get("model"))
-                rows["taken_at"].append(tags.get("taken_at"))
-            yield pd.DataFrame(rows)
 
-    return df.select(id_col, blob_col).mapInPandas(run, schema=EXIF_SCHEMA)
+def _header_facts(
+    df: DataFrame, blob_col: str, id_col: str, schema: StructType, parse: Callable
+) -> DataFrame:
+    """One row per blob: media_id, then ``parse(blob)``'s value for each
+    other field of ``schema`` (null when absent or when the blob is null)."""
+    keys = schema.fieldNames()[1:]
+
+    def row_fn(mid, raw):
+        facts = parse(bytes(raw)) if raw is not None else {}
+        yield (str(mid),) + tuple(facts.get(k) for k in keys)
+
+    return map_rows(df.select(id_col, blob_col), schema, lambda: row_fn)
 
 
 def encode_jpeg_exif(
@@ -528,59 +526,53 @@ def scrub_exif_gps(
     never an error (same per-row containment as the other media ops).
     """
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs, flags = [], [], []
-            for mid, raw in zip(pdf[id_col], pdf[blob_col]):
-                data = bytes(raw) if raw is not None else b""
-                out, had = data, False
-                if data[:3] == b"\xff\xd8\xff":
-                    pos = 2
-                    while pos + 4 <= len(data):
-                        if data[pos] != 0xFF:
-                            break
-                        marker = data[pos + 1]
-                        if marker in (0xD8, 0xD9) or 0xD0 <= marker <= 0xD7:
-                            pos += 2
-                            continue
-                        (ln,) = struct.unpack(">H", data[pos + 2 : pos + 4])
-                        if (
-                            marker == 0xE1
-                            and data[pos + 4 : pos + 10] == b"Exif\x00\x00"
-                        ):
-                            tiff = data[pos + 10 : pos + 2 + ln]
-                            try:
-                                new_tiff, had = strip_gps_tiff(tiff)
-                            except ValueError:
-                                # GPS present but not safely rewritable
-                                # in place: drop the ENTIRE APP1 segment
-                                # — losing legit EXIF beats publishing
-                                # coordinates flagged as clean
-                                out = data[:pos] + data[pos + 2 + ln :]
-                                had = True
-                                break
-                            if had:
-                                body = b"Exif\x00\x00" + new_tiff
-                                out = (
-                                    data[:pos]
-                                    + b"\xff\xe1"
-                                    + struct.pack(">H", len(body) + 2)
-                                    + body
-                                    + data[pos + 2 + ln :]
-                                )
-                            break
-                        if marker == 0xDA:
-                            break
-                        pos += 2 + ln
-                ids.append(str(mid))
-                blobs.append(out)
-                flags.append(had)
-            yield pd.DataFrame(
-                {"media_id": ids, "blob": blobs, "had_gps": flags}
-            )
+    def row_fn(mid, raw):
+        data = bytes(raw) if raw is not None else b""
+        out, had = data, False
+        if data[:3] == b"\xff\xd8\xff":
+            pos = 2
+            while pos + 4 <= len(data):
+                if data[pos] != 0xFF:
+                    break
+                marker = data[pos + 1]
+                if marker in (0xD8, 0xD9) or 0xD0 <= marker <= 0xD7:
+                    pos += 2
+                    continue
+                (ln,) = struct.unpack(">H", data[pos + 2 : pos + 4])
+                if (
+                    marker == 0xE1
+                    and data[pos + 4 : pos + 10] == b"Exif\x00\x00"
+                ):
+                    tiff = data[pos + 10 : pos + 2 + ln]
+                    try:
+                        new_tiff, had = strip_gps_tiff(tiff)
+                    except ValueError:
+                        # GPS present but not safely rewritable
+                        # in place: drop the ENTIRE APP1 segment
+                        # — losing legit EXIF beats publishing
+                        # coordinates flagged as clean
+                        out = data[:pos] + data[pos + 2 + ln :]
+                        had = True
+                        break
+                    if had:
+                        body = b"Exif\x00\x00" + new_tiff
+                        out = (
+                            data[:pos]
+                            + b"\xff\xe1"
+                            + struct.pack(">H", len(body) + 2)
+                            + body
+                            + data[pos + 2 + ln :]
+                        )
+                    break
+                if marker == 0xDA:
+                    break
+                pos += 2 + ln
+        yield (str(mid), out, had)
 
-    return df.select(id_col, blob_col).mapInPandas(
-        run, schema="media_id string, blob binary, had_gps boolean"
+    return map_rows(
+        df.select(id_col, blob_col),
+        "media_id string, blob binary, had_gps boolean",
+        lambda: row_fn,
     )
 
 
@@ -612,25 +604,23 @@ def media_metadata(
 ) -> DataFrame:
     """binary column → typed metadata table (no decode, bytes-local)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {f.name: [] for f in MEDIA_META_SCHEMA.fields}
-            for mid, raw in zip(pdf[id_col], pdf[blob_col]):
-                data = bytes(raw) if raw is not None else None
-                mtype, fmt, w, h = sniff_media(data)
-                rows["media_id"].append(str(mid))
-                rows["media_type"].append(mtype)
-                rows["format"].append(fmt)
-                rows["n_bytes"].append(len(data) if data else 0)
-                rows["digest"].append(
-                    hashlib.sha256(data).hexdigest() if data else None
-                )
-                rows["width"].append(int(w) if w is not None else None)
-                rows["height"].append(int(h) if h is not None else None)
-                rows["error"].append(None if data else "empty blob")
-            yield pd.DataFrame(rows)
+    def row_fn(mid, raw):
+        data = bytes(raw) if raw is not None else None
+        mtype, fmt, w, h = sniff_media(data)
+        yield (
+            str(mid),
+            mtype,
+            fmt,
+            len(data) if data else 0,
+            hashlib.sha256(data).hexdigest() if data else None,
+            int(w) if w is not None else None,
+            int(h) if h is not None else None,
+            None if data else "empty blob",
+        )
 
-    return df.select(id_col, blob_col).mapInPandas(run, schema=MEDIA_META_SCHEMA)
+    return map_rows(
+        df.select(id_col, blob_col), MEDIA_META_SCHEMA, lambda: row_fn
+    )
 
 
 # PNG color type → samples per pixel AS STORED (palette = 1 index)
@@ -2133,49 +2123,30 @@ def sample_frames(
 
     dec = decoder or default_decoder
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: List[tuple] = []
-            for mid, raw in zip(pdf[id_col], pdf[blob_col]):
-                try:
-                    sw, sh, frames = dec(bytes(raw))
-                except (ValueError, NotImplementedError, zlib.error):
-                    # zlib.error: APNG/PNG frame streams surface it raw
-                    continue
-                total = len(frames)
-                if total <= n_frames:
-                    picks = list(range(total))
-                else:
-                    picks = sorted(
-                        {
-                            k * (total - 1) // (n_frames - 1)
-                            if n_frames > 1
-                            else 0
-                            for k in range(n_frames)
-                        }
-                    )
-                n_px = sw * sh
-                for fi in picks:
-                    px = frames[fi]
-                    for c in range(3):
-                        s = sum(px[c::3])
-                        rows.append(
-                            (
-                                str(mid),
-                                fi,
-                                total,
-                                sw,
-                                sh,
-                                c,
-                                s / n_px if n_px else 0.0,
-                            )
-                        )
-            if rows:
-                yield pd.DataFrame(
-                    rows, columns=[f.name for f in FRAME_SCHEMA.fields]
-                )
+    def row_fn(mid, raw):
+        try:
+            sw, sh, frames = dec(bytes(raw))
+        except (ValueError, NotImplementedError, zlib.error):
+            # zlib.error: APNG/PNG frame streams surface it raw
+            return
+        total = len(frames)
+        if total <= n_frames:
+            picks = list(range(total))
+        else:
+            picks = sorted(
+                {
+                    k * (total - 1) // (n_frames - 1) if n_frames > 1 else 0
+                    for k in range(n_frames)
+                }
+            )
+        n_px = sw * sh
+        for fi in picks:
+            px = frames[fi]
+            for c in range(3):
+                s = sum(px[c::3])
+                yield (str(mid), fi, total, sw, sh, c, s / n_px if n_px else 0.0)
 
-    return df.select(id_col, blob_col).mapInPandas(run, schema=FRAME_SCHEMA)
+    return map_rows(df.select(id_col, blob_col), FRAME_SCHEMA, lambda: row_fn)
 
 
 def encode_gif_animated(
@@ -3029,21 +3000,7 @@ def audio_info(
 ) -> DataFrame:
     """binary column → header-only MP3 facts (:func:`mp3_info`) —
     bytes-local, no decode; non-MP3 rows yield all-null fields."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {f.name: [] for f in AUDIO_INFO_SCHEMA.fields}
-            for mid, raw in zip(pdf[id_col], pdf[blob_col]):
-                info = mp3_info(bytes(raw)) if raw is not None else {}
-                rows["media_id"].append(str(mid))
-                rows["bitrate_kbps"].append(info.get("bitrate_kbps"))
-                rows["sample_rate"].append(info.get("sample_rate"))
-                rows["channels"].append(info.get("channels"))
-                rows["duration_ms"].append(info.get("duration_ms"))
-                rows["id3_bytes"].append(info.get("id3_bytes"))
-            yield pd.DataFrame(rows)
-
-    return df.select(id_col, blob_col).mapInPandas(run, schema=AUDIO_INFO_SCHEMA)
+    return _header_facts(df, blob_col, id_col, AUDIO_INFO_SCHEMA, mp3_info)
 
 
 VIDEO_INFO_SCHEMA = StructType(
@@ -3063,24 +3020,7 @@ def video_info(
 ) -> DataFrame:
     """binary column → header-only MP4 facts (:func:`mp4_info`) —
     bytes-local, no decode; non-MP4 rows yield all-null fields."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {f.name: [] for f in VIDEO_INFO_SCHEMA.fields}
-            for mid, raw in zip(pdf[id_col], pdf[blob_col]):
-                info = mp4_info(bytes(raw)) if raw is not None else {}
-                rows["media_id"].append(str(mid))
-                rows["duration_ms"].append(info.get("duration_ms"))
-                rows["width"].append(info.get("width"))
-                rows["height"].append(info.get("height"))
-                nt = info.get("n_tracks")
-                rows["n_tracks"].append(int(nt) if nt is not None else None)
-                rows["codecs"].append(info.get("codecs"))
-            yield pd.DataFrame(rows)
-
-    return df.select(id_col, blob_col).mapInPandas(
-        run, schema=VIDEO_INFO_SCHEMA
-    )
+    return _header_facts(df, blob_col, id_col, VIDEO_INFO_SCHEMA, mp4_info)
 
 
 AUDIO_TAGS_SCHEMA = StructType(
@@ -3099,20 +3039,7 @@ def audio_tags(
 ) -> DataFrame:
     """binary column → ID3v2 text-frame provenance (:func:`id3_tags`);
     untagged rows yield all-null fields."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {f.name: [] for f in AUDIO_TAGS_SCHEMA.fields}
-            for mid, raw in zip(pdf[id_col], pdf[blob_col]):
-                t = id3_tags(bytes(raw)) if raw is not None else {}
-                rows["media_id"].append(str(mid))
-                for k in ("title", "artist", "album", "year"):
-                    rows[k].append(t.get(k))
-            yield pd.DataFrame(rows)
-
-    return df.select(id_col, blob_col).mapInPandas(
-        run, schema=AUDIO_TAGS_SCHEMA
-    )
+    return _header_facts(df, blob_col, id_col, AUDIO_TAGS_SCHEMA, id3_tags)
 
 
 AUDIO_FEATURE_SCHEMA = StructType(
@@ -3141,42 +3068,28 @@ def audio_features(
     decode failures land in the ``error`` column instead of poisoning
     the batch (same contract as the image path)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, raw in zip(pdf[id_col], pdf[blob_col]):
-                data = bytes(raw) if raw is not None else b""
-                try:
-                    ch, rate, n_frames, samples = decode_audio(data)
-                    mono = samples[::ch]  # channel 0
-                    n = len(mono)
-                    sum_abs = sum(abs(s) for s in mono)
-                    zc = sum(
-                        1
-                        for i in range(1, n)
-                        if mono[i - 1] * mono[i] < 0
-                    )
-                    rows.append(
-                        (
-                            str(mid), ch, rate, n,
-                            n * 1000 // rate if rate else 0,
-                            sum_abs // n if n else 0,
-                            max((abs(s) for s in mono), default=0),
-                            zc, None,
-                        )
-                    )
-                except (ValueError, NotImplementedError, struct.error) as ex:
-                    rows.append(
-                        (str(mid), None, None, None, None, None, None, None,
-                         f"{type(ex).__name__}: {ex}")
-                    )
-            if rows:
-                yield pd.DataFrame(
-                    rows, columns=[f.name for f in AUDIO_FEATURE_SCHEMA]
-                )
+    def row_fn(mid, raw):
+        data = bytes(raw) if raw is not None else b""
+        try:
+            ch, rate, n_frames, samples = decode_audio(data)
+            mono = samples[::ch]  # channel 0
+            n = len(mono)
+            sum_abs = sum(abs(s) for s in mono)
+            zc = sum(1 for i in range(1, n) if mono[i - 1] * mono[i] < 0)
+            row = (
+                str(mid), ch, rate, n,
+                n * 1000 // rate if rate else 0,
+                sum_abs // n if n else 0,
+                max((abs(s) for s in mono), default=0),
+                zc, None,
+            )
+        except (ValueError, NotImplementedError, struct.error) as ex:
+            row = (str(mid), None, None, None, None, None, None, None,
+                   f"{type(ex).__name__}: {ex}")
+        yield row
 
-    return df.select(id_col, blob_col).mapInPandas(
-        run, schema=AUDIO_FEATURE_SCHEMA
+    return map_rows(
+        df.select(id_col, blob_col), AUDIO_FEATURE_SCHEMA, lambda: row_fn
     )
 
 
@@ -3341,27 +3254,17 @@ def extract_features(
 
     dec = decoder or default_decoder
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, feats, vals = [], [], []
-            for mid, raw in zip(pdf[id_col], pdf[blob_col]):
-                data = bytes(raw) if raw is not None else b""
-                try:
-                    for name, value in dec(data):
-                        ids.append(str(mid))
-                        feats.append(name)
-                        vals.append(float(value))
-                except NotImplementedError:
-                    ids.append(str(mid))
-                    feats.append("decode_unavailable")
-                    vals.append(0.0)
-                except (ValueError, zlib.error):
-                    ids.append(str(mid))
-                    feats.append("decode_error")
-                    vals.append(0.0)
-            yield pd.DataFrame({"media_id": ids, "feature": feats, "value": vals})
+    def row_fn(mid, raw):
+        data = bytes(raw) if raw is not None else b""
+        try:
+            for name, value in dec(data):
+                yield (str(mid), name, float(value))
+        except NotImplementedError:
+            yield (str(mid), "decode_unavailable", 0.0)
+        except (ValueError, zlib.error):
+            yield (str(mid), "decode_error", 0.0)
 
-    return df.select(id_col, blob_col).mapInPandas(run, schema=FEATURE_SCHEMA)
+    return map_rows(df.select(id_col, blob_col), FEATURE_SCHEMA, lambda: row_fn)
 
 
 def resize_nearest(
@@ -3412,26 +3315,17 @@ def resize_media(
     """
     dec = decoder or (lambda data: decode_image(data))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, chans, sums = [], [], []
-            for mid, raw in zip(pdf[id_col], pdf[blob_col]):
-                data = bytes(raw) if raw is not None else b""
-                try:
-                    w, h, ch, px = dec(data)
-                except (NotImplementedError, ValueError, zlib.error):
-                    continue
-                small = resize_nearest(px, w, h, ch, out_w, out_h)
-                for c in range(ch):
-                    ids.append(str(mid))
-                    chans.append(c)
-                    sums.append(sum(small[c::ch]))
-            if ids:
-                yield pd.DataFrame(
-                    {"media_id": ids, "channel": chans, "pix_sum": sums}
-                )
+    def row_fn(mid, raw):
+        data = bytes(raw) if raw is not None else b""
+        try:
+            w, h, ch, px = dec(data)
+        except (NotImplementedError, ValueError, zlib.error):
+            return
+        small = resize_nearest(px, w, h, ch, out_w, out_h)
+        for c in range(ch):
+            yield (str(mid), c, sum(small[c::ch]))
 
-    return df.select(id_col, blob_col).mapInPandas(run, schema=RESIZE_SCHEMA)
+    return map_rows(df.select(id_col, blob_col), RESIZE_SCHEMA, lambda: row_fn)
 
 
 def exact_media_dedup(meta: DataFrame) -> DataFrame:

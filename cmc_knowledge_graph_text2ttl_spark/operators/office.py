@@ -40,7 +40,6 @@ __all__ = [
 
 _SI = re.compile(r"<si>(.*?)</si>", re.S)
 _T = re.compile(r"<t(?: [^>]*)?>(.*?)</t>", re.S)
-_T_EMPTY = re.compile(r"<t(?: [^>]*)?/>")
 _SHEET = re.compile(
     r'<sheet\b[^>]*name="([^"]*)"[^>]*r:id="([^"]*)"[^>]*/?>', re.S
 )

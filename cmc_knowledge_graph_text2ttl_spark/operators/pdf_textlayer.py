@@ -1107,8 +1107,6 @@ def _page_content(doc: _PdfDoc, page: dict) -> bytes:
 # ---------------------------------------------------------------------------
 # Content-stream interpretation
 
-_TEXT_SHOW_OPS = ("Tj", "TJ", "'", '"')
-
 
 def _interpret_content(
     content: bytes, page_height: float

@@ -20,13 +20,13 @@ exact popcount.
 
 from __future__ import annotations
 
-from typing import Iterator, Tuple
+from typing import Tuple
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
+from .columns import map_rows
 from .multimodal import decode_image, resize_nearest
 
 __all__ = [
@@ -87,24 +87,17 @@ def image_dhash(
     skipped like resize_media (their exact-dup story is the metadata
     sha256)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, raw in zip(pdf[id_col], pdf[blob_col]):
-                try:
-                    w, h, ch, px = decode_image(bytes(raw))
-                    bands = dhash_bands(w, h, ch, px)
-                except (ValueError, NotImplementedError, IndexError):
-                    # IndexError: a malformed decode result must skip the
-                    # row, not kill the task (web corpora are adversarial)
-                    continue
-                rows.append((str(mid),) + bands)
-            if rows:
-                yield pd.DataFrame(
-                    rows, columns=[f.name for f in DHASH_SCHEMA.fields]
-                )
+    def row_fn(mid, raw):
+        try:
+            w, h, ch, px = decode_image(bytes(raw))
+            bands = dhash_bands(w, h, ch, px)
+        except (ValueError, NotImplementedError, IndexError):
+            # IndexError: a malformed decode result must skip the
+            # row, not kill the task (web corpora are adversarial)
+            return
+        yield (str(mid),) + bands
 
-    return df.select(id_col, blob_col).mapInPandas(run, schema=DHASH_SCHEMA)
+    return map_rows(df.select(id_col, blob_col), DHASH_SCHEMA, lambda: row_fn)
 
 
 def audio_dhash_bands(
@@ -156,22 +149,15 @@ def audio_fingerprint(
     fingerprint because the decoded samples are bit-identical."""
     from .multimodal import decode_audio
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, raw in zip(pdf[id_col], pdf[blob_col]):
-                try:
-                    ch, _rate, _nf, samples = decode_audio(bytes(raw))
-                except (ValueError, NotImplementedError):
-                    continue
-                rows.append((str(mid),) + audio_dhash_bands(ch, samples))
-            if rows:
-                yield pd.DataFrame(
-                    rows, columns=[f.name for f in AUDIO_DHASH_SCHEMA.fields]
-                )
+    def row_fn(mid, raw):
+        try:
+            ch, _rate, _nf, samples = decode_audio(bytes(raw))
+        except (ValueError, NotImplementedError):
+            return
+        yield (str(mid),) + audio_dhash_bands(ch, samples)
 
-    return df.select(id_col, blob_col).mapInPandas(
-        run, schema=AUDIO_DHASH_SCHEMA
+    return map_rows(
+        df.select(id_col, blob_col), AUDIO_DHASH_SCHEMA, lambda: row_fn
     )
 
 

@@ -23,7 +23,7 @@ Semantics (the de-facto Googlebot rules, documented deviations):
 from __future__ import annotations
 
 import re
-from typing import Iterator, List, Tuple
+from typing import List, Tuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -34,6 +34,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from .columns import map_rows
 
 __all__ = ["parse_robots", "robots_rules", "robots_allowed"]
 
@@ -98,21 +100,13 @@ def robots_rules(
     """(host, robots body) → one row per applicable rule
     (host, allow, prefix, rule_len). Parse once per host; the output is
     the broadcastable policy dimension."""
-    import pandas as pd
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows = []
-            for host, text in zip(pdf[host_col], pdf[text_col]):
-                for allow, prefix in parse_robots(str(text or ""), agent):
-                    rows.append((str(host), allow, prefix, len(prefix)))
-            if rows:
-                yield pd.DataFrame(
-                    rows, columns=["host", "allow", "prefix", "rule_len"]
-                )
+    def row_fn(host, text):
+        for allow, prefix in parse_robots(str(text or ""), agent):
+            yield (str(host), allow, prefix, len(prefix))
 
-    return robots_df.select(host_col, text_col).mapInPandas(
-        run, schema=RULES_SCHEMA
+    return map_rows(
+        robots_df.select(host_col, text_col), RULES_SCHEMA, lambda: row_fn
     )
 
 
@@ -226,21 +220,17 @@ def crawl_delays(
 ) -> DataFrame:
     """(host, delay_ms) — the per-host politeness dimension table:
     Crawl-delay per :func:`parse_crawl_delay`, ``default_ms`` when the
-    host declares none. Parse once per host (mapInPandas, same shape
+    host declares none. Parse once per host (map_rows, same shape
     as robots_rules); the output is broadcastable."""
-    import pandas as pd
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows = []
-            for host, text in zip(pdf[host_col], pdf[text_col]):
-                d = parse_crawl_delay(str(text or ""), agent)
-                rows.append((str(host), default_ms if d is None else d))
-            if rows:
-                yield pd.DataFrame(rows, columns=["host", "delay_ms"])
+    def row_fn(host, text):
+        d = parse_crawl_delay(str(text or ""), agent)
+        yield (str(host), default_ms if d is None else d)
 
-    return robots_df.select(host_col, text_col).mapInPandas(
-        run, schema="host string, delay_ms long"
+    return map_rows(
+        robots_df.select(host_col, text_col),
+        "host string, delay_ms long",
+        lambda: row_fn,
     )
 
 

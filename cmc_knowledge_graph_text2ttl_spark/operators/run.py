@@ -1,11 +1,13 @@
 """Stage 2 — run compiled workflows over extracted pages.
 
 The reference's nested per-document × per-workflow loop (runner.py:341-396)
-becomes ONE ``mapInPandas`` stage: the compiled workflow list (and the
-``select:`` reference graphs) are broadcast once; each Arrow batch of
-documents is interpreted locally on the executor; output is one row per
-(url, workflow) carrying the stats AND the triples as a nested
-``array<struct>`` column.
+becomes ONE row-local kernel (:func:`~.columns.map_rows`): the compiled
+workflow list (and the ``select:`` reference graphs) are broadcast once;
+each Arrow batch of documents is interpreted locally on the executor;
+output is one row per (url, workflow) carrying the stats AND the triples
+as a nested ``array<struct>`` column. ``run_workflows`` (extracted text)
+and ``extract_and_run_workflows`` (html, extracted in the same kernel)
+differ only in the columns they select.
 
 Keeping triples nested at this point is deliberate: all of a document's
 candidate rows are produced together in one task, so best-workflow
@@ -17,9 +19,7 @@ the triple payloads never cross the cluster before the winner filter.
 from __future__ import annotations
 
 import re
-from typing import Dict, Iterator, List, Optional
-
-import pandas as pd
+from typing import Dict, List, Optional
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -37,6 +37,8 @@ from pyspark.sql.types import (
 from ..workflow.compile import WorkflowProgram
 from ..workflow.interpreter import run_document
 from ..workflow.sparql import GraphRow, MiniGraph, make_query_fn
+from .columns import map_rows
+from .extract import resolve_text
 
 TRIPLE_STRUCT = StructType(
     [
@@ -93,10 +95,6 @@ def _results_schema(select_best: bool, collect_log: bool) -> StructType:
     return StructType(fields)
 
 
-RESULTS_SCHEMA_WITH_BEST = StructType(
-    RESULTS_SCHEMA.fields + [StructField("is_best", BooleanType(), False)]
-)
-
 _WS = re.compile(r"\s+")
 _NON_ASCII = re.compile(r"[^\x20-\x7F]")
 
@@ -109,6 +107,94 @@ def doc_vars_for_url(url: str) -> Dict[str, str]:
     trunk = basename.rsplit(".", 1)[0] if "." in basename else basename
     clean = _NON_ASCII.sub("-", _WS.sub("-", trunk))
     return {"doc": clean, "docname": basename, "docpathname": url}
+
+
+def _workflow_kernel(
+    docs: DataFrame,
+    programs: List[WorkflowProgram],
+    graphs: Optional[Dict[str, List[GraphRow]]],
+    extra_vars: Optional[Dict[str, str]],
+    collect_log: bool,
+    select_best: bool,
+) -> DataFrame:
+    """docs(url, text[, extract_error]) or docs(url, html, text) → results.
+
+    With ``html`` the text comes from :func:`~.extract.resolve_text` and
+    rows it cannot extract are skipped; without it, rows with an
+    ``extract_error`` or a non-string ``text`` are skipped.
+    """
+    bc = docs.sparkSession.sparkContext.broadcast(
+        (programs, graphs or {}, extra_vars or {})
+    )
+    fused = "html" in docs.columns
+
+    def make_row_fn():
+        progs, graph_rows, seed_extra = bc.value
+        minigraphs = {k: MiniGraph(v) for k, v in graph_rows.items()}
+        query_fn = make_query_fn(minigraphs) if minigraphs else None
+
+        def run_doc(url: str, text: str):
+            doc_vars = doc_vars_for_url(url)
+            doc_vars.update(seed_extra)
+            results = [
+                run_document(
+                    text,
+                    prog,
+                    doc_vars=dict(doc_vars),
+                    query_fn=query_fn,
+                    collect_log=collect_log,
+                )
+                for prog in progs
+            ]
+            # the reference's stable descending sort (runner.py:402-407):
+            # errors never win, the earliest workflow wins ties
+            best_idx = min(
+                (i for i, r in enumerate(results) if r.error is None),
+                key=lambda i: (
+                    -results[i].no_triples,
+                    -results[i].no_matches,
+                    -results[i].total_match_len,
+                    i,
+                ),
+                default=None,
+            )
+            for i, (prog, res) in enumerate(zip(progs, results)):
+                row = (
+                    url,
+                    prog.name,
+                    prog.index,
+                    res.no_matches,
+                    res.no_triples,
+                    res.total_match_len,
+                    res.score,
+                    res.error,
+                    # struct values as tuples in field order
+                    res.triples,
+                    list(res.texts.items()),
+                    list(res.saved_as),
+                )
+                if collect_log:
+                    row += (list(res.log),)
+                if select_best:
+                    row += (i == best_idx,)
+                yield row
+
+        if fused:
+
+            def row_fn(url, raw, pre):
+                text, _, err = resolve_text(raw, pre)
+                return () if err else run_doc(url, text)
+
+        else:
+
+            def row_fn(url, text, extract_error=None):
+                if isinstance(extract_error, str) and extract_error:
+                    return ()
+                return run_doc(url, text) if isinstance(text, str) else ()
+
+        return row_fn
+
+    return map_rows(docs, _results_schema(select_best, collect_log), make_row_fn)
 
 
 def run_workflows(
@@ -134,95 +220,10 @@ def run_workflows(
     The tie-break is identical to the reference's stable descending sort
     (runner.py:402-407): earliest workflow wins ties.
     """
-    spark = extracted.sparkSession
-    bc = spark.sparkContext.broadcast(
-        {
-            "programs": programs,
-            "graphs": graphs or {},
-            "extra_vars": extra_vars or {},
-        }
-    )
-    schema = _results_schema(select_best, collect_log)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        payload = bc.value
-        progs: List[WorkflowProgram] = payload["programs"]
-        minigraphs = {k: MiniGraph(v) for k, v in payload["graphs"].items()}
-        query_fn = make_query_fn(minigraphs) if minigraphs else None
-        seed_extra = payload["extra_vars"]
-        for pdf in batches:
-            out: Dict[str, list] = {f.name: [] for f in schema.fields}
-            has_err = "extract_error" in pdf.columns
-            for row in pdf.itertuples(index=False):
-                if has_err and isinstance(row.extract_error, str) and row.extract_error:
-                    continue
-                text = row.text
-                if not isinstance(text, str):
-                    continue
-                doc_vars = doc_vars_for_url(row.url)
-                doc_vars.update(seed_extra)
-                doc_results = []
-                for prog in progs:
-                    res = run_document(
-                        text,
-                        prog,
-                        doc_vars=dict(doc_vars),
-                        query_fn=query_fn,
-                        collect_log=collect_log,
-                    )
-                    doc_results.append((prog, res))
-                if select_best:
-                    # stable descending sort per runner.py:404 — candidates
-                    # are already in workflow_idx order, errors excluded
-                    ranked = sorted(
-                        (i for i, (_, r) in enumerate(doc_results) if r.error is None),
-                        key=lambda i: (
-                            -doc_results[i][1].no_triples,
-                            -doc_results[i][1].no_matches,
-                            -doc_results[i][1].total_match_len,
-                            i,
-                        ),
-                    )
-                    best_idx = ranked[0] if ranked else None
-                for i, (prog, res) in enumerate(doc_results):
-                    out["url"].append(row.url)
-                    out["workflow"].append(prog.name)
-                    out["workflow_idx"].append(prog.index)
-                    out["no_matches"].append(res.no_matches)
-                    out["no_triples"].append(res.no_triples)
-                    out["total_match_len"].append(res.total_match_len)
-                    out["score"].append(res.score)
-                    out["error"].append(res.error)
-                    out["triples"].append(
-                        [
-                            {
-                                "subj": t[0],
-                                "pred": t[1],
-                                "obj_kind": t[2],
-                                "obj_lexical": t[3],
-                                "obj_lang": t[4],
-                                "obj_datatype": t[5],
-                            }
-                            for t in res.triples
-                        ]
-                    )
-                    out["texts"].append(
-                        [{"name": k, "text": v} for k, v in res.texts.items()]
-                    )
-                    out["saved_as"].append(list(res.saved_as))
-                    if collect_log:
-                        out["log"].append(list(res.log))
-                    if select_best:
-                        out["is_best"].append(i == best_idx)
-            # An all-skipped batch must yield NOTHING: an empty
-            # pd.DataFrame gives its columns default dtypes that Arrow
-            # cannot convert to array<struct> (NumPyConverter error) —
-            # hit when a partition contains only malformed documents.
-            if out["url"]:
-                yield pd.DataFrame(out)
-
     cols = [c for c in ("url", "text", "extract_error") if c in extracted.columns]
-    return extracted.select(*cols).mapInPandas(run, schema=schema)
+    return _workflow_kernel(
+        extracted.select(*cols), programs, graphs, extra_vars, collect_log, select_best
+    )
 
 
 def extract_and_run_workflows(
@@ -234,98 +235,17 @@ def extract_and_run_workflows(
     collect_log: bool = False,
 ) -> DataFrame:
     """Fused stage: html bytes → text → workflows → stats+triples in ONE
-    ``mapInPandas``. Versus extract_text → run_workflows this removes an
-    Arrow round-trip and a second Python worker per task — the fastest
+    Arrow-batched stage. Versus extract_text → run_workflows this removes
+    an Arrow round-trip and a second Python worker per task — the fastest
     path when no extraction checkpoint is needed (the staged pipeline
     keeps them separate for resumability; this is the streaming/bench
-    hot path). Results are identical by construction: it calls the same
-    ``extract_one`` + ``run_document`` kernels.
+    hot path). Results are identical by construction: the same text rule
+    and the same workflow kernel run in both.
     """
-    from .extract import extract_one
-
-    spark = pages.sparkSession
-    bc = spark.sparkContext.broadcast(
-        {
-            "programs": programs,
-            "graphs": graphs or {},
-            "extra_vars": extra_vars or {},
-        }
+    return _workflow_kernel(
+        pages.select("url", "html", "text"),
+        programs, graphs, extra_vars, collect_log, select_best,
     )
-    schema = _results_schema(select_best, collect_log)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        payload = bc.value
-        progs: List[WorkflowProgram] = payload["programs"]
-        minigraphs = {k: MiniGraph(v) for k, v in payload["graphs"].items()}
-        query_fn = make_query_fn(minigraphs) if minigraphs else None
-        seed_extra = payload["extra_vars"]
-        for pdf in batches:
-            out: Dict[str, list] = {f.name: [] for f in schema.fields}
-            for url, raw, pre in zip(pdf["url"], pdf["html"], pdf["text"]):
-                if isinstance(pre, str) and pre:
-                    text = pre
-                else:
-                    text, _, err = extract_one(bytes(raw) if raw is not None else None)
-                    if err:
-                        continue
-                doc_vars = doc_vars_for_url(url)
-                doc_vars.update(seed_extra)
-                doc_results = []
-                for prog in progs:
-                    res = run_document(
-                        text,
-                        prog,
-                        doc_vars=dict(doc_vars),
-                        query_fn=query_fn,
-                        collect_log=collect_log,
-                    )
-                    doc_results.append((prog, res))
-                best_idx = None
-                if select_best:
-                    ranked = sorted(
-                        (i for i, (_, r) in enumerate(doc_results) if r.error is None),
-                        key=lambda i: (
-                            -doc_results[i][1].no_triples,
-                            -doc_results[i][1].no_matches,
-                            -doc_results[i][1].total_match_len,
-                            i,
-                        ),
-                    )
-                    best_idx = ranked[0] if ranked else None
-                for i, (prog, res) in enumerate(doc_results):
-                    out["url"].append(url)
-                    out["workflow"].append(prog.name)
-                    out["workflow_idx"].append(prog.index)
-                    out["no_matches"].append(res.no_matches)
-                    out["no_triples"].append(res.no_triples)
-                    out["total_match_len"].append(res.total_match_len)
-                    out["score"].append(res.score)
-                    out["error"].append(res.error)
-                    out["triples"].append(
-                        [
-                            {
-                                "subj": t[0],
-                                "pred": t[1],
-                                "obj_kind": t[2],
-                                "obj_lexical": t[3],
-                                "obj_lang": t[4],
-                                "obj_datatype": t[5],
-                            }
-                            for t in res.triples
-                        ]
-                    )
-                    out["texts"].append(
-                        [{"name": k, "text": v} for k, v in res.texts.items()]
-                    )
-                    out["saved_as"].append(list(res.saved_as))
-                    if collect_log:
-                        out["log"].append(list(res.log))
-                    if select_best:
-                        out["is_best"].append(i == best_idx)
-            if out["url"]:  # see run_workflows: empty batches break Arrow
-                yield pd.DataFrame(out)
-
-    return pages.select("url", "html", "text").mapInPandas(run, schema=schema)
 
 
 def explode_triples(results: DataFrame, winners_only: bool = False) -> DataFrame:

@@ -32,13 +32,13 @@ Flattening rules (the deterministic subset that covers real markup):
 from __future__ import annotations
 
 import json
-from typing import Iterator, List, Optional, Tuple
+from typing import List, Tuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
-from .columns import html_string
+from .columns import html_string, map_rows
 
 __all__ = ["extract_jsonld", "flatten_jsonld"]
 
@@ -134,8 +134,6 @@ def extract_jsonld(
     JSON parse + flatten runs in Python (schemaless input). A malformed
     block yields one error row for that block; other blocks of the same
     page still extract."""
-    import pandas as pd
-
     html = html_string(df, html_col)
     blocks = df.select(
         F.col(url_col).alias("src"),
@@ -144,42 +142,30 @@ def extract_jsonld(
         ).alias("block_idx", "payload"),
     )
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows = []
-            for src, bidx, payload in zip(
-                pdf["src"], pdf["block_idx"], pdf["payload"]
-            ):
-                # RecursionError: hostile/deeply-nested JSON is not a
-                # ValueError subclass — it must still become ONE error
-                # row, never a task failure
-                try:
-                    doc = json.loads(payload)
-                    nodes = doc if isinstance(doc, list) else [doc]
-                    triples: List[Tuple[str, str, str, str]] = []
-                    counter = [0]
-                    for i, node in enumerate(nodes):
-                        if not isinstance(node, dict):
-                            continue
-                        nid = node.get("@id")
-                        if not isinstance(nid, str):
-                            nid = f"_:{src}#{bidx}/{i}"
-                        flatten_jsonld(
-                            node, nid, vocab, triples,
-                            f"_:{src}#{bidx}/{i}", counter,
-                        )
-                except (ValueError, RecursionError) as ex:
-                    rows.append(
-                        (src, None, None, None, None,
-                         f"bad json: {type(ex).__name__}: {ex}")
-                    )
+    def row_fn(src, bidx, payload):
+        # RecursionError: hostile/deeply-nested JSON is not a
+        # ValueError subclass — it must still become ONE error
+        # row, never a task failure
+        try:
+            doc = json.loads(payload)
+            nodes = doc if isinstance(doc, list) else [doc]
+            triples: List[Tuple[str, str, str, str]] = []
+            counter = [0]
+            for i, node in enumerate(nodes):
+                if not isinstance(node, dict):
                     continue
-                for s, p, k, o in triples:
-                    rows.append((src, s, p, k, o, None))
-            if rows:
-                yield pd.DataFrame(
-                    rows,
-                    columns=["src", "subj", "pred", "obj_kind", "obj", "error"],
+                nid = node.get("@id")
+                if not isinstance(nid, str):
+                    nid = f"_:{src}#{bidx}/{i}"
+                flatten_jsonld(
+                    node, nid, vocab, triples,
+                    f"_:{src}#{bidx}/{i}", counter,
                 )
+        except (ValueError, RecursionError) as ex:
+            yield (src, None, None, None, None,
+                   f"bad json: {type(ex).__name__}: {ex}")
+            return
+        for s, p, k, o in triples:
+            yield (src, s, p, k, o, None)
 
-    return blocks.mapInPandas(run, schema=JSONLD_SCHEMA)
+    return map_rows(blocks, JSONLD_SCHEMA, lambda: row_fn)

@@ -67,8 +67,6 @@ LINEAGE_SCHEMA = StructType(
     ]
 )
 
-STAGES = ("extract", "results", "triples", "canonical")
-
 
 class KgPipeline:
     """Orchestrates extract → workflows/best → triples → canonicalize.
@@ -111,23 +109,33 @@ class KgPipeline:
         except Exception:
             return self.spark.createDataFrame([], LINEAGE_SCHEMA)
 
-    def _completed_buckets(self, stage: str) -> set:
-        rows = (
-            self.lineage()
-            .filter(
-                (F.col("run_scope") == self.run_scope)
-                & (F.col("stage") == stage)
-                & (F.col("status") == "done")
-            )
-            .select("bucket")
-            .collect()
+    def _done_lineage(self, stage: str) -> DataFrame:
+        """Lineage rows of this run scope that completed ``stage``."""
+        return self.lineage().filter(
+            (F.col("run_scope") == self.run_scope)
+            & (F.col("stage") == stage)
+            & (F.col("status") == "done")
         )
+
+    def _completed_buckets(self, stage: str) -> set:
+        rows = self._done_lineage(stage).select("bucket").collect()
         return {r.bucket for r in rows}
 
-    def _append_lineage(self, stage: str, stats_rows: List[tuple]) -> None:
-        if not stats_rows:
+    def _append_lineage(
+        self, stage: str, stats: list, latency_ms: int, token: Optional[str] = None
+    ) -> None:
+        """One 'done' lineage row per per-bucket ``stats`` row."""
+        if not stats:
             return
-        df = self.spark.createDataFrame(stats_rows, LINEAGE_SCHEMA)
+        now = _dt.datetime.now()
+        rows = [
+            (
+                self.run_scope, stage, int(r.bucket), r.url_min, r.url_max,
+                int(r.n_rows), int(r.n_triples), latency_ms, "done", now, token,
+            )
+            for r in stats
+        ]
+        df = self.spark.createDataFrame(rows, LINEAGE_SCHEMA)
         df.coalesce(1).write.mode("append").parquet(self.lineage_path)
 
     # -- stage plumbing ------------------------------------------------------
@@ -156,7 +164,6 @@ class KgPipeline:
             {r.bucket for r in written.select("bucket").distinct().collect()} - done
         )
         latency_ms = int((time.time() - t0) * 1000)
-        now = _dt.datetime.now()
         stats = (
             written.filter(F.col("bucket").isin(list(todo_buckets)))
             .groupBy("bucket")
@@ -174,16 +181,7 @@ class KgPipeline:
             if todo_buckets
             else []
         )
-        self._append_lineage(
-            stage,
-            [
-                (
-                    self.run_scope, stage, int(r.bucket), r.url_min, r.url_max,
-                    int(r.n_rows), int(r.n_triples), latency_ms, "done", now, None,
-                )
-                for r in stats
-            ],
-        )
+        self._append_lineage(stage, stats, latency_ms)
         return written
 
     def _upstream_token(self, stage: str) -> str:
@@ -191,14 +189,7 @@ class KgPipeline:
         import hashlib
 
         rows = (
-            self.lineage()
-            .filter(
-                (F.col("run_scope") == self.run_scope)
-                & (F.col("stage") == stage)
-                & (F.col("status") == "done")
-            )
-            .select("bucket", "n_rows", "n_triples")
-            .collect()
+            self._done_lineage(stage).select("bucket", "n_rows", "n_triples").collect()
         )
         payload = ";".join(
             f"{r.bucket}:{r.n_rows}:{r.n_triples}" for r in sorted(rows)
@@ -219,9 +210,8 @@ class KgPipeline:
         extracted = self._run_stage(
             "extract",
             bucketed,
-            lambda df: extract_text(df.repartition(self.n_buckets, "bucket"))
-            .withColumn(
-                "bucket", F.pmod(F.xxhash64("url"), F.lit(self.n_buckets)).cast("int")
+            lambda df: self.add_bucket(
+                extract_text(df.repartition(self.n_buckets, "bucket"))
             ),
         )
         # Stage 2: workflows + best-workflow selection (is_best computed
@@ -230,20 +220,18 @@ class KgPipeline:
         results = self._run_stage(
             "results",
             extracted,
-            lambda df: run_workflows(
-                df, self.programs, graphs=self.graphs, select_best=True,
-                extra_vars=self.extra_vars,
-            ).withColumn(
-                "bucket", F.pmod(F.xxhash64("url"), F.lit(self.n_buckets)).cast("int")
+            lambda df: self.add_bucket(
+                run_workflows(
+                    df, self.programs, graphs=self.graphs, select_best=True,
+                    extra_vars=self.extra_vars,
+                )
             ),
         )
         # Stage 3: winner triples, flattened
         triples = self._run_stage(
             "triples",
             results,
-            lambda df: explode_triples(df, winners_only=True).withColumn(
-                "bucket", F.pmod(F.xxhash64("url"), F.lit(self.n_buckets)).cast("int")
-            ),
+            lambda df: self.add_bucket(explode_triples(df, winners_only=True)),
         )
         out = {"extracted": extracted, "results": results, "triples": triples}
         # Stage 4: canonicalization — a GLOBAL stage (sameAs components span
@@ -267,14 +255,7 @@ class KgPipeline:
     ) -> DataFrame:
         token = self._upstream_token(upstream)
         prior = (
-            self.lineage()
-            .filter(
-                (F.col("run_scope") == self.run_scope)
-                & (F.col("stage") == stage)
-                & (F.col("status") == "done")
-                & (F.col("input_token") == token)
-            )
-            .count()
+            self._done_lineage(stage).filter(F.col("input_token") == token).count()
         )
         if prior > 0:
             return self._read_stage(stage)
@@ -284,7 +265,6 @@ class KgPipeline:
         )
         written = self.spark.read.parquet(self._stage_path(stage))
         latency_ms = int((time.time() - t0) * 1000)
-        now = _dt.datetime.now()
         stats = (
             written.groupBy("bucket")
             .agg(
@@ -295,14 +275,5 @@ class KgPipeline:
             )
             .collect()
         )
-        self._append_lineage(
-            stage,
-            [
-                (
-                    self.run_scope, stage, int(r.bucket), r.url_min, r.url_max,
-                    int(r.n_rows), int(r.n_triples), latency_ms, "done", now, token,
-                )
-                for r in stats
-            ],
-        )
+        self._append_lineage(stage, stats, latency_ms, token)
         return written

@@ -36,6 +36,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..operators.columns import map_rows
+
 __all__ = ["read_archives", "build_tar", "build_zip", "ARCHIVE_SCHEMA"]
 
 ARCHIVE_SCHEMA = StructType(
@@ -102,36 +104,19 @@ def read_archives(
 ) -> DataFrame:
     """Archives under ``path`` (glob ok) → one row per file member:
     (archive_file, member, data, n_bytes, error)."""
-    import pandas as pd
-
     files = spark.read.format("binaryFile").load(path)
 
-    def run(batches):
-        for pdf in batches:
-            rows: List[tuple] = []
-            for fpath, content in zip(pdf["path"], pdf["content"]):
-                try:
-                    members = _iter_members(bytes(content), max_member_bytes)
-                    for name, data, merr in members:
-                        rows.append(
-                            (
-                                fpath,
-                                name,
-                                data,
-                                len(data) if data is not None else None,
-                                merr,
-                            )
-                        )
-                except (ValueError, zipfile.BadZipFile, OSError) as ex:
-                    rows.append((fpath, None, None, None, str(ex)))
-            if rows:
-                yield pd.DataFrame(
-                    rows, columns=[f.name for f in ARCHIVE_SCHEMA.fields]
-                )
+    def row_fn(fpath, content):
+        try:
+            members = _iter_members(bytes(content), max_member_bytes)
+        except (ValueError, zipfile.BadZipFile, OSError) as ex:
+            return [(fpath, None, None, None, str(ex))]
+        return [
+            (fpath, name, data, len(data) if data is not None else None, merr)
+            for name, data, merr in members
+        ]
 
-    return files.select("path", "content").mapInPandas(
-        run, schema=ARCHIVE_SCHEMA
-    )
+    return map_rows(files.select("path", "content"), ARCHIVE_SCHEMA, lambda: row_fn)
 
 
 # ---------------------------------------------------------------------------

@@ -41,6 +41,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from ..operators.columns import map_rows
+
 __all__ = [
     "parse_warc_records",
     "read_warc",
@@ -206,34 +208,27 @@ def read_warc(spark: SparkSession, path: str) -> DataFrame:
 
     files = spark.read.format("binaryFile").load(path)
 
-    def run(batches):
-        for pdf in batches:
-            rows: List[tuple] = []
-            for fpath, content in zip(pdf["path"], pdf["content"]):
-                # buffer per file: a mid-file framing error must drop
-                # the records already parsed from THAT file, or a
-                # re-fetch of the flagged file would duplicate them
-                frows: List[tuple] = []
-                try:
-                    raw = bytes(content)
-                    if raw[:2] == _GZIP_MAGIC:  # sniff, not extension
-                        raw = gunzip_members(raw)
-                    for uri, date, payload in parse_warc_records(raw):
-                        ts = None
-                        if date:
-                            ts = pd.Timestamp(date.replace("Z", "+00:00"))
-                            ts = ts.tz_convert(None) if ts.tzinfo else ts
-                        frows.append((uri, ts, payload, fpath, None))
-                    rows.extend(frows)
-                except ValueError as ex:
-                    rows.append((None, None, None, fpath, str(ex)))
-            if rows:
-                yield pd.DataFrame(
-                    rows, columns=["url", "warc_ts", "html", "warc_file", "error"]
-                )
+    def row_fn(fpath, content):
+        # buffer per file: a mid-file framing error must drop
+        # the records already parsed from THAT file, or a
+        # re-fetch of the flagged file would duplicate them
+        frows: List[tuple] = []
+        try:
+            raw = bytes(content)
+            if raw[:2] == _GZIP_MAGIC:  # sniff, not extension
+                raw = gunzip_members(raw)
+            for uri, date, payload in parse_warc_records(raw):
+                ts = None
+                if date:
+                    ts = pd.Timestamp(date.replace("Z", "+00:00"))
+                    ts = ts.tz_convert(None) if ts.tzinfo else ts
+                frows.append((uri, ts, payload, fpath, None))
+        except ValueError as ex:
+            return [(None, None, None, fpath, str(ex))]
+        return frows
 
-    return files.select("path", "content").mapInPandas(
-        run, schema=WARC_PAGES_SCHEMA
+    return map_rows(
+        files.select("path", "content"), WARC_PAGES_SCHEMA, lambda: row_fn
     )
 
 

@@ -69,8 +69,6 @@ KEYWORDS: List[str] = [
     "dump",
 ]
 
-_KEYWORD_SET = frozenset(KEYWORDS)
-
 # Step attributes that hold nested op lists, per op keyword. Used only for
 # recursive validation; the interpreter re-reads them dynamically.
 _NESTED_LIST_ATTRS = {

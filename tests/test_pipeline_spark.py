@@ -21,11 +21,22 @@ from cmc_knowledge_graph_text2ttl_spark.sinks import triples_to_nt_lines
 from cmc_knowledge_graph_text2ttl_spark.sources import synth_pages_df, synth_page_rows
 from cmc_knowledge_graph_text2ttl_spark.workflow import run_document
 from cmc_knowledge_graph_text2ttl_spark.workflow.sparql import MiniGraph, make_query_fn
-from cmc_knowledge_graph_text2ttl_spark.operators.run import doc_vars_for_url
+from cmc_knowledge_graph_text2ttl_spark.operators.run import (
+    doc_vars_for_url,
+    extract_and_run_workflows,
+)
 
 from conftest import wf
 
 N_DOCS = 150
+
+# the two entry points into the one workflow kernel
+ENTRY_POINTS = {
+    "staged": lambda pages, programs, **kw: run_workflows(
+        extract_text(pages), programs, **kw
+    ),
+    "fused": extract_and_run_workflows,
+}
 
 
 @pytest.fixture(scope="module")
@@ -154,7 +165,10 @@ class TestDistributedEquivalence:
         assert a == b == c
         assert len(a) > 0
 
-    def test_all_malformed_partition_writes(self, spark, fixture_programs, tmp_path):
+    @pytest.mark.parametrize("entry", sorted(ENTRY_POINTS))
+    def test_all_malformed_partition_writes(
+        self, spark, fixture_programs, tmp_path, entry
+    ):
         """Regression: a partition containing ONLY malformed documents
         made the UDF yield an empty pandas frame whose default column
         dtypes broke the Arrow array<struct> conversion at WRITE time
@@ -168,7 +182,7 @@ class TestDistributedEquivalence:
         # 4 partitions, 2 rows → at least one partition holds only the
         # malformed doc (and some are fully empty)
         pages = spark.createDataFrame(rows, PAGES_SCHEMA).repartition(4)
-        ranked = run_workflows(extract_text(pages), fixture_programs, select_best=True)
+        ranked = ENTRY_POINTS[entry](pages, fixture_programs, select_best=True)
         out = str(tmp_path / "res")
         ranked.write.mode("overwrite").parquet(out)  # must not raise
         back = spark.read.parquet(out)
@@ -184,6 +198,78 @@ class TestDistributedEquivalence:
             text, ctype, err = extract_one(html)
             if err is None:
                 assert got[url] == hashlib.sha256(text.encode()).hexdigest()
+
+
+class TestEntryPointsAgree:
+    """run_workflows(extract_text(...)) and extract_and_run_workflows share
+    one kernel and one text rule: on every text-rule edge row they must
+    produce identical rows, side outputs and winner flags included."""
+
+    MAT = b"<html><body><p>Material: %s</p></body></html>"
+    ROWS = [
+        ("https://h/good", None, MAT % b"Aspirin", None, "en"),
+        ("https://h/bad", None, b"\xff\xfe<html><oops", None, "en"),
+        ("https://h/null", None, None, None, "en"),
+        ("https://h/pre", None, MAT % b"Ethanol", (MAT % b"Glucose").decode(), "en"),
+        ("https://h/empty", None, MAT % b"Caffeine", "", "en"),
+    ]
+    # exercises the texts / saved_as / log side channels
+    SIDE_WF = (
+        "- echo: 'doc=@{doc}'\n"
+        "- dump: _\n  file: snap\n"
+        "- save-as: out-@{doc}.ttl\n"
+    )
+
+    def test_fused_equals_staged(self, spark, fixture_programs):
+        from cmc_knowledge_graph_text2ttl_spark.sources.pages import PAGES_SCHEMA
+
+        programs = fixture_programs + [
+            wf(self.SIDE_WF, name="wf_side", index=len(fixture_programs))
+        ]
+        pages = spark.createDataFrame(self.ROWS, PAGES_SCHEMA).repartition(3)
+        got = {}
+        for name, entry in ENTRY_POINTS.items():
+            res = entry(pages, programs, select_best=True, collect_log=True)
+            got[name] = [
+                r.asDict(recursive=True)
+                for r in res.orderBy("url", "workflow_idx").collect()
+            ]
+        assert got["staged"] == got["fused"]
+        rows = got["fused"]
+        assert {r["url"] for r in rows} == {
+            "https://h/good", "https://h/pre", "https://h/empty",
+        }
+        assert len(rows) == 3 * len(programs)
+        side = [r for r in rows if r["workflow"] == "wf_side"]
+        assert all(r["texts"] and r["saved_as"] and r["log"] for r in side)
+        pre_objs = {
+            t["obj_lexical"]
+            for r in rows
+            if r["url"] == "https://h/pre"
+            for t in r["triples"]
+        }
+        assert "http://example.org/kg/material_Glucose" in pre_objs
+        assert "http://example.org/kg/material_Ethanol" not in pre_objs
+
+    def test_staged_rule_without_html(self, spark, fixture_programs):
+        """Without an html column an empty text still runs, and a row whose
+        extraction failed is skipped even when it carries text."""
+        ext = spark.createDataFrame(
+            [
+                ("https://h/empty", "", None),
+                ("https://h/failed", (self.MAT % b"Aspirin").decode(), "ValueError: x"),
+                ("https://h/ok", (self.MAT % b"Aspirin").decode(), None),
+            ],
+            "url string, text string, extract_error string",
+        )
+        res = run_workflows(ext, fixture_programs, select_best=True).collect()
+        per_url = {}
+        for r in res:
+            per_url[r.url] = per_url.get(r.url, 0) + 1
+        assert per_url == {
+            "https://h/empty": len(fixture_programs),
+            "https://h/ok": len(fixture_programs),
+        }
 
 
 class TestSelectOp:
