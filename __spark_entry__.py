@@ -2767,19 +2767,20 @@ def q_media_jpeg(spark, sf_dir):
 
 def q_warc_read(spark, sf_dir):
     """Common-Crawl-style WARC ingestion under the gate: the documents
-    are wrapped as HTTP response records in 8 deterministic WARC
-    segment files (the fixture side of sources/warc.py), read back with
+    are wrapped as HTTP response records in ``n_seg`` deterministic WARC
+    segment files (a multiple of 8 scaled with the session's
+    parallelism; the fixture side of sources/warc.py), read back with
     one task per file, and checked byte-exactly — the md5 of each
     extracted HTTP payload must equal DuckDB's md5 over the same
     reconstructed HTML string.
 
-    The 8 segments cover the full storage matrix the reader claims:
-    segments 0-3 plain ``.warc``, 4-7 per-record-gzip ``.warc.gz``
-    (real Common Crawl layout), and within each half the upper two
-    store HTTP bodies with chunked transfer-coding. Segment BYTES are
-    built distributed (groupBy seg → applyInPandas); the driver only
-    collects 8 (seg, bytes) rows — bounded by segment count, never by
-    corpus size."""
+    Each group of 8 segments covers the full storage matrix the reader
+    claims: by ``seg % 8``, 0-3 plain ``.warc``, 4-7 per-record-gzip
+    ``.warc.gz`` (real Common Crawl layout), and within each half the
+    upper two store HTTP bodies with chunked transfer-coding. Segment
+    BYTES are built distributed (groupBy seg → applyInPandas); the
+    driver only collects ``n_seg`` (seg, bytes) rows — bounded by
+    segment count, never by corpus size."""
     import os
     import tempfile
 

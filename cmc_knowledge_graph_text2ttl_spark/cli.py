@@ -15,7 +15,8 @@ Local:
         --workdir /tmp/kg_run --master 'local[32]'
 
 The run is resumable: re-invoking with the same --workdir and --run-scope
-skips completed buckets (lineage-driven anti-join; see plans.pipeline).
+skips completed buckets (a ``bucket NOT IN (<done buckets>)`` filter
+driven by the lineage table; see plans.pipeline).
 """
 
 from __future__ import annotations

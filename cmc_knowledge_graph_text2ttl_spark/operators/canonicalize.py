@@ -28,6 +28,8 @@ import logging
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .columns import local_frame
+
 log = logging.getLogger(__name__)
 
 OWL_SAMEAS = "http://www.w3.org/2002/07/owl#sameAs"
@@ -79,7 +81,8 @@ def connected_components(
     Adaptive strategy: a sameAs graph is usually orders of magnitude
     smaller than the corpus — if the (deduped) edge list fits comfortably
     on the driver (< ``small_graph_threshold`` edges), union-find locally
-    and parallelize the label map back (no iterative jobs at all).
+    and hand the label map back as an Arrow-built local relation (no
+    iterative jobs at all).
     Above the threshold, iterate distributed min-label propagation with
     pointer jumping; the loop is driver-controlled with an explicit
     convergence check (count of improved labels == 0).
@@ -97,10 +100,7 @@ def connected_components(
             # partition); memory is bounded by the threshold
             labels = _driver_union_find((r.u, r.v) for r in e.collect())
             e.unpersist()
-            spark = edges.sparkSession
-            return spark.createDataFrame(
-                labels, "node string, component string"  # explicit: may be empty
-            )
+            return local_frame(edges.sparkSession, labels, "node string, component string")
     sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
     sym = sym.repartition("u").persist()
     # the size-probe persist on e is only needed until sym materializes;
@@ -196,11 +196,11 @@ def canonicalize_triples(
         components = connected_components(sameas_edges(triples, pred), max_iter=max_iter)
     comp = components
     if broadcast_components is None:
-        # Adaptive: leave the decision to AQE — the component map is
-        # either a local relation (driver union-find path, exact size
-        # known at planning) or a localCheckpoint'd DataFrame (accurate
-        # runtime stats), so AQE converts the rewrite joins to broadcast
-        # when the map is small WITHOUT spending an extra probe job here.
+        # Adaptive: no probe job here. The component map is either a
+        # local relation (driver union-find path: exact size known at
+        # planning, so a small map is planned as a broadcast join) or a
+        # localCheckpoint'd DataFrame (accurate runtime stats, so AQE
+        # converts the rewrite joins to broadcast when the map is small).
         broadcast_components = False
     if broadcast_components:
         comp = F.broadcast(comp)

@@ -1,15 +1,16 @@
 """Small shared column helpers used across the page-facing operators,
-plus :func:`map_rows`, the package's one Python-UDF boundary."""
+plus :func:`map_rows`, the package's one Python-UDF boundary, and
+:func:`local_frame`, the way driver-side rows become a DataFrame."""
 
 from __future__ import annotations
 
 from typing import Callable, Iterable, Iterator, Union
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-__all__ = ["html_string", "map_rows"]
+__all__ = ["html_string", "local_frame", "map_rows"]
 
 
 def html_string(df: DataFrame, col: str) -> Column:
@@ -59,3 +60,31 @@ def map_rows(
                 yield pd.DataFrame(rows, columns=names)
 
     return df.mapInPandas(run, schema=schema)
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable[tuple], schema: Union[StructType, str]
+) -> DataFrame:
+    """Driver-side ``rows`` (tuples in ``schema`` field order; a StructType
+    or a DDL string) as a DataFrame built through Arrow.
+
+    The result is a ``LocalRelation``, even when ``rows`` is empty: no
+    Python worker decodes it, collecting it (or a filter over it) runs on
+    the driver without a Spark job, and the planner knows its exact size,
+    so a small one is broadcast in joins.
+    ``spark.createDataFrame(<list>)`` instead parallelizes a pickled
+    Python RDD that has none of these properties. Timestamps must be
+    timezone-aware so the stored instant does not depend on the process
+    time zone.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)

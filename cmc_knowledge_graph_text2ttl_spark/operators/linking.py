@@ -27,6 +27,8 @@ from typing import List, Optional, Tuple
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .columns import local_frame
+
 
 def load_dictionary(path_or_text: str, from_text: bool = False) -> List[Tuple[str, str]]:
     """Read a surface_form→canonical_iri TSV (driver-side, small)."""
@@ -68,7 +70,7 @@ def link_exact(
     else:
         dict_rows = dictionary
         key = F.col(mention_col)
-    dict_df = spark.createDataFrame(dict_rows, ["surface_form", "canonical_iri"])
+    dict_df = local_frame(spark, dict_rows, "surface_form string, canonical_iri string")
     joined = mentions.withColumn("__key", key).join(
         F.broadcast(dict_df.withColumnRenamed("surface_form", "__key")),
         "__key",

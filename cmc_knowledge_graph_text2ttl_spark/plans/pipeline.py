@@ -7,10 +7,21 @@ North_rule requirements implemented here:
   by bucket, so work units are deterministic across runs and clusters;
 * **per-partition lineage** — each completed (stage, bucket) appends a
   lineage row (url range, row/triple counts, stage latency, status, ts);
-* **idempotent resume** — on rerun, completed buckets are skipped via an
-  anti-join of the bucket list against the lineage table; outputs are
-  written with dynamic partition overwrite, so a re-processed bucket
+* **idempotent resume** — on rerun, completed buckets are skipped by a
+  ``bucket NOT IN (<done buckets>)`` filter on the stage input; outputs
+  are written with dynamic partition overwrite, so a re-processed bucket
   replaces itself instead of duplicating.
+
+Commit point: a stage's buckets count as done only once its single
+``coalesce(1)`` lineage append (after the stage's data write) has
+landed. A crash between the data write and that append leaves the
+buckets undone, and the rerun overwrites them.
+
+``run()`` reads this scope's done lineage once, with one collect, and
+keeps the rows in memory; each append adds its rows to that list, so the
+completed-bucket sets, the upstream fingerprint and the global-stage skip
+check start no Spark jobs. Per stage, one ``groupBy`` over the buckets
+written in this run (partition-pruned) yields the new lineage rows.
 
 Storage is Parquet partitioned by ``bucket`` (Iceberg in production — the
 layout and commit discipline are identical; swap the writer format).
@@ -27,11 +38,12 @@ lives in the Spark UI/event log, not here).
 from __future__ import annotations
 
 import datetime as _dt
+import hashlib
 import os
 import time
 from typing import Dict, List, Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     IntegerType,
@@ -43,6 +55,7 @@ from pyspark.sql.types import (
 )
 
 from ..operators.canonicalize import canonicalize_triples
+from ..operators.columns import local_frame
 from ..operators.extract import extract_text
 from ..operators.run import explode_triples, run_workflows
 from ..workflow.compile import WorkflowProgram
@@ -66,6 +79,7 @@ LINEAGE_SCHEMA = StructType(
         StructField("input_token", StringType(), True),
     ]
 )
+_LineageRow = Row(*LINEAGE_SCHEMA.fieldNames())
 
 
 class KgPipeline:
@@ -96,6 +110,8 @@ class KgPipeline:
         self.canonicalize = canonicalize
         self.extra_vars = extra_vars
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        # this scope's done lineage rows, read once per run() (see _load_done)
+        self._done: List[Row] = []
 
     # -- lineage -----------------------------------------------------------
 
@@ -107,19 +123,21 @@ class KgPipeline:
         try:
             return self.spark.read.schema(LINEAGE_SCHEMA).parquet(self.lineage_path)
         except Exception:
-            return self.spark.createDataFrame([], LINEAGE_SCHEMA)
+            return local_frame(self.spark, [], LINEAGE_SCHEMA)
 
-    def _done_lineage(self, stage: str) -> DataFrame:
-        """Lineage rows of this run scope that completed ``stage``."""
-        return self.lineage().filter(
-            (F.col("run_scope") == self.run_scope)
-            & (F.col("stage") == stage)
-            & (F.col("status") == "done")
+    def _load_done(self) -> None:
+        """The run's one lineage read: this scope's done rows, in memory."""
+        self._done = (
+            self.lineage()
+            .filter((F.col("run_scope") == self.run_scope) & (F.col("status") == "done"))
+            .collect()
         )
 
+    def _done_rows(self, stage: str) -> List[Row]:
+        return [r for r in self._done if r.stage == stage]
+
     def _completed_buckets(self, stage: str) -> set:
-        rows = self._done_lineage(stage).select("bucket").collect()
-        return {r.bucket for r in rows}
+        return {r.bucket for r in self._done_rows(stage)}
 
     def _append_lineage(
         self, stage: str, stats: list, latency_ms: int, token: Optional[str] = None
@@ -127,16 +145,17 @@ class KgPipeline:
         """One 'done' lineage row per per-bucket ``stats`` row."""
         if not stats:
             return
-        now = _dt.datetime.now()
+        now = _dt.datetime.now(_dt.timezone.utc)
         rows = [
-            (
+            _LineageRow(
                 self.run_scope, stage, int(r.bucket), r.url_min, r.url_max,
                 int(r.n_rows), int(r.n_triples), latency_ms, "done", now, token,
             )
             for r in stats
         ]
-        df = self.spark.createDataFrame(rows, LINEAGE_SCHEMA)
+        df = local_frame(self.spark, rows, LINEAGE_SCHEMA)
         df.coalesce(1).write.mode("append").parquet(self.lineage_path)
+        self._done.extend(rows)
 
     # -- stage plumbing ------------------------------------------------------
 
@@ -152,24 +171,24 @@ class KgPipeline:
         ``source`` must carry a ``bucket`` column. Returns the stage's full
         output (all buckets) read back from the checkpoint.
         """
-        done = self._completed_buckets(stage)
-        todo = source.filter(~F.col("bucket").isin(list(done))) if done else source
+        done = list(self._completed_buckets(stage))
+        todo = source.filter(~F.col("bucket").isin(done)) if done else source
         t0 = time.time()
         out = transform(todo)
         # Dynamic partition overwrite: only buckets present in `out` are
         # replaced; completed buckets' files are untouched → idempotent.
         out.write.mode("overwrite").partitionBy("bucket").parquet(self._stage_path(stage))
         written = self.spark.read.parquet(self._stage_path(stage))
-        todo_buckets = (
-            {r.bucket for r in written.select("bucket").distinct().collect()} - done
-        )
         latency_ms = int((time.time() - t0) * 1000)
+        # the buckets written in this run; the partition filter prunes the
+        # scan to their directories
+        new = written.filter(~F.col("bucket").isin(done)) if done else written
+        has_url = "url" in written.columns
         stats = (
-            written.filter(F.col("bucket").isin(list(todo_buckets)))
-            .groupBy("bucket")
+            new.groupBy("bucket")
             .agg(
-                F.min("url").alias("url_min") if "url" in written.columns else F.min(F.lit(None).cast("string")).alias("url_min"),
-                F.max("url").alias("url_max") if "url" in written.columns else F.max(F.lit(None).cast("string")).alias("url_max"),
+                F.min("url" if has_url else F.lit(None).cast("string")).alias("url_min"),
+                F.max("url" if has_url else F.lit(None).cast("string")).alias("url_max"),
                 F.count(F.lit(1)).alias("n_rows"),
                 (
                     F.sum("no_triples")
@@ -178,21 +197,17 @@ class KgPipeline:
                 ).alias("n_triples"),
             )
             .collect()
-            if todo_buckets
-            else []
         )
         self._append_lineage(stage, stats, latency_ms)
         return written
 
     def _upstream_token(self, stage: str) -> str:
         """Fingerprint of an upstream stage's completed lineage state."""
-        import hashlib
-
-        rows = (
-            self._done_lineage(stage).select("bucket", "n_rows", "n_triples").collect()
-        )
         payload = ";".join(
-            f"{r.bucket}:{r.n_rows}:{r.n_triples}" for r in sorted(rows)
+            f"{b}:{n}:{t}"
+            for b, n, t in sorted(
+                (r.bucket, r.n_rows, r.n_triples) for r in self._done_rows(stage)
+            )
         )
         return hashlib.sha256(payload.encode()).hexdigest()[:16]
 
@@ -205,6 +220,7 @@ class KgPipeline:
 
     def run(self, pages: DataFrame) -> Dict[str, DataFrame]:
         """Execute all stages (resuming where lineage says 'done')."""
+        self._load_done()
         bucketed = self.add_bucket(pages)
         # Stage 1: extraction (repartition by bucket → stable Arrow batches)
         extracted = self._run_stage(
@@ -254,10 +270,7 @@ class KgPipeline:
         self, stage: str, source: DataFrame, transform, upstream: str
     ) -> DataFrame:
         token = self._upstream_token(upstream)
-        prior = (
-            self._done_lineage(stage).filter(F.col("input_token") == token).count()
-        )
-        if prior > 0:
+        if any(r.input_token == token for r in self._done_rows(stage)):
             return self._read_stage(stage)
         t0 = time.time()
         transform(source).write.mode("overwrite").partitionBy("bucket").parquet(

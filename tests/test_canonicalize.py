@@ -105,6 +105,20 @@ class TestCanonicalize:
         assert len(out) == 1
         assert out[0].obj_lexical == "http://x/B"  # literal preserved
 
+    def test_small_graph_rewrite_plans_broadcast_joins(self, spark):
+        # the driver union-find label map is a local relation with an exact
+        # size, so the left-join rewrites broadcast it instead of shuffling
+        # the triples into sort-merge joins
+        out = canonicalize_triples(self._triples(spark))
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "BroadcastHashJoin" in plan
+        assert "SortMergeJoin" not in plan
+
+    def test_no_sameas_edges_leaves_triples(self, spark):
+        tri = self._triples(spark).filter(F.col("pred") != OWL_SAMEAS)
+        assert connected_components(sameas_edges(tri)).count() == 0
+        assert sorted(canonicalize_triples(tri).collect()) == sorted(tri.collect())
+
     def test_sameas_edges_extraction(self, spark):
         tri = self._triples(spark)
         e = sameas_edges(tri).collect()
