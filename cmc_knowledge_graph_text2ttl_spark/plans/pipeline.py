@@ -10,7 +10,9 @@ North_rule requirements implemented here:
 * **idempotent resume** — on rerun, completed buckets are skipped by a
   ``bucket NOT IN (<done buckets>)`` filter on the stage input; outputs
   are written with dynamic partition overwrite, so a re-processed bucket
-  replaces itself instead of duplicating.
+  replaces itself instead of duplicating. A global stage (canonical) is
+  recomputed whole and written with a static overwrite, so no bucket of
+  an earlier computation survives it.
 
 Commit point: a stage's buckets count as done only once its single
 ``coalesce(1)`` lineage append (after the stage's data write) has
@@ -273,9 +275,11 @@ class KgPipeline:
         if any(r.input_token == token for r in self._done_rows(stage)):
             return self._read_stage(stage)
         t0 = time.time()
-        transform(source).write.mode("overwrite").partitionBy("bucket").parquet(
-            self._stage_path(stage)
-        )
+        # A recompute replaces the whole stage: under the session's dynamic
+        # mode a subject bucket it no longer fills would keep its old files.
+        transform(source).write.mode("overwrite").option(
+            "partitionOverwriteMode", "static"
+        ).partitionBy("bucket").parquet(self._stage_path(stage))
         written = self.spark.read.parquet(self._stage_path(stage))
         latency_ms = int((time.time() - t0) * 1000)
         stats = (

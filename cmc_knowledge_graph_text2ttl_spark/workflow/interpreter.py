@@ -1,4 +1,4 @@
-"""Per-document workflow interpreter.
+"""Per-document workflow interpreter and the op table it runs from.
 
 Executes a compiled :class:`~..workflow.compile.WorkflowProgram` against one
 document's text, producing flattened triple rows + stats. This is pure
@@ -8,12 +8,20 @@ Python with zero Spark dependencies: the same class is
   (one instance per (document, workflow), amortized over a batch), and
 * the single-process oracle used by the test suite and golden generation.
 
+``OPS`` lists every keyword once with its ``prepare`` function and its
+handler. :func:`compile_plan` walks the YAML once, on the driver: each
+step becomes a ``(handler, prepared args)`` pair, with attributes read and
+type-checked, flags resolved, regexes compiled, nested plans compiled and
+the ``do-<i>-<j>`` cell table built. Handlers run from those arguments and
+never read the YAML again. A step whose preparation fails compiles to a
+step that raises the same error when a document reaches it.
+
 Semantic parity notes — the behaviors below reproduce the reference
 (`/root/reference/kg_text_to_ttl/text_to_turtle_processor.py`) including
 its quirks, because triple-set agreement (P/R >= 0.95) is the gate:
 
-* dispatch picks the FIRST keyword of ``KEYWORDS`` present in a step
-  (processor.py:711-718);
+* dispatch picks the FIRST keyword in ``OPS`` order present in a step
+  (processor.py:711-718), once, when the step is compiled;
 * match ops default to ``re.DOTALL`` and ``flags:`` *adds* to that
   default rather than replacing it (processor.py:1228, 2743-2760);
 * template expansion (processor.py:2599-2669): innermost-first iterative
@@ -42,17 +50,21 @@ valid workflow can rely on them):
 
 from __future__ import annotations
 
+import copy
 import html as _html
 import importlib
 import re
 from dataclasses import dataclass, field
 from datetime import date, datetime
 from functools import lru_cache
-from typing import Any, Callable, Dict, List, Optional, Tuple
+from itertools import product
+from typing import TYPE_CHECKING, Any, Callable, Dict, List, Optional, Tuple
 
-from ..core.errors import ProcessorException
+from ..core.errors import ProcessorException, WorkflowCompileError
 from ..core.terms import IriNode, LitNode, XSD, node_to_row
-from .compile import KEYWORDS, WorkflowProgram
+
+if TYPE_CHECKING:
+    from .compile import WorkflowProgram
 
 # ---------------------------------------------------------------------------
 # Regex helpers
@@ -83,16 +95,6 @@ _PREFIX_REF = re.compile(r"\s*([a-zA-Z][a-zA-Z0-9]*)\:([a-zA-Z][a-zA-Z0-9_\.\-/#
 _IFDEF_MATCH_REF = re.compile(r"(\w+)\.(\d+)")
 
 _MAX_TEMPLATE_REWRITES = 100_000
-
-_KEYWORD_PRIORITY = {kw: i for i, kw in enumerate(KEYWORDS)}
-
-# Prepared-attribute cache key. Step dicts come from a broadcast program
-# and are never mutated by execution, so each handler extracts/validates
-# its attributes ONCE per process and stashes the tuple in the step dict
-# itself under this reserved key (invisible to dispatch — not a keyword —
-# and to the do-*-* scans). Python workers are single-threaded per
-# process, so the in-place stash is race-free.
-_PREP = "\x00prep"
 
 
 @lru_cache(maxsize=65536)
@@ -165,6 +167,164 @@ class DocResult:
 QueryFn = Callable[[List[str], str, str], List[Dict[str, Any]]]
 
 
+# ---------------------------------------------------------------------------
+# Compilation: YAML steps → (handler, prepared args)
+
+
+def _raise(interp: "DocInterpreter", error: Exception, **_) -> None:
+    """Handler of a step (or object spec) whose preparation failed."""
+    raise copy.copy(error)
+
+
+def _late(value: Any) -> Any:
+    """A ``late`` attribute read: raise its error here, in handler order."""
+    if isinstance(value, Exception):
+        raise copy.copy(value)
+    return value
+
+
+class _StepReader:
+    """Reads one step's attributes once, on the driver.
+
+    An attribute error is what the step raises when a document reaches it,
+    so the first one is kept in ``errors`` rather than raised, and the rest
+    of the step (nested plans, static patterns) is still compiled and
+    checked. A ``late`` read returns its error instead: the handler raises
+    it with :func:`_late` after the run-time work that the reference does
+    before reading that attribute.
+    """
+
+    def __init__(self, step, path: str, kw: str, warnings: List[str], errors=None):
+        self.step, self.path, self.kw, self.warnings = step, path, kw, warnings
+        self.errors: List[Exception] = [] if errors is None else errors
+
+    def fail(self, error: Exception) -> None:
+        if not self.errors:
+            self.errors.append(error.with_traceback(None))
+
+    def get(self, name: str, expected_type=None, optional: bool = False, late: bool = False):
+        try:
+            val = self.step.get(name)  # a non-mapping entry fails here too
+            if val is None:
+                if optional:
+                    return None
+                raise ProcessorException(f"step is missing its required {name!r} attribute")
+            if expected_type is not None and not isinstance(val, expected_type):
+                raise ProcessorException(
+                    f"Step attribute '{name}' has invalid type; expected {expected_type}"
+                )
+            return val
+        except Exception as ex:
+            if late:
+                return ex.with_traceback(None)
+            self.fail(ex)
+            return None
+
+    def plan(self, name: str, optional: bool = False, late: bool = False):
+        body = self.get(name, list, optional, late)
+        if isinstance(body, list):
+            return compile_plan(body, f"{self.path}.{name}", self.warnings)
+        return body
+
+    def flags(self, init: int = re.DOTALL) -> int:
+        src = self.get("flags", str, optional=True)
+        try:
+            return resolve_flags(src, init)
+        except ProcessorException as ex:
+            self.fail(ex)
+            return init
+
+    @staticmethod
+    def rx(pattern, flags: int):
+        """A single static pattern (None when its read failed)."""
+        return None if pattern is None else _rx(pattern, flags)
+
+    @staticmethod
+    def search(pattern, flags: int):
+        """The pattern of match:/within:, a string or a list of strings."""
+        if isinstance(pattern, list):
+            # non-strings stay: the handler rejects one only if it gets to it
+            return [_rx(p, flags) if isinstance(p, str) else p for p in pattern]
+        if isinstance(pattern, str) or pattern is None:
+            return _StepReader.rx(pattern, flags)
+        raise ProcessorException(
+            f"match value {pattern!r} is neither a string (single RE) nor a list"
+        )
+
+    def body(self, value, path: str) -> list:
+        """A match-dimensions cell body; like the reference, a non-list
+        body is iterated as steps when its cell is reached."""
+        try:
+            iter(value)
+        except TypeError as ex:
+            return [(_raise, ex.with_traceback(None))]
+        return compile_plan(value, path, self.warnings)
+
+    def object(self, obj, path: str):
+        """An object spec as a ``(function, argument)`` pair evaluated at
+        emission time; a spec that fails preparation raises only then."""
+        if isinstance(obj, list):
+            return (DocInterpreter._parse_plan_literal, (compile_plan(obj, path, self.warnings), obj))
+        if isinstance(obj, dict):
+            return _prepare(
+                DocInterpreter._prep_literal,
+                DocInterpreter._parse_structured_literal,
+                _StepReader(obj, path, "object", self.warnings),
+            )
+        return (DocInterpreter._parse_literal, obj)
+
+
+def _prepare(prepare: Callable, handler: Callable, r: _StepReader) -> tuple:
+    """``(handler, prepare(r))``, or a ``_raise`` step carrying the first
+    error of the preparation. A bad static regex fails the compile."""
+    try:
+        args = prepare(r)
+    except re.error as ex:
+        raise WorkflowCompileError(f"{r.path}: invalid regex for {r.kw!r}: {ex}") from ex
+    except WorkflowCompileError:
+        raise
+    except Exception as ex:  # raised when a document reaches the step
+        r.fail(ex)
+    return (_raise, r.errors[0]) if r.errors else (handler, args)
+
+
+def _compile_step(step: Any, path: str, warnings: List[str], triple_scope: bool = False) -> tuple:
+    if not isinstance(step, dict):
+        return (_raise, ProcessorException(f"workflow step must be a mapping, got {step!r}"))
+    kw = next((k for k in OPS if k in step), None)
+    if kw is None:
+        raise WorkflowCompileError(
+            f"{path}: no operation keyword in step keys {sorted(step)!r}"
+        )
+    if kw == "exec" or (kw == "set" and "eval" in step):
+        warnings.append(
+            f"{path}: workflow embeds Python code via "
+            f"{'exec' if kw == 'exec' else 'set/eval'}; it will run "
+            "inside executor UDFs (trusted-workflow escape hatch)"
+        )
+    prepare, handler = OPS[kw]
+    compiled = _prepare(prepare, handler, _StepReader(step, path, kw, warnings))
+    if triple_scope and handler is not DocInterpreter._op_triple:
+        # The reference passes the implied subject/predicate kwargs to
+        # every handler and crashes with a TypeError (processor.py:711-718);
+        # raise the engine's typed error instead of dropping the terms.
+        return (_raise, ProcessorException(
+            f"Step {kw!r} is not a triple op but appears inside a "
+            f"predicates:/objects: scope"
+        ))
+    return compiled
+
+
+def compile_plan(plan, path: str, warnings: List[str], triple_scope: bool = False) -> list:
+    """Compile a list of YAML steps; ``path`` names it in compile errors and
+    ``warnings``. Non-mapping steps compile to steps that raise; a step with
+    no keyword or a bad static regex raises :class:`WorkflowCompileError`."""
+    return [
+        _compile_step(step, f"{path}[{i}]", warnings, triple_scope)
+        for i, step in enumerate(plan)
+    ]
+
+
 class DocInterpreter:
     """Interprets one workflow against one document text.
 
@@ -202,88 +362,32 @@ class DocInterpreter:
     def set_var(self, name: str, value: Any) -> None:
         self._vars[name] = value
 
-    def run(self, program: WorkflowProgram) -> DocResult:
-        self.execute_plan(program.plan)
+    def run(self, program: "WorkflowProgram") -> DocResult:
+        for handler, args in program.plan:
+            handler(self, args)
         return self.result
 
     def execute_plan(self, plan: list) -> None:
-        for step in plan:
-            self._dispatch(step)
+        """Run raw YAML steps, compiling them first."""
+        for handler, args in compile_plan(plan, "plan", []):
+            handler(self, args)
 
-    # -- dispatch -----------------------------------------------------------
-
-    def _dispatch(self, step: Any, **triple_kwargs) -> Tuple[bool, Any]:
-        if not isinstance(step, dict):
-            raise ProcessorException(f"workflow step must be a mapping, got {step!r}")
-        # Dispatch = FIRST keyword (in KEYWORDS order) present in the step
-        # (processor.py:711-718). Scanning the step's own keys (few) and
-        # picking the minimum priority is equivalent and ~6x cheaper than
-        # scanning all 34 keywords per step.
-        kw = None
-        best = len(KEYWORDS)
-        for k in step:
-            idx = _KEYWORD_PRIORITY.get(k)
-            if idx is not None and idx < best:
-                best = idx
-                kw = k
-        if kw is None:
-            raise ProcessorException(f"step has no recognizable operation keyword: {step!r}")
-        handler = self._HANDLERS[kw]
-        if kw in ("subject", "predicate", "object"):
-            return handler(self, step, **triple_kwargs)
-        if triple_kwargs:
-            # A non-triple step nested under predicates:/objects: is a
-            # workflow authoring error: the reference passes the implied
-            # subject/predicate kwargs to every handler and crashes with a
-            # TypeError (processor.py:711-718). Raise the engine's typed
-            # error instead of silently dropping the implied terms.
-            raise ProcessorException(
-                f"Step {kw!r} is not a triple op but appears inside a "
-                f"predicates:/objects: scope"
-            )
-        return handler(self, step)
-
-    def _seq(
-        self,
-        plan: list,
-        return_first_success: bool = False,
-        stop_on_failure: bool = False,
-    ) -> Tuple[bool, Any]:
-        """Run a sub-op sequence; result is the last op's (success, value).
+    def _seq(self, plan: list, return_first_success: bool = False) -> Tuple[bool, Any]:
+        """Run a compiled sub-op sequence; result is the last op's
+        (success, value).
 
         An empty sequence is an error, as in the reference (which hits an
         UnboundLocalError at processor.py:2564).
         """
         success: Optional[bool] = None
         value: Any = None
-        for step in plan:
-            reply = self._dispatch(step)
-            if isinstance(reply, tuple):
-                success, value = reply
-            else:
-                success, value = True, reply
+        for handler, args in plan:
+            success, value = handler(self, args)
             if success and return_first_success:
                 return (True, value)
-            if not success and stop_on_failure:
-                return (False, value)
         if success is None:
             raise ProcessorException("cannot execute an empty step sequence")
         return (success, value)
-
-    # -- attribute access ----------------------------------------------------
-
-    @staticmethod
-    def _attr(step: dict, name: str, expected_type=None, optional: bool = False):
-        val = step.get(name)
-        if val is None:
-            if optional:
-                return None
-            raise ProcessorException(f"step is missing its required {name!r} attribute")
-        if expected_type is not None and not isinstance(val, expected_type):
-            raise ProcessorException(
-                f"Step attribute '{name}' has invalid type; expected {expected_type}"
-            )
-        return val
 
     # -- logging --------------------------------------------------------------
 
@@ -377,28 +481,27 @@ class DocInterpreter:
             return IriNode(ns + m.group(2))
         return IriNode(n)
 
+    def _parse_plan_literal(self, a: tuple):
+        """A list-valued object spec: the first successful sub-op's value."""
+        plan, spec = a
+        success, value = self._seq(plan, return_first_success=True)
+        if not success:
+            raise ProcessorException(f"object spec {spec!r} produced no usable value during expansion")
+        if isinstance(value, (IriNode, LitNode)):
+            return value
+        if not isinstance(value, str):
+            # The reference returns raw Python values here (which later
+            # crash rdflib); we coerce them to typed literals instead.
+            if isinstance(value, bool):
+                return LitNode("true" if value else "false", datatype=XSD.boolean)
+            if isinstance(value, int):
+                return LitNode(str(value), datatype=XSD.integer)
+            if isinstance(value, float):
+                return LitNode(str(value), datatype=XSD.float)
+            return LitNode(str(value))
+        return self._parse_literal(value)
+
     def _parse_literal(self, l: Any):
-        if isinstance(l, (IriNode, LitNode)):
-            return l
-        if isinstance(l, dict):
-            return self._parse_structured_literal(l)
-        if isinstance(l, list):
-            success, value = self._seq(l, return_first_success=True)
-            if not success:
-                raise ProcessorException(f"object spec {l!r} produced no usable value during expansion")
-            if isinstance(value, (IriNode, LitNode)):
-                return value
-            if not isinstance(value, str):
-                # The reference returns raw Python values here (which later
-                # crash rdflib); we coerce them to typed literals instead.
-                if isinstance(value, bool):
-                    return LitNode("true" if value else "false", datatype=XSD.boolean)
-                if isinstance(value, int):
-                    return LitNode(str(value), datatype=XSD.integer)
-                if isinstance(value, float):
-                    return LitNode(str(value), datatype=XSD.float)
-                return LitNode(str(value))
-            l = value
         # Plain string: auto-coercion cascade (processor.py:2504-2524).
         l = self.expand(l)
         try:
@@ -418,38 +521,26 @@ class DocInterpreter:
             l = l[1:]
         return LitNode(l)
 
-    def _parse_structured_literal(self, l: dict):
-        prep = l.get(_PREP)
-        if prep is None:
-            prep = (
-                self._attr(l, "text", str, optional=True),
-                self._attr(l, "iri", str, optional=True),
-                self._attr(l, "lang", str, optional=True),
-                self._attr(l, "integer", str, optional=True),
-                self._attr(l, "float", str, optional=True),
-                self._attr(l, "bool", str, optional=True),
-                self._attr(l, "date", str, optional=True),
-                self._attr(l, "datetime", str, optional=True),
-                self._attr(l, "format", str, optional=True),
-                self._attr(l, "apply", str, optional=True),
-            )
-            l[_PREP] = prep
-        (text, iri, lang, vint, vfloat, vbool, vdate, vdtime, fmt,
-         apply_map) = prep
-
-        ndef = [a for v, a in (
-            (text, "text"), (iri, "iri"), (vint, "integer"),
-            (vfloat, "float"), (vbool, "bool"),
-        ) if v is not None]
+    @staticmethod
+    def _prep_literal(r: _StepReader) -> tuple:
+        names = ("text", "iri", "lang", "integer", "float", "bool", "date",
+                 "datetime", "format", "apply")  # apply: is read, never used
+        values = [r.get(name, str, optional=True) for name in names]
+        ndef = [a for v, a in zip(values, names) if v is not None and a in (
+            "text", "iri", "integer", "float", "bool")]
         if len(ndef) > 1:
             raise ProcessorException(
-                f"object spec {l!r} defines more than one value attribute ({', '.join(ndef)})"
+                f"object spec {r.step!r} defines more than one value attribute ({', '.join(ndef)})"
             )
         if len(ndef) < 1:
             raise ProcessorException(
-                f"object spec {l!r} lacks a value attribute "
+                f"object spec {r.step!r} lacks a value attribute "
                 "(expected one of text:, iri:, integer:, float:, bool:)"
             )
+        return (*values[:9], r.step)
+
+    def _parse_structured_literal(self, a: tuple):
+        text, iri, lang, vint, vfloat, vbool, vdate, vdtime, fmt, l = a
         # NOTE: truthiness checks (not is-not-None) reproduce the reference:
         # an empty-string integer: falls through to the next branches.
         if vint:
@@ -540,7 +631,8 @@ class DocInterpreter:
     def _emit(self, subj, pred, obj, inverse=None) -> None:
         s = self._parse_node(subj)
         p = self._parse_node(pred)
-        o = self._parse_literal(obj)
+        parse, spec = obj
+        o = parse(self, spec)
         self._add(s, p, o)
         if inverse:
             i = self._parse_node(inverse)
@@ -553,20 +645,24 @@ class DocInterpreter:
             self._seen_triples.add(row)
             self.result.triples.append(row)
 
-    def _op_triple(self, op: dict, implied_subject=None, implied_predicate=None,
+    @staticmethod
+    def _prep_triple(r: _StepReader) -> tuple:
+        subject = r.get("subject", str, optional=True)
+        predicate = r.get("predicate", str, optional=True)
+        obj = r.get("object", optional=True)
+        predicates = r.get("predicates", list, optional=True)
+        objects = r.get("objects", list, optional=True)
+        inverse = r.get("inverse", str, optional=True)
+        # predicates:/objects: entries are triple sub-steps
+        sub_predicates = predicates and compile_plan(
+            predicates, f"{r.path}.predicates", r.warnings, True)
+        objects = objects and compile_plan(objects, f"{r.path}.objects", r.warnings, True)
+        return (subject, predicate, r.object(obj, f"{r.path}.object") if obj else None,
+                predicates, sub_predicates, objects, inverse, r.step)
+
+    def _op_triple(self, a: tuple, implied_subject=None, implied_predicate=None,
                    implied_inverse=None) -> Tuple[bool, Any]:
-        prep = op.get(_PREP)
-        if prep is None:
-            prep = (
-                self._attr(op, "subject", str, optional=True),
-                self._attr(op, "predicate", str, optional=True),
-                self._attr(op, "object", optional=True),
-                self._attr(op, "predicates", list, optional=True),
-                self._attr(op, "objects", list, optional=True),
-                self._attr(op, "inverse", str, optional=True),
-            )
-            op[_PREP] = prep
-        subject, predicate, obj, predicates, objects, inverse = prep
+        subject, predicate, obj, predicates, sub_predicates, objects, inverse, op = a
 
         if subject:
             if implied_subject:
@@ -601,12 +697,13 @@ class DocInterpreter:
             raise ProcessorException(f"inverse: must accompany a predicate definition: {op!r}")
 
         if predicates:
-            for sub in predicates:
-                self._dispatch(sub, implied_subject=subject)
+            for handler, args in sub_predicates:
+                handler(self, args, implied_subject=subject)
         elif objects:
-            for sub in objects:
-                self._dispatch(
-                    sub,
+            for handler, args in objects:
+                handler(
+                    self,
+                    args,
                     implied_subject=(subject or implied_subject),
                     implied_predicate=predicate,
                     implied_inverse=inverse,
@@ -622,23 +719,35 @@ class DocInterpreter:
 
     # -- infrastructure ops -----------------------------------------------------
 
-    def _op_pass(self, op: dict) -> Tuple[bool, Any]:
+    @staticmethod
+    def _prep_nothing(r: _StepReader) -> None:
+        return None
+
+    @staticmethod
+    def _prep_keyword(r: _StepReader) -> Any:
+        """The keyword's own value, a string."""
+        return r.get(r.kw, str)
+
+    def _op_pass(self, a: None) -> Tuple[bool, Any]:
         return (True, None)
 
-    def _op_desc(self, op: dict) -> Tuple[bool, Any]:
-        desc = self._attr(op, "desc", str)
+    def _op_desc(self, desc: str) -> Tuple[bool, Any]:
         self._log("DESC: ", desc)
         return (True, desc)
 
-    def _op_echo(self, op: dict) -> Tuple[bool, Any]:
-        message = self.expand(self._attr(op, "echo", str))
+    def _op_echo(self, message: str) -> Tuple[bool, Any]:
+        message = self.expand(message)
         self._log("ECHO: ", message)
         return (True, message)
 
-    def _op_dump(self, op: dict) -> Tuple[bool, Any]:
-        what = self._attr(op, "dump", str)
-        fname = self._attr(op, "file", str, optional=True)
-        t = self._text if what.strip() in ("_", "*", "ct", "current-text") else self.expand(what)
+    @staticmethod
+    def _prep_dump(r: _StepReader) -> tuple:
+        what, fname = r.get("dump", str), r.get("file", str, optional=True)
+        return (what, what.strip() in ("_", "*", "ct", "current-text"), fname)
+
+    def _op_dump(self, a: tuple) -> Tuple[bool, Any]:
+        what, current_text, fname = a
+        t = self._text if current_text else self.expand(what)
         if fname is not None:
             fname = self.expand(fname)
             self.result.texts[fname] = t
@@ -646,32 +755,39 @@ class DocInterpreter:
             self._log("DUMP", t)
         return (True, fname)
 
-    def _op_any_of(self, op: dict) -> Tuple[bool, Any]:
-        return self._seq(self._attr(op, "any-of", list), return_first_success=True)
+    @staticmethod
+    def _prep_any_of(r: _StepReader) -> list:
+        return r.plan("any-of")
 
-    def _op_save_as(self, op: dict) -> Tuple[bool, Any]:
-        target = self._attr(op, "save-as")
-        if isinstance(target, dict):
-            f_name = self._attr(target, "file", str, optional=True)
-            b_name = self._attr(target, "bucket", str, optional=True)
-            if f_name is None and b_name is None:
-                raise ProcessorException(
-                    "save-as needs a 'file' or 'bucket' attribute"
-                )
-            f_name = f_name or b_name
-        else:
-            f_name = target
+    def _op_any_of(self, body: list) -> Tuple[bool, Any]:
+        return self._seq(body, return_first_success=True)
+
+    @staticmethod
+    def _prep_save_as(r: _StepReader) -> Any:
+        target = r.get("save-as")
+        if not isinstance(target, dict):
+            return target
+        t = _StepReader(target, r.path, r.kw, r.warnings, r.errors)
+        f_name, b_name = t.get("file", str, optional=True), t.get("bucket", str, optional=True)
+        if f_name is None and b_name is None:
+            raise ProcessorException(
+                "save-as needs a 'file' or 'bucket' attribute"
+            )
+        return f_name or b_name
+
+    def _op_save_as(self, f_name: Any) -> Tuple[bool, Any]:
         f_name = self.expand(f_name)
         self.result.saved_as.append(f_name)
         return (True, f_name)
 
     # -- variables ---------------------------------------------------------------
 
-    def _op_set(self, op: dict) -> Tuple[bool, Any]:
-        var = self._attr(op, "set", str)
-        value = self._attr(op, "to", optional=True)
-        expr = self._attr(op, "eval", str, optional=True)
-        imps = self._attr(op, "import", str, optional=True)
+    @staticmethod
+    def _prep_set(r: _StepReader) -> tuple:
+        var = r.get("set", str)
+        value = r.get("to", optional=True)
+        expr = r.get("eval", str, optional=True)
+        imps = r.get("import", str, optional=True)
         if value is None and expr is None:
             raise ProcessorException(
                 f"set {var}: needs a to: or eval: attribute"
@@ -680,12 +796,15 @@ class DocInterpreter:
             raise ProcessorException(
                 f"set {var}: to: and eval: are mutually exclusive"
             )
+        return (var, value, expr, None if imps is None else re.split(r"\s+", imps))
+
+    def _op_set(self, a: tuple) -> Tuple[bool, Any]:
+        var, value, expr, imports = a
         var = self.expand(var)  # dynamic variable names
         if expr:
-            if imps is not None:
-                for mod in re.split(r"\s+", imps):
-                    if mod not in self._imports:
-                        self._imports[mod] = importlib.import_module(mod)
+            for mod in imports or ():
+                if mod not in self._imports:
+                    self._imports[mod] = importlib.import_module(mod)
             expr = self.expand(expr)
             # DEVIATION: the reference imports the module but does not put
             # it in eval's globals (processor.py:849-856), so `import: math`
@@ -703,14 +822,18 @@ class DocInterpreter:
         self._vars[var] = value
         return (True, value)
 
-    def _op_clear(self, op: dict) -> Tuple[bool, Any]:
-        var = self.expand(self._attr(op, "clear", str))
-        self._vars[var] = None
+    def _op_clear(self, var: str) -> Tuple[bool, Any]:
+        self._vars[self.expand(var)] = None
         return (True, None)
 
-    def _op_append(self, op: dict) -> Tuple[bool, Any]:
-        var = self.expand(self._attr(op, "append", str))
-        value = self._attr(op, "element")
+    @staticmethod
+    def _prep_append(r: _StepReader) -> tuple:
+        return (r.get("append", str), r.get("element", late=True))
+
+    def _op_append(self, a: tuple) -> Tuple[bool, Any]:
+        var, value = a
+        var = self.expand(var)
+        value = _late(value)
         lst = self._vars.get(var)
         if lst is None or lst == "":
             lst = []
@@ -720,10 +843,12 @@ class DocInterpreter:
         self._vars[var] = lst
         return (True, value)
 
-    def _op_for_each(self, op: dict) -> Tuple[bool, Any]:
-        list_var = self._attr(op, "for-each")
-        ident = self._attr(op, "as", str, optional=True)
-        body = self._attr(op, "do", list)
+    @staticmethod
+    def _prep_for_each(r: _StepReader) -> tuple:
+        return (r.get("for-each"), r.get("as", str, optional=True), r.plan("do"))
+
+    def _op_for_each(self, a: tuple) -> Tuple[bool, Any]:
+        list_var, ident, body = a
         elems = self._vars.get(list_var)
         if elems is None or elems == "":
             return (False, None)
@@ -738,8 +863,7 @@ class DocInterpreter:
             count += 1
         return (count > 1, None)
 
-    def _op_exec(self, op: dict) -> Tuple[bool, Any]:
-        code = self._attr(op, "exec", str)
+    def _op_exec(self, code: str) -> Tuple[bool, Any]:
         env = {"vars": self._vars, "matches": self._matches}
         try:
             exec(code, env)  # trusted-workflow escape hatch (processor.py:970)
@@ -751,9 +875,12 @@ class DocInterpreter:
 
     # -- conditionals -------------------------------------------------------------
 
-    def _op_if(self, op: dict) -> Tuple[bool, Any]:
-        condition = self._attr(op, "if")
-        body = self._attr(op, "do", list)
+    @staticmethod
+    def _prep_if(r: _StepReader) -> tuple:
+        return (r.get("if"), r.plan("do"))
+
+    def _op_if(self, a: tuple) -> Tuple[bool, Any]:
+        condition, body = a
         local_env = dict(self._vars)
         local_env["matches"] = self._matches
         try:
@@ -765,9 +892,15 @@ class DocInterpreter:
             return self._seq(body)
         return (False, None)
 
-    def _cond_def(self, op: dict, op_name: str, negate: bool) -> Tuple[bool, Any]:
-        condition = self.expand(self._attr(op, op_name))
-        body = self._attr(op, "do", list)
+    @staticmethod
+    def _prep_cond_def(r: _StepReader) -> tuple:
+        # do: is read after the condition expands (late)
+        return (r.get(r.kw), r.plan("do", late=True), r.kw == "ifndef")
+
+    def _op_cond_def(self, a: tuple) -> Tuple[bool, Any]:
+        condition, body, negate = a
+        condition = self.expand(condition)
+        body = _late(body)
         defined = False
         m = _IFDEF_MATCH_REF.match(condition)
         if m:
@@ -782,23 +915,24 @@ class DocInterpreter:
             return self._seq(body)
         return (False, None)
 
-    def _op_ifdef(self, op: dict) -> Tuple[bool, Any]:
-        return self._cond_def(op, "ifdef", False)
-
-    def _op_ifndef(self, op: dict) -> Tuple[bool, Any]:
-        return self._cond_def(op, "ifndef", True)
-
     # -- procedures ----------------------------------------------------------------
 
-    def _op_procedure(self, op: dict) -> Tuple[bool, Any]:
-        name = self._attr(op, "procedure", str)
-        self._procedures[name] = self._attr(op, "do", list)
+    @staticmethod
+    def _prep_procedure(r: _StepReader) -> tuple:
+        return (r.get("procedure", str), r.plan("do"))
+
+    def _op_procedure(self, a: tuple) -> Tuple[bool, Any]:
+        name, body = a
+        self._procedures[name] = body
         return (True, None)
 
-    def _op_call(self, op: dict) -> Tuple[bool, Any]:
-        name = self._attr(op, "call")
-        args = self._attr(op, "with", dict, optional=True)
-        rtnv = self._attr(op, "return", dict, optional=True)
+    @staticmethod
+    def _prep_call(r: _StepReader) -> tuple:
+        return (r.get("call"), r.get("with", dict, optional=True),
+                r.get("return", dict, optional=True))
+
+    def _op_call(self, a: tuple) -> Tuple[bool, Any]:
+        name, args, rtnv = a
         body = self._procedures.get(name)
         if body is None:
             raise ProcessorException(f"call: no procedure named {name} is defined")
@@ -831,40 +965,37 @@ class DocInterpreter:
 
     # -- matching ------------------------------------------------------------------
 
-    def _search_any(self, pattern, flags: int) -> Optional[re.Match]:
+    def _search_any(self, rx, start: int = 0) -> Optional[re.Match]:
         """search with a single pattern or first-matching of a pattern list."""
-        if isinstance(pattern, str):
-            return _rx(pattern, flags).search(self._text)
-        if isinstance(pattern, list):
-            for p in pattern:
-                if not isinstance(p, str):
-                    raise ProcessorException(f"match: list element {p!r} must be a pattern string")
-                m = _rx(p, flags).search(self._text)
-                if m is not None:
-                    return m
-            return None
-        raise ProcessorException(
-            f"match value {pattern!r} is neither a string (single RE) nor a list"
-        )
+        if not isinstance(rx, list):
+            return rx.search(self._text, start)
+        for p in rx:
+            if not isinstance(p, re.Pattern):
+                raise ProcessorException(f"match: list element {p!r} must be a pattern string")
+            m = p.search(self._text, start)
+            if m is not None:
+                return m
+        return None
 
-    def _op_replace(self, op: dict) -> Tuple[bool, Any]:
-        pattern = self._attr(op, "replace", str)
-        replacement = self._attr(op, "with", str)
-        self._text = _rx(pattern, re.DOTALL).sub(replacement, self._text)
+    @staticmethod
+    def _prep_replace(r: _StepReader) -> tuple:
+        pattern, replacement = r.get("replace", str), r.get("with", str)
+        return (r.rx(pattern, re.DOTALL), replacement)
+
+    def _op_replace(self, a: tuple) -> Tuple[bool, Any]:
+        rx, replacement = a
+        self._text = rx.sub(replacement, self._text)
         return (True, None)
 
-    def _op_match(self, op: dict) -> Tuple[bool, Any]:
-        prep = op.get(_PREP)
-        if prep is None:
-            prep = (
-                self._attr(op, "match"),
-                self._attr(op, "as", str, optional=True),
-                resolve_flags(self._attr(op, "flags", str, optional=True), re.DOTALL),
-                self._attr(op, "do", list),
-            )
-            op[_PREP] = prep
-        pattern, ident, flags, body = prep
-        m = self._search_any(pattern, flags)
+    @staticmethod
+    def _prep_match(r: _StepReader) -> tuple:
+        pattern, ident, flags = r.get("match"), r.get("as", str, optional=True), r.flags()
+        body = r.plan("do")
+        return (r.search(pattern, flags), ident, body)
+
+    def _op_match(self, a: tuple) -> Tuple[bool, Any]:
+        rx, ident, body = a
+        m = self._search_any(rx)
         if m is not None:
             self._latest_match = m
             if ident is not None:
@@ -873,19 +1004,14 @@ class DocInterpreter:
             return self._seq(body)
         return (False, None)
 
-    def _op_match_every(self, op: dict) -> Tuple[bool, Any]:
-        prep = op.get(_PREP)
-        if prep is None:
-            pattern = self._attr(op, "match-every")
-            flags = resolve_flags(self._attr(op, "flags", str, optional=True), re.DOTALL)
-            prep = (
-                _rx(pattern, flags),
-                self._attr(op, "as", str, optional=True),
-                self._attr(op, "do", list),
-                self._attr(op, "first", list, optional=True),
-            )
-            op[_PREP] = prep
-        rx, ident, body, do_first = prep
+    @staticmethod
+    def _prep_match_every(r: _StepReader) -> tuple:
+        pattern = r.get("match-every")
+        return (r.rx(pattern, r.flags()), r.get("as", str, optional=True), r.plan("do"),
+                r.plan("first", optional=True))
+
+    def _op_match_every(self, a: tuple) -> Tuple[bool, Any]:
+        rx, ident, body, do_first = a
         count = 1
         for m in rx.finditer(self._text):
             self._latest_match = m
@@ -900,19 +1026,17 @@ class DocInterpreter:
             count += 1
         return (count > 1, None)
 
-    def _op_within(self, op: dict) -> Tuple[bool, Any]:
-        prep = op.get(_PREP)
-        if prep is None:
-            prep = (
-                self._attr(op, "within"),
-                self._attr(op, "group", int, optional=True) or 1,
-                resolve_flags(self._attr(op, "flags", str, optional=True), re.DOTALL),
-                self._attr(op, "do", list),
-                self._attr(op, "as", str, optional=True),
-            )
-            op[_PREP] = prep
-        pattern, group_index, flags, body, ident = prep
-        m = self._search_any(pattern, flags)
+    @staticmethod
+    def _prep_within(r: _StepReader) -> tuple:
+        pattern = r.get("within")
+        group_index = r.get("group", int, optional=True) or 1
+        flags = r.flags()
+        body, ident = r.plan("do"), r.get("as", str, optional=True)
+        return (r.search(pattern, flags), group_index, body, ident)
+
+    def _op_within(self, a: tuple) -> Tuple[bool, Any]:
+        rx, group_index, body, ident = a
+        m = self._search_any(rx)
         if m is not None:
             t = m.group(group_index)
             if t:
@@ -928,20 +1052,14 @@ class DocInterpreter:
                 return (True, t)
         return (False, None)
 
-    def _op_within_every(self, op: dict) -> Tuple[bool, Any]:
-        prep = op.get(_PREP)
-        if prep is None:
-            pattern = self._attr(op, "within-every")
-            flags = resolve_flags(self._attr(op, "flags", str, optional=True), re.DOTALL)
-            prep = (
-                _rx(pattern, flags),
-                self._attr(op, "group", int, optional=True) or 1,
-                self._attr(op, "do", list),
-                self._attr(op, "as", str, optional=True),
-                self._attr(op, "first", list, optional=True),
-            )
-            op[_PREP] = prep
-        rx, group_index, body, ident, do_first = prep
+    @staticmethod
+    def _prep_within_every(r: _StepReader) -> tuple:
+        pattern = r.get("within-every")
+        return (r.rx(pattern, r.flags()), r.get("group", int, optional=True) or 1,
+                r.plan("do"), r.get("as", str, optional=True), r.plan("first", optional=True))
+
+    def _op_within_every(self, a: tuple) -> Tuple[bool, Any]:
+        rx, group_index, body, ident, do_first = a
         count = 1
         for m in rx.finditer(self._text):
             self._latest_match = m
@@ -962,9 +1080,15 @@ class DocInterpreter:
                 self._text = saved
         return (count > 1, None)
 
-    def _op_with(self, op: dict) -> Tuple[bool, Any]:
-        text = self.expand(self._attr(op, "with"))
-        body = self._attr(op, "do", list)
+    @staticmethod
+    def _prep_with(r: _StepReader) -> tuple:
+        # do: is read after the text expands (late)
+        return (r.get("with"), r.plan("do", late=True))
+
+    def _op_with(self, a: tuple) -> Tuple[bool, Any]:
+        text, body = a
+        text = self.expand(text)
+        body = _late(body)
         if text is not None:
             saved = self._text
             try:
@@ -977,10 +1101,11 @@ class DocInterpreter:
 
     # -- sequence-of (processor.py:1456-1618) -----------------------------------
 
-    def _op_sequence_of(self, op: dict) -> Tuple[bool, Any]:
-        seq_id = self._attr(op, "sequence-of") or "<unnamed>"
-        alternatives = self._attr(op, "alternatives", list, optional=True)
-        steps = self._attr(op, "steps", list, optional=True)
+    @staticmethod
+    def _prep_sequence_of(r: _StepReader) -> tuple:
+        seq_id = r.get("sequence-of") or "<unnamed>"
+        alternatives = r.get("alternatives", list, optional=True)
+        steps = r.get("steps", list, optional=True)
         if alternatives is None and steps is None:
             raise ProcessorException(
                 f"sequence-of {seq_id}: needs an 'alternatives' or 'steps' argument"
@@ -989,72 +1114,62 @@ class DocInterpreter:
             raise ProcessorException(
                 f"sequence-of {seq_id}: 'alternatives' and 'steps' are mutually exclusive"
             )
-        compiled_alts = []
-        fire_counts: Dict[str, int] = {}
-        for alt in alternatives or steps:
-            pattern = self._attr(alt, "match")
-            flags = resolve_flags(self._attr(alt, "flags", str, optional=True), re.DOTALL)
-            ident = self._attr(alt, "as", str, optional=True)
-            if ident is not None:
-                fire_counts[ident] = 0
+        entries = "alternatives" if alternatives else "steps"
+        specs = []
+        for i, alt in enumerate(alternatives or steps):
+            e = _StepReader(alt, f"{r.path}.{entries}[{i}]", r.kw, r.warnings, r.errors)
+            pattern, flags = e.get("match"), e.flags()
+            ident = e.get("as", str, optional=True)
             if isinstance(pattern, list):
                 rx = [_rx(p, flags) for p in pattern]
             else:
-                rx = _rx(pattern, flags)
-            compiled_alts.append({
-                "rx": rx,
-                "id": ident,
-                "group": self._attr(alt, "within-group", int, optional=True),
-                "body": self._attr(alt, "do", list),
-            })
+                rx = e.rx(pattern, flags)
+            specs.append((rx, ident, e.get("within-group", int, optional=True), e.plan("do")))
+        return (alternatives is not None, specs, [s[1] for s in specs if s[1] is not None])
 
-        def search(rx, start):
-            if isinstance(rx, list):
-                for r in rx:
-                    m = r.search(self._text, start)
-                    if m:
-                        return m
-                return None
-            return rx.search(self._text, start)
+    def _seq_in_group(self, group: Optional[int], m: re.Match, body: list) -> None:
+        """Run ``body``, on the text of ``m``'s group when one is given."""
+        if group is None:
+            self._seq(body)
+            return
+        saved = self._text
+        try:
+            self._text = m.group(group)
+            self._seq(body)
+        finally:
+            self._text = saved
 
-        def fire(spec, m):
-            self._latest_match = m
-            self._stat_match(len(m.group(0)))
-            if spec["id"] is not None:
-                self._matches[spec["id"]] = m
-                fire_counts[spec["id"]] += 1
-                self._vars[f"{spec['id']}_count"] = fire_counts[spec["id"]]
-            if spec["group"] is not None:
-                saved = self._text
-                try:
-                    self._text = m.group(spec["group"])
-                    self._seq(spec["body"])
-                finally:
-                    self._text = saved
-            else:
-                self._seq(spec["body"])
-
+    def _op_sequence_of(self, a: tuple) -> Tuple[bool, Any]:
+        lexer, specs, idents = a
+        fire_counts = dict.fromkeys(idents, 0)
         count = 0
         start = 0
-        if alternatives is not None:
+        if lexer:
             # Lexer loop: repeatedly take the earliest-starting match among
             # all alternatives, advance the cursor past it.
             while True:
                 earliest = None
                 earliest_spec = None
-                for spec in compiled_alts:
-                    m = search(spec["rx"], start)
+                for spec in specs:
+                    m = self._search_any(spec[0], start)
                     if m is not None and (earliest is None or m.start(0) < earliest.start(0)):
                         earliest, earliest_spec = m, spec
                 if earliest is None:
                     break
                 start = earliest.end(0)
                 count += 1
-                fire(earliest_spec, earliest)
+                _, ident, group, body = earliest_spec
+                self._latest_match = earliest
+                self._stat_match(len(earliest.group(0)))
+                if ident is not None:
+                    self._matches[ident] = earliest
+                    fire_counts[ident] += 1
+                    self._vars[f"{ident}_count"] = fire_counts[ident]
+                self._seq_in_group(group, earliest, body)
         else:
             # Strict ordered steps: stop at the first non-matching step.
-            for spec in compiled_alts:
-                m = search(spec["rx"], start)
+            for rx, ident, group, body in specs:
+                m = self._search_any(rx, start)
                 if m is None:
                     break
                 start = m.end(0)
@@ -1062,35 +1177,27 @@ class DocInterpreter:
                 # steps mode does not track per-id counters in the reference
                 self._latest_match = m
                 self._stat_match(len(m.group(0)))
-                if spec["id"] is not None:
-                    self._matches[spec["id"]] = m
-                if spec["group"] is not None:
-                    saved = self._text
-                    try:
-                        self._text = m.group(spec["group"])
-                        self._seq(spec["body"])
-                    finally:
-                        self._text = saved
-                else:
-                    self._seq(spec["body"])
+                if ident is not None:
+                    self._matches[ident] = m
+                self._seq_in_group(group, m, body)
         return (count >= 1, None)
 
     # -- 2-D table matcher (DEPRECATED in reference; processor.py:1622-1707) -----
 
-    def _op_match_1(self, op: dict) -> Tuple[bool, Any]:
-        pattern_1 = self._attr(op, "match-1")
-        pattern_2 = self._attr(op, "match-2")
-        group_1 = self._attr(op, "group-1", int, optional=True) or 1
-        id_1 = self._attr(op, "as-1", str, optional=True)
-        id_2 = self._attr(op, "as-2", str, optional=True)
-        id_header = self._attr(op, "header-as", str, optional=True)
-        id_leading = self._attr(op, "leading-as", str, optional=True)
-        flags = resolve_flags(self._attr(op, "flags", str, optional=True), re.DOTALL)
-        body = self._attr(op, "do", list)
-        do_first = self._attr(op, "first", list, optional=True)
-        do_leading = self._attr(op, "leading", list, optional=True)
-        rx1, rx2 = _rx(pattern_1, flags), _rx(pattern_2, flags)
+    @staticmethod
+    def _prep_match_1(r: _StepReader) -> tuple:
+        pattern_1, pattern_2 = r.get("match-1"), r.get("match-2")
+        group_1 = r.get("group-1", int, optional=True) or 1
+        ids = [r.get(n, str, optional=True) for n in ("as-1", "as-2", "header-as", "leading-as")]
+        flags = r.flags()
+        body = r.plan("do")
+        do_first, do_leading = r.plan("first", optional=True), r.plan("leading", optional=True)
+        return (r.rx(pattern_1, flags), r.rx(pattern_2, flags), group_1, *ids, body,
+                do_first, do_leading)
 
+    def _op_match_1(self, a: tuple) -> Tuple[bool, Any]:
+        (rx1, rx2, group_1, id_1, id_2, id_header, id_leading, body, do_first,
+         do_leading) = a
         header_matches: List[re.Match] = []
         count_1 = 1
         for m1 in rx1.finditer(self._text):
@@ -1130,35 +1237,40 @@ class DocInterpreter:
 
     # -- N-dimensional matcher (processor.py:1711-1933) ---------------------------
 
-    def _op_match_dimensions(self, op: dict) -> Tuple[bool, Any]:
-        patterns = self._attr(op, "match-dimensions", list)
-        cell_id = self._attr(op, "as", str, optional=True)
-        dimensions = self._attr(op, "dimensions", list, optional=True)
-        flags = resolve_flags(self._attr(op, "flags", str, optional=True), re.DOTALL)
-        body = self._attr(op, "do", list)
-        pre_steps = self._attr(op, "pre", list, optional=True)
-        loc_steps = {
-            name: val
-            for name, val in op.items()
-            if re.match(r"do-(\*|[0-9A-Za-z_]+)-(\*|[0-9A-Za-z_]+)", name)
+    @staticmethod
+    def _prep_match_dimensions(r: _StepReader) -> tuple:
+        patterns = r.get("match-dimensions", list)
+        cell_id = r.get("as", str, optional=True)
+        dimensions = r.get("dimensions", list, optional=True)
+        flags = r.flags()
+        body, pre_steps = r.plan("do"), r.plan("pre", optional=True)
+        # do-<i>-<j> bodies by "<i>-<j>"; an empty body never wins a cell
+        cells = {
+            name[3:]: r.body(val, f"{r.path}.{name}")
+            for name, val in r.step.items()
+            if re.match(r"do-(\*|[0-9A-Za-z_]+)-(\*|[0-9A-Za-z_]+)", name) and val
         }
-        rxs = [_rx(p, flags) for p in patterns]
+        rxs = [_rx(p, flags) for p in patterns or ()]
         if dimensions is not None and len(dimensions) != len(rxs):
             raise ProcessorException(
                 "match-dimensions: the dimension-name list length must equal the pattern count"
             )
-        counts: List[Optional[int]] = [None] * len(patterns)
+        return (rxs, cell_id, dimensions, body, pre_steps, cells)
+
+    def _op_match_dimensions(self, a: tuple) -> Tuple[bool, Any]:
+        rxs, cell_id, dimensions, body, pre_steps, cells = a
+        counts: List[Optional[int]] = [None] * len(rxs)
         prev_matches = self.result.no_matches
         if pre_steps is not None:
             self._dim_tags_stack.append([None] * len(dimensions))
             try:
                 dim_matches = self._prescan_dim(0, rxs, counts, dimensions, cell_id)
                 self._seq(pre_steps)
-                self._walk_dim(0, dim_matches, counts, dimensions, cell_id, body, loc_steps)
+                self._walk_dim(0, dim_matches, counts, dimensions, cell_id, body, cells)
             finally:
                 self._dim_tags_stack.pop()
         else:
-            self._match_dim(0, rxs, counts, dimensions, cell_id, body, loc_steps)
+            self._match_dim(0, rxs, counts, dimensions, cell_id, body, cells)
         return (self.result.no_matches > prev_matches, None)
 
     def _prescan_dim(self, dim, rxs, counts, dimensions, cell_id) -> list:
@@ -1183,22 +1295,22 @@ class DocInterpreter:
             count += 1
         return dim_matches
 
-    def _walk_dim(self, dim, dim_matches, counts, dimensions, cell_id, body, loc_steps):
+    def _walk_dim(self, dim, dim_matches, counts, dimensions, cell_id, body, cells):
         count = 1
         for m in dim_matches:
             counts[dim] = count
             if dimensions:
                 self._vars[dimensions[dim]] = count
             if dim < len(counts) - 1:
-                self._walk_dim(dim + 1, m, counts, dimensions, cell_id, body, loc_steps)
+                self._walk_dim(dim + 1, m, counts, dimensions, cell_id, body, cells)
                 self._break_dimension = False
             else:
                 if self._break_dimension:
                     break
-                self._run_cell(m, counts, cell_id, body, loc_steps)
+                self._run_cell(m, counts, cell_id, body, cells)
             count += 1
 
-    def _match_dim(self, dim, rxs, counts, dimensions, cell_id, body, loc_steps):
+    def _match_dim(self, dim, rxs, counts, dimensions, cell_id, body, cells):
         count = 1
         for m in rxs[dim].finditer(self._text):
             counts[dim] = count
@@ -1208,20 +1320,20 @@ class DocInterpreter:
                 saved = self._text
                 try:
                     self._text = m.group(1)
-                    self._match_dim(dim + 1, rxs, counts, dimensions, cell_id, body, loc_steps)
+                    self._match_dim(dim + 1, rxs, counts, dimensions, cell_id, body, cells)
                 finally:
                     self._text = saved
             else:
-                self._run_cell(m, counts, cell_id, body, loc_steps)
+                self._run_cell(m, counts, cell_id, body, cells)
             count += 1
 
-    def _run_cell(self, m, counts, cell_id, body, loc_steps):
+    def _run_cell(self, m, counts, cell_id, body, cells):
         """Final-dimension cell: stats, match save, most-specific body."""
         self._stat_match(len(m.group(0)))
         if cell_id:
             self._matches[f"{cell_id}-" + "-".join(str(i) for i in counts)] = m
             self._matches[cell_id] = m
-        ops = self._find_cell_ops(0, counts, [], loc_steps)
+        ops = self._cell_ops(counts, cells)
         if ops is None:
             ops = body
         saved = self._text
@@ -1231,36 +1343,33 @@ class DocInterpreter:
         finally:
             self._text = saved
 
-    def _find_cell_ops(self, dim, counts, indexes, loc_steps):
-        """Most-specific do-<i>-<j> selection with tag and '*' wildcard
-        fallback, depth-first per dimension (processor.py:1903-1933)."""
-        if dim == len(counts):
-            return loc_steps.get("do-" + "-".join(str(i) for i in indexes))
-        if self._dim_tags_stack:
-            tags = self._dim_tags_stack[-1][dim]
-            if tags is not None:
-                tag = tags.get(counts[dim])
-                if tag is not None:
-                    indexes.append(tag)
-                    ops = self._find_cell_ops(dim + 1, counts, indexes, loc_steps)
-                    if ops:
-                        return ops
-                    indexes.pop()
-        indexes.append(counts[dim])
-        ops = self._find_cell_ops(dim + 1, counts, indexes, loc_steps)
-        if ops:
-            return ops
-        indexes[-1] = "*"
-        ops = self._find_cell_ops(dim + 1, counts, indexes, loc_steps)
-        if ops:
-            return ops
-        indexes.pop()
+    def _cell_ops(self, counts, cells):
+        """Most-specific do-<i>-<j> body: per dimension its tag, its index,
+        then '*', depth-first (processor.py:1903-1933)."""
+        tags = self._dim_tags_stack[-1] if self._dim_tags_stack else None
+        choices = []
+        for dim, count in enumerate(counts):
+            tag = None
+            if tags is not None and tags[dim] is not None:
+                tag = tags[dim].get(count)
+            choices.append((str(count), "*") if tag is None else (tag, str(count), "*"))
+        if cells:
+            for key in product(*choices):
+                ops = cells.get("-".join(key))
+                if ops:
+                    return ops
         return None
 
-    def _op_tag_dimension(self, op: dict) -> Tuple[bool, Any]:
-        dim_no = int(self.expand(str(self._attr(op, "tag-dimension"))))
-        at_index = int(self.expand(str(self._attr(op, "at"))))
-        tag_name = self._attr(op, "as", str)
+    @staticmethod
+    def _prep_tag_dimension(r: _StepReader) -> tuple:
+        # at: and as: are each read after the value before them expands
+        return (r.get("tag-dimension"), r.get("at", late=True), r.get("as", str, late=True))
+
+    def _op_tag_dimension(self, a: tuple) -> Tuple[bool, Any]:
+        dim_no, at_index, tag_name = a
+        dim_no = int(self.expand(str(dim_no)))
+        at_index = int(self.expand(str(_late(at_index))))
+        tag_name = _late(tag_name)
         if not self._dim_tags_stack:
             raise ProcessorException(
                 "tag-dimension is only valid inside a match-dimensions pre: scope"
@@ -1279,20 +1388,19 @@ class DocInterpreter:
         dim_tags[dim_no - 1][at_index] = tag_name
         return (True, None)
 
-    def _op_break(self, op: dict) -> Tuple[bool, Any]:
+    def _op_break(self, a: None) -> Tuple[bool, Any]:
         self._break_dimension = True
         return (True, None)
 
     # -- mappings (the entity-linking dictionary; processor.py:1992-2104) --------
 
-    def _op_mapping(self, op: dict) -> Tuple[bool, Any]:
-        name = self._attr(op, "mapping", str)
-        pairs = self._attr(op, "pairs", list)
-        flags = resolve_flags(self._attr(op, "flags", str, optional=True))
+    @staticmethod
+    def _prep_mapping(r: _StepReader) -> tuple:
+        name, pairs, flags = r.get("mapping", str), r.get("pairs", list), r.flags(0)
         ignore_case = bool(flags & re.IGNORECASE)
         exact: dict = {}
         rx_pairs: list = []
-        for p in pairs:
+        for p in pairs or ():
             if not isinstance(p, dict):
                 raise ProcessorException(f"mapping: element {p!r} must be a mapping of match/to")
             f_text, f_re, f_to = p.get("from"), p.get("re"), p.get("to")
@@ -1307,18 +1415,29 @@ class DocInterpreter:
                 if ignore_case:
                     exact[f_text.lower()] = f_to
             elif f_re:
-                rx_pairs.append((f_re, f_to))
+                # a non-string re: fails in re.match when a lookup reaches it
+                rx_pairs.append((_rx(f_re, 0) if isinstance(f_re, str) else f_re, f_to))
             else:
                 raise ProcessorException(
                     f"Mapping element {p!r} has neither a 'from' nor a 're' attribute"
                 )
-        self._mappings[name] = (exact, rx_pairs, flags)
+        return (name, (exact, rx_pairs, flags))
+
+    def _op_mapping(self, a: tuple) -> Tuple[bool, Any]:
+        name, mapping = a
+        self._mappings[name] = mapping
         return (True, name)
 
-    def _op_map(self, op: dict) -> Tuple[bool, Any]:
-        value = self.expand(self._attr(op, "map", str))
-        mapping = self._attr(op, "apply", str)
-        var = self._attr(op, "to", optional=True)
+    @staticmethod
+    def _prep_map(r: _StepReader) -> tuple:
+        # apply: and to: are read after the value expands
+        return (r.get("map", str), r.get("apply", str, late=True),
+                r.get("to", optional=True, late=True))
+
+    def _op_map(self, a: tuple) -> Tuple[bool, Any]:
+        value, mapping, var = a
+        value = self.expand(value)
+        mapping, var = _late(mapping), _late(var)
         mapped = self.apply_mapping(mapping, value)
         if var is not None:
             self._vars[var] = mapped
@@ -1356,13 +1475,18 @@ class DocInterpreter:
 
     # -- graph lookup (select:) ----------------------------------------------------
 
-    def _op_select(self, op: dict) -> Tuple[bool, Any]:
-        selection = self._attr(op, "select", str)
-        graph_id = self._attr(op, "from", str)
-        where_clause = self.expand(self._attr(op, "where", str))
-        var_ids = self._attr(op, "as", str, optional=True) or selection
-        else_steps = self._attr(op, "else", list, optional=True)
-        row_steps = self._attr(op, "do", list, optional=True)
+    @staticmethod
+    def _prep_select(r: _StepReader) -> tuple:
+        selection, graph_id, where = r.get("select", str), r.get("from", str), r.get("where", str)
+        # as:, else: and do: are read after where: expands
+        return (selection, graph_id, where, r.get("as", str, optional=True, late=True),
+                r.plan("else", optional=True, late=True), r.plan("do", optional=True, late=True))
+
+    def _op_select(self, a: tuple) -> Tuple[bool, Any]:
+        selection, graph_id, where, var_ids, else_steps, row_steps = a
+        where_clause = self.expand(where)
+        var_ids = _late(var_ids) or selection
+        else_steps, row_steps = _late(else_steps), _late(row_steps)
         select_vars = re.split(r"\s+", selection)
         stored_vars = re.split(r"\s+", var_ids)
         if self._query_fn is None:
@@ -1388,56 +1512,55 @@ class DocInterpreter:
 
     # -- prefixes --------------------------------------------------------------------
 
-    def _op_prefix(self, op: dict) -> Tuple[bool, Any]:
-        prefix = self._attr(op, "prefix", str)
-        iri = self._attr(op, "iri", str)
+    @staticmethod
+    def _prep_prefix(r: _StepReader) -> tuple:
+        return (r.get("prefix", str), r.get("iri", str))
+
+    def _op_prefix(self, a: tuple) -> Tuple[bool, Any]:
+        prefix, iri = a
         self._prefixes[prefix] = iri
         return (True, prefix)
 
-    @property
-    def prefixes(self) -> Dict[str, str]:
-        return self._prefixes
 
-    # -- handler table -----------------------------------------------------------------
-
-    _HANDLERS: Dict[str, Callable] = {}
-
-
-DocInterpreter._HANDLERS = {
-    "pass": DocInterpreter._op_pass,
-    "any-of": DocInterpreter._op_any_of,
-    "set": DocInterpreter._op_set,
-    "clear": DocInterpreter._op_clear,
-    "append": DocInterpreter._op_append,
-    "for-each": DocInterpreter._op_for_each,
-    "exec": DocInterpreter._op_exec,
-    "if": DocInterpreter._op_if,
-    "ifdef": DocInterpreter._op_ifdef,
-    "ifndef": DocInterpreter._op_ifndef,
-    "save-as": DocInterpreter._op_save_as,
-    "procedure": DocInterpreter._op_procedure,
-    "call": DocInterpreter._op_call,
-    "replace": DocInterpreter._op_replace,
-    "match": DocInterpreter._op_match,
-    "match-every": DocInterpreter._op_match_every,
-    "within": DocInterpreter._op_within,
-    "within-every": DocInterpreter._op_within_every,
-    "with": DocInterpreter._op_with,
-    "sequence-of": DocInterpreter._op_sequence_of,
-    "match-1": DocInterpreter._op_match_1,
-    "match-dimensions": DocInterpreter._op_match_dimensions,
-    "tag-dimension": DocInterpreter._op_tag_dimension,
-    "break": DocInterpreter._op_break,
-    "prefix": DocInterpreter._op_prefix,
-    "mapping": DocInterpreter._op_mapping,
-    "map": DocInterpreter._op_map,
-    "select": DocInterpreter._op_select,
-    "subject": DocInterpreter._op_triple,
-    "predicate": DocInterpreter._op_triple,
-    "object": DocInterpreter._op_triple,
-    "echo": DocInterpreter._op_echo,
-    "desc": DocInterpreter._op_desc,
-    "dump": DocInterpreter._op_dump,
+# The op table: keyword → (prepare, handler), in dispatch priority. A step
+# runs the FIRST keyword of this table that it contains, as the reference's
+# keyword_2_method does (processor.py:711-718, 2764-2799).
+_I = DocInterpreter
+OPS: Dict[str, Tuple[Callable, Callable]] = {
+    "pass": (_I._prep_nothing, _I._op_pass),
+    "any-of": (_I._prep_any_of, _I._op_any_of),
+    "set": (_I._prep_set, _I._op_set),
+    "clear": (_I._prep_keyword, _I._op_clear),
+    "append": (_I._prep_append, _I._op_append),
+    "for-each": (_I._prep_for_each, _I._op_for_each),
+    "exec": (_I._prep_keyword, _I._op_exec),
+    "if": (_I._prep_if, _I._op_if),
+    "ifdef": (_I._prep_cond_def, _I._op_cond_def),
+    "ifndef": (_I._prep_cond_def, _I._op_cond_def),
+    "save-as": (_I._prep_save_as, _I._op_save_as),
+    "procedure": (_I._prep_procedure, _I._op_procedure),
+    "call": (_I._prep_call, _I._op_call),
+    "replace": (_I._prep_replace, _I._op_replace),
+    "match": (_I._prep_match, _I._op_match),
+    "match-every": (_I._prep_match_every, _I._op_match_every),
+    "within": (_I._prep_within, _I._op_within),
+    "within-every": (_I._prep_within_every, _I._op_within_every),
+    "with": (_I._prep_with, _I._op_with),
+    "sequence-of": (_I._prep_sequence_of, _I._op_sequence_of),
+    "match-1": (_I._prep_match_1, _I._op_match_1),
+    "match-dimensions": (_I._prep_match_dimensions, _I._op_match_dimensions),
+    "tag-dimension": (_I._prep_tag_dimension, _I._op_tag_dimension),
+    "break": (_I._prep_nothing, _I._op_break),
+    "prefix": (_I._prep_prefix, _I._op_prefix),
+    "mapping": (_I._prep_mapping, _I._op_mapping),
+    "map": (_I._prep_map, _I._op_map),
+    "select": (_I._prep_select, _I._op_select),
+    "subject": (_I._prep_triple, _I._op_triple),
+    "predicate": (_I._prep_triple, _I._op_triple),
+    "object": (_I._prep_triple, _I._op_triple),
+    "echo": (_I._prep_keyword, _I._op_echo),
+    "desc": (_I._prep_keyword, _I._op_desc),
+    "dump": (_I._prep_dump, _I._op_dump),
 }
 
 

@@ -5,15 +5,22 @@ coercion cascade, sequence-of ordering, match-dimensions body selection,
 procedure scoping, stats formulas. Reference line numbers cited per case.
 """
 
+import copy
+import glob
 import math
+import os
+import pickle
+import re
 
 import pytest
+import yaml
 
 from cmc_knowledge_graph_text2ttl_spark.core import ProcessorException, XSD
-from cmc_knowledge_graph_text2ttl_spark.workflow import run_document
+from cmc_knowledge_graph_text2ttl_spark.core.errors import WorkflowCompileError
+from cmc_knowledge_graph_text2ttl_spark.workflow import compile_workflow_file, run_document
 from cmc_knowledge_graph_text2ttl_spark.workflow.interpreter import DocInterpreter
 
-from conftest import wf
+from conftest import REPO, wf
 
 
 def run(src, text="", doc_vars=None, **kw):
@@ -1040,3 +1047,104 @@ class TestSmallGaps:
         ])
         out = g.query("SELECT ?s WHERE { ?s a <http://x/T> . }")
         assert [str(r["s"]) for r in out] == ["http://x/e1"]
+
+
+# ---------------------------------------------------------------------------
+# The compiled form: steps are compiled once and never written back to
+
+
+class TestCompiledForm:
+    @pytest.fixture(scope="class")
+    def corpus(self):
+        """The golden corpus (tools/make_goldens.py): extracted synth pages
+        with their doc vars, and the ontology query handler."""
+        from cmc_knowledge_graph_text2ttl_spark.operators.extract import extract_one
+        from cmc_knowledge_graph_text2ttl_spark.operators.run import doc_vars_for_url
+        from cmc_knowledge_graph_text2ttl_spark.sources.pages import synth_page_rows
+        from cmc_knowledge_graph_text2ttl_spark.workflow.sparql import (
+            MiniGraph, make_query_fn, parse_ttl)
+
+        with open(os.path.join(REPO, "fixtures", "ontology.ttl")) as fh:
+            query_fn = make_query_fn({"ontology": MiniGraph(parse_ttl(fh.read()))})
+        docs = []
+        for url, _, html, _, _ in synth_page_rows(60):
+            text, _, err = extract_one(html)
+            if not err:
+                docs.append((text, doc_vars_for_url(url)))
+        return docs, query_fn
+
+    @pytest.fixture(scope="class", params=sorted(
+        glob.glob(os.path.join(REPO, "fixtures", "workflows", "*.yaml"))
+        + glob.glob(os.path.join(REPO, "fixtures", "workflows_ops", "*.yaml"))
+    ), ids=os.path.basename)
+    def program(self, request):
+        return compile_workflow_file(request.param)
+
+    @staticmethod
+    def _results(program, corpus):
+        docs, query_fn = corpus
+        return [
+            run_document(text, program, doc_vars=dv, query_fn=query_fn, collect_log=True)
+            for text, dv in docs
+        ]
+
+    def test_pickle_round_trip_gives_identical_results(self, program, corpus):
+        # sc.broadcast pickles with the stdlib pickle, not cloudpickle
+        clone = pickle.loads(pickle.dumps(program))
+        assert self._results(clone, corpus) == self._results(program, corpus)
+
+    def test_running_leaves_yaml_unchanged(self, program, corpus):
+        raw = yaml.safe_load(program.source)
+        before = copy.deepcopy(raw)
+        frozen = pickle.dumps(program)
+        self._results(program, corpus)
+        for text, dv in corpus[0]:
+            interp = DocInterpreter(text=text, query_fn=corpus[1], initial_vars=dv)
+            try:
+                interp.execute_plan(raw)
+            except ProcessorException:
+                pass
+        assert raw == before
+        assert yaml.safe_load(program.source) == before
+        assert pickle.dumps(program) == frozen
+
+    @pytest.mark.parametrize("src, message", [
+        ("- prefix: ex\n  iri: http://e/\n- predicate: ex:p\n  object: x\n",
+         "triple emission without a subject in scope: {step!r}"),
+        (S.format(obj="{text: x, integer: '1'}"),
+         "object spec {object!r} defines more than one value attribute (text, integer)"),
+    ], ids=["no-subject", "text-and-integer"])
+    def test_error_prints_step_as_written(self, src, message):
+        step = yaml.safe_load(src)[-1]
+        program = wf(src)
+        errors = [run_document("same doc", program).error for _ in range(2)]
+        assert errors == [message.format(step=step, object=step.get("object"))] * 2
+
+    @pytest.mark.parametrize("src, path", [
+        ("- subject: http://e/s\n  predicate: http://e/p\n"
+         "  object: [{match: '(unclosed', do: [{set: v, to: x}]}]", "wf[0].object[0]"),
+        ("- select: x\n  from: g\n  where: w\n  do: [{match: '(unclosed', do: [{pass: 1}]}]",
+         "wf[0].do[0]"),
+        ("- select: x\n  from: g\n  where: w\n  else: [{within: '(unclosed', do: [{pass: 1}]}]",
+         "wf[0].else[0]"),
+        ("- sequence-of: s\n  alternatives: [{match: '(unclosed', do: [{pass: 1}]}]", "wf[0]"),
+        ("- sequence-of: s\n  steps: [{match: [a, '(unclosed'], do: [{pass: 1}]}]", "wf[0]"),
+        ("- match-1: '(unclosed'\n  match-2: b\n  do: [{pass: 1}]", "wf[0]"),
+        ("- match-1: a\n  match-2: '(unclosed'\n  do: [{pass: 1}]", "wf[0]"),
+        ("- match-dimensions: ['(a)', '(unclosed']\n  do: [{pass: 1}]", "wf[0]"),
+        ("- mapping: m\n  pairs: [{from: a, to: b}, {re: '(unclosed', to: x}]", "wf[0]"),
+    ], ids=["object-list", "select-do", "select-else", "sequence-of-alternatives",
+            "sequence-of-steps-list", "match-1", "match-2", "match-dimensions", "mapping-re"])
+    def test_bad_static_regex_fails_compile(self, src, path):
+        with pytest.raises(WorkflowCompileError, match=re.escape(path) + ": invalid regex"):
+            wf(src)
+
+    @pytest.mark.parametrize("src, path", [
+        ("- subject: http://e/s\n  predicate: http://e/p\n  object: [{exec: 'x = 1'}]",
+         "wf[0].object[0]"),
+        ("- select: x\n  from: g\n  where: w\n  do: [{exec: 'x = 1'}]", "wf[0].do[0]"),
+        ("- select: x\n  from: g\n  where: w\n  else: [{set: v, eval: '1'}]", "wf[0].else[0]"),
+    ], ids=["object-list", "select-do", "select-else"])
+    def test_embedded_python_in_nested_plans_warns(self, src, path):
+        warnings = wf(src).warnings
+        assert len(warnings) == 1 and warnings[0].startswith(path + ": workflow embeds Python")

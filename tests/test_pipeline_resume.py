@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from cmc_knowledge_graph_text2ttl_spark.plans import KgPipeline
 from cmc_knowledge_graph_text2ttl_spark.sinks import triples_to_nt_lines
 from cmc_knowledge_graph_text2ttl_spark.sources import synth_pages_df
+from cmc_knowledge_graph_text2ttl_spark.workflow import compile_workflow
 
 N = 120
 
@@ -254,3 +255,47 @@ def test_job_counts_bounded(spark, fixture_programs, pages, tmp_path):
 
     assert jobs("kg-pipeline-jobs-fresh") <= 28
     assert jobs("kg-pipeline-jobs-resume") <= 12
+
+
+_SAMEAS_WF = """
+- match-every: 'T=(\\w+)'
+  as: t
+  do:
+    - subject: http://e/@{t.1}
+      predicate: http://e/p
+      object: v
+- match-every: 'SAME=(\\w+),(\\w+)'
+  as: m
+  do:
+    - subject: http://e/@{m.1}
+      predicate: http://www.w3.org/2002/07/owl#sameAs
+      object: {iri: 'http://e/@{m.2}'}
+"""
+
+
+def test_recomputed_global_stage_leaves_no_stale_bucket(spark, tmp_path):
+    """With 4 buckets, doc://stale/1 is in url bucket 1 and doc://stale/3 in
+    url bucket 0; http://e/zzz is in subject bucket 0, http://e/aaa in 1.
+    The first canonical computation writes <zzz> into subject bucket 0.
+    The resume adds doc://stale/3, so the triples token changes and
+    canonical is recomputed: zzz sameAs aaa rewrites <zzz> to <aaa>, which
+    leaves subject bucket 0 with no rows."""
+    programs = [compile_workflow(_SAMEAS_WF, "sameas")]
+    schema = "url string, warc_ts timestamp, html binary, text string, lang string"
+    first = [("doc://stale/1", None, None, "T=zzz", "en")]
+    both = first + [("doc://stale/3", None, None, "SAME=zzz,aaa", "en")]
+
+    def run(wd, rows):
+        pipe = KgPipeline(spark, str(tmp_path / wd), programs, run_scope="r", n_buckets=4)
+        return pipe, pipe.run(spark.createDataFrame(rows, schema))
+
+    run("wd", first)
+    pipe, out = run("wd", both)
+    _, ref = run("ref", both)
+
+    canon = pipe.lineage().filter("stage = 'canonical'").collect()
+    assert len({r.input_token for r in canon}) == 2
+    assert {r.bucket for r in canon} == {0, 1}
+    assert {r.bucket for r in ref["canonical"].collect()} == {1}
+    assert sorted(pipe._read_stage("canonical").collect()) == sorted(ref["canonical"].collect())
+    assert sorted(nt(out["canonical"])) == sorted(nt(ref["canonical"]))
