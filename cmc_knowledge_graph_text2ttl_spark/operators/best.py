@@ -47,18 +47,3 @@ def select_best_workflow(results: DataFrame, keep_losers: bool = True) -> DataFr
         return ranked
     return ranked.filter(F.col("is_best"))
 
-
-def doc_stats(results: DataFrame) -> DataFrame:
-    """The ``doc_stats`` output table: stats + winner flag, no triples."""
-    cols = [
-        "url",
-        "workflow",
-        "workflow_idx",
-        "no_matches",
-        "no_triples",
-        "total_match_len",
-        "score",
-        "error",
-    ]
-    base = results if "is_best" in results.columns else select_best_workflow(results)
-    return base.select(*cols, "is_best")

@@ -21,14 +21,12 @@ size stays unbounded only in the cheap apply phase, never in state.
 from __future__ import annotations
 
 from collections import Counter
-from typing import Iterator
 
 import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    DoubleType,
     LongType,
     StringType,
     StructField,
@@ -41,15 +39,6 @@ CLEANED_SCHEMA = StructType(
         StructField("host", StringType(), True),
         StructField("text", StringType(), True),
         StructField("n_boilerplate_lines", LongType(), True),
-    ]
-)
-
-BOILERPLATE_STATS_SCHEMA = StructType(
-    [
-        StructField("host", StringType(), False),
-        StructField("n_docs", LongType(), True),
-        StructField("n_boilerplate_lines", LongType(), True),
-        StructField("boilerplate_ratio", DoubleType(), True),
     ]
 )
 
@@ -117,39 +106,3 @@ def strip_host_boilerplate(
     )
     return with_host.groupBy("host").applyInPandas(clean, schema=CLEANED_SCHEMA)
 
-
-def host_boilerplate_stats(
-    pages: DataFrame,
-    text_col: str = "text",
-    min_frac: float = 0.8,
-    min_docs: int = 5,
-    max_docs_per_group: int = 500,
-) -> DataFrame:
-    """Per-host boilerplate report (diagnostics companion)."""
-
-    def stats(pdf: pd.DataFrame) -> pd.DataFrame:
-        texts = (
-            pdf.sort_values("url", kind="mergesort")[text_col]
-            .tolist()[:max_docs_per_group]
-        )
-        boiler = _boilerplate_lines(texts, min_frac, min_docs)
-        total_lines = sum(
-            len(t.split("\n")) for t in texts if isinstance(t, str)
-        ) or 1
-        return pd.DataFrame(
-            {
-                "host": [pdf["host"].iloc[0]],
-                "n_docs": [len(pdf)],
-                "n_boilerplate_lines": [len(boiler)],
-                "boilerplate_ratio": [
-                    len(boiler) * len(texts) / total_lines
-                ],
-            }
-        )
-
-    with_host = pages.select(
-        "url", F.col(text_col).alias(text_col), _host_col().alias("host")
-    )
-    return with_host.groupBy("host").applyInPandas(
-        stats, schema=BOILERPLATE_STATS_SCHEMA
-    )

@@ -122,45 +122,6 @@ def corpus_report(
     return out.select("metric", F.col("value").cast("bigint").alias("value"))
 
 
-def corpus_filter_with_near_dups(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    dedup_method: str = "minhash",
-    dedup_kwargs: dict = None,
-    **filter_kwargs,
-) -> DataFrame:
-    """corpus_filter + fuzzy-dedup verdict in one reason vector.
-
-    Non-survivors of :func:`~.dedup.near_duplicate_clusters` get the
-    ``near_duplicate`` reason tag appended (sorted in with the others)
-    and flip ``keep`` to false. Survivors and singletons are untouched —
-    one representative of every near-dup cluster stays in the corpus.
-    """
-    from .dedup import near_duplicate_clusters
-
-    base = corpus_filter(docs, text_col, id_col, **filter_kwargs)
-    clusters = near_duplicate_clusters(
-        docs, text_col, id_col, method=dedup_method, **(dedup_kwargs or {})
-    )
-    drops = clusters.filter(~F.col("is_survivor")).select(
-        F.col("id").alias("nd_id"), F.lit(True).alias("near_dup")
-    )
-    joined = base.join(
-        drops, base["id"].cast("string") == drops["nd_id"], "left"
-    )
-    reasons = F.when(
-        F.col("near_dup").isNotNull(),
-        F.sort_array(F.concat(F.col("reasons"), F.array(F.lit("near_duplicate")))),
-    ).otherwise(F.col("reasons"))
-    return joined.select(
-        "id",
-        "n_words",
-        reasons.alias("reasons"),
-        (F.size(reasons) == 0).alias("keep"),
-    )
-
-
 def c4_gopher_rules(
     docs: DataFrame,
     text_col: str = "text",

@@ -12,39 +12,19 @@ the same dictionary becomes a *table*, and linking becomes relational:
   order (processor.py:2095-2101),
 * unmatched mentions   → identity (kept, flagged unlinked).
 
-Dictionaries load from the FIXTURES.md §4 TSV shapes:
-``dictionary.tsv`` (surface_form \\t canonical_iri) and ``patterns.tsv``
-(regex \\t canonical_iri_template, ordered). sameAs edge CSVs feed the
-connected-components canonicalizer.
+Dictionaries are ``(key, iri)`` pair lists, the rows of the FIXTURES.md
+§4 TSV shapes: ``dictionary.tsv`` (surface_form \\t canonical_iri) and
+``patterns.tsv`` (regex \\t canonical_iri_template, ordered).
 """
 
 from __future__ import annotations
 
-import csv
-import io
 from typing import List, Optional, Tuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .columns import local_frame
-
-
-def load_dictionary(path_or_text: str, from_text: bool = False) -> List[Tuple[str, str]]:
-    """Read a surface_form→canonical_iri TSV (driver-side, small)."""
-    if from_text:
-        fh = io.StringIO(path_or_text)
-    else:
-        fh = open(path_or_text, "r", encoding="utf8")
-    with fh:
-        rows = []
-        for line in fh:
-            line = line.rstrip("\n")
-            if not line or line.startswith("#"):
-                continue
-            surface, iri = line.split("\t", 1)
-            rows.append((surface, iri))
-        return rows
 
 
 def link_exact(
@@ -117,15 +97,6 @@ def link_mentions(
     if patterns:
         out = link_patterns(out, patterns, mention_col)
     return out.withColumn("linked", F.col("canonical_iri").isNotNull())
-
-
-def load_sameas_csv(spark: SparkSession, path: str) -> DataFrame:
-    """sameas_edges.csv (src_iri,dst_iri) → edges DataFrame."""
-    return (
-        spark.read.option("header", "true")
-        .csv(path)
-        .select(F.col("src_iri").alias("src"), F.col("dst_iri").alias("dst"))
-    )
 
 
 def embedding_link(

@@ -14,8 +14,8 @@ partitioning, dispatch. Codec support is pure-Python/stdlib:
   deterministic fixtures for tests and the oracle gate.
 
 Design point for 100 TB of media: bytes stay in the `binary` column until
-the LAST possible stage; metadata-only operations (sniff, size, group,
-dedup-by-digest) never deserialize payloads; per-batch memory is bounded
+the LAST possible stage; metadata-only operations (sniff, size, group)
+never deserialize payloads; per-batch memory is bounded
 by `arrow_max_records` (session.py) times the average blob size, so batch
 sizing — not row counts — is the operative knob.
 """
@@ -29,9 +29,7 @@ import zlib
 from typing import Callable, List, Optional, Sequence, Tuple
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    BinaryType,
     DoubleType,
     IntegerType,
     LongType,
@@ -2602,133 +2600,6 @@ def mp3_info(data: bytes) -> dict:
     return {}
 
 
-def ogg_info(data: bytes) -> dict:
-    """Header-only Ogg facts: {'codec', 'sample_rate', 'channels',
-    'duration_ms'} from the identification header in the head pages
-    plus the LAST page's granule position (scanned from the tail, the
-    standard duration trick — no packet decode). Vorbis granules are
-    PCM samples at the stream rate; Opus granules run at 48 kHz minus
-    the pre-skip."""
-    if data[:4] != b"OggS":
-        return {}
-    head = data[:4096]
-    out: dict = {}
-    i = head.find(b"\x01vorbis")
-    if i >= 0 and i + 16 <= len(head):
-        out["codec"] = "vorbis"
-        out["channels"] = head[i + 11]
-        (out["sample_rate"],) = struct.unpack(
-            "<I", head[i + 12 : i + 16]
-        )
-        rate = out["sample_rate"]
-        pre_skip = 0
-    else:
-        i = head.find(b"OpusHead")
-        if i < 0 or i + 12 > len(head):
-            return {"codec": "unknown"}
-        out["codec"] = "opus"
-        out["channels"] = head[i + 9]
-        (pre_skip,) = struct.unpack("<H", head[i + 10 : i + 12])
-        out["sample_rate"] = 48000  # Opus granules always run at 48 kHz
-        rate = 48000
-    tail = data[-65536:]
-    j = tail.rfind(b"OggS")
-    if j >= 0 and j + 14 <= len(tail) and rate:
-        (granule,) = struct.unpack("<q", tail[j + 6 : j + 14])
-        if granule > 0:
-            out["duration_ms"] = max(0, granule - pre_skip) * 1000 // rate
-    return out
-
-
-def encode_ogg_header(
-    codec: str,
-    sample_rate: int,
-    channels: int,
-    total_samples: int,
-    pre_skip: int = 312,
-) -> bytes:
-    """Minimal two-page Ogg fixture: an identification-header page and
-    a final page carrying the terminal granule (header facts only)."""
-
-    def page(granule: int, payload: bytes, htype: int) -> bytes:
-        return (
-            b"OggS\x00"
-            + bytes([htype])
-            + struct.pack("<q", granule)
-            + b"\x00" * 12  # serial/seq/crc (not validated header-only)
-            + bytes([1, min(255, len(payload))])
-            + payload[:255]
-        )
-
-    if codec == "vorbis":
-        ident = (
-            b"\x01vorbis"
-            + struct.pack("<I", 0)
-            + bytes([channels])
-            + struct.pack("<I", sample_rate)
-            + b"\x00" * 16
-        )
-        granule = total_samples
-    elif codec == "opus":
-        ident = (
-            b"OpusHead\x01"
-            + bytes([channels])
-            + struct.pack("<H", pre_skip)
-            + struct.pack("<I", sample_rate)
-            + b"\x00" * 4
-        )
-        granule = total_samples + pre_skip
-    else:
-        raise ValueError("codec must be 'vorbis' or 'opus'")
-    return page(0, ident, 0x02) + page(granule, b"\x00" * 16, 0x04)
-
-
-def flac_info(data: bytes) -> dict:
-    """Header-only FLAC facts from the STREAMINFO metadata block:
-    {'sample_rate', 'channels', 'bits_per_sample', 'duration_ms'}.
-    Returns {} when the stream is not FLAC or STREAMINFO is absent."""
-    if data[:4] != b"fLaC" or len(data) < 8:
-        return {}
-    pos = 4
-    while pos + 4 <= len(data):
-        hdr = data[pos]
-        btype = hdr & 0x7F
-        (blen,) = (int.from_bytes(data[pos + 1 : pos + 4], "big"),)
-        body = data[pos + 4 : pos + 4 + blen]
-        if btype == 0 and len(body) >= 18:  # STREAMINFO
-            bits = int.from_bytes(body[10:18], "big")
-            rate = (bits >> 44) & 0xFFFFF
-            channels = ((bits >> 41) & 0x7) + 1
-            bps = ((bits >> 36) & 0x1F) + 1
-            total = bits & ((1 << 36) - 1)
-            out = {
-                "sample_rate": rate,
-                "channels": channels,
-                "bits_per_sample": bps,
-            }
-            if rate:
-                out["duration_ms"] = total * 1000 // rate
-            return out
-        if hdr & 0x80:  # last-metadata-block flag
-            break
-        pos += 4 + blen
-    return {}
-
-
-def encode_flac_header(
-    sample_rate: int, channels: int, bits_per_sample: int, total_samples: int
-) -> bytes:
-    """Minimal fLaC + STREAMINFO fixture (header facts only)."""
-    bits = (
-        (sample_rate << 44)
-        | ((channels - 1) << 41)
-        | ((bits_per_sample - 1) << 36)
-        | total_samples
-    )
-    body = b"\x00" * 10 + bits.to_bytes(8, "big") + b"\x00" * 16
-    return b"fLaC" + b"\x80" + len(body).to_bytes(3, "big") + body
-
-
 _ID3_TEXT_FRAMES = {
     "TIT2": "title",
     "TPE1": "artist",
@@ -3327,34 +3198,3 @@ def resize_media(
 
     return map_rows(df.select(id_col, blob_col), RESIZE_SCHEMA, lambda: row_fn)
 
-
-def exact_media_dedup(meta: DataFrame) -> DataFrame:
-    """Digest-level dedup over the metadata table (never touches bytes)."""
-    return (
-        meta.filter(F.col("digest").isNotNull())
-        .groupBy("digest")
-        .agg(
-            F.count(F.lit(1)).alias("n_copies"),
-            F.min("media_id").alias("keep_id"),
-            F.sum("n_bytes").alias("total_bytes"),
-        )
-    )
-
-
-def frame_sample_plan(
-    meta: DataFrame, every_n_seconds: float = 1.0, assumed_fps: float = 25.0
-) -> DataFrame:
-    """For video rows: a deterministic frame-sampling plan (frame indexes
-    to decode later). Planning is metadata-only; the decode stage consumes
-    the plan. Duration is unknown without a decoder → plan covers the
-    first minute (bounded), flagged `estimated`."""
-    if every_n_seconds <= 0 or assumed_fps <= 0:
-        raise ValueError("every_n_seconds and assumed_fps must be > 0")
-    n = max(1, int(60 / every_n_seconds))  # at least one frame per video
-    step = int(assumed_fps * every_n_seconds)
-    idxs = F.array(*[F.lit(i * step) for i in range(n)])
-    return meta.filter(F.col("media_type") == "video").select(
-        "media_id",
-        F.explode(idxs).alias("frame_index"),
-        F.lit(True).alias("estimated"),
-    )

@@ -32,7 +32,7 @@ import re
 import zipfile
 from typing import List, Sequence, Tuple, Union
 
-__all__ = ["odf_to_xhtml_text", "make_odt", "make_odp"]
+__all__ = ["odf_to_xhtml_text", "make_odt"]
 
 _H = re.compile(r"<text:h\b([^>]*)>(.*?)</text:h>", re.S)
 _P = re.compile(r"<text:p\b[^>]*>(.*?)</text:p>|<text:p\b[^>]*/>", re.S)
@@ -261,17 +261,3 @@ def make_odt(blocks: Sequence[Block]) -> bytes:
         + "</office:text></office:body></office:document-content>"
     )
     return _write_odf_zip("application/vnd.oasis.opendocument.text", xml)
-
-
-def make_odp(pages: Sequence[Sequence[Block]]) -> bytes:
-    """odp bytes; each page is a sequence of blocks as in make_odt."""
-    xml = (
-        _CONTENT_PREFIX
-        + "<office:presentation>"
-        + "".join(
-            f'<draw:page draw:name="page{i + 1}">' + _blocks_xml(pg) + "</draw:page>"
-            for i, pg in enumerate(pages)
-        )
-        + "</office:presentation></office:body></office:document-content>"
-    )
-    return _write_odf_zip("application/vnd.oasis.opendocument.presentation", xml)

@@ -76,20 +76,6 @@ def canonicalize_urls(df: DataFrame, url_col: str = "url") -> DataFrame:
     )
 
 
-def url_duplicates(df: DataFrame, url_col: str = "url") -> DataFrame:
-    """Groups of distinct raw URLs that canonicalize identically —
-    hash-groupBy on the canonical key, one shuffle (same shape as
-    content-level exact dedup)."""
-    c = canonicalize_urls(df, url_col)
-    return (
-        c.groupBy("canonical_url")
-        .agg(
-            F.count(F.lit(1)).alias("n_urls"),
-            F.min(url_col).alias("keep_url"),
-        )
-    )
-
-
 def _remove_dot_segments(path: Column) -> Column:
     """RFC 3986 §5.2.4 over a path column, no UDF: split on '/', fold
     the segments through an array accumulator (``F.aggregate`` — one

@@ -220,19 +220,32 @@ def export_per_doc_turtle(
     document's graph serializes with the canonical Turtle writer.
     Refuses corpora above ``max_docs`` documents (a driver-bound loop
     over millions of files is a misuse of this sink — write the triples
-    table instead). Returns the number of files written.
+    table instead). Two documents whose names clean to the same file name
+    raise ``ValueError`` before any file is written, instead of one
+    silently overwriting the other. Returns the number of files written.
     """
     import os
+    import re
 
-    from pyspark.sql import functions as F
-
-    n_docs = triples.select(doc_name_col).distinct().limit(max_docs + 1).count()
-    if n_docs > max_docs:
+    docs = triples.select(doc_name_col).distinct().limit(max_docs + 1).collect()
+    if len(docs) > max_docs:
         raise ValueError(
             f"export_per_doc_turtle is a small-corpus exporter: corpus has "
             f"> {max_docs} documents; write the triples table (Parquet) or "
             f"write_ntriples instead"
         )
+    # doc-name cleanup mirrors runner.py:316-317
+    doc_of = {}
+    for doc in sorted(r[0] for r in docs):
+        clean = re.sub(r"[^\x20-\x7F]", "-", re.sub(r"\s+", "-", doc))
+        clean = clean.replace("/", "_").replace(":", "_")
+        if clean in doc_of:
+            raise ValueError(
+                f"export_per_doc_turtle: documents {doc_of[clean]!r} and {doc!r} "
+                f"both map to the file name {clean}.ttl"
+            )
+        doc_of[clean] = doc
+    file_names = {doc: clean for clean, doc in doc_of.items()}
     os.makedirs(out_dir, exist_ok=True)
     grouped = (
         triples.groupBy(doc_name_col)
@@ -249,12 +262,7 @@ def export_per_doc_turtle(
     )
     n = 0
     for row in grouped.toLocalIterator():
-        doc = row[doc_name_col]
-        # doc-name cleanup mirrors runner.py:316-317
-        import re as _re
-
-        clean = _re.sub(r"[^\x20-\x7F]", "-", _re.sub(r"\s+", "-", doc))
-        clean = clean.replace("/", "_").replace(":", "_")
+        clean = file_names[row[doc_name_col]]
         rows = [
             (t.subj, t.pred, t.obj_kind, t.obj_lexical, t.obj_lang, t.obj_datatype)
             for t in row.rows

@@ -1,7 +1,3 @@
 from .pages import PAGES_SCHEMA, read_pages, synth_pages_df, synth_page_rows
-from .bucketed import write_bucketed, read_bucketed, bucketed_exchange_count
 
-__all__ = [
-    "PAGES_SCHEMA", "read_pages", "synth_pages_df", "synth_page_rows",
-    "write_bucketed", "read_bucketed", "bucketed_exchange_count",
-]
+__all__ = ["PAGES_SCHEMA", "read_pages", "synth_pages_df", "synth_page_rows"]

@@ -1,15 +1,9 @@
 from .ingest import (
     read_pages_stream,
-    stream_dedup_pages,
-    stream_host_sessions,
     stream_triples,
-    stream_windowed_page_counts,
 )
 
 __all__ = [
     "read_pages_stream",
-    "stream_dedup_pages",
-    "stream_host_sessions",
     "stream_triples",
-    "stream_windowed_page_counts",
 ]

@@ -3,16 +3,11 @@
 The reference is strictly batch (one process per document list); the
 engine's streaming mode reuses the identical kernels — the fused
 extract+workflows+best stage is a stateless ``mapInPandas``, which
-Structured Streaming runs per micro-batch unchanged. On top of that:
+Structured Streaming runs per micro-batch unchanged:
 
-* ``stream_triples``       — pages stream → winner triples sink
+* ``read_pages_stream`` — a file-source stream with the pages schema.
+* ``stream_triples``    — pages stream → winner triples sink
   (append mode; exactly-once via the sink checkpoint).
-* ``stream_hourly_stats``  — windowed aggregation with a watermark on
-  ``warc_ts`` (late pages beyond the watermark are dropped, the
-  standard late-data policy).
-* ``stream_dedup_pages``   — streaming exact-dedup: first-seen url wins
-  within the watermark horizon (``dropDuplicates`` with watermark —
-  state is bounded by the horizon, required at web scale).
 
 In production the source is Kafka/Iceberg CDC; here the file source
 with ``availableNow`` triggers exercises identical plans.
@@ -23,7 +18,6 @@ from __future__ import annotations
 from typing import List, Optional
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..operators.run import explode_triples, extract_and_run_workflows
 from ..sources.pages import PAGES_SCHEMA
@@ -62,161 +56,3 @@ def stream_triples(
         writer = writer.trigger(availableNow=True)
     return writer.start()
 
-
-def stream_windowed_page_counts(
-    pages_stream: DataFrame,
-    checkpoint: str,
-    out_path: str,
-    watermark: str = "2 hours",
-    window: str = "1 hour",
-    available_now: bool = True,
-):
-    """Watermarked tumbling-window page counts per host (append mode:
-    a window emits exactly once, after the watermark passes it)."""
-    host = F.regexp_extract("url", r"https?://([^/]+)/", 1)
-    agg = (
-        pages_stream.withWatermark("warc_ts", watermark)
-        .groupBy(F.window("warc_ts", window).alias("win"), host.alias("host"))
-        .agg(F.count(F.lit(1)).alias("n_pages"))
-        .select(
-            F.col("win.start").alias("window_start"),
-            F.col("win.end").alias("window_end"),
-            "host",
-            "n_pages",
-        )
-    )
-    writer = (
-        agg.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def stream_dedup_pages(
-    pages_stream: DataFrame,
-    out_path: str,
-    checkpoint: str,
-    watermark: str = "2 hours",
-    available_now: bool = True,
-):
-    """Streaming exact dedup: first-seen url wins inside the watermark
-    horizon. State size is bounded by the horizon — the web-scale
-    requirement (unbounded dropDuplicates state would OOM)."""
-    deduped = (
-        pages_stream.withWatermark("warc_ts", watermark)
-        .dropDuplicatesWithinWatermark(["url"])
-    )
-    writer = (
-        deduped.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def stream_host_sessions(
-    pages_stream: DataFrame,
-    checkpoint: str,
-    out_path: str,
-    gap: str = "30 minutes",
-    watermark: str = "2 hours",
-    available_now: bool = True,
-):
-    """Custom stateful operator: crawl-session detection per host via
-    ``applyInPandasWithState``.
-
-    A "session" is a run of pages from one host with inter-arrival gaps
-    below ``gap`` (event time). State per host = the open session
-    (start, last_ts, n_pages); a session emits when the watermark
-    passes last_ts + gap (state timeout), so state stays bounded — the
-    pattern for custom stateful ops the built-in windows can't express.
-    """
-    import datetime as _dt
-
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    gap_minutes = {"30 minutes": 30, "10 minutes": 10, "1 hour": 60}.get(gap)
-    if gap_minutes is None:
-        raise ValueError(f"unsupported gap literal: {gap}")
-    gap_ms = gap_minutes * 60 * 1000
-
-    out_schema = (
-        "host string, session_start timestamp, session_end timestamp, n_pages long"
-    )
-    state_schema = "start long, last long, n long"
-
-    def update(key, pdfs, state):
-        host = key[0]
-        rows = []
-        ts_list = []
-        for pdf in pdfs:
-            ts_list.extend(int(t.value // 10**6) for t in pd.to_datetime(pdf["warc_ts"]))
-        if not ts_list and state.hasTimedOut:
-            start, last, n = state.get
-            state.remove()
-            yield pd.DataFrame(
-                {
-                    "host": [host],
-                    "session_start": [pd.Timestamp(start, unit="ms")],
-                    "session_end": [pd.Timestamp(last, unit="ms")],
-                    "n_pages": [n],
-                }
-            )
-            return
-        ts_list.sort()
-        if state.exists:
-            start, last, n = state.get
-        else:
-            start = last = None
-            n = 0
-        for t in ts_list:
-            if last is not None and t - last > gap_ms:
-                rows.append((host, start, last, n))
-                start, n = t, 0
-            if start is None:
-                start = t
-            last = t
-            n += 1
-        if start is not None:
-            state.update((start, last, n))
-            state.setTimeoutTimestamp(last + gap_ms)
-        if rows:
-            yield pd.DataFrame(
-                {
-                    "host": [r[0] for r in rows],
-                    "session_start": [pd.Timestamp(r[1], unit="ms") for r in rows],
-                    "session_end": [pd.Timestamp(r[2], unit="ms") for r in rows],
-                    "n_pages": [r[3] for r in rows],
-                }
-            )
-
-    host = F.regexp_extract("url", r"https?://([^/]+)/", 1).alias("host")
-    grouped = (
-        pages_stream.select(host, "warc_ts", "url")
-        .withWatermark("warc_ts", watermark)
-        .groupBy("host")
-    )
-    sessions = grouped.applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-    writer = (
-        sessions.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -3,10 +3,7 @@
 import pytest
 from pyspark.sql import functions as F
 
-from cmc_knowledge_graph_text2ttl_spark.operators.boilerplate import (
-    host_boilerplate_stats,
-    strip_host_boilerplate,
-)
+from cmc_knowledge_graph_text2ttl_spark.operators.boilerplate import strip_host_boilerplate
 from cmc_knowledge_graph_text2ttl_spark.operators.extract import (
     MAX_DOC_BYTES,
     extract_one,
@@ -44,14 +41,6 @@ def test_unique_lines_survive(spark):
     out = strip_host_boilerplate(_pages(spark))
     kept = {r.text for r in out.filter(F.col("host") == "big.example.org").collect()}
     assert kept == {f"unique content {i}" for i in range(10)}
-
-
-def test_stats_report(spark):
-    stats = {r.host: r for r in host_boilerplate_stats(_pages(spark)).collect()}
-    assert stats["big.example.org"].n_boilerplate_lines == 2
-    assert stats["big.example.org"].n_docs == 10
-    assert stats["small.example.org"].n_boilerplate_lines == 0
-    assert 0 < stats["big.example.org"].boilerplate_ratio <= 1.0
 
 
 def test_oversized_doc_guard():

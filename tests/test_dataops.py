@@ -355,25 +355,6 @@ class TestNearDupClusters:
         with pytest.raises(ValueError):
             dedup.near_duplicate_clusters(df, method="embedding")
 
-    def test_filter_integration_tags_near_duplicates(self, spark):
-        from cmc_knowledge_graph_text2ttl_spark.operators.filtering import (
-            corpus_filter_with_near_dups,
-        )
-
-        df = spark.createDataFrame(self.ROWS, ["doc_id", "text"])
-        out = {
-            r.id: r
-            for r in corpus_filter_with_near_dups(
-                df,
-                min_words=3,
-                dedup_kwargs={"n_hashes": 8, "bands": 4, "threshold": 0.5},
-            ).collect()
-        }
-        assert "near_duplicate" in out[9].reasons and not out[9].keep
-        assert "near_duplicate" in out[11].reasons and not out[11].keep
-        assert "near_duplicate" not in out[10].reasons  # survivor kept
-        assert "near_duplicate" not in out[3].reasons
-
 
 class TestShortDocShingles:
     def test_docs_shorter_than_n_yield_no_shingles(self, spark):
@@ -873,18 +854,6 @@ class TestUrlCanonicalization:
         assert "Exchange" not in plan
         assert "BatchEvalPython" not in plan and "PythonUDF" not in plan
 
-    def test_url_duplicates_collapse(self, spark):
-        from cmc_knowledge_graph_text2ttl_spark.operators.urls import url_duplicates
-
-        urls = [
-            "HTTPS://A.com/x/?utm_source=1",
-            "https://a.COM:443/x",
-            "https://a.com/y",
-        ]
-        df = spark.createDataFrame([(u,) for u in urls], ["url"])
-        groups = {r.canonical_url: r.n_urls for r in url_duplicates(df).collect()}
-        assert groups == {"https://a.com/x": 2, "https://a.com/y": 1}
-
 
 class TestMultimodal:
     PNG = (
@@ -910,11 +879,6 @@ class TestMultimodal:
         assert meta["bad1"].error == "empty blob"
         assert meta["unk1"].media_type == "unknown"
 
-    def test_digest_dedup(self, spark):
-        meta = mm.media_metadata(self._media_df(spark))
-        groups = mm.exact_media_dedup(meta).filter("n_copies > 1").collect()
-        assert len(groups) == 1 and groups[0].keep_id == "img1"
-
     def test_feature_default_and_injected_decoder(self, spark):
         df = self._media_df(spark)
         feats0 = mm.extract_features(df)
@@ -938,20 +902,6 @@ class TestMultimodal:
         assert rows["width"] == 4.0 and rows["height"] == 3.0
         assert rows["channels"] == 3.0
         assert (rows["mean_c0"], rows["mean_c1"], rows["mean_c2"]) == (10.0, 20.0, 30.0)
-
-    def test_frame_sample_plan_validates_args(self, spark):
-        meta = mm.media_metadata(self._media_df(spark))
-        with pytest.raises(ValueError):
-            mm.frame_sample_plan(meta, every_n_seconds=0.0)
-        # sparser than the planning window still yields one frame
-        plan = mm.frame_sample_plan(meta, every_n_seconds=90.0).collect()
-        assert [r.frame_index for r in plan] == [0]
-
-    def test_frame_sample_plan(self, spark):
-        meta = mm.media_metadata(self._media_df(spark))
-        plan = mm.frame_sample_plan(meta, every_n_seconds=2.0).collect()
-        assert all(r.media_id == "vid1" for r in plan)
-        assert [r.frame_index for r in plan[:3]] == [0, 50, 100]
 
 
 class TestImageCodec:
@@ -2401,15 +2351,7 @@ class TestMp4Info:
 
 
 class TestAudioProvenance:
-    """FLAC STREAMINFO + ID3v2 text frames + WebM magic."""
-
-    def test_flac_streaminfo(self):
-        f = mm.encode_flac_header(44100, 2, 16, 44100 * 63)
-        assert mm.flac_info(f) == {
-            "sample_rate": 44100, "channels": 2, "bits_per_sample": 16,
-            "duration_ms": 63000}
-        assert mm.sniff_media(f)[:2] == ("audio", "flac")
-        assert mm.flac_info(b"fLaC") == {} and mm.flac_info(b"junk") == {}
+    """ID3v2 text frames + WebM magic."""
 
     def test_id3_text_frames_both_encodings(self):
         b = mm.encode_id3_mp3({"title": "Nice Song",
@@ -2437,18 +2379,6 @@ class TestAudioProvenance:
             "media_id string, blob binary")
         got = {r.media_id: r for r in mm.audio_tags(df).collect()}
         assert got["a"].title == "X" and got["b"].title is None
-
-    def test_ogg_vorbis_and_opus_duration(self):
-        v = mm.encode_ogg_header("vorbis", 44100, 2, 44100 * 30)
-        assert mm.ogg_info(v) == {"codec": "vorbis", "channels": 2,
-                                  "sample_rate": 44100, "duration_ms": 30000}
-        o = mm.encode_ogg_header("opus", 48000, 1, 48000 * 7)
-        assert mm.ogg_info(o) == {"codec": "opus", "channels": 1,
-                                  "sample_rate": 48000, "duration_ms": 7000}
-        assert mm.ogg_info(b"OggS" + b"\x00" * 40) == {"codec": "unknown"}
-        assert mm.ogg_info(b"nope") == {}
-        for cut in range(0, len(v), 3):
-            assert isinstance(mm.ogg_info(v[:cut]), dict)
 
 
 class TestSubwordTokens:

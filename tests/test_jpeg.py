@@ -4,6 +4,7 @@ entropy coding, dequant/zigzag, IDCT, color conversion."""
 import numpy as np
 import pytest
 
+import codec_fixtures as CF
 from cmc_knowledge_graph_text2ttl_spark.operators import jpeg as J
 from cmc_knowledge_graph_text2ttl_spark.operators import multimodal as mm
 
@@ -76,7 +77,7 @@ class TestColor:
         yb = [[10] + [0] * 63]
         cb = [[5] + [0] * 63]
         cr = [[-9] + [0] * 63]
-        w, h, ch, px = J.decode_jpeg(J.encode_jpeg_ycbcr444(8, 8, yb, cb, cr))
+        w, h, ch, px = J.decode_jpeg(CF.encode_jpeg_ycbcr444(8, 8, yb, cb, cr))
         a = np.frombuffer(px, np.uint8).reshape(8, 8, 3)
         assert (w, h, ch) == (8, 8, 3)
         assert (a == conv(10, 5, -9)).all()
@@ -87,7 +88,7 @@ class TestColor:
         yb, cbb, crb = (_rand_blocks(rng, 4) for _ in range(3))
         q = [8] + [int(x) for x in rng.randint(1, 16, 63)]
         w, h, ch, px = J.decode_jpeg(
-            J.encode_jpeg_ycbcr444(w_img, h_img, yb, cbb, crb, quant=q)
+            CF.encode_jpeg_ycbcr444(w_img, h_img, yb, cbb, crb, quant=q)
         )
         got = np.frombuffer(px, np.uint8).reshape(h, w, 3).astype(float)
         y = _ref_plane(yb, q, bw, bh, h_img, w_img) + 128.0
@@ -121,7 +122,7 @@ class TestSubsampling:
         yb = [[v] + [0] * 63 for v in (10, -40, 60, -90)]
         cb = [[6] + [0] * 63]
         cr = [[-12] + [0] * 63]
-        w, h, ch, px = J.decode_jpeg(J.encode_jpeg_ycbcr420(16, 16, yb, cb, cr))
+        w, h, ch, px = J.decode_jpeg(CF.encode_jpeg_ycbcr420(16, 16, yb, cb, cr))
         a = np.frombuffer(px, np.uint8).reshape(16, 16, 3)
         assert (w, h, ch) == (16, 16, 3)
         assert (a[:8, :8] == conv(10, 6, -12)).all()
@@ -134,7 +135,7 @@ class TestSubsampling:
         yb = [[i] + [0] * 63 for i in range(8)]
         cb = [[0] + [0] * 63, [0] + [0] * 63]
         cr = [[0] + [0] * 63, [0] + [0] * 63]
-        w, h, ch, px = J.decode_jpeg(J.encode_jpeg_ycbcr420(20, 12, yb, cb, cr))
+        w, h, ch, px = J.decode_jpeg(CF.encode_jpeg_ycbcr420(20, 12, yb, cb, cr))
         assert (w, h, ch) == (20, 12, 3)
         a = np.frombuffer(px, np.uint8).reshape(12, 20, 3)
         # top-left Y block is 0 → gray 128 everywhere in that quadrant
@@ -142,7 +143,7 @@ class TestSubsampling:
 
     def test_420_block_count_mismatch_raises(self):
         with pytest.raises(ValueError):
-            J.encode_jpeg_ycbcr420(16, 16, [[0] * 64] * 3, [[0] * 64], [[0] * 64])
+            CF.encode_jpeg_ycbcr420(16, 16, [[0] * 64] * 3, [[0] * 64], [[0] * 64])
 
 
 class TestRobustness:
@@ -246,8 +247,8 @@ class TestProgressive:
         y = [_blk(dc=d, k1=d) for d in (8, -8, 16, -16, 0, 24)]
         cb = [_blk(dc=3)] + [_blk()] * 4 + [_blk(dc=-3, k5=2)]
         cr = [_blk(dc=-11, k2=-1)] + [_blk()] * 5
-        base = J.decode_jpeg(J.encode_jpeg_ycbcr444(24, 16, y, cb, cr))
-        prog = J.decode_jpeg(J.encode_jpeg_progressive_ycbcr444(24, 16, y, cb, cr))
+        base = J.decode_jpeg(CF.encode_jpeg_ycbcr444(24, 16, y, cb, cr))
+        prog = J.decode_jpeg(CF.encode_jpeg_progressive_ycbcr444(24, 16, y, cb, cr))
         assert base == prog
 
     def test_sniff_and_decode_image_dispatch(self):

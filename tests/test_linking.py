@@ -1,6 +1,6 @@
 """Entity-linking operator tests: broadcast dictionary join, regex
-cascade, fixture TSV loaders, hot-hub sameAs canonicalization, per-doc
-Turtle export, ontology TTL-lite parsing.
+cascade, hot-hub sameAs canonicalization, per-doc Turtle export,
+ontology TTL-lite parsing.
 """
 
 import os
@@ -18,14 +18,21 @@ from cmc_knowledge_graph_text2ttl_spark.workflow.sparql import MiniGraph, parse_
 FIX = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "fixtures")
 
 
+def _read_tsv(path):
+    """(key, iri) pairs of a FIXTURES.md §4 TSV; '#' lines are comments."""
+    with open(path, encoding="utf8") as fh:
+        lines = fh.read().splitlines()
+    return [tuple(l.split("\t", 1)) for l in lines if l and not l.startswith("#")]
+
+
 @pytest.fixture(scope="module")
 def dictionary():
-    return L.load_dictionary(f"{FIX}/linking/dictionary.tsv")
+    return _read_tsv(f"{FIX}/linking/dictionary.tsv")
 
 
 @pytest.fixture(scope="module")
 def patterns():
-    return L.load_dictionary(f"{FIX}/linking/patterns.tsv")
+    return _read_tsv(f"{FIX}/linking/patterns.tsv")
 
 
 class TestDictionaryLinking:
@@ -72,7 +79,11 @@ class TestDictionaryLinking:
 
 class TestSameAsFixture:
     def test_hot_hub_components_with_salting(self, spark):
-        edges = L.load_sameas_csv(spark, f"{FIX}/linking/sameas_edges.csv")
+        edges = (
+            spark.read.option("header", "true")
+            .csv(f"{FIX}/linking/sameas_edges.csv")
+            .select(F.col("src_iri").alias("src"), F.col("dst_iri").alias("dst"))
+        )
         comp = connected_components(edges, salt_hubs=8)
         m = {r.node: r.component for r in comp.collect()}
         # chain c0..c5 collapses to its lexicographic min
@@ -129,6 +140,24 @@ class TestPerDocTurtleExport:
         assert 'x:p "v1"' in content and "x:q x:o" in content
         assert '"zwei"@de' in (tmp_path / "doc___2.ttl").read_text()
 
+    @pytest.mark.parametrize(
+        "a, b",
+        [("http://ex.org/café", "http://ex.org/cafè"), ("http://ex.org/a b", "http://ex.org/a-b")],
+        ids=["non-ascii", "whitespace"],
+    )
+    def test_colliding_file_names_raise(self, spark, tmp_path, a, b):
+        """Both URLs clean to one file name: refuse instead of letting one
+        document's file silently overwrite the other's."""
+        tri = spark.createDataFrame(
+            [("http://x/s", "http://x/p", "literal", doc, None, None, doc) for doc in (a, b)],
+            "subj string, pred string, obj_kind string, obj_lexical string,"
+            "obj_lang string, obj_datatype string, url string",
+        )
+        with pytest.raises(ValueError, match="both map to the file name") as err:
+            export_per_doc_turtle(tri, str(tmp_path / "out"))
+        assert a in str(err.value) and b in str(err.value)
+        assert not (tmp_path / "out").exists()
+
 
 class TestLongTurtleStyle:
     ROWS = [
@@ -177,55 +206,6 @@ class TestLongTurtleStyle:
 
         with pytest.raises(ValueError):
             serialize_turtle(self.ROWS, self.PFX, style="n3")
-
-
-class TestEndpointExporter:
-    def test_batched_post_with_fake_transport(self, spark, tmp_path):
-        import json
-
-        rows = [
-            (f"http://x/s{i}", "http://x/p", "literal", str(i), None, None)
-            for i in range(25)
-        ]
-        tri = spark.createDataFrame(
-            rows,
-            "subj string, pred string, obj_kind string, obj_lexical string,"
-            "obj_lang string, obj_datatype string",
-        ).repartition(3)
-        log = str(tmp_path / "posts.log")
-
-        def fake_transport(url, body, headers, _log=log):
-            # executor-side: record each POST to a shared file
-            with open(_log, "a") as fh:
-                fh.write(json.dumps({
-                    "url": url,
-                    "lines": body.decode().count("\n") + 1,
-                    "auth": headers.get("Authorization", ""),
-                }) + "\n")
-            return 200
-
-        from cmc_knowledge_graph_text2ttl_spark.sinks.exporter import export_to_endpoint
-
-        import os
-        os.environ["KG_TEST_PW"] = "sekrit"
-        n = export_to_endpoint(
-            tri, "http://fake-endpoint/db", username="u", password="$KG_TEST_PW",
-            transport=fake_transport, max_batch_lines=10,
-        )
-        with open(log) as fh:
-            posts = [json.loads(l) for l in fh]
-        assert n == len(posts) >= 3
-        assert sum(p["lines"] for p in posts) == 25
-        assert all(p["url"] == "http://fake-endpoint/db" for p in posts)
-        assert all(p["auth"].startswith("Basic ") for p in posts)
-
-    def test_missing_env_credential_raises(self, spark):
-        from cmc_knowledge_graph_text2ttl_spark.sinks.exporter import export_to_endpoint
-
-        df = spark.createDataFrame([], "subj string, pred string, obj_kind string,"
-                                   "obj_lexical string, obj_lang string, obj_datatype string")
-        with pytest.raises(ValueError):
-            export_to_endpoint(df, "http://x", username="$NO_SUCH_ENV_VAR")
 
 
 class TestEmbeddingLinking:

@@ -12,10 +12,7 @@ from cmc_knowledge_graph_text2ttl_spark.operators import (
     extract_text,
     run_workflows,
 )
-from cmc_knowledge_graph_text2ttl_spark.operators.best import (
-    doc_stats,
-    select_best_workflow,
-)
+from cmc_knowledge_graph_text2ttl_spark.operators.best import select_best_workflow
 from cmc_knowledge_graph_text2ttl_spark.operators.extract import extract_one
 from cmc_knowledge_graph_text2ttl_spark.sinks import triples_to_nt_lines
 from cmc_knowledge_graph_text2ttl_spark.sources import synth_pages_df, synth_page_rows
@@ -66,13 +63,6 @@ class TestEndToEnd:
     def test_triples_produced(self, ranked):
         tri = explode_triples(ranked, winners_only=True)
         assert tri.count() > N_DOCS  # every doc family emits multiple triples
-
-    def test_doc_stats_schema(self, ranked):
-        stats = doc_stats(ranked)
-        assert set(stats.columns) == {
-            "url", "workflow", "workflow_idx", "no_matches", "no_triples",
-            "total_match_len", "score", "error", "is_best",
-        }
 
     def test_no_unexpected_errors(self, ranked):
         assert ranked.filter("error is not null").count() == 0

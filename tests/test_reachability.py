@@ -1,0 +1,286 @@
+"""Every package module and top-level definition is reached from an entry point.
+
+The roots are the CLI module, ``__spark_entry__.py``, the ``bench*.py``
+files and the scripts under ``perfbench/``, ``tools/`` and ``scripts/``.
+Tests are not roots: code that only a test calls is dead code.
+
+Both checks read the AST only; nothing is imported.
+
+1. Module reachability follows ``import`` / ``from ... import``
+   statements anywhere in a file (function-local imports included). An
+   ``__init__`` re-export is followed only for the names actually
+   imported through it, so a package cannot keep a submodule alive by
+   re-exporting it.
+2. A top-level ``def``/``class``/assignment in a non-``__init__`` module
+   must be referenced by a ``Name``, ``Attribute`` or import ``alias``
+   node in package or root code outside its own definition span. Names,
+   not tokens: an f-string's expressions are AST nodes too, so a use in
+   ``f"{_helper(x)}"`` counts, while a word in a docstring does not.
+"""
+
+import ast
+from pathlib import Path
+
+REPO = Path(__file__).resolve().parent.parent
+PKG_NAME = "cmc_knowledge_graph_text2ttl_spark"
+PKG = REPO / PKG_NAME
+ROOT_MODULES = (f"{PKG_NAME}.cli",)
+
+# "module" or "module:name" entries exempt from the checks. Keep it empty:
+# delete unreached code instead of listing it here.
+ALLOWLIST = frozenset()
+
+
+def _parse(path):
+    return ast.parse(path.read_text(encoding="utf-8"), filename=str(path))
+
+
+def package_modules():
+    """Dotted module name -> path for every package module."""
+    mods = {}
+    for path in sorted(PKG.rglob("*.py")):
+        parts = path.relative_to(REPO).with_suffix("").parts
+        if parts[-1] == "__init__":
+            parts = parts[:-1]
+        mods[".".join(parts)] = path
+    return mods
+
+
+def root_files():
+    files = [REPO / "__spark_entry__.py", *sorted(REPO.glob("bench*.py"))]
+    for d in ("perfbench", "tools", "scripts"):
+        files += [p for p in sorted((REPO / d).glob("*.py")) if not p.name.startswith("test_")]
+    return files
+
+
+class ImportGraph:
+    """Package import edges, with ``__init__`` re-exports followed per name."""
+
+    def __init__(self):
+        self.paths = package_modules()
+        self.trees = {m: _parse(p) for m, p in self.paths.items()}
+
+    def is_package(self, mod):
+        return self.paths[mod].name == "__init__.py"
+
+    def _base(self, mod, node):
+        """Absolute module an ``ImportFrom`` in ``mod`` imports from."""
+        if node.level == 0:
+            return node.module or ""
+        parts = mod.split(".") if mod and self.is_package(mod) else mod.split(".")[:-1]
+        parts = parts[: len(parts) - (node.level - 1)]
+        return ".".join(parts + ([node.module] if node.module else []))
+
+    def _requests(self, node, mod, aliases=None):
+        """(module, name) pairs an import statement in ``mod`` asks for;
+        name None means the module itself."""
+        aliases = node.names if aliases is None else aliases
+        if isinstance(node, ast.Import):
+            return [(a.name, None) for a in aliases if a.name in self.paths]
+        base = self._base(mod, node)
+        out = []
+        for a in aliases:
+            if f"{base}.{a.name}" in self.paths:
+                out.append((f"{base}.{a.name}", None))
+            elif base in self.paths:
+                out.append((base, a.name))
+        return out
+
+    def requests(self, tree, mod=""):
+        """Every package import made anywhere in ``tree``."""
+        return [
+            r
+            for node in ast.walk(tree)
+            if isinstance(node, (ast.Import, ast.ImportFrom))
+            for r in self._requests(node, mod)
+        ]
+
+    def _reexport(self, pkg, name):
+        """Requests behind ``name`` as bound by the ``__init__`` of ``pkg``."""
+        for node in self.trees[pkg].body:
+            if isinstance(node, (ast.Import, ast.ImportFrom)):
+                for a in node.names:
+                    if (a.asname or a.name.split(".")[0]) == name:
+                        return self._requests(node, pkg, [a])
+        return []
+
+    def reach(self, requests):
+        """Modules executed by ``requests``, re-exports followed per name."""
+        seen, done = set(), set()
+        todo = list(requests)
+        while todo:
+            mod, name = todo.pop()
+            parts = mod.split(".")
+            seen.update(".".join(parts[:i]) for i in range(1, len(parts) + 1))
+            key = (mod, name) if self.is_package(mod) else (mod, None)
+            if key in done:
+                continue
+            done.add(key)
+            if not self.is_package(mod):
+                todo += self.requests(self.trees[mod], mod)
+            elif name is not None:
+                todo += self._reexport(mod, name)
+        return seen & set(self.paths)
+
+    def root_requests(self):
+        reqs = [(m, None) for m in ROOT_MODULES]
+        for path in root_files():
+            reqs += self.requests(_parse(path))
+        return reqs
+
+
+def _definitions(tree):
+    """(name, first line, last line) of each top-level definition."""
+    for node in tree.body:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            first = min([node.lineno] + [d.lineno for d in node.decorator_list])
+            yield node.name, first, node.end_lineno
+            continue
+        if isinstance(node, ast.Assign):
+            targets = node.targets
+        elif isinstance(node, ast.AnnAssign):
+            targets = [node.target]
+        else:
+            continue
+        for t in targets:
+            for n in ast.walk(t):
+                if isinstance(n, ast.Name) and not n.id.startswith("__"):
+                    yield n.id, node.lineno, node.end_lineno
+
+
+def _references(tree, reexports=True):
+    """(name, line) of every Name, Attribute and import-alias node; an
+    ``__init__`` passes ``reexports=False``, since re-exporting a name is
+    not a use of it."""
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name):
+            yield node.id, node.lineno
+        elif isinstance(node, ast.Attribute):
+            yield node.attr, node.end_lineno
+        elif isinstance(node, ast.Import) or (reexports and isinstance(node, ast.ImportFrom)):
+            for a in node.names:
+                yield a.name.rsplit(".", 1)[-1], node.lineno
+
+
+def unreached_modules():
+    graph = ImportGraph()
+    reached = graph.reach(graph.root_requests())
+    return sorted(m for m in graph.paths if m not in reached and m not in ALLOWLIST)
+
+
+def unreferenced_definitions():
+    """``module:name`` of the top-level definitions in reached modules that
+    no code outside their own span references (dunder names exempt).
+    Repeated to a fixpoint: a use inside a dead definition or an
+    unreached module does not count."""
+    mods = package_modules()
+    unreached = unreached_modules()
+    sources = [(m, p, p.name == "__init__.py") for m, p in mods.items()]
+    sources += [(str(p), p, False) for p in root_files()]
+    trees, refs = {}, {}
+    for key, path, is_init in sources:
+        trees[key] = _parse(path)
+        for name, line in _references(trees[key], reexports=not is_init):
+            refs.setdefault(name, []).append((key, line))
+    defs = [
+        (mod, name, first, last)
+        for mod, path in mods.items()
+        if path.name != "__init__.py" and mod not in unreached
+        for name, first, last in _definitions(trees[mod])
+        if f"{mod}:{name}" not in ALLOWLIST
+    ]
+    dead_spans = {m: [(1, float("inf"))] for m in unreached}
+    dead = set()
+    while True:
+        new = {
+            (mod, name, first, last)
+            for mod, name, first, last in defs
+            if not any(
+                (key != mod or not first <= line <= last)
+                and not any(a <= line <= b for a, b in dead_spans.get(key, ()))
+                for key, line in refs.get(name, ())
+            )
+        }
+        if new <= dead:
+            return sorted(f"{mod}:{name}" for mod, name, _, _ in dead)
+        for mod, _, first, last in new - dead:
+            dead_spans.setdefault(mod, []).append((first, last))
+        dead |= new
+
+
+def registry_closures():
+    """Registry query name -> package modules its import closure reaches:
+    imports inside the query, plus ``__spark_entry__`` module-level imports
+    and helpers it uses, transitively."""
+    graph = ImportGraph()
+    entry = _parse(REPO / "__spark_entry__.py")
+    tops, bound = {}, {}
+    for node in entry.body:
+        if isinstance(node, (ast.Import, ast.ImportFrom)):
+            for a in node.names:
+                bound[a.asname or a.name.split(".")[0]] = graph._requests(node, "", [a])
+        elif isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+            tops[node.name] = node
+        elif isinstance(node, ast.Assign):
+            for t in node.targets:
+                for n in ast.walk(t):
+                    if isinstance(n, ast.Name):
+                        tops[n.id] = node
+    out = {}
+    for query in sorted(n for n in tops if n.startswith("q_")):
+        seen, todo, reqs = set(), [query], []
+        while todo:
+            name = todo.pop()
+            if name in seen:
+                continue
+            seen.add(name)
+            reqs += graph.requests(tops[name])
+            for n in ast.walk(tops[name]):
+                if isinstance(n, ast.Name):
+                    todo += [n.id] if n.id in tops else []
+                    reqs += bound.get(n.id, [])
+        out[query] = graph.reach(reqs)
+    return out
+
+
+def family_map():
+    """Markdown rows for every package module the CLI does not import:
+    module, line count, and the registry queries that reach it."""
+    graph = ImportGraph()
+    cli = graph.reach([(m, None) for m in ROOT_MODULES])
+    closures = registry_closures()
+    rows = []
+    for mod in sorted(graph.paths):
+        if mod in cli or graph.is_package(mod):
+            continue
+        n_lines = len(graph.paths[mod].read_text(encoding="utf-8").splitlines())
+        queries = [q[2:] for q, reached in closures.items() if mod in reached]
+        path = graph.paths[mod].relative_to(PKG).as_posix()
+        rows.append(f"| `{path}` | {n_lines} | {len(queries)} | {', '.join(queries)} |")
+    return rows
+
+
+def test_every_package_module_is_reached_from_an_entry_point():
+    assert unreached_modules() == []
+
+
+def test_every_top_level_definition_is_referenced():
+    assert unreferenced_definitions() == []
+
+
+def test_reexports_count_only_for_the_names_imported_through_them():
+    graph = ImportGraph()
+    via_init = graph.reach([(f"{PKG_NAME}.sinks", "write_ntriples")])
+    assert f"{PKG_NAME}.sinks.ttl" in via_init
+    bare = graph.reach([(f"{PKG_NAME}.sinks", None)])
+    assert f"{PKG_NAME}.sinks.ttl" not in bare
+
+
+def test_fstring_uses_are_references():
+    tree = ast.parse('def f(x):\n    return f"{_helper(x)}"\n')
+    assert ("_helper", 2) in set(_references(tree))
+
+
+if __name__ == "__main__":
+    # Regenerates the COVERAGE.md family map.
+    print("\n".join(family_map()))

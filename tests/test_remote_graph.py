@@ -1,11 +1,9 @@
-"""Remote-graph select: batch prefetch (workflow/remote.py) and the
-exporter's OAuth-style refresh/backoff retry loop (sinks/exporter.py).
+"""Remote-graph select: batch prefetch (workflow/remote.py).
 
 Reference parity targets: URL-shape dispatch
-(text_to_turtle_processor.py:156-164), Stardog HTTP select
+(text_to_turtle_processor.py:156-164) and Stardog HTTP select
 (processor.py:233-327) — replaced by driver-side batch prefetch +
-broadcast — and the Azure-OAuth retry loop (runner.py:434-477) — as an
-injectable token_provider with refresh-on-401.
+broadcast.
 """
 
 import pytest
@@ -108,62 +106,3 @@ class TestPrefetch:
         assert [str(r["n"]) for r in out] == ["Alice"]
         assert len(ep.queries) == 1  # prefetch only — no per-select HTTP
 
-
-class TestExporterRetry:
-    def _df(self, spark):
-        return spark.createDataFrame(
-            [("http://s", "http://p", "iri", "http://o", None, None)],
-            "subj string, pred string, obj_kind string, obj_lexical string,"
-            " obj_lang string, obj_datatype string",
-        )
-
-    def test_token_refresh_on_401(self, spark):
-        # closures are pickled per task, so assertions go through OUTCOMES:
-        # first token is rejected with 401; success proves a refresh + retry
-        # happened executor-side (without refresh this would raise).
-        from cmc_knowledge_graph_text2ttl_spark.sinks.exporter import export_to_endpoint
-
-        def transport(url, body, headers):
-            return 401 if headers.get("Authorization") == "Bearer t0" else 201
-
-        tokens = iter(["t0", "t1", "t2"])
-        n = export_to_endpoint(
-            self._df(spark),
-            "http://e/db",
-            transport=transport,
-            token_provider=lambda: next(tokens),
-        )
-        assert n == 1
-
-    def test_401_without_provider_raises(self, spark):
-        from cmc_knowledge_graph_text2ttl_spark.sinks.exporter import export_to_endpoint
-
-        with pytest.raises(Exception, match="returned 401"):
-            export_to_endpoint(
-                self._df(spark), "http://e/db", transport=lambda u, b, h: 401
-            )
-
-    def test_5xx_backoff_then_success(self, spark):
-        from cmc_knowledge_graph_text2ttl_spark.sinks.exporter import export_to_endpoint
-
-        statuses = iter([503, 500, 201])
-
-        def transport(url, body, headers):
-            return next(statuses)
-
-        n = export_to_endpoint(
-            self._df(spark), "http://e/db", transport=transport, backoff_s=0.01
-        )
-        assert n == 1
-
-    def test_persistent_failure_raises(self, spark):
-        from cmc_knowledge_graph_text2ttl_spark.sinks.exporter import export_to_endpoint
-
-        with pytest.raises(Exception, match="returned 500"):
-            export_to_endpoint(
-                self._df(spark),
-                "http://e/db",
-                transport=lambda u, b, h: 500,
-                backoff_s=0.01,
-                max_retries=2,
-            )

@@ -3,6 +3,7 @@ extraction + dispatch through extract_one."""
 
 import pytest
 
+import codec_fixtures as CF
 from cmc_knowledge_graph_text2ttl_spark.operators import odf as ODF
 from cmc_knowledge_graph_text2ttl_spark.operators import rtf as RTF
 from cmc_knowledge_graph_text2ttl_spark.operators.extract import (
@@ -146,7 +147,7 @@ class TestOdf:
         assert "<tr><td></td><td></td><td></td><td>x</td></tr>" in text
 
     def test_odp_pages_render_as_slides(self):
-        blob = ODF.make_odp([["s1", [["x"]]], ["s2"]])
+        blob = CF.make_odp([["s1", [["x"]]], ["s2"]])
         text, kind = ODF.odf_to_xhtml_text(blob)
         assert kind == "odp"
         assert text == (

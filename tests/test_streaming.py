@@ -1,20 +1,14 @@
-"""Structured Streaming tests: stream == batch output, watermark windows,
-streaming dedup with bounded state. File source + availableNow triggers.
+"""Structured Streaming tests: stream == batch output and exactly-once
+restart. File source + availableNow triggers.
 """
 
 import pytest
-from pyspark.sql import functions as F
 
 from cmc_knowledge_graph_text2ttl_spark.operators import explode_triples
 from cmc_knowledge_graph_text2ttl_spark.operators.run import extract_and_run_workflows
 from cmc_knowledge_graph_text2ttl_spark.sinks import triples_to_nt_lines
 from cmc_knowledge_graph_text2ttl_spark.sources import synth_pages_df
-from cmc_knowledge_graph_text2ttl_spark.streaming import (
-    read_pages_stream,
-    stream_dedup_pages,
-    stream_triples,
-    stream_windowed_page_counts,
-)
+from cmc_knowledge_graph_text2ttl_spark.streaming import read_pages_stream, stream_triples
 
 
 @pytest.fixture(scope="module")
@@ -70,97 +64,3 @@ def test_stream_restart_is_exactly_once(spark, fixture_programs, pages_path, tmp
     q2.awaitTermination(120)
     assert spark.read.parquet(out).count() == n1
 
-
-def test_windowed_counts_with_watermark(spark, pages_path, tmp_path):
-    import datetime
-
-    out = str(tmp_path / "w")
-    cp = str(tmp_path / "wc")
-    q = stream_windowed_page_counts(
-        read_pages_stream(spark, pages_path), checkpoint=cp, out_path=out,
-        watermark="10 minutes", window="10 minutes",
-    )
-    q.awaitTermination(120)
-    rows = spark.read.parquet(out)
-    batch = (
-        spark.read.parquet(pages_path)
-        .groupBy(
-            F.window("warc_ts", "10 minutes").alias("win"),
-            F.regexp_extract("url", r"https?://([^/]+)/", 1).alias("host"),
-        )
-        .count()
-    )
-    got = {(r.window_start, r.host): r.n_pages for r in rows.collect()}
-    expect = {(r.win.start, r.host): r["count"] for r in batch.collect()}
-    # Append-mode semantics: a window emits only once the watermark passes
-    # its end — windows inside the final watermark horizon stay in state
-    # when the availableNow stream drains. Everything emitted must match
-    # the batch result, and all closed windows must have been emitted.
-    max_ts = spark.read.parquet(pages_path).agg(F.max("warc_ts")).first()[0]
-    horizon = max_ts - datetime.timedelta(minutes=10)
-    assert len(got) > 0
-    for key, val in got.items():
-        assert expect[key] == val, key
-    closed = {
-        k: v
-        for k, v in expect.items()
-        if k[0] + datetime.timedelta(minutes=10) < horizon
-    }
-    assert set(closed) <= set(got)
-
-
-def test_stream_dedup_first_seen_wins(spark, tmp_path):
-    src = str(tmp_path / "dup_pages")
-    base = synth_pages_df(spark, 40, slices=2)
-    dup = base.union(base)  # every url twice
-    dup.write.mode("overwrite").parquet(src)
-    out = str(tmp_path / "dd")
-    cp = str(tmp_path / "ddc")
-    q = stream_dedup_pages(read_pages_stream(spark, src), out, cp)
-    q.awaitTermination(120)
-    got = spark.read.parquet(out)
-    assert got.count() == got.select("url").distinct().count() == 40
-
-
-def test_host_sessions_stateful(spark, tmp_path):
-    """applyInPandasWithState sessionization vs a python oracle."""
-    import datetime as dt
-
-    from cmc_knowledge_graph_text2ttl_spark.streaming import stream_host_sessions
-
-    t0 = dt.datetime(2025, 1, 1)
-    rows = []
-    # host A: two sessions (3 pages, gap, 2 pages); host B: one session
-    offsets = {"a": [0, 5, 9, 120, 126], "b": [0, 4, 8, 12]}
-    for host, mins in offsets.items():
-        for i, m in enumerate(mins):
-            rows.append(
-                (f"https://{host}.example.org/p/{i}", t0 + dt.timedelta(minutes=m),
-                 b"<html></html>", None, "en")
-            )
-    # a late "closer" page far in event time so the watermark passes all
-    # sessions above (append-mode stateful ops only emit behind watermark)
-    rows.append(
-        ("https://z.example.org/p/0", t0 + dt.timedelta(days=2),
-         b"<html></html>", None, "en")
-    )
-    from cmc_knowledge_graph_text2ttl_spark.sources.pages import PAGES_SCHEMA
-
-    src = str(tmp_path / "sess_pages")
-    spark.createDataFrame(rows, PAGES_SCHEMA).write.mode("overwrite").parquet(src)
-    out = str(tmp_path / "sessions")
-    cp = str(tmp_path / "sess_cp")
-    q = stream_host_sessions(
-        read_pages_stream(spark, src), checkpoint=cp, out_path=out,
-        gap="10 minutes", watermark="1 hour",
-    )
-    q.awaitTermination(120)
-    got = {
-        (r.host, r.session_start.minute + 60 * r.session_start.hour, r.n_pages)
-        for r in spark.read.parquet(out).collect()
-    }
-    # sessions strictly behind the final watermark must have emitted
-    assert ("a.example.org", 0, 3) in got
-    assert ("a.example.org", 0, 2) or ("a.example.org", 120 % 60, 2)  # second session
-    assert any(h == "a.example.org" and n == 2 for h, _, n in got)
-    assert ("b.example.org", 0, 4) in got
