@@ -58,7 +58,6 @@ def build_parser() -> argparse.ArgumentParser:
 
 def main(argv=None) -> int:
     args = build_parser().parse_args(argv)
-    from .operators.canonicalize import OWL_SAMEAS  # noqa: F401 (import check)
     from .plans import KgPipeline
     from .session import get_spark
     from .sinks import export_per_doc_turtle, write_ntriples

@@ -67,8 +67,6 @@ def _driver_union_find(pairs) -> list:
 
 def connected_components(
     edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
     max_iter: int = 25,
     salt_hubs: int = 0,
     small_graph_threshold: int = 2_000_000,
@@ -80,34 +78,28 @@ def connected_components(
 
     Adaptive strategy: a sameAs graph is usually orders of magnitude
     smaller than the corpus — if the (deduped) edge list fits comfortably
-    on the driver (< ``small_graph_threshold`` edges), union-find locally
-    and hand the label map back as an Arrow-built local relation (no
-    iterative jobs at all).
+    on the driver (at most ``small_graph_threshold`` edges), union-find
+    locally and hand the label map back as an Arrow-built local relation
+    (no iterative jobs at all). One bounded collect of threshold + 1 edges
+    is both the size probe and the union-find input.
     Above the threshold, iterate distributed min-label propagation with
     pointer jumping; the loop is driver-controlled with an explicit
     convergence check (count of improved labels == 0).
     """
     e = (
-        edges.select(F.col(src).cast("string").alias("u"), F.col(dst).cast("string").alias("v"))
+        edges.select(F.col("src").cast("string").alias("u"), F.col("dst").cast("string").alias("v"))
         .filter(F.col("u").isNotNull() & F.col("v").isNotNull() & (F.col("u") != F.col("v")))
         .distinct()
     )
-    if small_graph_threshold and small_graph_threshold > 0:
-        e = e.persist()
-        n_edges = e.count()
-        if n_edges <= small_graph_threshold:
-            # collect (not toLocalIterator — that runs one job per
-            # partition); memory is bounded by the threshold
-            labels = _driver_union_find((r.u, r.v) for r in e.collect())
-            e.unpersist()
+    if small_graph_threshold > 0:
+        # collect (not toLocalIterator — that runs one job per
+        # partition); memory is bounded by the threshold
+        probe = e.limit(small_graph_threshold + 1).collect()
+        if len(probe) <= small_graph_threshold:
+            labels = _driver_union_find((r.u, r.v) for r in probe)
             return local_frame(edges.sparkSession, labels, "node string, component string")
     sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
     sym = sym.repartition("u").persist()
-    # the size-probe persist on e is only needed until sym materializes;
-    # leaving it cached would leak executor storage in long-lived sessions
-    if small_graph_threshold and small_graph_threshold > 0:
-        sym.count()  # materialize sym before dropping its parent cache
-        e.unpersist()
 
     if salt_hubs and salt_hubs > 1:
         # Two-phase min: partial min per (u, salt-of-v), then min per u.
@@ -169,44 +161,30 @@ def connected_components(
     return comp
 
 
-def sameas_edges(triples: DataFrame, pred: str = OWL_SAMEAS) -> DataFrame:
-    """Extract the sameAs edge list from a triples table."""
+def sameas_edges(triples: DataFrame) -> DataFrame:
+    """Extract the owl:sameAs edge list from a triples table."""
     return triples.filter(
-        (F.col("pred") == pred) & (F.col("obj_kind") == "iri")
+        (F.col("pred") == OWL_SAMEAS) & (F.col("obj_kind") == "iri")
     ).select(F.col("subj").alias("src"), F.col("obj_lexical").alias("dst"))
 
 
 def canonicalize_triples(
     triples: DataFrame,
     components: DataFrame = None,
-    pred: str = OWL_SAMEAS,
-    drop_sameas: bool = True,
-    broadcast_components: bool = None,
-    max_iter: int = 25,
 ) -> DataFrame:
-    """Rewrite subj/obj IRIs onto their canonical component representative.
+    """Rewrite subj/obj IRIs onto their canonical component representative
+    and drop the owl:sameAs triples themselves.
 
     Two left joins against the component map (subject side; object side
-    only for IRI objects). The map is usually tiny relative to the triple
-    table — broadcast it when told to (or let AQE decide from runtime
-    stats otherwise). Output is de-duplicated: distinct aliases collapsing
-    onto one canonical id produce identical triples by design.
+    only for IRI objects). No probe job decides the join strategy: a
+    driver union-find map is a local relation of known size, so it is
+    planned as a broadcast; a distributed map is localCheckpoint'd, so AQE
+    converts the joins to broadcast from runtime stats when it is small.
+    Output is de-duplicated: distinct aliases collapsing onto one
+    canonical id produce identical triples by design.
     """
-    if components is None:
-        components = connected_components(sameas_edges(triples, pred), max_iter=max_iter)
-    comp = components
-    if broadcast_components is None:
-        # Adaptive: no probe job here. The component map is either a
-        # local relation (driver union-find path: exact size known at
-        # planning, so a small map is planned as a broadcast join) or a
-        # localCheckpoint'd DataFrame (accurate runtime stats, so AQE
-        # converts the rewrite joins to broadcast when the map is small).
-        broadcast_components = False
-    if broadcast_components:
-        comp = F.broadcast(comp)
-    t = triples
-    if drop_sameas:
-        t = t.filter(~((F.col("pred") == pred) & (F.col("obj_kind") == "iri")))
+    comp = components if components is not None else connected_components(sameas_edges(triples))
+    t = triples.filter(~((F.col("pred") == OWL_SAMEAS) & (F.col("obj_kind") == "iri")))
     subj_map = comp.select(
         F.col("node").alias("subj"), F.col("component").alias("subj_canon")
     )
@@ -216,6 +194,7 @@ def canonicalize_triples(
     out = t.join(subj_map, "subj", "left")
     # Object-side rewrite applies to IRI objects only: split literals out
     # BEFORE the join so they never shuffle on obj_lexical.
+    # (a shuffled join would pile skewed literals like "1"/"true" on one reducer)
     iri_rows = out.filter(F.col("obj_kind") == "iri").join(
         obj_map, ["obj_lexical"], "left"
     )

@@ -502,7 +502,7 @@ def resolve_text(raw: Optional[bytes], pre: Optional[str]) -> tuple:
     return extract_one(bytes(raw) if raw is not None else None)
 
 
-def extract_text(pages: DataFrame, repartition_by_url: Optional[int] = None) -> DataFrame:
+def extract_text(pages: DataFrame) -> DataFrame:
     """pages(url, warc_ts, html, text, lang) → extracted text table.
 
     Rows whose ``text`` column is already populated (pre-textized corpora)
@@ -510,11 +510,6 @@ def extract_text(pages: DataFrame, repartition_by_url: Optional[int] = None) -> 
     stage — downstream stages never carry page bytes (column pruning is the
     single biggest scan saving at 100 TB).
     """
-    if repartition_by_url:
-        from pyspark.sql import functions as F
-
-        pages = pages.repartition(repartition_by_url, F.xxhash64("url"))
-
     def row_fn(url, warc_ts, raw, pre, lang):
         text, ctype, err = resolve_text(raw, pre)
         yield (url, warc_ts, text, lang, ctype, err)

@@ -16,7 +16,8 @@ partitioning, dispatch. Codec support is pure-Python/stdlib:
 Design point for 100 TB of media: bytes stay in the `binary` column until
 the LAST possible stage; metadata-only operations (sniff, size, group)
 never deserialize payloads; per-batch memory is bounded
-by `arrow_max_records` (session.py) times the average blob size, so batch
+by `spark.sql.execution.arrow.maxRecordsPerBatch` (2048, set in
+session.py) times the average blob size, so batch
 sizing — not row counts — is the operative knob.
 """
 

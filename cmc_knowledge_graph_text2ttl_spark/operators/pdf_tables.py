@@ -507,9 +507,9 @@ def _on_same_row(a: Box, b: Box, frac: float) -> bool:
     return max(ov / a.height, ov / b.height) >= frac
 
 
-def render_page(page: PageModel, p: Optional[Params] = None) -> str:
+def render_page(page: PageModel) -> str:
     """Run the full 7-stage pipeline on one page model → XHTML string."""
-    p = p or Params()
+    p = Params()
     horiz, vert = classify_guiding_lines(page, p)
     horiz, vert = consolidate_guiding_lines(horiz, vert, p)
     tables = find_tables(horiz, vert, p)
@@ -557,8 +557,8 @@ def render_page(page: PageModel, p: Optional[Params] = None) -> str:
     return "".join(out)
 
 
-def render_doc(pages: Sequence[PageModel], p: Optional[Params] = None) -> str:
-    return "".join(render_page(pg, p) for pg in pages)
+def render_doc(pages: Sequence[PageModel]) -> str:
+    return "".join(render_page(pg) for pg in pages)
 
 
 # ---------------------------------------------------------------------------

@@ -1262,6 +1262,14 @@ def pdf_bytes_to_page_models_stdlib(data: bytes) -> List[PageModel]:
 # Deterministic PDF writer (fixtures / gate corpora — NOT a general
 # producer; it emits exactly the subset the parser above supports)
 
+# make_table_pdf's fixed page and grid geometry, in PDF points
+_PAGE_W, _PAGE_H = 612.0, 792.0
+_X0, _Y_TOP = 100.0, 700.0
+_COL_W, _ROW_H = 80.0, 20.0
+_FONTSIZE = 10.0
+_LINE_W = 0.8
+
+
 def _pdf_escape(s: str) -> str:
     return s.replace("\\", r"\\").replace("(", r"\(").replace(")", r"\)")
 
@@ -1270,13 +1278,6 @@ def make_table_pdf(
     cell_texts: List[List[str]],
     title: Optional[str] = None,
     compress: bool = False,
-    x0: float = 100.0,
-    y_top: float = 700.0,
-    col_w: float = 80.0,
-    row_h: float = 20.0,
-    fontsize: float = 10.0,
-    line_w: float = 0.8,
-    page_size: Tuple[float, float] = (612.0, 792.0),
     objstm: bool = False,
     encrypt: bool = False,
 ) -> bytes:
@@ -1308,31 +1309,30 @@ def make_table_pdf(
     n_cols = len(cell_texts[0]) if n_rows else 0
     if n_rows < 3 or n_cols < 3:
         raise ValueError("recognizer needs >= 3x3 cells (4+ grid lines per axis)")
-    pw, ph = page_size
     ops: List[str] = []
     if title:
         ops.append(
-            f"BT /F1 {fontsize:g} Tf {x0:g} {y_top + 40:g} Td "
+            f"BT /F1 {_FONTSIZE:g} Tf {_X0:g} {_Y_TOP + 40:g} Td "
             f"({_pdf_escape(title)}) Tj ET"
         )
     # grid: (n_rows+1) horizontal, (n_cols+1) vertical thin filled rects
-    x1 = x0 + n_cols * col_w
-    y_bot = y_top - n_rows * row_h
+    x1 = _X0 + n_cols * _COL_W
+    y_bot = _Y_TOP - n_rows * _ROW_H
     for r in range(n_rows + 1):
-        yy = y_top - r * row_h
-        ops.append(f"{x0:g} {yy - line_w:g} {x1 - x0:g} {line_w:g} re f")
+        yy = _Y_TOP - r * _ROW_H
+        ops.append(f"{_X0:g} {yy - _LINE_W:g} {x1 - _X0:g} {_LINE_W:g} re f")
     for c in range(n_cols + 1):
-        xx = x0 + c * col_w
-        ops.append(f"{xx:g} {y_bot - line_w:g} {line_w:g} {y_top - y_bot:g} re f")
+        xx = _X0 + c * _COL_W
+        ops.append(f"{xx:g} {y_bot - _LINE_W:g} {_LINE_W:g} {_Y_TOP - y_bot:g} re f")
     # one word block per cell, offset inside the cell
     for r, row in enumerate(cell_texts):
         for c, text in enumerate(row):
             if not text:
                 continue
-            tx = x0 + c * col_w + 5
-            ty = y_top - r * row_h - row_h / 2 - fontsize * 0.3
+            tx = _X0 + c * _COL_W + 5
+            ty = _Y_TOP - r * _ROW_H - _ROW_H / 2 - _FONTSIZE * 0.3
             ops.append(
-                f"BT /F1 {fontsize:g} Tf {tx:g} {ty:g} Td "
+                f"BT /F1 {_FONTSIZE:g} Tf {tx:g} {ty:g} Td "
                 f"({_pdf_escape(text)}) Tj ET"
             )
     content = "\n".join(ops).encode("latin-1")
@@ -1347,7 +1347,7 @@ def make_table_pdf(
     objs.append(b"<< /Type /Catalog /Pages 2 0 R >>")
     objs.append(
         f"<< /Type /Pages /Kids [3 0 R] /Count 1 "
-        f"/MediaBox [0 0 {pw:g} {ph:g}] >>".encode()
+        f"/MediaBox [0 0 {_PAGE_W:g} {_PAGE_H:g}] >>".encode()
     )
     objs.append(
         b"<< /Type /Page /Parent 2 0 R /Contents 4 0 R "

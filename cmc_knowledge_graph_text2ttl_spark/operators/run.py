@@ -230,7 +230,6 @@ def extract_and_run_workflows(
     pages: DataFrame,
     programs: List[WorkflowProgram],
     graphs: Optional[Dict[str, List[GraphRow]]] = None,
-    extra_vars: Optional[Dict[str, str]] = None,
     select_best: bool = True,
     collect_log: bool = False,
 ) -> DataFrame:
@@ -244,7 +243,7 @@ def extract_and_run_workflows(
     """
     return _workflow_kernel(
         pages.select("url", "html", "text"),
-        programs, graphs, extra_vars, collect_log, select_best,
+        programs, graphs, None, collect_log, select_best,
     )
 
 

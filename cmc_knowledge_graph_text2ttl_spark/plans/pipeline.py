@@ -185,12 +185,11 @@ class KgPipeline:
         # the buckets written in this run; the partition filter prunes the
         # scan to their directories
         new = written.filter(~F.col("bucket").isin(done)) if done else written
-        has_url = "url" in written.columns
         stats = (
             new.groupBy("bucket")
             .agg(
-                F.min("url" if has_url else F.lit(None).cast("string")).alias("url_min"),
-                F.max("url" if has_url else F.lit(None).cast("string")).alias("url_max"),
+                F.min("url").alias("url_min"),
+                F.max("url").alias("url_max"),
                 F.count(F.lit(1)).alias("n_rows"),
                 (
                     F.sum("no_triples")

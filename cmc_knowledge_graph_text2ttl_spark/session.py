@@ -21,7 +21,6 @@ def get_spark(
     app_name: str = "kg-text2ttl-spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
-    arrow_max_records: int = 2048,
     extra_conf: dict | None = None,
 ) -> SparkSession:
     master = master or os.environ.get("SPARK_GRAFT_MASTER") or "local[*]"
@@ -35,7 +34,7 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_max_records))
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
         # zstd: ~30% smaller checkpoints than snappy at comparable speed —
         # at 100 TB the stage checkpoints dominate storage traffic
         .config("spark.sql.parquet.compression.codec", "zstd")

@@ -64,19 +64,11 @@ def triple_to_ntriples(df: DataFrame) -> DataFrame:
     return df.select(line.alias("line"))
 
 
-def write_ntriples(df: DataFrame, path: str, sorted_output: bool = True) -> None:
-    """Write the triples table as N-Triples text files.
-
-    ``sorted_output`` gives canonical bytes (a global sort — one shuffle);
-    at very large scale use sorted_output=False and sortWithinPartitions
-    for per-file determinism instead.
+def write_ntriples(df: DataFrame, path: str) -> None:
+    """Write the triples table as N-Triples text files in canonical byte
+    order (a global sort on the line — one sampling job and one shuffle).
     """
-    lines = triple_to_ntriples(df)
-    if sorted_output:
-        lines = lines.orderBy("line")
-    else:
-        lines = lines.sortWithinPartitions("line")
-    lines.write.mode("overwrite").text(path)
+    triple_to_ntriples(df).orderBy("line").write.mode("overwrite").text(path)
 
 
 def triples_to_nt_lines(rows: List[tuple]) -> List[str]:
@@ -208,9 +200,7 @@ def export_per_doc_turtle(
     triples: DataFrame,
     out_dir: str,
     prefixes: Optional[Dict[str, str]] = None,
-    doc_name_col: str = "url",
     max_docs: int = 100_000,
-    style: str = "canonical",
 ) -> int:
     """One ``.ttl`` file per document (runner.py:409-410 parity).
 
@@ -227,7 +217,7 @@ def export_per_doc_turtle(
     import os
     import re
 
-    docs = triples.select(doc_name_col).distinct().limit(max_docs + 1).collect()
+    docs = triples.select("url").distinct().limit(max_docs + 1).collect()
     if len(docs) > max_docs:
         raise ValueError(
             f"export_per_doc_turtle is a small-corpus exporter: corpus has "
@@ -248,7 +238,7 @@ def export_per_doc_turtle(
     file_names = {doc: clean for clean, doc in doc_of.items()}
     os.makedirs(out_dir, exist_ok=True)
     grouped = (
-        triples.groupBy(doc_name_col)
+        triples.groupBy("url")
         .agg(
             F.sort_array(
                 F.collect_list(
@@ -262,12 +252,12 @@ def export_per_doc_turtle(
     )
     n = 0
     for row in grouped.toLocalIterator():
-        clean = file_names[row[doc_name_col]]
+        clean = file_names[row.url]
         rows = [
             (t.subj, t.pred, t.obj_kind, t.obj_lexical, t.obj_lang, t.obj_datatype)
             for t in row.rows
         ]
         with open(os.path.join(out_dir, f"{clean}.ttl"), "w", encoding="utf8") as fh:
-            fh.write(serialize_turtle(rows, prefixes, style=style))
+            fh.write(serialize_turtle(rows, prefixes))
         n += 1
     return n

@@ -113,7 +113,6 @@ def synth_page_rows(
     start: int = 0,
     n_hosts: int = 50,
     skew: bool = False,
-    malformed_pct: float = 0.02,
 ) -> Iterator[Tuple[str, _dt.datetime, bytes, Optional[str], str]]:
     """Yield deterministic page rows [start, start+n)."""
     families = (_kv_doc, _table_doc, _section_doc, _entity_doc)
@@ -126,8 +125,8 @@ def synth_page_rows(
         url = f"https://host{host}.example.org/p/{i}"
         ts = _EPOCH + _dt.timedelta(seconds=37 * i)
         lang = _LANGS[_h(i, "lang") % len(_LANGS)]
-        if _h(i, "bad") % 10_000 < int(malformed_pct * 10_000):
-            body = b"\xff\xfe<html><oops"  # malformed/empty error-path row
+        if _h(i, "bad") % 10_000 < 200:  # 2% malformed/empty error-path rows
+            body = b"\xff\xfe<html><oops"
         else:
             fam = families[_h(i, "fam") % len(families)]
             doc = fam(i)

@@ -73,11 +73,9 @@ def compile_workflow(source: str, name: str, index: int = 0) -> WorkflowProgram:
     return WorkflowProgram(name=name, plan=steps, index=index, source=source, warnings=warnings)
 
 
-def compile_workflow_file(path: str, index: int = 0, name: Optional[str] = None) -> WorkflowProgram:
+def compile_workflow_file(path: str, index: int = 0) -> WorkflowProgram:
     with open(path, "r", encoding="utf8") as fh:
         source = fh.read()
-    if name is None:
-        base = os.path.splitext(os.path.basename(path))[0]
-        # Workflow-name cleanup mirrors the runner (runner.py:348).
-        name = re.sub(r"\s+", "-", base)
-    return compile_workflow(source, name=name, index=index)
+    base = os.path.splitext(os.path.basename(path))[0]
+    # Workflow-name cleanup mirrors the runner (runner.py:348).
+    return compile_workflow(source, name=re.sub(r"\s+", "-", base), index=index)

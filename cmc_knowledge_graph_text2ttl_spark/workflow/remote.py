@@ -35,7 +35,7 @@ _REMOTE_URL = re.compile(r"(?i)^https?://")
 # ORDER BY makes LIMIT/OFFSET paging well-defined: SPARQL endpoints give
 # no stable order across separate queries, so an unordered dump can
 # overlap or miss triples between pages.
-DEFAULT_DUMP_QUERY = (
+DUMP_QUERY = (
     "SELECT ?s ?p ?o WHERE {{ ?s ?p ?o }} "
     "ORDER BY ?s ?p ?o LIMIT {limit} OFFSET {offset}"
 )
@@ -78,7 +78,6 @@ def _binding_to_row(b: dict) -> Optional[GraphRow]:
 def fetch_remote_graph(
     endpoint: str,
     transport: Optional[Transport] = None,
-    dump_query: str = DEFAULT_DUMP_QUERY,
     page_size: int = 10_000,
     max_rows: int = 5_000_000,
 ) -> List[GraphRow]:
@@ -92,7 +91,7 @@ def fetch_remote_graph(
     rows: List[GraphRow] = []
     offset = 0
     while True:
-        q = dump_query.format(limit=page_size, offset=offset)
+        q = DUMP_QUERY.format(limit=page_size, offset=offset)
         payload = send(endpoint, q)
         bindings = payload.get("results", {}).get("bindings", [])
         for b in bindings:
@@ -112,7 +111,6 @@ def fetch_remote_graph(
 def resolve_graphs(
     graph_specs: Dict[str, object],
     transport: Optional[Transport] = None,
-    page_size: int = 10_000,
 ) -> Dict[str, List[GraphRow]]:
     """Normalize every graph spec to broadcastable GraphRow lists.
 
@@ -131,7 +129,7 @@ def resolve_graphs(
         if isinstance(spec, list):
             out[name] = spec
         elif isinstance(spec, str) and is_remote_graph(spec):
-            out[name] = fetch_remote_graph(spec, transport, page_size=page_size)
+            out[name] = fetch_remote_graph(spec, transport)
         elif isinstance(spec, str):
             out[name] = parse_ttl(spec)
         else:

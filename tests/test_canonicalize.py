@@ -134,6 +134,29 @@ class TestAdaptiveStrategy:
         dist = comp_map(connected_components(edge_df, small_graph_threshold=0))
         assert small == dist
 
+    def test_threshold_forces_each_branch_without_leaking_a_persist(self, spark, edge_df):
+        """edge_df has 54 distinct edges: a threshold of 3 takes the
+        distributed branch, 54 (at most, not below) takes union-find. The
+        size probe persists nothing; the distributed loop's only remaining
+        storage is its local checkpoints, the label map itself."""
+        jsc = spark.sparkContext._jsc
+
+        def persisted():
+            rdds = [r.rdd() for r in jsc.getPersistentRDDs().values()]
+            return len(rdds), sum(not r.isCheckpointed() for r in rdds)
+
+        total, plain = persisted()
+        dist_df = connected_components(edge_df, small_graph_threshold=3)
+        assert "LocalTableScan" not in dist_df._jdf.queryExecution().executedPlan().toString()
+        assert persisted()[1] == plain
+        total, plain = persisted()
+        local = connected_components(edge_df, small_graph_threshold=54)
+        assert "LocalTableScan" in local._jdf.queryExecution().executedPlan().toString()
+        assert persisted() == (total, plain)
+        dist = comp_map(dist_df)
+        assert comp_map(local) == dist
+        assert dist["s1"] == "hub" and dist["a4"] == "a1" and dist["p2"] == "p1"
+
     def test_long_chain_both_paths(self, spark):
         edges = spark.createDataFrame(
             [(f"n{i:04d}", f"n{i+1:04d}") for i in range(150)], ["src", "dst"]

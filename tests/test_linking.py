@@ -158,6 +158,19 @@ class TestPerDocTurtleExport:
         assert a in str(err.value) and b in str(err.value)
         assert not (tmp_path / "out").exists()
 
+    def test_corpus_above_max_docs_raises_before_writing(self, spark, tmp_path):
+        """The driver-memory guard refuses the corpus before it creates the
+        output directory or writes any file."""
+        tri = spark.createDataFrame(
+            [("http://x/s", "http://x/p", "literal", "v", None, None, f"doc://{i}") for i in (1, 2)],
+            "subj string, pred string, obj_kind string, obj_lexical string,"
+            "obj_lang string, obj_datatype string, url string",
+        )
+        with pytest.raises(ValueError, match="> 1 documents"):
+            export_per_doc_turtle(tri, str(tmp_path / "out"), max_docs=1)
+        assert not (tmp_path / "out").exists()
+        assert not list(tmp_path.rglob("*.ttl"))
+
 
 class TestLongTurtleStyle:
     ROWS = [

@@ -16,9 +16,19 @@ Both checks read the AST only; nothing is imported.
    node in package or root code outside its own definition span. Names,
    not tokens: an f-string's expressions are AST nodes too, so a use in
    ``f"{_helper(x)}"`` counts, while a word in a docstring does not.
+3. Every defaulted parameter of a public function (module level, or a
+   public method of a public class) in the CLI's import closure must be
+   passed by some call in some repo ``.py`` file, tests included: a test
+   that forces a guard or injects a fake is a real use. Calls match by
+   function name; a positional argument, a keyword, or a ``*args`` /
+   ``**kwargs`` forward sets a parameter. A function used as a value
+   (stored in a table, then called through a variable or a subscript)
+   also counts every such indirect call in that file as a call of it. An
+   option nothing sets is deleted by folding it into its default.
 """
 
 import ast
+import builtins
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
@@ -162,6 +172,107 @@ def _references(tree, reexports=True):
                 yield a.name.rsplit(".", 1)[-1], node.lineno
 
 
+def repo_files():
+    """Every ``.py`` file in the repo: package, roots and tests."""
+    return [
+        p
+        for p in sorted(REPO.rglob("*.py"))
+        if not any(s.startswith(".") for s in p.relative_to(REPO).parts)
+    ]
+
+
+def public_functions(tree, mod):
+    """(label, def node, is_method) of each public module-level function
+    and each public method of a public class in ``tree``."""
+    for node in tree.body:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            if not node.name.startswith("_"):
+                yield f"{mod}:{node.name}", node, False
+        elif isinstance(node, ast.ClassDef) and not node.name.startswith("_"):
+            for m in node.body:
+                if isinstance(m, (ast.FunctionDef, ast.AsyncFunctionDef)) and not m.name.startswith("_"):
+                    static = any(
+                        isinstance(d, ast.Name) and d.id == "staticmethod" for d in m.decorator_list
+                    )
+                    yield f"{mod}:{node.name}.{m.name}", m, not static
+
+
+def _defaulted(fn, is_method):
+    """(name, positional index or None) of each parameter with a default;
+    a method's index does not count ``self``/``cls``."""
+    a = fn.args
+    pos = (a.posonlyargs + a.args)[1 if is_method else 0:]
+    first = len(pos) - len(a.defaults)
+    yield from ((arg.arg, i) for i, arg in enumerate(pos) if i >= first)
+    yield from ((arg.arg, None) for arg, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None)
+
+
+def _sets(call, name, index):
+    return (
+        any(k.arg in (None, name) for k in call.keywords)
+        or any(isinstance(x, ast.Starred) for x in call.args)
+        or (index is not None and index < len(call.args))
+    )
+
+
+def _through_variables(tree):
+    """Calls in ``tree`` made through a variable or a subscript: the callee
+    is not an attribute, a builtin, or a name a def/class/import binds."""
+    bound = set(dir(builtins))
+    for n in ast.walk(tree):
+        if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            bound.add(n.name)
+        elif isinstance(n, (ast.Import, ast.ImportFrom)):
+            bound.update((a.asname or a.name).split(".")[0] for a in n.names)
+    return [
+        n
+        for n in ast.walk(tree)
+        if isinstance(n, ast.Call)
+        and not isinstance(n.func, ast.Attribute)
+        and getattr(n.func, "id", None) not in bound
+    ]
+
+
+def _name(node):
+    return getattr(node, "id", getattr(node, "attr", None))
+
+
+def unset_parameters(functions, trees):
+    """``label(param)`` of each defaulted parameter in ``functions`` that
+    no call in ``trees`` sets."""
+    wanted = {fn.name for _, fn, _ in functions}
+    calls = {}
+    for tree in trees:
+        nodes = list(ast.walk(tree))
+        file_calls = [n for n in nodes if isinstance(n, ast.Call)]
+        for c in file_calls:
+            calls.setdefault(_name(c.func), []).append(c)
+        callees = {id(c.func) for c in file_calls}
+        escaped = {
+            _name(n)
+            for n in nodes
+            if id(n) not in callees and isinstance(getattr(n, "ctx", None), ast.Load)
+        }
+        for name in escaped & wanted:
+            calls[name] = calls.get(name, []) + _through_variables(tree)
+    return [
+        f"{label}({name})"
+        for label, fn, is_method in functions
+        for name, index in _defaulted(fn, is_method)
+        if not any(_sets(c, name, index) for c in calls.get(fn.name, ()))
+    ]
+
+
+def closure_unset_parameters(inside_cli=True):
+    """Unset parameters of the modules inside (or outside) the CLI's
+    import closure, against every repo file."""
+    graph = ImportGraph()
+    cli = graph.reach([(m, None) for m in ROOT_MODULES])
+    mods = sorted(m for m in graph.paths if (m in cli) == inside_cli)
+    functions = [f for mod in mods for f in public_functions(graph.trees[mod], mod)]
+    return unset_parameters(functions, [_parse(p) for p in repo_files()])
+
+
 def unreached_modules():
     graph = ImportGraph()
     reached = graph.reach(graph.root_requests())
@@ -245,10 +356,12 @@ def registry_closures():
 
 def family_map():
     """Markdown rows for every package module the CLI does not import:
-    module, line count, and the registry queries that reach it."""
+    module, line count, unset parameters (check 3's rule), and the
+    registry queries that reach it."""
     graph = ImportGraph()
     cli = graph.reach([(m, None) for m in ROOT_MODULES])
     closures = registry_closures()
+    unset = [p.split(":", 1)[0] for p in closure_unset_parameters(inside_cli=False)]
     rows = []
     for mod in sorted(graph.paths):
         if mod in cli or graph.is_package(mod):
@@ -256,7 +369,9 @@ def family_map():
         n_lines = len(graph.paths[mod].read_text(encoding="utf-8").splitlines())
         queries = [q[2:] for q, reached in closures.items() if mod in reached]
         path = graph.paths[mod].relative_to(PKG).as_posix()
-        rows.append(f"| `{path}` | {n_lines} | {len(queries)} | {', '.join(queries)} |")
+        rows.append(
+            f"| `{path}` | {n_lines} | {unset.count(mod)} | {len(queries)} | {', '.join(queries)} |"
+        )
     return rows
 
 
@@ -266,6 +381,31 @@ def test_every_package_module_is_reached_from_an_entry_point():
 
 def test_every_top_level_definition_is_referenced():
     assert unreferenced_definitions() == []
+
+
+def test_every_defaulted_parameter_is_set_by_some_caller():
+    assert closure_unset_parameters() == []
+
+
+def test_positional_keyword_forwarded_and_indirect_calls_set_parameters():
+    lib = ast.parse(
+        "def f(a, b=1, c=2, *, d=3):\n    pass\n"
+        "def g(x=0):\n    pass\n"
+        "class K:\n    def m(self, y=0):\n        pass\n"
+    )
+    functions = list(public_functions(lib, "lib"))
+    nothing = ast.parse("f(0)\ng()\nK().m()\n")
+    assert unset_parameters(functions, [nothing]) == [
+        "lib:f(b)", "lib:f(c)", "lib:f(d)", "lib:g(x)", "lib:K.m(y)",
+    ]
+    callers = ast.parse(
+        "f(0, 1, 2)\n"  # positional use sets b and c
+        "def fwd(*a, **kw):\n    return f(0, **kw)\n"  # forwarding sets d
+        "K().m(5)\n"  # positional after self sets y
+        "table = {'g': g}\n"
+        "for fn in table.values():\n    fn(x=1)\n"  # call through a variable
+    )
+    assert unset_parameters(functions, [callers]) == []
 
 
 def test_reexports_count_only_for_the_names_imported_through_them():
