@@ -10,10 +10,14 @@ dimension table).
 
 Supported query subset (sufficient for workflow-style ontology lookups):
 
-* ``PREFIX pfx: <iri>`` headers
-* ``SELECT [DISTINCT] ?a ?b | * WHERE { group } [LIMIT n]``
+* a query is ``PREFIX pfx: <iri>`` declarations followed by one
+  ``SELECT [DISTINCT] ?a ?b | * WHERE { group } [modifiers]``; any other
+  text before or after it raises
 * triple patterns ``s p o .`` with terms: ``?var``, ``<iri>``,
-  ``pfx:name``, ``"literal"`` / ``"literal"@lang``, ``a``
+  ``pfx:name``, ``"literal"`` / ``"literal"@lang``, numbers, ``a``.
+  One term lexer serves queries, VALUES, expressions and ``parse_ttl``,
+  so a literal unescapes (``\\"`` → ``"``, ``\\\\`` → ``\\``) the same
+  way in a query as in the Turtle it is matched against
 * property paths in the predicate position: sequence ``p1/p2``,
   alternation ``p1|p2``, inverse ``^p``, grouping ``(...)``, and the
   closures ``p*`` / ``p+`` / ``p?``. Closure/inverse modifiers must be
@@ -27,13 +31,11 @@ Supported query subset (sufficient for workflow-style ontology lookups):
   (SPARQL left-join: all extensions if any, else the binding survives
   with the optional vars unbound), ``{ group } UNION { group }`` chains,
   and bare nested ``{ group }``
-* ``FILTER ( expr )`` — comparisons ``= != < <= > >=`` (numeric when
-  both sides parse as numbers, lexical otherwise), ``regex(?v, "pat")``
-  / ``regex(?v, "pat", "i")``, combined with ``&&``, ``||``, ``!`` and
-  parentheses; an unbound variable makes the filter false (SPARQL error
-  semantics). Filters scope over their ENCLOSING group and apply at the
-  end of that group — a FILTER inside an OPTIONAL decides whether the
-  optional extension survives, exactly as in SPARQL.
+* ``FILTER ( expr )`` — an expression (below) whose root is
+  boolean-valued; an unbound variable makes the filter false (SPARQL
+  error semantics). Filters scope over their ENCLOSING group and apply
+  at the end of that group — a FILTER inside an OPTIONAL decides whether
+  the optional extension survives, exactly as in SPARQL.
 * ``VALUES ?v { t1 t2 ... }`` and ``VALUES (?a ?b) { (t1 t2) ... }``
   with ``UNDEF`` — inline data joined against the bindings in flow
   (shared vars must agree; UNDEF is compatible with anything).
@@ -42,19 +44,22 @@ Supported query subset (sufficient for workflow-style ontology lookups):
   OPTIONAL), and a binding is dropped iff some MINUS solution is
   compatible with it AND shares at least one bound variable
   (domain-disjoint solutions remove nothing).
-* ``BIND ( expr AS ?v )`` — expression subset: a term/var/number,
-  ``STR(e)``, ``CONCAT(e, ...)``, ``UCASE(e)``, ``LCASE(e)``,
-  ``STRLEN(e)``. An error (unbound var) leaves ``?v`` unbound but keeps
-  the binding, per SPARQL; binding an already-bound name raises.
-* solution modifiers: ``ORDER BY`` keys (``?v`` / ``ASC(?v)`` /
-  ``DESC(?v)``; unbound sorts first, then IRIs, then literals with
-  numeric-aware comparison), ``OFFSET n``, ``LIMIT n`` (LIMIT/OFFSET
-  accepted in either order, applied offset-then-limit as in SPARQL).
+* ``BIND ( expr AS ?v )`` — any expression (below). A boolean-valued
+  one binds the ``xsd:boolean`` literal ``"true"`` / ``"false"``; a
+  numeric constant keeps its lexical form. An error (unbound var)
+  leaves ``?v`` unbound but keeps the binding, per SPARQL; binding an
+  already-bound name raises.
+* solution modifiers, in SPARQL order and each at most once, the same
+  for a query and a subquery: ``GROUP BY ?v...`` → ``HAVING ( expr )``
+  → ``ORDER BY`` keys (``?v`` / ``ASC(?v)`` / ``DESC(?v)``; unbound
+  sorts first, then IRIs, then literals with numeric-aware comparison)
+  → ``LIMIT n`` / ``OFFSET n`` (either order, applied offset-then-limit
+  as in SPARQL). Any other order or a repeated clause raises.
 
-* subqueries ``{ SELECT [DISTINCT] ?v... WHERE { ... } [ORDER BY ...]
-  [LIMIT n] [OFFSET n] }`` — evaluated bottom-up on an empty binding
-  (SPARQL semantics), then only the projected variables join outward
-  against the enclosing group's bindings.
+* subqueries ``{ SELECT ... }`` — read by the same SELECT parser as a
+  query, evaluated bottom-up on an empty binding (SPARQL semantics),
+  then only the projected variables join outward against the enclosing
+  group's bindings.
 * aggregates ``(COUNT(*)|COUNT([DISTINCT] ?v)|SUM|MIN|MAX|AVG(?v) AS
   ?name)`` in the SELECT clause with ``GROUP BY ?v...`` (also in
   subqueries). A plain selected var must appear in GROUP BY; with no
@@ -77,6 +82,28 @@ Supported query subset (sufficient for workflow-style ontology lookups):
   all named graphs in sorted key order binding ``?g`` to each key.
   Nesting works; the default graph stays the ``from:`` graph.
 
+Expressions — one grammar, parser and evaluator for FILTER, HAVING and
+BIND (a subset of SPARQL 1.1 §17)::
+
+    expr    := and ( '||' and )*
+    and     := unary ( '&&' unary )*
+    unary   := '!' unary | primary [ ( = | != | < | <= | > | >= ) primary ]
+    primary := '(' expr ')' | FN '(' expr ( ',' expr )* ')' | ?var | term
+
+``FN`` is one of ``REGEX(e, "pat" [, "flags"])``, ``STR(e)``,
+``CONCAT(e, ...)``, ``UCASE(e)``, ``LCASE(e)``, ``STRLEN(e)``, names
+case-insensitive. Comparisons are numeric when both sides parse as
+numbers, lexical otherwise. ``||``, ``&&`` and ``!`` take
+boolean-valued operands (a comparison, REGEX or another logical
+expression) under SPARQL three-valued logic: an unbound variable is an
+error that ``error || true`` and ``false && error`` absorb.
+
+``parse_ttl`` reads the Turtle subset the fixture ontologies use:
+``@prefix`` declarations, ``#`` comment lines, and one-triple statements
+``s p o .`` whose terms go through the query term lexer. Predicate lists
+(``;``), object lists (``,``) and ``^^`` datatypes are out of scope: the
+first statement it cannot read raises.
+
 Still unsupported (raises, never silently drops): SERVICE — federated
 query against remote endpoints is per-row HTTP by construction, exactly
 what the broadcast design exists to avoid; pre-materialize remote
@@ -85,18 +112,24 @@ lookups with ``workflow/remote.py`` instead.
 
 from __future__ import annotations
 
+import operator
 import re
-from typing import Dict, Iterable, List, Optional, Tuple
+from typing import Dict, Iterable, List, NamedTuple, Optional, Tuple
 
 from ..core.errors import ProcessorException
-from ..core.terms import IriNode, LitNode
+from ..core.terms import XSD, IriNode, LitNode
 
 # A graph row: (subj, pred, obj_kind, obj_lexical, obj_lang)
 GraphRow = Tuple[str, str, str, str, Optional[str]]
 
-# not line-anchored: SPARQL allows PREFIX decls to share a line
-_PREFIX_DECL = re.compile(r"(?i)\bPREFIX\s+([A-Za-z][\w-]*)\s*:\s*<([^>]*)>")
-_SELECT_WHERE = re.compile(r"(?is)SELECT\s+(.+?)\s+WHERE\s*\{(.*)\}")
+_PREFIX_DECL = re.compile(r"(?i)\s*PREFIX\s+([A-Za-z][\w-]*)\s*:\s*<([^>]*)>")
+
+# Term lexemes shared by the query lexer, the expression tokenizer and
+# the Turtle reader.
+_VAR = r"\?[A-Za-z_][\w-]*"
+_LIT = r'"(?:[^"\\]|\\.)*"(?:@[A-Za-z-]+)?'
+_PNAME = r"[A-Za-z][\w-]*:[\w./#-]+"
+_NUM_RE = re.compile(r"[-+]?\d+(?:\.\d+)?")
 
 
 def _parse_term(tok: str, prefixes: Dict[str, str]):
@@ -109,16 +142,25 @@ def _parse_term(tok: str, prefixes: Dict[str, str]):
     if tok.startswith('"'):
         m = re.match(r'"((?:[^"\\]|\\.)*)"(?:@([A-Za-z-]+))?$', tok)
         if not m:
-            raise ProcessorException(f"Bad literal token in where clause: {tok}")
+            raise ProcessorException(f"Bad literal token: {tok}")
         lex = m.group(1).replace('\\"', '"').replace("\\\\", "\\")
         return ("lit", lex, m.group(2))
+    if _NUM_RE.fullmatch(tok):
+        return ("lit", tok, None)  # a number keeps its lexical form
     if ":" in tok:
         pfx, member = tok.split(":", 1)
         ns = prefixes.get(pfx)
         if ns is None:
-            raise ProcessorException(f"Unknown prefix in where clause: {pfx}")
+            raise ProcessorException(f"Unknown prefix: {pfx}")
         return ("iri", ns + member)
-    raise ProcessorException(f"Cannot parse where-clause term: {tok}")
+    raise ProcessorException(f"Cannot parse term: {tok}")
+
+
+def _const_term(spec):
+    """A constant term spec → its IriNode / LitNode."""
+    if spec[0] == "iri":
+        return IriNode(spec[1])
+    return LitNode(spec[1], lang=spec[2])
 
 
 # ---------------------------------------------------------------------------
@@ -128,7 +170,8 @@ class _Group:
     """A SPARQL group-graph-pattern: ordered elements + end-of-group
     filters. Element kinds: ('bgp', [pattern...]), ('optional', _Group),
     ('group', _Group), ('union', [_Group...]), ('minus', _Group),
-    ('bind', expr_ast, var), ('values', [var...], [row...])."""
+    ('graphpat', term, _Group), ('bind', expr_ast, var),
+    ('values', [row...]) and ('subselect', _Select)."""
 
     __slots__ = ("elements", "filters")
 
@@ -138,31 +181,41 @@ class _Group:
 
 
 _TERM_AT = re.compile(
-    r"""\?[A-Za-z_][\w-]*|<[^>]*>|"(?:[^"\\]|\\.)*"(?:@[A-Za-z-]+)?"""
-    r"""|[A-Za-z][\w-]*:[\w./#-]+|a(?![\w:-])"""
+    "|".join((_VAR, r"<[^>]*>", _LIT, _PNAME, _NUM_RE.pattern, r"a(?![\w:-])"))
 )
 # Path elements exclude '/', '|' and the closure chars from prefixed-name
 # members so path operators tokenize; full IRIs <...> may contain anything.
 _PATH_IRI_AT = re.compile(r"<[^>]*>|[A-Za-z][\w-]*:[\w.#-]+|a(?![\w:-])")
 _KW_AT = {
-    kw: re.compile(rf"(?i){kw}(?![\w:-])")
+    kw: re.compile("(?i)" + r"\s+".join(kw.split()) + r"(?![\w:-])")
     for kw in (
         "OPTIONAL", "FILTER", "UNION", "MINUS", "BIND", "VALUES", "UNDEF",
-        "GRAPH",
+        "GRAPH", "SELECT", "AS", "GROUP BY", "HAVING", "ORDER BY", "LIMIT",
+        "OFFSET",
     )
 }
-_UNSUPPORTED_KW = re.compile(r"(?i)^(SELECT|SERVICE)(?![\w:-])")
-_SUBSELECT_HEAD = re.compile(
-    r"(?is)\s*SELECT\s+(DISTINCT\s+)?(.+?)\s*WHERE\s*\{"
-)
-_MOD_AT = re.compile(r"(?is)\s*(GROUP\s+BY|HAVING|ORDER\s+BY|LIMIT|OFFSET)\b")
+_UNSUPPORTED_KW = re.compile(r"(?i)(SELECT|SERVICE)(?![\w:-])")
+# the rest of a SELECT head after its keyword, up to the group's '{'
+_SELECT_HEAD = re.compile(r"(?is)\s+(DISTINCT\b\s*)?(.+?)\s*\bWHERE\s*\{")
 # selection items: (AGG(...) AS ?name) | ?var | *
 _SEL_ITEM = re.compile(
     r"(?is)\(\s*(COUNT|SUM|MIN|MAX|AVG)\s*\(\s*(DISTINCT\s+)?"
     r"(\*|\?[A-Za-z_][\w-]*)\s*\)\s+AS\s+\?([A-Za-z_][\w-]*)\s*\)"
     r"|\?([A-Za-z_][\w-]*)|(\*)"
 )
-_GROUP_VAR = re.compile(r"\s*\?([A-Za-z_][\w-]*)")
+_VAR_AT = re.compile(r"\s*\?([A-Za-z_][\w-]*)")
+_ORDER_KEY = re.compile(
+    r"(?i)\s*(?:(ASC|DESC)\s*\(\s*\?([A-Za-z_][\w-]*)\s*\)|\?([A-Za-z_][\w-]*))"
+)
+_INT_AT = re.compile(r"\s*(\d+)")
+# Expression tokens: IRI first (no whitespace inside an IRI, so "<= 5"
+# can't match it), then two-char operators before their one-char
+# prefixes, prefixed names before bare function names.
+_EXPR_TOKEN = re.compile(
+    r"\s*(<[^<>\s]*>|\|\||&&|!=|<=|>=|[=<>!(),]|"
+    + "|".join((_VAR, _LIT, _NUM_RE.pattern, _PNAME))
+    + r"|[A-Za-z]\w*)"
+)
 
 
 def _parse_selection(sel_src: str, ctx: str):
@@ -202,7 +255,7 @@ def _parse_selection(sel_src: str, ctx: str):
 
 
 class _Cur:
-    """Cursor over a WHERE body; ``ctx`` is the full query for errors."""
+    """Cursor over query or Turtle text; ``ctx`` names it in errors."""
 
     __slots__ = ("s", "i", "ctx")
 
@@ -239,7 +292,7 @@ class _Cur:
 
     def term(self) -> str:
         self.ws()
-        m = _UNSUPPORTED_KW.match(self.s[self.i:])
+        m = _UNSUPPORTED_KW.match(self.s, self.i)
         if m:
             raise ProcessorException(
                 f"Unsupported SPARQL construct {m.group(1)!r} in: {self.ctx!r} — "
@@ -248,7 +301,7 @@ class _Cur:
         m = _TERM_AT.match(self.s, self.i)
         if m is None:
             raise ProcessorException(
-                f"Cannot parse where-clause term near "
+                f"Cannot parse term near "
                 f"{self.s[self.i:self.i + 30]!r} in: {self.ctx!r}"
             )
         tok = m.group(0)
@@ -258,6 +311,21 @@ class _Cur:
             tok = tok[:-1]
             self.i -= 1
         return tok
+
+    def token(self, take: bool) -> str:
+        """The next expression token ('' when none starts here); ``take``
+        consumes it, and raises when there is none."""
+        m = _EXPR_TOKEN.match(self.s, self.i)
+        if m is None:
+            if take:
+                raise ProcessorException(
+                    f"Bad expression near {self.s[self.i:self.i + 30]!r} "
+                    f"in: {self.ctx!r}"
+                )
+            return ""
+        if take:
+            self.i = m.end()
+        return m.group(1)
 
 
 def _parse_path_elt(cur: _Cur, prefixes: Dict[str, str]) -> tuple:
@@ -304,12 +372,7 @@ def _parse_path_elt(cur: _Cur, prefixes: Dict[str, str]) -> tuple:
             has_fwd,
             has_bwd,
         )
-        if cur.i < len(cur.s) and cur.s[cur.i] in "*+?":
-            mod = {"*": "star", "+": "plus", "?": "maybe"}[cur.s[cur.i]]
-            cur.i += 1
-            node = (mod, node)
-        return node
-    if cur.try_ch("("):
+    elif cur.try_ch("("):
         node = _parse_path(cur, prefixes)
         cur.expect(")")
     else:
@@ -358,122 +421,134 @@ def _parse_predicate(cur: _Cur, prefixes: Dict[str, str]) -> tuple:
     return ("path", node)
 
 
-def _scan_filter(cur: _Cur) -> str:
-    """Consume '( ... )' with balanced parens (string-aware) and return
-    the inner expression source."""
-    cur.expect("(")
-    s, i = cur.s, cur.i
-    depth, in_str = 1, False
-    while i < len(s) and depth:
-        ch = s[i]
-        if in_str:
-            if ch == "\\":
-                i += 1
-            elif ch == '"':
-                in_str = False
-        elif ch == '"':
-            in_str = True
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        i += 1
-    if depth:
-        raise ProcessorException(f"Unterminated FILTER in: {cur.ctx!r}")
-    src = s[cur.i : i - 1]
-    cur.i = i
-    return src
+# ---------------------------------------------------------------------------
+# Expressions (FILTER, HAVING, BIND): one recursive-descent parser
+
+_CMP = {
+    "=": operator.eq, "!=": operator.ne, "<": operator.lt,
+    "<=": operator.le, ">": operator.gt, ">=": operator.ge,
+}
+_FNS = {"REGEX", "STR", "CONCAT", "UCASE", "LCASE", "STRLEN"}
+_BOOLEAN = {"or", "and", "not", "cmp", "regex"}
 
 
-# BIND expression tokens: prefixed-name before bare identifier so
-# ``ex:Thing`` never lexes as the identifier ``ex``.
-_BIND_TOKEN = re.compile(
-    r"""\s*(<[^<>\s]*>|\(|\)|,|\?[A-Za-z_][\w-]*"""
-    r"""|"(?:[^"\\]|\\.)*"(?:@[A-Za-z-]+)?|[-+]?\d+(?:\.\d+)?"""
-    r"""|[A-Za-z][\w-]*:[\w./#-]+|[A-Za-z][A-Za-z0-9_]*)\s*"""
-)
-_BIND_FNS = {"STR", "CONCAT", "UCASE", "LCASE", "STRLEN"}
-_NUM_RE = re.compile(r"[-+]?\d+(?:\.\d+)?$")
+def _boolean(node: tuple, cur: _Cur) -> tuple:
+    """``node`` when it is boolean-valued, else raise."""
+    if node[0] not in _BOOLEAN:
+        raise ProcessorException(
+            "Expected a boolean expression (a comparison, regex, !, && or "
+            f"||) near {cur.s[cur.i:cur.i + 30]!r} in: {cur.ctx!r}"
+        )
+    return node
 
 
-def _parse_bind_expr(src: str, prefixes: Dict[str, str], ctx: str):
-    toks: List[str] = []
-    pos = 0
-    while pos < len(src):
-        m = _BIND_TOKEN.match(src, pos)
-        if m is None:
-            raise ProcessorException(f"Bad BIND expression near: {src[pos:]!r}")
-        toks.append(m.group(1))
-        pos = m.end()
-    idx = [0]
+def _parse_expr(cur: _Cur, prefixes: Dict[str, str]) -> tuple:
+    """One expression at the cursor (grammar in the module docstring) →
+    AST: ('const', term), ('var', name), ('or'|'and', l, r), ('not', e),
+    ('cmp', op, l, r), ('regex', e, compiled) or ('fn', FN, [e...])."""
 
-    def peek():
-        return toks[idx[0]] if idx[0] < len(toks) else None
+    def disjunction() -> tuple:
+        node = conjunction()
+        while cur.token(False) == "||":
+            cur.token(True)
+            node = ("or", _boolean(node, cur), _boolean(conjunction(), cur))
+        return node
 
-    def take(expected=None):
-        t = peek()
-        if t is None or (expected is not None and t != expected):
-            raise ProcessorException(
-                f"BIND parse error: expected {expected!r}, got {t!r} in {ctx!r}"
-            )
-        idx[0] += 1
-        return t
+    def conjunction() -> tuple:
+        node = unary()
+        while cur.token(False) == "&&":
+            cur.token(True)
+            node = ("and", _boolean(node, cur), _boolean(unary(), cur))
+        return node
 
-    def parse_expr():
-        t = peek()
-        if t is not None and t.upper() in _BIND_FNS and ":" not in t:
-            fn = take().upper()
-            take("(")
-            args = [parse_expr()]
-            while peek() == ",":
-                take()
-                args.append(parse_expr())
-            take(")")
+    def unary() -> tuple:
+        if cur.token(False) == "!":
+            cur.token(True)
+            return ("not", _boolean(unary(), cur))
+        node = primary()
+        if cur.token(False) in _CMP:
+            return ("cmp", cur.token(True), node, primary())
+        return node
+
+    def primary() -> tuple:
+        t = cur.token(True)
+        if t == "(":
+            node = disjunction()
+            cur.expect(")")
+            return node
+        fn = t.upper()
+        if fn in _FNS:
+            cur.expect("(")
+            args = [disjunction()]
+            while cur.try_ch(","):
+                args.append(disjunction())
+            cur.expect(")")
+            if fn == "REGEX":
+                return regex(args)
             if fn != "CONCAT" and len(args) != 1:
                 raise ProcessorException(
-                    f"{fn} takes exactly one argument in BIND: {ctx!r}"
+                    f"{fn} takes exactly one argument in: {cur.ctx!r}"
                 )
             return ("fn", fn, args)
-        t = take()
-        if t.startswith("?"):
-            return ("var", t[1:])
-        if _NUM_RE.match(t):
-            return ("numlit", t)  # keep the lexical form
-        return _parse_term(t, prefixes)
+        if not _TERM_AT.fullmatch(t):
+            raise ProcessorException(
+                f"Expected an operand, got {t!r} in: {cur.ctx!r}"
+            )
+        spec = _parse_term(t, prefixes)
+        return spec if spec[0] == "var" else ("const", _const_term(spec))
 
-    node = parse_expr()
-    if peek() is not None:
-        raise ProcessorException(f"Trailing tokens in BIND expression: {src!r}")
+    def regex(args: List[tuple]) -> tuple:
+        # the pattern and flags are string constants, compiled once here
+        if not 2 <= len(args) <= 3 or any(
+            a[0] != "const" or not isinstance(a[1], LitNode) for a in args[1:]
+        ):
+            raise ProcessorException(
+                f'REGEX takes (expr, "pattern" [, "flags"]) in: {cur.ctx!r}'
+            )
+        pat = args[1][1].lexical
+        flags = re.IGNORECASE if args[2:] and "i" in args[2][1].lexical.lower() else 0
+        try:
+            compiled = re.compile(pat, flags)
+        except re.error as ex:
+            raise ProcessorException(f"invalid regex {pat!r} ({ex})") from ex
+        return ("regex", args[0], compiled)
+
+    return disjunction()
+
+
+def _parse_constraint(cur: _Cur, prefixes: Dict[str, str]) -> tuple:
+    """``( expr )`` of a FILTER or HAVING; its root must be boolean."""
+    cur.expect("(")
+    node = _boolean(_parse_expr(cur, prefixes), cur)
+    cur.expect(")")
     return node
 
 
 def _parse_bind(cur: _Cur, prefixes: Dict[str, str]) -> tuple:
     """``BIND ( expr AS ?v )`` → ('bind', expr_ast, 'v')."""
-    src = _scan_filter(cur)  # balanced '(...)' scan, string-aware
-    m = re.fullmatch(r"(?is)\s*(.*)\s+AS\s+\?([A-Za-z_][\w-]*)\s*", src)
-    if m is None:
-        raise ProcessorException(f"BIND needs '(expr AS ?var)', got: {src!r}")
-    return ("bind", _parse_bind_expr(m.group(1), prefixes, cur.ctx), m.group(2))
+    cur.expect("(")
+    expr = _parse_expr(cur, prefixes)
+    var = _VAR_AT.match(cur.s, cur.i) if cur.try_kw("AS") else None
+    if var is None:
+        raise ProcessorException(f"BIND needs '(expr AS ?var)' in: {cur.ctx!r}")
+    cur.i = var.end()
+    cur.expect(")")
+    return ("bind", expr, var.group(1))
 
 
 def _values_term(cur: _Cur, prefixes: Dict[str, str]):
-    """One VALUES data term: UNDEF → None, else a constant term spec."""
+    """One VALUES data term: UNDEF → None, else a constant term."""
     if cur.try_kw("UNDEF"):
         return None
-    cur.ws()
-    nm = re.compile(r"[-+]?\d+(?:\.\d+)?").match(cur.s, cur.i)
-    if nm:
-        cur.i = nm.end()
-        return ("lit", nm.group(0), None)
     spec = _parse_term(cur.term(), prefixes)
     if spec[0] == "var":
         raise ProcessorException(f"Variable in VALUES data block in: {cur.ctx!r}")
-    return spec
+    return _const_term(spec)
 
 
 def _parse_values(cur: _Cur, prefixes: Dict[str, str]) -> tuple:
     """``VALUES ?v { ... }`` / ``VALUES (?a ?b) { (..) (..) }`` →
-    ('values', [vars], [rows]); each row is a tuple of term-spec|None."""
+    ('values', [row...]); a row maps each var to a term, None for UNDEF."""
     vars_: List[str] = []
     if cur.try_ch("("):
         while cur.peek() != ")":
@@ -494,7 +569,7 @@ def _parse_values(cur: _Cur, prefixes: Dict[str, str]) -> tuple:
     if not vars_:
         raise ProcessorException(f"Empty VALUES variable list in: {cur.ctx!r}")
     cur.expect("{")
-    rows: List[tuple] = []
+    rows: List[dict] = []
     while cur.peek() != "}":
         if parenthesized:
             cur.expect("(")
@@ -507,80 +582,77 @@ def _parse_values(cur: _Cur, prefixes: Dict[str, str]) -> tuple:
                     f"VALUES row arity {len(row)} != {len(vars_)} vars "
                     f"in: {cur.ctx!r}"
                 )
-            rows.append(tuple(row))
+            rows.append(dict(zip(vars_, row)))
         else:
-            rows.append((_values_term(cur, prefixes),))
+            rows.append({vars_[0]: _values_term(cur, prefixes)})
     cur.expect("}")
-    return ("values", vars_, rows)
+    return ("values", rows)
 
 
-def _parse_subselect(cur: _Cur, prefixes: Dict[str, str]) -> tuple:
-    """``SELECT [DISTINCT] ?v..|* WHERE { group } [modifiers]`` inside a
-    group, cursor positioned at SELECT → ('subselect', sel, group,
-    distinct?, limit, offset, order)."""
-    m = _SUBSELECT_HEAD.match(cur.s, cur.i)
+class _Select(NamedTuple):
+    """A parsed SELECT — a query or a subquery — as ``_solve`` takes it."""
+
+    items: list  # ['*'] or ('var', name) / ('agg', ...) from _parse_selection
+    distinct: bool
+    group: _Group
+    group_by: List[str]
+    having: Optional[tuple]
+    order: List[Tuple[str, bool]]  # (var, descending?)
+    limit: Optional[int]
+    offset: Optional[int]
+
+
+def _clause(cur: _Cur, kw: str, key: re.Pattern) -> List[re.Match]:
+    """``kw key+`` at the cursor → the key matches; [] without ``kw``."""
+    if not cur.try_kw(kw):
+        return []
+    keys = []
+    while (k := key.match(cur.s, cur.i)) is not None:
+        keys.append(k)
+        cur.i = k.end()
+    if not keys:
+        raise ProcessorException(f"Empty {kw} in: {cur.ctx!r}")
+    return keys
+
+
+def _parse_select(cur: _Cur, prefixes: Dict[str, str]) -> _Select:
+    """``SELECT [DISTINCT] items WHERE { group }`` and its modifiers,
+    cursor just past the SELECT keyword — for a query and a ``{ SELECT
+    ... }`` subquery alike. Modifiers follow SPARQL order, each at most
+    once: GROUP BY → HAVING → ORDER BY → LIMIT / OFFSET (either order)."""
+    m = _SELECT_HEAD.match(cur.s, cur.i)
     if m is None:
         raise ProcessorException(
-            f"Cannot parse subquery SELECT near "
-            f"{cur.s[cur.i:cur.i + 40]!r} in: {cur.ctx!r}"
+            f"Cannot parse SELECT near {cur.s[cur.i:cur.i + 40]!r} "
+            f"in: {cur.ctx!r}"
         )
-    distinct = m.group(1) is not None
-    sel = _parse_selection(m.group(2), cur.ctx)
+    items = _parse_selection(m.group(2), cur.ctx)
     cur.i = m.end()
     group = _parse_group(cur, prefixes)
     cur.expect("}")
-    # in-cursor modifiers: stop at the subquery's closing brace
-    group_by: List[str] = []
-    having = None
-    order: List[Tuple[str, bool]] = []
-    limit = offset = None
-    while True:
-        km = _MOD_AT.match(cur.s, cur.i)
-        if km is None:
-            break
-        kw = re.sub(r"\s+", " ", km.group(1).upper())
-        cur.i = km.end()
-        if kw == "HAVING":
-            having = _parse_filter(_scan_filter(cur), prefixes)
-        elif kw == "GROUP BY":
-            while True:
-                gm = _GROUP_VAR.match(cur.s, cur.i)
-                if gm is None:
-                    break
-                group_by.append(gm.group(1))
-                cur.i = gm.end()
-            if not group_by:
-                raise ProcessorException(f"Empty GROUP BY in: {cur.ctx!r}")
-        elif kw == "ORDER BY":
-            while True:
-                om = _ORDER_KEY.match(cur.s, cur.i)
-                if om is None:
-                    break
-                order.append(
-                    (
-                        om.group(2) or om.group(3),
-                        (om.group(1) or "").upper() == "DESC",
-                    )
-                )
-                cur.i = om.end()
-            if not order:
-                raise ProcessorException(f"Empty ORDER BY in: {cur.ctx!r}")
-        else:
-            nm = re.match(r"\s*(\d+)", cur.s[cur.i:])
-            if nm is None:
+    group_by = [k.group(1) for k in _clause(cur, "GROUP BY", _VAR_AT)]
+    having = _parse_constraint(cur, prefixes) if cur.try_kw("HAVING") else None
+    order = [
+        (k.group(2) or k.group(3), (k.group(1) or "").upper() == "DESC")
+        for k in _clause(cur, "ORDER BY", _ORDER_KEY)
+    ]
+    cut: Dict[str, int] = {}
+    for kw in ("LIMIT", "OFFSET", "LIMIT"):  # either order, each once
+        if kw not in cut and cur.try_kw(kw):
+            n = _INT_AT.match(cur.s, cur.i)
+            if n is None:
                 raise ProcessorException(f"{kw} needs a number in: {cur.ctx!r}")
-            if kw == "LIMIT":
-                if limit is not None:
-                    raise ProcessorException(f"Duplicate LIMIT in: {cur.ctx!r}")
-                limit = int(nm.group(1))
-            else:
-                if offset is not None:
-                    raise ProcessorException(f"Duplicate OFFSET in: {cur.ctx!r}")
-                offset = int(nm.group(1))
-            cur.i += nm.end()
-    return (
-        "subselect", sel, group, distinct, limit, offset, order, group_by,
-        having,
+            cut[kw] = int(n.group(1))
+            cur.i = n.end()
+    if cur.peek() not in ("", "}"):
+        raise ProcessorException(
+            f"Unexpected {cur.s[cur.i:cur.i + 30]!r} after the WHERE group "
+            f"in: {cur.ctx!r} (solution modifiers come in the order GROUP "
+            "BY, HAVING, ORDER BY, LIMIT/OFFSET, each at most once)"
+        )
+    return _Select(
+        items, m.group(1) is not None, group, group_by, having, order,
+        cut.get("LIMIT"), cut.get("OFFSET"),
     )
 
 
@@ -609,7 +681,7 @@ def _parse_group(cur: _Cur, prefixes: Dict[str, str]) -> _Group:
             elements.append(("optional", g))
             continue
         if cur.try_kw("FILTER"):
-            filters.append(_parse_filter(_scan_filter(cur), prefixes))
+            filters.append(_parse_constraint(cur, prefixes))
             continue
         if cur.try_kw("MINUS"):
             flush()
@@ -641,8 +713,8 @@ def _parse_group(cur: _Cur, prefixes: Dict[str, str]) -> _Group:
         if ch == "{":
             flush()
             cur.i += 1
-            if re.match(r"(?is)\s*SELECT\b", cur.s[cur.i:]):
-                elements.append(_parse_subselect(cur, prefixes))
+            if cur.try_kw("SELECT"):
+                elements.append(("subselect", _parse_select(cur, prefixes)))
                 cur.expect("}")
                 continue
             arms = [_parse_group(cur, prefixes)]
@@ -664,235 +736,60 @@ def _parse_group(cur: _Cur, prefixes: Dict[str, str]) -> _Group:
     return _Group(elements, filters)
 
 
-_ORDER_KEY = re.compile(
-    r"(?i)\s*(?:(ASC|DESC)\s*\(\s*\?([A-Za-z_][\w-]*)\s*\)|\?([A-Za-z_][\w-]*))"
-)
-
-
-def _parse_modifiers(tail: str, ctx: str, prefixes: Dict[str, str]):
-    """``[GROUP BY ?v+] [HAVING (expr)] [ORDER BY key+] [LIMIT n]
-    [OFFSET n]`` (LIMIT/OFFSET either order) →
-    (group_by: [var], having expr|None, order: [(var, desc?)], limit,
-    offset)."""
-    group_by: List[str] = []
-    having = None
-    order: List[Tuple[str, bool]] = []
-    limit = offset = None
-    m = re.match(r"(?is)\s*GROUP\s+BY\b", tail)
-    if m:
-        tail = tail[m.end():]
-        while True:
-            gm = _GROUP_VAR.match(tail)
-            if gm is None:
-                break
-            group_by.append(gm.group(1))
-            tail = tail[gm.end():]
-        if not group_by:
-            raise ProcessorException(f"Empty GROUP BY in: {ctx!r}")
-    m = re.match(r"(?is)\s*HAVING\b", tail)
-    if m:
-        cur = _Cur(tail[m.end():], ctx)
-        having = _parse_filter(_scan_filter(cur), prefixes)
-        tail = cur.s[cur.i:]
-    m = re.match(r"(?is)\s*ORDER\s+BY\b", tail)
-    if m:
-        tail = tail[m.end():]
-        while True:
-            km = _ORDER_KEY.match(tail)
-            if km is None:
-                break
-            order.append(
-                (km.group(2) or km.group(3), (km.group(1) or "").upper() == "DESC")
-            )
-            tail = tail[km.end():]
-        if not order:
-            raise ProcessorException(f"Empty ORDER BY in: {ctx!r}")
-    while tail.strip():
-        lm = re.match(r"(?is)\s*(LIMIT|OFFSET)\s+(\d+)", tail)
-        if lm is None:
-            raise ProcessorException(
-                f"Unsupported content after WHERE group: {tail.strip()!r} "
-                "(only ORDER BY / LIMIT / OFFSET are supported)"
-            )
-        kw = lm.group(1).upper()
-        if (kw == "LIMIT" and limit is not None) or (
-            kw == "OFFSET" and offset is not None
-        ):
-            raise ProcessorException(f"Duplicate {kw} in: {ctx!r}")
-        if kw == "LIMIT":
-            limit = int(lm.group(2))
-        else:
-            offset = int(lm.group(2))
-        tail = tail[lm.end():]
-    return group_by, having, order, limit, offset
-
-
-def parse_query(where_clause: str):
-    """Parse a SELECT query → (selection items or ['*'], group AST,
-    distinct?, limit, offset, order keys, group-by vars)."""
-    prefixes = {m.group(1): m.group(2) for m in _PREFIX_DECL.finditer(where_clause)}
-    body = _PREFIX_DECL.sub("", where_clause)
-    m = _SELECT_WHERE.search(body)
-    if m is None:
+def parse_query(where_clause: str) -> _Select:
+    """Parse ``PREFIX* SELECT ...``; any other text around it raises."""
+    cur = _Cur(where_clause, where_clause)
+    prefixes: Dict[str, str] = {}
+    while (m := _PREFIX_DECL.match(cur.s, cur.i)) is not None:
+        prefixes[m.group(1)] = m.group(2)
+        cur.i = m.end()
+    if not cur.try_kw("SELECT"):
         raise ProcessorException(
-            f"Unsupported query (need SELECT..WHERE{{..}}): {where_clause}"
+            f"Unsupported query (need PREFIX* SELECT..WHERE{{..}}) near "
+            f"{cur.s[cur.i:cur.i + 30]!r}: {where_clause!r}"
         )
-    sel_src = m.group(1).strip()
-    distinct = False
-    dm = re.match(r"(?i)DISTINCT\b\s*", sel_src)
-    if dm:
-        distinct = True
-        sel_src = sel_src[dm.end():]
-    sel = _parse_selection(sel_src, where_clause)
-    cur = _Cur(m.group(2), where_clause)
-    group = _parse_group(cur, prefixes)
-    if cur.peek() != "":
+    query = _parse_select(cur, prefixes)
+    if cur.peek():
         raise ProcessorException(
-            f"Trailing where-clause content {cur.s[cur.i:].strip()!r} "
-            f"in: {where_clause!r}"
+            f"Trailing content {cur.s[cur.i:].strip()!r} in: {where_clause!r}"
         )
-    group_by, having, order, limit, offset = _parse_modifiers(
-        body[m.end():], where_clause, prefixes
-    )
-    return sel, group, distinct, limit, offset, order, group_by, having
+    return query
 
 
 # ---------------------------------------------------------------------------
-# FILTER expressions: recursive-descent over a small token stream
-
-_FILTER_TOKEN = re.compile(
-    # IRI first (no whitespace inside an IRI, so "<= 5" can't match it),
-    # then two-char operators before their one-char prefixes
-    r"""\s*(<[^<>\s]*>|\|\||&&|!=|<=|>=|[=<>!()]|,|regex\b|"""
-    r"""\?[A-Za-z_][\w-]*|"(?:[^"\\]|\\.)*"(?:@[A-Za-z-]+)?|"""
-    r"""[-+]?\d+(?:\.\d+)?|[A-Za-z][\w-]*:[\w./#-]+)\s*""",
-    re.IGNORECASE,
-)
-
-
-def _parse_filter(src: str, prefixes: Dict[str, str]):
-    toks: List[str] = []
-    pos = 0
-    while pos < len(src):
-        m = _FILTER_TOKEN.match(src, pos)
-        if m is None:
-            raise ProcessorException(f"Bad FILTER expression near: {src[pos:]!r}")
-        toks.append(m.group(1))
-        pos = m.end()
-    idx = [0]
-
-    def peek():
-        return toks[idx[0]] if idx[0] < len(toks) else None
-
-    def take(expected=None):
-        t = peek()
-        if t is None or (expected is not None and t != expected):
-            raise ProcessorException(
-                f"FILTER parse error: expected {expected!r}, got {t!r} in {src!r}"
-            )
-        idx[0] += 1
-        return t
-
-    def parse_or():
-        node = parse_and()
-        while peek() == "||":
-            take()
-            node = ("or", node, parse_and())
-        return node
-
-    def parse_and():
-        node = parse_unary()
-        while peek() == "&&":
-            take()
-            node = ("and", node, parse_unary())
-        return node
-
-    def parse_unary():
-        if peek() == "!":
-            take()
-            return ("not", parse_unary())
-        return parse_primary()
-
-    def parse_operand():
-        t = take()
-        if t.startswith("?"):
-            return ("var", t[1:])
-        if re.fullmatch(r"[-+]?\d+(?:\.\d+)?", t):
-            return ("num", float(t))
-        return _parse_term(t, prefixes)
-
-    def parse_primary():
-        t = peek()
-        if t == "(":
-            take()
-            node = parse_or()
-            take(")")
-            return node
-        if t is not None and t.lower() == "regex":
-            take()
-            take("(")
-            operand = parse_operand()
-            take(",")
-            pat_tok = take()
-            pat = re.match(r'"((?:[^"\\]|\\.)*)"', pat_tok).group(1)
-            flags = 0
-            if peek() == ",":
-                take()
-                if "i" in take().lower():
-                    flags = re.IGNORECASE
-            take(")")
-            try:
-                compiled = re.compile(pat, flags)
-            except re.error as ex:
-                raise ProcessorException(
-                    f"invalid regex in FILTER: {pat!r} ({ex})"
-                ) from ex
-            return ("regex", operand, compiled)
-        left = parse_operand()
-        op = take()
-        if op not in ("=", "!=", "<", "<=", ">", ">="):
-            raise ProcessorException(f"Unsupported FILTER operator {op!r} in {src!r}")
-        right = parse_operand()
-        return ("cmp", op, left, right)
-
-    node = parse_or()
-    if peek() is not None:
-        raise ProcessorException(f"Trailing tokens in FILTER: {src!r}")
-    return node
-
+# Expression evaluation
 
 class _FilterUnbound(Exception):
     """SPARQL error semantics: an unbound var poisons the expression."""
 
 
-def _operand_value(spec, binding):
-    kind = spec[0]
-    if kind == "var":
-        term = binding.get(spec[1])
-        if term is None:
-            raise _FilterUnbound(spec[1])
-        return term
-    if kind == "num":
-        return spec[1]
-    if kind == "iri":
-        return IriNode(spec[1])
-    return LitNode(spec[1], lang=spec[2])  # lit
-
-
-def _as_comparable(value):
+def _as_comparable(term):
     """(numeric?, value) — numbers compare numerically, rest lexically."""
-    if isinstance(value, (int, float)):
-        return (True, float(value))
-    lex = value.value if isinstance(value, IriNode) else value.lexical
+    lex = term.value if isinstance(term, IriNode) else term.lexical
     try:
         return (True, float(lex))
     except (TypeError, ValueError):
         return (False, lex)
 
 
-def _eval_filter(node, binding) -> bool:
-    op = node[0]
-    if op == "or":
+def _str_form(term) -> str:
+    """SPARQL STR(): IRI → its string, literal → its lexical form."""
+    return term.value if isinstance(term, IriNode) else term.lexical
+
+
+def _eval(node, binding):
+    """Evaluate an expression over one binding (or aggregated row): a
+    bool for a boolean-valued node, else a term. An unbound variable
+    raises _FilterUnbound."""
+    kind = node[0]
+    if kind == "const":
+        return node[1]
+    if kind == "var":
+        term = binding.get(node[1])
+        if term is None:
+            raise _FilterUnbound(node[1])
+        return term
+    if kind == "or":
         # SPARQL three-valued logical-or: error || true = true, but
         # error || false = error (the error must propagate so that a
         # negation above us drops the binding; returning plain false
@@ -905,7 +802,7 @@ def _eval_filter(node, binding) -> bool:
         if lhs is None or rhs is None:
             raise _FilterUnbound("errored arm in ||")
         return False
-    if op == "and":
+    if kind == "and":
         # Three-valued logical-and, mirrored: false && error = false;
         # error && true = error.
         lhs = _try_eval(node[1], binding)
@@ -915,79 +812,42 @@ def _eval_filter(node, binding) -> bool:
         if lhs is None or rhs is None:
             raise _FilterUnbound("errored arm in &&")
         return True
-    if op == "not":
-        return not _eval_filter(node[1], binding)
-    if op == "regex":
-        v = _operand_value(node[1], binding)
-        lex = v.value if isinstance(v, IriNode) else (
-            v.lexical if isinstance(v, LitNode) else str(v)
-        )
-        return node[2].search(lex) is not None
-    # cmp
-    _, cmp_op, lspec, rspec = node
-    lv = _operand_value(lspec, binding)
-    rv = _operand_value(rspec, binding)
-    ln, lval = _as_comparable(lv)
-    rn, rval = _as_comparable(rv)
-    if ln and rn:
-        a, b = lval, rval
-    else:
-        a, b = str(lval), str(rval)
-    if cmp_op == "=":
-        return a == b
-    if cmp_op == "!=":
-        return a != b
-    if cmp_op == "<":
-        return a < b
-    if cmp_op == "<=":
-        return a <= b
-    if cmp_op == ">":
-        return a > b
-    return a >= b
+    if kind == "not":
+        return not _eval(node[1], binding)
+    if kind == "regex":
+        return node[2].search(_str_form(_value(node[1], binding))) is not None
+    if kind == "cmp":
+        ln, a = _as_comparable(_value(node[2], binding))
+        rn, b = _as_comparable(_value(node[3], binding))
+        if not (ln and rn):
+            a, b = str(a), str(b)
+        return _CMP[node[1]](a, b)
+    # fn: string functions over the arguments' STR() forms
+    fn, args = node[1], [_str_form(_value(a, binding)) for a in node[2]]
+    if fn == "STR":
+        return LitNode(args[0])
+    if fn == "CONCAT":
+        return LitNode("".join(args))
+    if fn == "UCASE":
+        return LitNode(args[0].upper())
+    if fn == "LCASE":
+        return LitNode(args[0].lower())
+    return LitNode(str(len(args[0])))  # STRLEN
+
+
+def _value(node, binding):
+    """``_eval`` as a term: a boolean becomes its ``xsd:boolean`` literal."""
+    v = _eval(node, binding)
+    if isinstance(v, bool):
+        return LitNode("true" if v else "false", datatype=XSD.boolean)
+    return v
 
 
 def _try_eval(node, binding):
     try:
-        return _eval_filter(node, binding)
+        return _eval(node, binding)
     except _FilterUnbound:
         return None
-
-
-def _str_form(term) -> str:
-    """SPARQL STR(): IRI → its string, literal → its lexical form."""
-    if isinstance(term, IriNode):
-        return term.value
-    if isinstance(term, LitNode):
-        return term.lexical
-    return str(term)
-
-
-def _eval_bind_expr(node, binding):
-    """Evaluate a BIND expression AST to a term; unbound vars raise
-    _FilterUnbound (the caller leaves the target var unbound)."""
-    kind = node[0]
-    if kind == "var":
-        term = binding.get(node[1])
-        if term is None:
-            raise _FilterUnbound(node[1])
-        return term
-    if kind == "numlit":
-        return LitNode(node[1])
-    if kind == "iri":
-        return IriNode(node[1])
-    if kind == "lit":
-        return LitNode(node[1], lang=node[2])
-    # fn
-    fn, args = node[1], [_eval_bind_expr(a, binding) for a in node[2]]
-    if fn == "STR":
-        return LitNode(_str_form(args[0]))
-    if fn == "CONCAT":
-        return LitNode("".join(_str_form(a) for a in args))
-    if fn == "UCASE":
-        return LitNode(_str_form(args[0]).upper())
-    if fn == "LCASE":
-        return LitNode(_str_form(args[0]).lower())
-    return LitNode(str(len(_str_form(args[0]))))  # STRLEN
 
 
 def _order_key(term):
@@ -1059,6 +919,27 @@ def _compatible_shares(b: Dict[str, object], m: Dict[str, object]) -> bool:
             return False
         shared = True
     return shared
+
+
+def _join(bindings: List[dict], rows: List[dict]) -> List[dict]:
+    """Compatible-merge join of the bindings in flow with VALUES or
+    subquery rows: shared vars must agree; an unbound (None) row value
+    joins with anything."""
+    out: List[dict] = []
+    for b in bindings:
+        for row in rows:
+            nb = dict(b)
+            for v, t in row.items():
+                if t is None:
+                    continue
+                prev = nb.get(v)
+                if prev is None:
+                    nb[v] = t
+                elif prev != t:
+                    break
+            else:
+                out.append(nb)
+    return out
 
 
 def _term_key(t):
@@ -1166,12 +1047,6 @@ class MiniGraph:
             )
         return True  # var
 
-    @staticmethod
-    def _const_term(spec):
-        if spec[0] == "iri":
-            return IriNode(spec[1])
-        return LitNode(spec[1], lang=spec[2])
-
     # -- property paths ------------------------------------------------------
     def _all_nodes(self) -> List[object]:
         if self._nodes_cache is None:
@@ -1180,82 +1055,50 @@ class MiniGraph:
             self._nodes_cache = sorted(ns, key=_term_key)
         return self._nodes_cache
 
-    def _path_fwd(self, ast, start) -> set:
-        """All terms reachable from ``start`` via ``ast``."""
+    def _path(self, ast, node, forward: bool) -> set:
+        """All terms reachable from ``node`` via ``ast`` walking ``forward``;
+        backward, all terms that reach ``node``."""
         k = ast[0]
         if k == "negset":
-            return self._negset_step(ast, start, forward=True)
+            return self._negset_step(ast, node, forward)
         if k == "pred":
-            if not isinstance(start, IriNode):
+            rows = self._by_pred.get(ast[1], ())
+            if not forward:
+                return {IriNode(r[0]) for r in rows if self._term_of(r, 2) == node}
+            if not isinstance(node, IriNode):
                 return set()
-            return {
-                self._term_of(r, 2)
-                for r in self._by_pred.get(ast[1], ())
-                if r[0] == start.value
-            }
+            return {self._term_of(r, 2) for r in rows if r[0] == node.value}
         if k == "inv":
-            return self._path_bwd(ast[1], start)
+            return self._path(ast[1], node, not forward)
         if k == "seq":
-            cur = {start}
-            for sub in ast[1]:
+            cur = {node}
+            for sub in ast[1] if forward else reversed(ast[1]):
                 if not cur:
                     break
-                cur = set().union(*(self._path_fwd(sub, t) for t in cur))
+                cur = set().union(*(self._path(sub, t, forward) for t in cur))
             return cur
         if k == "alt":
-            return set().union(*(self._path_fwd(sub, start) for sub in ast[1]))
+            return set().union(*(self._path(sub, node, forward) for sub in ast[1]))
         if k == "maybe":
-            return {start} | self._path_fwd(ast[1], start)
+            return {node} | self._path(ast[1], node, forward)
         # star / plus — BFS to fixpoint over the sub-path
         reach: set = set()
-        frontier = {start}
+        frontier = {node}
         while frontier:
-            step = set().union(*(self._path_fwd(ast[1], t) for t in frontier))
+            step = set().union(*(self._path(ast[1], t, forward) for t in frontier))
             frontier = step - reach
             reach |= step
-        return reach | {start} if k == "star" else reach
-
-    def _path_bwd(self, ast, end) -> set:
-        """All terms that reach ``end`` via ``ast`` (mirror of _path_fwd)."""
-        k = ast[0]
-        if k == "negset":
-            return self._negset_step(ast, end, forward=False)
-        if k == "pred":
-            return {
-                IriNode(r[0])
-                for r in self._by_pred.get(ast[1], ())
-                if self._term_of(r, 2) == end
-            }
-        if k == "inv":
-            return self._path_fwd(ast[1], end)
-        if k == "seq":
-            cur = {end}
-            for sub in reversed(ast[1]):
-                if not cur:
-                    break
-                cur = set().union(*(self._path_bwd(sub, t) for t in cur))
-            return cur
-        if k == "alt":
-            return set().union(*(self._path_bwd(sub, end) for sub in ast[1]))
-        if k == "maybe":
-            return {end} | self._path_bwd(ast[1], end)
-        reach: set = set()
-        frontier = {end}
-        while frontier:
-            step = set().union(*(self._path_bwd(ast[1], t) for t in frontier))
-            frontier = step - reach
-            reach |= step
-        return reach | {end} if k == "star" else reach
+        return reach | {node} if k == "star" else reach
 
     def _eval_path_pattern(self, pat, bindings):
         s_spec, p_spec, o_spec = pat
         ast = p_spec[1]
         out: List[Dict[str, object]] = []
         for b in bindings:
-            s_t = b.get(s_spec[1]) if s_spec[0] == "var" else self._const_term(s_spec)
+            s_t = b.get(s_spec[1]) if s_spec[0] == "var" else _const_term(s_spec)
             o_free = o_spec[0] == "var" and b.get(o_spec[1]) is None
             if s_t is not None:
-                for e in sorted(self._path_fwd(ast, s_t), key=_term_key):
+                for e in sorted(self._path(ast, s_t, True), key=_term_key):
                     if o_free:
                         nb = dict(b)
                         nb[o_spec[1]] = e
@@ -1267,9 +1110,9 @@ class MiniGraph:
                         out.append(dict(b))
             elif not o_free:
                 o_t = (
-                    b[o_spec[1]] if o_spec[0] == "var" else self._const_term(o_spec)
+                    b[o_spec[1]] if o_spec[0] == "var" else _const_term(o_spec)
                 )
-                for st in sorted(self._path_bwd(ast, o_t), key=_term_key):
+                for st in sorted(self._path(ast, o_t, False), key=_term_key):
                     nb = dict(b)
                     nb[s_spec[1]] = st
                     out.append(nb)
@@ -1279,14 +1122,14 @@ class MiniGraph:
                 # source then the target into one binding slot would
                 # silently keep mismatched pairs
                 for n in self._all_nodes():
-                    if n in self._path_fwd(ast, n):
+                    if n in self._path(ast, n, True):
                         nb = dict(b)
                         nb[s_spec[1]] = n
                         out.append(nb)
             else:
                 # both endpoints unbound: range over the graph's terms
                 for n in self._all_nodes():
-                    for e in sorted(self._path_fwd(ast, n), key=_term_key):
+                    for e in sorted(self._path(ast, n, True), key=_term_key):
                         nb = dict(b)
                         nb[s_spec[1]] = n
                         nb[o_spec[1]] = e
@@ -1398,57 +1241,17 @@ class MiniGraph:
                         )
                     nb = dict(b)
                     try:
-                        nb[var] = _eval_bind_expr(expr, b)
+                        nb[var] = _value(expr, b)
                     except _FilterUnbound:
                         pass  # expression error: var stays unbound
                     nxt.append(nb)
                 bindings = nxt
             elif kind == "values":
-                _, vars_, rows = el
-                nxt = []
-                for b in bindings:
-                    for row in rows:
-                        nb = dict(b)
-                        ok = True
-                        for v, spec in zip(vars_, row):
-                            if spec is None:  # UNDEF joins with anything
-                                continue
-                            t = self._const_term(spec)
-                            prev = nb.get(v)
-                            if prev is None:
-                                nb[v] = t
-                            elif prev != t:
-                                ok = False
-                                break
-                        if ok:
-                            nxt.append(nb)
-                bindings = nxt
+                bindings = _join(bindings, el[1])
             elif kind == "subselect":
                 # SPARQL subquery: evaluated bottom-up on an empty
                 # binding; only the projected vars join outward
-                (_, sel, sub, distinct, limit, offset, order, group_by,
-                 having) = el
-                rows = self._solve(
-                    sub, sel, distinct, limit, offset, order, group_by,
-                    having, named
-                )
-                nxt = []
-                for b in bindings:
-                    for row in rows:
-                        nb = dict(b)
-                        ok = True
-                        for v, t in row.items():
-                            if t is None:
-                                continue
-                            prev = nb.get(v)
-                            if prev is None:
-                                nb[v] = t
-                            elif prev != t:
-                                ok = False
-                                break
-                        if ok:
-                            nxt.append(nb)
-                bindings = nxt
+                bindings = _join(bindings, self._solve(el[1], named))
             else:  # union — concatenation of the arms' extensions
                 nxt = []
                 for b in bindings:
@@ -1492,28 +1295,26 @@ class MiniGraph:
             rows.append(row)
         return rows
 
-    def _solve(
-        self, group: _Group, selected, distinct, limit, offset, order,
-        group_by=(), having=None, named=None,
-    ) -> List[Dict[str, object]]:
-        """Evaluate a group on an empty binding and apply the solution
-        modifiers: GROUP BY/aggregate → HAVING → ORDER BY → projection →
-        DISTINCT → OFFSET → LIMIT."""
-        bindings = self._eval_group(group, [{}], named)
+    def _solve(self, q: _Select, named) -> List[Dict[str, object]]:
+        """Evaluate a SELECT's group on an empty binding and apply its
+        solution modifiers: GROUP BY/aggregate → HAVING → ORDER BY →
+        projection → DISTINCT → OFFSET → LIMIT."""
+        bindings = self._eval_group(q.group, [{}], named)
+        selected, group_by, order = q.items, q.group_by, q.order
         has_agg = selected != ["*"] and any(it[0] == "agg" for it in selected)
         if selected == ["*"] and group_by:
             raise ProcessorException(
                 "SELECT * cannot be combined with GROUP BY — name the "
                 "grouped variables explicitly"
             )
-        if having is not None and not (has_agg or group_by):
+        if q.having is not None and not (has_agg or group_by):
             raise ProcessorException(
                 "HAVING requires GROUP BY or an aggregate in the SELECT clause"
             )
         if has_agg or group_by:
-            rows = self._aggregate(bindings, selected, list(group_by))
-            if having is not None:
-                rows = [r for r in rows if _try_eval(having, r)]
+            rows = self._aggregate(bindings, selected, group_by)
+            if q.having is not None:
+                rows = [r for r in rows if _try_eval(q.having, r)]
             for var, desc in reversed(order):
                 rows.sort(key=lambda r: _order_key(r.get(var)), reverse=desc)
         else:
@@ -1531,7 +1332,7 @@ class MiniGraph:
                 rows = [
                     {it[1]: b.get(it[1]) for it in selected} for b in bindings
                 ]
-        if distinct:
+        if q.distinct:
             seen = set()
             deduped = []
             for r in rows:
@@ -1540,61 +1341,57 @@ class MiniGraph:
                     seen.add(key)
                     deduped.append(r)
             rows = deduped
-        if offset is not None:
-            rows = rows[offset:]
-        if limit is not None:
-            rows = rows[:limit]
+        if q.offset is not None:
+            rows = rows[q.offset:]
+        if q.limit is not None:
+            rows = rows[:q.limit]
         return rows
 
     def query(
         self, where_clause: str, named: Optional[Dict[str, "MiniGraph"]] = None
     ) -> List[Dict[str, object]]:
-        (sel, group, distinct, limit, offset, order, group_by,
-         having) = parse_query(where_clause)
-        return self._solve(
-            group, sel, distinct, limit, offset, order, group_by, having,
-            named,
-        )
+        return self._solve(parse_query(where_clause), named)
 
 
 # ---------------------------------------------------------------------------
 # TTL-lite parsing (fixture ontologies)
 
-_TTL_PREFIX = re.compile(r"@prefix\s+([A-Za-z][\w-]*)\s*:\s*<([^>]*)>\s*\.")
-_TTL_STMT = re.compile(
-    r"(<[^>]*>|[A-Za-z][\w-]*:[\w./#-]+)\s+"
-    r"(<[^>]*>|a|[A-Za-z][\w-]*:[\w./#-]+)\s+"
-    r'(<[^>]*>|"(?:[^"\\]|\\.)*"(?:@[A-Za-z-]+)?|[A-Za-z][\w-]*:[\w./#-]+|[-+]?\d+(?:\.\d+)?)\s*\.'
-)
+_TTL_PREFIX = re.compile(r"\s*@prefix\s+([A-Za-z][\w-]*)\s*:\s*<([^>]*)>\s*\.")
 
 
 def parse_ttl(text: str) -> List[GraphRow]:
-    """Parse a simple Turtle subset: @prefix decls + one-triple statements."""
-    prefixes = {m.group(1): m.group(2) for m in _TTL_PREFIX.finditer(text)}
-
-    def iri_of(tok: str) -> str:
-        if tok.startswith("<"):
-            return tok[1:-1]
-        if tok == "a":
-            return "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
-        pfx, member = tok.split(":", 1)
-        if pfx not in prefixes:
-            raise ProcessorException(f"Unknown TTL prefix: {pfx}")
-        return prefixes[pfx] + member
-
+    """Parse a simple Turtle subset: ``@prefix`` decls, ``#`` comment
+    lines and one-triple statements ``s p o .`` whose terms the query
+    term lexer reads. Predicate lists (``;``), object lists (``,``) and
+    ``^^`` datatypes are out of scope; the first statement that uses one,
+    or that cannot be read otherwise, raises ProcessorException."""
+    body = "\n".join(
+        ln for ln in text.splitlines() if not ln.lstrip().startswith("#")
+    )
+    cur = _Cur(body, "Turtle")
+    prefixes: Dict[str, str] = {}
     rows: List[GraphRow] = []
-    body = _TTL_PREFIX.sub("", text)
-    for m in _TTL_STMT.finditer(body):
-        s = iri_of(m.group(1))
-        p = iri_of(m.group(2))
-        otok = m.group(3)
-        if otok.startswith('"'):
-            lm = re.match(r'"((?:[^"\\]|\\.)*)"(?:@([A-Za-z-]+))?$', otok)
-            rows.append((s, p, "literal", lm.group(1).replace('\\"', '"'), lm.group(2)))
-        elif otok[0].isdigit() or otok[0] in "+-":
-            rows.append((s, p, "literal", otok, None))
+    while cur.peek():
+        m = _TTL_PREFIX.match(cur.s, cur.i)
+        if m:
+            prefixes[m.group(1)] = m.group(2)
+            cur.i = m.end()
+            continue
+        start = cur.i
+        try:
+            s, p, o = (_parse_term(cur.term(), prefixes) for _ in range(3))
+            cur.expect(".")
+            if s[0] != "iri" or p[0] != "iri" or o[0] == "var":
+                raise ProcessorException("needs an IRI subject and predicate")
+        except ProcessorException as ex:
+            stmt = body[start:].split("\n", 1)[0]
+            raise ProcessorException(
+                f"Cannot read Turtle statement {stmt!r}: {ex}"
+            ) from ex
+        if o[0] == "iri":
+            rows.append((s[1], p[1], "iri", o[1], None))
         else:
-            rows.append((s, p, "iri", iri_of(otok), None))
+            rows.append((s[1], p[1], "literal", o[1], o[2]))
     return rows
 
 

@@ -292,13 +292,13 @@ class TestPropertyPathProperties:
 
         got = set()
         for n in g._all_nodes():
-            for e in g._path_fwd(ast, n):
+            for e in g._path(ast, n, True):
                 got.add((n.value, e.value))
         assert got == expect
 
         # backward evaluation must agree with forward
         got_bwd = set()
         for n in g._all_nodes():
-            for s in g._path_bwd(ast, n):
+            for s in g._path(ast, n, False):
                 got_bwd.add((s.value, n.value))
         assert got_bwd == expect

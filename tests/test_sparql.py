@@ -1,17 +1,22 @@
-"""Mini-SPARQL evaluator: FILTER + OPTIONAL coverage (workflow/sparql.py).
+"""Mini-SPARQL evaluator coverage (workflow/sparql.py).
 
 The reference evaluates ``where:`` with rdflib's full SPARQL engine
 (text_to_turtle_processor.py:2107-2202); the engine supports the subset
-workflow-style lookups actually use — BGP + single-level OPTIONAL +
-FILTER with comparisons / regex / boolean composition.
+workflow-style lookups actually use: recursive groups (OPTIONAL, UNION,
+MINUS, GRAPH, VALUES, subqueries), property paths, one expression
+language for FILTER / HAVING / BIND, aggregates, solution modifiers in
+SPARQL order at both query levels, and the TTL-lite reader that shares
+the query term lexer.
 """
 
 import pytest
 
 from cmc_knowledge_graph_text2ttl_spark.core.errors import ProcessorException
+from cmc_knowledge_graph_text2ttl_spark.core.terms import XSD, LitNode
 from cmc_knowledge_graph_text2ttl_spark.workflow.sparql import (
     MiniGraph,
     make_query_fn,
+    parse_ttl,
 )
 
 P = "http://x/p"
@@ -97,6 +102,37 @@ class TestFilter:
     def test_bad_filter_raises(self):
         with pytest.raises(ProcessorException):
             GRAPH.query("SELECT ?s WHERE { ?s <http://x/name> ?n . FILTER (?n ~ 3) }")
+
+    def test_string_functions_in_filter(self):
+        out = GRAPH.query(
+            "SELECT ?n WHERE { ?s <http://x/age> ?a . ?s <http://x/name> ?n . "
+            "FILTER (STRLEN(?a) > 1) }"
+        )
+        assert names(out) == ["Alice", "carol"]
+        out = GRAPH.query(
+            "SELECT ?n WHERE { ?s <http://x/name> ?n . "
+            'FILTER (STR(?s) = "http://x/bob") }'
+        )
+        assert names(out) == ["Bob"]
+
+    def test_non_boolean_filter_root_raises(self):
+        with pytest.raises(ProcessorException, match="boolean"):
+            GRAPH.query(
+                "SELECT ?n WHERE { ?s <http://x/name> ?n . FILTER (STRLEN(?n)) }"
+            )
+
+    def test_regex_pattern_unescapes_like_any_literal(self):
+        # "a\\.b" is the pattern a\.b: a literal dot, so "axb" is out
+        g = MiniGraph(
+            [
+                ("http://x/s", P, "literal", "a.b", None),
+                ("http://x/t", P, "literal", "axb", None),
+            ]
+        )
+        out = g.query(
+            'SELECT ?s WHERE { ?s <http://x/p> ?o FILTER (regex(?o, "a\\\\.b")) }'
+        )
+        assert [str(r["s"]) for r in out] == ["http://x/s"]
 
     def test_filter_inside_optional_scopes_to_the_optional(self):
         # SPARQL: the filter decides whether the optional EXTENSION
@@ -546,6 +582,17 @@ class TestBind:
                 PFX + 'SELECT ?l WHERE { o:Nsaid rdfs:label ?l BIND ("x" AS ?l) }'
             )
 
+    def test_bind_comparison_and_regex_bind_xsd_boolean(self):
+        out = GRAPH.query(
+            "SELECT ?n ?c ?r WHERE { ?s <http://x/name> ?n . "
+            "?s <http://x/age> ?a BIND (?a = 7 AS ?c) "
+            'BIND (regex(?n, "o") AS ?r) }'
+        )
+        t = LitNode("true", datatype=XSD.boolean)
+        f = LitNode("false", datatype=XSD.boolean)
+        got = {str(r["n"]): (r["c"], r["r"]) for r in out}
+        assert got == {"Alice": (f, f), "Bob": (t, t), "carol": (f, t)}
+
     def test_bind_then_filter_on_bound_var(self):
         out = TAX.query(
             PFX + "SELECT ?s WHERE { ?s rdfs:label ?l "
@@ -740,6 +787,20 @@ class TestLiteralTermEquality:
         out2 = self.LANGG.query('SELECT ?s WHERE { ?s <http://x/p> "foo"@en }')
         assert [str(r["s"]) for r in out2] == ["http://x/s"]
 
+    @pytest.mark.parametrize(
+        "lit", ['"a\\\\b"', '"say \\"hi\\""'], ids=["backslash", "quote"]
+    )
+    def test_turtle_literal_matches_the_same_query_literal(self, lit):
+        g = MiniGraph(parse_ttl(f"@prefix x: <http://x/> .\nx:s x:p {lit} ."))
+        out = g.query(f"SELECT ?s WHERE {{ ?s <http://x/p> {lit} }}")
+        assert [str(r["s"]) for r in out] == ["http://x/s"]
+
+    def test_number_is_a_term_in_patterns(self):
+        out = GRAPH.query(
+            "SELECT ?n WHERE { ?s <http://x/age> 7 . ?s <http://x/name> ?n }"
+        )
+        assert names(out) == ["Bob"]
+
     def test_select_star_with_group_by_raises(self):
         with pytest.raises(ProcessorException, match="SELECT \\*"):
             TAX.query(PFX + "SELECT * WHERE { ?s ?p ?o } GROUP BY ?s")
@@ -799,6 +860,63 @@ class TestUnsupportedConstructsStillRaise:
     def test_unbalanced_group_raises(self):
         with pytest.raises(ProcessorException):
             TAX.query(PFX + "SELECT ?s WHERE { { ?s a o:Nsaid }")
+
+    def test_text_before_select_raises(self):
+        with pytest.raises(ProcessorException, match="PREFIX\\* SELECT"):
+            TAX.query(PFX + "ASK { ?s ?p ?o } SELECT ?s WHERE { ?s a o:Nsaid }")
+
+
+# one SELECT parser: a modifier tail behaves the same in a query and in a
+# subquery — (Analgesic, 1 superclass) and (Nsaid, 2) before the tail
+MOD_SELECT = "SELECT ?s (COUNT(?c) AS ?n) WHERE { ?s rdfs:subClassOf+ ?c } "
+
+
+class TestModifierParity:
+    @pytest.mark.parametrize(
+        "tail, expected",
+        [
+            (
+                "GROUP BY ?s HAVING (?n > 0) ORDER BY DESC(?n) LIMIT 1 OFFSET 1",
+                [[("n", "1"), ("s", "http://o/Analgesic")]],
+            ),
+            ("GROUP BY ?s OFFSET 1 LIMIT 1", [[("n", "2"), ("s", "http://o/Nsaid")]]),
+            ("GROUP BY ?s LIMIT 1 ORDER BY ?s", None),
+            ("HAVING (?n > 0) GROUP BY ?s", None),
+            ("GROUP BY ?s HAVING (?n > 5) HAVING (?n > 0)", None),
+            ("GROUP BY ?s ORDER BY ?s ORDER BY ?n", None),
+            ("GROUP BY ?s LIMIT 1 LIMIT 2", None),
+        ],
+    )
+    def test_query_and_subquery_agree(self, tail, expected):
+        for query in (
+            PFX + MOD_SELECT + tail,
+            PFX + "SELECT * WHERE { { " + MOD_SELECT + tail + " } }",
+        ):
+            if expected is None:
+                with pytest.raises(ProcessorException, match="at most once") as ei:
+                    TAX.query(query)
+                assert "only ORDER BY / LIMIT / OFFSET" not in str(ei.value)
+            else:
+                rows = [sorted((k, str(v)) for k, v in r.items()) for r in TAX.query(query)]
+                assert rows == expected
+
+
+class TestParseTtl:
+    HEAD = "@prefix x: <http://x/> .\nx:a x:p x:b .\n"
+
+    def test_comment_line_is_skipped(self):
+        rows = parse_ttl(self.HEAD + "  # a comment x:z x:y x:w .\n")
+        assert rows == [("http://x/a", "http://x/p", "iri", "http://x/b", None)]
+
+    @pytest.mark.parametrize(
+        "stmt",
+        ["x:a x:p x:b ; x:q x:c .", "x:a x:p x:b , x:c .", 'x:a x:p "5"^^x:int .'],
+        ids=["semicolon", "comma", "datatype"],
+    )
+    def test_unreadable_statement_raises_naming_it(self, stmt):
+        with pytest.raises(ProcessorException, match="Cannot read Turtle") as ei:
+            parse_ttl(self.HEAD + stmt + "\nx:c x:p x:d .\n")
+        assert stmt in str(ei.value)
 
 
 class TestWorkflowSelectWithFilter:
