@@ -1021,9 +1021,7 @@ def q_pdf_table_cells(spark, sf_dir):
     )
 
     from cmc_knowledge_graph_text2ttl_spark.operators.extract import extract_text
-    from cmc_knowledge_graph_text2ttl_spark.operators.pdf_textlayer import (
-        make_table_pdf,
-    )
+    from fixture_writers import make_table_pdf
 
     docs = _docs(spark, sf_dir).select("doc_id", "text")
     schema = StructType(
@@ -1100,11 +1098,7 @@ def q_office_extract(spark, sf_dir):
         TimestampType,
     )
 
-    from cmc_knowledge_graph_text2ttl_spark.operators import doc_binary as DOC
-    from cmc_knowledge_graph_text2ttl_spark.operators import legacy_office as LO
-    from cmc_knowledge_graph_text2ttl_spark.operators import odf as ODF
-    from cmc_knowledge_graph_text2ttl_spark.operators import office as O
-    from cmc_knowledge_graph_text2ttl_spark.operators import rtf as R
+    import fixture_writers as FW
     from cmc_knowledge_graph_text2ttl_spark.operators.extract import extract_text
 
     docs = _docs(spark, sf_dir).select("doc_id", "text")
@@ -1125,24 +1119,24 @@ def q_office_extract(spark, sf_dir):
                 words = t.split(" ")
                 w = [words[k] if k < len(words) else "pad" for k in range(8)]
                 d = int(i)
-                xlsx = O.make_xlsx(
+                xlsx = FW.make_xlsx(
                     [("S", [[w[0], w[1], w[2]], [d, None, w[3]]])]
                 )
-                pptx = O.make_pptx(
+                pptx = FW.make_pptx(
                     [[f"{w[4]} {w[5]}", [[w[6], w[7]], [w[0], str(d)]]]]
                 )
-                rtf = R.make_rtf(
+                rtf = FW.make_rtf(
                     [f"{w[1]} {w[2]}", [[w[3], w[4]], [w[5], str(d)]]]
                 )
-                odt = ODF.make_odt(
+                odt = FW.make_odt(
                     [(1, w[6]), f"{w[7]} {w[0]}", [[w[1], str(d)]]]
                 )
-                doc = DOC.make_doc([f"{w[3]} {w[4]} {d}", w[5]])
-                xls = LO.make_xls(
+                doc = FW.make_doc([f"{w[3]} {w[4]} {d}", w[5]])
+                xls = FW.make_xls(
                     [("L", [[w[6], d], [w[7], None, w[0]]])],
                     sst_continue_split=d % 2 == 0,
                 )
-                ppt = LO.make_ppt([f"{w[2]} {d}", w[3]])
+                ppt = FW.make_ppt([f"{w[2]} {d}", w[3]])
                 for kind, blob in (
                     ("x", xlsx),
                     ("p", pptx),
@@ -1567,6 +1561,7 @@ def q_media_gps_scrub(spark, sf_dir):
     import pandas as pd
 
     from cmc_knowledge_graph_text2ttl_spark.operators import multimodal as MM
+    import fixture_writers as FW
 
     docs = _docs(spark, sf_dir).select("doc_id")
 
@@ -1578,7 +1573,7 @@ def q_media_gps_scrub(spark, sf_dir):
                 gps = ("N", "E") if did % 3 != 1 else None
                 ids.append(str(did))
                 blobs.append(
-                    MM.encode_jpeg_exif(
+                    FW.encode_jpeg_exif(
                         8, 6,
                         orientation=(did % 8) + 1,
                         make=f"M{did % 10}",
@@ -2408,7 +2403,7 @@ def _synth_media(spark, sf_dir, solid: bool):
     ``solid`` is False; all solid-color PNGs when True)."""
     import pandas as pd
 
-    from cmc_knowledge_graph_text2ttl_spark.operators import multimodal as MM
+    import fixture_writers as FW
 
     docs = _docs(spark, sf_dir).select("doc_id")
 
@@ -2425,9 +2420,9 @@ def _synth_media(spark, sf_dir, solid: bool):
                     rgb = bytes(((did * 7) % 256, (did * 13) % 256, (did * 29) % 256))
                     v = did % 4
                     if v == 0:
-                        blob = MM.encode_png(w, h, rgb * (w * h), 3)
+                        blob = FW.encode_png(w, h, rgb * (w * h), 3)
                     elif v == 1:
-                        blob = MM.encode_png_ex(
+                        blob = FW.encode_png_ex(
                             w, h, rgb * (w * h), 3, interlace=True
                         )
                     else:
@@ -2438,7 +2433,7 @@ def _synth_media(spark, sf_dir, solid: bool):
                         pal[k * 3 : k * 3 + 3] = rgb
                         idx = bytes([k]) * (w * h)
                         if v == 2:
-                            blob = MM.encode_png_ex(
+                            blob = FW.encode_png_ex(
                                 w, h, idx, palette=bytes(pal)
                             )
                         else:
@@ -2446,7 +2441,7 @@ def _synth_media(spark, sf_dir, solid: bool):
                             trns = bytes(
                                 min(255, a) for a in range(k)
                             ) + bytes([alpha])
-                            blob = MM.encode_png_ex(
+                            blob = FW.encode_png_ex(
                                 w,
                                 h,
                                 idx,
@@ -2464,15 +2459,15 @@ def _synth_media(spark, sf_dir, solid: bool):
                         px = bytes((did + i) % 256 for i in range(w * h * 3))
                         sub = (did // 3) % 3
                         if sub == 0:
-                            blob = MM.encode_png(w, h, px, 3)
+                            blob = FW.encode_png(w, h, px, 3)
                         elif sub == 1:
-                            blob = MM.encode_bmp(w, h, px, 3)
+                            blob = FW.encode_bmp(w, h, px, 3)
                         else:
                             # TIFF rotates its compression matrix too:
                             # none / LZW+predictor / Deflate / PackBits
                             # with IDENTICAL pixels (round-5)
                             tc = (did // 9) % 4
-                            blob = MM.encode_tiff(
+                            blob = FW.encode_tiff(
                                 w, h, px, 3,
                                 compression=("none", "lzw", "deflate",
                                              "packbits")[tc],
@@ -2480,11 +2475,11 @@ def _synth_media(spark, sf_dir, solid: bool):
                             )
                     elif kind == 1:
                         if (did // 3) % 2:
-                            blob = MM.encode_webp_header(w, h)
+                            blob = FW.encode_webp_header(w, h)
                         else:
-                            blob = MM.encode_gif_header(w, h)
+                            blob = FW.encode_gif_header(w, h)
                     else:
-                        blob = MM.encode_jpeg_header(w, h)
+                        blob = FW.encode_jpeg_header(w, h)
                 ids.append(str(did))
                 blobs.append(blob)
             yield pd.DataFrame({"media_id": ids, "blob": blobs})
@@ -2502,8 +2497,7 @@ def _synth_audio(spark, sf_dir):
     oracle's waveform replay needs no change."""
     import pandas as pd
 
-    from cmc_knowledge_graph_text2ttl_spark.operators import multimodal as MM
-    from cmc_knowledge_graph_text2ttl_spark.operators.flac import encode_flac
+    import fixture_writers as FW
 
     docs = _docs(spark, sf_dir).select("doc_id")
 
@@ -2517,13 +2511,13 @@ def _synth_audio(spark, sf_dir):
                 ids.append(str(did))
                 if did % 3 == 2:
                     blobs.append(
-                        encode_flac(samples, 8000, channels=1,
-                                    block_size=160, subframe="fixed1")
+                        FW.encode_flac(samples, 8000, channels=1,
+                                       block_size=160, subframe="fixed1")
                     )
                 elif did % 3 == 1:
-                    blobs.append(MM.encode_aiff(1, 8000, samples, 16))
+                    blobs.append(FW.encode_aiff(1, 8000, samples, 16))
                 else:
-                    blobs.append(MM.encode_wav(samples, 8000, 1))
+                    blobs.append(FW.encode_wav(samples, 8000, 1))
             yield pd.DataFrame({"media_id": ids, "blob": blobs})
 
     return docs.mapInPandas(gen, schema="media_id string, blob binary")
@@ -2553,7 +2547,7 @@ def _synth_gifs(spark, sf_dir):
     the identical display-order pixels the oracle derives."""
     import pandas as pd
 
-    from cmc_knowledge_graph_text2ttl_spark.operators import multimodal as MM
+    import fixture_writers as FW
 
     docs = _docs(spark, sf_dir).select("doc_id")
 
@@ -2566,7 +2560,7 @@ def _synth_gifs(spark, sf_dir):
                 idx = [(did + i) % 4 for i in range(w * h)]
                 ids.append(str(did))
                 blobs.append(
-                    MM.encode_gif(
+                    FW.encode_gif(
                         w, h, idx, GIF_PALETTE, interlaced=bool(did % 2)
                     )
                 )
@@ -2714,7 +2708,7 @@ def _synth_jpegs(spark, sf_dir):
     oracle."""
     import pandas as pd
 
-    from cmc_knowledge_graph_text2ttl_spark.operators import jpeg as JP
+    import fixture_writers as FW
 
     docs = _docs(spark, sf_dir).select("doc_id")
 
@@ -2735,7 +2729,7 @@ def _synth_jpegs(spark, sf_dir):
                     ]
                     ids.append(str(did))
                     blobs.append(
-                        JP.encode_jpeg_cmyk(bw * 8, bh * 8, comp_blocks)
+                        FW.encode_jpeg_cmyk(bw * 8, bh * 8, comp_blocks)
                     )
                     continue
                 blocks = [
@@ -2743,9 +2737,9 @@ def _synth_jpegs(spark, sf_dir):
                     for i in range(bw * bh)
                 ]
                 enc = (
-                    JP.encode_jpeg_progressive
+                    FW.encode_jpeg_progressive
                     if did % 2
-                    else JP.encode_jpeg_blocks
+                    else FW.encode_jpeg_blocks
                 )
                 ids.append(str(did))
                 blobs.append(enc(bw * 8, bh * 8, blocks))
@@ -2848,8 +2842,7 @@ def q_web_ingest(spark, sf_dir):
 
     import pandas as pd
 
-    from cmc_knowledge_graph_text2ttl_spark.operators import odf as ODF
-    from cmc_knowledge_graph_text2ttl_spark.operators import rtf as R
+    import fixture_writers as FW
     from cmc_knowledge_graph_text2ttl_spark.operators.extract import extract_text
     from cmc_knowledge_graph_text2ttl_spark.sources import warc as W
 
@@ -2866,9 +2859,9 @@ def q_web_ingest(spark, sf_dir):
                     f"<p>{w[2]}</p></body></html>"
                 ).encode()
             elif v == 2:
-                body = R.make_rtf([f"{w[3]} {w[4]}", [[w[5], str(d)]]])
+                body = FW.make_rtf([f"{w[3]} {w[4]}", [[w[5], str(d)]]])
             else:
-                body = ODF.make_odt([(2, w[6]), f"{w[7]} {d}"])
+                body = FW.make_odt([(2, w[6]), f"{w[7]} {d}"])
             recs.append((f"doc://{d}", f"2024-02-{1 + d % 27:02d}T00:00:00Z", body))
         g = int(pdf["seg"].iloc[0]) % 6
         data = W.build_warc(recs, compress=g >= 3, chunked=g % 3 == 2)
@@ -3186,6 +3179,7 @@ def q_media_exif(spark, sf_dir):
     import pandas as pd
 
     from cmc_knowledge_graph_text2ttl_spark.operators import multimodal as MM
+    import fixture_writers as FW
 
     docs = _docs(spark, sf_dir).select("doc_id", "text")
 
@@ -3198,7 +3192,7 @@ def q_media_exif(spark, sf_dir):
                 w0 = words[0] if words else "pad"
                 w1 = words[1] if len(words) > 1 else "pad"
                 blobs.append(
-                    MM.encode_jpeg_exif(
+                    FW.encode_jpeg_exif(
                         16 + did % 13,
                         9 + did % 7,
                         orientation=did % 8 + 1,
@@ -3225,6 +3219,7 @@ def q_media_mp3(spark, sf_dir):
     import pandas as pd
 
     from cmc_knowledge_graph_text2ttl_spark.operators import multimodal as MM
+    import fixture_writers as FW
 
     docs = _docs(spark, sf_dir).select("doc_id")
 
@@ -3235,7 +3230,7 @@ def q_media_mp3(spark, sf_dir):
                 did = int(did)
                 vbr = {2: "Xing", 5: "VBRI"}.get(did % 7)
                 blobs.append(
-                    MM.encode_mp3_header(
+                    FW.encode_mp3_header(
                         bitrate_kbps=MM._MP3_BITRATES[1][did % 14 + 1],
                         sample_rate=MM._MP3_RATES[1][did % 3],
                         mono=did % 2 == 0,
@@ -3261,6 +3256,7 @@ def q_media_frames(spark, sf_dir):
     import pandas as pd
 
     from cmc_knowledge_graph_text2ttl_spark.operators import multimodal as MM
+    import fixture_writers as FW
 
     docs = _docs(spark, sf_dir).select("doc_id")
 
@@ -3275,7 +3271,7 @@ def q_media_frames(spark, sf_dir):
                 ]
                 ids.append(str(did))
                 blobs.append(
-                    MM.encode_gif_animated(w, h, frames, GIF_PALETTE)
+                    FW.encode_gif_animated(w, h, frames, GIF_PALETTE)
                 )
             yield pd.DataFrame({"media_id": ids, "blob": blobs})
 
@@ -3303,8 +3299,8 @@ def q_media_frames_mjpeg(spark, sf_dir):
     evenly-spaced rule."""
     import pandas as pd
 
-    from cmc_knowledge_graph_text2ttl_spark.operators import jpeg as JP
     from cmc_knowledge_graph_text2ttl_spark.operators import multimodal as MM
+    import fixture_writers as FW
 
     docs = _docs(spark, sf_dir).select("doc_id")
 
@@ -3317,13 +3313,13 @@ def q_media_frames_mjpeg(spark, sf_dir):
                 ids.append(str(did))
                 if did % 2:
                     frames = [bytes((v, v, v)) * 64 for v in vals]
-                    blobs.append(MM.encode_avi_rgb(8, 8, frames))
+                    blobs.append(FW.encode_avi_rgb(8, 8, frames))
                 else:
                     frames = [
-                        JP.encode_jpeg_blocks(8, 8, [[v - 128] + [0] * 63])
+                        FW.encode_jpeg_blocks(8, 8, [[v - 128] + [0] * 63])
                         for v in vals
                     ]
-                    blobs.append(MM.encode_avi_mjpeg(8, 8, frames))
+                    blobs.append(FW.encode_avi_mjpeg(8, 8, frames))
             yield pd.DataFrame({"media_id": ids, "blob": blobs})
 
     media = docs.mapInPandas(gen, schema="media_id string, blob binary")
@@ -3350,6 +3346,7 @@ def q_media_frames_apng(spark, sf_dir):
     import pandas as pd
 
     from cmc_knowledge_graph_text2ttl_spark.operators import multimodal as MM
+    import fixture_writers as FW
 
     docs = _docs(spark, sf_dir).select("doc_id")
 
@@ -3362,7 +3359,7 @@ def q_media_frames_apng(spark, sf_dir):
                 v1 = [(did * 11 + c * 17) % 256 for c in range(3)]
                 v2 = [(did * 5 + c * 13) % 256 for c in range(3)]
                 s = lambda v, n: bytes(tuple(v) + (255,)) * n  # noqa: E731
-                blob = MM.encode_apng(8, 6, [
+                blob = FW.encode_apng(8, 6, [
                     (0, 0, 8, 6, s(v0, 48), 0, 0),
                     (2, 1, 4, 3, s(v1, 12), 0, 0),
                     (0, 0, 8, 6, s(v2, 48), 0, 0),
@@ -3393,9 +3390,7 @@ def q_media_frames_webp(spark, sf_dir):
     import pandas as pd
 
     from cmc_knowledge_graph_text2ttl_spark.operators import multimodal as MM
-    from cmc_knowledge_graph_text2ttl_spark.operators.vp8l import (
-        encode_webp_anim,
-    )
+    from fixture_writers import encode_webp_anim
 
     docs = _docs(spark, sf_dir).select("doc_id")
 
@@ -3445,7 +3440,7 @@ def _synth_dhash_media(spark, sf_dir):
     needs no change because the pixels are identical."""
     import pandas as pd
 
-    from cmc_knowledge_graph_text2ttl_spark.operators import multimodal as MM
+    import fixture_writers as FW
 
     docs = _docs(spark, sf_dir).select("doc_id")
 
@@ -3469,17 +3464,13 @@ def _synth_dhash_media(spark, sf_dir):
                             (p * 7 + did) % 256,
                         )
                     )
-                    blob = MM.encode_png(w, h, ga, 2)
+                    blob = FW.encode_png(w, h, ga, 2)
                 elif did % 10 == 3:
-                    from cmc_knowledge_graph_text2ttl_spark.operators.vp8l import (
-                        encode_webp_lossless,
-                    )
-
-                    blob = encode_webp_lossless(w, h, px, 3)
+                    blob = FW.encode_webp_lossless(w, h, px, 3)
                 elif did % 10 == 9:
-                    blob = MM.encode_ico([(w, h, px, 3)])
+                    blob = FW.encode_ico([(w, h, px, 3)])
                 else:
-                    enc = MM.encode_png if did % 2 == 0 else MM.encode_bmp
+                    enc = FW.encode_png if did % 2 == 0 else FW.encode_bmp
                     blob = enc(w, h, px, 3)
                 ids.append(str(did))
                 blobs.append(blob)
@@ -3522,8 +3513,7 @@ def _synth_fp_audio(spark, sf_dir):
     needs no change (samples are bit-identical by construction)."""
     import pandas as pd
 
-    from cmc_knowledge_graph_text2ttl_spark.operators import multimodal as MM
-    from cmc_knowledge_graph_text2ttl_spark.operators.flac import encode_flac
+    import fixture_writers as FW
 
     docs = _docs(spark, sf_dir).select("doc_id")
 
@@ -3536,17 +3526,17 @@ def _synth_fp_audio(spark, sf_dir):
                 n = 200 + (sd % 7) * 40
                 v = [((sd * 31 + i * 17) % 2003) - 1001 for i in range(n)]
                 if did % 2 == 0:
-                    blob = MM.encode_wav(v, 8000, 1)
+                    blob = FW.encode_wav(v, 8000, 1)
                 elif did % 6 == 3:
                     inter = [x for s2 in v for x in (s2, s2)]
-                    blob = encode_flac(inter, 44100, channels=2,
-                                       block_size=128, subframe="verbatim")
+                    blob = FW.encode_flac(inter, 44100, channels=2,
+                                          block_size=128, subframe="verbatim")
                 elif did % 6 == 5:
-                    blob = encode_flac(v, 44100, channels=1,
-                                       block_size=128, subframe="fixed2")
+                    blob = FW.encode_flac(v, 44100, channels=1,
+                                          block_size=128, subframe="fixed2")
                 else:
                     inter = [x for s2 in v for x in (s2, s2)]
-                    blob = MM.encode_wav(inter, 8000, 2)
+                    blob = FW.encode_wav(inter, 8000, 2)
                 ids.append(str(did))
                 blobs.append(blob)
             yield pd.DataFrame({"media_id": ids, "blob": blobs})
@@ -3600,6 +3590,7 @@ def q_media_mp4(spark, sf_dir):
     import pandas as pd
 
     from cmc_knowledge_graph_text2ttl_spark.operators import multimodal as MM
+    import fixture_writers as FW
 
     docs = _docs(spark, sf_dir).select("doc_id")
 
@@ -3610,7 +3601,7 @@ def q_media_mp4(spark, sf_dir):
                 did = int(did)
                 codecs = ("avc1", "mp4a") if did % 2 else ("hvc1", "opus")
                 blobs.append(
-                    MM.encode_mp4_header(
+                    FW.encode_mp4_header(
                         1000 + did * 37,
                         320 + did % 1280,
                         240 + did % 720,
@@ -3631,6 +3622,7 @@ def q_media_id3(spark, sf_dir):
     import pandas as pd
 
     from cmc_knowledge_graph_text2ttl_spark.operators import multimodal as MM
+    import fixture_writers as FW
 
     docs = _docs(spark, sf_dir).select("doc_id", "text")
 
@@ -3643,7 +3635,7 @@ def q_media_id3(spark, sf_dir):
                 w0 = words[0] if words else "pad"
                 w1 = words[1] if len(words) > 1 else "pad"
                 blobs.append(
-                    MM.encode_id3_mp3(
+                    FW.encode_id3_mp3(
                         {
                             "title": f"{w0} {w1}",
                             "artist": f"artist {did}",
@@ -3694,9 +3686,7 @@ def q_media_webp(spark, sf_dir):
     import pandas as pd
 
     from cmc_knowledge_graph_text2ttl_spark.operators import multimodal as MM
-    from cmc_knowledge_graph_text2ttl_spark.operators.vp8l import (
-        encode_webp_lossless,
-    )
+    from fixture_writers import encode_webp_lossless
 
     docs = _docs(spark, sf_dir).select("doc_id")
 

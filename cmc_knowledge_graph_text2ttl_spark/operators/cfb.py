@@ -1,12 +1,10 @@
-"""Compound File Binary (OLE2) container — pure-stdlib reader/writer.
+"""Compound File Binary (OLE2) container — pure-stdlib reader.
 
 The storage layer under every legacy Office format (.doc/.xls/.ppt),
 [MS-CFB]. The reader walks the DIFAT → FAT → directory chain and
 serves streams from either the FAT (≥ cutoff, 512-byte sectors) or the
 mini FAT (< cutoff, 64-byte minisectors inside the root's ministream).
-The writer emits the smallest valid v3 layout (512-byte sectors,
-header-resident DIFAT) with a deterministic sector order so fixture
-bytes are reproducible.
+The fixture writer lives in the repo-root ``fixture_writers.py``.
 
 Used by :mod:`.doc_binary` for Word 97-2003 text extraction; no
 reference counterpart (the reference's Tika path consumed these
@@ -16,16 +14,14 @@ transparently, runner.py:36-115).
 from __future__ import annotations
 
 import struct
-from typing import Dict, List, Sequence, Tuple
+from typing import Dict, List
 
-__all__ = ["CfbReader", "make_cfb"]
+__all__ = ["CfbReader"]
 
 _MAGIC = b"\xd0\xcf\x11\xe0\xa1\xb1\x1a\xe1"
 _FREE = 0xFFFFFFFF
 _ENDOFCHAIN = 0xFFFFFFFE
 _FATSECT = 0xFFFFFFFD
-_SECT = 512
-_MINISECT = 64
 
 
 class CfbReader:
@@ -142,163 +138,3 @@ class CfbReader:
             if guard > len(self._fat) + 1:
                 raise ValueError("CFB FAT chain cycle")
         return bytes(out)
-
-
-def _pad(b: bytes, size: int, fill: bytes = b"\x00") -> bytes:
-    return b + fill * (size - len(b) % size if len(b) % size else 0)
-
-
-def make_cfb(streams: Sequence[Tuple[str, bytes]]) -> bytes:
-    """Minimal valid v3 container with the given root-storage streams.
-
-    Streams < 4096 bytes go through the ministream/mini FAT (the layout
-    real Word files use for small streams — exercising the reader's
-    mini path); larger ones through the FAT. Deterministic layout:
-    directory, mini FAT, ministream, then large streams, then the FAT
-    maps itself at the end.
-    """
-    small = [(n, b) for n, b in streams if len(b) < 4096]
-    large = [(n, b) for n, b in streams if len(b) >= 4096]
-
-    # ministream + mini FAT
-    ministream = bytearray()
-    minifat: List[int] = []
-    mini_start: Dict[str, int] = {}
-    for name, body in small:
-        first = len(minifat)
-        mini_start[name] = first if body else _ENDOFCHAIN
-        n_chunks = (len(body) + _MINISECT - 1) // _MINISECT
-        for i in range(n_chunks):
-            minifat.append(first + i + 1 if i + 1 < n_chunks else _ENDOFCHAIN)
-        ministream += _pad(body, _MINISECT)
-    minifat_bytes = _pad(
-        b"".join(struct.pack("<I", v) for v in minifat) or b"", _SECT, b"\xff"
-    ) if minifat else b""
-
-    # sector plan (indices before the FAT is appended):
-    #   [dir sectors][minifat sectors][ministream sectors][large streams]
-    sectors: List[bytes] = []
-
-    def add(data: bytes) -> Tuple[int, int]:
-        """Append padded data; return (first sector, sector count)."""
-        if not data:
-            return _ENDOFCHAIN, 0
-        first = len(sectors)
-        padded = _pad(data, _SECT)
-        for i in range(0, len(padded), _SECT):
-            sectors.append(padded[i : i + _SECT])
-        return first, len(padded) // _SECT
-
-    # directory needs sector numbers, so reserve its slot first and
-    # backfill: compute all layout positions in two passes
-    n_dir_entries = 1 + len(small) + len(large)
-    n_dir_sects = (n_dir_entries * 128 + _SECT - 1) // _SECT
-    dir_first = 0
-    minifat_first, n_minifat_sects = (
-        (n_dir_sects, len(minifat_bytes) // _SECT)
-        if minifat_bytes
-        else (_ENDOFCHAIN, 0)
-    )
-    mini_first = n_dir_sects + n_minifat_sects
-    n_mini_sects = (len(ministream) + _SECT - 1) // _SECT
-
-    large_first: Dict[str, int] = {}
-    cursor = mini_first + n_mini_sects
-    for name, body in large:
-        large_first[name] = cursor
-        cursor += (len(body) + _SECT - 1) // _SECT
-    n_data_sects = cursor  # sectors before the FAT
-
-    def dir_entry(
-        name: str,
-        otype: int,
-        start: int,
-        size: int,
-        child: int = _FREE,
-        right: int = _FREE,
-    ) -> bytes:
-        raw = name.encode("utf-16-le")
-        e = bytearray(128)
-        e[: len(raw)] = raw
-        struct.pack_into("<H", e, 64, len(raw) + 2)
-        e[66] = otype
-        e[67] = 1  # black
-        struct.pack_into("<III", e, 68, _FREE, right, child)
-        struct.pack_into("<I", e, 116, start)
-        struct.pack_into("<Q", e, 120, size)
-        return bytes(e)
-
-    n_streams = len(small) + len(large)
-    entries = [
-        dir_entry(
-            "Root Entry",
-            5,
-            mini_first if ministream else _ENDOFCHAIN,
-            len(ministream),
-            child=1 if n_streams else _FREE,
-        )
-    ]
-    # degenerate right-sibling chain — parseable by any tree walker
-    all_streams = [(n, mini_start[n], len(b)) for n, b in small] + [
-        (n, large_first[n], len(b)) for n, b in large
-    ]
-    for i, (name, start, size) in enumerate(all_streams):
-        right = i + 2 if i + 1 < n_streams else _FREE
-        entries.append(dir_entry(name, 2, start, size, right=right))
-    dir_bytes = _pad(b"".join(entries), _SECT)
-
-    add(dir_bytes)
-    if minifat_bytes:
-        add(minifat_bytes)
-    add(bytes(ministream))
-    for _, body in large:
-        add(body)
-    assert len(sectors) == n_data_sects
-
-    # FAT: chains for everything above + the FAT sectors themselves
-    def fat_count(total_data: int) -> int:
-        n = 0
-        while True:
-            cap = (total_data + n) <= n * (_SECT // 4)
-            if cap:
-                return n
-            n += 1
-
-    n_fat = fat_count(n_data_sects)
-    fat = [_FREE] * (n_fat * (_SECT // 4))
-
-    def chain(first: int, count: int) -> None:
-        for i in range(count):
-            fat[first + i] = first + i + 1 if i + 1 < count else _ENDOFCHAIN
-
-    chain(dir_first, n_dir_sects)
-    if minifat_bytes:
-        chain(minifat_first, n_minifat_sects)
-    chain(mini_first, n_mini_sects)
-    for name, body in large:
-        chain(large_first[name], (len(body) + _SECT - 1) // _SECT)
-    for i in range(n_fat):
-        fat[n_data_sects + i] = _FATSECT
-    fat_bytes = b"".join(struct.pack("<I", v) for v in fat)
-    for i in range(n_fat):
-        sectors.append(fat_bytes[i * _SECT : (i + 1) * _SECT])
-
-    difat = [n_data_sects + i for i in range(n_fat)] + [_FREE] * (109 - n_fat)
-    header = bytearray(512)
-    header[:8] = _MAGIC
-    struct.pack_into("<H", header, 24, 0x3E)  # minor
-    struct.pack_into("<H", header, 26, 3)  # major v3
-    struct.pack_into("<H", header, 28, 0xFFFE)  # little endian
-    struct.pack_into("<H", header, 30, 9)  # 512-byte sectors
-    struct.pack_into("<H", header, 32, 6)  # 64-byte minisectors
-    struct.pack_into("<I", header, 44, n_fat)
-    struct.pack_into("<I", header, 48, dir_first)
-    struct.pack_into("<I", header, 56, 4096)  # ministream cutoff
-    struct.pack_into(
-        "<I", header, 60, minifat_first if minifat_bytes else _ENDOFCHAIN
-    )
-    struct.pack_into("<I", header, 64, n_minifat_sects)
-    struct.pack_into("<I", header, 68, _ENDOFCHAIN)  # no DIFAT sectors
-    struct.pack_into("<I", header, 72, 0)
-    struct.pack_into("<109I", header, 76, *difat)
-    return bytes(header) + b"".join(sectors)

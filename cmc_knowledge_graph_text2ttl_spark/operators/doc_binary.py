@@ -22,18 +22,15 @@ as per-row error rows like every other unsupported input.
 
 from __future__ import annotations
 
+import html as _html
 import struct
-from typing import List, Sequence
+from typing import List
 
-from .cfb import CfbReader, make_cfb
+from .cfb import CfbReader
 
-__all__ = ["doc_to_xhtml_text", "extract_doc_text", "make_doc"]
+__all__ = ["doc_to_xhtml_text", "extract_doc_text"]
 
 _FC_COMPRESSED = 0x40000000
-
-
-def _esc(s: str) -> str:
-    return s.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;")
 
 
 def extract_doc_text(data: bytes, reader: CfbReader = None) -> str:
@@ -115,7 +112,7 @@ def doc_to_xhtml_text(data: bytes, reader: CfbReader = None) -> str:
         t = "".join(buf)
         buf.clear()
         if t.strip():
-            body.append(f"<p>{_esc(t)}</p>")
+            body.append(f"<p>{_html.escape(t, quote=False)}</p>")
 
     for ch in raw:
         o = ord(ch)
@@ -141,68 +138,3 @@ def doc_to_xhtml_text(data: bytes, reader: CfbReader = None) -> str:
             buf.append(ch)
     flush()
     return "<html><body>" + "".join(body) + "</body></html>"
-
-
-def make_doc(paragraphs: Sequence[str]) -> bytes:
-    """Deterministic Word-97 fixture bytes.
-
-    The text is split into two pieces to exercise BOTH piece encodings:
-    the first half as fCompressed cp1252 when its chars allow it, the
-    second as UTF-16LE; a throwaway Prc precedes the Pcdt so the CLX
-    walk is exercised too. fWhichTblStm is set (1Table), as Word
-    itself writes."""
-    text = "".join(p + "\r" for p in paragraphs)
-    half = len(text) // 2
-    p1, p2 = text[:half], text[half:]
-
-    def cps(s: str) -> int:
-        # Word CPs are UTF-16 CODE UNITS — a non-BMP char is TWO CPs
-        return len(s.encode("utf-16-le")) // 2
-
-    try:
-        p1_bytes = p1.encode("cp1252")
-        p1_compressed = True
-    except UnicodeEncodeError:
-        p1_bytes = p1.encode("utf-16-le")
-        p1_compressed = False
-
-    fib = bytearray(898)
-    struct.pack_into("<H", fib, 0, 0xA5EC)
-    struct.pack_into("<H", fib, 2, 0x00C1)  # nFib: Word 97
-    struct.pack_into("<H", fib, 10, 0x0200)  # fWhichTblStm → 1Table
-    struct.pack_into("<i", fib, 76, cps(text))  # ccpText, in CPs
-
-    word = bytearray(fib)
-    off1 = len(word)
-    word += p1_bytes
-    off2 = len(word)
-    if off2 % 2:  # UTF-16 pieces need an even byte offset
-        word += b"\x00"
-        off2 += 1
-    word += p2.encode("utf-16-le")
-
-    fc1 = (off1 << 1) | _FC_COMPRESSED if p1_compressed else off1
-    pieces = [(0, cps(p1), fc1), (cps(p1), cps(text), off2)]
-    plc = b"".join(
-        struct.pack("<i", cp) for cp in [p[0] for p in pieces] + [cps(text)]
-    )
-    for _, _, fc in pieces:
-        plc += struct.pack("<HIH", 0, fc, 0)
-    prc_grpprl = b"\x42\x04\x01"  # arbitrary skipped property bytes
-    clx = (
-        b"\x01"
-        + struct.pack("<h", len(prc_grpprl))
-        + prc_grpprl
-        + b"\x02"
-        + struct.pack("<I", len(plc))
-        + plc
-    )
-    table = bytes(clx)
-    struct.pack_into("<II", word, 418, 0, len(clx))  # fcClx=0, lcbClx
-    return make_cfb(
-        [
-            ("WordDocument", bytes(word)),
-            ("1Table", table),
-            ("\x05SummaryInformation", b"\x00" * 48),
-        ]
-    )

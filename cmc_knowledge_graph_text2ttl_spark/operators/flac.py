@@ -1,4 +1,4 @@
-"""FLAC codec — pure-stdlib frame decoder + fixture encoder.
+"""FLAC codec — pure-stdlib frame decoder.
 
 Real lossless audio decode for the web's second-most-common lossless
 container (after WAV): STREAMINFO + frame chain with CONSTANT /
@@ -25,10 +25,9 @@ coefficients [1], [2,-1], [3,-3,1], [4,-6,4,-1] and the Rice zigzag
 
 from __future__ import annotations
 
-import struct
-from typing import List, Sequence, Tuple
+from typing import List, Tuple
 
-__all__ = ["decode_flac", "encode_flac"]
+__all__ = ["decode_flac"]
 
 _FIXED_COEFS = ([], [1], [2, -1], [3, -3, 1], [4, -6, 4, -1])
 
@@ -304,134 +303,3 @@ def decode_flac(data: bytes) -> Tuple[int, int, int, List[int]]:
         raise ValueError("FLAC stream has no audio frames")
     inter: List[int] = [s for row in out for s in row]
     return (len(out[0]), rate, len(out), inter)
-
-
-# ---------------------------------------------------------------------------
-# Fixture encoder
-
-
-class _BitWriterMSB:
-    def __init__(self) -> None:
-        self.out = bytearray()
-        self.nbits = 0
-
-    def write(self, value: int, n: int) -> None:
-        for i in range(n - 1, -1, -1):
-            if self.nbits % 8 == 0:
-                self.out.append(0)
-            if (value >> i) & 1:
-                self.out[-1] |= 1 << (7 - (self.nbits % 8))
-            self.nbits += 1
-
-    def write_signed(self, value: int, n: int) -> None:
-        self.write(value & ((1 << n) - 1), n)
-
-    def align(self) -> None:
-        while self.nbits % 8:
-            self.write(0, 1)
-
-
-def _write_rice(bw: _BitWriterMSB, values: Sequence[int], param: int) -> None:
-    for v in values:
-        u = (abs(v) << 1) - (1 if v < 0 else 0)  # zigzag
-        q = u >> param
-        if q > 1 << 20:
-            raise ValueError("rice parameter too small for residual")
-        bw.write(0, q)
-        bw.write(1, 1)
-        bw.write(u & ((1 << param) - 1), param)
-
-
-def encode_flac(
-    samples: Sequence[int],
-    sample_rate: int,
-    channels: int = 1,
-    bps: int = 16,
-    block_size: int = 1024,
-    subframe: str = "verbatim",
-) -> bytes:
-    """Deterministic FLAC fixture: STREAMINFO + fixed-blocksize frames
-    whose subframes are all ``subframe`` ∈ {'verbatim', 'constant',
-    'fixed1', 'fixed2'} (constant requires each block constant per
-    channel; fixedN rice-codes real order-N residuals, exercising the
-    predictor + Rice paths). Interleaved ``samples`` like encode_wav.
-    CRC-8/CRC-16 are genuine, so the decoder's verification passes."""
-    if subframe not in ("verbatim", "constant", "fixed1", "fixed2"):
-        raise ValueError(f"unsupported subframe kind {subframe!r}")
-    if channels < 1 or len(samples) % channels:
-        raise ValueError("sample count must divide channels")
-    n_total = len(samples) // channels
-    si_bits = (
-        (sample_rate << 44)
-        | ((channels - 1) << 41)
-        | ((bps - 1) << 36)
-        | n_total
-    )
-    streaminfo = (
-        struct.pack(">HH", block_size, block_size)
-        + b"\x00\x00\x00" * 2  # min/max frame size unknown
-        + si_bits.to_bytes(8, "big")
-        + b"\x00" * 16
-    )
-    out = bytearray(b"fLaC")
-    out += bytes([0x80]) + len(streaminfo).to_bytes(3, "big") + streaminfo
-    frame_idx = 0
-    for start in range(0, n_total, block_size):
-        nb = min(block_size, n_total - start)
-        chans = [
-            [samples[(start + i) * channels + c] for i in range(nb)]
-            for c in range(channels)
-        ]
-        bw = _BitWriterMSB()
-        bw.write(0x3FFE, 14)
-        bw.write(0, 1)  # reserved
-        bw.write(0, 1)  # fixed blocksize
-        bw.write(7, 4)  # blocksize: 16-bit follows
-        bw.write(9 if sample_rate == 44100 else 13, 4)
-        bw.write(channels - 1, 4)  # independent channels
-        bw.write({8: 1, 12: 2, 16: 4, 20: 5, 24: 6}[bps], 3)
-        bw.write(0, 1)  # reserved
-        if frame_idx < 0x80:
-            bw.write(frame_idx, 8)  # UTF-8 single byte
-        else:
-            bw.write(0xC0 | (frame_idx >> 6), 8)
-            bw.write(0x80 | (frame_idx & 0x3F), 8)
-        bw.write(nb - 1, 16)  # blocksize follow-up (code 7)
-        if sample_rate != 44100:
-            bw.write(sample_rate, 16)  # rate follow-up (code 13, Hz)
-        hdr = bytes(bw.out)
-        bw.write(_crc8(hdr), 8)
-        for ch in chans:
-            bw.write(0, 1)  # padding
-            if subframe == "constant" and len(set(ch)) == 1:
-                bw.write(0, 6)
-                bw.write(0, 1)  # no wasted bits
-                bw.write_signed(ch[0], bps)
-            elif subframe in ("fixed1", "fixed2") and nb > int(subframe[-1]):
-                order = int(subframe[-1])
-                bw.write(8 + order, 6)
-                bw.write(0, 1)
-                for w in ch[:order]:
-                    bw.write_signed(w, bps)
-                coefs = _FIXED_COEFS[order]
-                resid = [
-                    ch[i] - sum(c * ch[i - 1 - j] for j, c in enumerate(coefs))
-                    for i in range(order, nb)
-                ]
-                bw.write(0, 2)  # rice, 4-bit params
-                bw.write(0, 4)  # partition order 0
-                mx = max((abs(r) for r in resid), default=0)
-                param = min(14, max(1, (2 * mx + 1).bit_length()))
-                bw.write(param, 4)
-                _write_rice(bw, resid, param)
-            else:
-                bw.write(1, 6)  # verbatim
-                bw.write(0, 1)
-                for s in ch:
-                    bw.write_signed(s, bps)
-        bw.align()
-        frame = bytes(bw.out)
-        bw.write(_crc16(frame), 16)
-        out += bytes(bw.out)
-        frame_idx += 1
-    return bytes(out)

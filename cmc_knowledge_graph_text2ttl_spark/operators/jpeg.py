@@ -16,31 +16,19 @@ H/V sampling factors up to 2
 (4:4:4, 4:2:2, 4:2:0). Arithmetic coding, hierarchical and 12-bit
 raise ``NotImplementedError``.
 
-The encoder is the deterministic fixture counterpart: it writes
-baseline JPEGs from ALREADY-QUANTIZED coefficient blocks using the
-JPEG Annex K example Huffman tables, which lets tests verify the full
-entropy/zigzag/dequant path against an independent IDCT, and lets the
-gate use DC-only blocks whose decoded pixels are closed-form
-(quantizer 8 → a solid block of exactly ``dc + 128``). The progressive
-encoder emits a genuine 4-scan successive-approximation layout (DC
-first Al=1 → DC refine → AC first Al=1 with EOB runs → AC refine) over
-a fixed-length Huffman table (Annex K has no EOBn>1 symbols), and is
-verified bit-exact against the baseline decode of the same blocks.
+The deterministic fixture encoders (baseline and progressive, from
+already-quantized coefficient blocks) live in the repo-root
+``fixture_writers.py``.
 """
 
 from __future__ import annotations
 
 import struct
-from typing import Dict, List, Optional, Tuple
+from typing import Dict, List, Tuple
 
 import numpy as np
 
-__all__ = [
-    "decode_jpeg",
-    "encode_jpeg_blocks",
-    "encode_jpeg_cmyk",
-    "ZIGZAG",
-]
+__all__ = ["decode_jpeg", "ZIGZAG"]
 
 # zigzag scan order: index i in the stream → position ZIGZAG[i] (row*8+col)
 ZIGZAG = [
@@ -50,26 +38,6 @@ ZIGZAG = [
     58, 59, 52, 45, 38, 31, 39, 46, 53, 60, 61, 54, 47, 55, 62, 63,
 ]
 
-# JPEG Annex K example tables (the spec's own public constants)
-_DC_LUM_COUNTS = [0, 1, 5, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0, 0, 0]
-_DC_LUM_SYMBOLS = list(range(12))
-_AC_LUM_COUNTS = [0, 2, 1, 3, 3, 2, 4, 3, 5, 5, 4, 4, 0, 0, 1, 0x7D]
-_AC_LUM_SYMBOLS = [
-    0x01, 0x02, 0x03, 0x00, 0x04, 0x11, 0x05, 0x12, 0x21, 0x31, 0x41, 0x06,
-    0x13, 0x51, 0x61, 0x07, 0x22, 0x71, 0x14, 0x32, 0x81, 0x91, 0xA1, 0x08,
-    0x23, 0x42, 0xB1, 0xC1, 0x15, 0x52, 0xD1, 0xF0, 0x24, 0x33, 0x62, 0x72,
-    0x82, 0x09, 0x0A, 0x16, 0x17, 0x18, 0x19, 0x1A, 0x25, 0x26, 0x27, 0x28,
-    0x29, 0x2A, 0x34, 0x35, 0x36, 0x37, 0x38, 0x39, 0x3A, 0x43, 0x44, 0x45,
-    0x46, 0x47, 0x48, 0x49, 0x4A, 0x53, 0x54, 0x55, 0x56, 0x57, 0x58, 0x59,
-    0x5A, 0x63, 0x64, 0x65, 0x66, 0x67, 0x68, 0x69, 0x6A, 0x73, 0x74, 0x75,
-    0x76, 0x77, 0x78, 0x79, 0x7A, 0x83, 0x84, 0x85, 0x86, 0x87, 0x88, 0x89,
-    0x8A, 0x92, 0x93, 0x94, 0x95, 0x96, 0x97, 0x98, 0x99, 0x9A, 0xA2, 0xA3,
-    0xA4, 0xA5, 0xA6, 0xA7, 0xA8, 0xA9, 0xAA, 0xB2, 0xB3, 0xB4, 0xB5, 0xB6,
-    0xB7, 0xB8, 0xB9, 0xBA, 0xC2, 0xC3, 0xC4, 0xC5, 0xC6, 0xC7, 0xC8, 0xC9,
-    0xCA, 0xD2, 0xD3, 0xD4, 0xD5, 0xD6, 0xD7, 0xD8, 0xD9, 0xDA, 0xE1, 0xE2,
-    0xE3, 0xE4, 0xE5, 0xE6, 0xE7, 0xE8, 0xE9, 0xEA, 0xF1, 0xF2, 0xF3, 0xF4,
-    0xF5, 0xF6, 0xF7, 0xF8, 0xF9, 0xFA,
-]
 
 # 8x8 DCT basis matrix: C[k, x] = c(k)/2 * cos((2x+1)kπ/16)
 _C = np.zeros((8, 8))
@@ -96,14 +64,6 @@ def _build_huffman(counts: List[int], symbols: List[int]) -> Dict[Tuple[int, int
             k += 1
         code <<= 1
     return table
-
-
-def _huffman_codes(counts: List[int], symbols: List[int]) -> Dict[int, Tuple[int, int]]:
-    """symbol → (code, bit-length), inverse of :func:`_build_huffman`."""
-    return {
-        sym: (code, length)
-        for (length, code), sym in _build_huffman(counts, symbols).items()
-    }
 
 
 class _BitReader:
@@ -619,389 +579,3 @@ def _reconstruct_progressive(comps, qt, w, h,
                 )
         c["plane"] = plane
     return _finish_planes(comps, w, h, hmax, vmax, transform)
-
-
-# ---------------------------------------------------------------------------
-# Fixture encoder: baseline JPEG from already-quantized coefficient blocks
-
-
-class _BitWriter:
-    def __init__(self) -> None:
-        self.buf = bytearray()
-        self.acc = 0
-        self.nbits = 0
-
-    def write(self, code: int, length: int) -> None:
-        for i in range(length - 1, -1, -1):
-            self.acc = (self.acc << 1) | ((code >> i) & 1)
-            self.nbits += 1
-            if self.nbits == 8:
-                self.buf.append(self.acc)
-                if self.acc == 0xFF:
-                    self.buf.append(0x00)  # byte stuffing
-                self.acc = 0
-                self.nbits = 0
-
-    def flush(self) -> bytes:
-        if self.nbits:
-            self.acc <<= 8 - self.nbits
-            self.acc |= (1 << (8 - self.nbits)) - 1  # pad with 1s per spec
-            self.buf.append(self.acc)
-            if self.acc == 0xFF:
-                self.buf.append(0x00)
-        return bytes(self.buf)
-
-
-def _category(v: int) -> int:
-    return abs(v).bit_length()
-
-
-def _assemble_jpeg(
-    width: int, height: int, q: List[int], comps_sof: bytes,
-    sos_comps: bytes, scan: bytes, adobe_transform: Optional[int] = None,
-) -> bytes:
-    """Shared segment framing for all fixture encoders: DQT (zigzag,
-    table 0) + SOF0 + the Annex K DHT pair + SOS + scan + EOI."""
-
-    def seg(marker: int, body: bytes) -> bytes:
-        return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
-
-    zz_q = bytes(q[ZIGZAG[i]] for i in range(64))
-    ncomp = len(comps_sof) // 3
-    app14 = b""
-    if adobe_transform is not None:
-        app14 = seg(
-            0xEE, b"Adobe" + b"\x00\x64\x00\x00\x00\x00"
-            + bytes([adobe_transform])
-        )
-    return (
-        b"\xff\xd8"
-        + app14
-        + seg(0xDB, b"\x00" + zz_q)
-        + seg(0xC0, struct.pack(">BHHB", 8, height, width, ncomp) + comps_sof)
-        + seg(
-            0xC4,
-            b"\x00" + bytes(_DC_LUM_COUNTS) + bytes(_DC_LUM_SYMBOLS)
-            + b"\x10" + bytes(_AC_LUM_COUNTS) + bytes(_AC_LUM_SYMBOLS),
-        )
-        + seg(0xDA, sos_comps)
-        + scan
-        + b"\xff\xd9"
-    )
-
-
-def _write_block(bwr: "_BitWriter", blk: List[int], pred: int,
-                 dc_codes, ac_codes) -> int:
-    """Entropy-code one quantized block; returns the new DC predictor."""
-    diff = blk[0] - pred
-    t = _category(diff)
-    code, length = dc_codes[t]
-    bwr.write(code, length)
-    if t:
-        mag = diff if diff >= 0 else diff + (1 << t) - 1
-        bwr.write(mag & ((1 << t) - 1), t)
-    run = 0
-    for i in range(1, 64):
-        v = blk[ZIGZAG[i]]
-        if v == 0:
-            run += 1
-            continue
-        while run > 15:
-            code, length = ac_codes[0xF0]
-            bwr.write(code, length)
-            run -= 16
-        s = _category(v)
-        code, length = ac_codes[(run << 4) | s]
-        bwr.write(code, length)
-        mag = v if v >= 0 else v + (1 << s) - 1
-        bwr.write(mag & ((1 << s) - 1), s)
-        run = 0
-    if run > 0:
-        # EOB only when trailing zeros remain — a coded coefficient 63
-        # ends the block WITHOUT an EOB (decoders stop at k == 64 and
-        # would misread an extra EOB as the next DC symbol)
-        code, length = ac_codes[0x00]
-        bwr.write(code, length)
-    return blk[0]
-
-
-def encode_jpeg_blocks(
-    width: int,
-    height: int,
-    blocks: List[List[int]],
-    quant: Optional[List[int]] = None,
-) -> bytes:
-    """Deterministic grayscale baseline JPEG from quantized coefficient
-    blocks (natural order, 64 ints each; blocks row-major over the
-    ceil(w/8) × ceil(h/8) grid). Default quantizer is all-8s, so a
-    DC-only block decodes to the solid value ``dc + 128`` exactly."""
-    bw, bh = (width + 7) // 8, (height + 7) // 8
-    if len(blocks) != bw * bh:
-        raise ValueError(f"need {bw * bh} blocks, got {len(blocks)}")
-    q = quant if quant is not None else [8] * 64
-    dc_codes = _huffman_codes(_DC_LUM_COUNTS, _DC_LUM_SYMBOLS)
-    ac_codes = _huffman_codes(_AC_LUM_COUNTS, _AC_LUM_SYMBOLS)
-    bwr = _BitWriter()
-    pred = 0
-    for blk in blocks:
-        pred = _write_block(bwr, blk, pred, dc_codes, ac_codes)
-    scan = bwr.flush()
-    return _assemble_jpeg(
-        width, height, q, b"\x01\x11\x00", b"\x01\x01\x00\x00\x3f\x00", scan
-    )
-
-
-def encode_jpeg_cmyk(
-    width: int,
-    height: int,
-    blocks: List[List[List[int]]],
-    quant: Optional[List[int]] = None,
-    ycck: bool = False,
-) -> bytes:
-    """Deterministic 4-component 4:4:4 baseline JPEG (Adobe APP14):
-    ``blocks`` is four per-component block lists; ``ycck=True`` marks
-    the stored planes as YCCK (transform 2), else direct CMYK
-    (transform 0) — exercising the decoder's 4-plane packing and the
-    YCCK inversion path."""
-    if len(blocks) != 4:
-        raise ValueError("need exactly 4 component block lists")
-    bw, bh = (width + 7) // 8, (height + 7) // 8
-    for ci, blks in enumerate(blocks):
-        if len(blks) != bw * bh:
-            raise ValueError(f"component {ci}: need {bw * bh} blocks")
-    q = quant if quant is not None else [8] * 64
-    dc_codes = _huffman_codes(_DC_LUM_COUNTS, _DC_LUM_SYMBOLS)
-    ac_codes = _huffman_codes(_AC_LUM_COUNTS, _AC_LUM_SYMBOLS)
-    bwr = _BitWriter()
-    preds = [0, 0, 0, 0]
-    for i in range(bw * bh):
-        for ci in range(4):
-            preds[ci] = _write_block(bwr, blocks[ci][i], preds[ci], dc_codes, ac_codes)
-    scan = bwr.flush()
-    return _assemble_jpeg(
-        width, height, q,
-        b"\x01\x11\x00\x02\x11\x00\x03\x11\x00\x04\x11\x00",
-        b"\x04\x01\x00\x02\x00\x03\x00\x04\x00\x00\x3f\x00", scan,
-        adobe_transform=2 if ycck else 0,
-    )
-
-
-# ---------------------------------------------------------------------------
-# Progressive fixture encoders. Annex K has no EOBn>1 symbols, so these
-# use a fixed-length table pair covering EOB0-14, ZRL and all (run, size
-# <= 10) codes — any valid DHT works, the decoder reads it from the
-# stream. The scan script is the classic 4-scan successive-approximation
-# layout: DC first (Al=1) -> DC refine -> AC first (Al=1, EOB runs) ->
-# AC refine (correction bits, libjpeg-style run buffering).
-
-_PROG_DC_COUNTS = [0, 0, 0, 12] + [0] * 12  # 12 symbols, all length 4
-_PROG_DC_SYMBOLS = list(range(12))
-_PROG_AC_COUNTS = [0] * 7 + [176] + [0] * 8  # 176 symbols, all length 8
-_PROG_AC_SYMBOLS = (
-    [r << 4 for r in range(15)]  # EOB0..EOB14
-    + [0xF0]  # ZRL
-    + [(r << 4) | s for r in range(16) for s in range(1, 11)]
-)
-
-
-def _sos_seg(comps: List[Tuple[int, int, int]], ss: int, se: int,
-             ah: int, al: int) -> bytes:
-    body = bytes([len(comps)])
-    for cid, td, ta in comps:
-        body += bytes([cid, (td << 4) | ta])
-    body += bytes([ss, se, (ah << 4) | al])
-    return bytes([0xFF, 0xDA]) + struct.pack(">H", len(body) + 2) + body
-
-
-def _write_dc_first_val(bwr, v: int, pred: int, dc_codes) -> int:
-    diff = v - pred
-    t = _category(diff)
-    if t > 11:
-        raise ValueError("DC difference too large for fixture table")
-    code, length = dc_codes[t]
-    bwr.write(code, length)
-    if t:
-        mag = diff if diff >= 0 else diff + (1 << t) - 1
-        bwr.write(mag & ((1 << t) - 1), t)
-    return v
-
-
-class _AcFirstState:
-    def __init__(self) -> None:
-        self.eobrun = 0
-
-
-def _flush_ac_first_eobrun(bwr, ac_codes, st: "_AcFirstState") -> None:
-    if st.eobrun > 0:
-        n = st.eobrun.bit_length() - 1
-        code, length = ac_codes[n << 4]
-        bwr.write(code, length)
-        if n:
-            bwr.write(st.eobrun - (1 << n), n)
-        st.eobrun = 0
-
-
-def _write_block_ac_first(bwr, blk, ss, se, al, ac_codes,
-                          st: "_AcFirstState") -> None:
-    vals = []
-    for k in range(ss, se + 1):
-        c = blk[ZIGZAG[k]]
-        m = abs(c) >> al
-        vals.append(m if c >= 0 else -m)
-    if not any(vals):
-        st.eobrun += 1
-        if st.eobrun == 0x7FFF:
-            _flush_ac_first_eobrun(bwr, ac_codes, st)
-        return
-    last_nz = max(i for i, v in enumerate(vals) if v)
-    _flush_ac_first_eobrun(bwr, ac_codes, st)
-    run = 0
-    for v in vals[: last_nz + 1]:
-        if v == 0:
-            run += 1
-            continue
-        while run > 15:
-            code, length = ac_codes[0xF0]
-            bwr.write(code, length)
-            run -= 16
-        s = _category(v)
-        if s > 10:
-            raise ValueError("AC magnitude too large for fixture table")
-        code, length = ac_codes[(run << 4) | s]
-        bwr.write(code, length)
-        mag = v if v >= 0 else v + (1 << s) - 1
-        bwr.write(mag & ((1 << s) - 1), s)
-        run = 0
-    if last_nz < se - ss:  # trailing zeros -> this block starts an EOB run
-        st.eobrun = 1
-
-
-class _AcRefineState:
-    def __init__(self) -> None:
-        self.eobrun = 0
-        self.be: List[int] = []  # correction bits tied to the pending run
-
-
-def _flush_ac_refine_eobrun(bwr, ac_codes, st: "_AcRefineState") -> None:
-    if st.eobrun > 0:
-        n = st.eobrun.bit_length() - 1
-        code, length = ac_codes[n << 4]
-        bwr.write(code, length)
-        if n:
-            bwr.write(st.eobrun - (1 << n), n)
-        st.eobrun = 0
-    for b in st.be:
-        bwr.write(b, 1)
-    st.be = []
-
-
-def _write_block_ac_refine(bwr, blk, ss, se, al, ac_codes,
-                           st: "_AcRefineState") -> None:
-    """libjpeg-shaped refinement pass: ZRLs only inside the
-    newly-significant span (folded into the EOB run past it), correction
-    bits buffered and flushed with the symbol they follow."""
-    absv = []
-    eob_pos = ss - 1  # index of the LAST newly-significant coefficient
-    for k in range(ss, se + 1):
-        t = abs(blk[ZIGZAG[k]]) >> al
-        absv.append(t)
-        if t == 1:
-            eob_pos = k
-    r = 0
-    br: List[int] = []  # this block's pending correction bits
-    for k in range(ss, se + 1):
-        temp = absv[k - ss]
-        if temp == 0:
-            r += 1
-            continue
-        while r > 15 and k <= eob_pos:
-            _flush_ac_refine_eobrun(bwr, ac_codes, st)
-            code, length = ac_codes[0xF0]
-            bwr.write(code, length)
-            r -= 16
-            for b in br:
-                bwr.write(b, 1)
-            br = []
-        if temp > 1:
-            br.append(temp & 1)
-            continue
-        _flush_ac_refine_eobrun(bwr, ac_codes, st)
-        code, length = ac_codes[(r << 4) | 1]
-        bwr.write(code, length)
-        bwr.write(1 if blk[ZIGZAG[k]] >= 0 else 0, 1)
-        for b in br:
-            bwr.write(b, 1)
-        br = []
-        r = 0
-    if r > 0 or br:
-        st.eobrun += 1
-        st.be.extend(br)
-        if st.eobrun == 0x7FFF:
-            _flush_ac_refine_eobrun(bwr, ac_codes, st)
-
-
-def _assemble_progressive(width, height, q, comps_sof, scans) -> bytes:
-    """SOI + DQT + SOF2 + the fixture DHT pair + the scan list + EOI."""
-
-    def seg(marker: int, body: bytes) -> bytes:
-        return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
-
-    zz_q = bytes(q[ZIGZAG[i]] for i in range(64))
-    ncomp = len(comps_sof) // 3
-    out = bytearray(b"\xff\xd8")
-    out += seg(0xDB, b"\x00" + zz_q)
-    out += seg(0xC2, struct.pack(">BHHB", 8, height, width, ncomp) + comps_sof)
-    out += seg(
-        0xC4,
-        b"\x00" + bytes(_PROG_DC_COUNTS) + bytes(_PROG_DC_SYMBOLS)
-        + b"\x10" + bytes(_PROG_AC_COUNTS) + bytes(_PROG_AC_SYMBOLS),
-    )
-    for sos, scan in scans:
-        out += sos + scan
-    out += b"\xff\xd9"
-    return bytes(out)
-
-
-def encode_jpeg_progressive(
-    width: int,
-    height: int,
-    blocks: List[List[int]],
-    quant: Optional[List[int]] = None,
-) -> bytes:
-    """Deterministic grayscale PROGRESSIVE JPEG from the same quantized
-    coefficient blocks :func:`encode_jpeg_blocks` takes — decodes to
-    bit-identical pixels (tested), but through the SOF2 multi-scan
-    path."""
-    bw, bh = (width + 7) // 8, (height + 7) // 8
-    if len(blocks) != bw * bh:
-        raise ValueError(f"need {bw * bh} blocks, got {len(blocks)}")
-    q = quant if quant is not None else [8] * 64
-    dc_codes = _huffman_codes(_PROG_DC_COUNTS, _PROG_DC_SYMBOLS)
-    ac_codes = _huffman_codes(_PROG_AC_COUNTS, _PROG_AC_SYMBOLS)
-    scans = []
-    # scan 1: DC first, Al=1
-    bwr = _BitWriter()
-    pred = 0
-    for blk in blocks:
-        pred = _write_dc_first_val(bwr, blk[0] >> 1, pred, dc_codes)
-    scans.append((_sos_seg([(1, 0, 0)], 0, 0, 0, 1), bwr.flush()))
-    # scan 2: DC refinement, Ah=1 Al=0
-    bwr = _BitWriter()
-    for blk in blocks:
-        bwr.write(blk[0] & 1, 1)
-    scans.append((_sos_seg([(1, 0, 0)], 0, 0, 1, 0), bwr.flush()))
-    # scan 3: AC first, band 1-63, Al=1
-    bwr = _BitWriter()
-    st1 = _AcFirstState()
-    for blk in blocks:
-        _write_block_ac_first(bwr, blk, 1, 63, 1, ac_codes, st1)
-    _flush_ac_first_eobrun(bwr, ac_codes, st1)
-    scans.append((_sos_seg([(1, 0, 0)], 1, 63, 0, 1), bwr.flush()))
-    # scan 4: AC refinement, band 1-63, Ah=1 Al=0
-    bwr = _BitWriter()
-    st2 = _AcRefineState()
-    for blk in blocks:
-        _write_block_ac_refine(bwr, blk, 1, 63, 0, ac_codes, st2)
-    _flush_ac_refine_eobrun(bwr, ac_codes, st2)
-    scans.append((_sos_seg([(1, 0, 0)], 1, 63, 1, 0), bwr.flush()))
-    return _assemble_progressive(width, height, q, b"\x01\x11\x00", scans)

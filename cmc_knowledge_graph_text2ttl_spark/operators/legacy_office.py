@@ -24,21 +24,13 @@ Both raise ``ValueError`` on malformed input — contained per-row by
 
 from __future__ import annotations
 
+import html as _html
 import struct
-from typing import Dict, List, Sequence, Tuple, Union
+from typing import Dict, List, Tuple
 
-from .cfb import CfbReader, make_cfb
+from .cfb import CfbReader
 
-__all__ = [
-    "xls_to_xhtml_text",
-    "ppt_to_xhtml_text",
-    "make_xls",
-    "make_ppt",
-]
-
-
-def _esc(s: str) -> str:
-    return s.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;")
+__all__ = ["xls_to_xhtml_text", "ppt_to_xhtml_text"]
 
 
 def _num(v: float) -> str:
@@ -51,7 +43,6 @@ def _num(v: float) -> str:
 # ---------------------------------------------------------------------------
 # BIFF8 (.xls)
 
-_BOF = 0x0809
 _EOF = 0x000A
 _BOUNDSHEET = 0x0085
 _SST = 0x00FC
@@ -257,11 +248,12 @@ def xls_to_xhtml_text(data: bytes, reader: CfbReader = None) -> str:
             rows_html.append(
                 "<tr>"
                 + "".join(
-                    f"<td>{_esc(row.get(c, ''))}</td>" for c in range(width)
+                    f"<td>{_html.escape(row.get(c, ''), quote=False)}</td>"
+                    for c in range(width)
                 )
                 + "</tr>"
             )
-        parts.append(f"<h1>{_esc(name)}</h1>")
+        parts.append(f"<h1>{_html.escape(name, quote=False)}</h1>")
         parts.append("<table>" + "".join(rows_html) + "</table>")
     return "<html><body>" + "".join(parts) + "</body></html>"
 
@@ -306,145 +298,5 @@ def ppt_to_xhtml_text(data: bytes, reader: CfbReader = None) -> str:
     for atom in atoms:
         for line in atom.replace("\x0b", "\n").split("\r"):
             if line.strip():
-                body.append(f"<p>{_esc(line)}</p>")
+                body.append(f"<p>{_html.escape(line, quote=False)}</p>")
     return "<html><body>" + "".join(body) + "</body></html>"
-
-
-# ---------------------------------------------------------------------------
-# Deterministic fixture writers
-
-Cell = Union[str, int, float, None]
-
-
-def _xl_unicode(s: str, short: bool = False) -> bytes:
-    """XLUnicodeString(8-bit cch when short); UTF-16 iff any non-latin1."""
-    high = any(ord(c) > 0xFF for c in s)
-    enc = s.encode("utf-16-le") if high else s.encode("latin-1")
-    head = (
-        bytes([len(s)]) if short else struct.pack("<H", len(s))
-    ) + bytes([0x01 if high else 0x00])
-    return head + enc
-
-
-def _rec(rid: int, body: bytes) -> bytes:
-    return struct.pack("<HH", rid, len(body)) + body
-
-
-def make_xls(
-    sheets: Sequence[Tuple[str, Sequence[Sequence[Cell]]]],
-    sst_continue_split: bool = False,
-) -> bytes:
-    """Workbook bytes from [(sheet_name, rows)]. Strings go through the
-    SST (LABELSST cells), ints < 2**29 as RK, other numbers as NUMBER;
-    ``None`` leaves a column gap. With ``sst_continue_split`` the SST
-    is split into a CONTINUE record between two strings — exercising
-    the reader's continuation path."""
-    shared: List[str] = []
-    shared_idx: Dict[str, int] = {}
-
-    def sref(s: str) -> int:
-        if s not in shared_idx:
-            shared_idx[s] = len(shared)
-            shared.append(s)
-        return shared_idx[s]
-
-    sheet_recs: List[bytes] = []
-    for _name, rows in sheets:
-        recs = [_rec(_BOF, struct.pack("<HHHHII", 0x0600, 0x0010, 0, 0, 0, 0))]
-        for rno, row in enumerate(rows):
-            for cno, v in enumerate(row):
-                if v is None:
-                    continue
-                if isinstance(v, str):
-                    recs.append(
-                        _rec(
-                            _LABELSST,
-                            struct.pack("<HHHI", rno, cno, 0, sref(v)),
-                        )
-                    )
-                elif isinstance(v, bool):
-                    recs.append(
-                        _rec(
-                            _BOOLERR,
-                            struct.pack("<HHH", rno, cno, 0)
-                            + bytes([1 if v else 0, 0]),
-                        )
-                    )
-                elif isinstance(v, int) and -(1 << 29) <= v < (1 << 29):
-                    recs.append(
-                        _rec(
-                            _RK,
-                            struct.pack(
-                                "<HHHI",
-                                rno,
-                                cno,
-                                0,
-                                # fInt is bit 1 per [MS-XLS] 2.5.276
-                                ((v & ((1 << 30) - 1)) << 2) | 0x02,
-                            ),
-                        )
-                    )
-                else:
-                    recs.append(
-                        _rec(
-                            _NUMBER,
-                            struct.pack("<HHH", rno, cno, 0)
-                            + struct.pack("<d", float(v)),
-                        )
-                    )
-        recs.append(_rec(_EOF, b""))
-        sheet_recs.append(b"".join(recs))
-
-    # global part: BOF, BOUNDSHEETs (positions backfilled), SST, EOF
-    total = len(shared)
-    sst_body = struct.pack("<ii", total, total)
-    strings = [_xl_unicode(s) for s in shared]
-    if sst_continue_split and len(strings) > 1:
-        first, rest = strings[: len(strings) // 2], strings[len(strings) // 2 :]
-        sst = _rec(_SST, sst_body + b"".join(first)) + _rec(
-            _CONTINUE, b"".join(rest)
-        )
-    else:
-        sst = _rec(_SST, sst_body + b"".join(strings))
-
-    bof = _rec(_BOF, struct.pack("<HHHHII", 0x0600, 0x0005, 0, 0, 0, 0))
-    # build with placeholder positions, then patch
-    bsheets = [
-        _rec(
-            _BOUNDSHEET,
-            struct.pack("<IH", 0, 0) + _xl_unicode(name, short=True),
-        )
-        for name, _ in sheets
-    ]
-    globals_part = bof + b"".join(bsheets) + sst + _rec(_EOF, b"")
-    # sheet offsets
-    offsets = []
-    cur = len(globals_part)
-    for sr in sheet_recs:
-        offsets.append(cur)
-        cur += len(sr)
-    # patch BOUNDSHEET lbPlyPos fields
-    out = bytearray(globals_part + b"".join(sheet_recs))
-    pos = len(bof)
-    for (name, _), off in zip(sheets, offsets):
-        struct.pack_into("<I", out, pos + 4, off)  # lbPlyPos in the body
-        pos += 4 + 6 + len(_xl_unicode(name, short=True))
-    return make_cfb([("Workbook", bytes(out))])
-
-
-def make_ppt(texts: Sequence[str]) -> bytes:
-    """PowerPoint Document bytes: one container holding one text atom
-    per entry — UTF-16 TextCharsAtom when needed, else TextBytesAtom
-    (paragraphs inside an entry separated by CR, as PowerPoint
-    stores them)."""
-
-    def atom(s: str) -> bytes:
-        if any(ord(c) > 0xFF for c in s):
-            body = s.encode("utf-16-le")
-            return struct.pack("<HHI", 0x0000, _TEXTCHARS, len(body)) + body
-        body = s.encode("cp1252")
-        return struct.pack("<HHI", 0x0000, _TEXTBYTES, len(body)) + body
-
-    inner = b"".join(atom(t) for t in texts)
-    container = struct.pack("<HHI", 0x000F, 0x03E8, len(inner)) + inner
-    return make_cfb([("PowerPoint Document", container), ("Current User", b"\x00" * 24)])

@@ -10,8 +10,8 @@ partitioning, dispatch. Codec support is pure-Python/stdlib:
   scanline unfiltering, 8-bit gray/RGB/RGBA) — no external codec
   library; other formats raise with a clear message and the
   ``extract_features`` stage degrades to a marker feature;
-* ``encode_png`` / ``encode_gif_header`` / ``encode_jpeg_header`` build
-  deterministic fixtures for tests and the oracle gate.
+* the deterministic fixture encoders (PNG, GIF, BMP, TIFF, WAV, ...)
+  live in the repo-root ``fixture_writers.py``.
 
 Design point for 100 TB of media: bytes stay in the `binary` column until
 the LAST possible stage; metadata-only operations (sniff, size, group)
@@ -27,7 +27,7 @@ import hashlib
 import re
 import struct
 import zlib
-from typing import Callable, List, Optional, Sequence, Tuple
+from typing import Callable, List, Optional, Tuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
@@ -306,115 +306,6 @@ def _header_facts(
         yield (str(mid),) + tuple(facts.get(k) for k in keys)
 
     return map_rows(df.select(id_col, blob_col), schema, lambda: row_fn)
-
-
-def encode_jpeg_exif(
-    width: int,
-    height: int,
-    orientation: int = 1,
-    make: str = "",
-    model: str = "",
-    taken_at: str = "",
-    gps: Optional[Tuple[str, str]] = None,
-) -> bytes:
-    """Minimal JFIF stream: APP1 EXIF (IFD0 with orientation/make/
-    model + an ExifIFD holding DateTime, plus a GPS IFD when ``gps``
-    is a (lat_ref, lon_ref) pair) + an SOF0 with the dims — the
-    deterministic fixture counterpart of :func:`parse_exif` and
-    :func:`scrub_exif_gps`."""
-    entries = []  # (tag, type, count, value-bytes or int)
-    tail = bytearray()
-
-    def ascii_entry(tag: int, s: str) -> None:
-        raw = s.encode("latin-1") + b"\x00"
-        if len(raw) <= 4:
-            entries.append((tag, 2, len(raw), raw + b"\x00" * (4 - len(raw))))
-        else:
-            entries.append((tag, 2, len(raw), raw))
-
-    entries.append((274, 3, 1, struct.pack("<HH", orientation, 0)))
-    if make:
-        ascii_entry(271, make)
-    if model:
-        ascii_entry(272, model)
-    n0 = len(entries) + 1 + (1 if gps else 0)  # + pointer entries
-    # IFD0 layout: header(8) + count(2) + 12*n0 + next(4), then out-of-line
-    # values, then the Exif sub-IFD (then the GPS IFD)
-    value_off = 8 + 2 + 12 * n0 + 4
-    fixed: List[bytes] = []
-    for tag, ftype, count, val in entries:
-        if isinstance(val, bytes) and len(val) > 4:
-            fixed.append(
-                struct.pack("<HHII", tag, ftype, count, value_off + len(tail))
-            )
-            tail.extend(val)
-        else:
-            fixed.append(struct.pack("<HHI", tag, ftype, count) + val)
-    exif_ifd_off = value_off + len(tail)
-    fixed.append(struct.pack("<HHII", 0x8769, 4, 1, exif_ifd_off))
-    sub_entries = []
-    sub_tail = bytearray()
-    if taken_at:
-        raw = taken_at.encode("latin-1") + b"\x00"
-        sub_value_off = exif_ifd_off + 2 + 12 + 4
-        if len(raw) <= 4:
-            sub_entries.append(
-                struct.pack("<HHI", 306, 2, len(raw))
-                + raw
-                + b"\x00" * (4 - len(raw))
-            )
-        else:
-            sub_entries.append(struct.pack("<HHII", 306, 2, len(raw), sub_value_off))
-            sub_tail.extend(raw)
-    sub_ifd = (
-        struct.pack("<H", len(sub_entries))
-        + b"".join(sub_entries)
-        + b"\x00\x00\x00\x00"
-        + bytes(sub_tail)
-    )
-    gps_ifd = b""
-    if gps:
-        gps_ifd_off = exif_ifd_off + len(sub_ifd)
-        fixed.append(struct.pack("<HHII", 0x8825, 4, 1, gps_ifd_off))
-        lat_ref, lon_ref = gps
-
-        def gps_ascii(tag: int, s: str) -> bytes:
-            raw = (s.encode("latin-1") + b"\x00")[:4]
-            return (
-                struct.pack("<HHI", tag, 2, len(raw))
-                + raw
-                + b"\x00" * (4 - len(raw))
-            )
-
-        gentries = [gps_ascii(1, lat_ref), gps_ascii(3, lon_ref)]
-        gps_ifd = (
-            struct.pack("<H", len(gentries))
-            + b"".join(gentries)
-            + b"\x00\x00\x00\x00"
-        )
-    # TIFF6 requires entries ascending by TAG — sorting the packed
-    # little-endian bytes puts 0x8825 before 0x8769 (low byte first)
-    fixed.sort(key=lambda e: struct.unpack("<H", e[:2])[0])
-    tiff = (
-        b"II*\x00"
-        + struct.pack("<I", 8)
-        + struct.pack("<H", n0)
-        + b"".join(fixed)
-        + b"\x00\x00\x00\x00"
-        + bytes(tail)
-        + sub_ifd
-        + gps_ifd
-    )
-    app1_body = b"Exif\x00\x00" + tiff
-    app1 = b"\xff\xe1" + struct.pack(">H", len(app1_body) + 2) + app1_body
-    sof0 = (
-        b"\xff\xc0"
-        + struct.pack(">H", 11)
-        + b"\x08"
-        + struct.pack(">HH", height, width)
-        + b"\x01\x11\x00"
-    )
-    return b"\xff\xd8" + app1 + sof0 + b"\xff\xd9"
 
 
 _TIFF_TYPE_SIZE = {1: 1, 2: 1, 3: 2, 4: 4, 5: 8, 6: 1, 7: 1, 8: 2,
@@ -940,46 +831,6 @@ def _tiff_lzw_decode(data: bytes) -> bytes:
     return bytes(out)
 
 
-def _tiff_lzw_encode(data: bytes) -> bytes:
-    """Fixture counterpart of :func:`_tiff_lzw_decode` (same early-
-    change rule, Clear emitted once up front, EOI at the end)."""
-    table = {bytes([i]): i for i in range(256)}
-    next_code = 258
-    width = 9
-    bits: List[Tuple[int, int]] = [(256, 9)]
-    cur = b""
-    for byte in data:
-        nxt = cur + bytes([byte])
-        if nxt in table:
-            cur = nxt
-            continue
-        bits.append((table[cur], width))
-        table[nxt] = next_code
-        next_code += 1
-        if next_code == (1 << width) - 1 and width < 12:
-            width += 1
-        if next_code >= 4094:  # reset before the 12-bit table fills
-            bits.append((256, width))
-            table = {bytes([i]): i for i in range(256)}
-            next_code = 258
-            width = 9
-        cur = bytes([byte])
-    if cur:
-        bits.append((table[cur], width))
-    bits.append((257, width))
-    out = bytearray()
-    acc = n_acc = 0
-    for code, w in bits:
-        acc = (acc << w) | code
-        n_acc += w
-        while n_acc >= 8:
-            out.append((acc >> (n_acc - 8)) & 0xFF)
-            n_acc -= 8
-    if n_acc:
-        out.append((acc << (8 - n_acc)) & 0xFF)
-    return bytes(out)
-
-
 def _packbits_decode(data: bytes) -> bytes:
     """Apple PackBits RLE (TIFF Compression=32773)."""
     out = bytearray()
@@ -996,35 +847,6 @@ def _packbits_decode(data: bytes) -> bytes:
             out += bytes([data[i]]) * (257 - n)
             i += 1
         # n == 128: no-op
-    return bytes(out)
-
-
-def _packbits_encode(data: bytes) -> bytes:
-    """Simple PackBits encoder: runs ≥3 as replicate, rest literal."""
-    out = bytearray()
-    i = 0
-    n = len(data)
-    while i < n:
-        run = 1
-        while i + run < n and run < 128 and data[i + run] == data[i]:
-            run += 1
-        if run >= 3:
-            out += bytes([257 - run, data[i]])
-            i += run
-        else:
-            j = i
-            lit = bytearray()
-            while j < n and len(lit) < 128:
-                run = 1
-                while j + run < n and run < 3 and data[j + run] == data[j]:
-                    run += 1
-                if run >= 3:
-                    break
-                take = min(run, 128 - len(lit))  # never exceed a header
-                lit += data[j : j + take]
-                j += take
-            out += bytes([len(lit) - 1]) + lit
-            i = j
     return bytes(out)
 
 
@@ -1182,146 +1004,6 @@ def decode_ico(data: bytes) -> Tuple[int, int, int, bytes]:
         raise ValueError(f"corrupt ICO stream: {type(ex).__name__}: {ex}") from ex
 
 
-def encode_ico(
-    images: Sequence[Tuple[int, int, bytes, int]], as_png: bool = False
-) -> bytes:
-    """Deterministic ICO fixture from [(w, h, pixels, channels)]:
-    entries as embedded PNG (``as_png=True``) or classic DIBs (the
-    encode_bmp body with doubled header height plus an all-zero AND
-    mask) — the fixture counterpart of :func:`decode_ico`."""
-    payloads = []
-    for w, h, px, ch in images:
-        if as_png:
-            payloads.append(encode_png(w, h, px, ch))
-        else:
-            bmp = encode_bmp(w, h, px, ch)
-            dib = bytearray(bmp[14:])
-            struct.pack_into("<i", dib, 8, h * 2)
-            mask_stride = ((w + 31) // 32) * 4
-            payloads.append(bytes(dib) + b"\x00" * (mask_stride * h))
-    out = bytearray(struct.pack("<HHH", 0, 1, len(images)))
-    off = 6 + 16 * len(images)
-    for (w, h, _px, ch), body in zip(images, payloads):
-        out += bytes([w % 256, h % 256, 0, 0])
-        out += struct.pack("<HHII", 1, ch * 8, len(body), off)
-        off += len(body)
-    for body in payloads:
-        out += body
-    return bytes(out)
-
-
-def encode_bmp(width: int, height: int, pixels: bytes, channels: int = 3) -> bytes:
-    """Deterministic BMP fixture encoder (bottom-up, BI_RGB)."""
-    if channels not in (3, 4):
-        raise ValueError("BMP encoder is 24/32-bit only")
-    bpp = channels * 8
-    stride = (width * channels + 3) & ~3
-    body = bytearray()
-    for row in range(height - 1, -1, -1):
-        line = bytearray()
-        for x in range(width):
-            o = (row * width + x) * channels
-            px = pixels[o : o + channels]
-            line += bytes([px[2], px[1], px[0]]) + (
-                bytes([px[3]]) if channels == 4 else b""
-            )
-        body += line + b"\x00" * (stride - len(line))
-    hdr = struct.pack(
-        "<2sIHHIIiiHHIIiiII",
-        b"BM",
-        54 + len(body),
-        0,
-        0,
-        54,
-        40,
-        width,
-        height,
-        1,
-        bpp,
-        0,
-        len(body),
-        2835,
-        2835,
-        0,
-        0,
-    )
-    return hdr + bytes(body)
-
-
-def encode_tiff(
-    width: int,
-    height: int,
-    pixels: bytes,
-    channels: int = 3,
-    big_endian: bool = False,
-    compression: str = "none",
-    predictor: bool = False,
-) -> bytes:
-    """Deterministic TIFF fixture encoder (one strip). ``compression``
-    ∈ {'none', 'lzw', 'deflate', 'packbits'}; ``predictor=True``
-    applies horizontal differencing (tag 317 = 2) before compression —
-    the standard pairing real encoders use with LZW/Deflate."""
-    end = ">" if big_endian else "<"
-    magic = b"MM\x00*" if big_endian else b"II*\x00"
-    pix = bytes(pixels)
-    if predictor:
-        diff = bytearray(pix)
-        stride = width * channels
-        for y in range(height):
-            base = y * stride
-            for x in range(stride - 1, channels - 1, -1):
-                diff[base + x] = (
-                    diff[base + x] - diff[base + x - channels]
-                ) & 0xFF
-        pix = bytes(diff)
-    comp_code = {"none": 1, "lzw": 5, "deflate": 8, "packbits": 32773}[
-        compression
-    ]
-    if compression == "lzw":
-        pix = _tiff_lzw_encode(pix)
-    elif compression == "deflate":
-        pix = zlib.compress(pix, 6)
-    elif compression == "packbits":
-        pix = _packbits_encode(pix)
-    ifd_off = 8 + len(pix)
-
-    def entry(tag: int, ftype: int, count: int, value: int) -> bytes:
-        e = struct.pack(end + "HHI", tag, ftype, count)
-        if ftype == 3 and count == 1:
-            return e + struct.pack(end + "HH", value, 0)
-        return e + struct.pack(end + "I", value)
-
-    entries = [
-        entry(256, 4, 1, width),
-        entry(257, 4, 1, height),
-        entry(259, 3, 1, comp_code),
-        entry(262, 3, 1, 2 if channels >= 3 else 1),  # photometric
-        entry(273, 4, 1, 8),  # strip offset: right after header
-        entry(277, 3, 1, channels),
-        entry(279, 4, 1, len(pix)),
-        entry(284, 3, 1, 1),  # chunky
-    ]
-    if predictor:
-        entries.append(entry(317, 3, 1, 2))
-    if channels >= 3:
-        # BitsPerSample [8,8,8(,8)] — stored out-of-line
-        bps_off = ifd_off + 2 + 12 * (len(entries) + 1) + 4
-        entries.insert(
-            2, entry(258, 3, channels, bps_off)
-        )
-        tail = struct.pack(f"{end}{channels}H", *([8] * channels))
-    else:
-        entries.insert(2, entry(258, 3, 1, 8))
-        tail = b""
-    entries.sort(key=lambda e: struct.unpack(end + "H", e[:2])[0])
-    ifd = (
-        struct.pack(end + "H", len(entries))
-        + b"".join(entries)
-        + struct.pack(end + "I", 0)
-    )
-    return magic + struct.pack(end + "I", ifd_off) + pix + ifd + tail
-
-
 def _gif_lzw_decode(
     data: bytes, min_code_size: int, limit: Optional[int] = None
 ) -> List[int]:
@@ -1366,43 +1048,6 @@ def _gif_lzw_decode(
                     code_size += 1
             prev = entry
     return out
-
-
-def _gif_lzw_encode(indices: List[int], min_code_size: int) -> bytes:
-    """Deterministic GIF LZW stream: literal codes with a CLEAR before
-    the table would force a wider code size, so every code stays
-    ``min_code_size + 1`` bits — valid (if uncompressed) for any
-    decoder, and byte-stable for fixtures."""
-    clear = 1 << min_code_size
-    end = clear + 1
-    code_size = min_code_size + 1
-    limit = (1 << code_size) - 2
-    codes: List[int] = [clear]
-    next_code = end + 1
-    first_after_clear = True
-    for k in indices:
-        if next_code >= limit:
-            codes.append(clear)
-            next_code = end + 1
-            first_after_clear = True
-        codes.append(k)
-        if first_after_clear:
-            first_after_clear = False
-        else:
-            next_code += 1
-    codes.append(end)
-    acc = nbits = 0
-    buf = bytearray()
-    for code in codes:
-        acc |= code << nbits
-        nbits += code_size
-        while nbits >= 8:
-            buf.append(acc & 0xFF)
-            acc >>= 8
-            nbits -= 8
-    if nbits:
-        buf.append(acc & 0xFF)
-    return bytes(buf)
 
 
 def decode_gif(data: bytes) -> Tuple[int, int, int, bytes]:
@@ -1728,105 +1373,6 @@ def decode_avi_frames(data: bytes) -> Tuple[int, int, List[bytes]]:
     return (w, h, frames)
 
 
-def encode_avi_rgb(
-    width: int, height: int, rgb_frames: Sequence[bytes], fps: int = 25
-) -> bytes:
-    """Deterministic uncompressed-DIB AVI fixture (BI_RGB 24-bit,
-    bottom-up padded BGR '00db' chunks) — counterpart of the DIB path
-    in :func:`decode_avi_frames`."""
-
-    def chunk(cid: bytes, body: bytes) -> bytes:
-        return cid + struct.pack("<I", len(body)) + body + (
-            b"\x00" if len(body) & 1 else b""
-        )
-
-    def lst(ltype: bytes, body: bytes) -> bytes:
-        return chunk(b"LIST", ltype + body)
-
-    stride = (width * 3 + 3) // 4 * 4
-    dib_frames: List[bytes] = []
-    for px in rgb_frames:
-        if len(px) != width * height * 3:
-            raise ValueError("frame pixel buffer size mismatch")
-        rows = []
-        for r in range(height - 1, -1, -1):
-            row = bytearray(stride)
-            base = r * width * 3
-            for k in range(width):
-                row[3 * k] = px[base + 3 * k + 2]
-                row[3 * k + 1] = px[base + 3 * k + 1]
-                row[3 * k + 2] = px[base + 3 * k]
-            rows.append(bytes(row))
-        dib_frames.append(b"".join(rows))
-    n = len(dib_frames)
-    avih = struct.pack(
-        "<14I", 1_000_000 // max(1, fps), 0, 0, 0x10,
-        n, 0, 1, 0, width, height, 0, 0, 0, 0,
-    )
-    strh = struct.pack(
-        "<4s4sIHHIIIIIIIIhhhh",
-        b"vids", b"DIB ", 0, 0, 0, 0, 1, fps, 0, n, 0, 0, 0,
-        0, 0, width, height,
-    )
-    strf = struct.pack(
-        "<IiiHH4sIiiII",
-        40, width, height, 1, 24, b"\x00\x00\x00\x00",
-        stride * height, 0, 0, 0, 0,
-    )
-    hdrl = lst(
-        b"hdrl",
-        chunk(b"avih", avih)
-        + lst(b"strl", chunk(b"strh", strh) + chunk(b"strf", strf)),
-    )
-    movi = lst(b"movi", b"".join(chunk(b"00db", f) for f in dib_frames))
-    payload = b"AVI " + hdrl + movi
-    return b"RIFF" + struct.pack("<I", len(payload)) + payload
-
-
-def encode_avi_mjpeg(
-    width: int, height: int, jpeg_frames: Sequence[bytes], fps: int = 25
-) -> bytes:
-    """Deterministic MJPEG AVI fixture: RIFF('AVI ') with a real hdrl
-    (avih + one video strl with 'MJPG' strh/strf) and a movi LIST of
-    '00dc' chunks — the fixture counterpart of
-    :func:`decode_mjpeg_avi`, structurally valid for other readers."""
-
-    def chunk(cid: bytes, body: bytes) -> bytes:
-        return cid + struct.pack("<I", len(body)) + body + (
-            b"\x00" if len(body) & 1 else b""
-        )
-
-    def lst(ltype: bytes, body: bytes) -> bytes:
-        return chunk(b"LIST", ltype + body)
-
-    n = len(jpeg_frames)
-    avih = struct.pack(
-        "<14I",
-        1_000_000 // max(1, fps),  # dwMicroSecPerFrame
-        0, 0, 0x10,               # rate, padding, flags (HASINDEX off)
-        n, 0, 1, 0,               # totalframes, initial, streams, bufsize
-        width, height, 0, 0, 0, 0,
-    )
-    strh = struct.pack(
-        "<4s4sIHHIIIIIIIIhhhh",
-        b"vids", b"MJPG", 0, 0, 0, 0, 1, fps, 0, n, 0, 0, 0,
-        0, 0, width, height,
-    )
-    strf = struct.pack(  # BITMAPINFOHEADER
-        "<IiiHH4sIiiII",
-        40, width, height, 1, 24, b"MJPG",
-        width * height * 3, 0, 0, 0, 0,
-    )
-    hdrl = lst(
-        b"hdrl",
-        chunk(b"avih", avih)
-        + lst(b"strl", chunk(b"strh", strh) + chunk(b"strf", strf)),
-    )
-    movi = lst(b"movi", b"".join(chunk(b"00dc", f) for f in jpeg_frames))
-    payload = b"AVI " + hdrl + movi
-    return b"RIFF" + struct.pack("<I", len(payload)) + payload
-
-
 def _to_rgba(px: bytes, ch: int) -> bytes:
     """Any decoded channel layout → RGBA (gray/GA expand, RGB gains an
     opaque alpha)."""
@@ -2043,50 +1589,6 @@ def decode_webp_anim_frames(
     return (cw, chh, out)
 
 
-def encode_apng(
-    width: int,
-    height: int,
-    frames,
-    channels: int = 4,
-) -> bytes:
-    """Deterministic APNG fixture encoder: acTL + per-frame fcTL with
-    IDAT (first frame, full canvas required) / fdAT (rest). ``frames``
-    is a sequence of (x, y, fw, fh, pixels, dispose, blend); all
-    frames share ``channels`` (the IHDR color type governs every
-    frame, per spec)."""
-    if not frames:
-        raise ValueError("APNG needs at least one frame")
-    if frames[0][:4] != (0, 0, width, height):
-        raise ValueError("first APNG frame must cover the canvas")
-    ctype = {1: 0, 2: 4, 3: 2, 4: 6}[channels]
-    out = bytearray(b"\x89PNG\r\n\x1a\n")
-    out += _png_chunk(
-        b"IHDR", struct.pack(">IIBBBBB", width, height, 8, ctype, 0, 0, 0)
-    )
-    out += _png_chunk(b"acTL", struct.pack(">II", len(frames), 0))
-    seq = 0
-    for i, (x, y, fw, fh, pixels, dispose, blend) in enumerate(frames):
-        stride = fw * channels
-        if len(pixels) != stride * fh:
-            raise ValueError("frame pixel buffer size mismatch")
-        fctl = struct.pack(
-            ">IIIIIHHBB", seq, fw, fh, x, y, 1, 10, dispose, blend
-        )
-        out += _png_chunk(b"fcTL", fctl)
-        seq += 1
-        raw = b"".join(
-            b"\x00" + pixels[r * stride : (r + 1) * stride] for r in range(fh)
-        )
-        comp = zlib.compress(raw, 6)
-        if i == 0:
-            out += _png_chunk(b"IDAT", comp)
-        else:
-            out += _png_chunk(b"fdAT", struct.pack(">I", seq) + comp)
-            seq += 1
-    out += _png_chunk(b"IEND", b"")
-    return bytes(out)
-
-
 def sample_frames(
     df: DataFrame,
     n_frames: int = 4,
@@ -2148,50 +1650,6 @@ def sample_frames(
     return map_rows(df.select(id_col, blob_col), FRAME_SCHEMA, lambda: row_fn)
 
 
-def encode_gif_animated(
-    width: int,
-    height: int,
-    frames: Sequence[dict],
-    palette: List[tuple],
-) -> bytes:
-    """Deterministic multi-frame GIF89a: each frame dict has
-    ``indices`` (row-major over its rect) plus optional ``x0 y0 w h
-    disposal transparent delay`` — the fixture counterpart of
-    :func:`decode_gif_frames`."""
-    bits = max(1, (len(palette) - 1).bit_length())
-    size = 1 << bits
-    ct = bytearray()
-    for j in range(size):
-        r, g, b = palette[j] if j < len(palette) else (0, 0, 0)
-        ct += bytes((r, g, b))
-    mcs = max(2, bits)
-    out = bytearray(
-        b"GIF89a" + struct.pack("<HHBBB", width, height, 0x80 | (bits - 1), 0, 0)
-    )
-    out += ct
-    for f in frames:
-        x0, y0 = f.get("x0", 0), f.get("y0", 0)
-        w, h = f.get("w", width), f.get("h", height)
-        transparent = f.get("transparent")
-        flags = (f.get("disposal", 0) & 0x07) << 2
-        tidx = 0
-        if transparent is not None:
-            flags |= 0x01
-            tidx = transparent
-        out += b"\x21\xf9\x04" + bytes([flags]) + struct.pack(
-            "<H", f.get("delay", 10)
-        ) + bytes([tidx, 0])
-        out += b"\x2c" + struct.pack("<HHHHB", x0, y0, w, h, 0)
-        lzw = _gif_lzw_encode(list(f["indices"]), mcs)
-        out += bytes([mcs])
-        for off in range(0, len(lzw), 255):
-            chunk = lzw[off : off + 255]
-            out += bytes([len(chunk)]) + chunk
-        out += b"\x00"
-    out += b"\x3b"
-    return bytes(out)
-
-
 def _gif_interlace_order(height: int) -> List[int]:
     """Display-row order of the 4 GIF interlace passes: rows 0,8,16...
     then 4,12..., then 2,6..., then 1,3,5... — the storage order of an
@@ -2200,45 +1658,6 @@ def _gif_interlace_order(height: int) -> List[int]:
     for start, step in ((0, 8), (4, 8), (2, 4), (1, 2)):
         order.extend(range(start, height, step))
     return order
-
-
-def encode_gif(
-    width: int, height: int, indices: List[int], palette: List[tuple],
-    interlaced: bool = False,
-) -> bytes:
-    """Deterministic single-frame GIF87a encoder — the fixture/oracle
-    counterpart of :func:`decode_gif`. ``palette`` is [(r, g, b), ...]
-    (padded to a power of two); ``indices`` index into it row-major
-    (display order — ``interlaced=True`` stores the rows in 4-pass
-    order and sets the descriptor flag)."""
-    if len(indices) != width * height:
-        raise ValueError("index buffer size mismatch")
-    if interlaced:
-        indices = [
-            k
-            for disp in _gif_interlace_order(height)
-            for k in indices[disp * width : (disp + 1) * width]
-        ]
-    bits = max(1, (len(palette) - 1).bit_length())
-    size = 1 << bits
-    ct = bytearray()
-    for j in range(size):
-        r, g, b = palette[j] if j < len(palette) else (0, 0, 0)
-        ct += bytes((r, g, b))
-    mcs = max(2, bits)
-    head = b"GIF87a" + struct.pack(
-        "<HHBBB", width, height, 0x80 | (bits - 1), 0, 0
-    )
-    desc = b"\x2c" + struct.pack(
-        "<HHHHB", 0, 0, width, height, 0x40 if interlaced else 0
-    )
-    lzw = _gif_lzw_encode(indices, mcs)
-    blocks = bytearray([mcs])
-    for off in range(0, len(lzw), 255):
-        chunk = lzw[off : off + 255]
-        blocks += bytes([len(chunk)]) + chunk
-    blocks += b"\x00"
-    return head + bytes(ct) + desc + bytes(blocks) + b"\x3b"
 
 
 def decode_wav(data: bytes) -> Tuple[int, int, int, List[int]]:
@@ -2263,15 +1682,6 @@ def _f80_to_int(b: bytes) -> int:
     shift = exp - 16383 - 63
     v = mant << shift if shift >= 0 else (mant + (1 << (-shift - 1))) >> -shift
     return sign * v
-
-
-def _int_to_f80(v: int) -> bytes:
-    """int → 80-bit extended BE (fixture encoder counterpart)."""
-    if v == 0:
-        return b"\x00" * 10
-    e = v.bit_length() - 1
-    mant = v << (63 - e) if e <= 63 else v >> (e - 63)
-    return struct.pack(">H", 16383 + e) + mant.to_bytes(8, "big")
 
 
 def decode_aiff(data: bytes) -> Tuple[int, int, int, List[int]]:
@@ -2342,42 +1752,6 @@ def _decode_aiff_impl(data: bytes) -> Tuple[int, int, int, List[int]]:
             int.from_bytes(payload[i * step : (i + 1) * step], order, signed=True)
         )
     return (channels, rate, n_frames, samples)
-
-
-def encode_aiff(
-    channels: int,
-    rate: int,
-    samples: Sequence[int],
-    bits: int = 16,
-    aifc_sowt: bool = False,
-) -> bytes:
-    """Deterministic AIFF (or AIFF-C/'sowt') fixture encoder — the
-    counterpart of :func:`decode_aiff`."""
-    if len(samples) % channels:
-        raise ValueError("sample count not divisible by channels")
-    step = bits // 8
-    order = "little" if aifc_sowt else "big"
-    payload = b"".join(
-        int(s).to_bytes(step, order, signed=True) for s in samples
-    )
-    comm = struct.pack(
-        ">hIh", channels, len(samples) // channels, bits
-    ) + _int_to_f80(rate)
-    if aifc_sowt:
-        comm += b"sowt" + b"\x0e" + b"not compressed" + b"\x00"
-    ssnd = struct.pack(">II", 0, 0) + payload
-
-    def chunk(tag: bytes, body: bytes) -> bytes:
-        return tag + struct.pack(">I", len(body)) + body + (
-            b"\x00" if len(body) & 1 else b""
-        )
-
-    form_type = b"AIFC" if aifc_sowt else b"AIFF"
-    body = form_type
-    if aifc_sowt:
-        body += chunk(b"FVER", struct.pack(">I", 0xA2805140))
-    body += chunk(b"COMM", comm) + chunk(b"SSND", ssnd)
-    return b"FORM" + struct.pack(">I", len(body)) + body
 
 
 def decode_audio(data: bytes) -> Tuple[int, int, int, List[int]]:
@@ -2496,21 +1870,6 @@ def _decode_wav_impl(data: bytes) -> Tuple[int, int, int, List[int]]:
             f"WAV bit depth {bits} unsupported (8/16/24/32)"
         )
     return (channels, rate, len(samples) // channels, samples)
-
-
-def encode_wav(
-    samples: List[int], sample_rate: int = 8000, channels: int = 1
-) -> bytes:
-    """Deterministic 16-bit PCM WAV encoder — the fixture/oracle
-    counterpart of :func:`decode_wav`. ``samples`` is interleaved."""
-    body = struct.pack(f"<{len(samples)}h", *samples)
-    fmt = struct.pack(
-        "<HHIIHH", 1, channels, sample_rate,
-        sample_rate * channels * 2, channels * 2, 16,
-    )
-    chunks = b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-    chunks += b"data" + struct.pack("<I", len(body)) + body
-    return b"RIFF" + struct.pack("<I", len(chunks)) + chunks
 
 
 # MPEG-1/2 Layer III bitrate (kbps) and sample-rate tables, header-only
@@ -2666,84 +2025,6 @@ def id3_tags(data: bytes) -> dict:
     return out
 
 
-def encode_id3_mp3(
-    tags: dict,
-    bitrate_kbps: int = 128,
-    sample_rate: int = 44100,
-    n_audio_bytes: int = 2000,
-) -> bytes:
-    """MP3 fixture whose ID3v2.3 tag carries the given text frames
-    (latin-1 when possible, else utf-16 with BOM)."""
-    frames = bytearray()
-    rev = {v: k for k, v in _ID3_TEXT_FRAMES.items() if k != "TDRC"}
-    for key, val in tags.items():
-        fid = rev[key].encode("ascii")
-        try:
-            body = b"\x00" + val.encode("latin-1")
-        except UnicodeEncodeError:
-            body = b"\x01\xfe\xff" + val.encode("utf-16-be")
-        frames += fid + len(body).to_bytes(4, "big") + b"\x00\x00" + body
-    sz = len(frames)
-    tag = b"ID3\x03\x00\x00" + bytes(
-        [(sz >> 21) & 0x7F, (sz >> 14) & 0x7F, (sz >> 7) & 0x7F, sz & 0x7F]
-    ) + bytes(frames)
-    br_idx = _MP3_BITRATES[1].index(bitrate_kbps)
-    sr_idx = _MP3_RATES[1].index(sample_rate)
-    hdr = bytes([0xFF, 0xFB, (br_idx << 4) | (sr_idx << 2), 0x00])
-    return tag + hdr + b"\x00" * max(0, n_audio_bytes - 4)
-
-
-def encode_mp3_header(
-    bitrate_kbps: int = 128,
-    sample_rate: int = 44100,
-    mono: bool = False,
-    n_audio_bytes: int = 4000,
-    id3_payload: int = 0,
-    vbr_frames: int = 0,
-    vbr_tag: str = "Xing",
-) -> bytes:
-    """Deterministic MP3 fixture: optional ID3v2 tag + one valid
-    MPEG-1 Layer III frame header + zero filler (header-level facts
-    only — not decodable audio). With ``vbr_frames`` > 0 a Xing/Info
-    tag (after the MPEG1 side info) or a VBRI tag (fixed offset 32)
-    carries the frame count, as real VBR encoders write it."""
-    br_idx = _MP3_BITRATES[1].index(bitrate_kbps)
-    sr_idx = _MP3_RATES[1].index(sample_rate)
-    hdr = bytes(
-        [
-            0xFF,
-            0xFB,  # MPEG1 Layer III, no CRC
-            (br_idx << 4) | (sr_idx << 2),
-            0xC0 if mono else 0x00,
-        ]
-    )
-    body = bytearray(hdr)
-    if vbr_frames:
-        if vbr_tag in ("Xing", "Info"):
-            side = 17 if mono else 32
-            body += b"\x00" * side
-            body += vbr_tag.encode("ascii")
-            body += struct.pack(">I", 0x01)  # flags: frames present
-            body += struct.pack(">I", vbr_frames)
-        elif vbr_tag == "VBRI":
-            body += b"\x00" * 32
-            body += b"VBRI"
-            body += struct.pack(">H", 1)  # version
-            body += struct.pack(">H", 0)  # delay
-            body += struct.pack(">H", 0)  # quality
-            body += struct.pack(">I", n_audio_bytes)  # stream bytes
-            body += struct.pack(">I", vbr_frames)
-        else:
-            raise ValueError(f"unknown vbr_tag {vbr_tag!r}")
-    tag = b""
-    if id3_payload:
-        sz = id3_payload
-        tag = b"ID3\x04\x00\x00" + bytes(
-            [(sz >> 21) & 0x7F, (sz >> 14) & 0x7F, (sz >> 7) & 0x7F, sz & 0x7F]
-        ) + b"\x00" * sz
-    return tag + bytes(body) + b"\x00" * max(0, n_audio_bytes - len(body))
-
-
 _MP4_CONTAINERS = frozenset(
     {b"moov", b"trak", b"mdia", b"minf", b"stbl", b"edts", b"udta"}
 )
@@ -2811,48 +2092,6 @@ def mp4_info(data: bytes) -> dict:
     out["n_tracks"] = n_tracks
     out["codecs"] = ",".join(codecs)
     return out
-
-
-def encode_mp4_header(
-    duration_ms: int,
-    width: int,
-    height: int,
-    codecs: Sequence[str] = ("avc1", "mp4a"),
-) -> bytes:
-    """Minimal ISO-BMFF fixture: ftyp + moov(mvhd + one trak per codec
-    with tkhd dims on the first, stsd fourcc) — header facts only."""
-
-    def box(btype: bytes, payload: bytes) -> bytes:
-        return struct.pack(">I", 8 + len(payload)) + btype + payload
-
-    timescale = 1000
-    mvhd = box(
-        b"mvhd",
-        b"\x00\x00\x00\x00"  # version 0 + flags
-        + struct.pack(">II", 0, 0)  # creation, modification
-        + struct.pack(">II", timescale, duration_ms)
-        + b"\x00" * 80,
-    )
-    traks = b""
-    for i, cc in enumerate(codecs):
-        w = width if i == 0 else 0
-        h = height if i == 0 else 0
-        tkhd = box(
-            b"tkhd",
-            b"\x00\x00\x00\x07"
-            + struct.pack(">III", 0, 0, i + 1)
-            + b"\x00" * 52
-            + struct.pack(">II", w << 16, h << 16),
-        )
-        entry = struct.pack(">I", 16) + cc.encode("ascii") + b"\x00" * 8
-        stsd = box(b"stsd", b"\x00" * 4 + struct.pack(">I", 1) + entry)
-        stbl = box(b"stbl", stsd)
-        minf = box(b"minf", stbl)
-        mdia = box(b"mdia", minf)
-        traks += box(b"trak", tkhd + mdia)
-    moov = box(b"moov", mvhd + traks)
-    ftyp = box(b"ftyp", b"isom\x00\x00\x02\x00isomiso2avc1mp41")
-    return ftyp + moov
 
 
 AUDIO_INFO_SCHEMA = StructType(
@@ -2965,34 +2204,6 @@ def audio_features(
     )
 
 
-def encode_png(width: int, height: int, pixels: bytes, channels: int = 3) -> bytes:
-    """Deterministic PNG encoder (filter 0, fixed zlib level) — the
-    fixture/oracle counterpart of :func:`decode_png`."""
-    ctype = {1: 0, 2: 4, 3: 2, 4: 6}[channels]
-    stride = width * channels
-    if len(pixels) != stride * height:
-        raise ValueError("pixel buffer size mismatch")
-    raw = b"".join(
-        b"\x00" + pixels[y * stride : (y + 1) * stride] for y in range(height)
-    )
-
-    def chunk(tag: bytes, body: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(body))
-            + tag
-            + body
-            + struct.pack(">I", zlib.crc32(tag + body) & 0xFFFFFFFF)
-        )
-
-    ihdr = struct.pack(">IIBBBBB", width, height, 8, ctype, 0, 0, 0)
-    return (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(raw, 6))
-        + chunk(b"IEND", b"")
-    )
-
-
 def _png_chunk(tag: bytes, body: bytes) -> bytes:
     return (
         struct.pack(">I", len(body))
@@ -3000,99 +2211,6 @@ def _png_chunk(tag: bytes, body: bytes) -> bytes:
         + body
         + struct.pack(">I", zlib.crc32(tag + body) & 0xFFFFFFFF)
     )
-
-
-def _png_pack_row(samples, bitd: int) -> bytes:
-    """Flat sample list → one packed scanline (MSB-first for sub-byte)."""
-    if bitd == 8:
-        return bytes(samples)
-    per_byte = 8 // bitd
-    out = bytearray((len(samples) + per_byte - 1) // per_byte)
-    for i, v in enumerate(samples):
-        out[i // per_byte] |= v << (8 - bitd * (i % per_byte + 1))
-    return bytes(out)
-
-
-def encode_png_ex(
-    width: int,
-    height: int,
-    pixels: bytes,
-    channels: int = 3,
-    interlace: bool = False,
-    palette: Optional[bytes] = None,
-    bit_depth: int = 8,
-    trns: Optional[bytes] = None,
-) -> bytes:
-    """Extended deterministic PNG encoder — the fixture counterpart of
-    the full :func:`decode_png` matrix. With ``palette`` set, ``pixels``
-    is one index per pixel (colortype 3, packed at ``bit_depth``);
-    otherwise 8-bit gray/GA/RGB/RGBA as in :func:`encode_png`. Adam7
-    interlacing reorders rows/columns into the 7 spec passes (filter 0
-    throughout, fixed zlib level — byte-reproducible)."""
-    if palette is not None:
-        ctype, spp = 3, 1
-        if bit_depth not in (1, 2, 4, 8):
-            raise ValueError("palette bit depth must be 1/2/4/8")
-    else:
-        ctype = {1: 0, 2: 4, 3: 2, 4: 6}[channels]
-        spp = channels
-        if bit_depth != 8:
-            raise ValueError("non-palette encode_png_ex is 8-bit only")
-    if len(pixels) != width * height * spp:
-        raise ValueError("pixel buffer size mismatch")
-
-    passes = _ADAM7 if interlace else ((0, 0, 1, 1),)
-    raw = bytearray()
-    for x0, y0, dx, dy in passes:
-        pw = (width - x0 + dx - 1) // dx
-        ph = (height - y0 + dy - 1) // dy
-        if pw <= 0 or ph <= 0:
-            continue
-        for py in range(ph):
-            y = y0 + py * dy
-            row = []
-            for px in range(pw):
-                base = (y * width + (x0 + px * dx)) * spp
-                row.extend(pixels[base : base + spp])
-            raw += b"\x00" + _png_pack_row(row, bit_depth)
-
-    ihdr = struct.pack(
-        ">IIBBBBB", width, height, bit_depth, ctype, 0, 0, 1 if interlace else 0
-    )
-    out = b"\x89PNG\r\n\x1a\n" + _png_chunk(b"IHDR", ihdr)
-    if palette is not None:
-        out += _png_chunk(b"PLTE", palette)
-        if trns is not None:
-            out += _png_chunk(b"tRNS", trns)
-    return out + _png_chunk(b"IDAT", zlib.compress(bytes(raw), 6)) + _png_chunk(
-        b"IEND", b""
-    )
-
-
-def encode_gif_header(width: int, height: int) -> bytes:
-    """Minimal GIF89a header+trailer (enough for header-level metadata)."""
-    return b"GIF89a" + struct.pack("<HH", width, height) + b"\x00\x00\x00\x3b"
-
-
-def encode_webp_header(width: int, height: int) -> bytes:
-    """Minimal lossy-WebP container (VP8 keyframe header carrying the
-    dimensions — enough for header-level metadata, not decodable)."""
-    frame = b"\x00" * 3 + b"\x9d\x01\x2a" + struct.pack("<HH", width, height)
-    vp8 = b"VP8 " + struct.pack("<I", len(frame)) + frame
-    return b"RIFF" + struct.pack("<I", 4 + len(vp8)) + b"WEBP" + vp8
-
-
-def encode_jpeg_header(width: int, height: int) -> bytes:
-    """Minimal JFIF stream with an SOF0 carrying the dimensions."""
-    app0 = b"\xff\xe0\x00\x10JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00"
-    sof0 = (
-        b"\xff\xc0"
-        + struct.pack(">H", 11)
-        + b"\x08"
-        + struct.pack(">HH", height, width)
-        + b"\x01\x11\x00"
-    )
-    return b"\xff\xd8" + app0 + sof0 + b"\xff\xd9"
 
 
 def extract_features(
@@ -3198,4 +2316,3 @@ def resize_media(
             yield (str(mid), c, sum(small[c::ch]))
 
     return map_rows(df.select(id_col, blob_col), RESIZE_SCHEMA, lambda: row_fn)
-

@@ -30,9 +30,9 @@ import html as _html
 import io
 import re
 import zipfile
-from typing import List, Sequence, Tuple, Union
+from typing import List, Tuple
 
-__all__ = ["odf_to_xhtml_text", "make_odt"]
+__all__ = ["odf_to_xhtml_text"]
 
 _H = re.compile(r"<text:h\b([^>]*)>(.*?)</text:h>", re.S)
 _P = re.compile(r"<text:p\b[^>]*>(.*?)</text:p>|<text:p\b[^>]*/>", re.S)
@@ -52,10 +52,6 @@ _SPACE = re.compile(r"<text:s\b([^>]*)/>")
 _SPACE_C = re.compile(r'text:c="(\d+)"')
 _ANY_TAG = re.compile(r"<[^>]+>")
 _BODY = re.compile(r"<office:body>(.*)</office:body>", re.S)
-
-
-def _esc(s: str) -> str:
-    return s.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;")
 
 
 def _inline_text(fragment: str) -> str:
@@ -92,7 +88,7 @@ def _render_blocks(xml: str) -> List[str]:
             lvl = min(6, max(1, int((_OUTLINE.search(h.group(1)) or [None, "1"])[1])))
             t = _inline_text(h.group(2))
             if t:
-                out.append(f"<h{lvl}>{_esc(t)}</h{lvl}>")
+                out.append(f"<h{lvl}>{_html.escape(t, quote=False)}</h{lvl}>")
             pos = h.end()
         out.extend(paras(span[pos:]))
         return out
@@ -102,7 +98,7 @@ def _render_blocks(xml: str) -> List[str]:
         for m in _P.finditer(span):
             t = _inline_text(m.group(1) or "")
             if t:
-                out.append(f"<p>{_esc(t)}</p>")
+                out.append(f"<p>{_html.escape(t, quote=False)}</p>")
         return out
 
     body: List[str] = []
@@ -118,7 +114,9 @@ def _render_blocks(xml: str) -> List[str]:
                 rep = int((_REPEAT.search(attrs) or [None, "1"])[1])
                 cells.extend([_cell_text(inner)] * rep)
             rows_html.append(
-                "<tr>" + "".join(f"<td>{_esc(v)}</td>" for v in cells) + "</tr>"
+                "<tr>"
+                + "".join(f"<td>{_html.escape(v, quote=False)}</td>" for v in cells)
+                + "</tr>"
             )
         body.append("<table>" + "".join(rows_html) + "</table>")
         pos = tbl.end()
@@ -158,106 +156,3 @@ def odf_to_xhtml_text(data: bytes) -> Tuple[str, str]:
     else:
         parts = _render_blocks(region)
     return "<html><body>" + "".join(parts) + "</body></html>", kind
-
-
-# ---------------------------------------------------------------------------
-# Deterministic fixture writers (gate corpora). Per the ODF spec the
-# ``mimetype`` member is first and STORED (uncompressed) — the writers
-# honour that so the fixtures double as magic-sniffable real files.
-
-_ZIP_DATE = (1980, 1, 1, 0, 0, 0)
-
-
-def _xml_esc(s: str) -> str:
-    return (
-        s.replace("&", "&amp;")
-        .replace("<", "&lt;")
-        .replace(">", "&gt;")
-        .replace('"', "&quot;")
-    )
-
-
-def _write_odf_zip(mimetype: str, content_xml: str) -> bytes:
-    buf = io.BytesIO()
-    with zipfile.ZipFile(buf, "w") as z:
-        zi = zipfile.ZipInfo("mimetype", date_time=_ZIP_DATE)
-        zi.compress_type = zipfile.ZIP_STORED
-        z.writestr(zi, mimetype.encode("ascii"))
-        zi = zipfile.ZipInfo("content.xml", date_time=_ZIP_DATE)
-        zi.compress_type = zipfile.ZIP_DEFLATED
-        zi.external_attr = 0o600 << 16
-        z.writestr(zi, content_xml.encode("utf-8"))
-    return buf.getvalue()
-
-
-def _para_xml(text: str) -> str:
-    body = (
-        _xml_esc(text)
-        .replace("\t", "<text:tab/>")
-        .replace("\n", "<text:line-break/>")
-    )
-    # real ODF writers collapse space runs into <text:s> — emit the same
-    body = re.sub(
-        r"  +",
-        lambda m: f' <text:s text:c="{len(m.group(0)) - 1}"/>',
-        body,
-    )
-    return f'<text:p text:style-name="P1">{body}</text:p>'
-
-
-Block = Union[str, Tuple[int, str], Sequence[Sequence[str]]]
-
-
-def _blocks_xml(blocks: Sequence[Block]) -> str:
-    parts: List[str] = []
-    t = 0
-    for blk in blocks:
-        if isinstance(blk, str):
-            parts.append(_para_xml(blk))
-        elif isinstance(blk, tuple):
-            lvl, text = blk
-            parts.append(
-                f'<text:h text:outline-level="{lvl}">{_xml_esc(text)}</text:h>'
-            )
-        else:
-            t += 1
-            rows = "".join(
-                "<table:table-row>"
-                + "".join(
-                    f"<table:table-cell office:value-type=\"string\">"
-                    f"{_para_xml(cell)}</table:table-cell>"
-                    for cell in row
-                )
-                + "</table:table-row>"
-                for row in blk
-            )
-            parts.append(
-                f'<table:table table:name="T{t}">'
-                f'<table:table-column table:number-columns-repeated="9"/>'
-                f"{rows}</table:table>"
-            )
-    return "".join(parts)
-
-
-_CONTENT_PREFIX = (
-    '<?xml version="1.0" encoding="UTF-8"?>'
-    "<office:document-content "
-    'xmlns:office="urn:oasis:names:tc:opendocument:xmlns:office:1.0" '
-    'xmlns:text="urn:oasis:names:tc:opendocument:xmlns:text:1.0" '
-    'xmlns:table="urn:oasis:names:tc:opendocument:xmlns:table:1.0" '
-    'xmlns:draw="urn:oasis:names:tc:opendocument:xmlns:drawing:1.0">'
-    "<office:automatic-styles/>"
-    "<office:body>"
-)
-
-
-def make_odt(blocks: Sequence[Block]) -> bytes:
-    """odt bytes; a string block → paragraph, ``(level, text)`` tuple →
-    heading, list-of-rows → table."""
-    xml = (
-        _CONTENT_PREFIX
-        + "<office:text>"
-        + _blocks_xml(blocks)
-        + "</office:text></office:body></office:document-content>"
-    )
-    return _write_odf_zip("application/vnd.oasis.opendocument.text", xml)

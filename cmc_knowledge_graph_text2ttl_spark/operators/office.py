@@ -18,9 +18,8 @@ Canonical renders (gate-checked byte-exactly):
   ``<a:tbl>`` tables render as ``<table><tr><td>`` and the remaining
   ``<a:p>`` paragraphs as ``<p>``, mirroring the docx renderer.
 
-The fixture writers (:func:`make_xlsx` / :func:`make_pptx`) emit the
-exact subset the readers consume, with pinned zip metadata so fixture
-bytes are reproducible across hosts and rounds.
+The xlsx/pptx fixture writers live in the repo-root
+``fixture_writers.py``.
 """
 
 from __future__ import annotations
@@ -29,14 +28,9 @@ import html as _html
 import io
 import re
 import zipfile
-from typing import Dict, List, Optional, Sequence, Tuple, Union
+from typing import Dict, List, Tuple
 
-__all__ = [
-    "xlsx_to_xhtml_text",
-    "pptx_to_xhtml_text",
-    "make_xlsx",
-    "make_pptx",
-]
+__all__ = ["xlsx_to_xhtml_text", "pptx_to_xhtml_text"]
 
 _SI = re.compile(r"<si>(.*?)</si>", re.S)
 _T = re.compile(r"<t(?: [^>]*)?>(.*?)</t>", re.S)
@@ -56,10 +50,6 @@ _A_TBL = re.compile(r"<a:tbl>.*?</a:tbl>|<a:tbl\b[^>]*>.*?</a:tbl>", re.S)
 _A_TR = re.compile(r"<a:tr\b[^>]*>.*?</a:tr>|<a:tr>.*?</a:tr>", re.S)
 _A_TC = re.compile(r"<a:tc\b[^>]*>.*?</a:tc>|<a:tc>.*?</a:tc>", re.S)
 _SLIDE_NUM = re.compile(r"^ppt/slides/slide(\d+)\.xml$")
-
-
-def _esc(s: str) -> str:
-    return s.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;")
 
 
 def _col_index(letters: str) -> int:
@@ -102,7 +92,7 @@ def xlsx_to_xhtml_text(data: bytes) -> str:
 
         parts: List[str] = []
         for name, xml in sheets:
-            parts.append(f"<h1>{_esc(name)}</h1>")
+            parts.append(f"<h1>{_html.escape(name, quote=False)}</h1>")
             rows_html: List[str] = []
             for row in _ROW.finditer(xml):
                 cells: List[str] = []
@@ -133,7 +123,11 @@ def xlsx_to_xhtml_text(data: bytes) -> str:
                     cells.append(val)
                     next_col = col + 1
                 rows_html.append(
-                    "<tr>" + "".join(f"<td>{_esc(v)}</td>" for v in cells) + "</tr>"
+                    "<tr>"
+                    + "".join(
+                        f"<td>{_html.escape(v, quote=False)}</td>" for v in cells
+                    )
+                    + "</tr>"
                 )
             parts.append("<table>" + "".join(rows_html) + "</table>")
     return "<html><body>" + "".join(parts) + "</body></html>"
@@ -169,11 +163,13 @@ def pptx_to_xhtml_text(data: bytes) -> str:
                 for p in _A_P.finditer(xml, pos, tbl.start()):
                     t = _a_paragraph_text(p.group(0))
                     if t:
-                        body.append(f"<p>{_esc(t)}</p>")
+                        body.append(f"<p>{_html.escape(t, quote=False)}</p>")
                 rows = []
                 for tr in _A_TR.finditer(tbl.group(0)):
                     cells = [
-                        f"<td>{_esc(_a_paragraph_text(tc.group(0)))}</td>"
+                        "<td>"
+                        + _html.escape(_a_paragraph_text(tc.group(0)), quote=False)
+                        + "</td>"
                         for tc in _A_TC.finditer(tr.group(0))
                     ]
                     rows.append("<tr>" + "".join(cells) + "</tr>")
@@ -182,189 +178,6 @@ def pptx_to_xhtml_text(data: bytes) -> str:
             for p in _A_P.finditer(xml, pos):
                 t = _a_paragraph_text(p.group(0))
                 if t:
-                    body.append(f"<p>{_esc(t)}</p>")
+                    body.append(f"<p>{_html.escape(t, quote=False)}</p>")
             parts.append('<div class="slide">' + "".join(body) + "</div>")
     return "<html><body>" + "".join(parts) + "</body></html>"
-
-
-# ---------------------------------------------------------------------------
-# Deterministic fixture writers (gate corpora — they emit exactly the
-# subset the readers above consume)
-
-_ZIP_DATE = (1980, 1, 1, 0, 0, 0)
-
-
-def _write_zip(members: Sequence[Tuple[str, bytes]]) -> bytes:
-    buf = io.BytesIO()
-    with zipfile.ZipFile(buf, "w", zipfile.ZIP_DEFLATED) as z:
-        for name, payload in members:
-            zi = zipfile.ZipInfo(name, date_time=_ZIP_DATE)
-            zi.compress_type = zipfile.ZIP_DEFLATED
-            zi.external_attr = 0o600 << 16
-            z.writestr(zi, payload)
-    return buf.getvalue()
-
-
-def _xml_esc(s: str) -> str:
-    return (
-        s.replace("&", "&amp;")
-        .replace("<", "&lt;")
-        .replace(">", "&gt;")
-        .replace('"', "&quot;")
-    )
-
-
-Cell = Union[str, int, float, None]
-
-
-def make_xlsx(sheets: Sequence[Tuple[str, Sequence[Sequence[Cell]]]]) -> bytes:
-    """Workbook bytes from [(sheet_name, rows)]; string cells go through
-    sharedStrings, numbers stay numeric, ``None`` leaves a column gap
-    (the cell is simply absent and the NEXT cell carries an explicit
-    ``r=`` reference — exercising the reader's gap filling)."""
-    shared: List[str] = []
-    shared_idx: Dict[str, int] = {}
-
-    def sref(s: str) -> int:
-        if s not in shared_idx:
-            shared_idx[s] = len(shared)
-            shared.append(s)
-        return shared_idx[s]
-
-    def col_letters(i: int) -> str:
-        out = ""
-        i += 1
-        while i:
-            i, r = divmod(i - 1, 26)
-            out = chr(65 + r) + out
-        return out
-
-    sheet_xmls: List[bytes] = []
-    for _, rows in sheets:
-        row_parts: List[str] = []
-        for rno, row in enumerate(rows, start=1):
-            cell_parts: List[str] = []
-            for cno, v in enumerate(row):
-                if v is None:
-                    continue
-                ref = f"{col_letters(cno)}{rno}"
-                if isinstance(v, str):
-                    cell_parts.append(
-                        f'<c r="{ref}" t="s"><v>{sref(v)}</v></c>'
-                    )
-                else:
-                    cell_parts.append(f'<c r="{ref}"><v>{v}</v></c>')
-            row_parts.append(f'<row r="{rno}">' + "".join(cell_parts) + "</row>")
-        sheet_xmls.append(
-            (
-                '<?xml version="1.0" encoding="UTF-8" standalone="yes"?>'
-                "<worksheet><sheetData>"
-                + "".join(row_parts)
-                + "</sheetData></worksheet>"
-            ).encode("utf-8")
-        )
-
-    wb_sheets = "".join(
-        f'<sheet name="{_xml_esc(name)}" sheetId="{i + 1}" r:id="rId{i + 1}"/>'
-        for i, (name, _) in enumerate(sheets)
-    )
-    rels = "".join(
-        f'<Relationship Id="rId{i + 1}" '
-        'Type="http://schemas.openxmlformats.org/officeDocument/2006/'
-        'relationships/worksheet" '
-        f'Target="worksheets/sheet{i + 1}.xml"/>'
-        for i in range(len(sheets))
-    )
-    sst = "".join(f"<si><t>{_xml_esc(s)}</t></si>" for s in shared)
-    members: List[Tuple[str, bytes]] = [
-        (
-            "[Content_Types].xml",
-            b'<?xml version="1.0"?><Types '
-            b'xmlns="http://schemas.openxmlformats.org/package/2006/'
-            b'content-types"/>',
-        ),
-        (
-            "xl/workbook.xml",
-            (
-                '<?xml version="1.0"?><workbook '
-                'xmlns:r="http://schemas.openxmlformats.org/officeDocument/'
-                '2006/relationships">'
-                f"<sheets>{wb_sheets}</sheets></workbook>"
-            ).encode("utf-8"),
-        ),
-        (
-            "xl/_rels/workbook.xml.rels",
-            (
-                '<?xml version="1.0"?><Relationships>' + rels + "</Relationships>"
-            ).encode("utf-8"),
-        ),
-        (
-            "xl/sharedStrings.xml",
-            (
-                f'<?xml version="1.0"?><sst count="{len(shared)}" '
-                f'uniqueCount="{len(shared)}">{sst}</sst>'
-            ).encode("utf-8"),
-        ),
-    ]
-    for i, xml in enumerate(sheet_xmls):
-        members.append((f"xl/worksheets/sheet{i + 1}.xml", xml))
-    return _write_zip(members)
-
-
-Slide = Sequence[Union[str, Sequence[Sequence[str]]]]
-
-
-def make_pptx(slides: Sequence[Slide]) -> bytes:
-    """Presentation bytes; each slide is a sequence of blocks — a string
-    becomes one ``<a:p>`` paragraph, a nested list-of-rows becomes one
-    ``<a:tbl>`` table."""
-
-    def para(text: str) -> str:
-        return f"<a:p><a:r><a:t>{_xml_esc(text)}</a:t></a:r></a:p>"
-
-    slide_xmls: List[bytes] = []
-    for blocks in slides:
-        parts: List[str] = []
-        for blk in blocks:
-            if isinstance(blk, str):
-                parts.append(para(blk))
-            else:
-                rows = "".join(
-                    "<a:tr>"
-                    + "".join(
-                        f"<a:tc><a:txBody>{para(cell)}</a:txBody></a:tc>"
-                        for cell in row
-                    )
-                    + "</a:tr>"
-                    for row in blk
-                )
-                parts.append(f"<a:tbl>{rows}</a:tbl>")
-        slide_xmls.append(
-            (
-                '<?xml version="1.0"?><p:sld '
-                'xmlns:a="http://schemas.openxmlformats.org/drawingml/2006/main" '
-                'xmlns:p="http://schemas.openxmlformats.org/presentationml/'
-                '2006/main">'
-                "<p:cSld><p:spTree><p:sp><p:txBody>"
-                + "".join(parts)
-                + "</p:txBody></p:sp></p:spTree></p:cSld></p:sld>"
-            ).encode("utf-8")
-        )
-
-    members: List[Tuple[str, bytes]] = [
-        (
-            "[Content_Types].xml",
-            b'<?xml version="1.0"?><Types '
-            b'xmlns="http://schemas.openxmlformats.org/package/2006/'
-            b'content-types"/>',
-        ),
-        (
-            "ppt/presentation.xml",
-            b'<?xml version="1.0"?><p:presentation '
-            b'xmlns:p="http://schemas.openxmlformats.org/presentationml/'
-            b'2006/main"/>',
-        ),
-    ]
-    for i, xml in enumerate(slide_xmls, start=1):
-        members.append((f"ppt/slides/slide{i}.xml", xml))
-    return _write_zip(members)

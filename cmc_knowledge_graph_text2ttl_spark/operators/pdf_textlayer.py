@@ -97,8 +97,8 @@ def _pad_password(pw: bytes) -> bytes:
 # ---------------------------------------------------------------------------
 # AES-128 (FIPS-197) — pure stdlib, for the /AESV2 crypt filter.
 # Both directions: CBC decrypt for reading encrypted PDFs, CBC encrypt
-# for building fixtures. Verified against the FIPS-197 appendix vector
-# in tests.
+# for the R6 hardened hash (and the fixture writer). Verified against
+# the FIPS-197 appendix vector in tests.
 
 _AES_SBOX = bytes.fromhex(
     "637c777bf26b6fc53001672bfed7ab76ca82c97dfa5947f0add4a2af9ca472c0"
@@ -166,13 +166,6 @@ for _x in range(256):
 _T1 = [((t >> 8) | ((t & 0xFF) << 24)) & 0xFFFFFFFF for t in _T0]
 _T2 = [((t >> 8) | ((t & 0xFF) << 24)) & 0xFFFFFFFF for t in _T1]
 _T3 = [((t >> 8) | ((t & 0xFF) << 24)) & 0xFFFFFFFF for t in _T2]
-
-
-def _aes_encrypt_block(rk: List[bytes], block: bytes) -> bytes:
-    rkw = [struct.unpack(">4I", k) for k in rk]
-    return struct.pack(
-        ">4I", *_aes_encrypt_words(rkw, *struct.unpack(">4I", block))
-    )
 
 
 def _aes_encrypt_words(rkw, w0: int, w1: int, w2: int, w3: int):
@@ -260,23 +253,6 @@ def _aes_decrypt_block(rk: List[bytes], block: bytes) -> bytes:
     return s
 
 
-def _aes_cbc_encrypt(key: bytes, iv: bytes, data: bytes) -> bytes:
-    """PKCS#7-padded CBC encrypt; returns iv + ciphertext (the PDF
-    /AESV2 stream layout, §7.6.2)."""
-    rkw = [struct.unpack(">4I", k) for k in _aes_expand_key(key)]
-    pad = 16 - len(data) % 16
-    data = data + bytes([pad]) * pad
-    out = bytearray(iv)
-    p0, p1, p2, p3 = struct.unpack(">4I", iv)
-    for i in range(0, len(data), 16):
-        b0, b1, b2, b3 = struct.unpack_from(">4I", data, i)
-        p0, p1, p2, p3 = _aes_encrypt_words(
-            rkw, p0 ^ b0, p1 ^ b1, p2 ^ b2, p3 ^ b3
-        )
-        out += struct.pack(">4I", p0, p1, p2, p3)
-    return bytes(out)
-
-
 def _aes_cbc_raw(key: bytes, iv: bytes, data: bytes, encrypt: bool) -> bytes:
     """Unpadded CBC in either direction (data must be whole blocks) —
     used by the AES-256 handler's /UE//OE key unwrapping (iv = zeros,
@@ -355,22 +331,16 @@ def _aes256_file_key(
 
 
 def _aes_cbc_decrypt(key: bytes, data: bytes) -> bytes:
-    """Inverse of :func:`_aes_cbc_encrypt`: data = iv + ciphertext.
-    Raises PdfParseError on bad layout or padding (per-row isolation)."""
+    """PKCS#7-padded CBC decrypt of data = iv + ciphertext (the PDF
+    /AESV2 stream layout, §7.6.2). Raises PdfParseError on bad layout
+    or padding (per-row isolation)."""
     if len(data) < 32 or len(data) % 16:
         raise PdfParseError("AES stream not a whole number of blocks")
-    rk = _aes_expand_key(key)
-    iv, ct = data[:16], data[16:]
-    out = bytearray()
-    prev = iv
-    for i in range(0, len(ct), 16):
-        blk = ct[i : i + 16]
-        out += bytes(a ^ b for a, b in zip(_aes_decrypt_block(rk, blk), prev))
-        prev = blk
+    out = _aes_cbc_raw(key, data[:16], data[16:], encrypt=False)
     pad = out[-1]
     if not 1 <= pad <= 16 or out[-pad:] != bytes([pad]) * pad:
         raise PdfParseError("AES stream has invalid padding")
-    return bytes(out[:-pad])
+    return out[:-pad]
 
 
 def _std_file_key(
@@ -395,20 +365,6 @@ def _std_file_key(
         for _ in range(50):
             key = hashlib.md5(key[:n]).digest()
     return key[:n]
-
-
-def _std_owner_value(owner_pw: bytes, user_pw: bytes, rev: int, n: int) -> bytes:
-    """Algorithm 3: the /O entry."""
-    key = hashlib.md5(_pad_password(owner_pw)).digest()
-    if rev >= 3:
-        for _ in range(50):
-            key = hashlib.md5(key[:n]).digest()
-    rc4key = key[:n]
-    o = _rc4(rc4key, _pad_password(user_pw))
-    if rev >= 3:
-        for i in range(1, 20):
-            o = _rc4(bytes(b ^ i for b in rc4key), o)
-    return o
 
 
 def _std_user_value(file_key: bytes, fid: bytes, rev: int) -> bytes:
@@ -1256,296 +1212,3 @@ def pdf_bytes_to_page_models_stdlib(data: bytes) -> List[PageModel]:
         words, rects = _interpret_content(content, height)
         models.append(PageModel(words=words, line_rects=rects, page_no=page_no))
     return models
-
-
-# ---------------------------------------------------------------------------
-# Deterministic PDF writer (fixtures / gate corpora — NOT a general
-# producer; it emits exactly the subset the parser above supports)
-
-# make_table_pdf's fixed page and grid geometry, in PDF points
-_PAGE_W, _PAGE_H = 612.0, 792.0
-_X0, _Y_TOP = 100.0, 700.0
-_COL_W, _ROW_H = 80.0, 20.0
-_FONTSIZE = 10.0
-_LINE_W = 0.8
-
-
-def _pdf_escape(s: str) -> str:
-    return s.replace("\\", r"\\").replace("(", r"\(").replace(")", r"\)")
-
-
-def make_table_pdf(
-    cell_texts: List[List[str]],
-    title: Optional[str] = None,
-    compress: bool = False,
-    objstm: bool = False,
-    encrypt: bool = False,
-) -> bytes:
-    """One-page PDF with an optional title paragraph and a ruled table
-    whose grid the geometric recognizer detects (4+ lines per axis).
-
-    Deterministic for fixed inputs; ``compress=True`` Flate-encodes the
-    content stream (both decode paths stay gate-testable).
-    ``objstm=True`` emits the PDF 1.5 layout real generators default
-    to: catalog/pages/page/font dicts packed into a Flate ``/ObjStm``
-    (NO raw ``N 0 obj`` markers for them) and a ``/Type /XRef``
-    cross-reference STREAM with PNG Up-predicted /W-packed entries —
-    the file is only readable through the xref-stream + ObjStm path.
-    ``encrypt=True`` (or ``"rc4"``; classic layout only) applies the
-    Standard security handler, RC4-128 R3, empty user password, owner
-    password "owner" — stream payloads RC4-encrypted with per-object
-    keys, /O and /U computed per Algorithms 3/5, /ID derived from the
-    content. ``encrypt="aesv2"`` emits the post-Acrobat-7 default
-    instead: /V 4 /R 4 with an /AESV2 StdCF crypt filter, streams
-    AES-128-CBC with a content-derived deterministic IV.
-    """
-    if encrypt and objstm:
-        raise ValueError("encrypt fixture supports the classic layout only")
-    if encrypt not in (False, True, "rc4", "aesv2", "aes256"):
-        raise ValueError(
-            f"encrypt must be bool, 'rc4', 'aesv2' or 'aes256', got {encrypt!r}"
-        )
-    n_rows = len(cell_texts)
-    n_cols = len(cell_texts[0]) if n_rows else 0
-    if n_rows < 3 or n_cols < 3:
-        raise ValueError("recognizer needs >= 3x3 cells (4+ grid lines per axis)")
-    ops: List[str] = []
-    if title:
-        ops.append(
-            f"BT /F1 {_FONTSIZE:g} Tf {_X0:g} {_Y_TOP + 40:g} Td "
-            f"({_pdf_escape(title)}) Tj ET"
-        )
-    # grid: (n_rows+1) horizontal, (n_cols+1) vertical thin filled rects
-    x1 = _X0 + n_cols * _COL_W
-    y_bot = _Y_TOP - n_rows * _ROW_H
-    for r in range(n_rows + 1):
-        yy = _Y_TOP - r * _ROW_H
-        ops.append(f"{_X0:g} {yy - _LINE_W:g} {x1 - _X0:g} {_LINE_W:g} re f")
-    for c in range(n_cols + 1):
-        xx = _X0 + c * _COL_W
-        ops.append(f"{xx:g} {y_bot - _LINE_W:g} {_LINE_W:g} {_Y_TOP - y_bot:g} re f")
-    # one word block per cell, offset inside the cell
-    for r, row in enumerate(cell_texts):
-        for c, text in enumerate(row):
-            if not text:
-                continue
-            tx = _X0 + c * _COL_W + 5
-            ty = _Y_TOP - r * _ROW_H - _ROW_H / 2 - _FONTSIZE * 0.3
-            ops.append(
-                f"BT /F1 {_FONTSIZE:g} Tf {tx:g} {ty:g} Td "
-                f"({_pdf_escape(text)}) Tj ET"
-            )
-    content = "\n".join(ops).encode("latin-1")
-    if compress:
-        stream = zlib.compress(content, 6)
-        filt = " /Filter /FlateDecode"
-    else:
-        stream = content
-        filt = ""
-
-    objs: List[bytes] = []
-    objs.append(b"<< /Type /Catalog /Pages 2 0 R >>")
-    objs.append(
-        f"<< /Type /Pages /Kids [3 0 R] /Count 1 "
-        f"/MediaBox [0 0 {_PAGE_W:g} {_PAGE_H:g}] >>".encode()
-    )
-    objs.append(
-        b"<< /Type /Page /Parent 2 0 R /Contents 4 0 R "
-        b"/Resources << /Font << /F1 5 0 R >> >> >>"
-    )
-    objs.append(
-        f"<< /Length {len(stream)}{filt} >>\nstream\n".encode()
-        + stream
-        + b"\nendstream"
-    )
-    objs.append(b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>")
-
-    if objstm:
-        return _assemble_pdf15(objs)
-
-    trailer_extra = ""
-    if encrypt == "aes256":
-        # /V 5 /R 6 (ISO 32000-2): 48-byte /U = hash + vsalt + ksalt,
-        # file key unwrapped from /UE; streams AES-256-CBC under the
-        # file key directly (no per-object derivation). The file id,
-        # key and IV are content-derived so the fixture stays
-        # deterministic per document; the FOUR KDF salts are fixed
-        # constants so the ~0.25 s Algorithm-2.B hash (the dominant
-        # fixture cost at corpus scale — ~79k pure-Python AES blocks
-        # per call) hits _hash_2b's lru_cache after the first document
-        # on each worker. Extraction security is unaffected: the
-        # per-document file key is still unique and still unwrapped
-        # through the full /UE path.
-        fid = hashlib.md5(b"kg-fixture-id:" + content).digest()
-        file_key = hashlib.sha256(b"kg-aes256-key:" + content).digest()
-        vsalt = b"kgvsalt0"
-        ksalt = b"kgksalt0"
-        u_val = _hash_2b(b"", vsalt) + vsalt + ksalt
-        ue_val = _aes_cbc_raw(
-            _hash_2b(b"", ksalt), b"\x00" * 16, file_key, encrypt=True
-        )
-        ovs = b"kgovsal0"
-        oks = b"kgoksal0"
-        o_val = _hash_2b(b"owner", ovs, u_val) + ovs + oks
-        oe_val = _aes_cbc_raw(
-            _hash_2b(b"owner", oks, u_val), b"\x00" * 16, file_key,
-            encrypt=True,
-        )
-        p = -3904
-        perms_blob = (
-            struct.pack("<i", p) + b"\xff\xff\xff\xff" + b"Tadb"
-            + hashlib.md5(content).digest()[:4]
-        )
-        perms = _aes_encrypt_block(_aes_expand_key(file_key), perms_blob)
-        iv = hashlib.md5(b"kg-aes-iv:" + content).digest()[:16]
-        enc_stream = _aes_cbc_encrypt(file_key, iv, stream)
-        objs[3] = (
-            f"<< /Length {len(enc_stream)}{filt} >>\nstream\n".encode()
-            + enc_stream
-            + b"\nendstream"
-        )
-
-        def hx5(b: bytes) -> str:
-            return "<" + b.hex() + ">"
-
-        objs.append(
-            (
-                "<< /Filter /Standard /V 5 /R 6 /Length 256 "
-                "/CF << /StdCF << /CFM /AESV3 /AuthEvent /DocOpen "
-                "/Length 32 >> >> /StmF /StdCF /StrF /StdCF "
-                f"/P {p} /O {hx5(o_val)} /OE {hx5(oe_val)} "
-                f"/U {hx5(u_val)} /UE {hx5(ue_val)} "
-                f"/Perms {hx5(perms)} >>"
-            ).encode()
-        )
-        trailer_extra = (
-            f" /Encrypt {len(objs)} 0 R /ID [{hx5(fid)} {hx5(fid)}]"
-        )
-    elif encrypt:
-        aes = encrypt == "aesv2"
-        rev, n = (4, 16) if aes else (3, 16)
-        fid = hashlib.md5(b"kg-fixture-id:" + content).digest()
-        o_val = _std_owner_value(b"owner", b"", rev, n)
-        p = -3904  # print/copy denied — a typical protected-PDF mask
-        file_key = _std_file_key(o_val, p, fid, rev, n)
-        u_val = _std_user_value(file_key, fid, rev)
-
-        def objkey(num: int) -> bytes:
-            h = hashlib.md5(
-                file_key
-                + struct.pack("<I", num)[:3]
-                + struct.pack("<I", 0)[:2]
-                + (b"sAlT" if aes else b"")
-            ).digest()
-            return h[:16]
-
-        # re-encrypt the content stream (object 4) payload in place
-        if aes:
-            iv = hashlib.md5(b"kg-aes-iv:" + content).digest()[:16]
-            enc_stream = _aes_cbc_encrypt(objkey(4), iv, stream)
-        else:
-            enc_stream = _rc4(objkey(4), stream)
-        objs[3] = (
-            f"<< /Length {len(enc_stream)}{filt} >>\nstream\n".encode()
-            + enc_stream
-            + b"\nendstream"
-        )
-
-        def hx(b: bytes) -> str:
-            return "<" + b.hex() + ">"
-
-        if aes:
-            enc_dict = (
-                "<< /Filter /Standard /V 4 /R 4 /Length 128 "
-                "/CF << /StdCF << /CFM /AESV2 /AuthEvent /DocOpen "
-                "/Length 16 >> >> /StmF /StdCF /StrF /StdCF "
-                f"/P {p} /O {hx(o_val)} /U {hx(u_val)} >>"
-            )
-        else:
-            enc_dict = (
-                "<< /Filter /Standard /V 2 /R 3 /Length 128 "
-                f"/P {p} /O {hx(o_val)} /U {hx(u_val)} >>"
-            )
-        objs.append(enc_dict.encode())
-        trailer_extra = (
-            f" /Encrypt {len(objs)} 0 R /ID [{hx(fid)} {hx(fid)}]"
-        )
-
-    out = bytearray(b"%PDF-1.4\n")
-    offsets: List[int] = []
-    for i, body in enumerate(objs, start=1):
-        offsets.append(len(out))
-        out += f"{i} 0 obj\n".encode() + body + b"\nendobj\n"
-    xref_pos = len(out)
-    out += f"xref\n0 {len(objs) + 1}\n".encode()
-    out += b"0000000000 65535 f \n"
-    for off in offsets:
-        out += f"{off:010d} 00000 n \n".encode()
-    out += (
-        f"trailer\n<< /Size {len(objs) + 1} /Root 1 0 R{trailer_extra} >>\n"
-        f"startxref\n{xref_pos}\n%%EOF\n".encode()
-    )
-    return bytes(out)
-
-
-def _assemble_pdf15(objs: List[bytes]) -> bytes:
-    """PDF 1.5 assembly for :func:`make_table_pdf`: objects 1,2,3,5
-    (the dicts) packed into a Flate /ObjStm as object 6; object 4 (the
-    content stream) stays top-level; object 7 is the /Type /XRef
-    stream, /W [1 3 2] entries under a PNG Up predictor. Deterministic
-    for fixed inputs."""
-    packed_nums = [1, 2, 3, 5]
-    header = bytearray()
-    body = bytearray()
-    offs = []
-    for num in packed_nums:
-        offs.append(len(body))
-        body += objs[num - 1] + b"\n"
-    for num, off in zip(packed_nums, offs):
-        header += f"{num} {off} ".encode()
-    payload = bytes(header) + bytes(body)
-    objstm_stream = zlib.compress(payload, 6)
-
-    out = bytearray(b"%PDF-1.5\n")
-    offsets: Dict[int, int] = {}
-    offsets[4] = len(out)
-    out += b"4 0 obj\n" + objs[3] + b"\nendobj\n"
-    offsets[6] = len(out)
-    out += (
-        f"6 0 obj\n<< /Type /ObjStm /N {len(packed_nums)} "
-        f"/First {len(header)} /Filter /FlateDecode "
-        f"/Length {len(objstm_stream)} >>\nstream\n".encode()
-        + objstm_stream
-        + b"\nendstream\nendobj\n"
-    )
-    offsets[7] = len(out)
-
-    # xref entries for objects 0..7: /W [1 3 2] → 6 bytes each
-    def entry(etype: int, f2: int, f3: int) -> bytes:
-        return bytes([etype]) + f2.to_bytes(3, "big") + f3.to_bytes(2, "big")
-
-    rows = [entry(0, 0, 0xFFFF)]  # object 0: free
-    for num in range(1, 8):
-        if num in packed_nums:
-            rows.append(entry(2, 6, packed_nums.index(num)))
-        else:
-            rows.append(entry(1, offsets[num], 0))
-    # PNG Up predictor over 6-byte rows (what real generators emit)
-    rowlen = 6
-    pred = bytearray()
-    prev = bytes(rowlen)
-    for r in rows:
-        pred.append(2)
-        pred += bytes((r[j] - prev[j]) & 0xFF for j in range(rowlen))
-        prev = r
-    xref_stream = zlib.compress(bytes(pred), 6)
-    out += (
-        f"7 0 obj\n<< /Type /XRef /Size 8 /W [1 3 2] /Index [0 8] "
-        f"/Root 1 0 R /Filter /FlateDecode "
-        f"/DecodeParms << /Predictor 12 /Columns {rowlen} >> "
-        f"/Length {len(xref_stream)} >>\nstream\n".encode()
-        + xref_stream
-        + b"\nendstream\nendobj\n"
-    )
-    out += f"startxref\n{offsets[7]}\n%%EOF\n".encode()
-    return bytes(out)

@@ -24,10 +24,11 @@ Tika's plain-text handler does.
 
 from __future__ import annotations
 
+import html as _html
 import re
-from typing import List, Sequence, Union
+from typing import List
 
-__all__ = ["rtf_to_xhtml_text", "make_rtf"]
+__all__ = ["rtf_to_xhtml_text"]
 
 # one token: control word (letters + optional signed parameter + one
 # optional trailing space), control symbol, group delimiter, or a run
@@ -104,7 +105,7 @@ def _esc(s: str) -> str:
         s = "".join(
             "�" if 0xD800 <= ord(c) < 0xE000 else c for c in s
         )
-    return s.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;")
+    return _html.escape(s, quote=False)
 
 
 def rtf_to_xhtml_text(data: bytes) -> str:
@@ -272,61 +273,3 @@ def rtf_to_xhtml_text(data: bytes) -> str:
         cells.clear()
     flush_para()
     return "<html><body>" + "".join(body) + "</body></html>"
-
-
-Block = Union[str, Sequence[Sequence[str]]]
-
-
-def _rtf_escape(s: str) -> str:
-    out: List[str] = []
-    for ch in s:
-        if ch in "\\{}":
-            out.append("\\" + ch)
-        elif ch == "\t":
-            out.append("\\tab ")
-        elif ch == "\n":
-            out.append("\\line ")
-        elif ord(ch) < 128:
-            out.append(ch)
-        elif ord(ch) < 256:
-            out.append(f"\\'{ord(ch.encode('cp1252', 'replace')):02x}")
-        else:
-            cp = ord(ch)
-            if cp > 0xFFFF:  # non-BMP → surrogate pair, as Word writes it
-                cp -= 0x10000
-                hi, lo = 0xD800 + (cp >> 10), 0xDC00 + (cp & 0x3FF)
-                for unit in (hi, lo):
-                    signed = unit - 65536 if unit > 32767 else unit
-                    out.append(f"\\u{signed}?")
-            else:
-                signed = cp - 65536 if cp > 32767 else cp
-                out.append(f"\\u{signed}?")
-    return "".join(out)
-
-
-def make_rtf(blocks: Sequence[Block]) -> bytes:
-    """Deterministic RTF fixture bytes; a string block becomes one
-    paragraph, a list-of-rows block one table. Emits the header
-    destinations (fonttbl/colortbl/generator) real writers emit so the
-    reader's destination skipping is exercised on every fixture."""
-    parts: List[str] = [
-        "{\\rtf1\\ansi\\ansicpg1252\\deff0\\uc1",
-        "{\\fonttbl{\\f0\\froman Times New Roman;}{\\f1\\fswiss Arial;}}",
-        "{\\colortbl;\\red0\\green0\\blue0;\\red255\\green0\\blue0;}",
-        "{\\*\\generator kg-fixture 1.0;}",
-        "{\\stylesheet{\\s0 Normal;}}",
-    ]
-    for blk in blocks:
-        if isinstance(blk, str):
-            parts.append("\\pard\\f0\\fs24 " + _rtf_escape(blk) + "\\par")
-        else:
-            for row in blk:
-                parts.append("\\trowd\\trgaph108")
-                parts.append(
-                    "".join(
-                        "\\intbl " + _rtf_escape(cell) + "\\cell" for cell in row
-                    )
-                )
-                parts.append("\\row")
-    parts.append("}")
-    return "".join(parts).encode("cp1252", "replace")

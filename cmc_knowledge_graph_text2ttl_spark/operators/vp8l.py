@@ -1,6 +1,6 @@
-"""WebP-lossless (VP8L) codec — pure stdlib, fixture-grade encoder +
-web-grade decoder for the subset that can be implemented from the
-format's published structure without risking silent corruption.
+"""WebP-lossless (VP8L) codec — pure stdlib, web-grade decoder for the
+subset that can be implemented from the format's published structure
+without risking silent corruption.
 
 Why: blank/simple thumbnails — the hottest perceptual-dedup cluster on
 the web — are commonly re-encoded as lossless WebP (palettized or
@@ -30,14 +30,14 @@ one, and the decoded geometry is exercised by hand-built streams
 → left), and `ClampAddSubtractHalf` replicates C's truncate-
 toward-zero division — both match libwebp's decoder.
 
-The encoder (``encode_vp8l``) writes canonical prefix-coded literal
-streams and can optionally emit SUBTRACT_GREEN / single-block
-PREDICTOR / single-block COLOR transforms (fixture knobs, forward
-transforms computed here) — byte-valid per the spec, and round-trips
-through the decoder bit-exactly (property-tested). Both sides share
-ONE canonical-code constructor and ONE predictor kernel, so the
-bit-level wiring cannot drift; the kernels themselves are covered by
-known-answer tests with hand-computed pixels.
+The fixture encoder (in the repo-root ``fixture_writers.py``) writes
+canonical prefix-coded literal streams and can optionally emit
+SUBTRACT_GREEN / single-block PREDICTOR / single-block COLOR
+transforms — byte-valid per the spec, and round-trips through the
+decoder bit-exactly (property-tested). Both sides share ONE
+canonical-code constructor and ONE predictor kernel from this module,
+so the bit-level wiring cannot drift; the kernels themselves are
+covered by known-answer tests with hand-computed pixels.
 
 Bit order: fixed-width fields are LSB-first; prefix codes descend the
 tree one bit at a time (code MSB first), exactly the DEFLATE packing
@@ -49,7 +49,7 @@ from __future__ import annotations
 import struct
 from typing import Dict, List, Optional, Sequence, Tuple
 
-__all__ = ["decode_vp8l", "encode_vp8l", "decode_webp", "encode_webp_lossless"]
+__all__ = ["decode_vp8l", "decode_webp"]
 
 # order in which code-length-code lengths are stored (spec constant)
 _CL_ORDER = (17, 18, 0, 1, 2, 3, 4, 5, 16, 6, 7, 8, 9, 10, 11, 12, 13, 14, 15)
@@ -169,16 +169,6 @@ def _add_px(a: int, b: int) -> int:
     )
 
 
-def _sub_px(a: int, b: int) -> int:
-    """Per-channel (a-b) mod 256 on packed ARGB (forward residual)."""
-    return (
-        (((a >> 24) - (b >> 24)) & 0xFF) << 24
-        | ((((a >> 16) & 0xFF) - ((b >> 16) & 0xFF)) & 0xFF) << 16
-        | ((((a >> 8) & 0xFF) - ((b >> 8) & 0xFF)) & 0xFF) << 8
-        | (((a & 0xFF) - (b & 0xFF)) & 0xFF)
-    )
-
-
 def _color_deltas(cte: int) -> Tuple[int, int, int]:
     """cte pixel -> (green_to_red, green_to_blue, red_to_blue) as
     signed int8: blue channel, green channel, red channel."""
@@ -202,25 +192,6 @@ class _BitReader:
 
     def bit(self) -> int:
         return self.read(1)
-
-
-class _BitWriter:
-    def __init__(self) -> None:
-        self.out = bytearray()
-        self.bitpos = 0
-
-    def write(self, value: int, n: int) -> None:
-        for i in range(n):
-            if self.bitpos == 0:
-                self.out.append(0)
-            if (value >> i) & 1:
-                self.out[-1] |= 1 << self.bitpos
-            self.bitpos = (self.bitpos + 1) & 7
-
-    def write_code(self, code: int, length: int) -> None:
-        """Prefix code bits, MSB of the code first."""
-        for i in range(length - 1, -1, -1):
-            self.write((code >> i) & 1, 1)
 
 
 def _canonical_codes(lengths: Sequence[int]) -> Dict[int, Tuple[int, int]]:
@@ -585,266 +556,7 @@ def decode_webp(data: bytes) -> Tuple[int, int, int, bytes]:
 
 
 # ---------------------------------------------------------------------------
-# Encoder (fixture counterpart): no transforms, no cache, literal-only.
-
-
-def _huffman_lengths(freqs: Dict[int, int], alphabet_size: int) -> List[int]:
-    """Code lengths from frequencies (max depth 15; falls back to a
-    flat code if the tree would exceed it — cannot happen for the
-    small fixture alphabets, but the guard keeps the encoder total)."""
-    import heapq
-    import itertools
-
-    used = [(f, s) for s, f in freqs.items() if f > 0]
-    lengths = [0] * alphabet_size
-    if not used:
-        return lengths
-    if len(used) == 1:
-        lengths[used[0][1]] = 1
-        return lengths
-    counter = itertools.count()
-    heap = [(f, next(counter), [s]) for f, s in used]
-    heapq.heapify(heap)
-    depth: Dict[int, int] = {s: 0 for _, s in used}
-    while len(heap) > 1:
-        f1, _, s1 = heapq.heappop(heap)
-        f2, _, s2 = heapq.heappop(heap)
-        for s in s1 + s2:
-            depth[s] += 1
-        heapq.heappush(heap, (f1 + f2, next(counter), s1 + s2))
-    if max(depth.values()) > 15:
-        flat = max(1, (len(used) - 1).bit_length())
-        for _, s in used:
-            lengths[s] = flat
-        return lengths
-    for s, d in depth.items():
-        lengths[s] = d
-    return lengths
-
-
-def _write_tree(bw: _BitWriter, lengths: List[int]) -> None:
-    used = [s for s, ln in enumerate(lengths) if ln > 0]
-    if len(used) <= 2 and all(s <= 255 for s in used) and (
-        not used or max(lengths[s] for s in used) <= 1 or len(used) == 1
-    ):
-        # simple code
-        bw.write(1, 1)
-        if not used:
-            used = [0]
-        bw.write(len(used) - 1, 1)
-        if used[0] > 1:
-            bw.write(1, 1)  # 8-bit first symbol
-            bw.write(used[0], 8)
-        else:
-            bw.write(0, 1)
-            bw.write(used[0], 1)
-        if len(used) == 2:
-            bw.write(used[1], 8)
-        return
-    bw.write(0, 1)  # normal code
-    # RLE the lengths: literals + zero-runs via 17/18
-    tokens: List[Tuple[int, int]] = []  # (cl_symbol, extra_value)
-    i = 0
-    n = len(lengths)
-    while i < n:
-        if lengths[i] == 0:
-            j = i
-            while j < n and lengths[j] == 0:
-                j += 1
-            run = j - i
-            while run >= 11:
-                r = min(run, 138)
-                tokens.append((18, r - 11))
-                run -= r
-            while run >= 3:
-                r = min(run, 10)
-                tokens.append((17, r - 3))
-                run -= r
-            for _ in range(run):
-                tokens.append((0, 0))
-            i = j
-        else:
-            tokens.append((lengths[i], 0))
-            i += 1
-    cl_freq: Dict[int, int] = {}
-    for sym, _ in tokens:
-        cl_freq[sym] = cl_freq.get(sym, 0) + 1
-    cl_lengths = _huffman_lengths(cl_freq, 19)
-    if max(cl_lengths) > 7:
-        raise ValueError("code-length code exceeds 3-bit field")
-    # find how many ORDER entries we must write to cover all nonzero
-    num_cl = 19
-    while num_cl > 4 and cl_lengths[_CL_ORDER[num_cl - 1]] == 0:
-        num_cl -= 1
-    bw.write(num_cl - 4, 4)
-    for i in range(num_cl):
-        bw.write(cl_lengths[_CL_ORDER[i]], 3)
-    bw.write(0, 1)  # no explicit max_symbol
-    cl_codes = _canonical_codes(cl_lengths)
-    single_cl = len([ln for ln in cl_lengths if ln]) == 1
-    for sym, extra in tokens:
-        if not single_cl:
-            code, ln = cl_codes[sym]
-            bw.write_code(code, ln)
-        # a single-symbol code-length tree consumes zero bits
-        if sym == 17:
-            bw.write(extra, 3)
-        elif sym == 18:
-            bw.write(extra, 7)
-        elif sym == 16:
-            bw.write(extra, 2)
-
-
-def _write_literal_stream(
-    bw: _BitWriter, argb: Sequence[int], is_main: bool
-) -> None:
-    """Entropy-coded image of plain literals (no cache, no meta, no
-    LZ77) with canonical prefix codes — shared by the main image and
-    the transform sub-images."""
-    bw.write(0, 1)  # no color cache
-    if is_main:
-        bw.write(0, 1)  # no meta prefix codes
-    gs = [(p >> 8) & 0xFF for p in argb]
-    rs = [(p >> 16) & 0xFF for p in argb]
-    bs = [p & 0xFF for p in argb]
-    As = [(p >> 24) & 0xFF for p in argb]
-
-    def freq(vals: List[int]) -> Dict[int, int]:
-        f: Dict[int, int] = {}
-        for v in vals:
-            f[v] = f.get(v, 0) + 1
-        return f
-
-    g_len = _huffman_lengths(freq(gs), 256 + 24)
-    r_len = _huffman_lengths(freq(rs), 256)
-    b_len = _huffman_lengths(freq(bs), 256)
-    a_len = _huffman_lengths(freq(As), 256)
-    d_len = [0] * 40  # no distance symbols used
-    for lens in (g_len, r_len, b_len, a_len, d_len):
-        _write_tree(bw, lens)
-    codes = [
-        _canonical_codes(lens) for lens in (g_len, r_len, b_len, a_len)
-    ]
-    singles = [len(c) <= 1 for c in codes]
-    for i in range(len(argb)):
-        for ch, vals in enumerate((gs, rs, bs, As)):
-            if not singles[ch]:
-                bw.write_code(*codes[ch][vals[i]])
-
-
-def encode_vp8l(
-    width: int,
-    height: int,
-    pixels: bytes,
-    channels: int = 3,
-    transforms: Sequence = (),
-) -> bytes:
-    """Deterministic VP8L payload: literal streams (no cache, no LZ77)
-    with real canonical prefix codes, optionally behind forward
-    transforms so the decoder's inverse paths are exercised end to
-    end.  ``pixels`` is interleaved RGB (channels=3, alpha=255) or
-    RGBA (channels=4).  ``transforms`` entries, applied in order:
-    ``"subtract_green"``, ``("predictor", mode)`` (one whole-image
-    block, modes 0-13), ``("color", (g2r, g2b, r2b))`` (one
-    whole-image cte, deltas as signed ints)."""
-    if channels not in (3, 4):
-        raise ValueError("encode_vp8l supports RGB or RGBA input")
-    if len(pixels) != width * height * channels:
-        raise ValueError("pixel buffer size mismatch")
-    if not (1 <= width <= 1 << 14 and 1 <= height <= 1 << 14):
-        raise ValueError("VP8L dimensions out of range")
-    n = width * height
-    argb: List[int] = []
-    for i in range(n):
-        o = i * channels
-        a = pixels[o + 3] if channels == 4 else 255
-        argb.append(
-            (a << 24) | (pixels[o] << 16) | (pixels[o + 1] << 8) | pixels[o + 2]
-        )
-
-    bw = _BitWriter()
-    bw.write(0x2F, 8)
-    bw.write(width - 1, 14)
-    bw.write(height - 1, 14)
-    bw.write(1 if channels == 4 else 0, 1)  # alpha hint
-    bw.write(0, 3)  # version
-
-    size_bits = 9  # max block (512) -> one block covers fixture images
-    block_w = (width + (1 << size_bits) - 1) >> size_bits
-    block_h = (height + (1 << size_bits) - 1) >> size_bits
-    for t in transforms:
-        if t == "subtract_green":
-            bw.write(1, 1)
-            bw.write(2, 2)
-            argb = [
-                (v & 0xFF00FF00)
-                | ((((v >> 16) & 0xFF) - ((v >> 8) & 0xFF)) & 0xFF) << 16
-                | (((v & 0xFF) - ((v >> 8) & 0xFF)) & 0xFF)
-                for v in argb
-            ]
-        elif t[0] == "predictor":
-            mode = t[1]
-            if not 0 <= mode <= 13:
-                raise ValueError("predictor mode out of range")
-            bw.write(1, 1)
-            bw.write(0, 2)
-            bw.write(size_bits - 2, 3)
-            sub = [0xFF000000 | (mode << 8)] * (block_w * block_h)
-            _write_literal_stream(bw, sub, is_main=False)
-            argb = [
-                _sub_px(
-                    argb[y * width + x],
-                    _predict(argb, width, x, y, size_bits, sub, block_w),
-                )
-                for y in range(height)
-                for x in range(width)
-            ]
-        elif t[0] == "color":
-            g2r, g2b, r2b = (d & 0xFF for d in t[1])
-            bw.write(1, 1)
-            bw.write(1, 2)
-            bw.write(size_bits - 2, 3)
-            cte = 0xFF000000 | (r2b << 16) | (g2b << 8) | g2r
-            _write_literal_stream(
-                bw, [cte] * (block_w * block_h), is_main=False
-            )
-            out: List[int] = []
-            for v in argb:
-                g = _i8((v >> 8) & 0xFF)
-                r0 = (v >> 16) & 0xFF
-                r = (r0 - ((_i8(g2r) * g) >> 5)) & 0xFF
-                b = (
-                    (v & 0xFF)
-                    - ((_i8(g2b) * g) >> 5)
-                    - ((_i8(r2b) * _i8(r0)) >> 5)
-                ) & 0xFF
-                out.append((v & 0xFF00FF00) | (r << 16) | b)
-            argb = out
-        else:
-            raise ValueError(f"unknown encoder transform {t!r}")
-    bw.write(0, 1)  # no more transforms
-    _write_literal_stream(bw, argb, is_main=True)
-    return bytes(bw.out)
-
-
-def encode_webp_lossless(
-    width: int,
-    height: int,
-    pixels: bytes,
-    channels: int = 3,
-    transforms: Sequence = (),
-) -> bytes:
-    """Full RIFF WebP container around :func:`encode_vp8l`."""
-    payload = encode_vp8l(width, height, pixels, channels, transforms)
-    chunk = b"VP8L" + struct.pack("<I", len(payload)) + payload
-    if len(payload) & 1:
-        chunk += b"\x00"
-    body = b"WEBP" + chunk
-    return b"RIFF" + struct.pack("<I", len(body)) + body
-
-
-# ---------------------------------------------------------------------------
-# Animated WebP container (VP8X + ANIM + ANMF): parse/encode only — frame
+# Animated WebP container (VP8X + ANIM + ANMF): parse only — frame
 # compositing lives in multimodal._compose_anim, shared with APNG.
 
 
@@ -907,44 +619,3 @@ def parse_webp_anim(data: bytes):
     if not frames:
         raise ValueError("animated WebP without ANMF frames")
     return canvas[0], canvas[1], frames
-
-
-def _p24(v: int) -> bytes:
-    return bytes((v & 0xFF, (v >> 8) & 0xFF, (v >> 16) & 0xFF))
-
-
-def encode_webp_anim(
-    canvas_w: int,
-    canvas_h: int,
-    frames,
-    loop: int = 0,
-) -> bytes:
-    """Deterministic animated-WebP fixture: VP8X(anim) + ANIM + one
-    ANMF per frame, each embedding :func:`encode_vp8l` output. Frames
-    are (x, y, fw, fh, pixels, channels, dispose, blend) with the
-    shared codes; x/y must be even (the format stores offsets /2)."""
-
-    def chunk(cid: bytes, body: bytes) -> bytes:
-        out = cid + struct.pack("<I", len(body)) + body
-        return out + (b"\x00" if len(body) & 1 else b"")
-
-    vp8x = bytes([0x02, 0, 0, 0]) + _p24(canvas_w - 1) + _p24(canvas_h - 1)
-    anim = struct.pack("<IH", 0, loop)  # transparent-black bg, loop count
-    body = chunk(b"VP8X", vp8x) + chunk(b"ANIM", anim)
-    for x, y, fw, fh, pixels, channels, dispose, blend in frames:
-        if x % 2 or y % 2:
-            raise ValueError("ANMF offsets must be even")
-        payload = encode_vp8l(fw, fh, pixels, channels)
-        flags = (dispose & 0x01) | (0x00 if blend else 0x02)
-        anmf = (
-            _p24(x // 2)
-            + _p24(y // 2)
-            + _p24(fw - 1)
-            + _p24(fh - 1)
-            + _p24(4)  # duration ms
-            + bytes([flags])
-            + chunk(b"VP8L", payload)
-        )
-        body += chunk(b"ANMF", anmf)
-    full = b"WEBP" + body
-    return b"RIFF" + struct.pack("<I", len(full)) + full

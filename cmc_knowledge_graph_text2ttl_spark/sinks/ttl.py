@@ -100,30 +100,17 @@ def triples_to_nt_lines(rows: List[tuple]) -> List[str]:
     return sorted(out)
 
 
-_RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
-
-
 def serialize_turtle(
     rows: List[tuple],
     prefixes: Optional[Dict[str, str]] = None,
-    style: str = "canonical",
 ) -> str:
     """Deterministic Turtle for small per-document graphs (driver-side,
-    mirrors the reference's per-doc .ttl outputs).
-
-    ``style='canonical'`` (default) is this engine's diff-friendly form:
-    ``@prefix`` header, subject blocks, one ``pred obj`` per line.
-
-    ``style='longturtle'`` follows the layout of rdflib's ``longturtle``
-    serializer — the format the reference writes (processor.py:77-83):
-    ``PREFIX`` headers, ``a`` first, one predicate per line, multiple
-    objects each on their own deeper-indented line separated by commas,
-    and the closing ``.`` on its own line. Shape-compatible for diffing
-    against reference output files; exotic inputs (blank nodes, lists)
-    are out of scope for both writers.
+    mirrors the reference's per-doc .ttl outputs): ``@prefix`` header,
+    subject blocks, one ``pred obj`` per line. The layout is this
+    engine's diff-friendly form, not rdflib's ``longturtle``; outputs
+    are compared as triple sets, not layouts. Exotic inputs (blank
+    nodes, lists) are out of scope.
     """
-    if style not in ("canonical", "longturtle"):
-        raise ValueError(f"style must be 'canonical' or 'longturtle', got {style!r}")
     prefixes = dict(prefixes or {})
 
     def shorten(iri: str) -> str:
@@ -149,49 +136,17 @@ def serialize_turtle(
             return f'"{esc}"^^{shorten(dt)}'
         return f'"{esc}"'
 
-    if style == "canonical":
-        by_subj: Dict[str, List[str]] = {}
-        for subj, pred, kind, lex, lang, dt in sorted(rows):
-            by_subj.setdefault(subj, []).append(
-                f"    {shorten(pred)} {term(kind, lex, lang, dt)}"
-            )
-        parts = [f"@prefix {p}: <{ns}> ." for p, ns in sorted(prefixes.items())]
-        if parts:
-            parts.append("")
-        for subj in sorted(by_subj):
-            parts.append(shorten(subj))
-            parts.append(" ;\n".join(by_subj[subj]) + " .")
-            parts.append("")
-        return "\n".join(parts)
-
-    # longturtle layout
-    # subj -> pred -> [object terms]
-    tree: Dict[str, Dict[str, List[str]]] = {}
+    by_subj: Dict[str, List[str]] = {}
     for subj, pred, kind, lex, lang, dt in sorted(rows):
-        o = term(kind, lex, lang, dt)
-        preds = tree.setdefault(subj, {})
-        objs = preds.setdefault(pred, [])
-        if o not in objs:
-            objs.append(o)
-    parts = [f"PREFIX {p}: <{ns}>" for p, ns in sorted(prefixes.items())]
+        by_subj.setdefault(subj, []).append(
+            f"    {shorten(pred)} {term(kind, lex, lang, dt)}"
+        )
+    parts = [f"@prefix {p}: <{ns}> ." for p, ns in sorted(prefixes.items())]
     if parts:
         parts.append("")
-    for subj in sorted(tree):
+    for subj in sorted(by_subj):
         parts.append(shorten(subj))
-        preds = tree[subj]
-        # rdf:type first (as 'a'), then remaining predicates sorted
-        ordered = sorted(preds, key=lambda p: (p != _RDF_TYPE, shorten(p)))
-        for pred in ordered:
-            pname = "a" if pred == _RDF_TYPE else shorten(pred)
-            objs = sorted(preds[pred])
-            if len(objs) == 1:
-                parts.append(f"    {pname} {objs[0]} ;")
-            else:
-                parts.append(f"    {pname}")
-                for i, o in enumerate(objs):
-                    sep = " ," if i < len(objs) - 1 else " ;"
-                    parts.append(f"        {o}{sep}")
-        parts.append(".")
+        parts.append(" ;\n".join(by_subj[subj]) + " .")
         parts.append("")
     return "\n".join(parts)
 

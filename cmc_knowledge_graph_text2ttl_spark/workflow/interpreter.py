@@ -94,6 +94,9 @@ _PREFIX_REF = re.compile(r"\s*([a-zA-Z][a-zA-Z0-9]*)\:([a-zA-Z][a-zA-Z0-9_\.\-/#
 
 _IFDEF_MATCH_REF = re.compile(r"(\w+)\.(\d+)")
 
+# A static ``lang:`` value: the N-Triples LANGTAG production.
+_LANG_TAG = re.compile(r"[a-zA-Z]+(-[a-zA-Z0-9]+)*")
+
 _MAX_TEMPLATE_REWRITES = 100_000
 
 
@@ -526,6 +529,12 @@ class DocInterpreter:
         names = ("text", "iri", "lang", "integer", "float", "bool", "date",
                  "datetime", "format", "apply")  # apply: is read, never used
         values = [r.get(name, str, optional=True) for name in names]
+        lang = values[2]
+        if lang and not _LANG_TAG.fullmatch(lang):
+            raise WorkflowCompileError(
+                f"{r.path}: lang: {lang!r} is not a language tag "
+                "(lang: is not template-expanded)"
+            )
         ndef = [a for v, a in zip(values, names) if v is not None and a in (
             "text", "iri", "integer", "float", "bool")]
         if len(ndef) > 1:

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from cmc_knowledge_graph_text2ttl_spark.operators import dedup, similarity, textstats
 from cmc_knowledge_graph_text2ttl_spark.operators import multimodal as mm
+import fixture_writers as FW
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -135,7 +136,7 @@ class TestResize:
     def test_resize_media_skips_undecodable(self, spark):
         import pandas as pd  # noqa: F401
 
-        blob = mm.encode_png(3, 2, bytes(range(18)), 3)
+        blob = FW.encode_png(3, 2, bytes(range(18)), 3)
         df = spark.createDataFrame(
             [("a", bytearray(blob)), ("b", bytearray(b"GIF89a no decoder"))],
             "media_id string, blob binary",
@@ -896,7 +897,7 @@ class TestMultimodal:
         assert rows[("unk1", "mean")] == 0.5
 
     def test_default_decoder_real_png_features(self, spark):
-        blob = mm.encode_png(4, 3, bytes([10, 20, 30]) * 12, 3)
+        blob = FW.encode_png(4, 3, bytes([10, 20, 30]) * 12, 3)
         df = spark.createDataFrame([("p", blob)], "media_id string, blob binary")
         rows = {r.feature: r.value for r in mm.extract_features(df).collect()}
         assert rows["width"] == 4.0 and rows["height"] == 3.0
@@ -912,7 +913,7 @@ class TestImageCodec:
         for ch in (1, 2, 3, 4):
             px = bytes((x * 13 + y * 29 + c * 7) % 256
                        for y in range(h) for x in range(w) for c in range(ch))
-            dw, dh, dch, out = mm.decode_png(mm.encode_png(w, h, px, ch))
+            dw, dh, dch, out = mm.decode_png(FW.encode_png(w, h, px, ch))
             assert (dw, dh, dch, out) == (w, h, ch, px)
 
     @staticmethod
@@ -964,7 +965,7 @@ class TestImageCodec:
     def test_png_rejects_invalid_depth(self):
         import pytest
 
-        blob = bytearray(mm.encode_png(2, 2, bytes(12), 3))
+        blob = bytearray(FW.encode_png(2, 2, bytes(12), 3))
         blob[24] = 3  # bit depth byte inside IHDR — 3 is never legal
         # CRC now wrong but the decoder reads fields before verifying
         with pytest.raises(ValueError):
@@ -977,7 +978,7 @@ class TestImageCodec:
                 px = bytes((x * 31 + y * 57 + c * 11) % 256
                            for y in range(h) for x in range(w)
                            for c in range(ch))
-                blob = mm.encode_png_ex(w, h, px, ch, interlace=True)
+                blob = FW.encode_png_ex(w, h, px, ch, interlace=True)
                 assert mm.decode_png(blob) == (w, h, ch, px), (w, h, ch)
 
     def test_png_palette_depths(self):
@@ -989,7 +990,7 @@ class TestImageCodec:
         for bd, ncol in ((1, 2), (2, 4), (4, 16), (8, 16)):
             idx = bytes((x * y) % ncol for y in range(h) for x in range(w))
             got = mm.decode_png(
-                mm.encode_png_ex(w, h, idx, palette=pal[:ncol * 3],
+                FW.encode_png_ex(w, h, idx, palette=pal[:ncol * 3],
                                  bit_depth=bd))
             exp = bytes(itertools.chain.from_iterable(
                 pal[i * 3:i * 3 + 3] for i in idx))
@@ -1003,7 +1004,7 @@ class TestImageCodec:
             (i * 37 % 256, i * 59 % 256, i * 83 % 256) for i in range(16)))
         idx = bytes((x + y) % 16 for y in range(h) for x in range(w))
         trns = bytes([10, 20, 30])  # entries 3..15 default to 255
-        blob = mm.encode_png_ex(w, h, idx, palette=pal, bit_depth=4,
+        blob = FW.encode_png_ex(w, h, idx, palette=pal, bit_depth=4,
                                 interlace=True, trns=trns)
         got = mm.decode_png(blob)
         alpha = [10, 20, 30] + [255] * 13
@@ -1053,7 +1054,7 @@ class TestImageCodec:
     def test_png_palette_missing_plte_raises(self):
         import pytest
 
-        blob = bytearray(mm.encode_png_ex(
+        blob = bytearray(FW.encode_png_ex(
             2, 2, bytes(4), palette=bytes(6), bit_depth=8))
         # drop the PLTE chunk: splice it out by tag
         i = bytes(blob).find(b"PLTE")
@@ -1062,7 +1063,7 @@ class TestImageCodec:
             mm.decode_png(out)
 
     def test_jpeg_sof_dims(self):
-        assert mm.sniff_media(mm.encode_jpeg_header(641, 479))[2:] == (641, 479)
+        assert mm.sniff_media(FW.encode_jpeg_header(641, 479))[2:] == (641, 479)
         # SOF2 (progressive) after a fat APP1 segment
         app1 = b"\xff\xe1" + struct.pack(">H", 102) + b"E" * 100
         sof2 = (b"\xff\xc2" + struct.pack(">H", 11) + b"\x08"
@@ -1074,7 +1075,7 @@ class TestImageCodec:
         assert mm.sniff_media(b"\xff\xd8" + app1 + sos)[2:] == (None, None)
 
     def test_gif_header(self):
-        assert mm.sniff_media(mm.encode_gif_header(320, 200)) == (
+        assert mm.sniff_media(FW.encode_gif_header(320, 200)) == (
             "image", "gif", 320, 200,
         )
 
@@ -1084,10 +1085,10 @@ class TestAudioCodec:
 
     def test_wav_roundtrip_mono_and_stereo(self):
         mono = [((i * 37) % 4001) - 2000 for i in range(300)]
-        ch, rate, nf, out = mm.decode_wav(mm.encode_wav(mono, 16000, 1))
+        ch, rate, nf, out = mm.decode_wav(FW.encode_wav(mono, 16000, 1))
         assert (ch, rate, nf, out) == (1, 16000, 300, mono)
         stereo = [1, -1, 2, -2, 3, -3]
-        ch, rate, nf, out = mm.decode_wav(mm.encode_wav(stereo, 8000, 2))
+        ch, rate, nf, out = mm.decode_wav(FW.encode_wav(stereo, 8000, 2))
         assert (ch, rate, nf, out) == (2, 8000, 3, stereo)
 
     def test_wav_8bit_recentred(self):
@@ -1099,7 +1100,7 @@ class TestAudioCodec:
         assert mm.decode_wav(raw) == (1, 4000, 3, [-128, 0, 127])
 
     def test_wav_skips_unknown_chunks(self):
-        base = mm.encode_wav([5, -5], 8000, 1)
+        base = FW.encode_wav([5, -5], 8000, 1)
         # splice a LIST chunk between fmt and data
         fmt_end = 12 + 8 + 16
         spliced = (base[:fmt_end] + b"LIST" + struct.pack("<I", 4) + b"INFO"
@@ -1119,7 +1120,7 @@ class TestAudioCodec:
     def test_audio_features_integer_stats(self, spark):
         samples = [100, -50, 0, 200, -200, 300]
         df = spark.createDataFrame(
-            [("a1", bytearray(mm.encode_wav(samples, 8000, 1))),
+            [("a1", bytearray(FW.encode_wav(samples, 8000, 1))),
              ("bad", bytearray(b"RIFFxxxxWAVE"))],
             "media_id string, blob binary",
         )
@@ -1136,7 +1137,7 @@ class TestAudioCodec:
     def test_audio_features_stereo_uses_channel_zero(self, spark):
         interleaved = [10, -999, -10, 999, 10, -999]
         df = spark.createDataFrame(
-            [("s1", bytearray(mm.encode_wav(interleaved, 8000, 2)))],
+            [("s1", bytearray(FW.encode_wav(interleaved, 8000, 2)))],
             "media_id string, blob binary",
         )
         r = mm.audio_features(df).collect()[0]
@@ -1158,21 +1159,21 @@ class TestGifCodec:
             nc = rng.choice([2, 4, 7, 16, 256])
             pal = [(rng.randrange(256),) * 3 for _ in range(nc)]
             idx = [rng.randrange(nc) for _ in range(w * h)]
-            dw, dh, ch, px = mm.decode_gif(mm.encode_gif(w, h, idx, pal))
+            dw, dh, ch, px = mm.decode_gif(FW.encode_gif(w, h, idx, pal))
             assert (dw, dh, ch) == (w, h, 3)
             assert px == b"".join(bytes(pal[k]) for k in idx)
 
     def test_large_image_multiblock_stream(self):
         w, h = 120, 90
         idx = [(x * 7 + y * 3) % 4 for y in range(h) for x in range(w)]
-        blob = mm.encode_gif(w, h, idx, self.PAL4)
+        blob = FW.encode_gif(w, h, idx, self.PAL4)
         assert len(blob) > 255  # forces >1 LZW sub-block
         dw, dh, _, px = mm.decode_gif(blob)
         assert (dw, dh) == (w, h)
         assert px == b"".join(bytes(self.PAL4[k]) for k in idx)
 
     def test_extension_blocks_are_skipped(self):
-        blob = mm.encode_gif(2, 2, [0, 1, 2, 3], self.PAL4)
+        blob = FW.encode_gif(2, 2, [0, 1, 2, 3], self.PAL4)
         # splice a graphic-control extension right before the descriptor
         at = blob.index(b"\x2c")
         gce = b"\x21\xf9\x04\x00\x00\x00\x00\x00"
@@ -1205,9 +1206,9 @@ class TestGifCodec:
         # for heights hitting every pass-boundary shape
         for w, h in ((8, 6), (5, 9), (3, 1), (4, 2), (7, 11), (2, 16)):
             idx = [(i * 7 + 3) % 4 for i in range(w * h)]
-            plain = mm.decode_gif(mm.encode_gif(w, h, idx, self.PAL4))
+            plain = mm.decode_gif(FW.encode_gif(w, h, idx, self.PAL4))
             inter = mm.decode_gif(
-                mm.encode_gif(w, h, idx, self.PAL4, interlaced=True)
+                FW.encode_gif(w, h, idx, self.PAL4, interlaced=True)
             )
             assert inter == plain, (w, h)
 
@@ -1215,13 +1216,13 @@ class TestGifCodec:
         # guard against an encoder that sets the flag but keeps display
         # order: the raw streams must differ for h > 4
         idx = list(range(4)) * 8  # 4x8
-        a = mm.encode_gif(4, 8, idx, self.PAL4)
-        b = mm.encode_gif(4, 8, idx, self.PAL4, interlaced=True)
+        a = FW.encode_gif(4, 8, idx, self.PAL4)
+        b = FW.encode_gif(4, 8, idx, self.PAL4, interlaced=True)
         assert a != b
         assert mm._gif_interlace_order(8) == [0, 4, 2, 6, 1, 3, 5, 7]
 
     def test_decode_image_dispatches_gif(self):
-        blob = mm.encode_gif(3, 1, [1, 2, 3], self.PAL4)
+        blob = FW.encode_gif(3, 1, [1, 2, 3], self.PAL4)
         w, h, ch, px = mm.decode_image(blob)
         assert (w, h, ch) == (3, 1, 3)
         assert px == b"\xff\x00\x00\x00\xff\x00\x00\x00\xff"
@@ -1235,8 +1236,8 @@ class TestBmpTiffWebp:
         for ch in (3, 4):
             px = bytes((x * 31 + y * 57 + c * 11) % 256
                        for y in range(h) for x in range(w) for c in range(ch))
-            assert mm.decode_bmp(mm.encode_bmp(w, h, px, ch)) == (w, h, ch, px)
-            assert mm.sniff_media(mm.encode_bmp(w, h, px, ch)) == (
+            assert mm.decode_bmp(FW.encode_bmp(w, h, px, ch)) == (w, h, ch, px)
+            assert mm.sniff_media(FW.encode_bmp(w, h, px, ch)) == (
                 "image", "bmp", w, h)
 
     def test_bmp_8bit_palette(self):
@@ -1260,7 +1261,7 @@ class TestBmpTiffWebp:
     def test_bmp_top_down_negative_height(self):
         w, h = 4, 3
         px = bytes(range(w * h * 3))
-        blob = bytearray(mm.encode_bmp(w, h, px, 3))
+        blob = bytearray(FW.encode_bmp(w, h, px, 3))
         # flip to top-down: negate height and reverse the row order
         struct.pack_into("<i", blob, 22, -h)
         stride = (w * 3 + 3) & ~3
@@ -1270,7 +1271,7 @@ class TestBmpTiffWebp:
         assert mm.decode_bmp(bytes(blob)) == (w, h, 3, px)
 
     def test_bmp_rle_compression_rejected(self):
-        blob = bytearray(mm.encode_bmp(2, 2, bytes(12), 3))
+        blob = bytearray(FW.encode_bmp(2, 2, bytes(12), 3))
         struct.pack_into("<I", blob, 30, 1)  # BI_RLE8
         with pytest.raises(ValueError, match="compression"):
             mm.decode_bmp(bytes(blob))
@@ -1282,21 +1283,21 @@ class TestBmpTiffWebp:
                 px = bytes((x * 13 + y * 29 + c * 7) % 256
                            for y in range(h) for x in range(w)
                            for c in range(ch))
-                t = mm.encode_tiff(w, h, px, ch, big_endian=be)
+                t = FW.encode_tiff(w, h, px, ch, big_endian=be)
                 assert mm.decode_tiff(t) == (w, h, ch, px), (ch, be)
                 assert mm.sniff_media(t) == ("image", "tiff", w, h)
 
     def test_tiff_unknown_compression_rejected(self):
         # CCITT Group 4 (tag value 4) stays unsupported; LZW/Deflate/PackBits
         # are decoded for real now (see TestTiffCompression roundtrips).
-        t = bytearray(mm.encode_tiff(4, 4, bytes(48), 3))
+        t = bytearray(FW.encode_tiff(4, 4, bytes(48), 3))
         i = bytes(t).find(struct.pack("<HH", 259, 3))
         struct.pack_into("<H", t, i + 8, 4)  # Compression = CCITT G4
         with pytest.raises(ValueError, match="compression"):
             mm.decode_tiff(bytes(t))
 
     def test_webp_dims_all_three_chunk_kinds(self):
-        assert mm.sniff_media(mm.encode_webp_header(640, 480)) == (
+        assert mm.sniff_media(FW.encode_webp_header(640, 480)) == (
             "image", "webp", 640, 480)
         bits = 639 | (479 << 14)
         vp8l = (b"RIFF" + struct.pack("<I", 20) + b"WEBPVP8L"
@@ -1319,15 +1320,15 @@ class TestBmpTiffWebp:
 
     def test_decode_image_dispatches_bmp_tiff(self):
         px = bytes(range(36))
-        assert mm.decode_image(mm.encode_bmp(4, 3, px, 3))[3] == px
-        assert mm.decode_image(mm.encode_tiff(4, 3, px, 3))[3] == px
+        assert mm.decode_image(FW.encode_bmp(4, 3, px, 3))[3] == px
+        assert mm.decode_image(FW.encode_tiff(4, 3, px, 3))[3] == px
 
 
 class TestExif:
     """EXIF APP1/IFD parsing (operators/multimodal.py)."""
 
     def test_roundtrip_all_fields(self):
-        b = mm.encode_jpeg_exif(640, 480, orientation=6, make="CanonX",
+        b = FW.encode_jpeg_exif(640, 480, orientation=6, make="CanonX",
                                 model="EOS Fixture 5",
                                 taken_at="2023:05:01 12:00:07")
         assert mm.parse_exif(b) == {
@@ -1338,13 +1339,13 @@ class TestExif:
         assert mm.sniff_media(b) == ("image", "jpeg", 640, 480)
 
     def test_inline_short_ascii_values(self):
-        b = mm.encode_jpeg_exif(8, 8, orientation=1, make="abc",
+        b = FW.encode_jpeg_exif(8, 8, orientation=1, make="abc",
                                 taken_at="xy")
         assert mm.parse_exif(b) == {
             "orientation": 1, "make": "abc", "taken_at": "xy"}
 
     def test_no_exif_and_non_jpeg(self):
-        assert mm.parse_exif(mm.encode_jpeg_header(3, 3)) == {}
+        assert mm.parse_exif(FW.encode_jpeg_header(3, 3)) == {}
         assert mm.parse_exif(b"\x89PNG\r\n\x1a\nxxxx") == {}
         assert mm.parse_exif(b"") == {}
 
@@ -1358,14 +1359,14 @@ class TestExif:
         assert mm.parse_exif(body) == {"orientation": 3}
 
     def test_truncated_exif_yields_partial_not_crash(self):
-        b = mm.encode_jpeg_exif(8, 8, orientation=2, make="longermakename")
+        b = FW.encode_jpeg_exif(8, 8, orientation=2, make="longermakename")
         for cut in (10, 24, 40, 60):
             out = mm.parse_exif(b[:cut])
             assert isinstance(out, dict)  # partial tags, never a crash
 
     def test_image_exif_operator(self, spark):
-        b1 = mm.encode_jpeg_exif(8, 8, orientation=5, make="M")
-        b2 = mm.encode_png(2, 2, bytes(12), 3)
+        b1 = FW.encode_jpeg_exif(8, 8, orientation=5, make="M")
+        b2 = FW.encode_png(2, 2, bytes(12), 3)
         df = spark.createDataFrame(
             [("a", bytearray(b1)), ("b", bytearray(b2))],
             "media_id string, blob binary")
@@ -1378,28 +1379,28 @@ class TestMp3Info:
     """Header-only MP3 facts (operators/multimodal.py)."""
 
     def test_roundtrip_with_id3(self):
-        b = mm.encode_mp3_header(192, 48000, mono=True,
+        b = FW.encode_mp3_header(192, 48000, mono=True,
                                  n_audio_bytes=6000, id3_payload=500)
         assert mm.mp3_info(b) == {
             "bitrate_kbps": 192, "sample_rate": 48000, "channels": 1,
             "duration_ms": 250, "id3_bytes": 510}
 
     def test_defaults_stereo_no_tag(self):
-        info = mm.mp3_info(mm.encode_mp3_header())
+        info = mm.mp3_info(FW.encode_mp3_header())
         assert info["channels"] == 2 and info["id3_bytes"] == 0
 
     def test_junk_prefix_within_scan_window(self):
-        b = b"\x00" * 100 + mm.encode_mp3_header(64, 32000)
+        b = b"\x00" * 100 + FW.encode_mp3_header(64, 32000)
         assert mm.mp3_info(b)["bitrate_kbps"] == 64
 
     def test_garbage_and_free_bitrate_rejected(self):
         assert mm.mp3_info(b"garbage" * 10) == {}
-        hdr = bytearray(mm.encode_mp3_header())
+        hdr = bytearray(FW.encode_mp3_header())
         hdr[2] = 0x00  # bitrate index 0 = "free" — not parseable
         assert mm.mp3_info(bytes(hdr)) == {}
 
     def test_audio_info_operator(self, spark):
-        b = mm.encode_mp3_header(128, 44100)
+        b = FW.encode_mp3_header(128, 44100)
         df = spark.createDataFrame(
             [("a", bytearray(b)), ("b", bytearray(b"not audio"))],
             "media_id string, blob binary")
@@ -1410,7 +1411,7 @@ class TestMp3Info:
     def test_xing_frame_count_drives_duration(self):
         # stereo MPEG1: Xing after 32-byte side info; 1000 frames at
         # 44100 Hz = 1000*1152*1000//44100 = 26122 ms, NOT the CBR math
-        b = mm.encode_mp3_header(128, 44100, n_audio_bytes=4000,
+        b = FW.encode_mp3_header(128, 44100, n_audio_bytes=4000,
                                  vbr_frames=1000, vbr_tag="Xing")
         info = mm.mp3_info(b)
         assert info["duration_ms"] == 1000 * 1152 * 1000 // 44100
@@ -1419,19 +1420,19 @@ class TestMp3Info:
     def test_info_tag_mono_side_info_offset(self):
         # mono MPEG1 side info is 17 bytes; "Info" tag (LAME CBR) also
         # carries a frame count
-        b = mm.encode_mp3_header(64, 32000, mono=True,
+        b = FW.encode_mp3_header(64, 32000, mono=True,
                                  vbr_frames=320, vbr_tag="Info")
         assert mm.mp3_info(b)["duration_ms"] == 320 * 1152 * 1000 // 32000
 
     def test_vbri_fixed_offset(self):
-        b = mm.encode_mp3_header(192, 48000, vbr_frames=500,
+        b = FW.encode_mp3_header(192, 48000, vbr_frames=500,
                                  vbr_tag="VBRI")
         assert mm.mp3_info(b)["duration_ms"] == 500 * 1152 * 1000 // 48000
 
     def test_vbr_tag_with_zero_frames_falls_back_to_cbr(self):
         # a Xing tag whose flags say "no frame count" must not divide
         # by zero or report 0 — CBR math is the fallback
-        b = bytearray(mm.encode_mp3_header(128, 44100, n_audio_bytes=4000,
+        b = bytearray(FW.encode_mp3_header(128, 44100, n_audio_bytes=4000,
                                            vbr_frames=7, vbr_tag="Xing"))
         # clear the flags word (offset: 4-byte header + 32 side + 4 tag)
         b[4 + 32 + 4: 4 + 32 + 8] = b"\x00\x00\x00\x00"
@@ -1476,7 +1477,7 @@ class TestGifFrames:
 
     def test_compositing_disposal2_and_transparency(self):
         sw, sh = 6, 4
-        blob = mm.encode_gif_animated(sw, sh, [
+        blob = FW.encode_gif_animated(sw, sh, [
             {"indices": [1] * (sw * sh)},
             {"x0": 1, "y0": 1, "w": 4, "h": 2, "indices": [2] * 8,
              "disposal": 2},
@@ -1495,7 +1496,7 @@ class TestGifFrames:
 
     def test_disposal3_restores_previous(self):
         sw, sh = 5, 3
-        blob = mm.encode_gif_animated(sw, sh, [
+        blob = FW.encode_gif_animated(sw, sh, [
             {"indices": [1] * (sw * sh)},
             {"indices": [2] * (sw * sh), "disposal": 3},
             {"indices": [0] * (sw * sh), "transparent": 0},
@@ -1505,21 +1506,21 @@ class TestGifFrames:
         assert fr[2] == bytes(self.PAL[1]) * (sw * sh)
 
     def test_single_frame_and_max_frames(self):
-        blob1 = mm.encode_gif(4, 3, [0] * 12, self.PAL)
+        blob1 = FW.encode_gif(4, 3, [0] * 12, self.PAL)
         assert len(mm.decode_gif_frames(blob1)[2]) == 1
-        anim = mm.encode_gif_animated(4, 3, [
+        anim = FW.encode_gif_animated(4, 3, [
             {"indices": [k % 4] * 12} for k in range(5)], self.PAL)
         assert len(mm.decode_gif_frames(anim, max_frames=2)[2]) == 2
 
     def test_frame_exceeding_canvas_raises(self):
-        blob = mm.encode_gif_animated(4, 3, [
+        blob = FW.encode_gif_animated(4, 3, [
             {"x0": 2, "y0": 0, "w": 4, "h": 3, "indices": [0] * 12}],
             self.PAL)
         with pytest.raises(ValueError, match="canvas"):
             mm.decode_gif_frames(blob)
 
     def test_sample_frames_even_spacing(self, spark):
-        blob = mm.encode_gif_animated(4, 3, [
+        blob = FW.encode_gif_animated(4, 3, [
             {"indices": [k % 4] * 12} for k in range(7)], self.PAL)
         df = spark.createDataFrame(
             [("a", bytearray(blob)), ("bad", bytearray(b"not a gif"))],
@@ -1558,12 +1559,11 @@ class TestGifFrames:
 
     @staticmethod
     def _solid_jpeg(v):
-        from cmc_knowledge_graph_text2ttl_spark.operators import jpeg as JP
 
-        return JP.encode_jpeg_blocks(8, 8, [[v - 128] + [0] * 63])
+        return FW.encode_jpeg_blocks(8, 8, [[v - 128] + [0] * 63])
 
     def test_mjpeg_avi_roundtrip_exact(self):
-        avi = mm.encode_avi_mjpeg(
+        avi = FW.encode_avi_mjpeg(
             8, 8, [self._solid_jpeg(v) for v in (10, 99, 200)])
         assert mm.sniff_media(avi) == ("video", "avi", 8, 8)
         w, h, frames = mm.decode_mjpeg_avi(avi)
@@ -1572,7 +1572,7 @@ class TestGifFrames:
             assert set(px) == {v}  # solid DC-only frame, byte-exact RGB
 
     def test_mjpeg_sample_frames_default_decoder(self, spark):
-        avi = mm.encode_avi_mjpeg(
+        avi = FW.encode_avi_mjpeg(
             8, 8, [self._solid_jpeg(40 * k) for k in range(5)])
         df = spark.createDataFrame(
             [("v", bytearray(avi))], "media_id string, blob binary")
@@ -1583,13 +1583,12 @@ class TestGifFrames:
             (4, c): 160.0 for c in range(3)}
 
     def test_mjpeg_malformed_rows_skip_not_kill(self, spark):
-        good = mm.encode_avi_mjpeg(8, 8, [self._solid_jpeg(7)])
+        good = FW.encode_avi_mjpeg(8, 8, [self._solid_jpeg(7)])
         no_movi = good[:40]  # truncated container
-        bad_frame = mm.encode_avi_mjpeg(8, 8, [b"\xff\xd8garbage"])
-        mixed_dims = mm.encode_avi_mjpeg(
+        bad_frame = FW.encode_avi_mjpeg(8, 8, [b"\xff\xd8garbage"])
+        mixed_dims = FW.encode_avi_mjpeg(
             8, 8, [self._solid_jpeg(7),
-                   __import__("cmc_knowledge_graph_text2ttl_spark.operators.jpeg",
-                              fromlist=["j"]).encode_jpeg_blocks(
+                   FW.encode_jpeg_blocks(
                        16, 8, [[0] + [0] * 63, [0] + [0] * 63])])
         df = spark.createDataFrame(
             [("ok", bytearray(good)), ("t", bytearray(no_movi)),
@@ -1607,7 +1606,7 @@ class TestAnimFrames:
         return bytes(px) * (w * h)
 
     def test_apng_compose_source_blend(self):
-        apng = mm.encode_apng(8, 6, [
+        apng = FW.encode_apng(8, 6, [
             (0, 0, 8, 6, self._solid(8, 6, (200, 10, 20, 255)), 0, 0),
             (2, 1, 4, 3, self._solid(4, 3, (5, 180, 30, 255)), 0, 0),
             (0, 0, 8, 6, self._solid(8, 6, (1, 2, 250, 255)), 0, 0),
@@ -1624,7 +1623,7 @@ class TestAnimFrames:
         assert frames[2] == self._solid(8, 6, (1, 2, 250))
 
     def test_apng_over_blend_floor_rational(self):
-        apng = mm.encode_apng(4, 2, [
+        apng = FW.encode_apng(4, 2, [
             (0, 0, 4, 2, self._solid(4, 2, (0, 0, 0, 255)), 0, 0),
             (0, 0, 4, 2, self._solid(4, 2, (255, 255, 255, 128)), 0, 1),
         ])
@@ -1633,7 +1632,7 @@ class TestAnimFrames:
         assert fr[1][0] == 128
 
     def test_apng_dispose_background_and_over(self):
-        apng = mm.encode_apng(4, 2, [
+        apng = FW.encode_apng(4, 2, [
             (0, 0, 4, 2, self._solid(4, 2, (100, 100, 100, 255)), 0, 0),
             (0, 0, 2, 1, self._solid(2, 1, (200, 0, 0, 255)), 1, 0),
             (2, 1, 2, 1, self._solid(2, 1, (0, 200, 0, 255)), 0, 1),
@@ -1645,7 +1644,7 @@ class TestAnimFrames:
         assert last[2 * 3:2 * 3 + 3] == bytes((100, 100, 100))
 
     def test_apng_dispose_previous_reverts(self):
-        apng = mm.encode_apng(2, 1, [
+        apng = FW.encode_apng(2, 1, [
             (0, 0, 2, 1, self._solid(2, 1, (10, 10, 10, 255)), 0, 0),
             (0, 0, 2, 1, self._solid(2, 1, (250, 0, 0, 255)), 2, 0),
             (0, 0, 1, 1, self._solid(1, 1, (0, 0, 9, 255)), 0, 0),
@@ -1656,15 +1655,13 @@ class TestAnimFrames:
         assert fr[2] == bytes((0, 0, 9)) + bytes((10, 10, 10))
 
     def test_plain_png_single_frame(self):
-        png = mm.encode_png(3, 2, self._solid(3, 2, (9, 8, 7)), 3)
+        png = FW.encode_png(3, 2, self._solid(3, 2, (9, 8, 7)), 3)
         w, h, fr = mm.decode_apng_frames(png)
         assert (w, h, len(fr)) == (3, 2, 1)
         assert fr[0] == self._solid(3, 2, (9, 8, 7))
 
     def test_webp_anim_roundtrip(self):
-        from cmc_knowledge_graph_text2ttl_spark.operators.vp8l import (
-            encode_webp_anim,
-        )
+        from fixture_writers import encode_webp_anim
 
         webp = encode_webp_anim(8, 4, [
             (0, 0, 8, 4, self._solid(8, 4, (40, 50, 60)), 3, 0, 0),
@@ -1681,9 +1678,7 @@ class TestAnimFrames:
         assert fr[1] == bytes(exp)
 
     def test_webp_still_falls_back_to_single_frame(self):
-        from cmc_knowledge_graph_text2ttl_spark.operators.vp8l import (
-            encode_webp_lossless,
-        )
+        from fixture_writers import encode_webp_lossless
 
         still = encode_webp_lossless(3, 2, self._solid(3, 2, (1, 2, 3)), 3)
         w, h, fr = mm.decode_webp_anim_frames(still)
@@ -1691,20 +1686,16 @@ class TestAnimFrames:
         assert fr[0] == self._solid(3, 2, (1, 2, 3))
 
     def test_webp_odd_offset_rejected_by_encoder(self):
-        from cmc_knowledge_graph_text2ttl_spark.operators.vp8l import (
-            encode_webp_anim,
-        )
+        from fixture_writers import encode_webp_anim
 
         with pytest.raises(ValueError, match="even"):
             encode_webp_anim(4, 4, [
                 (1, 0, 2, 2, self._solid(2, 2, (0, 0, 0)), 3, 0, 0)])
 
     def test_sample_frames_apng_and_webp_default_decoder(self, spark):
-        from cmc_knowledge_graph_text2ttl_spark.operators.vp8l import (
-            encode_webp_anim,
-        )
+        from fixture_writers import encode_webp_anim
 
-        apng = mm.encode_apng(4, 4, [
+        apng = FW.encode_apng(4, 4, [
             (0, 0, 4, 4, self._solid(4, 4, (10, 20, 30, 255)), 0, 0),
             (0, 0, 4, 4, self._solid(4, 4, (50, 60, 70, 255)), 0, 0),
         ])
@@ -1725,7 +1716,7 @@ class TestAnimFrames:
         # a cut inside the zlib stream raises zlib.error from the PNG
         # layer; sample_frames' skip path must contain it (a single
         # truncated APNG in a crawl batch must never kill the task)
-        good = mm.encode_apng(4, 4, [
+        good = FW.encode_apng(4, 4, [
             (0, 0, 4, 4, self._solid(4, 4, (1, 2, 3, 255)), 0, 0),
             (0, 0, 4, 4, self._solid(4, 4, (9, 8, 7, 255)), 0, 0)])
         zl = bytearray(good)
@@ -1739,7 +1730,7 @@ class TestAnimFrames:
     def test_huge_canvas_header_raises_fast(self):
         # flipped IHDR width must hit the compose-canvas guard, not a
         # 66 GB allocation
-        good = mm.encode_apng(8, 6, [
+        good = FW.encode_apng(8, 6, [
             (0, 0, 8, 6, self._solid(8, 6, (1, 1, 1, 255)), 0, 0),
             (0, 0, 8, 6, self._solid(8, 6, (2, 2, 2, 255)), 0, 0)])
         bad = bytearray(good)
@@ -1748,7 +1739,7 @@ class TestAnimFrames:
             mm.decode_apng_frames(bytes(bad))
 
     def test_frame_rect_outside_canvas_raises(self):
-        apng = mm.encode_apng(4, 2, [
+        apng = FW.encode_apng(4, 2, [
             (0, 0, 4, 2, self._solid(4, 2, (1, 1, 1, 255)), 0, 0),
             (3, 1, 2, 1, self._solid(2, 1, (2, 2, 2, 255)), 0, 0),
         ])
@@ -1760,7 +1751,7 @@ class TestExifGpsScrub:
     """Media-side PII: GPS EXIF stripping (multimodal.scrub_exif_gps)."""
 
     def _jpeg(self, **kw):
-        return mm.encode_jpeg_exif(8, 6, orientation=3, make="Acme",
+        return FW.encode_jpeg_exif(8, 6, orientation=3, make="Acme",
                                    model="M", taken_at="2024:01:01 00:00:00",
                                    **kw)
 
@@ -1868,28 +1859,26 @@ class TestDibAvi:
     def test_roundtrip_rows_channels_padding(self):
         # 5x3: stride 16 > 15 exercises the 4-byte row padding
         px = bytes(range(5 * 3 * 3))
-        avi = mm.encode_avi_rgb(5, 3, [px])
+        avi = FW.encode_avi_rgb(5, 3, [px])
         w, h, fr = mm.decode_avi_frames(avi)
         assert (w, h, len(fr)) == (5, 3, 1) and fr[0] == px
 
     def test_mjpeg_still_routed_through_dispatcher(self):
-        from cmc_knowledge_graph_text2ttl_spark.operators import jpeg as JP
 
-        avi = mm.encode_avi_mjpeg(
-            8, 8, [JP.encode_jpeg_blocks(8, 8, [[7 - 128] + [0] * 63])])
+        avi = FW.encode_avi_mjpeg(
+            8, 8, [FW.encode_jpeg_blocks(8, 8, [[7 - 128] + [0] * 63])])
         _, _, fr = mm.decode_avi_frames(avi)
         assert set(fr[0]) == {7}
 
     def test_unknown_codec_raises_not_implemented(self):
-        from cmc_knowledge_graph_text2ttl_spark.operators import jpeg as JP
 
-        avi = mm.encode_avi_mjpeg(
-            8, 8, [JP.encode_jpeg_blocks(8, 8, [[0] + [0] * 63])])
+        avi = FW.encode_avi_mjpeg(
+            8, 8, [FW.encode_jpeg_blocks(8, 8, [[0] + [0] * 63])])
         with pytest.raises(NotImplementedError, match="XVID"):
             mm.decode_avi_frames(avi.replace(b"MJPG", b"XVID"))
 
     def test_short_dib_frame_raises(self):
-        avi = mm.encode_avi_rgb(4, 4, [bytes(48)])
+        avi = FW.encode_avi_rgb(4, 4, [bytes(48)])
         # truncate the movi payload: keep container, cut frame bytes
         cut = avi[:-20] + b"\x00" * 0
         with pytest.raises(ValueError):
@@ -1897,7 +1886,7 @@ class TestDibAvi:
 
     def test_sample_frames_dib_default_decoder(self, spark):
         frames = [bytes((v, v, v)) * 16 for v in (11, 77, 200)]
-        avi = mm.encode_avi_rgb(4, 4, frames)
+        avi = FW.encode_avi_rgb(4, 4, frames)
         df = spark.createDataFrame(
             [("d", bytearray(avi))], "media_id string, blob binary")
         got = {(r.frame_idx, r.channel): r.mean
@@ -1911,34 +1900,34 @@ class TestAiff:
 
     def test_16bit_stereo_roundtrip(self):
         s = [100, -100, 32767, -32768, 0, 5, -9999, 1234]
-        a = mm.encode_aiff(2, 44100, s, 16)
+        a = FW.encode_aiff(2, 44100, s, 16)
         assert mm.sniff_media(a)[:2] == ("audio", "aiff")
         assert mm.decode_aiff(a) == (2, 44100, 4, s)
 
     def test_8bit_is_signed_unlike_wav(self):
-        a = mm.encode_aiff(1, 8000, [-128, 127, 0, 64], 8)
+        a = FW.encode_aiff(1, 8000, [-128, 127, 0, 64], 8)
         assert mm.decode_aiff(a)[3] == [-128, 127, 0, 64]
 
     def test_24bit_and_extended_rate(self):
-        a = mm.encode_aiff(1, 11025, [8_000_000, -8_000_000], 24)
+        a = FW.encode_aiff(1, 11025, [8_000_000, -8_000_000], 24)
         ch, rate, nf, s = mm.decode_aiff(a)
         assert rate == 11025 and s == [8_000_000, -8_000_000]
 
     def test_aifc_sowt_little_endian(self):
         s = [1, -2, 300, -4000]
-        a = mm.encode_aiff(1, 22050, s, 16, aifc_sowt=True)
+        a = FW.encode_aiff(1, 22050, s, 16, aifc_sowt=True)
         assert a[8:12] == b"AIFC"
         assert mm.decode_aiff(a) == (1, 22050, 4, s)
 
     def test_unknown_compression_raises(self):
-        a = mm.encode_aiff(1, 8000, [1, 2], 16, aifc_sowt=True)
+        a = FW.encode_aiff(1, 8000, [1, 2], 16, aifc_sowt=True)
         with pytest.raises(NotImplementedError, match="ima4"):
             mm.decode_aiff(a.replace(b"sowt", b"ima4"))
 
     def test_dispatcher_and_features(self, spark):
         s = [((i * 17) % 2003) - 1001 for i in range(200)]
-        a = mm.encode_aiff(1, 8000, s, 16)
-        w = mm.encode_wav(s, 8000, 1)
+        a = FW.encode_aiff(1, 8000, s, 16)
+        w = FW.encode_wav(s, 8000, 1)
         df = spark.createDataFrame(
             [("aiff", bytearray(a)), ("wav", bytearray(w))],
             "media_id string, blob binary")
@@ -1949,7 +1938,7 @@ class TestAiff:
             assert getattr(got["aiff"], f) == getattr(got["wav"], f)
 
     def test_negative_rate_from_flipped_f80_raises(self):
-        a = mm.encode_aiff(1, 8000, [1, 2, 3, 4], 16)
+        a = FW.encode_aiff(1, 8000, [1, 2, 3, 4], 16)
         # flip the sign bit of the 80-bit extended rate field
         i = a.find(b"COMM") + 8 + 8
         bad = bytearray(a)
@@ -1960,7 +1949,7 @@ class TestAiff:
     def test_truncated_raises_value_error(self):
         with pytest.raises(ValueError):
             mm.decode_aiff(b"FORM\x00\x00\x00\x04AIFF")
-        a = mm.encode_aiff(1, 8000, [1] * 100, 16)
+        a = FW.encode_aiff(1, 8000, [1] * 100, 16)
         with pytest.raises(ValueError):
             mm.decode_aiff(a[:40])
 
@@ -1981,9 +1970,9 @@ class TestImageHash:
         w, h = 16, 11
         px = self._px(7, w, h)
         hashes = {
-            dhash_bands(*mm.decode_png(mm.encode_png(w, h, px, 3))),
-            dhash_bands(*mm.decode_bmp(mm.encode_bmp(w, h, px, 3))),
-            dhash_bands(*mm.decode_tiff(mm.encode_tiff(w, h, px, 3))),
+            dhash_bands(*mm.decode_png(FW.encode_png(w, h, px, 3))),
+            dhash_bands(*mm.decode_bmp(FW.encode_bmp(w, h, px, 3))),
+            dhash_bands(*mm.decode_tiff(FW.encode_tiff(w, h, px, 3))),
         }
         assert len(hashes) == 1
         b = hashes.pop()
@@ -2021,8 +2010,8 @@ class TestImageHash:
         for k in range(4):
             w, h = 12 + k, 9 + k
             px = self._px(k * 10, w, h)
-            rows.append((f"p{k}", bytearray(mm.encode_png(w, h, px, 3))))
-            rows.append((f"q{k}", bytearray(mm.encode_bmp(w, h, px, 3))))
+            rows.append((f"p{k}", bytearray(FW.encode_png(w, h, px, 3))))
+            rows.append((f"q{k}", bytearray(FW.encode_bmp(w, h, px, 3))))
         rows.append(("junk", bytearray(b"not an image")))
         df = spark.createDataFrame(rows, "media_id string, blob binary")
         got = {(r.id_a, r.id_b) for r in image_near_dup(df).collect()}
@@ -2034,7 +2023,7 @@ class TestImageHash:
         )
 
         df = spark.createDataFrame(
-            [("a", bytearray(mm.encode_png(2, 2, bytes(12), 3)))],
+            [("a", bytearray(FW.encode_png(2, 2, bytes(12), 3)))],
             "media_id string, blob binary")
         with pytest.raises(ValueError, match="pigeonhole"):
             image_near_dup(df, max_hamming=4)
@@ -2053,8 +2042,8 @@ class TestImageHash:
         ga = bytes(v for j, g in enumerate(gray) for v in (g, (j * 7) % 256))
         assert dhash_bands(w, h, 2, ga) == dhash_bands(w, h, 1, gray)
         df = spark.createDataFrame(
-            [("ga", bytearray(mm.encode_png(w, h, ga, 2))),
-             ("g", bytearray(mm.encode_png(w, h, gray, 1)))],
+            [("ga", bytearray(FW.encode_png(w, h, ga, 2))),
+             ("g", bytearray(FW.encode_png(w, h, gray, 1)))],
             "media_id string, blob binary")
         got = {r.media_id: (r.b0, r.b1, r.b2, r.b3)
                for r in image_dhash(df).collect()}
@@ -2070,10 +2059,10 @@ class TestImageHash:
         rows = []
         hot = self._px(3, 10, 8)
         for k in range(6):
-            rows.append((f"hot{k}", bytearray(mm.encode_png(10, 8, hot, 3))))
+            rows.append((f"hot{k}", bytearray(FW.encode_png(10, 8, hot, 3))))
         other = self._px(40, 12, 9)
-        rows.append(("pa", bytearray(mm.encode_png(12, 9, other, 3))))
-        rows.append(("pb", bytearray(mm.encode_bmp(12, 9, other, 3))))
+        rows.append(("pa", bytearray(FW.encode_png(12, 9, other, 3))))
+        rows.append(("pb", bytearray(FW.encode_bmp(12, 9, other, 3))))
         df = spark.createDataFrame(rows, "media_id string, blob binary")
         capped = {(r.id_a, r.id_b)
                   for r in image_near_dup(df, max_bucket=4).collect()}
@@ -2091,12 +2080,12 @@ class TestImageHash:
         rows = []
         hot = self._px(8, 11, 9)
         for k in range(5):
-            enc = mm.encode_png if k % 2 == 0 else mm.encode_bmp
+            enc = FW.encode_png if k % 2 == 0 else FW.encode_bmp
             rows.append((f"h{k}", bytearray(enc(11, 9, hot, 3))))
         other = self._px(60, 13, 10)
-        rows.append(("pa", bytearray(mm.encode_png(13, 10, other, 3))))
-        rows.append(("pb", bytearray(mm.encode_bmp(13, 10, other, 3))))
-        rows.append(("solo", bytearray(mm.encode_png(9, 9, self._px(90, 9, 9), 3))))
+        rows.append(("pa", bytearray(FW.encode_png(13, 10, other, 3))))
+        rows.append(("pb", bytearray(FW.encode_bmp(13, 10, other, 3))))
+        rows.append(("solo", bytearray(FW.encode_png(9, 9, self._px(90, 9, 9), 3))))
         rows.append(("junk", bytearray(b"not an image")))
         df = spark.createDataFrame(rows, "media_id string, blob binary")
 
@@ -2125,7 +2114,7 @@ class TestImageHash:
         )
 
         hot = self._px(8, 11, 9)
-        rows = [(f"h{k}", bytearray(mm.encode_png(11, 9, hot, 3)))
+        rows = [(f"h{k}", bytearray(FW.encode_png(11, 9, hot, 3)))
                 for k in range(6)]
         df = spark.createDataFrame(rows, "media_id string, blob binary")
         out = media_dedup_clusters(df, star_edges=True, max_bucket=2)
@@ -2166,10 +2155,10 @@ class TestAudioFingerprint:
         rows = []
         for k in range(3):
             v = self._sig(k * 1000 + 13, 264)
-            rows.append((f"m{k}", bytearray(mm.encode_wav(v, 8000, 1))))
+            rows.append((f"m{k}", bytearray(FW.encode_wav(v, 8000, 1))))
             rows.append(
                 (f"s{k}",
-                 bytearray(mm.encode_wav(
+                 bytearray(FW.encode_wav(
                      [x for t in v for x in (t, t)], 8000, 2))))
         rows.append(("junk", bytearray(b"not audio bytes")))
         df = spark.createDataFrame(rows, "media_id string, blob binary")
@@ -2182,7 +2171,7 @@ class TestAudioFingerprint:
         )
 
         df = spark.createDataFrame(
-            [("a", bytearray(mm.encode_wav([1] * 100, 8000, 1)))],
+            [("a", bytearray(FW.encode_wav([1] * 100, 8000, 1)))],
             "media_id string, blob binary")
         with pytest.raises(ValueError, match="pigeonhole"):
             audio_near_dup(df, max_hamming=2)
@@ -2281,11 +2270,11 @@ class TestC4GopherRules:
         for k in range(3):
             w, h = 12 + k, 9 + k
             px = TestImageHash._px(k * 10, w, h)
-            rows.append((f"p{k}", bytearray(mm.encode_png(w, h, px, 3))))
-            rows.append((f"q{k}", bytearray(mm.encode_bmp(w, h, px, 3))))
+            rows.append((f"p{k}", bytearray(FW.encode_png(w, h, px, 3))))
+            rows.append((f"q{k}", bytearray(FW.encode_bmp(w, h, px, 3))))
         rows.append(
             ("zz_solo",
-             bytearray(mm.encode_png(5, 5, TestImageHash._px(99, 5, 5), 3))))
+             bytearray(FW.encode_png(5, 5, TestImageHash._px(99, 5, 5), 3))))
         rows.append(("junk", bytearray(b"not an image")))
         df = spark.createDataFrame(rows, "media_id string, blob binary")
         got = {r.media_id: (r.cluster_id, r.n_cluster, r.is_survivor)
@@ -2312,14 +2301,14 @@ class TestMp4Info:
     """ISO-BMFF box parsing (operators/multimodal.py)."""
 
     def test_roundtrip(self):
-        b = mm.encode_mp4_header(83500, 1920, 1080)
+        b = FW.encode_mp4_header(83500, 1920, 1080)
         assert mm.mp4_info(b) == {
             "duration_ms": 83500, "width": 1920, "height": 1080,
             "n_tracks": 2, "codecs": "avc1,mp4a"}
         assert mm.sniff_media(b) == ("video", "mp4", 1920, 1080)
 
     def test_truncations_never_crash(self):
-        b = mm.encode_mp4_header(5000, 640, 480)
+        b = FW.encode_mp4_header(5000, 640, 480)
         for cut in range(0, len(b), 7):
             assert isinstance(mm.mp4_info(b[:cut]), dict)
 
@@ -2329,7 +2318,7 @@ class TestMp4Info:
         assert mm.mp4_info(b"garbage!") == {}
 
     def test_64bit_box_size(self):
-        b = bytearray(mm.encode_mp4_header(7000, 100, 50, codecs=("avc1",)))
+        b = bytearray(FW.encode_mp4_header(7000, 100, 50, codecs=("avc1",)))
         # rewrite the moov header to the 64-bit size form in place
         i = bytes(b).find(b"moov") - 4
         import struct as _s
@@ -2342,7 +2331,7 @@ class TestMp4Info:
 
     def test_video_info_operator(self, spark):
         df = spark.createDataFrame(
-            [("v", bytearray(mm.encode_mp4_header(1500, 320, 240))),
+            [("v", bytearray(FW.encode_mp4_header(1500, 320, 240))),
              ("x", bytearray(b"not a video"))],
             "media_id string, blob binary")
         got = {r.media_id: r for r in mm.video_info(df).collect()}
@@ -2354,7 +2343,7 @@ class TestAudioProvenance:
     """ID3v2 text frames + WebM magic."""
 
     def test_id3_text_frames_both_encodings(self):
-        b = mm.encode_id3_mp3({"title": "Nice Song",
+        b = FW.encode_id3_mp3({"title": "Nice Song",
                                "artist": "Ané — 中文",
                                "album": "LP", "year": "1999"})
         assert mm.id3_tags(b) == {
@@ -2364,7 +2353,7 @@ class TestAudioProvenance:
         assert mm.mp3_info(b)["bitrate_kbps"] == 128
 
     def test_id3_truncations_never_raise(self):
-        b = mm.encode_id3_mp3({"title": "T" * 80})
+        b = FW.encode_id3_mp3({"title": "T" * 80})
         for cut in range(0, len(b), 5):
             assert isinstance(mm.id3_tags(b[:cut]), dict)
 
@@ -2373,7 +2362,7 @@ class TestAudioProvenance:
             "video", "webm")
 
     def test_audio_tags_operator(self, spark):
-        b = mm.encode_id3_mp3({"title": "X"})
+        b = FW.encode_id3_mp3({"title": "X"})
         df = spark.createDataFrame(
             [("a", bytearray(b)), ("b", bytearray(b"untagged"))],
             "media_id string, blob binary")
@@ -2539,7 +2528,7 @@ class TestTiffCompression:
         for px in (px_rand, px_smooth):
             for comp in ("none", "lzw", "deflate", "packbits"):
                 for pred in (False, True):
-                    blob = mm.encode_tiff(12, 7, px, 3, compression=comp,
+                    blob = FW.encode_tiff(12, 7, px, 3, compression=comp,
                                           predictor=pred)
                     assert mm.decode_tiff(blob)[3] == px, (comp, pred)
 
@@ -2549,14 +2538,14 @@ class TestTiffCompression:
 
         random.seed(10)
         px = bytes(random.randrange(256) for _ in range(60 * 60 * 3))
-        blob = mm.encode_tiff(60, 60, px, 3, compression="lzw")
+        blob = FW.encode_tiff(60, 60, px, 3, compression="lzw")
         assert mm.decode_tiff(blob)[3] == px
 
     def test_predictor_lzw_actually_compresses(self):
         smooth = bytes((x + y) % 256 for y in range(50) for x in range(50)
                        for _ in range(3))
-        plain = mm.encode_tiff(50, 50, smooth, 3)
-        lzw = mm.encode_tiff(50, 50, smooth, 3, compression="lzw",
+        plain = FW.encode_tiff(50, 50, smooth, 3)
+        lzw = FW.encode_tiff(50, 50, smooth, 3, compression="lzw",
                              predictor=True)
         assert len(lzw) < len(plain) // 4
         assert mm.decode_tiff(lzw)[3] == smooth
@@ -2568,11 +2557,11 @@ class TestTiffCompression:
             reversed(range(256 - 200 + 12 * 2 * 3 - 400)))
         need = 12 * 2 * 3
         px = (px * 3)[:need]
-        blob = mm.encode_tiff(12, 2, px, 3, compression="packbits")
+        blob = FW.encode_tiff(12, 2, px, 3, compression="packbits")
         assert mm.decode_tiff(blob)[3] == px
 
     def test_unknown_compression_raises(self):
-        blob = bytearray(mm.encode_tiff(4, 4, bytes(48), 3))
+        blob = bytearray(FW.encode_tiff(4, 4, bytes(48), 3))
         i = bytes(blob).find((259).to_bytes(2, "little"))
         blob[i + 8] = 99  # compression tag value
         with pytest.raises(ValueError, match="compression 99"):
@@ -2585,17 +2574,17 @@ class TestIcoDecode:
     def test_dib_entries_largest_wins(self):
         px24 = bytes((i * 7) % 256 for i in range(16 * 16 * 3))
         px32 = bytes((i * 11) % 256 for i in range(8 * 8 * 4))
-        ico = mm.encode_ico([(8, 8, px32, 4), (16, 16, px24, 3)])
+        ico = FW.encode_ico([(8, 8, px32, 4), (16, 16, px24, 3)])
         w, h, ch, px = mm.decode_ico(ico)
         assert (w, h, ch, px) == (16, 16, 3, px24)
 
     def test_png_entry_and_256_dimension_zero_byte(self):
         pxs = bytes((i * 5) % 256 for i in range(12 * 9 * 3))
         assert mm.decode_ico(
-            mm.encode_ico([(12, 9, pxs, 3)], as_png=True))[:2] == (12, 9)
+            FW.encode_ico([(12, 9, pxs, 3)], as_png=True))[:2] == (12, 9)
         big = bytes((i * 3) % 256 for i in range(256 * 256 * 3))
         assert mm.decode_ico(
-            mm.encode_ico([(256, 256, big, 3)]))[:2] == (256, 256)
+            FW.encode_ico([(256, 256, big, 3)]))[:2] == (256, 256)
 
     def test_dhash_parity_with_bmp(self):
         from cmc_knowledge_graph_text2ttl_spark.operators.perceptual import (
@@ -2603,8 +2592,8 @@ class TestIcoDecode:
         )
 
         px = bytes((i * 17 + (i % 7) * 41) % 256 for i in range(16 * 11 * 3))
-        a = dhash_bands(*mm.decode_bmp(mm.encode_bmp(16, 11, px, 3)))
-        b = dhash_bands(*mm.decode_image(mm.encode_ico([(16, 11, px, 3)])))
+        a = dhash_bands(*mm.decode_bmp(FW.encode_bmp(16, 11, px, 3)))
+        b = dhash_bands(*mm.decode_image(FW.encode_ico([(16, 11, px, 3)])))
         assert a == b
 
     def test_malformed_raises_valueerror(self):
@@ -2614,7 +2603,7 @@ class TestIcoDecode:
             mm.decode_ico(b"\x00\x00\x01\x00\x01\x00" + b"\x01" * 10)
         with _pytest.raises(ValueError):
             mm.decode_ico(b"not an ico")
-        good = mm.encode_ico([(8, 8, bytes(192), 3)])
+        good = FW.encode_ico([(8, 8, bytes(192), 3)])
         for cut in range(0, len(good), 13):
             try:
                 mm.decode_ico(good[:cut])

@@ -5,16 +5,16 @@ import struct
 
 import pytest
 
-from cmc_knowledge_graph_text2ttl_spark.operators.cfb import CfbReader, make_cfb
+from cmc_knowledge_graph_text2ttl_spark.operators.cfb import CfbReader
 from cmc_knowledge_graph_text2ttl_spark.operators.doc_binary import (
     doc_to_xhtml_text,
     extract_doc_text,
-    make_doc,
 )
 from cmc_knowledge_graph_text2ttl_spark.operators.extract import (
     extract_one,
     sniff_content_type,
 )
+from fixture_writers import make_cfb, make_doc
 
 
 class TestCfb:

@@ -12,13 +12,12 @@ import pytest
 
 from cmc_knowledge_graph_text2ttl_spark.operators import multimodal as mm
 from cmc_knowledge_graph_text2ttl_spark.operators.flac import (
-    _BitWriterMSB,
     _crc8,
     _crc16,
-    _write_rice,
     decode_flac,
-    encode_flac,
 )
+import fixture_writers as FW
+from fixture_writers import _BitWriterMSB, _write_rice, encode_flac
 
 
 def _streaminfo(rate, channels, bps, total, block=256):
@@ -80,7 +79,7 @@ class TestRoundtrip:
         )
 
         v = [((5 * 31 + i * 17) % 2003) - 1001 for i in range(400)]
-        wav = mm.encode_wav(v, 8000, 1)
+        wav = FW.encode_wav(v, 8000, 1)
         flac = encode_flac(v, 8000, channels=1, subframe="fixed2")
         cw = mm.decode_audio(wav)
         cf = mm.decode_audio(flac)

@@ -9,12 +9,10 @@ import struct
 
 import pytest
 
-from cmc_knowledge_graph_text2ttl_spark.operators import legacy_office as LO
 from cmc_knowledge_graph_text2ttl_spark.operators import multimodal as mm
-from cmc_knowledge_graph_text2ttl_spark.operators import odf as ODF
-from cmc_knowledge_graph_text2ttl_spark.operators import rtf as RTF
-from cmc_knowledge_graph_text2ttl_spark.operators.doc_binary import make_doc
 from cmc_knowledge_graph_text2ttl_spark.operators.extract import extract_one
+import fixture_writers as FW
+from fixture_writers import make_doc
 
 
 def _sweep(blob: bytes, step: int = 7):
@@ -28,12 +26,12 @@ def _sweep(blob: bytes, step: int = 7):
 
 
 FIXTURES = [
-    ("rtf", lambda: RTF.make_rtf(["para one", [["a", "b"]], "two"])),
-    ("odt", lambda: ODF.make_odt([(1, "T"), "p", [["x", "y"]]])),
+    ("rtf", lambda: FW.make_rtf(["para one", [["a", "b"]], "two"])),
+    ("odt", lambda: FW.make_odt([(1, "T"), "p", [["x", "y"]]])),
     ("doc", lambda: make_doc(["alpha", "beta gamma"])),
-    ("xls", lambda: LO.make_xls([("S", [["a", 1, None, "b"]])],
+    ("xls", lambda: FW.make_xls([("S", [["a", 1, None, "b"]])],
                                 sst_continue_split=True)),
-    ("ppt", lambda: LO.make_ppt(["one\rtwo", "three"])),
+    ("ppt", lambda: FW.make_ppt(["one\rtwo", "three"])),
 ]
 
 
@@ -56,18 +54,16 @@ def test_extract_one_never_escapes(name, builder):
 @pytest.mark.parametrize(
     "name,builder",
     [
-        ("png_adam7", lambda: mm.encode_png_ex(
+        ("png_adam7", lambda: FW.encode_png_ex(
             13, 7, bytes(13 * 7 * 3), 3, interlace=True)),
-        ("png_pal4", lambda: mm.encode_png_ex(
+        ("png_pal4", lambda: FW.encode_png_ex(
             9, 5, bytes([1] * 45), palette=bytes(48), bit_depth=4,
             trns=bytes([7, 8]))),
-        ("bmp", lambda: mm.encode_bmp(9, 5, bytes(9 * 5 * 3), 3)),
-        ("tiff", lambda: mm.encode_tiff(9, 5, bytes(9 * 5 * 3), 3)),
-        ("webp_vp8l", lambda: __import__(
-            "cmc_knowledge_graph_text2ttl_spark.operators.vp8l",
-            fromlist=["v"]).encode_webp_lossless(
-                9, 5, bytes((i * 13) % 256 for i in range(9 * 5 * 3)), 3)),
-        ("tiff_lzw_pred", lambda: mm.encode_tiff(
+        ("bmp", lambda: FW.encode_bmp(9, 5, bytes(9 * 5 * 3), 3)),
+        ("tiff", lambda: FW.encode_tiff(9, 5, bytes(9 * 5 * 3), 3)),
+        ("webp_vp8l", lambda: FW.encode_webp_lossless(
+            9, 5, bytes((i * 13) % 256 for i in range(9 * 5 * 3)), 3)),
+        ("tiff_lzw_pred", lambda: FW.encode_tiff(
             9, 5, bytes((i * 7) % 256 for i in range(9 * 5 * 3)), 3,
             compression="lzw", predictor=True)),
     ],
@@ -89,9 +85,9 @@ def test_image_decoders_raise_cleanly(name, builder):
 
 
 def test_exif_and_mp3_never_raise():
-    exif = mm.encode_jpeg_exif(16, 9, orientation=3, make="M", model="X",
+    exif = FW.encode_jpeg_exif(16, 9, orientation=3, make="M", model="X",
                                taken_at="2020:01:01 00:00:00")
-    mp3 = mm.encode_mp3_header(128, 44100, id3_payload=64)
+    mp3 = FW.encode_mp3_header(128, 44100, id3_payload=64)
     for variant in _sweep(exif, step=3):
         assert isinstance(mm.parse_exif(variant), dict)
     for variant in _sweep(mp3, step=3):
@@ -103,7 +99,7 @@ class TestAllocationGuards:
     buffers (one bad row would otherwise OOM the executor)."""
 
     def test_png_huge_ihdr_dims(self):
-        blob = bytearray(mm.encode_png(4, 4, bytes(48), 3))
+        blob = bytearray(FW.encode_png(4, 4, bytes(48), 3))
         struct.pack_into(">I", blob, 16, 2_000_000_000)  # IHDR width
         with pytest.raises(ValueError, match="out of range"):
             mm.decode_png(bytes(blob))
@@ -111,7 +107,7 @@ class TestAllocationGuards:
     def test_jpeg_huge_sof_dims(self):
         from cmc_knowledge_graph_text2ttl_spark.operators import jpeg as J
 
-        blob = bytearray(J.encode_jpeg_blocks(8, 8, [[1] + [0] * 63]))
+        blob = bytearray(FW.encode_jpeg_blocks(8, 8, [[1] + [0] * 63]))
         i = bytes(blob).find(b"\xff\xc0")
         struct.pack_into(">HH", blob, i + 5, 65535, 65535)  # h, w
         with pytest.raises(ValueError, match="out of range"):
@@ -121,7 +117,7 @@ class TestAllocationGuards:
         # valid 4x4 GIF, then blow up the image-descriptor dims
         idx = [0] * 16
         pal = [(0, 0, 0), (1, 1, 1), (2, 2, 2), (3, 3, 3)]
-        blob = bytearray(mm.encode_gif(4, 4, idx, pal))
+        blob = bytearray(FW.encode_gif(4, 4, idx, pal))
         i = bytes(blob).find(b"\x2c")  # image separator
         struct.pack_into("<HH", blob, i + 5, 65535, 65535)
         with pytest.raises(ValueError, match="out of range"):
@@ -129,24 +125,22 @@ class TestAllocationGuards:
 
     def test_gif_lzw_limit_stops_expansion(self):
         out = mm._gif_lzw_decode(
-            mm._gif_lzw_encode([1, 2, 3] * 100, 2), 2, limit=10)
+            FW._gif_lzw_encode([1, 2, 3] * 100, 2), 2, limit=10)
         assert len(out) <= 12  # limit + at most one entry's overshoot
 
     def test_bmp_huge_dims(self):
-        blob = bytearray(mm.encode_bmp(4, 4, bytes(48), 3))
+        blob = bytearray(FW.encode_bmp(4, 4, bytes(48), 3))
         struct.pack_into("<i", blob, 18, 2_000_000_000)
         with pytest.raises(ValueError, match="out of range"):
             mm.decode_bmp(bytes(blob))
 
 
 def _anim_fixtures():
-    from cmc_knowledge_graph_text2ttl_spark.operators.vp8l import (
-        encode_webp_anim,
-    )
+    from fixture_writers import encode_webp_anim
 
     solid = lambda w, h, px: bytes(px) * (w * h)  # noqa: E731
     return [
-        ("apng", lambda: mm.encode_apng(8, 6, [
+        ("apng", lambda: FW.encode_apng(8, 6, [
             (0, 0, 8, 6, solid(8, 6, (200, 10, 20, 255)), 0, 0),
             (2, 1, 4, 3, solid(4, 3, (5, 180, 30, 128)), 1, 1),
             (0, 0, 8, 6, solid(8, 6, (1, 2, 250, 255)), 2, 0),
@@ -155,9 +149,9 @@ def _anim_fixtures():
             (0, 0, 8, 4, solid(8, 4, (40, 50, 60)), 3, 0, 0),
             (2, 2, 4, 2, solid(4, 2, (200, 100, 0)), 3, 1, 1),
         ])),
-        ("aiff", lambda: mm.encode_aiff(
+        ("aiff", lambda: FW.encode_aiff(
             2, 44100, [((i * 37) % 4001) - 2000 for i in range(64)], 16)),
-        ("avi_dib", lambda: mm.encode_avi_rgb(
+        ("avi_dib", lambda: FW.encode_avi_rgb(
             5, 3, [bytes((i * 11) % 256 for i in range(45))])),
     ]
 

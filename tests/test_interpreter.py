@@ -1139,6 +1139,16 @@ class TestCompiledForm:
         with pytest.raises(WorkflowCompileError, match=re.escape(path) + ": invalid regex"):
             wf(src)
 
+    def test_static_lang_must_be_a_language_tag(self):
+        """lang: is written verbatim, not template-expanded, so a template
+        there used to emit the invalid N-Triples literal "v"@@{n.2}."""
+        with pytest.raises(
+            WorkflowCompileError,
+            match=re.escape("wf[0].object: lang: '@{n.2}' is not a language tag"),
+        ):
+            wf(S.format(obj="{text: v, lang: '@{n.2}'}"))
+        assert triples(S.format(obj="{text: v, lang: en-GB}"))[0][4] == "en-GB"
+
     @pytest.mark.parametrize("src, path", [
         ("- subject: http://e/s\n  predicate: http://e/p\n  object: [{exec: 'x = 1'}]",
          "wf[0].object[0]"),

@@ -4,9 +4,9 @@ entropy coding, dequant/zigzag, IDCT, color conversion."""
 import numpy as np
 import pytest
 
-import codec_fixtures as CF
 from cmc_knowledge_graph_text2ttl_spark.operators import jpeg as J
 from cmc_knowledge_graph_text2ttl_spark.operators import multimodal as mm
+import fixture_writers as FW
 
 
 def _ref_plane(blocks, q, bw, bh, h_img, w_img):
@@ -32,7 +32,7 @@ def _rand_blocks(rng, n, dense=0.3):
 class TestGrayscale:
     def test_dc_only_solid_blocks_exact(self):
         blocks = [[-28] + [0] * 63, [72] + [0] * 63]
-        w, h, ch, px = J.decode_jpeg(J.encode_jpeg_blocks(16, 8, blocks))
+        w, h, ch, px = J.decode_jpeg(FW.encode_jpeg_blocks(16, 8, blocks))
         a = np.frombuffer(px, np.uint8).reshape(8, 16)
         assert (w, h, ch) == (16, 8, 1)
         assert (a[:, :8] == 100).all() and (a[:, 8:] == 200).all()
@@ -46,7 +46,7 @@ class TestGrayscale:
             q = [8] + [int(x) for x in rng.randint(1, 20, 63)]
             blocks = _rand_blocks(rng, bw * bh, dense=rng.rand())
             w, h, ch, px = J.decode_jpeg(
-                J.encode_jpeg_blocks(w_img, h_img, blocks, quant=q)
+                FW.encode_jpeg_blocks(w_img, h_img, blocks, quant=q)
             )
             got = np.frombuffer(px, np.uint8).reshape(h, w)
             ref = np.clip(
@@ -60,7 +60,7 @@ class TestGrayscale:
         # desynchronizes the next block's DC
         full = [1] * 64
         blocks = [full, [0] * 64]
-        w, h, ch, px = J.decode_jpeg(J.encode_jpeg_blocks(16, 8, blocks))
+        w, h, ch, px = J.decode_jpeg(FW.encode_jpeg_blocks(16, 8, blocks))
         a = np.frombuffer(px, np.uint8).reshape(8, 16)
         assert (a[:, 8:] == 128).all()  # second block stays neutral
 
@@ -77,7 +77,7 @@ class TestColor:
         yb = [[10] + [0] * 63]
         cb = [[5] + [0] * 63]
         cr = [[-9] + [0] * 63]
-        w, h, ch, px = J.decode_jpeg(CF.encode_jpeg_ycbcr444(8, 8, yb, cb, cr))
+        w, h, ch, px = J.decode_jpeg(FW.encode_jpeg_ycbcr444(8, 8, yb, cb, cr))
         a = np.frombuffer(px, np.uint8).reshape(8, 8, 3)
         assert (w, h, ch) == (8, 8, 3)
         assert (a == conv(10, 5, -9)).all()
@@ -88,7 +88,7 @@ class TestColor:
         yb, cbb, crb = (_rand_blocks(rng, 4) for _ in range(3))
         q = [8] + [int(x) for x in rng.randint(1, 16, 63)]
         w, h, ch, px = J.decode_jpeg(
-            CF.encode_jpeg_ycbcr444(w_img, h_img, yb, cbb, crb, quant=q)
+            FW.encode_jpeg_ycbcr444(w_img, h_img, yb, cbb, crb, quant=q)
         )
         got = np.frombuffer(px, np.uint8).reshape(h, w, 3).astype(float)
         y = _ref_plane(yb, q, bw, bh, h_img, w_img) + 128.0
@@ -122,7 +122,7 @@ class TestSubsampling:
         yb = [[v] + [0] * 63 for v in (10, -40, 60, -90)]
         cb = [[6] + [0] * 63]
         cr = [[-12] + [0] * 63]
-        w, h, ch, px = J.decode_jpeg(CF.encode_jpeg_ycbcr420(16, 16, yb, cb, cr))
+        w, h, ch, px = J.decode_jpeg(FW.encode_jpeg_ycbcr420(16, 16, yb, cb, cr))
         a = np.frombuffer(px, np.uint8).reshape(16, 16, 3)
         assert (w, h, ch) == (16, 16, 3)
         assert (a[:8, :8] == conv(10, 6, -12)).all()
@@ -135,7 +135,7 @@ class TestSubsampling:
         yb = [[i] + [0] * 63 for i in range(8)]
         cb = [[0] + [0] * 63, [0] + [0] * 63]
         cr = [[0] + [0] * 63, [0] + [0] * 63]
-        w, h, ch, px = J.decode_jpeg(CF.encode_jpeg_ycbcr420(20, 12, yb, cb, cr))
+        w, h, ch, px = J.decode_jpeg(FW.encode_jpeg_ycbcr420(20, 12, yb, cb, cr))
         assert (w, h, ch) == (20, 12, 3)
         a = np.frombuffer(px, np.uint8).reshape(12, 20, 3)
         # top-left Y block is 0 → gray 128 everywhere in that quadrant
@@ -143,7 +143,7 @@ class TestSubsampling:
 
     def test_420_block_count_mismatch_raises(self):
         with pytest.raises(ValueError):
-            CF.encode_jpeg_ycbcr420(16, 16, [[0] * 64] * 3, [[0] * 64], [[0] * 64])
+            FW.encode_jpeg_ycbcr420(16, 16, [[0] * 64] * 3, [[0] * 64], [[0] * 64])
 
 
 class TestRobustness:
@@ -154,7 +154,7 @@ class TestRobustness:
     def test_truncated_and_tableless_raise_valueerror_not_index_key(self):
         # regression: these used to escape as IndexError/KeyError past
         # the per-row error containment in extract_features
-        blob = J.encode_jpeg_blocks(16, 16, [[5] + [0] * 63] * 4)
+        blob = FW.encode_jpeg_blocks(16, 16, [[5] + [0] * 63] * 4)
         with pytest.raises(ValueError):
             J.decode_jpeg(blob[:-6])  # truncated mid-scan
         at = blob.index(b"\xff\xc4")  # drop the DHT segment
@@ -163,7 +163,7 @@ class TestRobustness:
             J.decode_jpeg(blob[:at] + blob[at + 2 + seglen :])
 
     def test_corrupt_jpeg_becomes_error_row_in_features(self, spark):
-        good = J.encode_jpeg_blocks(8, 8, [[-28] + [0] * 63])
+        good = FW.encode_jpeg_blocks(8, 8, [[-28] + [0] * 63])
         df = spark.createDataFrame(
             [("ok", bytearray(good)), ("bad", bytearray(good[:-6]))],
             "media_id string, blob binary",
@@ -177,7 +177,7 @@ class TestRobustness:
     def test_baseline_scan_under_sof2_header_is_error(self):
         # a baseline full-band scan (Ss=0 Se=63) is illegal in a
         # progressive file: must be a contained error, not a crash
-        blob = bytearray(J.encode_jpeg_blocks(8, 8, [[0] * 64]))
+        blob = bytearray(FW.encode_jpeg_blocks(8, 8, [[0] * 64]))
         at = blob.index(b"\xff\xc0")
         blob[at + 1] = 0xC2  # SOF2 progressive
         with pytest.raises(ValueError, match="mixes DC and AC"):
@@ -185,15 +185,15 @@ class TestRobustness:
 
     def test_block_count_mismatch_raises(self):
         with pytest.raises(ValueError):
-            J.encode_jpeg_blocks(16, 16, [[0] * 64])
+            FW.encode_jpeg_blocks(16, 16, [[0] * 64])
 
     def test_decode_image_dispatches_jpeg(self):
-        blob = J.encode_jpeg_blocks(8, 8, [[-28] + [0] * 63])
+        blob = FW.encode_jpeg_blocks(8, 8, [[-28] + [0] * 63])
         w, h, ch, px = mm.decode_image(blob)
         assert (w, h, ch) == (8, 8, 1) and px == bytes([100] * 64)
 
     def test_header_sniff_agrees_with_decode(self):
-        blob = J.encode_jpeg_blocks(24, 16, [[0] * 64] * 6)
+        blob = FW.encode_jpeg_blocks(24, 16, [[0] * 64] * 6)
         assert mm.sniff_media(blob) == ("image", "jpeg", 24, 16)
 
 
@@ -211,8 +211,8 @@ class TestProgressive:
     baseline encoding of the same quantized blocks."""
 
     def _assert_equal(self, w, h, blocks):
-        base = J.decode_jpeg(J.encode_jpeg_blocks(w, h, blocks))
-        prog = J.decode_jpeg(J.encode_jpeg_progressive(w, h, blocks))
+        base = J.decode_jpeg(FW.encode_jpeg_blocks(w, h, blocks))
+        prog = J.decode_jpeg(FW.encode_jpeg_progressive(w, h, blocks))
         assert base == prog
 
     def test_dc_only_blocks(self):
@@ -247,24 +247,24 @@ class TestProgressive:
         y = [_blk(dc=d, k1=d) for d in (8, -8, 16, -16, 0, 24)]
         cb = [_blk(dc=3)] + [_blk()] * 4 + [_blk(dc=-3, k5=2)]
         cr = [_blk(dc=-11, k2=-1)] + [_blk()] * 5
-        base = J.decode_jpeg(CF.encode_jpeg_ycbcr444(24, 16, y, cb, cr))
-        prog = J.decode_jpeg(CF.encode_jpeg_progressive_ycbcr444(24, 16, y, cb, cr))
+        base = J.decode_jpeg(FW.encode_jpeg_ycbcr444(24, 16, y, cb, cr))
+        prog = J.decode_jpeg(FW.encode_jpeg_progressive_ycbcr444(24, 16, y, cb, cr))
         assert base == prog
 
     def test_sniff_and_decode_image_dispatch(self):
-        blob = J.encode_jpeg_progressive(8, 8, [_blk(dc=-28)])
+        blob = FW.encode_jpeg_progressive(8, 8, [_blk(dc=-28)])
         assert mm.sniff_media(blob) == ("image", "jpeg", 8, 8)
         w, h, ch, px = mm.decode_image(blob)
         assert (w, h, ch) == (8, 8, 1) and px == bytes([100] * 64)
 
     def test_truncated_progressive_is_valueerror(self):
-        blob = J.encode_jpeg_progressive(8, 8, [_blk(dc=12, k1=5)])
+        blob = FW.encode_jpeg_progressive(8, 8, [_blk(dc=12, k1=5)])
         with pytest.raises(ValueError):
             J.decode_jpeg(blob[: len(blob) // 2])
 
     def test_fixture_deterministic(self):
         blocks = [_blk(dc=7, k9=-2)]
-        assert J.encode_jpeg_progressive(8, 8, blocks) == J.encode_jpeg_progressive(
+        assert FW.encode_jpeg_progressive(8, 8, blocks) == FW.encode_jpeg_progressive(
             8, 8, blocks
         )
 
@@ -279,7 +279,7 @@ class TestCmyk:
     def test_direct_cmyk_planes_pack_as_stored(self):
         blocks = [self._dc([10, -10]), self._dc([5, 5]),
                   self._dc([0, 1]), self._dc([-3, 4])]
-        w, h, ch, px = J.decode_jpeg(J.encode_jpeg_cmyk(16, 8, blocks))
+        w, h, ch, px = J.decode_jpeg(FW.encode_jpeg_cmyk(16, 8, blocks))
         assert (w, h, ch) == (16, 8, 4)
         assert px[0:4] == bytes([138, 133, 128, 125])
         assert px[8 * 4:8 * 4 + 4] == bytes([118, 133, 129, 132])
@@ -289,7 +289,7 @@ class TestCmyk:
 
         blocks = [self._dc([10]), self._dc([5]),
                   self._dc([0]), self._dc([-3])]
-        w, h, ch, px = J.decode_jpeg(J.encode_jpeg_cmyk(8, 8, blocks, ycck=True))
+        w, h, ch, px = J.decode_jpeg(FW.encode_jpeg_cmyk(8, 8, blocks, ycck=True))
         assert ch == 4
         y, cb, cr = 138.0, 5.0, 0.0
         exp = [
@@ -301,7 +301,7 @@ class TestCmyk:
         assert list(px[0:4]) == exp
 
     def test_two_component_jpeg_rejected(self):
-        blob = bytearray(J.encode_jpeg_cmyk(
+        blob = bytearray(FW.encode_jpeg_cmyk(
             8, 8, [self._dc([0])] * 4))
         # patch SOF ncomp down to 2 and truncate its component list
         i = bytes(blob).find(b"\xff\xc0")

@@ -10,11 +10,12 @@ from cmc_knowledge_graph_text2ttl_spark.operators.extract import (
     extract_one,
     sniff_content_type,
 )
+import fixture_writers as FW
 
 
 class TestXls:
     def test_cell_types_and_gaps(self):
-        blob = L.make_xls(
+        blob = FW.make_xls(
             [("S1", [["a", "b", 7], [3.5, None, "c"], [True, -12]])]
         )
         assert L.xls_to_xhtml_text(blob) == (
@@ -26,19 +27,19 @@ class TestXls:
         )
 
     def test_multiple_sheets_in_boundsheet_order(self):
-        blob = L.make_xls([("Z-last", [["z"]]), ("A-first", [["a"]])])
+        blob = FW.make_xls([("Z-last", [["z"]]), ("A-first", [["a"]])])
         got = L.xls_to_xhtml_text(blob)
         assert got.index("Z-last") < got.index("A-first")
 
     def test_unicode_sheet_name_and_strings(self):
-        blob = L.make_xls([("中文", [["héllo", "日本語"]])])
+        blob = FW.make_xls([("中文", [["héllo", "日本語"]])])
         assert L.xls_to_xhtml_text(blob) == (
             "<html><body><h1>中文</h1><table>"
             "<tr><td>héllo</td><td>日本語</td></tr></table></body></html>"
         )
 
     def test_sst_continue_split(self):
-        blob = L.make_xls(
+        blob = FW.make_xls(
             [("S", [["alpha", "beta", "gamma", "delta"]])],
             sst_continue_split=True,
         )
@@ -55,23 +56,23 @@ class TestXls:
         cont = b"\x01" + "XY".encode("utf-16-le")
         sst_body = struct.pack("<ii", 1, 1) + head
         wb = (
-            L._rec(L._BOF, struct.pack("<HHHHII", 0x0600, 5, 0, 0, 0, 0))
-            + L._rec(
+            FW._rec(FW._BOF, struct.pack("<HHHHII", 0x0600, 5, 0, 0, 0, 0))
+            + FW._rec(
                 L._BOUNDSHEET,
-                struct.pack("<IH", 0, 0) + L._xl_unicode("S", short=True),
+                struct.pack("<IH", 0, 0) + FW._xl_unicode("S", short=True),
             )
-            + L._rec(L._SST, sst_body)
-            + L._rec(L._CONTINUE, cont)
-            + L._rec(L._EOF, b"")
+            + FW._rec(L._SST, sst_body)
+            + FW._rec(L._CONTINUE, cont)
+            + FW._rec(L._EOF, b"")
         )
         sheet = (
-            L._rec(L._BOF, struct.pack("<HHHHII", 0x0600, 0x10, 0, 0, 0, 0))
-            + L._rec(L._LABELSST, struct.pack("<HHHI", 0, 0, 0, 0))
-            + L._rec(L._EOF, b"")
+            FW._rec(FW._BOF, struct.pack("<HHHHII", 0x0600, 0x10, 0, 0, 0, 0))
+            + FW._rec(L._LABELSST, struct.pack("<HHHI", 0, 0, 0, 0))
+            + FW._rec(L._EOF, b"")
         )
         full = bytearray(wb + sheet)
         struct.pack_into("<I", full, 4 + 16 + 4, len(wb))  # lbPlyPos
-        blob = L.make_cfb([("Workbook", bytes(full))])
+        blob = FW.make_cfb([("Workbook", bytes(full))])
         assert "<td>abcXY</td>" in L.xls_to_xhtml_text(blob)
 
     def test_rk_values(self):
@@ -97,19 +98,19 @@ class TestXls:
         assert L._rk_value(0x3FF00000) == 1.0
         # make_xls round-trip: integers must come back intact, not as
         # 8.5e-314 denormal garbage (the old swapped-bit failure mode)
-        blob = L.make_xls([("S", [[100, -42]])])
+        blob = FW.make_xls([("S", [[100, -42]])])
         text = L.xls_to_xhtml_text(blob)
         assert "<td>100</td>" in text and "<td>-42</td>" in text
 
     def test_dispatch_via_extract_one(self):
-        blob = L.make_xls([("S", [["v"]])])
+        blob = FW.make_xls([("S", [["v"]])])
         assert sniff_content_type(blob) == "ole2"
         text, ctype, err = extract_one(blob)
         assert (ctype, err) == ("xls", None)
         assert "<td>v</td>" in text
 
     def test_bad_sst_index_raises(self):
-        blob = bytearray(L.make_xls([("S", [["only"]])]))
+        blob = bytearray(FW.make_xls([("S", [["only"]])]))
         with pytest.raises(ValueError):
             # corrupt every LABELSST isst in place
             raw = bytes(blob)
@@ -122,7 +123,7 @@ class TestXls:
 
 class TestPpt:
     def test_text_atoms_flatten_to_paragraphs(self):
-        blob = L.make_ppt(["Title\rline two", "café — 中文"])
+        blob = FW.make_ppt(["Title\rline two", "café — 中文"])
         assert L.ppt_to_xhtml_text(blob) == (
             "<html><body><p>Title</p><p>line two</p>"
             "<p>café — 中文</p></body></html>"
@@ -132,24 +133,24 @@ class TestPpt:
         inner = struct.pack("<HHI", 0, L._TEXTBYTES, 4) + b"deep"
         mid = struct.pack("<HHI", 0x000F, 0x03EE, len(inner)) + inner
         outer = struct.pack("<HHI", 0x000F, 0x03E8, len(mid)) + mid
-        blob = L.make_cfb([("PowerPoint Document", outer)])
+        blob = FW.make_cfb([("PowerPoint Document", outer)])
         assert L.ppt_to_xhtml_text(blob) == (
             "<html><body><p>deep</p></body></html>"
         )
 
     def test_vertical_tab_becomes_newline(self):
-        blob = L.make_ppt(["a\x0bb"])
+        blob = FW.make_ppt(["a\x0bb"])
         assert "<p>a\nb</p>" in L.ppt_to_xhtml_text(blob)
 
     def test_dispatch_via_extract_one(self):
-        blob = L.make_ppt(["slide text"])
+        blob = FW.make_ppt(["slide text"])
         text, ctype, err = extract_one(blob)
         assert (ctype, err) == ("ppt", None)
         assert "<p>slide text</p>" in text
 
     def test_truncated_record_raises(self):
         bad = struct.pack("<HHI", 0, L._TEXTBYTES, 100) + b"short"
-        blob = L.make_cfb([("PowerPoint Document", bad)])
+        blob = FW.make_cfb([("PowerPoint Document", bad)])
         with pytest.raises(ValueError, match="truncated"):
             L.ppt_to_xhtml_text(blob)
 
@@ -163,21 +164,21 @@ class TestSstBoundaryEdge:
         cont = b"\x01" + "abc".encode("utf-16-le")  # flag flips to wide
         sst_body = struct.pack("<ii", 1, 1) + head
         wb = (
-            L._rec(L._BOF, struct.pack("<HHHHII", 0x0600, 5, 0, 0, 0, 0))
-            + L._rec(
+            FW._rec(FW._BOF, struct.pack("<HHHHII", 0x0600, 5, 0, 0, 0, 0))
+            + FW._rec(
                 L._BOUNDSHEET,
-                struct.pack("<IH", 0, 0) + L._xl_unicode("S", short=True),
+                struct.pack("<IH", 0, 0) + FW._xl_unicode("S", short=True),
             )
-            + L._rec(L._SST, sst_body)
-            + L._rec(L._CONTINUE, cont)
-            + L._rec(L._EOF, b"")
+            + FW._rec(L._SST, sst_body)
+            + FW._rec(L._CONTINUE, cont)
+            + FW._rec(L._EOF, b"")
         )
         sheet = (
-            L._rec(L._BOF, struct.pack("<HHHHII", 0x0600, 0x10, 0, 0, 0, 0))
-            + L._rec(L._LABELSST, struct.pack("<HHHI", 0, 0, 0, 0))
-            + L._rec(L._EOF, b"")
+            FW._rec(FW._BOF, struct.pack("<HHHHII", 0x0600, 0x10, 0, 0, 0, 0))
+            + FW._rec(L._LABELSST, struct.pack("<HHHI", 0, 0, 0, 0))
+            + FW._rec(L._EOF, b"")
         )
         full = bytearray(wb + sheet)
         struct.pack_into("<I", full, 4 + 16 + 4, len(wb))
-        blob = L.make_cfb([("Workbook", bytes(full))])
+        blob = FW.make_cfb([("Workbook", bytes(full))])
         assert "<td>abc</td>" in L.xls_to_xhtml_text(blob)

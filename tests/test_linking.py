@@ -172,55 +172,6 @@ class TestPerDocTurtleExport:
         assert not list(tmp_path.rglob("*.ttl"))
 
 
-class TestLongTurtleStyle:
-    ROWS = [
-        ("http://example.org/kg/doc_1",
-         "http://www.w3.org/1999/02/22-rdf-syntax-ns#type",
-         "iri", "http://example.org/kg/Document", None, None),
-        ("http://example.org/kg/doc_1", "http://example.org/prop/mentions",
-         "iri", "http://example.org/kg/op_join", None, None),
-        ("http://example.org/kg/doc_1", "http://example.org/prop/mentions",
-         "iri", "http://example.org/kg/op_scan", None, None),
-        ("http://example.org/kg/doc_1", "http://example.org/prop/label",
-         "literal", "first doc", "en", None),
-        ("http://example.org/kg/op_join", "http://example.org/prop/label",
-         "literal", "join", "en", None),
-        ("http://example.org/kg/op_join", "http://example.org/prop/weight",
-         "literal", "3", None, "http://www.w3.org/2001/XMLSchema#integer"),
-    ]
-    PFX = {
-        "ex": "http://example.org/kg/",
-        "prop": "http://example.org/prop/",
-        "xsd": "http://www.w3.org/2001/XMLSchema#",
-    }
-
-    def test_longturtle_matches_checked_in_fixture(self):
-        from cmc_knowledge_graph_text2ttl_spark.sinks.ttl import serialize_turtle
-
-        got = serialize_turtle(self.ROWS, self.PFX, style="longturtle")
-        expected = open("fixtures/golden/longturtle_sample.ttl").read()
-        assert got == expected
-
-    def test_longturtle_layout_rules(self):
-        from cmc_knowledge_graph_text2ttl_spark.sinks.ttl import serialize_turtle
-
-        got = serialize_turtle(self.ROWS, self.PFX, style="longturtle")
-        lines = got.split("\n")
-        assert lines[0].startswith("PREFIX ")          # PREFIX, not @prefix
-        assert "    a ex:Document ;" in lines          # rdf:type first, as 'a'
-        assert "        ex:op_join ," in lines         # multi-objects deeper
-        assert "." in lines                            # closing dot on own line
-        # default stays canonical
-        canon = serialize_turtle(self.ROWS, self.PFX)
-        assert canon.startswith("@prefix ")
-
-    def test_bad_style_raises(self):
-        from cmc_knowledge_graph_text2ttl_spark.sinks.ttl import serialize_turtle
-
-        with pytest.raises(ValueError):
-            serialize_turtle(self.ROWS, self.PFX, style="n3")
-
-
 class TestEmbeddingLinking:
     """Embedding-tier entity linking (operators/linking.embedding_link)."""
 

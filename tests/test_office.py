@@ -11,6 +11,7 @@ from cmc_knowledge_graph_text2ttl_spark.operators.extract import (
     ooxml_to_xhtml_text,
     sniff_content_type,
 )
+import fixture_writers as FW
 
 
 def _zip(members):
@@ -23,7 +24,7 @@ def _zip(members):
 
 class TestXlsx:
     def test_fixture_roundtrip_with_gap_and_number(self):
-        blob = O.make_xlsx([("S", [["a", "b"], [7, None, "c"]])])
+        blob = FW.make_xlsx([("S", [["a", "b"], [7, None, "c"]])])
         assert sniff_content_type(blob) == "ooxml"
         text, ctype, err = extract_one(blob)
         assert ctype == "xlsx" and err is None
@@ -117,7 +118,7 @@ class TestXlsx:
 
 class TestPptx:
     def test_fixture_roundtrip_paragraphs_and_table(self):
-        blob = O.make_pptx([["p one", [["a", "b"]]], ["p two"]])
+        blob = FW.make_pptx([["p one", [["a", "b"]]], ["p two"]])
         text, ctype, err = extract_one(blob)
         assert ctype == "pptx" and err is None
         assert text == (
@@ -154,8 +155,8 @@ class TestPptx:
 
 class TestDispatch:
     def test_refined_types(self):
-        assert ooxml_to_xhtml_text(O.make_xlsx([("S", [["x"]])]))[1] == "xlsx"
-        assert ooxml_to_xhtml_text(O.make_pptx([["x"]]))[1] == "pptx"
+        assert ooxml_to_xhtml_text(FW.make_xlsx([("S", [["x"]])]))[1] == "xlsx"
+        assert ooxml_to_xhtml_text(FW.make_pptx([["x"]]))[1] == "pptx"
 
     def test_unknown_zip_is_error_row_with_ooxml_type(self):
         blob = _zip([("whatever.txt", "nope")])

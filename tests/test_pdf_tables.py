@@ -189,9 +189,7 @@ class TestAdapter:
             pytest.skip("PyMuPDF available; fallback not exercised here")
         except ImportError:
             pass
-        from cmc_knowledge_graph_text2ttl_spark.operators.pdf_textlayer import (
-            make_table_pdf,
-        )
+        from fixture_writers import make_table_pdf
 
         cells = [["a", "b", "c"], ["d", "e", "f"], ["g", "h", "i"]]
         xhtml = pdf_bytes_to_xhtml(make_table_pdf(cells))

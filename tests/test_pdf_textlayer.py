@@ -12,9 +12,9 @@ import pytest
 from cmc_knowledge_graph_text2ttl_spark.operators.pdf_tables import render_doc
 from cmc_knowledge_graph_text2ttl_spark.operators.pdf_textlayer import (
     PdfParseError,
-    make_table_pdf,
     pdf_bytes_to_page_models_stdlib,
 )
+from fixture_writers import make_table_pdf
 
 CELLS = [["alpha", "beta", "gamma"], ["one", "two", "three"], ["x1", "y2", "z3"]]
 
@@ -335,9 +335,7 @@ class TestEncryption:
         from cmc_knowledge_graph_text2ttl_spark.operators.pdf_tables import (
             pdf_bytes_to_xhtml,
         )
-        from cmc_knowledge_graph_text2ttl_spark.operators.pdf_textlayer import (
-            make_table_pdf,
-        )
+        from fixture_writers import make_table_pdf
 
         plain = pdf_bytes_to_xhtml(make_table_pdf(self.CELLS, title="T"))
         for compress in (False, True):
@@ -351,9 +349,7 @@ class TestEncryption:
         from cmc_knowledge_graph_text2ttl_spark.operators.pdf_tables import (
             pdf_bytes_to_xhtml,
         )
-        from cmc_knowledge_graph_text2ttl_spark.operators.pdf_textlayer import (
-            make_table_pdf,
-        )
+        from fixture_writers import make_table_pdf
 
         blob = bytearray(make_table_pdf(self.CELLS, encrypt=True))
         i = bytes(blob).find(b"/U <")
@@ -365,9 +361,7 @@ class TestEncryption:
         from cmc_knowledge_graph_text2ttl_spark.operators.pdf_tables import (
             pdf_bytes_to_xhtml,
         )
-        from cmc_knowledge_graph_text2ttl_spark.operators.pdf_textlayer import (
-            make_table_pdf,
-        )
+        from fixture_writers import make_table_pdf
 
         plain = pdf_bytes_to_xhtml(make_table_pdf(self.CELLS, title="T"))
         for compress in (False, True):
@@ -381,9 +375,7 @@ class TestEncryption:
         from cmc_knowledge_graph_text2ttl_spark.operators.pdf_tables import (
             pdf_bytes_to_xhtml,
         )
-        from cmc_knowledge_graph_text2ttl_spark.operators.pdf_textlayer import (
-            make_table_pdf,
-        )
+        from fixture_writers import make_table_pdf
 
         blob = make_table_pdf(self.CELLS, encrypt="aesv2")
         blob = blob.replace(b"/CFM /AESV2", b"/CFM /AESV3")
@@ -396,9 +388,7 @@ class TestEncryption:
         from cmc_knowledge_graph_text2ttl_spark.operators.pdf_tables import (
             pdf_bytes_to_xhtml,
         )
-        from cmc_knowledge_graph_text2ttl_spark.operators.pdf_textlayer import (
-            make_table_pdf,
-        )
+        from fixture_writers import make_table_pdf
 
         blob = make_table_pdf(self.CELLS, encrypt=True)  # RC4 streams
         blob = blob.replace(
@@ -413,9 +403,7 @@ class TestEncryption:
         from cmc_knowledge_graph_text2ttl_spark.operators.pdf_tables import (
             pdf_bytes_to_xhtml,
         )
-        from cmc_knowledge_graph_text2ttl_spark.operators.pdf_textlayer import (
-            make_table_pdf,
-        )
+        from fixture_writers import make_table_pdf
 
         plain = pdf_bytes_to_xhtml(make_table_pdf(self.CELLS, title="T"))
         enc = make_table_pdf(self.CELLS, title="T", encrypt="aes256")
@@ -426,9 +414,7 @@ class TestEncryption:
         from cmc_knowledge_graph_text2ttl_spark.operators.pdf_tables import (
             pdf_bytes_to_xhtml,
         )
-        from cmc_knowledge_graph_text2ttl_spark.operators.pdf_textlayer import (
-            make_table_pdf,
-        )
+        from fixture_writers import make_table_pdf
 
         blob = bytearray(make_table_pdf(self.CELLS, encrypt="aes256"))
         i = bytes(blob).find(b"/U <")
@@ -439,10 +425,10 @@ class TestEncryption:
     def test_aes256_fips197_c3_vector_and_hash2b_shape(self):
         from cmc_knowledge_graph_text2ttl_spark.operators.pdf_textlayer import (
             _aes_decrypt_block,
-            _aes_encrypt_block,
             _aes_expand_key,
             _hash_2b,
         )
+        from fixture_writers import _aes_encrypt_block
 
         key = bytes.fromhex(
             "000102030405060708090a0b0c0d0e0f"
@@ -463,11 +449,10 @@ class TestEncryption:
     def test_aes_fips197_vector(self):
         from cmc_knowledge_graph_text2ttl_spark.operators.pdf_textlayer import (
             _aes_cbc_decrypt,
-            _aes_cbc_encrypt,
             _aes_decrypt_block,
-            _aes_encrypt_block,
             _aes_expand_key,
         )
+        from fixture_writers import _aes_cbc_encrypt, _aes_encrypt_block
 
         key = bytes.fromhex("000102030405060708090a0b0c0d0e0f")
         pt = bytes.fromhex("00112233445566778899aabbccddeeff")
@@ -491,9 +476,9 @@ class TestEncryption:
     def test_algorithm_values_are_self_consistent(self):
         from cmc_knowledge_graph_text2ttl_spark.operators.pdf_textlayer import (
             _std_file_key,
-            _std_owner_value,
             _std_user_value,
         )
+        from fixture_writers import _std_owner_value
 
         fid = b"\x01" * 16
         o = _std_owner_value(b"owner", b"", 3, 16)

@@ -11,15 +11,14 @@ from hypothesis import strategies as st
 from cmc_knowledge_graph_text2ttl_spark.operators import multimodal as mm
 from cmc_knowledge_graph_text2ttl_spark.operators import odf as ODF
 from cmc_knowledge_graph_text2ttl_spark.operators import rtf as RTF
-from cmc_knowledge_graph_text2ttl_spark.operators.doc_binary import (
-    doc_to_xhtml_text,
-    make_doc,
-)
+from cmc_knowledge_graph_text2ttl_spark.operators.doc_binary import doc_to_xhtml_text
 from cmc_knowledge_graph_text2ttl_spark.sources.archives import (
     _iter_members,
     build_tar,
     build_zip,
 )
+import fixture_writers as FW
+from fixture_writers import make_doc
 
 # printable text without the markup-ambiguous or layout control chars
 _plain = st.text(
@@ -38,7 +37,7 @@ def _esc(s: str) -> str:
 @settings(max_examples=60, deadline=None)
 @given(st.lists(_plain, min_size=1, max_size=5))
 def test_rtf_paragraph_roundtrip(paras):
-    out = RTF.rtf_to_xhtml_text(RTF.make_rtf(paras))
+    out = RTF.rtf_to_xhtml_text(FW.make_rtf(paras))
     expected = "".join(f"<p>{_esc(p)}</p>" for p in paras)
     assert out == f"<html><body>{expected}</body></html>"
 
@@ -47,7 +46,7 @@ def test_rtf_paragraph_roundtrip(paras):
 @given(st.lists(_plain, min_size=1, max_size=4))
 def test_odt_paragraph_roundtrip(paras):
     # the ODF writer encodes space runs as <text:s>; parser restores them
-    text, kind = ODF.odf_to_xhtml_text(ODF.make_odt(list(paras)))
+    text, kind = ODF.odf_to_xhtml_text(FW.make_odt(list(paras)))
     expected = "".join(f"<p>{_esc(p)}</p>" for p in paras)
     assert kind == "odt" and text == f"<html><body>{expected}</body></html>"
 
@@ -103,7 +102,7 @@ def test_archive_member_roundtrip(members, kind):
 )
 def test_png_roundtrip_any_dims(w, h, ch, interlace, rnd):
     px = bytes(rnd.randrange(256) for _ in range(w * h * ch))
-    blob = mm.encode_png_ex(w, h, px, ch, interlace=interlace)
+    blob = FW.encode_png_ex(w, h, px, ch, interlace=interlace)
     assert mm.decode_png(blob) == (w, h, ch, px)
 
 
@@ -116,7 +115,7 @@ def test_png_roundtrip_any_dims(w, h, ch, interlace, rnd):
 def test_bmp_tiff_agree_on_same_pixels(w, h, rnd):
     px = bytes(rnd.randrange(256) for _ in range(w * h * 3))
     assert (
-        mm.decode_bmp(mm.encode_bmp(w, h, px, 3))
-        == mm.decode_tiff(mm.encode_tiff(w, h, px, 3))
+        mm.decode_bmp(FW.encode_bmp(w, h, px, 3))
+        == mm.decode_tiff(FW.encode_tiff(w, h, px, 3))
         == (w, h, 3, px)
     )

@@ -25,6 +25,15 @@ Both checks read the AST only; nothing is imported.
    (stored in a table, then called through a variable or a subscript)
    also counts every such indirect call in that file as a call of it. An
    option nothing sets is deleted by folding it into its default.
+4. Within the CLI's import closure, every top-level definition is reached
+   from ``cli.py`` (following names from the CLI module and from each
+   closure module's import-time statements, definition by definition),
+   or from one of the ``CLI_CLOSURE_ENTRY_POINTS`` other tools call, or
+   is a helper only those reach. Each entry point is paired with a file
+   that references it, so the list cannot go stale. Test-data writers
+   live in the repo-root ``fixture_writers.py``, which is not a root:
+   a writer moved back into the package fails check 2 (used by nothing)
+   or this check (a closure module's definition the CLI never runs).
 """
 
 import ast
@@ -39,6 +48,19 @@ ROOT_MODULES = (f"{PKG_NAME}.cli",)
 # "module" or "module:name" entries exempt from the checks. Keep it empty:
 # delete unreached code instead of listing it here.
 ALLOWLIST = frozenset()
+
+# Check 4: definitions in the CLI's import closure that ``cli.py`` does not
+# run, each with a file (repo-relative) that calls it. Entry points of the
+# other tools, not an allowlist: a name the CLI comes to reach, or that its
+# file stops referencing, fails the check.
+CLI_CLOSURE_ENTRY_POINTS = {
+    "extract_and_run_workflows": "perfbench/workloads.py",
+    "synth_page_rows": "perfbench/inputs.py",
+    "synth_pages_df": "bench_scaling.py",
+    "html_to_plain_text": "__spark_entry__.py",
+    "triples_to_nt_lines": "tools/make_goldens.py",
+    "html_string": f"{PKG_NAME}/operators/pagemeta.py",
+}
 
 
 def _parse(path):
@@ -319,6 +341,54 @@ def unreferenced_definitions():
         dead |= new
 
 
+def cli_closure_definitions():
+    """``(module:name -> names its span references)`` for the top-level
+    definitions of the CLI's import closure, and the names the CLI reaches
+    directly: everything ``cli.py`` references plus what each closure
+    module's import-time statements (not definitions) reference."""
+    graph = ImportGraph()
+    cli = graph.reach([(m, None) for m in ROOT_MODULES])
+    defs, start = {}, set()
+    binding = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef, ast.Assign,
+               ast.AnnAssign, ast.Import, ast.ImportFrom)
+    for mod in sorted(cli):
+        tree = graph.trees[mod]
+        if mod in ROOT_MODULES:
+            start.update(name for name, _ in _references(tree))
+        if graph.is_package(mod):
+            continue
+        refs = list(_references(tree))
+        for name, first, last in _definitions(tree):
+            defs[f"{mod}:{name}"] = {n for n, line in refs if first <= line <= last}
+        for node in tree.body:
+            if not isinstance(node, binding):
+                start.update(name for name, _ in _references(node))
+    return defs, start
+
+
+def _reach_definitions(defs, names, skip=frozenset()):
+    """Definitions reached from ``names``, matching by name as check 2 does."""
+    by_name = {}
+    for key in defs:
+        by_name.setdefault(key.split(":", 1)[1], []).append(key)
+    seen, todo = set(), list(names)
+    while todo:
+        for key in by_name.get(todo.pop(), ()):
+            if key not in seen and key not in skip:
+                seen.add(key)
+                todo += defs[key]
+    return seen
+
+
+def cli_unreached_definitions():
+    """(definitions of the CLI's closure the CLI does not reach, those the
+    entry points reach but the CLI does not), both sorted."""
+    defs, start = cli_closure_definitions()
+    from_cli = _reach_definitions(defs, start)
+    from_entries = _reach_definitions(defs, CLI_CLOSURE_ENTRY_POINTS, skip=from_cli)
+    return sorted(set(defs) - from_cli), sorted(from_entries)
+
+
 def registry_closures():
     """Registry query name -> package modules its import closure reaches:
     imports inside the query, plus ``__spark_entry__`` module-level imports
@@ -385,6 +455,14 @@ def test_every_top_level_definition_is_referenced():
 
 def test_every_defaulted_parameter_is_set_by_some_caller():
     assert closure_unset_parameters() == []
+
+
+def test_cli_closure_holds_only_what_the_cli_or_an_entry_point_runs():
+    unreached, from_entries = cli_unreached_definitions()
+    assert unreached == from_entries
+    for name, path in CLI_CLOSURE_ENTRY_POINTS.items():
+        assert any(key.endswith(f":{name}") for key in unreached), f"the CLI reaches {name}"
+        assert name in {n for n, _ in _references(_parse(REPO / path))}, f"{path}: no {name}"
 
 
 def test_positional_keyword_forwarded_and_indirect_calls_set_parameters():

@@ -3,18 +3,18 @@ extraction + dispatch through extract_one."""
 
 import pytest
 
-import codec_fixtures as CF
 from cmc_knowledge_graph_text2ttl_spark.operators import odf as ODF
 from cmc_knowledge_graph_text2ttl_spark.operators import rtf as RTF
 from cmc_knowledge_graph_text2ttl_spark.operators.extract import (
     extract_one,
     sniff_content_type,
 )
+import fixture_writers as FW
 
 
 class TestRtf:
     def test_sniff_and_dispatch(self):
-        blob = RTF.make_rtf(["hello"])
+        blob = FW.make_rtf(["hello"])
         assert sniff_content_type(blob) == "rtf"
         text, ctype, err = extract_one(blob)
         assert (text, ctype, err) == (
@@ -24,7 +24,7 @@ class TestRtf:
         )
 
     def test_paragraphs_and_table(self):
-        blob = RTF.make_rtf(["one", [["a", "b"], ["c", "d"]], "two"])
+        blob = FW.make_rtf(["one", [["a", "b"], ["c", "d"]], "two"])
         assert RTF.rtf_to_xhtml_text(blob) == (
             "<html><body><p>one</p>"
             "<table><tr><td>a</td><td>b</td></tr>"
@@ -33,13 +33,13 @@ class TestRtf:
         )
 
     def test_escapes_hex_unicode_and_symbols(self):
-        blob = RTF.make_rtf(["café — {x} \\ 中文 \U0001F600"])
+        blob = FW.make_rtf(["café — {x} \\ 中文 \U0001F600"])
         assert RTF.rtf_to_xhtml_text(blob) == (
             "<html><body><p>café — {x} \\ 中文 \U0001F600</p></body></html>"
         )
 
     def test_tab_and_line_inside_paragraph(self):
-        blob = RTF.make_rtf(["a\tb\nc"])
+        blob = FW.make_rtf(["a\tb\nc"])
         assert "<p>a\tb\nc</p>" in RTF.rtf_to_xhtml_text(blob)
 
     def test_destinations_and_bin_skipped(self):
@@ -68,7 +68,7 @@ class TestRtf:
         )
 
     def test_surrogate_pair_recombines(self):
-        blob = RTF.make_rtf(["x\U0001F600y"])
+        blob = FW.make_rtf(["x\U0001F600y"])
         assert "x\U0001F600y" in RTF.rtf_to_xhtml_text(blob)
 
     def test_lone_surrogate_replaced(self):
@@ -78,7 +78,7 @@ class TestRtf:
         assert "�" in out and "tail" in out
 
     def test_xml_special_chars_escaped_in_render(self):
-        blob = RTF.make_rtf(["a<b&c>d"])
+        blob = FW.make_rtf(["a<b&c>d"])
         assert RTF.rtf_to_xhtml_text(blob) == (
             "<html><body><p>a&lt;b&amp;c&gt;d</p></body></html>"
         )
@@ -95,7 +95,7 @@ class TestRtf:
 
 class TestOdf:
     def test_odt_roundtrip(self):
-        blob = ODF.make_odt(
+        blob = FW.make_odt(
             [(1, "Title"), "para one", [["a", "b"], ["c", "d"]], "tail"]
         )
         text, kind = ODF.odf_to_xhtml_text(blob)
@@ -108,14 +108,14 @@ class TestOdf:
         )
 
     def test_dispatch_via_extract_one(self):
-        blob = ODF.make_odt(["hello"])
+        blob = FW.make_odt(["hello"])
         assert sniff_content_type(blob) == "ooxml"  # PK magic
         text, ctype, err = extract_one(blob)
         assert (ctype, err) == ("odt", None)
         assert text == "<html><body><p>hello</p></body></html>"
 
     def test_whitespace_elements_expand(self):
-        blob = ODF.make_odt(["a  b\tc\nd"])
+        blob = FW.make_odt(["a  b\tc\nd"])
         text, _ = ODF.odf_to_xhtml_text(blob)
         assert "<p>a  b\tc\nd</p>" in text
 
@@ -125,7 +125,7 @@ class TestOdf:
             '<text:h text:outline-level="9">Deep</text:h>'
             "</office:text></office:body></office:document-content>"
         )
-        blob = ODF._write_odf_zip(
+        blob = FW._write_odf_zip(
             "application/vnd.oasis.opendocument.text", raw
         )
         text, _ = ODF.odf_to_xhtml_text(blob)
@@ -140,14 +140,14 @@ class TestOdf:
             "</table:table-row></table:table>"
             "</office:text></office:body>"
         )
-        blob = ODF._write_odf_zip(
+        blob = FW._write_odf_zip(
             "application/vnd.oasis.opendocument.text", raw
         )
         text, _ = ODF.odf_to_xhtml_text(blob)
         assert "<tr><td></td><td></td><td></td><td>x</td></tr>" in text
 
     def test_odp_pages_render_as_slides(self):
-        blob = CF.make_odp([["s1", [["x"]]], ["s2"]])
+        blob = FW.make_odp([["s1", [["x"]]], ["s2"]])
         text, kind = ODF.odf_to_xhtml_text(blob)
         assert kind == "odp"
         assert text == (
@@ -164,7 +164,7 @@ class TestOdf:
             "</table:table-row></table:table>"
             "</office:spreadsheet></office:body>"
         )
-        blob = ODF._write_odf_zip(
+        blob = FW._write_odf_zip(
             "application/vnd.oasis.opendocument.spreadsheet", raw
         )
         text, kind = ODF.odf_to_xhtml_text(blob)
@@ -179,7 +179,7 @@ class TestOdf:
             "<text:p>fn</text:p></text:note-body></text:note></text:p>"
             "</office:text></office:body>"
         )
-        blob = ODF._write_odf_zip(
+        blob = FW._write_odf_zip(
             "application/vnd.oasis.opendocument.text", raw
         )
         text, _ = ODF.odf_to_xhtml_text(blob)
@@ -193,7 +193,7 @@ class TestOdf:
             "</table:table-cell></table:table-row></table:table>"
             "</office:text></office:body>"
         )
-        blob = ODF._write_odf_zip(
+        blob = FW._write_odf_zip(
             "application/vnd.oasis.opendocument.text", raw
         )
         text, _ = ODF.odf_to_xhtml_text(blob)

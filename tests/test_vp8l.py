@@ -13,12 +13,11 @@ import pytest
 from cmc_knowledge_graph_text2ttl_spark.operators import multimodal as mm
 from cmc_knowledge_graph_text2ttl_spark.operators import vp8l as V
 from cmc_knowledge_graph_text2ttl_spark.operators.vp8l import (
-    _BitWriter,
     _CACHE_MULT,
     _canonical_codes,
-    _huffman_lengths,
-    _write_tree,
 )
+import fixture_writers as FW
+from fixture_writers import _BitWriter, _huffman_lengths, _write_tree
 
 
 def _write_literal_image(bw, argb_pixels, cache_bits=0, is_main=True):
@@ -72,7 +71,7 @@ class TestRoundtrip:
             w, h = random.randint(1, 20), random.randint(1, 15)
             ch = random.choice([3, 4])
             px = bytes(random.randrange(256) for _ in range(w * h * ch))
-            got = V.decode_webp(V.encode_webp_lossless(w, h, px, ch))
+            got = V.decode_webp(FW.encode_webp_lossless(w, h, px, ch))
             assert got[:3] == (w, h, 4)
             for i in range(w * h):
                 assert got[3][4 * i : 4 * i + 3] == px[ch * i : ch * i + 3]
@@ -80,13 +79,13 @@ class TestRoundtrip:
                 assert got[3][4 * i + 3] == a
 
     def test_constant_image_degenerate_trees(self):
-        blob = V.encode_webp_lossless(6, 3, bytes([7, 8, 9] * 18), 3)
+        blob = FW.encode_webp_lossless(6, 3, bytes([7, 8, 9] * 18), 3)
         w, h, ch, px = V.decode_webp(blob)
         assert (w, h, ch) == (6, 3, 4)
         assert px == bytes([7, 8, 9, 255]) * 18
 
     def test_decode_image_dispatch_and_dims(self):
-        blob = V.encode_webp_lossless(5, 4, bytes(60), 3)
+        blob = FW.encode_webp_lossless(5, 4, bytes(60), 3)
         assert mm.sniff_media(blob) == ("image", "webp", 5, 4)
         assert mm.decode_image(blob)[:3] == (5, 4, 4)
 
@@ -97,8 +96,8 @@ class TestRoundtrip:
 
         w, h = 16, 11
         px = bytes((j * 17 + (j % 7) * 41) % 256 for j in range(w * h * 3))
-        a = dhash_bands(*mm.decode_png(mm.encode_png(w, h, px, 3)))
-        b = dhash_bands(*mm.decode_image(V.encode_webp_lossless(w, h, px, 3)))
+        a = dhash_bands(*mm.decode_png(FW.encode_png(w, h, px, 3)))
+        b = dhash_bands(*mm.decode_image(FW.encode_webp_lossless(w, h, px, 3)))
         assert a == b
 
 
@@ -269,7 +268,7 @@ class TestTransforms:
             ch = random.choice([3, 4])
             px = bytes(random.randrange(256) for _ in range(w * h * ch))
             got = V.decode_vp8l(
-                V.encode_vp8l(w, h, px, ch, transforms=[("predictor", mode)])
+                FW.encode_vp8l(w, h, px, ch, transforms=[("predictor", mode)])
             )
             assert got[:3] == (w, h, 4)
             for i in range(w * h):
@@ -283,7 +282,7 @@ class TestTransforms:
             deltas = tuple(random.randint(-128, 127) for _ in range(3))
             px = bytes(random.randrange(256) for _ in range(w * h * 3))
             got = V.decode_vp8l(
-                V.encode_vp8l(w, h, px, 3, transforms=[("color", deltas)])
+                FW.encode_vp8l(w, h, px, 3, transforms=[("color", deltas)])
             )
             for i in range(w * h):
                 assert got[3][4 * i : 4 * i + 3] == px[3 * i : 3 * i + 3]
@@ -296,7 +295,7 @@ class TestTransforms:
             tr = ["subtract_green", ("predictor", random.randint(0, 13))]
             random.shuffle(tr)
             tr.append(("color", (random.randint(-128, 127), 3, -5)))
-            got = V.decode_vp8l(V.encode_vp8l(w, h, px, 4, transforms=tr))
+            got = V.decode_vp8l(FW.encode_vp8l(w, h, px, 4, transforms=tr))
             assert got[3] == px
 
     def test_select_is_strict_per_amended_spec(self):
@@ -334,7 +333,7 @@ class TestTransforms:
         assert V._predict(px, w, 1, 1, 9, sub, 1) == px[2]       # TR normal
         assert V._predict(px, w, 2, 1, 9, sub, 1) == px[3]       # TR wraps
         # end-to-end: all-zero residuals under mode 2 stay black
-        blob = V.encode_vp8l(
+        blob = FW.encode_vp8l(
             3, 2, bytes([0, 0, 0]) * 6, 3, transforms=[("predictor", 2)]
         )
         assert V.decode_vp8l(blob)[3] == bytes([0, 0, 0, 255]) * 6
@@ -462,7 +461,7 @@ class TestErrorEdges:
 
     def test_truncated_and_garbage_raise_valueerror(self):
         px = bytes((i * 31) % 256 for i in range(8 * 8 * 3))
-        payload = V.encode_vp8l(8, 8, px, 3)
+        payload = FW.encode_vp8l(8, 8, px, 3)
         with pytest.raises(ValueError):
             V.decode_vp8l(payload[: len(payload) // 2])
         with pytest.raises(ValueError):
@@ -471,7 +470,7 @@ class TestErrorEdges:
             V.decode_vp8l(b"\x00" + payload[1:])  # bad signature
 
     def test_feature_extract_skips_lossy_rows(self, spark):
-        good = V.encode_webp_lossless(3, 3, bytes([5] * 27), 3)
+        good = FW.encode_webp_lossless(3, 3, bytes([5] * 27), 3)
         body = b"WEBPVP8 " + b"\x00\x00\x00\x00" + b"\x00" * 16
         lossy = b"RIFF" + len(body).to_bytes(4, "little") + body
         df = spark.createDataFrame(
