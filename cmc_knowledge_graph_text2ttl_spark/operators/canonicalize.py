@@ -23,14 +23,10 @@ final min), which keeps no single reducer owning a whole hub.
 
 from __future__ import annotations
 
-import logging
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .columns import local_frame
-
-log = logging.getLogger(__name__)
 
 OWL_SAMEAS = "http://www.w3.org/2002/07/owl#sameAs"
 

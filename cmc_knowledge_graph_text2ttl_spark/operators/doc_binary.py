@@ -22,10 +22,10 @@ as per-row error rows like every other unsupported input.
 
 from __future__ import annotations
 
-import html as _html
 import struct
 from typing import List
 
+from . import xhtml as X
 from .cfb import CfbReader
 
 __all__ = ["doc_to_xhtml_text", "extract_doc_text"]
@@ -112,7 +112,7 @@ def doc_to_xhtml_text(data: bytes, reader: CfbReader = None) -> str:
         t = "".join(buf)
         buf.clear()
         if t.strip():
-            body.append(f"<p>{_html.escape(t, quote=False)}</p>")
+            body.append(X.paragraph(t))
 
     for ch in raw:
         o = ord(ch)
@@ -137,4 +137,4 @@ def doc_to_xhtml_text(data: bytes, reader: CfbReader = None) -> str:
         elif o >= 0x20 or ch in "\t":
             buf.append(ch)
     flush()
-    return "<html><body>" + "".join(body) + "</body></html>"
+    return X.document(body)

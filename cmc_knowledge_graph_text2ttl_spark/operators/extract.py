@@ -21,7 +21,12 @@ Semantics preserved from the reference:
   in this environment, so the geometric table recognizer
   (text_to_turtle_pdf_to_text.py:319-479, 7-stage pipeline) is stubbed
   behind an import-try; the Spark-side plumbing (dispatch, schema, error
-  rows) is real and tested with a deterministic fake.
+  rows) is real and tested with a deterministic fake;
+* Office and RTF documents (the reference's Tika "Office" branch) are
+  dispatched on their container — ZIP (:func:`ooxml_to_xhtml_text`),
+  OLE2 (:func:`ole2_to_xhtml_text`) or ``{\\rtf`` — to the readers in
+  ``office``, ``odf``, ``legacy_office``, ``doc_binary`` and ``rtf``,
+  which all write their XHTML through :mod:`.xhtml`.
 """
 
 from __future__ import annotations
@@ -313,68 +318,6 @@ def html_to_plain_text(data) -> str:
     return p.result()
 
 
-_DOCX_P = None  # compiled lazily (module import stays cheap)
-
-
-def docx_to_xhtml_text(data: bytes) -> str:
-    """Office (docx) → XHTML text, pure stdlib (zipfile + regex over OOXML).
-
-    Covers the reference's Tika "Office" branch (runner.py:36-115): a
-    .docx is a ZIP whose ``word/document.xml`` carries paragraphs
-    (``<w:p>``), text runs (``<w:t>``), tabs and breaks. Table cells
-    (``<w:tc>``) re-render as ``<table><tr><td>`` like the Tika output
-    the workflows match against. Deterministic; no external parser.
-    """
-    global _DOCX_P
-    import io
-    import re as _re
-    import zipfile
-
-    if _DOCX_P is None:
-        _DOCX_P = {
-            "p": _re.compile(r"<w:p[ >/].*?(?:</w:p>|/>)", _re.S),
-            "t": _re.compile(r"<w:t(?: [^>]*)?>(.*?)</w:t>", _re.S),
-            "tbl": _re.compile(r"<w:tbl>.*?</w:tbl>", _re.S),
-            "tr": _re.compile(r"<w:tr[ >].*?</w:tr>|<w:tr>.*?</w:tr>", _re.S),
-            "tc": _re.compile(r"<w:tc>.*?</w:tc>", _re.S),
-        }
-    import html as _h
-
-    with zipfile.ZipFile(io.BytesIO(data)) as z:
-        try:
-            xml = z.read("word/document.xml").decode("utf-8")
-        except KeyError:
-            raise ValueError("ZIP container has no word/document.xml (not a docx)")
-
-    def runs_text(fragment: str) -> str:
-        text = "".join(_DOCX_P["t"].findall(fragment))
-        text = text.replace("<w:tab/>", "\t")
-        return _h.unescape(text)
-
-    parts: List[str] = []
-    pos = 0
-    # tables render as <table>; paragraphs outside tables as <p>
-    for tbl in _DOCX_P["tbl"].finditer(xml):
-        for p in _DOCX_P["p"].finditer(xml, pos, tbl.start()):
-            t = runs_text(p.group(0))
-            if t:
-                parts.append(f"<p>{_xml_escape(t, quote=False)}</p>")
-        rows = []
-        for tr in _DOCX_P["tr"].finditer(tbl.group(0)):
-            cells = [
-                f"<td>{_xml_escape(runs_text(tc.group(0)), quote=False)}</td>"
-                for tc in _DOCX_P["tc"].finditer(tr.group(0))
-            ]
-            rows.append("<tr>" + "".join(cells) + "</tr>")
-        parts.append("<table>" + "".join(rows) + "</table>")
-        pos = tbl.end()
-    for p in _DOCX_P["p"].finditer(xml, pos):
-        t = runs_text(p.group(0))
-        if t:
-            parts.append(f"<p>{_xml_escape(t, quote=False)}</p>")
-    return "<html><body>" + "".join(parts) + "</body></html>"
-
-
 def pdf_to_xhtml_text(data: bytes) -> str:
     """PDF → XHTML with geometric table recognition.
 
@@ -413,7 +356,8 @@ def ooxml_to_xhtml_text(data: bytes) -> tuple:
     """(xhtml, refined content type) for an Office ZIP container —
     dispatched on which document part the archive carries, the same
     transparent docx/xlsx/pptx/odt/ods/odp acceptance the reference
-    got from Tika (runner.py:36-115)."""
+    got from Tika (runner.py:36-115). docx, xlsx and pptx are read by
+    :mod:`.office`, the OpenDocument family by :mod:`.odf`."""
     import io
     import zipfile
 
@@ -422,7 +366,7 @@ def ooxml_to_xhtml_text(data: bytes) -> tuple:
     with zipfile.ZipFile(io.BytesIO(data)) as z:
         names = set(z.namelist())
     if "word/document.xml" in names:
-        return docx_to_xhtml_text(data), "docx"
+        return office.docx_to_xhtml_text(data), "docx"
     if "xl/workbook.xml" in names:
         return office.xlsx_to_xhtml_text(data), "xlsx"
     if "ppt/presentation.xml" in names:
@@ -438,26 +382,21 @@ def ooxml_to_xhtml_text(data: bytes) -> tuple:
 
 
 def ole2_to_xhtml_text(data: bytes) -> tuple:
-    """(xhtml, refined type, None) for an OLE2 compound file —
+    """(xhtml, refined content type) for an OLE2 compound file —
     dispatched on which application stream the container carries
     (Word / Excel BIFF8 / binary PowerPoint), mirroring the ZIP-member
     dispatch of :func:`ooxml_to_xhtml_text`."""
+    from . import doc_binary, legacy_office
     from .cfb import CfbReader
 
     reader = CfbReader(data)
     names = set(reader.streams)
     if "WordDocument" in names:
-        from .doc_binary import doc_to_xhtml_text
-
-        return doc_to_xhtml_text(data, reader), "doc", None
+        return doc_binary.doc_to_xhtml_text(data, reader), "doc"
     if "Workbook" in names or "Book" in names:
-        from .legacy_office import xls_to_xhtml_text
-
-        return xls_to_xhtml_text(data, reader), "xls", None
+        return legacy_office.xls_to_xhtml_text(data, reader), "xls"
     if "PowerPoint Document" in names:
-        from .legacy_office import ppt_to_xhtml_text
-
-        return ppt_to_xhtml_text(data, reader), "ppt", None
+        return legacy_office.ppt_to_xhtml_text(data, reader), "ppt"
     listing = ", ".join(sorted(names)) or "none"
     raise ValueError(
         "OLE2 container has no WordDocument, Workbook or PowerPoint "
@@ -481,14 +420,13 @@ def extract_one(data: Optional[bytes]) -> tuple:
         if ctype == "pdf":
             return pdf_to_xhtml_text(data), ctype, None
         if ctype == "ooxml":
-            text, kind = ooxml_to_xhtml_text(data)
-            return text, kind, None
+            return (*ooxml_to_xhtml_text(data), None)
+        if ctype == "ole2":
+            return (*ole2_to_xhtml_text(data), None)
         if ctype == "rtf":
             from .rtf import rtf_to_xhtml_text
 
             return rtf_to_xhtml_text(data), ctype, None
-        if ctype == "ole2":
-            return ole2_to_xhtml_text(data)
         return html_to_xhtml_text(data), ctype, None
     except Exception as ex:
         return None, ctype, f"{type(ex).__name__}: {ex}"

@@ -24,10 +24,10 @@ Both raise ``ValueError`` on malformed input — contained per-row by
 
 from __future__ import annotations
 
-import html as _html
 import struct
 from typing import Dict, List, Tuple
 
+from . import xhtml as X
 from .cfb import CfbReader
 
 __all__ = ["xls_to_xhtml_text", "ppt_to_xhtml_text"]
@@ -241,21 +241,12 @@ def xls_to_xhtml_text(data: bytes, reader: CfbReader = None) -> str:
                 v, is_err = body[6], body[7]
                 if not is_err:
                     put(rw, col, "TRUE" if v else "FALSE")
-        rows_html: List[str] = []
-        for rw in sorted(cells):
-            row = cells[rw]
-            width = max(row) + 1
-            rows_html.append(
-                "<tr>"
-                + "".join(
-                    f"<td>{_html.escape(row.get(c, ''), quote=False)}</td>"
-                    for c in range(width)
-                )
-                + "</tr>"
-            )
-        parts.append(f"<h1>{_html.escape(name, quote=False)}</h1>")
-        parts.append("<table>" + "".join(rows_html) + "</table>")
-    return "<html><body>" + "".join(parts) + "</body></html>"
+        rows = [
+            [cells[rw].get(c, "") for c in range(max(cells[rw]) + 1)]
+            for rw in sorted(cells)
+        ]
+        parts += [X.heading(1, name), X.table(rows)]
+    return X.document(parts)
 
 
 # ---------------------------------------------------------------------------
@@ -298,5 +289,5 @@ def ppt_to_xhtml_text(data: bytes, reader: CfbReader = None) -> str:
     for atom in atoms:
         for line in atom.replace("\x0b", "\n").split("\r"):
             if line.strip():
-                body.append(f"<p>{_html.escape(line, quote=False)}</p>")
-    return "<html><body>" + "".join(body) + "</body></html>"
+                body.append(X.paragraph(line))
+    return X.document(body)

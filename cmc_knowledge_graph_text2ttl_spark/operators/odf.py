@@ -5,7 +5,7 @@ reference's Tika path accepted transparently (runner.py:36-115). Same
 approach as the OOXML extractors (operators/office.py): the ZIP's
 ``content.xml`` is plain XML and the text layer needs no DOM —
 anchored regexes in document order, entity-unescaped, re-rendered as
-canonical XHTML.
+canonical XHTML through :mod:`.xhtml`.
 
 Canonical renders (gate-checked byte-exactly):
 
@@ -31,6 +31,8 @@ import io
 import re
 import zipfile
 from typing import List, Tuple
+
+from . import xhtml as X
 
 __all__ = ["odf_to_xhtml_text"]
 
@@ -77,8 +79,8 @@ def _cell_text(inner: str) -> str:
 
 def _render_blocks(xml: str) -> List[str]:
     """Headings, paragraphs and tables of one content region, in
-    document order — tables first per region so cell paragraphs never
-    re-render as free paragraphs (the pptx two-pass shape)."""
+    document order — tables first, so cell paragraphs never re-render
+    as free paragraphs."""
 
     def flat(span: str) -> List[str]:
         out: List[str] = []
@@ -88,40 +90,27 @@ def _render_blocks(xml: str) -> List[str]:
             lvl = min(6, max(1, int((_OUTLINE.search(h.group(1)) or [None, "1"])[1])))
             t = _inline_text(h.group(2))
             if t:
-                out.append(f"<h{lvl}>{_html.escape(t, quote=False)}</h{lvl}>")
+                out.append(X.heading(lvl, t))
             pos = h.end()
         out.extend(paras(span[pos:]))
         return out
 
     def paras(span: str) -> List[str]:
-        out = []
-        for m in _P.finditer(span):
-            t = _inline_text(m.group(1) or "")
-            if t:
-                out.append(f"<p>{_html.escape(t, quote=False)}</p>")
-        return out
+        texts = (_inline_text(m.group(1) or "") for m in _P.finditer(span))
+        return [X.paragraph(t) for t in texts if t]
 
-    body: List[str] = []
-    pos = 0
-    for tbl in _TABLE.finditer(xml):
-        body.extend(flat(xml[pos : tbl.start()]))
-        rows_html: List[str] = []
-        for tr in _TROW.finditer(tbl.group(0)):
+    def rows(tbl: str) -> List[List[str]]:
+        out = []
+        for tr in _TROW.finditer(tbl):
             cells: List[str] = []
             for c in _TCELL.finditer(tr.group(0)):
                 attrs = c.group(1) if c.group(1) is not None else c.group(2) or ""
-                inner = c.group(3) or ""
                 rep = int((_REPEAT.search(attrs) or [None, "1"])[1])
-                cells.extend([_cell_text(inner)] * rep)
-            rows_html.append(
-                "<tr>"
-                + "".join(f"<td>{_html.escape(v, quote=False)}</td>" for v in cells)
-                + "</tr>"
-            )
-        body.append("<table>" + "".join(rows_html) + "</table>")
-        pos = tbl.end()
-    body.extend(flat(xml[pos:]))
-    return body
+                cells.extend([_cell_text(c.group(3) or "")] * rep)
+            out.append(cells)
+        return out
+
+    return X.around_tables(xml, _TABLE, flat, rows)
 
 
 def odf_to_xhtml_text(data: bytes) -> Tuple[str, str]:
@@ -149,10 +138,7 @@ def odf_to_xhtml_text(data: bytes) -> Tuple[str, str]:
     )
     region = re.sub(r"<text:note\b.*?</text:note>", "", region, flags=re.S)
     if kind == "odp":
-        parts = [
-            '<div class="slide">' + "".join(_render_blocks(pg.group(0))) + "</div>"
-            for pg in _PAGE.finditer(region)
-        ]
+        parts = [X.slide(_render_blocks(pg.group(0))) for pg in _PAGE.finditer(region)]
     else:
         parts = _render_blocks(region)
-    return "<html><body>" + "".join(parts) + "</body></html>", kind
+    return X.document(parts), kind

@@ -1,25 +1,30 @@
-"""xlsx / pptx → XHTML text, pure stdlib (zipfile + regex over OOXML).
+"""docx / xlsx / pptx → XHTML text, pure stdlib (zipfile + regex over OOXML).
 
-Extends the Office branch beyond docx (``extract.docx_to_xhtml_text``)
-with the other two OOXML formats the reference's Tika path accepted
-transparently (runner.py:36-115): spreadsheets and presentations. Same
-approach as docx — the ZIP members are plain XML, and the subset the
+The OOXML formats the reference's Tika "Office" branch accepted
+(runner.py:36-115). The ZIP members are plain XML, and the subset the
 workflows match against (paragraph text, table cells) needs no DOM:
-anchored regexes over the document parts, entity-unescaped, re-rendered
-as canonical XHTML. Deterministic; no external parser.
+anchored regexes over the document parts, entity-unescaped, rendered
+through :mod:`.xhtml`. Deterministic; no external parser.
 
 Canonical renders (gate-checked byte-exactly):
 
+* docx / pptx — one walker, :class:`_Ooxml`, built for the ``w`` and
+  ``a`` namespaces: ``<tbl>`` tables render as ``<table><tr><td>`` (a
+  cell's runs concatenated), the other ``<p>`` paragraphs as ``<p>``
+  (empty ones dropped); pptx wraps each slide (numeric member order) in
+  ``<div class="slide">``. Element patterns end at the element's own
+  close tag, the self-closing form tried first. Runs read ``<t>`` text,
+  the attribute-free ``<tab/>`` as TAB (``<w:tab w:pos=…/>`` in
+  ``<w:tabs>`` is a tab stop) and ``<br…>`` as LF (pptx writes
+  ``<a:br><a:rPr/></a:br>``), the rule of the rtf, odf and doc readers.
+  Limit: a paragraph nested in a paragraph (``w:txbxContent`` text
+  boxes, ``mc:AlternateContent``) ends the outer one at its close tag.
 * xlsx — one ``<h1>`` per sheet (workbook order via the relationship
   table, not member order) followed by a ``<table>``; shared-string,
   inline-string, formula-string and numeric cells all resolve; ``r=``
   cell references fill column gaps with empty ``<td>``.
-* pptx — one ``<div class="slide">`` per slide (numeric member order);
-  ``<a:tbl>`` tables render as ``<table><tr><td>`` and the remaining
-  ``<a:p>`` paragraphs as ``<p>``, mirroring the docx renderer.
 
-The xlsx/pptx fixture writers live in the repo-root
-``fixture_writers.py``.
+The OOXML fixture writers live in the repo-root ``fixture_writers.py``.
 """
 
 from __future__ import annotations
@@ -30,7 +35,9 @@ import re
 import zipfile
 from typing import Dict, List, Tuple
 
-__all__ = ["xlsx_to_xhtml_text", "pptx_to_xhtml_text"]
+from . import xhtml as X
+
+__all__ = ["docx_to_xhtml_text", "xlsx_to_xhtml_text", "pptx_to_xhtml_text"]
 
 _SI = re.compile(r"<si>(.*?)</si>", re.S)
 _T = re.compile(r"<t(?: [^>]*)?>(.*?)</t>", re.S)
@@ -44,11 +51,6 @@ _V = re.compile(r"<v(?: [^>]*)?>(.*?)</v>", re.S)
 _ATTR_R = re.compile(r'\br="([A-Z]+)\d+"')
 _ATTR_T = re.compile(r'\bt="([^"]*)"')
 
-_A_P = re.compile(r"<a:p>.*?</a:p>|<a:p\b[^>]*>.*?</a:p>", re.S)
-_A_T = re.compile(r"<a:t(?: [^>]*)?>(.*?)</a:t>", re.S)
-_A_TBL = re.compile(r"<a:tbl>.*?</a:tbl>|<a:tbl\b[^>]*>.*?</a:tbl>", re.S)
-_A_TR = re.compile(r"<a:tr\b[^>]*>.*?</a:tr>|<a:tr>.*?</a:tr>", re.S)
-_A_TC = re.compile(r"<a:tc\b[^>]*>.*?</a:tc>|<a:tc>.*?</a:tc>", re.S)
 _SLIDE_NUM = re.compile(r"^ppt/slides/slide(\d+)\.xml$")
 
 
@@ -92,8 +94,7 @@ def xlsx_to_xhtml_text(data: bytes) -> str:
 
         parts: List[str] = []
         for name, xml in sheets:
-            parts.append(f"<h1>{_html.escape(name, quote=False)}</h1>")
-            rows_html: List[str] = []
+            rows: List[List[str]] = []
             for row in _ROW.finditer(xml):
                 cells: List[str] = []
                 next_col = 0
@@ -116,25 +117,65 @@ def xlsx_to_xhtml_text(data: bytes) -> str:
                             )
                         val = shared[idx]
                     elif ctype == "inlineStr":
-                        val = _html.unescape("".join(_T.findall(inner)))
+                        val = _si_text(inner)
                     else:  # n / str / b — lexical <v> content
                         vm = _V.search(inner)
                         val = _html.unescape(vm.group(1)) if vm else ""
                     cells.append(val)
                     next_col = col + 1
-                rows_html.append(
-                    "<tr>"
-                    + "".join(
-                        f"<td>{_html.escape(v, quote=False)}</td>" for v in cells
-                    )
-                    + "</tr>"
-                )
-            parts.append("<table>" + "".join(rows_html) + "</table>")
-    return "<html><body>" + "".join(parts) + "</body></html>"
+                rows.append(cells)
+            parts += [X.heading(1, name), X.table(rows)]
+    return X.document(parts)
 
 
-def _a_paragraph_text(fragment: str) -> str:
-    return _html.unescape("".join(_A_T.findall(fragment)))
+class _Ooxml:
+    """The docx (``w``) / pptx (``a``) walk of one part (module docstring)."""
+
+    def __init__(self, ns: str) -> None:
+        def element(tag: str) -> re.Pattern:
+            return re.compile(
+                rf"<{ns}:{tag}\b[^>]*/>|<{ns}:{tag}\b[^>]*>.*?</{ns}:{tag}>", re.S
+            )
+
+        self.p, self.tbl, self.tr, self.tc = map(element, ("p", "tbl", "tr", "tc"))
+        # <t> text (an empty <t/>, with or without attributes, is no open
+        # tag) | attribute-free <tab/> | <br…>
+        self.run = re.compile(
+            rf"<{ns}:t(?: [^>]*[^/>])?>(.*?)</{ns}:t>|(<{ns}:tab/>)|<{ns}:br\b", re.S
+        )
+
+    def text(self, fragment: str) -> str:
+        parts = (
+            m.group(1) if m.lastindex == 1 else "\t" if m.lastindex else "\n"
+            for m in self.run.finditer(fragment)
+        )
+        return _html.unescape("".join(parts))
+
+    def blocks(self, xml: str) -> List[str]:
+        def flat(span: str) -> List[str]:
+            texts = (self.text(p.group(0)) for p in self.p.finditer(span))
+            return [X.paragraph(t) for t in texts if t]
+
+        def rows(tbl: str) -> List[List[str]]:
+            return [
+                [self.text(tc.group(0)) for tc in self.tc.finditer(tr.group(0))]
+                for tr in self.tr.finditer(tbl)
+            ]
+
+        return X.around_tables(xml, self.tbl, flat, rows)
+
+
+_W = _Ooxml("w")
+_A = _Ooxml("a")
+
+
+def docx_to_xhtml_text(data: bytes) -> str:
+    """Word document → XHTML (see module docstring for the render)."""
+    with zipfile.ZipFile(io.BytesIO(data)) as z:
+        if "word/document.xml" not in z.namelist():
+            raise ValueError("ZIP container has no word/document.xml (not a docx)")
+        xml = z.read("word/document.xml").decode("utf-8")
+    return X.document(_W.blocks(xml))
 
 
 def pptx_to_xhtml_text(data: bytes) -> str:
@@ -151,33 +192,7 @@ def pptx_to_xhtml_text(data: bytes) -> str:
             for m in [_SLIDE_NUM.match(n)]
             if m
         )
-        parts: List[str] = []
-        for _, member in slides:
-            xml = z.read(member).decode("utf-8")
-            body: List[str] = []
-            pos = 0
-            # tables first (their <a:p> cell content must not re-render
-            # as free paragraphs), remaining paragraphs in between —
-            # the same two-pass shape as extract.docx_to_xhtml_text
-            for tbl in _A_TBL.finditer(xml):
-                for p in _A_P.finditer(xml, pos, tbl.start()):
-                    t = _a_paragraph_text(p.group(0))
-                    if t:
-                        body.append(f"<p>{_html.escape(t, quote=False)}</p>")
-                rows = []
-                for tr in _A_TR.finditer(tbl.group(0)):
-                    cells = [
-                        "<td>"
-                        + _html.escape(_a_paragraph_text(tc.group(0)), quote=False)
-                        + "</td>"
-                        for tc in _A_TC.finditer(tr.group(0))
-                    ]
-                    rows.append("<tr>" + "".join(cells) + "</tr>")
-                body.append("<table>" + "".join(rows) + "</table>")
-                pos = tbl.end()
-            for p in _A_P.finditer(xml, pos):
-                t = _a_paragraph_text(p.group(0))
-                if t:
-                    body.append(f"<p>{_html.escape(t, quote=False)}</p>")
-            parts.append('<div class="slide">' + "".join(body) + "</div>")
-    return "<html><body>" + "".join(parts) + "</body></html>"
+        parts = [
+            X.slide(_A.blocks(z.read(member).decode("utf-8"))) for _, member in slides
+        ]
+    return X.document(parts)

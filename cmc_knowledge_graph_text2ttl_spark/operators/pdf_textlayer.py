@@ -47,7 +47,7 @@ import hashlib
 import re
 import struct
 import zlib
-from typing import Dict, Iterator, List, Optional, Tuple
+from typing import Dict, List, Optional, Tuple
 
 from .pdf_tables import Box, PageModel, Word
 

@@ -2,8 +2,9 @@
 
 Extends the Office branch to the ``{\\rtf`` container the reference's
 Tika path accepted transparently (runner.py:36-115). Same contract as
-the docx/xlsx/pptx extractors: a deterministic canonical XHTML render,
-no external parser, per-row error isolation in ``extract_text``.
+the docx/xlsx/pptx extractors: a deterministic canonical XHTML render
+written through :mod:`.xhtml`, no external parser, per-row error
+isolation in ``extract_text``.
 
 Canonical render (gate-checked byte-exactly):
 
@@ -24,9 +25,10 @@ Tika's plain-text handler does.
 
 from __future__ import annotations
 
-import html as _html
 import re
 from typing import List
+
+from . import xhtml as X
 
 __all__ = ["rtf_to_xhtml_text"]
 
@@ -99,13 +101,8 @@ _CHAR_WORDS = {
 }
 
 
-def _esc(s: str) -> str:
-    if any(0xD800 <= ord(c) < 0xE000 for c in s):
-        # unpaired \uN surrogate halves — not representable downstream
-        s = "".join(
-            "�" if 0xD800 <= ord(c) < 0xE000 else c for c in s
-        )
-    return _html.escape(s, quote=False)
+# unpaired \uN surrogate halves — not representable downstream
+_SURROGATE = re.compile("[\ud800-\udfff]")
 
 
 def rtf_to_xhtml_text(data: bytes) -> str:
@@ -121,14 +118,7 @@ def rtf_to_xhtml_text(data: bytes) -> str:
 
     def flush_table() -> None:
         if rows:
-            body.append(
-                "<table>"
-                + "".join(
-                    "<tr>" + "".join(f"<td>{_esc(c)}</td>" for c in row) + "</tr>"
-                    for row in rows
-                )
-                + "</table>"
-            )
+            body.append(X.table(rows))
             rows.clear()
 
     def flush_para() -> None:
@@ -136,7 +126,7 @@ def rtf_to_xhtml_text(data: bytes) -> str:
         text = "".join(buf)
         buf.clear()
         if text.strip():
-            body.append(f"<p>{_esc(text)}</p>")
+            body.append(X.paragraph(text))
 
     depth = 0
     skip_until = None  # group depth at which a skipped destination ends
@@ -272,4 +262,4 @@ def rtf_to_xhtml_text(data: bytes) -> str:
         rows.append(cells[:])
         cells.clear()
     flush_para()
-    return "<html><body>" + "".join(body) + "</body></html>"
+    return _SURROGATE.sub("\ufffd", X.document(body))

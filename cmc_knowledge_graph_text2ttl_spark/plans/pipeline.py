@@ -111,7 +111,6 @@ class KgPipeline:
         self.graphs = graphs
         self.canonicalize = canonicalize
         self.extra_vars = extra_vars
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         # this scope's done lineage rows, read once per run() (see _load_done)
         self._done: List[Row] = []
 
@@ -179,7 +178,9 @@ class KgPipeline:
         out = transform(todo)
         # Dynamic partition overwrite: only buckets present in `out` are
         # replaced; completed buckets' files are untouched → idempotent.
-        out.write.mode("overwrite").partitionBy("bucket").parquet(self._stage_path(stage))
+        out.write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy("bucket").parquet(self._stage_path(stage))
         written = self.spark.read.parquet(self._stage_path(stage))
         latency_ms = int((time.time() - t0) * 1000)
         # the buckets written in this run; the partition filter prunes the
@@ -274,8 +275,8 @@ class KgPipeline:
         if any(r.input_token == token for r in self._done_rows(stage)):
             return self._read_stage(stage)
         t0 = time.time()
-        # A recompute replaces the whole stage: under the session's dynamic
-        # mode a subject bucket it no longer fills would keep its old files.
+        # A recompute replaces the whole stage: under a dynamic overwrite a
+        # subject bucket it no longer fills would keep its old files.
         transform(source).write.mode("overwrite").option(
             "partitionOverwriteMode", "static"
         ).partitionBy("bucket").parquet(self._stage_path(stage))

@@ -28,9 +28,8 @@ HTTP payloads declaring ``Transfer-Encoding: chunked`` are de-chunked
 
 from __future__ import annotations
 
-import struct  # noqa: F401  (kept for symmetry with sibling sources)
 import zlib
-from typing import Iterator, List, Optional, Tuple
+from typing import Iterator, List, Tuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (

@@ -2,7 +2,8 @@
 
 The package ``cmc_knowledge_graph_text2ttl_spark`` holds the readers;
 this module holds the other direction: the document writers (table
-PDFs, OLE2 ``.doc``/``.xls``/``.ppt``, OOXML ``.xlsx``/``.pptx``, ODF,
+PDFs, OLE2 ``.doc``/``.xls``/``.ppt``, OOXML ``.docx``/``.xlsx``/``.pptx``,
+ODF,
 RTF) and the image, audio and video encoders that build test inputs.
 ``__spark_entry__``'s data synthesis and the tests import it; the
 package never does, so none of it ships in the ``--py-files`` zip.
@@ -754,6 +755,50 @@ def make_xlsx(sheets: Sequence[Tuple[str, Sequence[Sequence[Cell]]]]) -> bytes:
 
 
 Slide = Sequence[Union[str, Sequence[Sequence[str]]]]
+
+
+def make_docx(blocks: Slide) -> bytes:
+    """Word document bytes; blocks as in one :func:`make_pptx` slide — a
+    string becomes one ``<w:p>`` paragraph, a list of rows one ``<w:tbl>``.
+    The markup is Word's: revision-id attributes and ``w:pPr`` / ``w:rPr``
+    / ``w:tblPr`` / ``w:tcPr`` property children on every element."""
+
+    def para(text: str) -> str:
+        return (
+            '<w:p w:rsidR="00A1B2C3" w:rsidRDefault="00A1B2C3">'
+            '<w:pPr><w:pStyle w:val="Normal"/></w:pPr>'
+            '<w:r><w:rPr><w:lang w:val="en-US"/></w:rPr>'
+            f'<w:t xml:space="preserve">{_xml_esc(text)}</w:t></w:r></w:p>'
+        )
+
+    def cell(text: str) -> str:
+        return f'<w:tc><w:tcPr><w:tcW w:w="2000" w:type="dxa"/></w:tcPr>{para(text)}</w:tc>'
+
+    body = "".join(
+        para(blk)
+        if isinstance(blk, str)
+        else '<w:tbl><w:tblPr><w:tblStyle w:val="TableGrid"/></w:tblPr>'
+        + "".join(
+            f'<w:tr w:rsidR="00A1B2C3">{"".join(map(cell, row))}</w:tr>' for row in blk
+        )
+        + "</w:tbl>"
+        for blk in blocks
+    )
+    document = (
+        '<?xml version="1.0"?><w:document xmlns:w="http://schemas.openxmlformats'
+        f'.org/wordprocessingml/2006/main"><w:body>{body}</w:body></w:document>'
+    )
+    return _write_zip(
+        [
+            (
+                "[Content_Types].xml",
+                b'<?xml version="1.0"?><Types '
+                b'xmlns="http://schemas.openxmlformats.org/package/2006/'
+                b'content-types"/>',
+            ),
+            ("word/document.xml", document.encode("utf-8")),
+        ]
+    )
 
 
 def make_pptx(slides: Sequence[Slide]) -> bytes:

@@ -90,10 +90,10 @@ class TestDocx:
 
     def test_docx_paragraphs_and_table(self):
         from cmc_knowledge_graph_text2ttl_spark.operators.extract import (
-            docx_to_xhtml_text,
             extract_one,
             sniff_content_type,
         )
+        from cmc_knowledge_graph_text2ttl_spark.operators.office import docx_to_xhtml_text
 
         blob = _make_docx(self.DOC)
         assert sniff_content_type(blob) == "ooxml"

@@ -300,3 +300,14 @@ def test_recomputed_global_stage_leaves_no_stale_bucket(spark, tmp_path):
     assert {r.bucket for r in ref["canonical"].collect()} == {1}
     assert sorted(pipe._read_stage("canonical").collect()) == sorted(ref["canonical"].collect())
     assert sorted(nt(out["canonical"])) == sorted(nt(ref["canonical"]))
+
+
+def test_run_leaves_the_session_overwrite_mode_alone(spark, fixture_programs, pages, tmp_path):
+    """Each stage passes its overwrite mode on its own write, so a caller's
+    later partitioned overwrite on the same session keeps the session's
+    mode."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    spark.conf.unset(key)
+    before = spark.conf.get(key)
+    KgPipeline(spark, str(tmp_path / "wd"), fixture_programs, run_scope="r", n_buckets=4).run(pages)
+    assert spark.conf.get(key) == before

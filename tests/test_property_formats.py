@@ -10,6 +10,7 @@ from hypothesis import strategies as st
 
 from cmc_knowledge_graph_text2ttl_spark.operators import multimodal as mm
 from cmc_knowledge_graph_text2ttl_spark.operators import odf as ODF
+from cmc_knowledge_graph_text2ttl_spark.operators import office as OFFICE
 from cmc_knowledge_graph_text2ttl_spark.operators import rtf as RTF
 from cmc_knowledge_graph_text2ttl_spark.operators.doc_binary import doc_to_xhtml_text
 from cmc_knowledge_graph_text2ttl_spark.sources.archives import (
@@ -59,6 +60,41 @@ def test_doc_paragraph_roundtrip(paras):
     out = doc_to_xhtml_text(make_doc(paras))
     expected = "".join(f"<p>{_esc(p)}</p>" for p in paras if p.strip())
     assert out == f"<html><body>{expected}</body></html>"
+
+
+# paragraphs, one table, paragraphs: the block shape of make_docx/make_pptx
+_ooxml_blocks = st.tuples(
+    st.lists(_plain, max_size=3),
+    st.lists(st.lists(_plain, min_size=1, max_size=3), min_size=1, max_size=3),
+    st.lists(_plain, max_size=3),
+)
+
+
+def _ooxml_expected(before, rows, after) -> str:
+    def paras(ps):
+        return "".join(f"<p>{_esc(p)}</p>" for p in ps)
+
+    trs = "".join(
+        "<tr>" + "".join(f"<td>{_esc(c)}</td>" for c in row) + "</tr>" for row in rows
+    )
+    return f"{paras(before)}<table>{trs}</table>{paras(after)}"
+
+
+@settings(max_examples=60, deadline=None)
+@given(_ooxml_blocks)
+def test_docx_blocks_roundtrip(blocks):
+    before, rows, after = blocks
+    out = OFFICE.docx_to_xhtml_text(FW.make_docx([*before, rows, *after]))
+    assert out == f"<html><body>{_ooxml_expected(*blocks)}</body></html>"
+
+
+@settings(max_examples=60, deadline=None)
+@given(_ooxml_blocks)
+def test_pptx_blocks_roundtrip(blocks):
+    before, rows, after = blocks
+    out = OFFICE.pptx_to_xhtml_text(FW.make_pptx([[*before, rows, *after]]))
+    slide = f'<div class="slide">{_ooxml_expected(*blocks)}</div>'
+    assert out == f"<html><body>{slide}</body></html>"
 
 
 _member_name = st.text(

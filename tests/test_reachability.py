@@ -11,11 +11,15 @@ Both checks read the AST only; nothing is imported.
    ``__init__`` re-export is followed only for the names actually
    imported through it, so a package cannot keep a submodule alive by
    re-exporting it.
-2. A top-level ``def``/``class``/assignment in a non-``__init__`` module
-   must be referenced by a ``Name``, ``Attribute`` or import ``alias``
-   node in package or root code outside its own definition span. Names,
-   not tokens: an f-string's expressions are AST nodes too, so a use in
-   ``f"{_helper(x)}"`` counts, while a word in a docstring does not.
+2. A top-level ``def``/``class``/assignment ``N`` in a non-``__init__``
+   module ``M`` must be referenced from package or root code outside its
+   own definition span, and a reference is keyed on ``(M, N)``: a
+   ``Name`` node in ``M`` itself, a ``from M import N`` (``__init__``
+   re-exports followed per name, as in check 1), or ``alias.N`` where an
+   import binds ``alias`` to ``M``. A same-named definition in another
+   module is not a use. AST nodes, not tokens: an f-string's expressions
+   are nodes too, so a use in ``f"{_helper(x)}"`` counts, while a word in
+   a docstring does not.
 3. Every defaulted parameter of a public function (module level, or a
    public method of a public class) in the CLI's import closure must be
    passed by some call in some repo ``.py`` file, tests included: a test
@@ -34,6 +38,9 @@ Both checks read the AST only; nothing is imported.
    live in the repo-root ``fixture_writers.py``, which is not a root:
    a writer moved back into the package fails check 2 (used by nothing)
    or this check (a closure module's definition the CLI never runs).
+5. Every module-level import of a non-``__init__`` package module is
+   referenced by a ``Name`` node in that module (``from __future__``
+   exempt).
 """
 
 import ast
@@ -88,9 +95,10 @@ def root_files():
 class ImportGraph:
     """Package import edges, with ``__init__`` re-exports followed per name."""
 
-    def __init__(self):
-        self.paths = package_modules()
-        self.trees = {m: _parse(p) for m, p in self.paths.items()}
+    def __init__(self, paths=None, trees=None):
+        """The real package, or the synthetic one ``paths``/``trees`` give."""
+        self.paths = paths or package_modules()
+        self.trees = trees or {m: _parse(p) for m, p in self.paths.items()}
 
     def is_package(self, mod):
         return self.paths[mod].name == "__init__.py"
@@ -136,6 +144,17 @@ class ImportGraph:
                         return self._requests(node, pkg, [a])
         return []
 
+    def targets(self, mod, name):
+        """Definitions ``(module, name)`` that ``name`` imported from ``mod``
+        resolves to, ``__init__`` re-exports followed per name."""
+        if mod not in self.paths:
+            return []
+        if not self.is_package(mod):
+            return [(mod, name)]
+        return [
+            t for sub, n in self._reexport(mod, name) if n is not None for t in self.targets(sub, n)
+        ]
+
     def reach(self, requests):
         """Modules executed by ``requests``, re-exports followed per name."""
         seen, done = set(), set()
@@ -180,18 +199,53 @@ def _definitions(tree):
                     yield n.id, node.lineno, node.end_lineno
 
 
-def _references(tree, reexports=True):
-    """(name, line) of every Name, Attribute and import-alias node; an
-    ``__init__`` passes ``reexports=False``, since re-exporting a name is
-    not a use of it."""
+def _references(tree):
+    """(name, line) of every Name, Attribute and import-alias node, by bare
+    name (check 4)."""
     for node in ast.walk(tree):
         if isinstance(node, ast.Name):
             yield node.id, node.lineno
         elif isinstance(node, ast.Attribute):
             yield node.attr, node.end_lineno
-        elif isinstance(node, ast.Import) or (reexports and isinstance(node, ast.ImportFrom)):
+        elif isinstance(node, (ast.Import, ast.ImportFrom)):
             for a in node.names:
                 yield a.name.rsplit(".", 1)[-1], node.lineno
+
+
+def _dotted(node):
+    """``a.b.c`` for a chain of attributes on a name, else None."""
+    if isinstance(node, ast.Name):
+        return node.id
+    head = _dotted(node.value) if isinstance(node, ast.Attribute) else None
+    return head and f"{head}.{node.attr}"
+
+
+def _uses(graph, tree, mod=None):
+    """(``(module, name)``, line) of each reference ``tree`` makes to a
+    package definition, by check 2's rule. ``mod`` is the tree's own
+    package module (None for a root file); an ``__init__``'s imports
+    re-export, so they are not uses."""
+    bound = {}  # alias -> package modules an import binds it to
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            for a in node.names:
+                alias = a.asname or a.name.split(".")[0]
+                bound.setdefault(alias, set()).add(a.name if a.asname else alias)
+        elif isinstance(node, ast.ImportFrom):
+            base = graph._base(mod or "", node)
+            for a in node.names:
+                if f"{base}.{a.name}" in graph.paths:
+                    bound.setdefault(a.asname or a.name, set()).add(f"{base}.{a.name}")
+                elif not (mod and graph.is_package(mod)):
+                    yield from ((t, node.lineno) for t in graph.targets(base, a.name))
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name) and mod:
+            yield (mod, node.id), node.lineno
+        elif isinstance(node, ast.Attribute):
+            head, _, rest = (_dotted(node.value) or "").partition(".")
+            for m in bound.get(head, ()):
+                target = f"{m}.{rest}" if rest else m
+                yield from ((t, node.end_lineno) for t in graph.targets(target, node.attr))
 
 
 def repo_files():
@@ -301,25 +355,22 @@ def unreached_modules():
     return sorted(m for m in graph.paths if m not in reached and m not in ALLOWLIST)
 
 
-def unreferenced_definitions():
-    """``module:name`` of the top-level definitions in reached modules that
-    no code outside their own span references (dunder names exempt).
-    Repeated to a fixpoint: a use inside a dead definition or an
-    unreached module does not count."""
-    mods = package_modules()
-    unreached = unreached_modules()
-    sources = [(m, p, p.name == "__init__.py") for m, p in mods.items()]
-    sources += [(str(p), p, False) for p in root_files()]
-    trees, refs = {}, {}
-    for key, path, is_init in sources:
-        trees[key] = _parse(path)
-        for name, line in _references(trees[key], reexports=not is_init):
-            refs.setdefault(name, []).append((key, line))
+def dead_definitions(graph, roots, unreached=()):
+    """``module:name`` of the top-level definitions in the reached
+    non-``__init__`` modules of ``graph`` that no code outside their own
+    span references (check 2's rule; dunder names exempt). ``roots`` are
+    ``(key, tree)`` of the root files. Repeated to a fixpoint: a use
+    inside a dead definition or an unreached module does not count."""
+    refs = {}
+    sources = [(m, t, m) for m, t in graph.trees.items()] + [(k, t, None) for k, t in roots]
+    for key, tree, mod in sources:
+        for target, line in _uses(graph, tree, mod):
+            refs.setdefault(target, []).append((key, line))
     defs = [
         (mod, name, first, last)
-        for mod, path in mods.items()
-        if path.name != "__init__.py" and mod not in unreached
-        for name, first, last in _definitions(trees[mod])
+        for mod in graph.trees
+        if not graph.is_package(mod) and mod not in unreached
+        for name, first, last in _definitions(graph.trees[mod])
         if f"{mod}:{name}" not in ALLOWLIST
     ]
     dead_spans = {m: [(1, float("inf"))] for m in unreached}
@@ -331,7 +382,7 @@ def unreferenced_definitions():
             if not any(
                 (key != mod or not first <= line <= last)
                 and not any(a <= line <= b for a, b in dead_spans.get(key, ()))
-                for key, line in refs.get(name, ())
+                for key, line in refs.get((mod, name), ())
             )
         }
         if new <= dead:
@@ -339,6 +390,30 @@ def unreferenced_definitions():
         for mod, _, first, last in new - dead:
             dead_spans.setdefault(mod, []).append((first, last))
         dead |= new
+
+
+def unreferenced_definitions():
+    roots = [(str(p), _parse(p)) for p in root_files()]
+    return dead_definitions(ImportGraph(), roots, unreached_modules())
+
+
+def unused_imports():
+    """``module:alias`` of each module-level import (``from __future__``
+    aside) in a non-``__init__`` package module that no ``Name`` node of
+    the module references."""
+    out = []
+    for mod, path in package_modules().items():
+        if path.name == "__init__.py":
+            continue
+        tree = _parse(path)
+        used = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+        for node in tree.body:
+            if isinstance(node, ast.Import) or (
+                isinstance(node, ast.ImportFrom) and node.module != "__future__"
+            ):
+                aliases = (a.asname or a.name.split(".")[0] for a in node.names)
+                out += [f"{mod}:{a}" for a in aliases if a not in used]
+    return sorted(out)
 
 
 def cli_closure_definitions():
@@ -367,7 +442,7 @@ def cli_closure_definitions():
 
 
 def _reach_definitions(defs, names, skip=frozenset()):
-    """Definitions reached from ``names``, matching by name as check 2 does."""
+    """Definitions reached from ``names``, matching by bare name."""
     by_name = {}
     for key in defs:
         by_name.setdefault(key.split(":", 1)[1], []).append(key)
@@ -453,6 +528,10 @@ def test_every_top_level_definition_is_referenced():
     assert unreferenced_definitions() == []
 
 
+def test_every_module_level_import_is_used():
+    assert unused_imports() == []
+
+
 def test_every_defaulted_parameter_is_set_by_some_caller():
     assert closure_unset_parameters() == []
 
@@ -492,6 +571,26 @@ def test_reexports_count_only_for_the_names_imported_through_them():
     assert f"{PKG_NAME}.sinks.ttl" in via_init
     bare = graph.reach([(f"{PKG_NAME}.sinks", None)])
     assert f"{PKG_NAME}.sinks.ttl" not in bare
+
+
+def test_same_named_definitions_in_two_modules_keep_only_themselves_alive():
+    sources = {
+        "pkg": "from .a import f\n",
+        "pkg.a": "_X = 1\ndef f():\n    return _X\n",
+        "pkg.b": "_X = 2\ndef g():\n    return 2\ndef h():\n    return 3\n",
+        "pkg.c": "def k():\n    return 4\n",
+    }
+    paths = {m: Path(*m.split(".")).with_suffix(".py") for m in sources}
+    paths["pkg"] = Path("pkg/__init__.py")
+    graph = ImportGraph(paths, {m: ast.parse(src) for m, src in sources.items()})
+    root = ast.parse(
+        "from pkg import f\n"  # through the __init__ re-export
+        "import pkg.b as b\n"
+        "b.g()\n"  # alias.N
+        "from pkg.c import k\n"  # from M import N
+        "x.h()\n"  # an attribute on a non-import is not a use
+    )
+    assert dead_definitions(graph, [("root.py", root)]) == ["pkg.b:_X", "pkg.b:h"]
 
 
 def test_fstring_uses_are_references():
