@@ -2780,6 +2780,7 @@ def q_warc_read(spark, sf_dir):
 
     import pandas as pd
 
+    import fixture_writers as FW
     from cmc_knowledge_graph_text2ttl_spark.sources import warc as W
 
     def build_segment(pdf: "pd.DataFrame") -> "pd.DataFrame":
@@ -2793,7 +2794,7 @@ def q_warc_read(spark, sf_dir):
             for d, t in zip(pdf["doc_id"].astype(int), pdf["text"])
         ]
         g = int(pdf["seg"].iloc[0]) % 8
-        data = W.build_warc(recs, compress=g >= 4, chunked=g % 4 >= 2)
+        data = FW.build_warc(recs, compress=g >= 4, chunked=g % 4 >= 2)
         return pd.DataFrame(
             {
                 "seg": [int(pdf["seg"].iloc[0])],
@@ -2864,7 +2865,7 @@ def q_web_ingest(spark, sf_dir):
                 body = FW.make_odt([(2, w[6]), f"{w[7]} {d}"])
             recs.append((f"doc://{d}", f"2024-02-{1 + d % 27:02d}T00:00:00Z", body))
         g = int(pdf["seg"].iloc[0]) % 6
-        data = W.build_warc(recs, compress=g >= 3, chunked=g % 3 == 2)
+        data = FW.build_warc(recs, compress=g >= 3, chunked=g % 3 == 2)
         return pd.DataFrame(
             {
                 "seg": [int(pdf["seg"].iloc[0])],
@@ -2917,6 +2918,7 @@ def q_archive_read(spark, sf_dir):
 
     import pandas as pd
 
+    import fixture_writers as FW
     from cmc_knowledge_graph_text2ttl_spark.sources import archives as AR
 
     def build_segment(pdf: "pd.DataFrame") -> "pd.DataFrame":
@@ -2927,11 +2929,11 @@ def q_archive_read(spark, sf_dir):
         ]
         g = int(pdf["seg"].iloc[0])
         if g < 2:
-            data, ext = AR.build_tar(members), ".tar"
+            data, ext = FW.build_tar(members), ".tar"
         elif g < 4:
-            data, ext = AR.build_tar(members, gz=True), ".tar.gz"
+            data, ext = FW.build_tar(members, gz=True), ".tar.gz"
         else:
-            data, ext = AR.build_zip(members), ".zip"
+            data, ext = FW.build_zip(members), ".zip"
         return pd.DataFrame({"seg": [g], "ext": [ext], "data": [data]})
 
     segs = (

@@ -48,7 +48,11 @@ def build_parser() -> argparse.ArgumentParser:
     )
     ap.add_argument("--no-canonicalize", action="store_true")
     ap.add_argument("--ttl-out", default=None, help="also write canonical N-Triples here")
-    ap.add_argument("--per-doc-ttl", default=None, help="small-corpus per-doc .ttl export dir")
+    ap.add_argument(
+        "--per-doc-ttl", default=None,
+        help="small-corpus export dir: one .ttl per document holding its winner "
+        "triples as sorted N-Triples lines",
+    )
     ap.add_argument(
         "--define", "-d", action="append", default=[], metavar="NAME=VALUE",
         help="seed a workflow variable (reference runner's -d; repeatable)",

@@ -40,7 +40,7 @@ from . import xhtml as X
 __all__ = ["docx_to_xhtml_text", "xlsx_to_xhtml_text", "pptx_to_xhtml_text"]
 
 _SI = re.compile(r"<si>(.*?)</si>", re.S)
-_T = re.compile(r"<t(?: [^>]*)?>(.*?)</t>", re.S)
+_T = re.compile(r"<t(?: [^>]*[^/>])?>(.*?)</t>", re.S)
 _SHEET = re.compile(
     r'<sheet\b[^>]*name="([^"]*)"[^>]*r:id="([^"]*)"[^>]*/?>', re.S
 )

@@ -10,9 +10,15 @@ North_rule requirements implemented here:
 * **idempotent resume** — on rerun, completed buckets are skipped by a
   ``bucket NOT IN (<done buckets>)`` filter on the stage input; outputs
   are written with dynamic partition overwrite, so a re-processed bucket
-  replaces itself instead of duplicating. A global stage (canonical) is
-  recomputed whole and written with a static overwrite, so no bucket of
-  an earlier computation survives it.
+  replaces itself instead of duplicating.
+
+One runner, ``_run_stage``, runs every stage: it buckets the stage's
+output itself (by ``url``, or by ``subj`` for canonical), writes it and
+appends the lineage. The global stage (canonical: sameAs components span
+url-buckets) names an ``upstream`` stage: it is skipped while a done row
+carries the upstream's current lineage token, and otherwise recomputed
+whole from the upstream checkpoint with a static overwrite, so no bucket
+of an earlier computation survives it.
 
 Commit point: a stage's buckets count as done only once its single
 ``coalesce(1)`` lineage append (after the stage's data write) has
@@ -166,22 +172,29 @@ class KgPipeline:
     def _read_stage(self, stage: str) -> DataFrame:
         return self.spark.read.parquet(self._stage_path(stage))
 
-    def _run_stage(self, stage: str, source: DataFrame, transform) -> DataFrame:
-        """Process only not-yet-completed buckets; append lineage.
-
-        ``source`` must carry a ``bucket`` column. Returns the stage's full
-        output (all buckets) read back from the checkpoint.
+    def _run_stage(
+        self, stage: str, source: DataFrame, transform, key: str = "url",
+        upstream: Optional[str] = None,
+    ) -> DataFrame:
+        """Run ``transform`` on the part of ``source`` still to do, bucket
+        its output by ``key``, write it and append one lineage row per
+        bucket written; return the whole stage read back. A bucketed stage's
+        ``source`` carries ``bucket``; a global stage names its ``upstream``
+        (see the module docstring).
         """
-        done = list(self._completed_buckets(stage))
+        token = self._upstream_token(upstream) if upstream else None
+        if upstream and any(r.input_token == token for r in self._done_rows(stage)):
+            return self._read_stage(stage)
+        done = [] if upstream else list(self._completed_buckets(stage))
         todo = source.filter(~F.col("bucket").isin(done)) if done else source
         t0 = time.time()
-        out = transform(todo)
-        # Dynamic partition overwrite: only buckets present in `out` are
-        # replaced; completed buckets' files are untouched → idempotent.
-        out.write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
+        # Dynamic: only buckets present in the output are replaced, so done
+        # buckets' files are untouched. Static: a recompute replaces the whole
+        # stage, so a bucket it no longer fills keeps no old files.
+        self.add_bucket(transform(todo), key).write.mode("overwrite").option(
+            "partitionOverwriteMode", "static" if upstream else "dynamic"
         ).partitionBy("bucket").parquet(self._stage_path(stage))
-        written = self.spark.read.parquet(self._stage_path(stage))
+        written = self._read_stage(stage)
         latency_ms = int((time.time() - t0) * 1000)
         # the buckets written in this run; the partition filter prunes the
         # scan to their directories
@@ -189,8 +202,8 @@ class KgPipeline:
         stats = (
             new.groupBy("bucket")
             .agg(
-                F.min("url").alias("url_min"),
-                F.max("url").alias("url_max"),
+                F.min(key).alias("url_min"),
+                F.max(key).alias("url_max"),
                 F.count(F.lit(1)).alias("n_rows"),
                 (
                     F.sum("no_triples")
@@ -200,7 +213,7 @@ class KgPipeline:
             )
             .collect()
         )
-        self._append_lineage(stage, stats, latency_ms)
+        self._append_lineage(stage, stats, latency_ms, token)
         return written
 
     def _upstream_token(self, stage: str) -> str:
@@ -215,22 +228,19 @@ class KgPipeline:
 
     # -- the pipeline ----------------------------------------------------------
 
-    def add_bucket(self, df: DataFrame) -> DataFrame:
+    def add_bucket(self, df: DataFrame, key: str = "url") -> DataFrame:
         return df.withColumn(
-            "bucket", F.pmod(F.xxhash64("url"), F.lit(self.n_buckets)).cast("int")
+            "bucket", F.pmod(F.xxhash64(key), F.lit(self.n_buckets)).cast("int")
         )
 
     def run(self, pages: DataFrame) -> Dict[str, DataFrame]:
         """Execute all stages (resuming where lineage says 'done')."""
         self._load_done()
-        bucketed = self.add_bucket(pages)
         # Stage 1: extraction (repartition by bucket → stable Arrow batches)
         extracted = self._run_stage(
             "extract",
-            bucketed,
-            lambda df: self.add_bucket(
-                extract_text(df.repartition(self.n_buckets, "bucket"))
-            ),
+            self.add_bucket(pages),
+            lambda df: extract_text(df.repartition(self.n_buckets, "bucket")),
         )
         # Stage 2: workflows + best-workflow selection (is_best computed
         # inside the UDF — rows of one doc are task-local, so the top-1
@@ -238,59 +248,24 @@ class KgPipeline:
         results = self._run_stage(
             "results",
             extracted,
-            lambda df: self.add_bucket(
-                run_workflows(
-                    df, self.programs, graphs=self.graphs, select_best=True,
-                    extra_vars=self.extra_vars,
-                )
+            lambda df: run_workflows(
+                df, self.programs, graphs=self.graphs, select_best=True,
+                extra_vars=self.extra_vars,
             ),
         )
         # Stage 3: winner triples, flattened
         triples = self._run_stage(
-            "triples",
-            results,
-            lambda df: self.add_bucket(explode_triples(df, winners_only=True)),
+            "triples", results, lambda df: explode_triples(df, winners_only=True)
         )
         out = {"extracted": extracted, "results": results, "triples": triples}
         # Stage 4: canonicalization — a GLOBAL stage (sameAs components span
-        # url-buckets), so resume is all-or-nothing: done lineage for this
-        # run_scope means skip; otherwise recompute from the full triples
-        # checkpoint. Output is re-bucketed by subject hash.
+        # url-buckets), bucketed by subject.
         if self.canonicalize:
-            out["canonical"] = self._run_global_stage(
+            out["canonical"] = self._run_stage(
                 "canonical",
                 triples,
-                lambda df: canonicalize_triples(df.drop("bucket")).withColumn(
-                    "bucket",
-                    F.pmod(F.xxhash64("subj"), F.lit(self.n_buckets)).cast("int"),
-                ),
+                lambda df: canonicalize_triples(df.drop("bucket")),
+                "subj",
                 upstream="triples",
             )
         return out
-
-    def _run_global_stage(
-        self, stage: str, source: DataFrame, transform, upstream: str
-    ) -> DataFrame:
-        token = self._upstream_token(upstream)
-        if any(r.input_token == token for r in self._done_rows(stage)):
-            return self._read_stage(stage)
-        t0 = time.time()
-        # A recompute replaces the whole stage: under a dynamic overwrite a
-        # subject bucket it no longer fills would keep its old files.
-        transform(source).write.mode("overwrite").option(
-            "partitionOverwriteMode", "static"
-        ).partitionBy("bucket").parquet(self._stage_path(stage))
-        written = self.spark.read.parquet(self._stage_path(stage))
-        latency_ms = int((time.time() - t0) * 1000)
-        stats = (
-            written.groupBy("bucket")
-            .agg(
-                F.min("subj").alias("url_min"),
-                F.max("subj").alias("url_max"),
-                F.count(F.lit(1)).alias("n_rows"),
-                F.count(F.lit(1)).alias("n_triples"),
-            )
-            .collect()
-        )
-        self._append_lineage(stage, stats, latency_ms, token)
-        return written

@@ -1,17 +1,13 @@
 from .ttl import (
     export_per_doc_turtle,
-    format_nt_term,
-    triple_to_ntriples,
+    ntriples_line,
     triples_to_nt_lines,
     write_ntriples,
-    serialize_turtle,
 )
 
 __all__ = [
     "export_per_doc_turtle",
-    "format_nt_term",
-    "triple_to_ntriples",
+    "ntriples_line",
     "triples_to_nt_lines",
     "write_ntriples",
-    "serialize_turtle",
 ]

@@ -38,7 +38,7 @@ from pyspark.sql.types import (
 
 from ..operators.columns import map_rows
 
-__all__ = ["read_archives", "build_tar", "build_zip", "ARCHIVE_SCHEMA"]
+__all__ = ["read_archives", "ARCHIVE_SCHEMA"]
 
 ARCHIVE_SCHEMA = StructType(
     [
@@ -117,44 +117,3 @@ def read_archives(
         ]
 
     return map_rows(files.select("path", "content"), ARCHIVE_SCHEMA, lambda: row_fn)
-
-
-# ---------------------------------------------------------------------------
-# Deterministic fixture writers (pinned metadata — byte-reproducible)
-
-
-def build_tar(members: List[Tuple[str, bytes]], gz: bool = False) -> bytes:
-    """tar (optionally gzip, all timestamps pinned to 0 — the gzip
-    header mtime included, via an explicit GzipFile wrap; tarfile's
-    own 'w:gz' stamps wall-clock time into the member stream)."""
-    buf = io.BytesIO()
-    with tarfile.open(
-        fileobj=buf, mode="w", format=tarfile.USTAR_FORMAT
-    ) as tf:
-        for name, data in members:
-            ti = tarfile.TarInfo(name)
-            ti.size = len(data)
-            ti.mtime = 0
-            ti.mode = 0o644
-            tf.addfile(ti, io.BytesIO(data))
-    raw = buf.getvalue()
-    if not gz:
-        return raw
-    import gzip
-
-    out = io.BytesIO()
-    with gzip.GzipFile(fileobj=out, mode="wb", compresslevel=6, mtime=0) as g:
-        g.write(raw)
-    return out.getvalue()
-
-
-def build_zip(members: List[Tuple[str, bytes]]) -> bytes:
-    """zip with pinned timestamps from (name, data)."""
-    buf = io.BytesIO()
-    with zipfile.ZipFile(buf, "w", zipfile.ZIP_DEFLATED) as z:
-        for name, data in members:
-            zi = zipfile.ZipInfo(name, date_time=(1980, 1, 1, 0, 0, 0))
-            zi.compress_type = zipfile.ZIP_DEFLATED
-            zi.external_attr = 0o644 << 16
-            z.writestr(zi, data)
-    return buf.getvalue()

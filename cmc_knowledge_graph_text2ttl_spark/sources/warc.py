@@ -45,7 +45,6 @@ from ..operators.columns import map_rows
 __all__ = [
     "parse_warc_records",
     "read_warc",
-    "build_warc",
     "gunzip_members",
 ]
 
@@ -229,74 +228,3 @@ def read_warc(spark: SparkSession, path: str) -> DataFrame:
     return map_rows(
         files.select("path", "content"), WARC_PAGES_SCHEMA, lambda: row_fn
     )
-
-
-def build_warc(
-    records: List[Tuple[str, str, bytes]],
-    compress: bool = False,
-    chunked: bool = False,
-) -> bytes:
-    """Deterministic WARC/1.0 bytes from (uri, iso_date, html_body)
-    triples — the fixture counterpart of :func:`parse_warc_records`.
-    Each response record wraps the body in a minimal HTTP/1.1 200.
-
-    ``compress=True`` emits the Common-Crawl layout: each record its
-    own gzip member, members concatenated (mtime pinned to 0 and OS
-    byte pinned so the bytes are reproducible across hosts).
-    ``chunked=True`` stores the HTTP body with chunked
-    transfer-coding (split into 7-byte chunks to exercise multi-chunk
-    reassembly)."""
-    import gzip
-
-    out = bytearray()
-    for uri, date, body in records:
-        if chunked:
-            chunks = bytearray()
-            for i in range(0, len(body), 7):
-                piece = body[i : i + 7]
-                chunks += f"{len(piece):x}\r\n".encode() + piece + b"\r\n"
-            chunks += b"0\r\n\r\n"
-            http = (
-                b"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n"
-                + b"Transfer-Encoding: chunked\r\n\r\n"
-                + bytes(chunks)
-            )
-        else:
-            http = (
-                b"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n"
-                + b"Content-Length: " + str(len(body)).encode() + b"\r\n\r\n"
-                + body
-            )
-        hdr = (
-            "WARC/1.0\r\n"
-            "WARC-Type: response\r\n"
-            f"WARC-Target-URI: {uri}\r\n"
-            f"WARC-Date: {date}\r\n"
-            f"Content-Length: {len(http)}\r\n"
-            "\r\n"
-        ).encode("latin-1")
-        record = hdr + http + b"\r\n\r\n"
-        if compress:
-            gz = gzip.GzipFile(
-                fileobj=_Buf(out), mode="wb", mtime=0, filename=""
-            )
-            gz.write(record)
-            gz.close()
-        else:
-            out += record
-    return bytes(out)
-
-
-class _Buf:
-    """Minimal write-sink adapter so gzip.GzipFile appends straight
-    into the shared bytearray (one gzip member per record)."""
-
-    def __init__(self, buf: bytearray) -> None:
-        self._buf = buf
-
-    def write(self, b: bytes) -> int:
-        self._buf += b
-        return len(b)
-
-    def flush(self) -> None:  # gzip calls this on close
-        pass

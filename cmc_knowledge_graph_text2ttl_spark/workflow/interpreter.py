@@ -362,18 +362,10 @@ class DocInterpreter:
 
     # -- public API ---------------------------------------------------------
 
-    def set_var(self, name: str, value: Any) -> None:
-        self._vars[name] = value
-
     def run(self, program: "WorkflowProgram") -> DocResult:
         for handler, args in program.plan:
             handler(self, args)
         return self.result
-
-    def execute_plan(self, plan: list) -> None:
-        """Run raw YAML steps, compiling them first."""
-        for handler, args in compile_plan(plan, "plan", []):
-            handler(self, args)
 
     def _seq(self, plan: list, return_first_success: bool = False) -> Tuple[bool, Any]:
         """Run a compiled sub-op sequence; result is the last op's

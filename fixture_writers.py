@@ -3,8 +3,8 @@
 The package ``cmc_knowledge_graph_text2ttl_spark`` holds the readers;
 this module holds the other direction: the document writers (table
 PDFs, OLE2 ``.doc``/``.xls``/``.ppt``, OOXML ``.docx``/``.xlsx``/``.pptx``,
-ODF,
-RTF) and the image, audio and video encoders that build test inputs.
+ODF, RTF), the tar/zip and WARC container writers, and the image, audio
+and video encoders that build test inputs.
 ``__spark_entry__``'s data synthesis and the tests import it; the
 package never does, so none of it ships in the ``--py-files`` zip.
 ``tests/test_reachability.py`` keeps writers out of the package.
@@ -16,10 +16,12 @@ the bytes are the same on every host.
 
 from __future__ import annotations
 
+import gzip
 import hashlib
 import io
 import re
 import struct
+import tarfile
 import zipfile
 import zlib
 from typing import Dict, List, Optional, Sequence, Tuple, Union
@@ -3041,3 +3043,111 @@ def encode_jpeg_header(width: int, height: int) -> bytes:
         + b"\x01\x11\x00"
     )
     return b"\xff\xd8" + app0 + sof0 + b"\xff\xd9"
+
+
+# ---------------------------------------------------------------------------
+# Archives (sources/archives.py) and WARC (sources/warc.py)
+
+
+def build_tar(members: List[Tuple[str, bytes]], gz: bool = False) -> bytes:
+    """tar (optionally gzip, all timestamps pinned to 0 — the gzip
+    header mtime included, via an explicit GzipFile wrap; tarfile's
+    own 'w:gz' stamps wall-clock time into the member stream)."""
+    buf = io.BytesIO()
+    with tarfile.open(
+        fileobj=buf, mode="w", format=tarfile.USTAR_FORMAT
+    ) as tf:
+        for name, data in members:
+            ti = tarfile.TarInfo(name)
+            ti.size = len(data)
+            ti.mtime = 0
+            ti.mode = 0o644
+            tf.addfile(ti, io.BytesIO(data))
+    raw = buf.getvalue()
+    if not gz:
+        return raw
+    out = io.BytesIO()
+    with gzip.GzipFile(fileobj=out, mode="wb", compresslevel=6, mtime=0) as g:
+        g.write(raw)
+    return out.getvalue()
+
+
+def build_zip(members: List[Tuple[str, bytes]]) -> bytes:
+    """zip with pinned timestamps from (name, data)."""
+    buf = io.BytesIO()
+    with zipfile.ZipFile(buf, "w", zipfile.ZIP_DEFLATED) as z:
+        for name, data in members:
+            zi = zipfile.ZipInfo(name, date_time=(1980, 1, 1, 0, 0, 0))
+            zi.compress_type = zipfile.ZIP_DEFLATED
+            zi.external_attr = 0o644 << 16
+            z.writestr(zi, data)
+    return buf.getvalue()
+
+
+def build_warc(
+    records: List[Tuple[str, str, bytes]],
+    compress: bool = False,
+    chunked: bool = False,
+) -> bytes:
+    """Deterministic WARC/1.0 bytes from (uri, iso_date, html_body)
+    triples — the fixture counterpart of ``sources/warc.parse_warc_records``.
+    Each response record wraps the body in a minimal HTTP/1.1 200.
+
+    ``compress=True`` emits the Common-Crawl layout: each record its
+    own gzip member, members concatenated (mtime pinned to 0 and OS
+    byte pinned so the bytes are reproducible across hosts).
+    ``chunked=True`` stores the HTTP body with chunked
+    transfer-coding (split into 7-byte chunks to exercise multi-chunk
+    reassembly)."""
+    out = bytearray()
+    for uri, date, body in records:
+        if chunked:
+            chunks = bytearray()
+            for i in range(0, len(body), 7):
+                piece = body[i : i + 7]
+                chunks += f"{len(piece):x}\r\n".encode() + piece + b"\r\n"
+            chunks += b"0\r\n\r\n"
+            http = (
+                b"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n"
+                + b"Transfer-Encoding: chunked\r\n\r\n"
+                + bytes(chunks)
+            )
+        else:
+            http = (
+                b"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n"
+                + b"Content-Length: " + str(len(body)).encode() + b"\r\n\r\n"
+                + body
+            )
+        hdr = (
+            "WARC/1.0\r\n"
+            "WARC-Type: response\r\n"
+            f"WARC-Target-URI: {uri}\r\n"
+            f"WARC-Date: {date}\r\n"
+            f"Content-Length: {len(http)}\r\n"
+            "\r\n"
+        ).encode("latin-1")
+        record = hdr + http + b"\r\n\r\n"
+        if compress:
+            gz = gzip.GzipFile(
+                fileobj=_Buf(out), mode="wb", mtime=0, filename=""
+            )
+            gz.write(record)
+            gz.close()
+        else:
+            out += record
+    return bytes(out)
+
+
+class _Buf:
+    """Minimal write-sink adapter so gzip.GzipFile appends straight
+    into the shared bytearray (one gzip member per record)."""
+
+    def __init__(self, buf: bytearray) -> None:
+        self._buf = buf
+
+    def write(self, b: bytes) -> int:
+        self._buf += b
+        return len(b)
+
+    def flush(self) -> None:  # gzip calls this on close
+        pass

@@ -2,12 +2,8 @@
 
 import pytest
 
-from cmc_knowledge_graph_text2ttl_spark.sources.archives import (
-    _iter_members,
-    build_tar,
-    build_zip,
-    read_archives,
-)
+from cmc_knowledge_graph_text2ttl_spark.sources.archives import _iter_members, read_archives
+from fixture_writers import build_tar, build_zip
 
 MEMBERS = [("a/x.txt", b"hello"), ("b.bin", bytes(range(256))), ("e", b"")]
 

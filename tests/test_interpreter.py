@@ -18,7 +18,7 @@ import yaml
 from cmc_knowledge_graph_text2ttl_spark.core import ProcessorException, XSD
 from cmc_knowledge_graph_text2ttl_spark.core.errors import WorkflowCompileError
 from cmc_knowledge_graph_text2ttl_spark.workflow import compile_workflow_file, run_document
-from cmc_knowledge_graph_text2ttl_spark.workflow.interpreter import DocInterpreter
+from cmc_knowledge_graph_text2ttl_spark.workflow.interpreter import DocInterpreter, compile_plan
 
 from conftest import REPO, wf
 
@@ -26,6 +26,12 @@ from conftest import REPO, wf
 def run(src, text="", doc_vars=None, **kw):
     res = run_document(text, wf(src), doc_vars=doc_vars, **kw)
     return res
+
+
+def execute_plan(interp, plan):
+    """Run raw YAML steps on ``interp``, compiling them first."""
+    for handler, args in compile_plan(plan, "plan", []):
+        handler(interp, args)
 
 
 def triples(src, text="", **kw):
@@ -47,7 +53,7 @@ class TestTemplates:
         if setup:
             import yaml
 
-            interp.execute_plan(yaml.safe_load(setup))
+            execute_plan(interp, yaml.safe_load(setup))
         return interp.expand(template)
 
     def test_variable_expansion(self):
@@ -73,14 +79,14 @@ class TestTemplates:
         interp = DocInterpreter(text="abc")
         import yaml
 
-        interp.execute_plan(yaml.safe_load(setup))
+        execute_plan(interp, yaml.safe_load(setup))
         assert interp.expand("@{m.1}/@{m.2}/@{m.word}") == "ab/c/ab"
 
     def test_unknown_group_raises(self):
         import yaml
 
         interp = DocInterpreter(text="abc")
-        interp.execute_plan(yaml.safe_load("- match: 'a'\n  as: m\n  do: [{pass: x}]"))
+        execute_plan(interp, yaml.safe_load("- match: 'a'\n  as: m\n  do: [{pass: x}]"))
         with pytest.raises(ProcessorException):
             interp.expand("@{m.7}")
 
@@ -89,7 +95,8 @@ class TestTemplates:
         import yaml
 
         interp = DocInterpreter(text="x=43", initial_vars={"row": "3"})
-        interp.execute_plan(
+        execute_plan(
+            interp,
             yaml.safe_load("- match: 'x=(\\d+)'\n  as: material-3\n  do: [{pass: x}]")
         )
         assert interp.expand("@{material-@{row}.1}") == "43"
@@ -105,7 +112,8 @@ class TestTemplates:
         import yaml
 
         interp = DocInterpreter(text="ab")
-        interp.execute_plan(
+        execute_plan(
+            interp,
             yaml.safe_load("- match: 'a(x)?(b)'\n  as: m\n  do: [{pass: x}]")
         )
         assert interp.expand("[@{m.1}]") == "[]"
@@ -912,7 +920,7 @@ class TestRemainingOpSurface:
         ]
 
     def test_select_as_aliasing(self):
-        from cmc_knowledge_graph_text2ttl_spark.workflow.interpreter import DocInterpreter
+        from cmc_knowledge_graph_text2ttl_spark.workflow.interpreter import DocInterpreter, compile_plan
         from cmc_knowledge_graph_text2ttl_spark.workflow.sparql import MiniGraph, make_query_fn
         from cmc_knowledge_graph_text2ttl_spark.workflow import run_document as rd
 
@@ -1101,7 +1109,7 @@ class TestCompiledForm:
         for text, dv in corpus[0]:
             interp = DocInterpreter(text=text, query_fn=corpus[1], initial_vars=dv)
             try:
-                interp.execute_plan(raw)
+                execute_plan(interp, raw)
             except ProcessorException:
                 pass
         assert raw == before

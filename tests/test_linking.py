@@ -131,14 +131,14 @@ class TestPerDocTurtleExport:
             "subj string, pred string, obj_kind string, obj_lexical string,"
             "obj_lang string, obj_datatype string, url string",
         )
-        n = export_per_doc_turtle(tri, str(tmp_path), prefixes={"x": "http://x/"})
+        n = export_per_doc_turtle(tri, str(tmp_path))
         assert n == 2
         files = sorted(os.listdir(tmp_path))
         assert files == ["doc___1.ttl", "doc___2.ttl"]
-        content = (tmp_path / "doc___1.ttl").read_text()
-        assert "@prefix x: <http://x/> ." in content
-        assert 'x:p "v1"' in content and "x:q x:o" in content
-        assert '"zwei"@de' in (tmp_path / "doc___2.ttl").read_text()
+        assert (tmp_path / "doc___1.ttl").read_text() == (
+            '<http://x/s1> <http://x/p> "v1" .\n<http://x/s1> <http://x/q> <http://x/o> .\n'
+        )
+        assert (tmp_path / "doc___2.ttl").read_text() == '<http://x/s2> <http://x/p> "zwei"@de .\n'
 
     @pytest.mark.parametrize(
         "a, b",

@@ -86,6 +86,25 @@ class TestXlsx:
         assert "<td>rich &amp;co</td>" in got
         assert "<td>in&lt;line</td>" in got
 
+    def test_self_closing_run_is_empty(self):
+        """``<t xml:space="preserve"/>`` is an empty run, not an open tag
+        whose text runs on into the next run's markup."""
+        members = [
+            ("xl/workbook.xml",
+             '<workbook xmlns:r="r"><sheets>'
+             '<sheet name="S" sheetId="1" r:id="rId1"/></sheets></workbook>'),
+            ("xl/_rels/workbook.xml.rels",
+             '<Relationships><Relationship Id="rId1" '
+             'Target="worksheets/sheet1.xml"/></Relationships>'),
+            ("xl/sharedStrings.xml",
+             '<sst><si><r><t xml:space="preserve"/></r><r><t>A</t></r></si></sst>'),
+            ("xl/worksheets/sheet1.xml",
+             '<worksheet><sheetData><row><c r="A1" t="s"><v>0</v></c></row>'
+             "</sheetData></worksheet>"),
+        ]
+        got = O.xlsx_to_xhtml_text(_zip(members))
+        assert "<td>A</td>" in got
+
     def test_shared_index_out_of_range_raises(self):
         members = [
             ("xl/workbook.xml",

@@ -1,7 +1,8 @@
 """Property-based tests (hypothesis): interpreter invariants on random
 inputs — literal coercion cascade, template expansion, extraction
-determinism, minhash/jaccard math, and a random-corpus engine-vs-oracle
-sweep over a constrained workflow grammar.
+determinism, minhash/jaccard math, a random-corpus engine-vs-oracle
+sweep over a constrained workflow grammar, and the Spark N-Triples line
+writer against its Python twin.
 """
 
 import hashlib
@@ -12,6 +13,7 @@ from hypothesis import given, settings, strategies as st
 
 from cmc_knowledge_graph_text2ttl_spark.core import XSD
 from cmc_knowledge_graph_text2ttl_spark.operators.extract import extract_one
+from cmc_knowledge_graph_text2ttl_spark.sinks import ntriples_line, triples_to_nt_lines
 from cmc_knowledge_graph_text2ttl_spark.workflow import run_document
 from cmc_knowledge_graph_text2ttl_spark.workflow.interpreter import DocInterpreter
 
@@ -302,3 +304,37 @@ class TestPropertyPathProperties:
             for s in g._path(ast, n, False):
                 got_bwd.add((s.value, n.value))
         assert got_bwd == expect
+
+
+# ---------------------------------------------------------------------------
+# The two term writers: the Spark N-Triples line and its oracle-side twin
+
+_term_chars = st.one_of(
+    st.sampled_from('\\"\n\r\t'), st.characters(blacklist_categories=("Cs",))
+)
+_triple_st = st.tuples(
+    st.text(_term_chars, min_size=1, max_size=8),  # subj
+    st.text(_term_chars, min_size=1, max_size=8),  # pred
+    st.sampled_from(["iri", "literal"]),  # obj_kind
+    st.text(_term_chars, max_size=12),  # obj_lexical, empty included
+    # obj_lang and obj_datatype: the interpreter sets None, never ""
+    st.none() | st.from_regex(r"[a-zA-Z]{1,8}(-[a-zA-Z0-9]{1,8})?", fullmatch=True),
+    st.none() | st.text(_term_chars, min_size=1, max_size=8),
+)
+
+
+class TestTermWriterProperties:
+    @settings(max_examples=10, deadline=None)
+    @given(st.lists(_triple_st, min_size=1, max_size=12))
+    def test_spark_line_equals_python_line(self, spark, rows):
+        """``ntriples_line`` (what ``write_ntriples`` and the per-document
+        export write) and ``triples_to_nt_lines`` (the goldens) give the
+        same bytes for every escape class, non-ASCII text, empty lexical
+        forms, and language-tagged, typed and IRI objects."""
+        df = spark.createDataFrame(
+            rows,
+            "subj string, pred string, obj_kind string, obj_lexical string,"
+            "obj_lang string, obj_datatype string",
+        )
+        got = sorted(r.line for r in df.select(ntriples_line().alias("line")).collect())
+        assert got == triples_to_nt_lines(rows)

@@ -13,13 +13,9 @@ from cmc_knowledge_graph_text2ttl_spark.operators import odf as ODF
 from cmc_knowledge_graph_text2ttl_spark.operators import office as OFFICE
 from cmc_knowledge_graph_text2ttl_spark.operators import rtf as RTF
 from cmc_knowledge_graph_text2ttl_spark.operators.doc_binary import doc_to_xhtml_text
-from cmc_knowledge_graph_text2ttl_spark.sources.archives import (
-    _iter_members,
-    build_tar,
-    build_zip,
-)
+from cmc_knowledge_graph_text2ttl_spark.sources.archives import _iter_members
 import fixture_writers as FW
-from fixture_writers import make_doc
+from fixture_writers import build_tar, build_zip, make_doc
 
 # printable text without the markup-ambiguous or layout control chars
 _plain = st.text(

@@ -41,6 +41,11 @@ Both checks read the AST only; nothing is imported.
 5. Every module-level import of a non-``__init__`` package module is
    referenced by a ``Name`` node in that module (``from __future__``
    exempt).
+6. Every public method of a public package class is referenced, as a
+   ``Name`` or ``Attribute`` node with its bare name, by some non-test
+   repo file outside its own ``def``: a method only tests call is dead
+   code too. A class with a base outside the package is exempt, because
+   its methods are that base's hooks.
 """
 
 import ast
@@ -201,7 +206,7 @@ def _definitions(tree):
 
 def _references(tree):
     """(name, line) of every Name, Attribute and import-alias node, by bare
-    name (check 4)."""
+    name (checks 4 and 6)."""
     for node in ast.walk(tree):
         if isinstance(node, ast.Name):
             yield node.id, node.lineno
@@ -416,6 +421,39 @@ def unused_imports():
     return sorted(out)
 
 
+def unreferenced_methods():
+    """``module:Class.method`` of each public method of a public package
+    class with no base outside the package that no non-test repo file
+    references outside the method's own span (check 6)."""
+    paths = package_modules()
+    trees = {m: _parse(p) for m, p in paths.items()}
+    classes = {n.name for t in trees.values() for n in t.body if isinstance(n, ast.ClassDef)}
+    methods = [
+        (mod, cls.name, m)
+        for mod, tree in trees.items()
+        for cls in tree.body
+        if isinstance(cls, ast.ClassDef)
+        and not cls.name.startswith("_")
+        and all(_name(b) in classes for b in cls.bases)
+        for m in cls.body
+        if isinstance(m, (ast.FunctionDef, ast.AsyncFunctionDef)) and not m.name.startswith("_")
+    ]
+    refs = {}  # bare name -> (path, line) of each reference
+    for path in repo_files():
+        if "tests" in path.relative_to(REPO).parts or path.name.startswith("test_"):
+            continue
+        for name, line in _references(_parse(path)):
+            refs.setdefault(name, []).append((path, line))
+    return sorted(
+        f"{mod}:{cls}.{m.name}"
+        for mod, cls, m in methods
+        if not any(
+            path != paths[mod] or not m.lineno <= line <= m.end_lineno
+            for path, line in refs.get(m.name, ())
+        )
+    )
+
+
 def cli_closure_definitions():
     """``(module:name -> names its span references)`` for the top-level
     definitions of the CLI's import closure, and the names the CLI reaches
@@ -534,6 +572,10 @@ def test_every_module_level_import_is_used():
 
 def test_every_defaulted_parameter_is_set_by_some_caller():
     assert closure_unset_parameters() == []
+
+
+def test_every_public_method_is_referenced_outside_tests():
+    assert unreferenced_methods() == []
 
 
 def test_cli_closure_holds_only_what_the_cli_or_an_entry_point_runs():

@@ -4,6 +4,7 @@ per-file error isolation."""
 import pytest
 
 from cmc_knowledge_graph_text2ttl_spark.sources import warc as W
+from fixture_writers import build_warc
 
 
 class TestParse:
@@ -12,7 +13,7 @@ class TestParse:
             ("http://a/1", "2024-01-01T00:00:00Z", b"<html>one</html>"),
             ("http://a/2", "2024-01-02T00:00:00Z", b"<html>two</html>"),
         ]
-        got = list(W.parse_warc_records(W.build_warc(recs)))
+        got = list(W.parse_warc_records(build_warc(recs)))
         assert got == recs
 
     def test_skips_non_response_records(self):
@@ -20,7 +21,7 @@ class TestParse:
             b"WARC/1.0\r\nWARC-Type: warcinfo\r\nContent-Length: 5\r\n\r\n"
             b"hello\r\n\r\n"
         )
-        resp = W.build_warc([("http://x", "2024-01-01T00:00:00Z", b"body")])
+        resp = build_warc([("http://x", "2024-01-01T00:00:00Z", b"body")])
         got = list(W.parse_warc_records(info + resp))
         assert got == [("http://x", "2024-01-01T00:00:00Z", b"body")]
 
@@ -38,11 +39,11 @@ class TestParse:
     def test_binary_safe_payload(self):
         payload = bytes(range(256)) * 3
         recs = [("http://bin", "2024-01-01T00:00:00Z", payload)]
-        got = list(W.parse_warc_records(W.build_warc(recs)))
+        got = list(W.parse_warc_records(build_warc(recs)))
         assert got[0][2] == payload
 
     def test_truncated_record_raises(self):
-        blob = W.build_warc([("http://x", "2024-01-01T00:00:00Z", b"full body")])
+        blob = build_warc([("http://x", "2024-01-01T00:00:00Z", b"full body")])
         with pytest.raises(ValueError, match="truncated|unterminated"):
             list(W.parse_warc_records(blob[:-20]))
 
@@ -62,7 +63,7 @@ class TestReadWarc:
                 )
                 for j in range(3)
             ]
-            (tmp_path / f"seg{i}.warc").write_bytes(W.build_warc(recs))
+            (tmp_path / f"seg{i}.warc").write_bytes(build_warc(recs))
         out = W.read_warc(spark, str(tmp_path)).collect()
         ok = [r for r in out if r.error is None]
         assert len(ok) == 6
@@ -72,7 +73,7 @@ class TestReadWarc:
 
     def test_malformed_file_isolated(self, spark, tmp_path):
         (tmp_path / "good.warc").write_bytes(
-            W.build_warc([("http://ok", "2024-01-01T00:00:00Z", b"x")])
+            build_warc([("http://ok", "2024-01-01T00:00:00Z", b"x")])
         )
         (tmp_path / "bad.warc").write_bytes(b"corrupt bytes")
         out = W.read_warc(spark, str(tmp_path)).collect()
@@ -84,7 +85,7 @@ class TestReadWarc:
     def test_midfile_error_drops_partial_rows(self, spark, tmp_path):
         # regression: records parsed before a framing error used to
         # survive alongside the error row for the same file
-        good = W.build_warc(
+        good = build_warc(
             [(f"http://p/{j}", "2024-01-01T00:00:00Z", b"x" * 10) for j in range(3)]
         )
         (tmp_path / "part.warc").write_bytes(good + b"WARC/1.0\r\ngarbage")
@@ -98,7 +99,7 @@ class TestReadWarc:
         recs = [
             ("doc://1", "2024-01-01T00:00:00Z", b"<html><p>alpha beta</p></html>")
         ]
-        (tmp_path / "a.warc").write_bytes(W.build_warc(recs))
+        (tmp_path / "a.warc").write_bytes(build_warc(recs))
         pages = (
             W.read_warc(spark, str(tmp_path))
             .where("error is null")
@@ -126,15 +127,15 @@ def _payloads(data, gz=False):
 
 class TestGzip:
     def test_member_per_record_roundtrip(self):
-        gz = W.build_warc(RECS, compress=True)
+        gz = build_warc(RECS, compress=True)
         assert gz[:2] == b"\x1f\x8b"
-        assert _payloads(gz, gz=True) == _payloads(W.build_warc(RECS))
+        assert _payloads(gz, gz=True) == _payloads(build_warc(RECS))
 
     def test_one_member_per_record(self):
         # Common Crawl layout: each record its own gzip member
         import zlib
 
-        gz = W.build_warc(RECS, compress=True)
+        gz = build_warc(RECS, compress=True)
         count, pos = 0, 0
         while pos < len(gz):
             d = zlib.decompressobj(wbits=31)
@@ -145,25 +146,25 @@ class TestGzip:
         assert count == len(RECS)
 
     def test_deterministic_bytes(self):
-        assert W.build_warc(RECS, compress=True) == W.build_warc(
+        assert build_warc(RECS, compress=True) == build_warc(
             RECS, compress=True
         )
 
     def test_truncated_member_raises(self):
-        gz = W.build_warc(RECS, compress=True)
+        gz = build_warc(RECS, compress=True)
         with pytest.raises(ValueError, match="truncated gzip member"):
             W.gunzip_members(gz[:-3])
 
     def test_non_gzip_tail_raises(self):
-        gz = W.build_warc(RECS[:1], compress=True)
+        gz = build_warc(RECS[:1], compress=True)
         with pytest.raises(ValueError, match="expected gzip member"):
             W.gunzip_members(gz + b"not gzip")
 
     def test_read_warc_sniffs_magic_not_extension(self, spark, tmp_path):
         # same records: one plain file, one gz file with a PLAIN name
-        (tmp_path / "a.warc").write_bytes(W.build_warc(RECS[:2]))
+        (tmp_path / "a.warc").write_bytes(build_warc(RECS[:2]))
         (tmp_path / "b.warc").write_bytes(
-            W.build_warc(RECS[2:], compress=True)
+            build_warc(RECS[2:], compress=True)
         )
         out = W.read_warc(spark, str(tmp_path)).where("error is null")
         assert sorted(r.url for r in out.collect()) == [
@@ -172,7 +173,7 @@ class TestGzip:
 
     def test_corrupt_gz_file_isolated(self, spark, tmp_path):
         (tmp_path / "good.warc.gz").write_bytes(
-            W.build_warc(RECS[:1], compress=True)
+            build_warc(RECS[:1], compress=True)
         )
         (tmp_path / "bad.warc.gz").write_bytes(b"\x1f\x8b\x08corrupt")
         rows = W.read_warc(spark, str(tmp_path)).collect()
@@ -183,13 +184,13 @@ class TestGzip:
 
 class TestChunked:
     def test_chunked_body_reassembles(self):
-        assert _payloads(W.build_warc(RECS, chunked=True)) == _payloads(
-            W.build_warc(RECS)
+        assert _payloads(build_warc(RECS, chunked=True)) == _payloads(
+            build_warc(RECS)
         )
 
     def test_gzip_plus_chunked(self):
-        gz = W.build_warc(RECS, compress=True, chunked=True)
-        assert _payloads(gz, gz=True) == _payloads(W.build_warc(RECS))
+        gz = build_warc(RECS, compress=True, chunked=True)
+        assert _payloads(gz, gz=True) == _payloads(build_warc(RECS))
 
     def test_chunk_extensions_and_bare_lf(self):
         body = b"hello world"
