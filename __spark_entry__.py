@@ -429,9 +429,9 @@ def q_kg_connected_components(spark, sf_dir):
 def q_kg_cc_distributed(spark, sf_dir):
     """The DISTRIBUTED connected-components path under the gate: the
     driver union-find fast path is disabled (small_graph_threshold=0) so
-    min-label propagation + pointer jumping + the two-phase salted min
-    run for real; the oracle is the same recursive SQL as the fast-path
-    query — both paths must agree bit-for-bit."""
+    min-label propagation + pointer jumping run for real; the oracle is
+    the same recursive SQL as the fast-path query — both paths must agree
+    bit-for-bit."""
     docs = _docs(spark, sf_dir)
     pad = lambda c: F.lpad(c.cast("string"), 4, "0")
     e1 = docs.filter(F.col("doc_id") % 5 == 0).select(
@@ -442,7 +442,7 @@ def q_kg_cc_distributed(spark, sf_dir):
         F.concat(F.lit("n"), pad(F.col("doc_id") + 1)).alias("src"),
         F.concat(F.lit("n"), pad(F.col("doc_id") + 2)).alias("dst"),
     )
-    # star edges onto one hub exercise the salted two-phase min
+    # star edges onto one hub exercise the hub-skewed neighbor min
     hub = docs.filter(F.col("doc_id") % 25 == 0).select(
         F.lit("n0000").alias("src"),
         F.concat(F.lit("n"), pad(F.col("doc_id") + 3)).alias("dst"),
@@ -450,7 +450,6 @@ def q_kg_cc_distributed(spark, sf_dir):
     return connected_components(
         e1.union(e2).union(hub),
         small_graph_threshold=0,
-        salt_hubs=4,
     ).select("node", "component")
 
 

@@ -22,8 +22,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def select_best_workflow(results: DataFrame, keep_losers: bool = True) -> DataFrame:
-    """Add ``is_best`` to the results table (or filter to winners).
+def select_best_workflow(results: DataFrame) -> DataFrame:
+    """Add ``is_best`` to the results table; every row stays.
 
     Errored (url, workflow) rows never win — the reference drops them from
     its candidate list entirely (runner.py:389-394).
@@ -38,12 +38,9 @@ def select_best_workflow(results: DataFrame, keep_losers: bool = True) -> DataFr
         F.desc("total_match_len"),
         F.asc("workflow_idx"),
     )
-    ranked = results.withColumn(
+    return results.withColumn(
         "rn", F.row_number().over(w)
     ).withColumn(
         "is_best", (F.col("rn") == 1) & F.col("error").isNull()
     ).drop("rn")
-    if keep_losers:
-        return ranked
-    return ranked.filter(F.col("is_best"))
 

@@ -12,7 +12,7 @@ but it is local to a group, so Spark shuffles each host's pages to one
 task and the Python kernel handles one host at a time.
 
 Skew note: a hot host (50% of the corpus) makes one group huge. The
-operator caps the evidence sample per host (``max_docs_per_group``):
+operator caps the evidence sample per host (``MAX_DOCS_PER_GROUP``):
 boilerplate frequencies converge after a few hundred documents, so the
 kernel decides from a bounded prefix and applies to all rows — group
 size stays unbounded only in the cheap apply phase, never in state.
@@ -42,48 +42,46 @@ CLEANED_SCHEMA = StructType(
     ]
 )
 
+MIN_FRAC = 0.8
+MIN_DOCS = 5
+MAX_DOCS_PER_GROUP = 500
+
 
 def _host_col():
     return F.regexp_extract("url", r"https?://([^/]+)/", 1)
 
 
-def _boilerplate_lines(texts, min_frac: float, min_docs: int):
-    """Lines present in >= min_frac of a host's docs (needs >= min_docs)."""
-    if len(texts) < min_docs:
+def _boilerplate_lines(texts):
+    """Lines present in >= MIN_FRAC of a host's docs (needs >= MIN_DOCS)."""
+    if len(texts) < MIN_DOCS:
         return set()
     counts: Counter = Counter()
     for t in texts:
         if isinstance(t, str):
             counts.update(set(t.split("\n")))
-    cutoff = max(min_frac * len(texts), 2)
+    cutoff = max(MIN_FRAC * len(texts), 2)
     return {line for line, c in counts.items() if c >= cutoff and line.strip()}
 
 
-def strip_host_boilerplate(
-    pages: DataFrame,
-    text_col: str = "text",
-    min_frac: float = 0.8,
-    min_docs: int = 5,
-    max_docs_per_group: int = 500,
-) -> DataFrame:
+def strip_host_boilerplate(pages: DataFrame) -> DataFrame:
     """(url, text) → per-host boilerplate-stripped text.
 
-    Lines occurring in >= ``min_frac`` of a host's documents (sampled up
-    to ``max_docs_per_group`` for the frequency estimate) are removed
-    from every document of that host. Hosts with < ``min_docs`` docs are
+    Lines occurring in >= ``MIN_FRAC`` of a host's documents (sampled up
+    to ``MAX_DOCS_PER_GROUP`` for the frequency estimate) are removed
+    from every document of that host. Hosts with < ``MIN_DOCS`` docs are
     passed through unchanged (not enough evidence).
     """
 
     def clean(pdf: pd.DataFrame) -> pd.DataFrame:
-        texts = pdf[text_col].tolist()
+        texts = pdf["text"].tolist()
         # Row order within an applyInPandas group is not deterministic
         # across runs/retries; sort by url before sampling so the evidence
         # prefix (and hence the stripped output) is byte-stable.
         sample = (
-            pdf.sort_values("url", kind="mergesort")[text_col]
-            .tolist()[:max_docs_per_group]
+            pdf.sort_values("url", kind="mergesort")["text"]
+            .tolist()[:MAX_DOCS_PER_GROUP]
         )
-        boiler = _boilerplate_lines(sample, min_frac, min_docs)
+        boiler = _boilerplate_lines(sample)
         out_texts = []
         for t in texts:
             if not isinstance(t, str) or not boiler:
@@ -101,8 +99,6 @@ def strip_host_boilerplate(
             }
         )
 
-    with_host = pages.select(
-        "url", F.col(text_col).alias(text_col), _host_col().alias("host")
-    )
+    with_host = pages.select("url", "text", _host_col().alias("host"))
     return with_host.groupBy("host").applyInPandas(clean, schema=CLEANED_SCHEMA)
 

@@ -16,9 +16,9 @@ smallest IRI: deterministic, partition-independent, explainable.
 
 Skew handling: hub aliases (one canonical node with 10^5 edges) make the
 propagation join skewed. AQE skew-join splitting is on by default
-(session.py); `salt_hubs` additionally splits hub neighborhoods into S
-sub-groups with a two-phase min-aggregation (partial min per salt, then
-final min), which keeps no single reducer owning a whole hub.
+(session.py), and the neighbor-min ``groupBy(u).agg(min(v))`` aggregates
+partially on the map side before its shuffle, so a hub's reducer gets one
+row per map task, not one per edge.
 """
 
 from __future__ import annotations
@@ -64,7 +64,6 @@ def _driver_union_find(pairs) -> list:
 def connected_components(
     edges: DataFrame,
     max_iter: int = 25,
-    salt_hubs: int = 0,
     small_graph_threshold: int = 2_000_000,
 ) -> DataFrame:
     """edges(src,dst) → components(node, component).
@@ -97,13 +96,7 @@ def connected_components(
     sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
     sym = sym.repartition("u").persist()
 
-    if salt_hubs and salt_hubs > 1:
-        # Two-phase min: partial min per (u, salt-of-v), then min per u.
-        salted = sym.withColumn("s", F.pmod(F.xxhash64("v"), F.lit(salt_hubs)))
-        partial = salted.groupBy("u", "s").agg(F.min("v").alias("pv"))
-        nbr_min = partial.groupBy("u").agg(F.min("pv").alias("mn"))
-    else:
-        nbr_min = sym.groupBy("u").agg(F.min("v").alias("mn"))
+    nbr_min = sym.groupBy("u").agg(F.min("v").alias("mn"))
 
     # localCheckpoint each round: materializes the labels AND truncates the
     # iterative lineage (otherwise every round re-plans the whole history —

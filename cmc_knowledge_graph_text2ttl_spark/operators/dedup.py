@@ -81,18 +81,16 @@ def word_shingles(
     text_col: str,
     id_col: str,
     n: int = 13,
-    lowercase: bool = True,
 ) -> DataFrame:
     """(id, shingle) — distinct word ``n``-grams per document.
 
-    GPT-3/Pile-style decontamination units: tokens are ``\\W+`` splits
-    (lowercased by default), shingles are n-token windows joined by a
-    single space. Pure higher-order-function columns (split / filter /
+    GPT-3/Pile-style decontamination units: tokens are lowercased
+    ``\\W+`` splits, shingles are n-token windows joined by a single
+    space. Pure higher-order-function columns (split / filter /
     sequence / transform / slice / array_join) — stays in codegen, and
     ``array_distinct`` before the explode keeps per-doc dedup in-row.
     """
-    txt = F.lower(F.col(text_col)) if lowercase else F.col(text_col)
-    toks = F.filter(F.split(txt, r"\W+"), lambda t: t != F.lit(""))
+    toks = F.filter(F.split(F.lower(F.col(text_col)), r"\W+"), lambda t: t != F.lit(""))
     base = df.select(F.col(id_col).alias("id"), toks.alias("toks"))
     pos = _positions(F.size("toks") - n + 1)
     sh = F.explode(
@@ -103,13 +101,9 @@ def word_shingles(
     return base.select("id", sh.alias("shingle"))
 
 
-def exact_duplicates(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_ids: int = 1000,
-) -> DataFrame:
-    """Exact dedup groups: (content_hash, n_docs, keep_id, doc_ids).
+def exact_duplicates(df: DataFrame, max_ids: int = 1000) -> DataFrame:
+    """Exact dedup groups of (doc_id, text): (content_hash, n_docs, keep_id,
+    doc_ids).
 
     keep_id = min id per group (deterministic survivor). Only groups with
     more than one member are duplicates; singletons are kept for the
@@ -128,7 +122,7 @@ def exact_duplicates(
 
     w = Window.partitionBy("content_hash")
     ranked = df.select(
-        F.col(id_col).alias("id"), F.md5(F.col(text_col)).alias("content_hash")
+        F.col("doc_id").alias("id"), F.md5(F.col("text")).alias("content_hash")
     ).select(
         "id",
         "content_hash",
@@ -146,14 +140,9 @@ def exact_duplicates(
     )
 
 
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 5,
-    threshold: float = 0.8,
-) -> DataFrame:
-    """All pairs (id_a < id_b) with shingle-set Jaccard >= threshold.
+def ngram_jaccard_pairs(df: DataFrame, n: int = 5, threshold: float = 0.8) -> DataFrame:
+    """All pairs of (doc_id, text) rows (id_a < id_b) with shingle-set
+    Jaccard >= threshold.
 
     Exact (no approximation): shingle equijoin computes |A∩B| per pair,
     per-doc distinct counts give |A|,|B|.
@@ -165,7 +154,7 @@ def ngram_jaccard_pairs(
     path is minhash_lsh_pairs (candidates only, verification restricted
     to candidate ids).
     """
-    sh = shingles(df, text_col, id_col, n).persist()
+    sh = shingles(df, "text", "doc_id", n).persist()
     sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("sz"))
     inter = (
         sh.alias("a")
@@ -187,20 +176,15 @@ def ngram_jaccard_pairs(
     return out
 
 
-def minhash_signatures(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_hashes: int = 16,
-    shingle_n: int = 5,
-) -> DataFrame:
-    """(id, h0..h{k-1}) minhash signature via ONE grouped aggregation.
+def minhash_signatures(df: DataFrame, n_hashes: int = 16, shingle_n: int = 5) -> DataFrame:
+    """(id, h0..h{k-1}) minhash signature of (doc_id, text) rows via ONE
+    grouped aggregation.
 
     The k min() aggregates are map-side combinable: each partition reduces
     its shingles locally before the single shuffle on id.
     """
     assert n_hashes <= MINHASH_MAX_HASHES
-    sh = shingles(df, text_col, id_col, shingle_n)
+    sh = shingles(df, "text", "doc_id", shingle_n)
     # project the md5 ONCE per shingle — as an agg-function input it would
     # be re-evaluated per hash function (n_hashes x md5 per shingle)
     hx = sh.select("id", md5_int(F.col("shingle")).alias("x"))
@@ -213,8 +197,6 @@ def minhash_signatures(
 
 def minhash_lsh_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     n_hashes: int = 16,
     bands: int = 4,
     shingle_n: int = 5,
@@ -223,7 +205,8 @@ def minhash_lsh_pairs(
     max_bucket: int = 10_000,
     broadcast_max_docs: int = 200_000,
 ) -> DataFrame:
-    """Near-duplicate pairs via MinHash banding, optionally exact-verified.
+    """Near-duplicate pairs of (doc_id, text) rows via MinHash banding,
+    optionally exact-verified.
 
     rows_per_band = n_hashes // bands; two docs become candidates iff one
     band of their signatures is identical. Buckets larger than
@@ -242,7 +225,7 @@ def minhash_lsh_pairs(
     # The shingle explode feeds ONLY the signature aggregation (the
     # verify phase below works on per-doc shingle-set arrays, never the
     # exploded multiset) — one streaming pass, nothing persisted.
-    sh = shingles(df, text_col, id_col, shingle_n)
+    sh = shingles(df, "text", "doc_id", shingle_n)
     hx = sh.select("id", md5_int(F.col("shingle")).alias("x"))
     sig = hx.groupBy("id").agg(
         *[
@@ -306,12 +289,12 @@ def minhash_lsh_pairs(
     # joins beyond that — same rows out of either plan.
     n_cand_docs = cand_ids.count()
     bcast = F.broadcast if n_cand_docs <= broadcast_max_docs else (lambda d: d)
-    pos = _positions(F.length(text_col) - shingle_n + 1)
+    pos = _positions(F.length("text") - shingle_n + 1)
     shset = F.array_distinct(
-        F.transform(pos, lambda i: F.col(text_col).substr(i, F.lit(shingle_n)))
+        F.transform(pos, lambda i: F.col("text").substr(i, F.lit(shingle_n)))
     )
     arrs = (
-        df.select(F.col(id_col).alias("id"), shset.alias("shset"))
+        df.select(F.col("doc_id").alias("id"), shset.alias("shset"))
         .join(bcast(cand_ids), "id")
         .select("id", "shset", F.size("shset").alias("sz"))
     )
@@ -363,16 +346,10 @@ def minhash_lsh_pairs(
     return out
 
 
-def verbatim_overlap_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 50,
-    max_gram_docs: int = 1000,
-) -> DataFrame:
-    """(id_a, id_b, n_shared) — document pairs sharing at least one
-    VERBATIM ``n``-word passage, with the count of shared distinct
-    passages. The cross-document exact-substring dedup step (the
+def verbatim_overlap_pairs(df: DataFrame, n: int = 50, max_gram_docs: int = 1000) -> DataFrame:
+    """(id_a, id_b, n_shared) — (doc_id, text) document pairs sharing at
+    least one VERBATIM ``n``-word passage, with the count of shared
+    distinct passages. The cross-document exact-substring dedup step (the
     "50-token verbatim overlap" filter training pipelines run after
     fuzzy dedup): at n=50 a shared gram is essentially proof of copying.
 
@@ -383,7 +360,7 @@ def verbatim_overlap_pairs(
     self-equijoin on the digest → count per pair. Join fan-out is
     quadratic only within one gram's doc set, which the cap bounds.
     """
-    sh = word_shingles(df, text_col, id_col, n).select(
+    sh = word_shingles(df, "text", "doc_id", n).select(
         "id", F.md5(F.col("shingle")).alias("g")
     )
     freq = sh.groupBy("g").agg(F.count(F.lit(1)).alias("n_docs"))
@@ -397,24 +374,16 @@ def verbatim_overlap_pairs(
     )
 
 
-def near_duplicate_clusters(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    method: str = "minhash",
-    small_graph_threshold: int = 2_000_000,
-    salt_hubs: int = 16,
-    **pair_kwargs,
-) -> DataFrame:
+def near_duplicate_clusters(df: DataFrame, method: str = "minhash", **pair_kwargs) -> DataFrame:
     """(id, cluster_id, n_cluster, is_survivor) — resolve near-duplicate
-    PAIRS into clusters and pick one survivor per cluster: the step every
-    real pipeline runs after pair generation.
+    PAIRS of (doc_id, text) rows into clusters and pick one survivor per
+    cluster: the step every real pipeline runs after pair generation.
 
     Pairs come from :func:`minhash_lsh_pairs` (default) or
     :func:`simhash_near_pairs` (``method='simhash'``); extra kwargs pass
     through. Pairs feed :func:`~.canonicalize.connected_components`
-    (salted distributed min-label loop above ``small_graph_threshold``
-    edges, driver union-find below), so transitive chains A~B~C collapse
+    (driver union-find up to its default threshold of edges, the
+    distributed min-label loop above), so transitive chains A~B~C collapse
     into one cluster even when (A, C) itself was never a candidate pair.
 
     ``cluster_id`` is the component label = lexicographically smallest
@@ -429,9 +398,9 @@ def near_duplicate_clusters(
     one window over cluster_id.
     """
     if method == "minhash":
-        pairs = minhash_lsh_pairs(df, text_col, id_col, **pair_kwargs)
+        pairs = minhash_lsh_pairs(df, **pair_kwargs)
     elif method == "simhash":
-        pairs = simhash_near_pairs(df, text_col, id_col, **pair_kwargs)
+        pairs = simhash_near_pairs(df, **pair_kwargs)
     else:
         raise ValueError(f"method must be 'minhash' or 'simhash', got {method!r}")
     from pyspark.sql import Window
@@ -442,12 +411,8 @@ def near_duplicate_clusters(
         F.col("id_a").cast("string").alias("src"),
         F.col("id_b").cast("string").alias("dst"),
     )
-    comp = connected_components(
-        edges,
-        small_graph_threshold=small_graph_threshold,
-        salt_hubs=salt_hubs,
-    )
-    ids = df.select(F.col(id_col).cast("string").alias("id"))
+    comp = connected_components(edges)
+    ids = df.select(F.col("doc_id").cast("string").alias("id"))
     lab = (
         ids.join(comp, ids["id"] == comp["node"], "left")
         .select("id", F.coalesce("component", "id").alias("cluster_id"))
@@ -464,15 +429,13 @@ def near_duplicate_clusters(
 def decontaminate(
     df: DataFrame,
     benchmark: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     bench_text_col: str = "text",
     n: int = 13,
     unit: str = "word",
 ) -> DataFrame:
     """(id, contaminated) — GPT-3/Pile-style test-set decontamination:
-    a training document is contaminated iff it shares at least one
-    ``n``-gram with ANY benchmark document.
+    a training document (doc_id, text) is contaminated iff it shares at
+    least one ``n``-gram with ANY benchmark document.
 
     ``unit='word'`` (default) matches the published GPT-3/Pile recipe:
     13 lowercase word-grams. ``unit='char'`` is the character-gram
@@ -492,7 +455,7 @@ def decontaminate(
     if unit not in ("word", "char"):
         raise ValueError(f"unit must be 'word' or 'char', got {unit!r}")
     mk = word_shingles if unit == "word" else shingles
-    corpus_sh = mk(df, text_col, id_col, n)
+    corpus_sh = mk(df, "text", "doc_id", n)
     bench_sh = (
         mk(
             benchmark.select(F.lit(0).alias("__bench_id"), F.col(bench_text_col)),
@@ -504,27 +467,23 @@ def decontaminate(
         .distinct()
     )
     hits = corpus_sh.join(bench_sh, "shingle", "left_semi").select("id").distinct()
-    ids = df.select(F.col(id_col).alias("id"))
+    ids = df.select(F.col("doc_id").alias("id"))
     return ids.join(
         hits.withColumn("contaminated", F.lit(True)), "id", "left"
     ).select("id", F.coalesce("contaminated", F.lit(False)).alias("contaminated"))
 
 
-def simhash(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    bits: int = 32,
-) -> DataFrame:
-    """(id, simhash) — token-level SimHash fingerprint, bigint.
+def simhash(df: DataFrame, bits: int = 32) -> DataFrame:
+    """(id, simhash) — token-level SimHash fingerprint of (doc_id, text)
+    rows, bigint.
 
     Tokens = lowercase word splits. For each bit position, sum +1/-1 over
     tokens by that bit of md5(token); the sign gives the fingerprint bit.
     One explode + one grouped agg with `bits` sums (map-side combinable).
     """
     toks = df.select(
-        F.col(id_col).alias("id"),
-        F.explode(F.split(F.lower(F.col(text_col)), r"\W+")).alias("tok"),
+        F.col("doc_id").alias("id"),
+        F.explode(F.split(F.lower(F.col("text")), r"\W+")).alias("tok"),
     ).filter(F.col("tok") != "")
     hx = toks.select("id", md5_int(F.col("tok")).alias("h"))
     sums = hx.groupBy("id").agg(
@@ -546,18 +505,17 @@ def simhash(
 
 def simhash_near_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     bits: int = 32,
     max_hamming: int = 3,
     chunks: int = 4,
 ) -> DataFrame:
-    """Pairs with Hamming(simhash) <= max_hamming via the chunk pigeonhole:
+    """Pairs of (doc_id, text) rows with Hamming(simhash) <= max_hamming
+    via the chunk pigeonhole:
     if two fingerprints differ in <= max_hamming bits and we split into
     `chunks` > max_hamming chunks, at least one chunk is identical —
     bucket-join on each chunk, then exact popcount verify."""
     assert chunks > max_hamming
-    fps = simhash(df, text_col, id_col, bits)
+    fps = simhash(df, bits)
     width = bits // chunks
     mask = (1 << width) - 1
     chunk_rows = fps.select(
@@ -609,13 +567,11 @@ def hyperplane_weights(n_planes: int, dim: int) -> List[List[float]]:
 
 def embedding_near_dup_pairs(
     emb: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     threshold: float = 0.95,
     n_planes: int = 8,
     dim: Optional[int] = None,
 ) -> DataFrame:
-    """Near-duplicate vectors by cosine >= threshold.
+    """Near-duplicate (vec_id, embedding) vectors by cosine >= threshold.
 
     Scale path: random-hyperplane LSH — the sign pattern of `n_planes`
     deterministic projections buckets the vectors; only in-bucket pairs
@@ -625,13 +581,13 @@ def embedding_near_dup_pairs(
     shuffle rows x dims and sum in nondeterministic order.
     """
     if dim is None:
-        dim = emb.select(F.size(vec_col).alias("d")).first().d
+        dim = emb.select(F.size("embedding").alias("d")).first().d
     weights = hyperplane_weights(n_planes, dim)
 
     def proj(p: int):
         w_arr = F.array(*[F.lit(w) for w in weights[p]])
         return F.aggregate(
-            F.zip_with(F.col(vec_col), w_arr, lambda x, w: x.cast("double") * w),
+            F.zip_with(F.col("embedding"), w_arr, lambda x, w: x.cast("double") * w),
             F.lit(0.0),
             lambda acc, v: acc + v,
         )
@@ -650,12 +606,12 @@ def embedding_near_dup_pairs(
     # semdedup's: few hot sign-pattern buckets would otherwise pin the
     # quadratic work to a handful of reduce tasks.
     prep = emb.select(
-        F.col(id_col).alias("id"),
+        F.col("vec_id").alias("id"),
         bucket.alias("bucket"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("vd"),
+        F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("vd"),
         F.sqrt(
             F.aggregate(
-                F.col(vec_col),
+                F.col("embedding"),
                 F.lit(0.0),
                 lambda acc, x: acc + x.cast("double") * x.cast("double"),
             )
@@ -697,15 +653,12 @@ def semdedup(
     n_cells: int = 8,
     threshold: float = 0.5,
     quantize: int = 1_000_000,
-    sim_scale: int = 10_000,
     max_cluster: Optional[int] = 10_000,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    centroids: Optional[DataFrame] = None,
 ) -> DataFrame:
     """(id, cell_id, group_id, n_group, centroid_sim_scaled, is_kept) —
     SemDeDup (Abbas et al. 2023, arXiv:2303.09540): cluster-scoped
-    SEMANTIC deduplication over an embedding column.
+    SEMANTIC deduplication over the ``embedding`` column of (vec_id,
+    embedding) rows.
 
     Vectors are k-means-clustered (md5-seeded centroids + one quantized
     Lloyd step, shared with the IVF index build in
@@ -718,7 +671,7 @@ def semdedup(
     diversity), ties broken by id. Rows with no duplicate pair are
     singleton keeps.
 
-    Determinism: the keep rule orders on ``floor(sim_scale * cosine)``
+    Determinism: the keep rule orders on ``floor(10000 * cosine)``
     (an integer) then the stringified id, so the survivor choice is
     partition-independent and engine-portable (the DuckDB oracle
     replays the identical centroid build and rule).
@@ -738,21 +691,18 @@ def semdedup(
     from .canonicalize import connected_components
     from .similarity import _dot, _norm, assign_cells, make_centroids
 
-    if centroids is None:
-        centroids = make_centroids(
-            emb, n_cells, vec_col, id_col, quantize=quantize
-        )
-    assigned = assign_cells(emb, centroids, vec_col, id_col)
+    centroids = make_centroids(emb, n_cells, quantize=quantize)
+    assigned = assign_cells(emb, centroids)
     withsim = (
         assigned.join(F.broadcast(centroids), "cell_id")
         .select(
-            F.col(id_col).cast("string").alias("id"),
+            F.col("vec_id").cast("string").alias("id"),
             "cell_id",
-            F.col(vec_col).alias("v"),
+            F.col("embedding").alias("v"),
             F.floor(
-                F.lit(float(sim_scale))
-                * _dot(F.col(vec_col), F.col("centroid"))
-                / (_norm(F.col(vec_col)) * _norm(F.col("centroid")))
+                F.lit(10_000.0)
+                * _dot(F.col("embedding"), F.col("centroid"))
+                / (_norm(F.col("embedding")) * _norm(F.col("centroid")))
             )
             .cast("bigint")
             .alias("centroid_sim_scaled"),

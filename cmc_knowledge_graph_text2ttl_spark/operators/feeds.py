@@ -47,18 +47,17 @@ def _elements(xml, pattern: str, kind: str, link_re: str, date_re: str):
     )
 
 
-def parse_feeds(
-    df: DataFrame, xml_col: str = "feed_xml", src_col: str = "feed_url"
-) -> DataFrame:
-    """(src, kind, title, link, published) per feed item — ``kind`` is
-    ``rss`` for ``<item>`` elements, ``atom`` for ``<entry>``."""
-    xml = html_string(df, xml_col)
+def parse_feeds(df: DataFrame) -> DataFrame:
+    """(src, kind, title, link, published) per feed item of (feed_url,
+    feed_xml) rows — ``kind`` is ``rss`` for ``<item>`` elements, ``atom``
+    for ``<entry>``."""
+    xml = html_string(df, "feed_xml")
     both = F.concat(
         _elements(xml, _ITEM, "rss", _RSS_LINK, _RSS_DATE),
         _elements(xml, _ENTRY, "atom", _ATOM_LINK, _ATOM_DATE),
     )
     return (
-        df.select(F.col(src_col).alias("src"), F.explode(both).alias("e"))
+        df.select(F.col("feed_url").alias("src"), F.explode(both).alias("e"))
         .select(
             "src",
             F.col("e.kind").alias("kind"),

@@ -126,11 +126,6 @@ def c4_gopher_rules(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    min_words: int = 20,
-    max_words: int = 100_000,
-    min_sentences: int = 3,
-    min_mean_word_len: int = 3,
-    max_mean_word_len: int = 10,
 ) -> DataFrame:
     """(id, n_words, n_sentences, mean_word_len_x100, keep, reasons) —
     the published C4 + Gopher document-level heuristics as pure column
@@ -138,9 +133,8 @@ def c4_gopher_rules(
 
     * C4: drop documents containing ``{`` (code), the phrase
       "lorem ipsum", or "enable javascript" boilerplate; require at
-      least ``min_sentences`` terminal-punctuation marks;
-    * Gopher: word count in [min_words, max_words]; mean word length
-      in [min_mean_word_len, max_mean_word_len].
+      least 3 terminal-punctuation marks;
+    * Gopher: word count in [20, 100000]; mean word length in [3, 10].
 
     ``mean_word_len_x100`` is the floor-scaled integer (total
     non-space chars * 100 // words) — the partition-independent form
@@ -161,13 +155,11 @@ def c4_gopher_rules(
             F.when(F.col(text_col).contains("{"), F.lit("curly_brace")),
             F.when(lower.contains("lorem ipsum"), F.lit("lorem_ipsum")),
             F.when(lower.contains("enable javascript"), F.lit("javascript")),
-            F.when(n_sent < min_sentences, F.lit("too_few_sentences")),
-            F.when(n_words < min_words, F.lit("too_short")),
-            F.when(n_words > max_words, F.lit("too_long")),
-            F.when(
-                mwl100 < min_mean_word_len * 100, F.lit("short_words")
-            ),
-            F.when(mwl100 > max_mean_word_len * 100, F.lit("long_words")),
+            F.when(n_sent < 3, F.lit("too_few_sentences")),
+            F.when(n_words < 20, F.lit("too_short")),
+            F.when(n_words > 100_000, F.lit("too_long")),
+            F.when(mwl100 < 300, F.lit("short_words")),
+            F.when(mwl100 > 1000, F.lit("long_words")),
         )
     )
     return docs.select(

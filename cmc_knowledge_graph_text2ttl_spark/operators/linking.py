@@ -62,10 +62,9 @@ def link_exact(
 def link_patterns(
     df: DataFrame,
     patterns: List[Tuple[str, str]],
-    mention_col: str = "mention",
-    out_col: str = "canonical_iri",
 ) -> DataFrame:
-    """Ordered regex-pair linking as a first-match-wins coalesce cascade.
+    """Ordered regex-pair linking of ``mention`` as a first-match-wins
+    coalesce cascade into ``canonical_iri`` (an existing non-null value wins).
 
     Each pair (regex, iri_template) matches anchored like the reference's
     ``re.match`` (processor.py:2097); ``$1``-style group refs in the
@@ -73,29 +72,31 @@ def link_patterns(
     cascade compiles into one whole-stage-codegen projection.
     """
     cases = []
-    m = F.col(mention_col)
+    m = F.col("mention")
     for pattern, template in patterns:
         anchored = pattern if pattern.startswith("^") else "^" + pattern
         hit = m.rlike(anchored)
         replaced = F.regexp_replace(m, anchored + "(?s:.*)$", template)
         cases.append(F.when(hit, replaced))
-    existing = F.col(out_col) if out_col in df.columns else F.lit(None).cast("string")
-    return df.withColumn(out_col, F.coalesce(existing, *cases))
+    existing = (
+        F.col("canonical_iri") if "canonical_iri" in df.columns else F.lit(None).cast("string")
+    )
+    return df.withColumn("canonical_iri", F.coalesce(existing, *cases))
 
 
 def link_mentions(
     mentions: DataFrame,
     dictionary: List[Tuple[str, str]],
     patterns: Optional[List[Tuple[str, str]]] = None,
-    mention_col: str = "mention",
     ignore_case: bool = True,
 ) -> DataFrame:
-    """Full linking: exact broadcast join first, regex cascade on misses,
-    identity (null canonical) otherwise — the reference's mapping
-    application order (processor.py:2067-2104) as a distributed plan."""
-    out = link_exact(mentions, dictionary, mention_col, ignore_case)
+    """Full linking of the ``mention`` column: exact broadcast join first,
+    regex cascade on misses, identity (null canonical) otherwise — the
+    reference's mapping application order (processor.py:2067-2104) as a
+    distributed plan."""
+    out = link_exact(mentions, dictionary, ignore_case=ignore_case)
     if patterns:
-        out = link_patterns(out, patterns, mention_col)
+        out = link_patterns(out, patterns)
     return out.withColumn("linked", F.col("canonical_iri").isNotNull())
 
 
@@ -103,19 +104,15 @@ def embedding_link(
     docs: DataFrame,
     entities: DataFrame,
     dim: int = 32,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    entity_text_col: str = "name",
-    entity_id_col: str = "entity_id",
     threshold: Optional[float] = None,
 ) -> DataFrame:
     """(id, entity_id, cosine) — EMBEDDING-tier entity linking: each
-    document links to the entity whose feature-hash embedding
-    (traindata.embed_documents — md5 buckets, ±tf signs, all-integer)
-    is most cosine-similar to the document's. The complement of the
-    dictionary tier (link_exact / link_patterns): surface-form misses
-    still land on the right entity when the surrounding vocabulary
-    overlaps.
+    (doc_id, text) document links to the (entity_id, name) entity whose
+    feature-hash embedding (traindata.embed_documents — md5 buckets, ±tf
+    signs, all-integer) is most cosine-similar to the document's. The
+    complement of the dictionary tier (link_exact / link_patterns):
+    surface-form misses still land on the right entity when the
+    surrounding vocabulary overlaps.
 
     Entity ids must be numeric: the top-1 per document is a map-side
     MAX over struct(cosine, -entity_id) — the same no-window trick as
@@ -133,8 +130,8 @@ def embedding_link(
     """
     from .traindata import embed_documents
 
-    de = embed_documents(docs, text_col, id_col, dim)
-    ee = embed_documents(entities, entity_text_col, entity_id_col, dim)
+    de = embed_documents(docs, "text", "doc_id", dim)
+    ee = embed_documents(entities, "name", "entity_id", dim)
 
     def norm(a):
         return F.sqrt(

@@ -135,13 +135,11 @@ def anchor_summaries(links: DataFrame, k: int = 3) -> DataFrame:
 
 def pagerank(
     edges: DataFrame,
-    src_col: str = "src",
-    dst_col: str = "dst",
     iterations: int = 10,
     scale: int = 1_000_000,
     damping_pct: int = 85,
 ) -> DataFrame:
-    """Integer-scaled PageRank over an edge list → (node, rank).
+    """Integer-scaled PageRank over an edge list (src, dst) → (node, rank).
 
     rank₀ = ``scale`` for every node; each iteration
     ``rank'(v) = ((100 - damping_pct) * scale) div 100 +
@@ -162,8 +160,7 @@ def pagerank(
         raise ValueError("iterations must be >= 1")
     if not 0 <= damping_pct <= 100:
         raise ValueError("damping_pct must be in [0, 100]")
-    src, dst = F.col(src_col), F.col(dst_col)
-    e = edges.select(src.alias("src"), dst.alias("dst"))
+    e = edges.select("src", "dst")
     # nodes is re-read in EVERY iteration's left join — checkpoint it
     # too, or each of the 10 rank plans re-runs the union+distinct
     # shuffle over the full edge list
@@ -205,15 +202,14 @@ def hits(
     src_col: str = "src",
     dst_col: str = "dst",
     iterations: int = 5,
-    scale: int = 1_000_000,
 ) -> DataFrame:
     """Integer-scaled HITS (Kleinberg 1999) → (node, hub, authority) —
     the second link-analysis operator beside :func:`pagerank`, for
     crawl prioritization where hub quality matters (directories, link
     farms) separately from authority.
 
-    hub₀ = ``scale`` for every node; each iteration runs the two
-    standard half-steps with MAX-normalization in pure integer
+    With scale = 10⁶, hub₀ = scale for every node; each iteration runs
+    the two standard half-steps with MAX-normalization in pure integer
     arithmetic (an L2 norm would need cross-engine sqrt rounding):
 
         auth(v) = Σ_{u→v} hub(u);  auth ← auth div max(1, max(auth) div scale)
@@ -253,7 +249,7 @@ def hits(
         denom = raw.agg(
             F.greatest(
                 F.lit(1).cast("bigint"),
-                F.expr(f"max(raw) div {scale}"),
+                F.expr("max(raw) div 1000000"),
             ).alias("d")
         )
         return (
@@ -267,7 +263,7 @@ def hits(
             .select("node", F.coalesce("s", F.lit(0)).cast("bigint").alias("s"))
         )
 
-    hubs = nodes.withColumn("s", F.lit(scale).cast("bigint"))
+    hubs = nodes.withColumn("s", F.lit(1_000_000).cast("bigint"))
     auth = None
     for _ in range(iterations):
         auth = half_step(hubs, "src", "dst").localCheckpoint(eager=True)
@@ -279,13 +275,9 @@ def hits(
     )
 
 
-def host_graph(
-    edges: DataFrame,
-    src_col: str = "src",
-    dst_col: str = "dst",
-) -> DataFrame:
+def host_graph(edges: DataFrame) -> DataFrame:
     """(src_host, dst_host, n_links, n_src_pages, is_internal) — the
-    page-level link graph collapsed to host level: the domain graph
+    page-level (src, dst) link graph collapsed to host level: the domain graph
     used for host authority (PageRank/HITS over it), spam-farm
     detection (high internal/external ratios) and crawl budgeting.
 
@@ -302,13 +294,11 @@ def host_graph(
     """
     from .urls import host_col
 
-    sh = host_col(F.col(src_col))
-    dh = host_col(F.col(dst_col))
     return (
         edges.select(
-            sh.alias("src_host"),
-            dh.alias("dst_host"),
-            F.col(src_col).alias("_src"),
+            host_col(F.col("src")).alias("src_host"),
+            host_col(F.col("dst")).alias("dst_host"),
+            F.col("src").alias("_src"),
         )
         .groupBy("src_host", "dst_host")
         .agg(

@@ -284,19 +284,15 @@ EXIF_SCHEMA = StructType(
 )
 
 
-def image_exif(
-    df: DataFrame, blob_col: str = "blob", id_col: str = "media_id"
-) -> DataFrame:
-    """binary column → EXIF metadata table (header-only, no decode) —
-    the orientation/provenance signals an image-dedup or curation
+def image_exif(df: DataFrame) -> DataFrame:
+    """(media_id, blob) → EXIF metadata table (header-only, no decode)
+    — the orientation/provenance signals an image-dedup or curation
     pipeline keys on. Bytes-local like media_metadata; rows without
     EXIF yield all-null fields."""
-    return _header_facts(df, blob_col, id_col, EXIF_SCHEMA, parse_exif)
+    return _header_facts(df, EXIF_SCHEMA, parse_exif)
 
 
-def _header_facts(
-    df: DataFrame, blob_col: str, id_col: str, schema: StructType, parse: Callable
-) -> DataFrame:
+def _header_facts(df: DataFrame, schema: StructType, parse: Callable) -> DataFrame:
     """One row per blob: media_id, then ``parse(blob)``'s value for each
     other field of ``schema`` (null when absent or when the blob is null)."""
     keys = schema.fieldNames()[1:]
@@ -305,7 +301,7 @@ def _header_facts(
         facts = parse(bytes(raw)) if raw is not None else {}
         yield (str(mid),) + tuple(facts.get(k) for k in keys)
 
-    return map_rows(df.select(id_col, blob_col), schema, lambda: row_fn)
+    return map_rows(df.select("media_id", "blob"), schema, lambda: row_fn)
 
 
 _TIFF_TYPE_SIZE = {1: 1, 2: 1, 3: 2, 4: 4, 5: 8, 6: 1, 7: 1, 8: 2,
@@ -405,9 +401,7 @@ def strip_gps_tiff(tiff: bytes) -> Tuple[bytes, bool]:
         raise ValueError(f"corrupt TIFF during GPS strip: {ex}") from ex
 
 
-def scrub_exif_gps(
-    df: DataFrame, blob_col: str = "blob", id_col: str = "media_id"
-) -> DataFrame:
+def scrub_exif_gps(df: DataFrame) -> DataFrame:
     """(media_id, blob, had_gps) — media-side PII pass: GPS location
     data is stripped from every JPEG's EXIF (the camera-default leak a
     crawled image corpus republishes); all other EXIF tags, the image
@@ -460,7 +454,7 @@ def scrub_exif_gps(
         yield (str(mid), out, had)
 
     return map_rows(
-        df.select(id_col, blob_col),
+        df.select("media_id", "blob"),
         "media_id string, blob binary, had_gps boolean",
         lambda: row_fn,
     )
@@ -489,10 +483,8 @@ def _tiff_dims(data: bytes) -> tuple:
         return (None, None)
 
 
-def media_metadata(
-    df: DataFrame, blob_col: str = "blob", id_col: str = "media_id"
-) -> DataFrame:
-    """binary column → typed metadata table (no decode, bytes-local)."""
+def media_metadata(df: DataFrame) -> DataFrame:
+    """(media_id, blob) → typed metadata table (no decode, bytes-local)."""
 
     def row_fn(mid, raw):
         data = bytes(raw) if raw is not None else None
@@ -509,7 +501,7 @@ def media_metadata(
         )
 
     return map_rows(
-        df.select(id_col, blob_col), MEDIA_META_SCHEMA, lambda: row_fn
+        df.select("media_id", "blob"), MEDIA_META_SCHEMA, lambda: row_fn
     )
 
 
@@ -1592,8 +1584,6 @@ def decode_webp_anim_frames(
 def sample_frames(
     df: DataFrame,
     n_frames: int = 4,
-    blob_col: str = "blob",
-    id_col: str = "media_id",
     decoder: Optional[Callable] = None,
 ) -> DataFrame:
     """Evenly-spaced frame sampling — the frame-sample primitive a
@@ -1647,7 +1637,7 @@ def sample_frames(
                 s = sum(px[c::3])
                 yield (str(mid), fi, total, sw, sh, c, s / n_px if n_px else 0.0)
 
-    return map_rows(df.select(id_col, blob_col), FRAME_SCHEMA, lambda: row_fn)
+    return map_rows(df.select("media_id", "blob"), FRAME_SCHEMA, lambda: row_fn)
 
 
 def _gif_interlace_order(height: int) -> List[int]:
@@ -2106,12 +2096,10 @@ AUDIO_INFO_SCHEMA = StructType(
 )
 
 
-def audio_info(
-    df: DataFrame, blob_col: str = "blob", id_col: str = "media_id"
-) -> DataFrame:
-    """binary column → header-only MP3 facts (:func:`mp3_info`) —
+def audio_info(df: DataFrame) -> DataFrame:
+    """(media_id, blob) → header-only MP3 facts (:func:`mp3_info`) —
     bytes-local, no decode; non-MP3 rows yield all-null fields."""
-    return _header_facts(df, blob_col, id_col, AUDIO_INFO_SCHEMA, mp3_info)
+    return _header_facts(df, AUDIO_INFO_SCHEMA, mp3_info)
 
 
 VIDEO_INFO_SCHEMA = StructType(
@@ -2126,12 +2114,10 @@ VIDEO_INFO_SCHEMA = StructType(
 )
 
 
-def video_info(
-    df: DataFrame, blob_col: str = "blob", id_col: str = "media_id"
-) -> DataFrame:
-    """binary column → header-only MP4 facts (:func:`mp4_info`) —
+def video_info(df: DataFrame) -> DataFrame:
+    """(media_id, blob) → header-only MP4 facts (:func:`mp4_info`) —
     bytes-local, no decode; non-MP4 rows yield all-null fields."""
-    return _header_facts(df, blob_col, id_col, VIDEO_INFO_SCHEMA, mp4_info)
+    return _header_facts(df, VIDEO_INFO_SCHEMA, mp4_info)
 
 
 AUDIO_TAGS_SCHEMA = StructType(
@@ -2145,12 +2131,10 @@ AUDIO_TAGS_SCHEMA = StructType(
 )
 
 
-def audio_tags(
-    df: DataFrame, blob_col: str = "blob", id_col: str = "media_id"
-) -> DataFrame:
-    """binary column → ID3v2 text-frame provenance (:func:`id3_tags`);
+def audio_tags(df: DataFrame) -> DataFrame:
+    """(media_id, blob) → ID3v2 text-frame provenance (:func:`id3_tags`);
     untagged rows yield all-null fields."""
-    return _header_facts(df, blob_col, id_col, AUDIO_TAGS_SCHEMA, id3_tags)
+    return _header_facts(df, AUDIO_TAGS_SCHEMA, id3_tags)
 
 
 AUDIO_FEATURE_SCHEMA = StructType(
@@ -2168,9 +2152,7 @@ AUDIO_FEATURE_SCHEMA = StructType(
 )
 
 
-def audio_features(
-    df: DataFrame, blob_col: str = "blob", id_col: str = "media_id"
-) -> DataFrame:
+def audio_features(df: DataFrame) -> DataFrame:
     """Audio decode + feature stage: per-row WAV or FLAC decode (REAL,
     pure stdlib — :func:`decode_audio`) → integer acoustics over
     channel 0 — duration_ms (n*1000 div rate), mean absolute amplitude
@@ -2200,7 +2182,7 @@ def audio_features(
         yield row
 
     return map_rows(
-        df.select(id_col, blob_col), AUDIO_FEATURE_SCHEMA, lambda: row_fn
+        df.select("media_id", "blob"), AUDIO_FEATURE_SCHEMA, lambda: row_fn
     )
 
 
@@ -2213,12 +2195,7 @@ def _png_chunk(tag: bytes, body: bytes) -> bytes:
     )
 
 
-def extract_features(
-    df: DataFrame,
-    blob_col: str = "blob",
-    id_col: str = "media_id",
-    decoder: Optional[Callable] = None,
-) -> DataFrame:
+def extract_features(df: DataFrame, decoder: Optional[Callable] = None) -> DataFrame:
     """Decode + feature-extract stage (long format: one row per feature).
 
     `decoder(data: bytes) -> list[(feature, value)]`. The default decoder
@@ -2254,7 +2231,7 @@ def extract_features(
         except (ValueError, zlib.error):
             yield (str(mid), "decode_error", 0.0)
 
-    return map_rows(df.select(id_col, blob_col), FEATURE_SCHEMA, lambda: row_fn)
+    return map_rows(df.select("media_id", "blob"), FEATURE_SCHEMA, lambda: row_fn)
 
 
 def resize_nearest(
@@ -2290,29 +2267,24 @@ def resize_media(
     df: DataFrame,
     out_w: int = 4,
     out_h: int = 4,
-    blob_col: str = "blob",
-    id_col: str = "media_id",
-    decoder: Optional[Callable] = None,
 ) -> DataFrame:
     """Decode → nearest-neighbor resize → per-channel pixel SUMS of the
     resized image (long format: one row per channel).
 
-    Integer sums (not means) keep the output bit-stable. The default
-    decoder is the real stdlib PNG path; other formats raise inside the
-    decoder and the row is skipped, same degrade contract as
+    Integer sums (not means) keep the output bit-stable. Decoding is
+    :func:`decode_image`; formats it cannot decode raise inside it and
+    the row is skipped, same degrade contract as
     :func:`extract_features`. The thumbnailing step of a multimodal
     training pipeline — Arrow-batched, never row-at-a-time Python UDFs.
     """
-    dec = decoder or (lambda data: decode_image(data))
-
     def row_fn(mid, raw):
         data = bytes(raw) if raw is not None else b""
         try:
-            w, h, ch, px = dec(data)
+            w, h, ch, px = decode_image(data)
         except (NotImplementedError, ValueError, zlib.error):
             return
         small = resize_nearest(px, w, h, ch, out_w, out_h)
         for c in range(ch):
             yield (str(mid), c, sum(small[c::ch]))
 
-    return map_rows(df.select(id_col, blob_col), RESIZE_SCHEMA, lambda: row_fn)
+    return map_rows(df.select("media_id", "blob"), RESIZE_SCHEMA, lambda: row_fn)

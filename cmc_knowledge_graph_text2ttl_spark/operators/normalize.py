@@ -59,20 +59,17 @@ def normalize_text_col(col: Column) -> Column:
     return c
 
 
-def normalize_text(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """(id, text, n_chars_before, n_chars_after) — normalized corpus.
+def normalize_text(df: DataFrame) -> DataFrame:
+    """(doc_id, text) → (id, text, n_chars_before, n_chars_after) —
+    normalized corpus.
 
     ``n_chars_*`` are character counts (both engines count codepoints),
     so ``n_chars_before - n_chars_after`` is the cleanup volume metric
     curation reports track.
     """
-    src = F.coalesce(F.col(text_col), F.lit(""))
+    src = F.coalesce(F.col("text"), F.lit(""))
     return df.select(
-        F.col(id_col).alias("id"),
+        F.col("doc_id").alias("id"),
         normalize_text_col(src).alias("text"),
         F.length(src).cast("int").alias("n_chars_before"),
     ).select(
@@ -103,14 +100,10 @@ MOJIBAKE_FULL_RE = (
 MOJIBAKE_LEAD_RE = "[\\xC2-\\xF4]"
 
 
-def repair_mojibake(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """(id, text, was_mojibake) -- repair of the single most common web
-    encoding defect: UTF-8 bytes mis-decoded as Latin-1 upstream
-    ("cafÃ©" for "café"), the ftfy core case. A document is repaired
+def repair_mojibake(df: DataFrame) -> DataFrame:
+    """(doc_id, text) → (id, text, was_mojibake) -- repair of the single
+    most common web encoding defect: UTF-8 bytes mis-decoded as Latin-1
+    upstream ("cafÃ©" for "café"), the ftfy core case. A document is repaired
     ONLY when the ENTIRE text matches the UTF-8-as-Latin-1 grammar and
     contains at least one multi-byte lead char -- a conservative
     whole-document rule: mixed/ambiguous documents pass through
@@ -123,10 +116,10 @@ def repair_mojibake(
 
     Scale shape: map-side only, fuses into the feeding scan.
     """
-    src = F.coalesce(F.col(text_col), F.lit(""))
+    src = F.coalesce(F.col("text"), F.lit(""))
     is_moji = src.rlike(MOJIBAKE_FULL_RE) & src.rlike(MOJIBAKE_LEAD_RE)
     return df.select(
-        F.col(id_col).alias("id"),
+        F.col("doc_id").alias("id"),
         F.when(
             is_moji, F.decode(F.encode(src, "ISO-8859-1"), "UTF-8")
         ).otherwise(src).alias("text"),

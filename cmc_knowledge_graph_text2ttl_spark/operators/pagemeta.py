@@ -103,11 +103,9 @@ _OG_TAG_REV = (
 )
 
 
-def extract_og_meta(
-    df: DataFrame, html_col: str = "html", url_col: str = "url"
-) -> DataFrame:
-    """OpenGraph properties in long format → (url, og_property,
-    og_content), one row per ``<meta property="og:...">`` tag.
+def extract_og_meta(df: DataFrame) -> DataFrame:
+    """OpenGraph properties of (url, html) pages in long format → (url,
+    og_property, og_content), one row per ``<meta property="og:...">`` tag.
 
     og:* is MULTI-valued by design (several og:image entries per page),
     so unlike :func:`extract_page_meta` this keeps every occurrence —
@@ -116,7 +114,7 @@ def extract_og_meta(
     metadata (title/image/type/url) is the highest-precision page
     summary most publishers ship after JSON-LD.
     """
-    html = html_string(df, html_col)
+    html = html_string(df, "html")
 
     def pairs(pattern, prop_g, val_g):
         return F.transform(
@@ -134,7 +132,7 @@ def extract_og_meta(
         ),
     )
     return (
-        df.select(F.col(url_col).alias("url"), F.explode(both).alias("e"))
+        df.select(F.col("url").alias("url"), F.explode(both).alias("e"))
         .select(
             "url",
             F.col("e.p").alias("og_property"),
@@ -144,11 +142,10 @@ def extract_og_meta(
     )
 
 
-def extract_page_meta(
-    df: DataFrame, html_col: str = "html", url_col: str = "url"
-) -> DataFrame:
-    """(url, title, description, canonical, noindex, nofollow, lang)."""
-    html = html_string(df, html_col)
+def extract_page_meta(df: DataFrame) -> DataFrame:
+    """(url, html) → (url, title, description, canonical, noindex,
+    nofollow, lang)."""
+    html = html_string(df, "html")
     title = F.nullif(
         F.trim(F.regexp_extract(html, r"(?is)<title[^>]*>(.*?)</title>", 1)),
         F.lit(""),
@@ -180,7 +177,7 @@ def extract_page_meta(
     # 'none' implies noindex + nofollow (robots-meta spec)
     is_none = robots.rlike(r"\bnone\b")
     return df.select(
-        F.col(url_col).alias("url"),
+        F.col("url").alias("url"),
         title.alias("title"),
         description.alias("description"),
         canonical.alias("canonical"),
@@ -190,10 +187,8 @@ def extract_page_meta(
     )
 
 
-def extract_meta_refresh(
-    df: DataFrame, html_col: str = "html", url_col: str = "url"
-) -> DataFrame:
-    """(url, refresh_delay_s, refresh_url) — ``<meta http-equiv=
+def extract_meta_refresh(df: DataFrame) -> DataFrame:
+    """(url, html) → (url, refresh_delay_s, refresh_url) — ``<meta http-equiv=
     "refresh" content="N;url=target">`` soft redirects, the crawl
     signal that reclassifies a page as an alias of its target (and a
     classic cloaking/spam marker when the delay is 0). Both attribute
@@ -206,7 +201,7 @@ def extract_meta_refresh(
     from .columns import html_string
     from .urls import resolve_url_col
 
-    html = html_string(df, html_col)
+    html = html_string(df, "html")
     content = _first(
         html, _attr_pair("meta", "http-equiv", "refresh", "content")
     )
@@ -224,10 +219,10 @@ def extract_meta_refresh(
     )
     resolved = F.when(
         raw_target.isNotNull(),
-        resolve_url_col(F.col(url_col), raw_target),
+        resolve_url_col(F.col("url"), raw_target),
     )
     return df.select(
-        F.col(url_col).alias("url"),
+        F.col("url").alias("url"),
         delay.alias("refresh_delay_s"),
         resolved.alias("refresh_url"),
     )

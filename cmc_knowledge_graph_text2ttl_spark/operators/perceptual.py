@@ -80,12 +80,10 @@ DHASH_SCHEMA = StructType(
 )
 
 
-def image_dhash(
-    df: DataFrame, blob_col: str = "blob", id_col: str = "media_id"
-) -> DataFrame:
-    """(media_id, b0..b3) per decodable image row; undecodable rows are
-    skipped like resize_media (their exact-dup story is the metadata
-    sha256)."""
+def image_dhash(df: DataFrame) -> DataFrame:
+    """(media_id, b0..b3) per decodable (media_id, blob) image row;
+    undecodable rows are skipped like resize_media (their exact-dup story
+    is the metadata sha256)."""
 
     def row_fn(mid, raw):
         try:
@@ -97,14 +95,12 @@ def image_dhash(
             return
         yield (str(mid),) + bands
 
-    return map_rows(df.select(id_col, blob_col), DHASH_SCHEMA, lambda: row_fn)
+    return map_rows(df.select("media_id", "blob"), DHASH_SCHEMA, lambda: row_fn)
 
 
-def audio_dhash_bands(
-    channels: int, samples, n_windows: int = 33
-) -> Tuple[int, int]:
+def audio_dhash_bands(channels: int, samples) -> Tuple[int, int]:
     """(b0, b1) 16-bit bands of a 32-bit audio difference-hash: mono
-    mix (integer floor average), ``n_windows`` equal windows (remainder
+    mix (integer floor average), 33 equal windows (remainder
     dropped), exact integer energy (sum of squares) per window, one
     bit per adjacent-window comparison — the audio analog of the image
     dHash, every step integer-exact for the SQL gate."""
@@ -115,15 +111,15 @@ def audio_dhash_bands(
         ]
     else:
         mono = list(samples)
-    wlen = len(mono) // n_windows
+    wlen = len(mono) // 33
     if wlen == 0:
         return (0, 0)
     energies = [
         sum(v * v for v in mono[k * wlen : (k + 1) * wlen])
-        for k in range(n_windows)
+        for k in range(33)
     ]
     b0 = b1 = 0
-    for k in range(n_windows - 1):
+    for k in range(32):
         if energies[k + 1] > energies[k]:
             if k < 16:
                 b0 |= 1 << k
@@ -141,12 +137,10 @@ AUDIO_DHASH_SCHEMA = StructType(
 )
 
 
-def audio_fingerprint(
-    df: DataFrame, blob_col: str = "blob", id_col: str = "media_id"
-) -> DataFrame:
-    """(media_id, b0, b1) per decodable WAV or FLAC row (undecodable
-    skipped) — a FLAC re-encode of a WAV lands on the identical
-    fingerprint because the decoded samples are bit-identical."""
+def audio_fingerprint(df: DataFrame) -> DataFrame:
+    """(media_id, b0, b1) per decodable WAV or FLAC (media_id, blob) row
+    (undecodable skipped) — a FLAC re-encode of a WAV lands on the
+    identical fingerprint because the decoded samples are bit-identical."""
     from .multimodal import decode_audio
 
     def row_fn(mid, raw):
@@ -157,7 +151,7 @@ def audio_fingerprint(
         yield (str(mid),) + audio_dhash_bands(ch, samples)
 
     return map_rows(
-        df.select(id_col, blob_col), AUDIO_DHASH_SCHEMA, lambda: row_fn
+        df.select("media_id", "blob"), AUDIO_DHASH_SCHEMA, lambda: row_fn
     )
 
 
@@ -217,8 +211,6 @@ def _banded_pairs(
 def audio_near_dup(
     df: DataFrame,
     max_hamming: int = 0,
-    blob_col: str = "blob",
-    id_col: str = "media_id",
     max_bucket: int = 10_000,
 ) -> DataFrame:
     """(id_a, id_b, hamming) WAV pairs with fingerprint Hamming ≤
@@ -227,15 +219,13 @@ def audio_near_dup(
     ``max_bucket`` hot-bucket guard."""
     if not 0 <= max_hamming < 2:
         raise ValueError("max_hamming must be in [0, 1] for 2-band pigeonhole")
-    fps = audio_fingerprint(df, blob_col, id_col).persist()  # joined twice
+    fps = audio_fingerprint(df).persist()  # joined twice
     return _banded_pairs(fps, 2, max_hamming, max_bucket)
 
 
 def image_near_dup(
     df: DataFrame,
     max_hamming: int = 0,
-    blob_col: str = "blob",
-    id_col: str = "media_id",
     max_bucket: int = 10_000,
 ) -> DataFrame:
     """(id_a, id_b, hamming) image pairs with dHash Hamming distance ≤
@@ -250,24 +240,21 @@ def image_near_dup(
     # persist: the self-join consumes the fingerprints twice, and
     # re-computing them means re-DECODING every image twice — the
     # dominant cost (same rationale as the minhash shingle persist)
-    fps = image_dhash(df, blob_col, id_col).persist()
+    fps = image_dhash(df).persist()
     return _banded_pairs(fps, 4, max_hamming, max_bucket)
 
 
 def media_dedup_clusters(
     df: DataFrame,
     modality: str = "image",
-    max_hamming: int = 0,
-    blob_col: str = "blob",
-    id_col: str = "media_id",
-    small_graph_threshold: int = 2_000_000,
     star_edges: bool = True,
     max_bucket: int = 10_000,
 ) -> DataFrame:
     """(media_id, cluster_id, n_cluster, is_survivor) — resolve
-    perceptual near-dup PAIRS into clusters with one survivor each,
-    the media analog of dedup.near_duplicate_clusters (same CC
-    operator, same survivor rule: lexicographically smallest member).
+    perceptual near-dup PAIRS of (media_id, blob) rows (Hamming 0: equal
+    fingerprints) into clusters with one survivor each, the media analog
+    of dedup.near_duplicate_clusters (same CC operator, same survivor
+    rule: lexicographically smallest member).
     Undecodable rows are singleton survivors — their exact-dup story
     is the metadata sha256, not a perceptual hash.
 
@@ -277,7 +264,7 @@ def media_dedup_clusters(
     min-id rep, a map-side-combinable min + one join), and the banded
     LSH pair join runs over DISTINCT fingerprints only. Components are
     identical to the all-pairs path — a star edge joins fingerprints
-    at Hamming 0 (always ≤ max_hamming) and any cross-fingerprint pair
+    at Hamming 0 and any cross-fingerprint pair
     (a, b) is mirrored by its reps (same fingerprints, same bands) —
     but a 10M-copy blank-thumbnail cluster contributes ONE row to the
     pair join instead of a 5·10¹³-pair quadratic blowup, and can never
@@ -292,17 +279,13 @@ def media_dedup_clusters(
 
     if modality == "image":
         n_bands, fingerprint = 4, image_dhash
-        if not 0 <= max_hamming < 4:
-            raise ValueError("max_hamming must be in [0, 3] for 4 bands")
     elif modality == "audio":
         n_bands, fingerprint = 2, audio_fingerprint
-        if not 0 <= max_hamming < 2:
-            raise ValueError("max_hamming must be in [0, 1] for 2 bands")
     else:
         raise ValueError(f"modality must be 'image' or 'audio', got {modality!r}")
     if star_edges:
         band_names = [f"b{k}" for k in range(n_bands)]
-        fps = fingerprint(df, blob_col, id_col).persist()
+        fps = fingerprint(df).persist()
         reps = fps.groupBy(*band_names).agg(
             F.min("media_id").alias("media_id")
         )
@@ -313,28 +296,20 @@ def media_dedup_clusters(
             .filter(F.col("media_id") != F.col("rep"))
             .select(F.col("media_id").alias("src"), F.col("rep").alias("dst"))
         )
-        rep_pairs = _banded_pairs(reps, n_bands, max_hamming, max_bucket)
+        rep_pairs = _banded_pairs(reps, n_bands, 0, max_bucket)
         edges = star.union(
             rep_pairs.select(
                 F.col("id_a").alias("src"), F.col("id_b").alias("dst")
             )
         )
     else:
-        if modality == "image":
-            pairs = image_near_dup(
-                df, max_hamming, blob_col, id_col, max_bucket
-            )
-        else:
-            pairs = audio_near_dup(
-                df, max_hamming, blob_col, id_col, max_bucket
-            )
+        near_dup = image_near_dup if modality == "image" else audio_near_dup
+        pairs = near_dup(df, max_bucket=max_bucket)
         edges = pairs.select(
             F.col("id_a").alias("src"), F.col("id_b").alias("dst")
         )
-    comp = connected_components(
-        edges, small_graph_threshold=small_graph_threshold
-    )
-    ids = df.select(F.col(id_col).cast("string").alias("media_id")).distinct()
+    comp = connected_components(edges)
+    ids = df.select(F.col("media_id").cast("string").alias("media_id")).distinct()
     lab = ids.join(comp, ids["media_id"] == comp["node"], "left").select(
         "media_id", F.coalesce("component", "media_id").alias("cluster_id")
     )

@@ -47,14 +47,12 @@ PII_PATTERNS = (
 )
 
 
-def scrub_pii(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """(id, text, n_email, n_ipv4, n_phone) — redacted text plus the
-    per-category match counts (counted BEFORE that category's
-    replacement, on the text as already scrubbed by the previous
-    categories, matching the fixed application order)."""
-    out = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("text"))
+def scrub_pii(df: DataFrame) -> DataFrame:
+    """(doc_id, text) → (id, text, n_email, n_ipv4, n_phone) — redacted
+    text plus the per-category match counts (counted BEFORE that
+    category's replacement, on the text as already scrubbed by the
+    previous categories, matching the fixed application order)."""
+    out = df.select(F.col("doc_id").alias("id"), "text")
     counts = []
     for name, pat, repl in PII_PATTERNS:
         out = out.withColumn(f"n_{name}", F.regexp_count("text", F.lit(pat)))

@@ -20,15 +20,10 @@ __all__ = ["crawl_delta", "fetch_batches", "crawl_frontier", "change_rates",
            "polite_schedule"]
 
 
-def crawl_delta(
-    old: DataFrame,
-    new: DataFrame,
-    url_col: str = "url",
-    content_col: str = "content",
-) -> DataFrame:
-    """(url, status) across two crawl generations: ``new`` (absent
-    before), ``gone`` (absent now), ``unchanged`` / ``changed`` by
-    content digest.
+def crawl_delta(old: DataFrame, new: DataFrame) -> DataFrame:
+    """(url, status) across two (url, content) crawl generations: ``new``
+    (absent before), ``gone`` (absent now), ``unchanged`` / ``changed``
+    by content digest.
 
     One full-outer join keyed on the URL; contents never ship through
     the shuffle — each side is reduced to (url, md5) first, so the
@@ -41,13 +36,13 @@ def crawl_delta(
     # URL whose fetch produced NULL content (failed fetch) as absent —
     # and a recrawl pipeline would wrongly tombstone a live URL
     o = old.select(
-        F.col(url_col).alias("url"),
-        F.md5(F.col(content_col).cast("binary")).alias("_old"),
+        "url",
+        F.md5(F.col("content").cast("binary")).alias("_old"),
         F.lit(True).alias("_has_old"),
     )
     n = new.select(
-        F.col(url_col).alias("url"),
-        F.md5(F.col(content_col).cast("binary")).alias("_new"),
+        "url",
+        F.md5(F.col("content").cast("binary")).alias("_new"),
         F.lit(True).alias("_has_new"),
     )
     j = o.join(n, "url", "full_outer")
@@ -60,30 +55,23 @@ def crawl_delta(
     return j.select("url", status.alias("status"))
 
 
-def fetch_batches(
-    urls: DataFrame,
-    batch_size: int,
-    url_col: str = "url",
-    host_col: str = "host",
-) -> DataFrame:
-    """Polite fetch schedule → (url, host, batch_id, pos_in_batch):
-    each host's URLs are split into batches of at most ``batch_size``,
-    ordered by the md5 of the URL (uniform, seed-free, stable across
-    runs and partitionings — a crawl-order sort would bias every batch
-    toward old pages).
+def fetch_batches(urls: DataFrame, batch_size: int) -> DataFrame:
+    """Polite fetch schedule of (url, host) rows → (url, host, batch_id,
+    pos_in_batch): each host's URLs are split into batches of at most
+    ``batch_size``, ordered by the md5 of the URL (uniform, seed-free,
+    stable across runs and partitionings — a crawl-order sort would bias
+    every batch toward old pages).
 
     One shuffle (the per-host window); batch ``b`` of every host can be
     fetched concurrently while respecting per-host concurrency 1.
     """
     if batch_size < 1:
         raise ValueError("batch_size must be >= 1")
-    w = Window.partitionBy(host_col).orderBy(
-        md5_int(F.col(url_col)), F.col(url_col)
-    )
+    w = Window.partitionBy("host").orderBy(md5_int(F.col("url")), F.col("url"))
     rn = F.row_number().over(w) - 1
     return urls.select(
-        F.col(url_col).alias("url"),
-        F.col(host_col).alias("host"),
+        "url",
+        "host",
         (rn / batch_size).cast("int").alias("batch_id"),
         (rn % batch_size).cast("int").alias("pos_in_batch"),
     )
@@ -201,8 +189,6 @@ def polite_schedule(
     urls: DataFrame,
     batch_size: int,
     delays: DataFrame,
-    url_col: str = "url",
-    host_col: str = "host",
     default_ms: int = 1000,
 ) -> DataFrame:
     """(url, host, batch_id, pos_in_batch, delay_ms, not_before_ms) —
@@ -214,7 +200,7 @@ def polite_schedule(
 
     The delay table is a dimension join (broadcast under AQE); hosts
     absent from it fall back to ``default_ms``."""
-    b = fetch_batches(urls, batch_size, url_col, host_col)
+    b = fetch_batches(urls, batch_size)
     d = delays.select(
         F.col("host"), F.col("delay_ms").cast("long").alias("_delay")
     )

@@ -8,13 +8,13 @@ triage, and seed selection for targeted crawls.
 All-integer BM25 so Spark and the DuckDB oracle agree bit-exactly:
 
 - the Robertson idf ``ln((N - df + 0.5) / (df + 0.5))`` is replaced by
-  the *rational* proxy ``((2(N - df) + 1) * idf_scale) div (2 df + 1)``
+  the *rational* proxy ``((2(N - df) + 1) * IDF_SCALE) div (2 df + 1)``
   — the same odds ratio without the log, a monotone transform of it for
   fixed N, so the induced ranking per term is identical and no libm
   rounding can diverge between JVM and C;
 - the tf saturation component ``tf (k1+1) / (tf + k1 (1 - b + b dl /
-  avgdl))`` is evaluated with k1/b as the integer ratios ``k1_x10 / 10``
-  and ``b_x100 / 100`` and ``dl / avgdl`` as ``(dl * N * 100) div T``;
+  avgdl))`` is evaluated with k1/b as the integer ratios ``K1_X10 / 10``
+  and ``B_X100 / 100`` and ``dl / avgdl`` as ``(dl * N * 100) div T``;
   every division is an explicit int64 floor-div performed at the same
   point in both engines (floor placement matters: ``a div b * c`` and
   ``a * c div b`` differ — the oracle mirrors this expression shape
@@ -40,22 +40,24 @@ from pyspark.sql import DataFrame, functions as F
 
 _MAX_I64 = 2**63 - 1
 
+# BM25 constants shared by the Spark plan and its DuckDB mirror: k1 = 1.2,
+# b = 0.75, and the integer scales of the idf and tf components.
+K1_X10 = 12
+B_X100 = 75
+IDF_SCALE = 1000
+TF_SCALE = 10000
+
 
 def bm25_topk(
     df: DataFrame,
     query_terms: list[str],
     k: int = 20,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k1_x10: int = 12,
-    b_x100: int = 75,
-    idf_scale: int = 1000,
-    tf_scale: int = 10000,
 ) -> DataFrame:
-    """Top-k documents for a bag-of-terms query under integer BM25.
+    """Top-k (doc_id, text) documents for a bag-of-terms query under
+    integer BM25.
 
     Returns (id, n_matched, score) — ``score`` is scaled by
-    ``idf_scale * tf_scale``; ``n_matched`` counts distinct query terms
+    ``IDF_SCALE * TF_SCALE``; ``n_matched`` counts distinct query terms
     present. Ties broken by ascending id (deterministic cut).
     """
     if not query_terms:
@@ -64,9 +66,9 @@ def bm25_topk(
         raise ValueError("bm25_topk: k must be >= 1")
     terms = sorted(set(query_terms))
 
-    words = F.split(F.trim(F.col(text_col)), r"\s+")
-    docs = df.where(F.length(F.trim(F.col(text_col))) > 0).select(
-        F.col(id_col).alias("id"), words.alias("toks")
+    words = F.split(F.trim(F.col("text")), r"\s+")
+    docs = df.where(F.length(F.trim(F.col("text"))) > 0).select(
+        F.col("doc_id").alias("id"), words.alias("toks")
     )
     # persist: lengths feeds the corpus stats aggregate AND the scoring
     # join — without it the corpus is scanned and tokenized a second
@@ -102,7 +104,7 @@ def bm25_topk(
     idf = dfreq.crossJoin(F.broadcast(stats)).select(
         "token",
         F.expr(
-            f"((2 * (n - df_t) + 1) * {idf_scale}) div (2 * df_t + 1)"
+            f"((2 * (n - df_t) + 1) * {IDF_SCALE}) div (2 * df_t + 1)"
         ).cast("bigint").alias("idf"),
     )
 
@@ -128,13 +130,13 @@ def bm25_topk(
         )
         .withColumn(
             "lnorm",
-            F.expr(f"(100 - {b_x100}) + ({b_x100} * reldl) div 100"),
+            F.expr(f"(100 - {B_X100}) + ({B_X100} * reldl) div 100"),
         )
         .withColumn(
             "tfcomp",
             F.expr(
-                f"(tf * (10 + {k1_x10}) * 100 * {tf_scale}) div "
-                f"(1000 * tf + {k1_x10} * lnorm)"
+                f"(tf * (10 + {K1_X10}) * 100 * {TF_SCALE}) div "
+                f"(1000 * tf + {K1_X10} * lnorm)"
             ),
         )
         .join(F.broadcast(idf), "token")
@@ -147,14 +149,7 @@ def bm25_topk(
     return scored.orderBy(F.col("score").desc(), F.col("id").asc()).limit(k)
 
 
-def bm25_oracle_sql(
-    query_terms: list[str],
-    k: int = 20,
-    k1_x10: int = 12,
-    b_x100: int = 75,
-    idf_scale: int = 1000,
-    tf_scale: int = 10000,
-) -> str:
+def bm25_oracle_sql(query_terms: list[str], k: int = 20) -> str:
     """DuckDB mirror of :func:`bm25_topk` over the ``documents`` view —
     expression shapes (floor-div placement) match the Spark plan token
     for token so the scores are bit-identical."""
@@ -179,17 +174,17 @@ WITH docs AS (
   SELECT token, CAST(COUNT(*) AS BIGINT) AS df_t FROM per_doc GROUP BY token
 ), idf AS (
   SELECT token,
-         CAST(((2 * (n - df_t) + 1) * {idf_scale}) // (2 * df_t + 1)
+         CAST(((2 * (n - df_t) + 1) * {IDF_SCALE}) // (2 * df_t + 1)
               AS BIGINT) AS idf
   FROM dfreq, stats
 ), scored AS (
   SELECT p.id,
          CAST(COUNT(*) AS BIGINT) AS n_matched,
          CAST(SUM(i.idf * (
-           (p.tf * (10 + {k1_x10}) * 100 * {tf_scale}) //
-           (1000 * p.tf + {k1_x10} *
-             ((100 - {b_x100}) +
-              ({b_x100} * ((l.dl * s.n * 100) // s.t)) // 100))
+           (p.tf * (10 + {K1_X10}) * 100 * {TF_SCALE}) //
+           (1000 * p.tf + {K1_X10} *
+             ((100 - {B_X100}) +
+              ({B_X100} * ((l.dl * s.n * 100) // s.t)) // 100))
          )) AS BIGINT) AS score
   FROM per_doc p
   JOIN lengths l USING (id), stats s

@@ -91,29 +91,20 @@ def parse_robots(text: str, agent: str = "*") -> List[Tuple[bool, str]]:
     return star[0] if star else []
 
 
-def robots_rules(
-    robots_df: DataFrame,
-    host_col: str = "host",
-    text_col: str = "robots_txt",
-    agent: str = "*",
-) -> DataFrame:
-    """(host, robots body) → one row per applicable rule
-    (host, allow, prefix, rule_len). Parse once per host; the output is
-    the broadcastable policy dimension."""
+def robots_rules(robots_df: DataFrame) -> DataFrame:
+    """(host, robots_txt) → one row per rule that applies to the ``*``
+    agent (host, allow, prefix, rule_len). Parse once per host; the
+    output is the broadcastable policy dimension."""
 
     def row_fn(host, text):
-        for allow, prefix in parse_robots(str(text or ""), agent):
+        for allow, prefix in parse_robots(str(text or "")):
             yield (str(host), allow, prefix, len(prefix))
 
-    return map_rows(
-        robots_df.select(host_col, text_col), RULES_SCHEMA, lambda: row_fn
-    )
+    return map_rows(robots_df.select("host", "robots_txt"), RULES_SCHEMA, lambda: row_fn)
 
 
-def robots_allowed(
-    urls_df: DataFrame, rules_df: DataFrame, url_col: str = "url"
-) -> DataFrame:
-    """urls + broadcast policy rules → (url, allowed).
+def robots_allowed(urls_df: DataFrame, rules_df: DataFrame) -> DataFrame:
+    """``url`` rows + broadcast policy rules → (url, allowed).
 
     One broadcast left join on host; a rule contributes only when its
     prefix matches the path; the verdict is an argmax over
@@ -128,11 +119,11 @@ def robots_allowed(
     # ('http://example.com:8080/x' must join example.com's rules, not
     # fall through to allowed-by-default).
     u = urls_df.select(
-        F.col(url_col).alias("url"),
+        "url",
         F.lower(
             F.regexp_replace(
                 F.regexp_extract(
-                    url_col, r"(?i)^[a-z][a-z0-9+.-]*://([^/]+)", 1
+                    "url", r"(?i)^[a-z][a-z0-9+.-]*://([^/]+)", 1
                 ),
                 r"^[^@]*@|:\d+$",
                 "",
@@ -141,7 +132,7 @@ def robots_allowed(
         F.coalesce(
             F.nullif(
                 F.regexp_extract(
-                    url_col, r"(?i)^[a-z][a-z0-9+.-]*://[^/]+(/.*)$", 1
+                    "url", r"(?i)^[a-z][a-z0-9+.-]*://[^/]+(/.*)$", 1
                 ),
                 F.lit(""),
             ),
@@ -211,47 +202,35 @@ def parse_crawl_delay(text: str, agent: str = "*"):
     return star[0] if star else None
 
 
-def crawl_delays(
-    robots_df: DataFrame,
-    host_col: str = "host",
-    text_col: str = "robots_txt",
-    agent: str = "*",
-    default_ms: int = 1000,
-) -> DataFrame:
-    """(host, delay_ms) — the per-host politeness dimension table:
-    Crawl-delay per :func:`parse_crawl_delay`, ``default_ms`` when the
-    host declares none. Parse once per host (map_rows, same shape
-    as robots_rules); the output is broadcastable."""
+def crawl_delays(robots_df: DataFrame) -> DataFrame:
+    """(host, robots_txt) → (host, delay_ms) — the per-host politeness
+    dimension table: the ``*`` agent's Crawl-delay per
+    :func:`parse_crawl_delay`, 1000 ms when the host declares none.
+    Parse once per host (map_rows, same shape as robots_rules); the
+    output is broadcastable."""
 
     def row_fn(host, text):
-        d = parse_crawl_delay(str(text or ""), agent)
-        yield (str(host), default_ms if d is None else d)
+        d = parse_crawl_delay(str(text or ""))
+        yield (str(host), 1000 if d is None else d)
 
     return map_rows(
-        robots_df.select(host_col, text_col),
+        robots_df.select("host", "robots_txt"),
         "host string, delay_ms long",
         lambda: row_fn,
     )
 
 
-def robots_sitemaps(
-    robots_df: DataFrame,
-    host_col: str = "host",
-    text_col: str = "robots_txt",
-) -> DataFrame:
-    """(host, sitemap_url) — ``Sitemap:`` declarations from robots.txt
-    (RFC 9309 §2.3: they are global, not group-scoped, so this is a
-    pure multiline column regex — no group parser, no UDF). One row
-    per declaration; hosts without any yield no rows. Feeds
-    sitemaps.parse_sitemaps for the discovery loop."""
+def robots_sitemaps(robots_df: DataFrame) -> DataFrame:
+    """(host, robots_txt) → (host, sitemap_url) — ``Sitemap:``
+    declarations from robots.txt (RFC 9309 §2.3: they are global, not
+    group-scoped, so this is a pure multiline column regex — no group
+    parser, no UDF). One row per declaration; hosts without any yield no
+    rows. Feeds sitemaps.parse_sitemaps for the discovery loop."""
     urls = F.regexp_extract_all(
-        F.col(text_col),
+        F.col("robots_txt"),
         F.lit(r"(?im)^[ \t]*sitemap[ \t]*:[ \t]*(\S+)"),
         1,
     )
-    return (
-        robots_df.select(
-            F.col(host_col).alias("host"), F.explode(urls).alias("sitemap_url")
-        )
-        .filter(F.col("sitemap_url") != "")
+    return robots_df.select("host", F.explode(urls).alias("sitemap_url")).filter(
+        F.col("sitemap_url") != ""
     )

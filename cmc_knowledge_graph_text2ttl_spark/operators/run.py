@@ -229,7 +229,6 @@ def run_workflows(
 def extract_and_run_workflows(
     pages: DataFrame,
     programs: List[WorkflowProgram],
-    graphs: Optional[Dict[str, List[GraphRow]]] = None,
     select_best: bool = True,
     collect_log: bool = False,
 ) -> DataFrame:
@@ -239,23 +238,27 @@ def extract_and_run_workflows(
     path when no extraction checkpoint is needed (the staged pipeline
     keeps them separate for resumability; this is the streaming/bench
     hot path). Results are identical by construction: the same text rule
-    and the same workflow kernel run in both.
+    and the same workflow kernel run in both. No named graphs are loaded
+    (:func:`run_workflows` takes ``graphs``).
     """
     return _workflow_kernel(
         pages.select("url", "html", "text"),
-        programs, graphs, None, collect_log, select_best,
+        programs, None, None, collect_log, select_best,
     )
 
 
 def explode_triples(results: DataFrame, winners_only: bool = False) -> DataFrame:
     """results → flat triples(url, workflow, subj, pred, obj_*).
 
+    ``winners_only`` keeps the ``is_best`` rows; a results frame without
+    that column then fails when the plan is analysed.
+
     Per-document set semantics are already applied inside the interpreter
     (rdflib-graph dedup equivalent), so no distributed dropDuplicates is
     needed here — cross-document dedup is a *different*, optional operator.
     """
     df = results
-    if winners_only and "is_best" in df.columns:
+    if winners_only:
         df = df.filter(F.col("is_best"))
     return (
         df.filter(F.col("error").isNull())

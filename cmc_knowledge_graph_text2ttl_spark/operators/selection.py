@@ -18,9 +18,9 @@ web crawl to train on —
 
 Both are all-integer so Spark and the DuckDB oracle agree bit-exactly:
 
-- the NB weight is the Laplace rate ``((pos + 1) * scale) div
+- the NB weight is the Laplace rate ``((pos + 1) * SCALE) div
   (pos + neg + 2)`` — a probability scaled to an integer, no log;
-- the DSIR per-bucket ratio is ``((tgt_b + 1) * (R + B) * scale) div
+- the DSIR per-bucket ratio is ``((tgt_b + 1) * (R + B) * SCALE) div
   ((raw_b + 1) * (T + B))`` — the add-one-smoothed ``p_tgt / p_raw``
   as one rational with a single floor; the per-doc score is the
   tf-weighted floor-mean of bucket ratios (an arithmetic-mean proxy
@@ -44,35 +44,33 @@ from pyspark.sql import DataFrame, functions as F
 
 from .dedup import md5_int
 
+# Integer scale of classifier weights, scores and DSIR ratios.
+SCALE = 1_000_000
 
-def _tokens(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    words = F.split(F.trim(F.col(text_col)), r"\s+")
-    return df.where(F.length(F.trim(F.col(text_col))) > 0).select(
-        F.col(id_col).alias("id"), F.explode(words).alias("token")
+
+def _tokens(df: DataFrame) -> DataFrame:
+    words = F.split(F.trim(F.col("text")), r"\s+")
+    return df.where(F.length(F.trim(F.col("text"))) > 0).select(
+        F.col("doc_id").alias("id"), F.explode(words).alias("token")
     )
 
 
-def token_label_weights(
-    df: DataFrame,
-    label_col: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    scale: int = 1_000_000,
-) -> DataFrame:
-    """Train the weak-label classifier → (token, df_pos, df_neg, weight).
+def token_label_weights(df: DataFrame, label_col: str) -> DataFrame:
+    """Train the weak-label classifier on (doc_id, text, ``label_col``)
+    rows → (token, df_pos, df_neg, weight).
 
     ``label_col`` is 0/1 (weak labels: a heuristic, a seed list, an
     upstream filter verdict). Counts are DOCUMENT frequencies
     (binarized NB — a token counts once per doc no matter how often it
     repeats, so spam keyword-stuffing cannot inflate its own weight).
-    ``weight = ((df_pos + 1) * scale) div (df_pos + df_neg + 2)`` — the
+    ``weight = ((df_pos + 1) * SCALE) div (df_pos + df_neg + 2)`` — the
     Laplace-smoothed P(positive | token present), scaled to an integer.
     """
-    words = F.split(F.trim(F.col(text_col)), r"\s+")
+    words = F.split(F.trim(F.col("text")), r"\s+")
     per_doc = (
-        df.where(F.length(F.trim(F.col(text_col))) > 0)
+        df.where(F.length(F.trim(F.col("text"))) > 0)
         .select(
-            F.col(id_col).alias("id"),
+            F.col("doc_id").alias("id"),
             F.col(label_col).cast("bigint").alias("label"),
             F.explode(words).alias("token"),
         )
@@ -86,7 +84,7 @@ def token_label_weights(
         "token",
         "df_pos",
         "df_neg",
-        F.expr(f"((df_pos + 1) * {scale}) div (df_pos + df_neg + 2)")
+        F.expr(f"((df_pos + 1) * {SCALE}) div (df_pos + df_neg + 2)")
         .cast("bigint")
         .alias("weight"),
     )
@@ -95,43 +93,36 @@ def token_label_weights(
 def classifier_scores(
     df: DataFrame,
     weights: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    scale: int = 1_000_000,
     broadcast_weights: bool = False,
 ) -> DataFrame:
-    """Score every document → (id, n_tokens, n_matched, score).
+    """Score every (doc_id, text) document → (id, n_tokens, n_matched,
+    score).
 
     ``score`` is the floor-mean of token weights over DISTINCT tokens
     (binarized, matching training); tokens absent from the weight table
-    take the uninformative prior ``scale div 2``. ``n_tokens`` counts
+    take the uninformative prior ``SCALE div 2``. ``n_tokens`` counts
     distinct tokens, ``n_matched`` those found in the table.
     """
     dim = weights.select("token", "weight")
     if broadcast_weights:
         dim = F.broadcast(dim)
-    per_doc = _tokens(df, text_col, id_col).distinct()
+    per_doc = _tokens(df).distinct()
     return (
         per_doc.join(dim, "token", "left")
         .groupBy("id")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_tokens"),
             F.count("weight").cast("bigint").alias("n_matched"),
-            F.expr(f"sum(coalesce(weight, {scale} div 2)) div count(1)")
+            F.expr(f"sum(coalesce(weight, {SCALE} div 2)) div count(1)")
             .cast("bigint")
             .alias("score"),
         )
     )
 
 
-def hashed_ngram_counts(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_buckets: int = 1024,
-    bigrams: bool = True,
-) -> DataFrame:
-    """Per-(doc, bucket) hashed n-gram counts → (id, bucket, tf).
+def hashed_ngram_counts(df: DataFrame, n_buckets: int = 1024, bigrams: bool = True) -> DataFrame:
+    """Per-(doc, bucket) hashed n-gram counts of (doc_id, text) rows →
+    (id, bucket, tf).
 
     Word unigrams (and bigrams when ``bigrams``) hash into
     ``md5(gram) mod n_buckets`` — the repo's cross-engine md5 slice.
@@ -140,9 +131,9 @@ def hashed_ngram_counts(
     """
     if n_buckets < 1:
         raise ValueError("n_buckets must be >= 1")
-    words = F.split(F.trim(F.col(text_col)), r"\s+")
-    base = df.where(F.length(F.trim(F.col(text_col))) > 0).select(
-        F.col(id_col).alias("id"), words.alias("toks")
+    words = F.split(F.trim(F.col("text")), r"\s+")
+    base = df.where(F.length(F.trim(F.col("text"))) > 0).select(
+        F.col("doc_id").alias("id"), words.alias("toks")
     )
     grams = F.col("toks")
     if bigrams:
@@ -166,31 +157,26 @@ def hashed_ngram_counts(
 def dsir_importance(
     raw: DataFrame,
     target: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     n_buckets: int = 1024,
-    scale: int = 1_000_000,
-    bigrams: bool = True,
 ) -> DataFrame:
     """DSIR importance scores for every raw doc → (id, n_grams,
-    importance): the tf-weighted floor-mean of per-bucket smoothed
-    ``p_target / p_raw`` ratios (each ``((tgt_b+1)(R+B) scale) div
-    ((raw_b+1)(T+B))``, scaled by ``scale``). ``importance`` >
-    ``scale`` means "looks more like the target than the raw average".
+    importance), over (doc_id, text) rows with unigram and bigram
+    buckets: the tf-weighted floor-mean of per-bucket smoothed
+    ``p_target / p_raw`` ratios (each ``((tgt_b+1)(R+B) SCALE) div
+    ((raw_b+1)(T+B))``). ``importance`` > ``SCALE`` means "looks more
+    like the target than the raw average".
 
-    Integer-range contract: ``(tgt_b + 1) * (R + B) * scale`` must stay
-    below 2^63 — with the default 1e6 scale that bounds
-    ``tgt_b * raw_total`` at ~9.2e12·n_buckets; web-scale corpora
-    should pass a smaller scale or more buckets (the assertion inside
-    the ratio expression fails loudly rather than wrapping).
+    Integer-range contract: ``(tgt_b + 1) * (R + B) * SCALE`` must stay
+    below 2^63, which bounds ``tgt_b * raw_total`` at
+    ~9.2e12·n_buckets; web-scale corpora should pass more buckets (the
+    assertion inside the ratio expression fails loudly rather than
+    wrapping).
     """
     # persist: raw_tf feeds both the bucket totals and the final scoring
     # join — without it the raw corpus is tokenized and hashed twice
     # (the dominant cost; ≤ n_buckets rows per doc after the combine).
-    raw_tf = hashed_ngram_counts(
-        raw, text_col, id_col, n_buckets, bigrams
-    ).persist()
-    tgt_tf = hashed_ngram_counts(target, text_col, id_col, n_buckets, bigrams)
+    raw_tf = hashed_ngram_counts(raw, n_buckets).persist()
+    tgt_tf = hashed_ngram_counts(target, n_buckets)
     raw_b = raw_tf.groupBy("bucket").agg(
         F.sum("tf").cast("bigint").alias("raw_b")
     )
@@ -212,20 +198,19 @@ def dsir_importance(
         .select(
             "bucket",
             F.when(
-                F.expr(f"(tgt_b + 1) * (r + {n_buckets}) <= {2**63 - 1} div {scale}"),
+                F.expr(f"(tgt_b + 1) * (r + {n_buckets}) <= {2**63 - 1} div {SCALE}"),
                 F.expr(
-                    f"((tgt_b + 1) * (r + {n_buckets}) * {scale}) div "
+                    f"((tgt_b + 1) * (r + {n_buckets}) * {SCALE}) div "
                     f"((raw_b + 1) * (t + {n_buckets}))"
                 ),
             ).otherwise(
                 F.assert_true(
                     F.expr(
-                        f"(tgt_b + 1) * (r + {n_buckets}) <= {2**63 - 1} div {scale}"
+                        f"(tgt_b + 1) * (r + {n_buckets}) <= {2**63 - 1} div {SCALE}"
                     ),
                     F.lit(
                         "dsir_importance: bucket count * corpus total * "
-                        "scale exceeds int64 — pass a smaller scale or "
-                        "more buckets"
+                        "scale exceeds int64 — pass more buckets"
                     ),
                 ).cast("bigint")
             ).alias("ratio"),

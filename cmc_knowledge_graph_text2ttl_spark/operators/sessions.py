@@ -18,23 +18,18 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def sessionize(
-    events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    gap_minutes: int = 30,
-) -> DataFrame:
-    """events → one row per (user, session): bounds and counts.
+def sessionize(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
+    """(user_id, ts) events → one row per (user, session): bounds and counts.
 
     Output: (user_id, session_no, session_start, session_end, n_events)
     with ``session_no`` 1-based per user in time order.
     """
-    w = Window.partitionBy(user_col).orderBy(ts_col)
-    prev = F.lag(ts_col).over(w)
+    w = Window.partitionBy("user_id").orderBy("ts")
+    prev = F.lag("ts").over(w)
     # interval comparison works for both TIMESTAMP and TIMESTAMP_NTZ
     gap = F.expr(f"INTERVAL {int(gap_minutes)} MINUTES")
     new_session = F.when(
-        prev.isNull() | ((F.col(ts_col) - prev) > gap), 1
+        prev.isNull() | ((F.col("ts") - prev) > gap), 1
     ).otherwise(0)
     numbered = events.withColumn(
         "session_no",
@@ -43,10 +38,10 @@ def sessionize(
         ),
     )
     return (
-        numbered.groupBy(user_col, "session_no")
+        numbered.groupBy("user_id", "session_no")
         .agg(
-            F.min(ts_col).alias("session_start"),
-            F.max(ts_col).alias("session_end"),
+            F.min("ts").alias("session_start"),
+            F.max("ts").alias("session_end"),
             F.count(F.lit(1)).alias("n_events"),
         )
     )

@@ -65,13 +65,9 @@ def cosine_topk(
     )
 
 
-def assign_cells(
-    emb: DataFrame,
-    centroids: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """IVF cell assignment: nearest centroid per vector (broadcast join).
+def assign_cells(emb: DataFrame, centroids: DataFrame) -> DataFrame:
+    """IVF cell assignment of (vec_id, embedding) rows: nearest centroid
+    per vector (broadcast join) → (vec_id, embedding, cell_id).
 
     centroids: (cell_id, centroid: array<float>) — small by construction,
     so the cross join is a broadcast nested loop over ~sqrt(N) rows. The
@@ -92,10 +88,10 @@ def assign_cells(
         _norm(F.col("centroid")).alias("_cn"),
     )
     base = emb.select(
-        F.col(id_col),
-        F.col(vec_col),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("_vd"),
-        _norm(F.col(vec_col)).alias("_vn"),
+        "vec_id",
+        "embedding",
+        F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("_vd"),
+        _norm(F.col("embedding")).alias("_vn"),
     )
     joined = base.crossJoin(F.broadcast(cd))
     dot = F.aggregate(
@@ -106,33 +102,28 @@ def assign_cells(
     sim = dot / (F.col("_vn") * F.col("_cn"))
     best = (
         joined.withColumn("sim", sim)
-        .groupBy(id_col)
+        .groupBy("vec_id")
         .agg(
             F.max(
                 F.struct(F.col("sim"), (-F.col("cell_id")).alias("neg_cell"))
             ).alias("best"),
-            F.first(vec_col).alias(vec_col),  # constant within the group
+            F.first("embedding").alias("embedding"),  # constant within the group
         )
     )
     return best.select(
-        id_col, vec_col, (-F.col("best.neg_cell")).cast("int").alias("cell_id")
+        "vec_id", "embedding", (-F.col("best.neg_cell")).cast("int").alias("cell_id")
     )
 
 
-def seed_centroids(
-    emb: DataFrame,
-    n_cells: int,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Deterministic seeds: the n_cells vectors with the smallest
-    md5-hash of their id (a seeded sample without an RNG). cell_id is the
+def seed_centroids(emb: DataFrame, n_cells: int) -> DataFrame:
+    """Deterministic seeds: the n_cells (vec_id, embedding) vectors with
+    the smallest md5-hash of their id (a seeded sample without an RNG). cell_id is the
     hash rank — reproducible in any engine that has md5."""
     return (
         emb.select(
-            F.col(id_col).alias("seed_id"),
-            F.col(vec_col).alias("centroid"),
-            F.md5(F.col(id_col).cast("string")).alias("h"),
+            F.col("vec_id").alias("seed_id"),
+            F.col("embedding").alias("centroid"),
+            F.md5(F.col("vec_id").cast("string")).alias("h"),
         )
         .orderBy("h")
         .limit(n_cells)
@@ -141,14 +132,9 @@ def seed_centroids(
     )
 
 
-def make_centroids(
-    emb: DataFrame,
-    n_cells: int,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    quantize: int = 0,
-) -> DataFrame:
-    """Seed centroids refined by one Lloyd step (mean of assigned vectors).
+def make_centroids(emb: DataFrame, n_cells: int, quantize: int = 0) -> DataFrame:
+    """Seed centroids of (vec_id, embedding) rows refined by one Lloyd
+    step (mean of assigned vectors).
 
     ``quantize > 0`` makes the refine step bit-deterministic across
     engines and partitionings: each coordinate is floor-scaled to an
@@ -157,9 +143,9 @@ def make_centroids(
     ``floor(sum(floor(x*q)) / n) / q``. Use for reproducible index builds
     and oracle checking; ``quantize=0`` keeps plain float means.
     """
-    seeds = seed_centroids(emb, n_cells, vec_col, id_col)
-    assigned = assign_cells(emb, seeds, vec_col, id_col)
-    per_dim = assigned.select("cell_id", F.posexplode(vec_col).alias("d", "x"))
+    seeds = seed_centroids(emb, n_cells)
+    assigned = assign_cells(emb, seeds)
+    per_dim = assigned.select("cell_id", F.posexplode("embedding").alias("d", "x"))
     if quantize > 0:
         q = F.lit(float(quantize))
         mean_col = (
@@ -185,24 +171,22 @@ def ivf_topk(
     emb: DataFrame,
     query: Sequence[float],
     k: int = 10,
-    n_cells: int = 16,
     n_probe: int = 4,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     centroids: DataFrame = None,
     assigned: DataFrame = None,
 ) -> DataFrame:
-    """Approximate top-k: probe the n_probe cells nearest to the query,
-    then exact cosine within them. Pass pre-built `centroids`/`assigned`
+    """Approximate top-k over (vec_id, embedding) rows: probe the n_probe
+    cells nearest to the query (of 16 k-means cells), then exact cosine
+    within them. Pass pre-built `centroids`/`assigned`
     to amortize the index across queries (the production shape: the
     assignment is a materialized, cell-partitioned table)."""
     if centroids is None:
         # n_cells tiny rows consumed by TWO actions (the probe collect
         # below and the main query): persisting stops the seed-sort +
         # assign + per-dim refine tower from running twice
-        centroids = make_centroids(emb, n_cells, vec_col, id_col).persist()
+        centroids = make_centroids(emb, 16).persist()
     if assigned is None:
-        assigned = assign_cells(emb, centroids, vec_col, id_col)
+        assigned = assign_cells(emb, centroids)
     probe_cells = [
         r.id  # cosine_topk aliases the id column to "id"
         for r in cosine_topk(
@@ -210,4 +194,4 @@ def ivf_topk(
         ).collect()
     ]
     pruned = assigned.filter(F.col("cell_id").isin(probe_cells))
-    return cosine_topk(pruned, query, k=k, vec_col=vec_col, id_col=id_col)
+    return cosine_topk(pruned, query, k=k)

@@ -52,18 +52,17 @@ def _entries(xml, pattern: str, kind: str):
     )
 
 
-def parse_sitemaps(
-    df: DataFrame, xml_col: str = "sitemap_xml", src_col: str = "sitemap_url"
-) -> DataFrame:
-    """(src, kind, loc, lastmod) per entry: kind ``url`` for page
-    entries, ``sitemap`` for index entries (feed those back into the
-    fetch queue). Entries without a ``<loc>`` are dropped."""
-    xml = html_string(df, xml_col)
+def parse_sitemaps(df: DataFrame) -> DataFrame:
+    """(src, kind, loc, lastmod) per entry of (sitemap_url, sitemap_xml)
+    rows: kind ``url`` for page entries, ``sitemap`` for index entries
+    (feed those back into the fetch queue). Entries without a ``<loc>``
+    are dropped."""
+    xml = html_string(df, "sitemap_xml")
     both = F.concat(
         _entries(xml, _URL_ELT, "url"), _entries(xml, _SM_ELT, "sitemap")
     )
     return (
-        df.select(F.col(src_col).alias("src"), F.explode(both).alias("e"))
+        df.select(F.col("sitemap_url").alias("src"), F.explode(both).alias("e"))
         .select(
             "src",
             F.col("e.kind").alias("kind"),

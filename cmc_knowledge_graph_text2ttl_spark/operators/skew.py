@@ -39,7 +39,6 @@ def salted_collect_list(
     key_col: str,
     value_col: str,
     n_salts: int = 16,
-    sort: bool = True,
 ) -> DataFrame:
     """(key, values array) — equivalent to
     ``groupBy(key).agg(collect_list(value))`` + sort, with PHASE-1
@@ -49,10 +48,9 @@ def salted_collect_list(
     :func:`salted_collect_topk`.
 
     The salt is md5-derived from the VALUE (not random): deterministic,
-    so re-runs and retried tasks route identically. ``sort=True``
-    (default) sorts each final array — the only way the output is
-    engine- and partition-independent; pass False only when the caller
-    re-aggregates anyway.
+    so re-runs and retried tasks route identically. Each final array
+    is sorted — the only way the output is engine- and
+    partition-independent.
     """
     if n_salts < 1:
         raise ValueError("n_salts must be >= 1")
@@ -66,12 +64,9 @@ def salted_collect_list(
         .groupBy("key", "_salt")
         .agg(F.collect_list("v").alias("vs"))
     )
-    merged = partial.groupBy("key").agg(
-        F.flatten(F.collect_list("vs")).alias("values")
+    return partial.groupBy("key").agg(
+        F.array_sort(F.flatten(F.collect_list("vs"))).alias("values")
     )
-    if sort:
-        merged = merged.select("key", F.array_sort("values").alias("values"))
-    return merged
 
 
 def salted_collect_topk(

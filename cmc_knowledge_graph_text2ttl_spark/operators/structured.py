@@ -15,7 +15,8 @@ Flattening rules (the deterministic subset that covers real markup):
 * subject = ``@id`` when present, else a stable blank id
   ``_:<url>#<block>/<index>``;
 * ``@type`` → an ``rdf:type`` triple with the type as an IRI (compact
-  names resolved against a vocabulary base, default schema.org);
+  names resolved against a vocabulary base, schema.org for
+  :func:`extract_jsonld`);
 * string/number/bool values → literal triples (numbers rendered via
   ``repr`` for floats, ``str`` for ints — deterministic);
 * list values → one triple per element;
@@ -123,20 +124,15 @@ def flatten_jsonld(
                 out.append((subj, pred, "literal", _render(v)))
 
 
-def extract_jsonld(
-    df: DataFrame,
-    html_col: str = "html",
-    url_col: str = "url",
-    vocab: str = "https://schema.org/",
-) -> DataFrame:
-    """pages → (src, subj, pred, obj_kind, obj, error) triples from
-    every JSON-LD block. The block scan is a column regex; only the
-    JSON parse + flatten runs in Python (schemaless input). A malformed
-    block yields one error row for that block; other blocks of the same
-    page still extract."""
-    html = html_string(df, html_col)
+def extract_jsonld(df: DataFrame) -> DataFrame:
+    """(url, html) pages → (src, subj, pred, obj_kind, obj, error) triples
+    from every JSON-LD block, compact names resolved against schema.org.
+    The block scan is a column regex; only the JSON parse + flatten runs
+    in Python (schemaless input). A malformed block yields one error row
+    for that block; other blocks of the same page still extract."""
+    html = html_string(df, "html")
     blocks = df.select(
-        F.col(url_col).alias("src"),
+        F.col("url").alias("src"),
         F.posexplode(
             F.regexp_extract_all(html, F.lit(_SCRIPT_RE), 1)
         ).alias("block_idx", "payload"),
@@ -158,7 +154,7 @@ def extract_jsonld(
                 if not isinstance(nid, str):
                     nid = f"_:{src}#{bidx}/{i}"
                 flatten_jsonld(
-                    node, nid, vocab, triples,
+                    node, nid, "https://schema.org/", triples,
                     f"_:{src}#{bidx}/{i}", counter,
                 )
         except (ValueError, RecursionError) as ex:

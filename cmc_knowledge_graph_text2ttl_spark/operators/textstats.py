@@ -274,14 +274,12 @@ def subword_token_counts(
 def learn_bpe_merges(
     df: DataFrame,
     n_merges: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     min_pair_count: int = 2,
 ) -> DataFrame:
     """(merge_rank, lhs, rhs, pair_count) — BPE merge-table LEARNING
-    (Sennrich et al. 2016), the training step whose output
-    :func:`subword_token_counts` applies: greedily pick the most
-    frequent adjacent symbol pair across the corpus ``n_merges`` times,
+    over the ``text`` column (Sennrich et al. 2016), the training step
+    whose output :func:`subword_token_counts` applies: greedily pick the
+    most frequent adjacent symbol pair across the corpus ``n_merges`` times,
     merging it into one symbol after each pick. Ties break (count desc,
     lhs asc, rhs asc) so the learned table is deterministic on every
     engine; learning stops early when no pair reaches
@@ -323,7 +321,7 @@ def learn_bpe_merges(
         raise ValueError("min_pair_count must be >= 1")
     norm = F.trim(
         F.regexp_replace(
-            F.lower(F.coalesce(F.col(text_col), F.lit(""))), "[^a-z0-9 ]", " "
+            F.lower(F.coalesce(F.col("text"), F.lit(""))), "[^a-z0-9 ]", " "
         )
     )
     words = (

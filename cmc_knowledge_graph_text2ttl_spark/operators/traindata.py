@@ -91,12 +91,8 @@ def chunk_documents(
     )
 
 
-def assign_split(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    weights: Dict[str, int] | None = None,
-) -> DataFrame:
-    """Stable train/val/test assignment → df + (bucket, split).
+def assign_split(df: DataFrame, weights: Dict[str, int] | None = None) -> DataFrame:
+    """Stable train/val/test assignment by ``doc_id`` → df + (bucket, split).
 
     ``weights`` maps split name → integer percent (must sum to 100);
     default 90/5/5. The bucket is the first 32 md5 bits of the id mod
@@ -110,7 +106,7 @@ def assign_split(
         weights = {"train": 90, "val": 5, "test": 5}
     if sum(weights.values()) != 100:
         raise ValueError(f"split weights must sum to 100, got {weights}")
-    bucket = (md5_int(F.col(id_col).cast("string")) % 100).cast("int")
+    bucket = (md5_int(F.col("doc_id").cast("string")) % 100).cast("int")
     expr = None
     lo = 0
     for name, pct in weights.items():
@@ -120,17 +116,16 @@ def assign_split(
     return df.withColumn("bucket", bucket).withColumn("split", expr)
 
 
-def deterministic_sample(
-    df: DataFrame, rate_bp: int, id_col: str = "doc_id"
-) -> DataFrame:
+def deterministic_sample(df: DataFrame, rate_bp: int) -> DataFrame:
     """Reproducible ``rate_bp``/10000 subsample (basis points, so 250 =
-    2.5%). Keeps rows whose md5 bucket (mod 10000) falls below the rate
-    — the same documents are kept on every engine and every run, unlike
-    ``DataFrame.sample`` whose output depends on partitioning.
+    2.5%). Keeps rows whose ``doc_id`` md5 bucket (mod 10000) falls
+    below the rate — the same documents are kept on every engine and
+    every run, unlike ``DataFrame.sample`` whose output depends on
+    partitioning.
     """
     if not 0 <= rate_bp <= 10_000:
         raise ValueError("rate_bp must be in [0, 10000]")
-    return df.where(md5_int(F.col(id_col).cast("string")) % 10_000 < rate_bp)
+    return df.where(md5_int(F.col("doc_id").cast("string")) % 10_000 < rate_bp)
 
 
 def _exclusive_prefix_sum(
@@ -199,13 +194,11 @@ def pack_chunks(
     chunks: DataFrame,
     capacity: int,
     id_col: str = "id",
-    chunk_col: str = "chunk_id",
-    weight_col: str = "n_words",
     n_parts: int = 32,
 ) -> DataFrame:
     """GPT-style sequence packing: concatenate chunks in (id, chunk_id)
-    order and cut every ``capacity`` tokens → chunks + (bin_id,
-    offset_in_bin).
+    order and cut every ``capacity`` tokens (``n_words`` per chunk) →
+    chunks + (bin_id, offset_in_bin).
 
     ``bin_id`` is the training sequence where the chunk STARTS
     (prefix_sum div capacity) and ``offset_in_bin`` its position there
@@ -216,9 +209,7 @@ def pack_chunks(
     """
     if capacity < 1:
         raise ValueError("capacity must be >= 1")
-    out = _exclusive_prefix_sum(
-        chunks, [id_col, chunk_col], weight_col, n_parts
-    )
+    out = _exclusive_prefix_sum(chunks, [id_col, "chunk_id"], "n_words", n_parts)
     return out.select(
         *chunks.columns,
         F.expr(f"_prev div {capacity}").cast("bigint").alias("bin_id"),
@@ -267,12 +258,11 @@ def stratified_sample(
     df: DataFrame,
     strata_col: str,
     k: int,
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Deterministic per-stratum sample: the ``k`` rows of each stratum
-    with the smallest md5 hash (id tie-break) — balanced sampling by
-    language/domain/source without a random seed, stable across
-    engines, runs, and partitionings.
+    with the smallest ``doc_id`` md5 hash (id tie-break) — balanced
+    sampling by language/domain/source without a random seed, stable
+    across engines, runs, and partitionings.
 
     One shuffle (the window partition by stratum); the per-stratum sort
     is bounded by stratum size. For heavily skewed strata sizes the
@@ -282,7 +272,7 @@ def stratified_sample(
     if k < 1:
         raise ValueError("k must be >= 1")
     w = Window.partitionBy(strata_col).orderBy(
-        md5_int(F.col(id_col).cast("string")), F.col(id_col)
+        md5_int(F.col("doc_id").cast("string")), F.col("doc_id")
     )
     return (
         df.withColumn("_rn", F.row_number().over(w))
@@ -293,14 +283,12 @@ def stratified_sample(
 
 def unigram_surprisal(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     scale: int = 1_000_000,
     broadcast_vocab: bool = False,
 ) -> DataFrame:
-    """Unigram-LM surprisal score per document → (id, n_tokens,
-    surprisal_scaled): the mean scaled surprisal of the document's
-    tokens under the corpus's own unigram distribution. Documents full
+    """Unigram-LM surprisal score per (doc_id, text) document → (id,
+    n_tokens, surprisal_scaled): the mean scaled surprisal of the
+    document's tokens under the corpus's own unigram distribution. Documents full
     of corpus-rare tokens (gibberish, boilerplate hashes, wrong-language
     fragments) score high — the classic cheap perplexity proxy for
     quality filtering, without a trained LM.
@@ -325,10 +313,10 @@ def unigram_surprisal(
     AQE will still broadcast a small build side), and a final per-doc
     rollup that reuses the doc-keyed clustering.
     """
-    words = F.split(F.trim(F.col(text_col)), r"\s+")
+    words = F.split(F.trim(F.col("text")), r"\s+")
     per_doc = (
-        df.where(F.length(F.trim(F.col(text_col))) > 0)
-        .select(F.col(id_col).alias("id"), F.explode(words).alias("token"))
+        df.where(F.length(F.trim(F.col("text"))) > 0)
+        .select(F.col("doc_id").alias("id"), F.explode(words).alias("token"))
         .groupBy("id", "token")
         .agg(F.count(F.lit(1)).cast("bigint").alias("tf_doc"))
     )
@@ -417,15 +405,10 @@ def embed_documents(
     )
 
 
-def corpus_vocabulary(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    top_k: int = 1000,
-) -> DataFrame:
-    """Corpus vocabulary → (token, doc_freq, term_freq), the ``top_k``
-    tokens by term frequency (ties broken by token, so the cut is
-    deterministic).
+def corpus_vocabulary(df: DataFrame, top_k: int = 1000) -> DataFrame:
+    """Vocabulary of (doc_id, text) rows → (token, doc_freq, term_freq),
+    the ``top_k`` tokens by term frequency (ties broken by token, so the
+    cut is deterministic).
 
     Two-level aggregation: per-(doc, token) counts first, then the
     global rollup — both map-side combinable, and the shuffle carries
@@ -433,10 +416,10 @@ def corpus_vocabulary(
     token streams. The final top-k compiles to TakeOrderedAndProject,
     not a global sort.
     """
-    words = F.split(F.trim(F.col(text_col)), r"\s+")
+    words = F.split(F.trim(F.col("text")), r"\s+")
     per_doc = (
-        df.where(F.length(F.trim(F.col(text_col))) > 0)
-        .select(F.col(id_col).alias("id"), F.explode(words).alias("token"))
+        df.where(F.length(F.trim(F.col("text"))) > 0)
+        .select(F.col("doc_id").alias("id"), F.explode(words).alias("token"))
         .groupBy("id", "token")
         .agg(F.count(F.lit(1)).alias("n"))
     )
@@ -454,15 +437,13 @@ def corpus_vocabulary(
 def shard_manifest(
     docs: DataFrame,
     n_shards: int,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     sub_buckets: Optional[int] = 256,
 ) -> DataFrame:
-    """(shard, n_docs, total_chars, id_digest) — the publish step of a
-    curation pipeline: deterministic md5 shard routing (the repo's
-    hashing rule, NOT rangepartitioning — range boundaries are sampled
-    and would differ run to run) plus a per-shard integrity manifest a
-    downstream trainer can verify against.
+    """(shard, n_docs, total_chars, id_digest) of (doc_id, text) rows —
+    the publish step of a curation pipeline: deterministic md5 shard
+    routing (the repo's hashing rule, NOT rangepartitioning — range
+    boundaries are sampled and would differ run to run) plus a per-shard
+    integrity manifest a downstream trainer can verify against.
 
     ``id_digest`` (default): a TWO-LEVEL digest — ids hash into
     ``sub_buckets`` sub-buckets per shard (independent md5 slice),
@@ -479,8 +460,8 @@ def shard_manifest(
     accordingly if you opt into it. Two shuffles total (or one when
     flat)."""
     assigned = docs.select(
-        F.col(id_col).cast("string").alias("id"),
-        F.length(F.col(text_col)).cast("bigint").alias("n_chars"),
+        F.col("doc_id").cast("string").alias("id"),
+        F.length(F.col("text")).cast("bigint").alias("n_chars"),
     ).withColumn(
         "shard", (md5_int(F.col("id")) % n_shards).cast("int")
     )
@@ -533,14 +514,12 @@ def shard_manifest(
 
 def perplexity_buckets(
     df: DataFrame,
-    text_col: str = "text",
-    lang_col: str = "lang",
-    id_col: str = "doc_id",
     scale: int = 1_000_000,
     n_buckets: int = 3,
 ) -> DataFrame:
     """(id, lang, n_tokens, surprisal_scaled, bucket, label) — CCNet-style
-    perplexity bucketing (Wenzek et al. 2020): per language, documents are
+    perplexity bucketing (Wenzek et al. 2020) of (doc_id, text, lang)
+    rows: per language, documents are
     split into ``n_buckets`` equal-mass buckets of their LM-quality proxy
     score, labeled head / middle / tail for the default 3 (CCNet trains on
     head+middle and drops the tail). The score is :func:`unigram_surprisal`
@@ -562,11 +541,8 @@ def perplexity_buckets(
     """
     if n_buckets < 1:
         raise ValueError("n_buckets must be >= 1")
-    scored = unigram_surprisal(df, text_col, id_col, scale).join(
-        df.select(
-            F.col(id_col).alias("id"), F.col(lang_col).alias("lang")
-        ),
-        "id",
+    scored = unigram_surprisal(df, scale).join(
+        df.select(F.col("doc_id").alias("id"), "lang"), "id"
     )
     hist = scored.groupBy("lang", "surprisal_scaled").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_val")
@@ -612,13 +588,11 @@ def mixture_sample(
     df: DataFrame,
     weights: Dict[str, int],
     total_budget: int,
-    domain_col: str = "source",
-    text_col: str = "text",
-    id_col: str = "doc_id",
     n_coarse: int = 256,
 ) -> DataFrame:
-    """(id, domain, n_tok) — token-budget mixture sampling (the static
-    data-mixing step of Pile/DoReMi-style training corpora): each domain
+    """(id, domain, n_tok) — token-budget mixture sampling of (doc_id,
+    text, source) rows, domain = ``source`` (the static data-mixing step
+    of Pile/DoReMi-style training corpora): each domain
     receives ``budget_d = total_budget * w_d div sum(w)`` tokens (integer
     weights, so the split is exact and engine-portable) and is filled by
     documents in md5(id) order — a deterministic shuffle — keeping every
@@ -657,13 +631,13 @@ def mixture_sample(
     # md5_int is 32 bits; ranges are equal h-slices so range order == h order
     width = max(1, (2**32 + n_coarse - 1) // n_coarse)
     n_tok = F.when(
-        F.length(F.trim(F.col(text_col))) == 0, F.lit(0)
-    ).otherwise(F.size(F.split(F.trim(F.col(text_col)), r"\s+")))
+        F.length(F.trim(F.col("text"))) == 0, F.lit(0)
+    ).otherwise(F.size(F.split(F.trim(F.col("text")), r"\s+")))
     toks = df.select(
-        F.col(id_col).alias("id"),
-        F.col(domain_col).alias("domain"),
+        F.col("doc_id").alias("id"),
+        F.col("source").alias("domain"),
         n_tok.cast("bigint").alias("n_tok"),
-        md5_int(F.col(id_col).cast("string")).alias("h"),
+        md5_int(F.col("doc_id").cast("string")).alias("h"),
     ).withColumn("rng", F.expr(f"h div {width}").cast("int"))
     toks = toks.join(budgets, "domain").persist()
     coarse = toks.groupBy("domain", "rng", "budget").agg(

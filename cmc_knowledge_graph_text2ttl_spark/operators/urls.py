@@ -60,9 +60,10 @@ def host_col(url: Column) -> Column:
     return F.regexp_replace(hostport, r":\d+$", "")
 
 
-def canonicalize_urls(df: DataFrame, url_col: str = "url") -> DataFrame:
-    """Adds canonical_url, host and (approximate) registered_domain."""
-    u = F.col(url_col)
+def canonicalize_urls(df: DataFrame) -> DataFrame:
+    """Adds canonical_url, host and (approximate) registered_domain of
+    the ``url`` column."""
+    u = F.col("url")
     host = host_col(u)
     return df.withColumns(
         {
@@ -162,28 +163,23 @@ def resolve_url_col(base: Column, ref: Column) -> Column:
     return F.when(r_scheme != "", ref).otherwise(resolved)
 
 
-def filter_blocked_domains(
-    df: DataFrame,
-    blocklist: DataFrame,
-    url_col: str = "url",
-    max_labels: int = 6,
-) -> DataFrame:
-    """Drop rows whose URL host matches a blocklist entry exactly OR as
+def filter_blocked_domains(df: DataFrame, blocklist: DataFrame) -> DataFrame:
+    """Drop rows whose ``url`` host matches a blocklist entry exactly OR as
     a dot-suffix (``ads.example.com`` is blocked by ``example.com``) —
     the standard crawl-curation blocklist semantics.
 
-    Scale shape: the host explodes into at most ``max_labels`` dot
-    suffixes (bounded fan-out — registrable domains are shallow) and
+    Scale shape: the host explodes into at most 6 dot suffixes
+    (bounded fan-out — registrable domains are shallow) and
     LEFT ANTI joins the blocklist on the suffix. The blocklist is a
     dimension table: Spark broadcasts it under AQE when it is small,
     and the join stays a plain key join (never a per-row UDF loop or a
     cartesian LIKE scan) when it is not.
     """
-    host = host_col(F.col(url_col))
+    host = host_col(F.col("url"))
     # suffixes: host itself + each parent domain, e.g. a.b.c ->
     # [a.b.c, b.c, c]; built with split + slice, no UDF
     labels = F.split(host, r"\.")
-    n = F.least(F.size(labels), F.lit(max_labels))
+    n = F.least(F.size(labels), F.lit(6))
     suffixes = F.transform(
         F.sequence(F.lit(1), n),
         lambda i: F.array_join(
@@ -196,10 +192,10 @@ def filter_blocked_domains(
     exploded = df.withColumn("_sfx", F.explode(suffixes))
     hit_ids = (
         exploded.join(bl, exploded["_sfx"] == bl["_blocked"], "left_semi")
-        .select(url_col)
+        .select("url")
         .distinct()
     )
-    return df.join(hit_ids, url_col, "left_anti")
+    return df.join(hit_ids, "url", "left_anti")
 
 
 # FineWeb/RefinedWeb-style URL-level quality: substring badword list
@@ -300,14 +296,10 @@ def url_quality(
     )
 
 
-def host_stats(
-    df: DataFrame,
-    url_col: str = "url",
-    id_col: str = "doc_id",
-    **quality_kwargs,
-) -> DataFrame:
+def host_stats(df: DataFrame, **quality_kwargs) -> DataFrame:
     """(host, n_docs, n_kept, n_badword, mean_url_len, max_path_depth)
-    — per-host crawl-quality aggregates over :func:`url_quality`.
+    — per-host crawl-quality aggregates over :func:`url_quality` of
+    (doc_id, url) rows.
 
     The host-reputation table curation pipelines join against: a host
     whose pages are mostly URL-rejected gets demoted wholesale (the
@@ -318,7 +310,7 @@ def host_stats(
     combinable groupBy on host; no buffers, no windows — safe on a
     100 TB frontier where one host can own 10^8 URLs.
     """
-    q = url_quality(df, url_col, id_col, **quality_kwargs)
+    q = url_quality(df, **quality_kwargs)
     return (
         q.groupBy("host")
         .agg(

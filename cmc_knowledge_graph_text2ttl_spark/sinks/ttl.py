@@ -34,13 +34,14 @@ def _escape_col(c: Column) -> Column:
 
 def ntriples_line() -> Column:
     """The N-Triples line of a triples-table row: ``<subj> <pred> obj .``,
-    the object as <iri>, "lit", "lit"@lang or "lit"^^<dt>."""
+    the object as <iri>, "lit", "lit"@lang or "lit"^^<dt>; an empty
+    lang or datatype counts as absent, as in ``triples_to_nt_lines``."""
     lexical, lang, datatype = F.col("obj_lexical"), F.col("obj_lang"), F.col("obj_datatype")
     lit = F.concat(F.lit('"'), _escape_col(lexical), F.lit('"'))
     obj = (
         F.when(F.col("obj_kind") == "iri", F.concat(F.lit("<"), lexical, F.lit(">")))
-        .when(lang.isNotNull(), F.concat(lit, F.lit("@"), lang))
-        .when(datatype.isNotNull(), F.concat(lit, F.lit("^^<"), datatype, F.lit(">")))
+        .when(F.length(lang) > 0, F.concat(lit, F.lit("@"), lang))
+        .when(F.length(datatype) > 0, F.concat(lit, F.lit("^^<"), datatype, F.lit(">")))
         .otherwise(lit)
     )
     return F.concat(

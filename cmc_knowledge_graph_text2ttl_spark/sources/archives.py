@@ -13,7 +13,7 @@ Scale notes:
 * archives are whole-file units by construction (tar has no central
   index; zip's is at EOF) — parallelism comes from MANY archives, the
   same story as .warc.gz segments; shard accordingly upstream;
-* ``max_member_bytes`` caps one member's buffer (a pathological
+* ``MAX_MEMBER_BYTES`` caps one member's buffer (a pathological
   archive must not blow an Arrow batch); oversized members become
   per-member error rows, the rest of the archive still loads;
 * format is sniffed from magic bytes (zip PK, gzip 1f8b wrapping a
@@ -39,6 +39,8 @@ from pyspark.sql.types import (
 from ..operators.columns import map_rows
 
 __all__ = ["read_archives", "ARCHIVE_SCHEMA"]
+
+MAX_MEMBER_BYTES = 64 * 1024 * 1024
 
 ARCHIVE_SCHEMA = StructType(
     [
@@ -99,16 +101,14 @@ def _iter_members(
     return out
 
 
-def read_archives(
-    spark: SparkSession, path: str, max_member_bytes: int = 64 * 1024 * 1024
-) -> DataFrame:
+def read_archives(spark: SparkSession, path: str) -> DataFrame:
     """Archives under ``path`` (glob ok) → one row per file member:
     (archive_file, member, data, n_bytes, error)."""
     files = spark.read.format("binaryFile").load(path)
 
     def row_fn(fpath, content):
         try:
-            members = _iter_members(bytes(content), max_member_bytes)
+            members = _iter_members(bytes(content), MAX_MEMBER_BYTES)
         except (ValueError, zipfile.BadZipFile, OSError) as ex:
             return [(fpath, None, None, None, str(ex))]
         return [

@@ -38,21 +38,17 @@ def stream_triples(
     programs: List[WorkflowProgram],
     out_path: str,
     checkpoint: str,
-    graphs: Optional[dict] = None,
-    available_now: bool = True,
 ):
-    """pages stream → winner triples parquet sink (append, exactly-once)."""
-    ranked = extract_and_run_workflows(
-        pages_stream, programs, graphs=graphs, select_best=True
-    )
+    """pages stream → winner triples parquet sink (append, exactly-once),
+    one ``availableNow`` run over the files present at start."""
+    ranked = extract_and_run_workflows(pages_stream, programs, select_best=True)
     triples = explode_triples(ranked, winners_only=True)
-    writer = (
+    return (
         triples.writeStream.format("parquet")
         .option("path", out_path)
         .option("checkpointLocation", checkpoint)
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 

@@ -608,14 +608,7 @@ class DocInterpreter:
                     f"datetime object: {v!r} does not match format {fmt}"
                 )
         if iri:
-            iri = self.expand(iri)
-            m = _PREFIX_REF.match(iri)
-            if m:
-                ns = self._prefixes.get(m.group(1))
-                if ns is None:
-                    raise ProcessorException(f"no prefix declaration in scope for {m.group(1)!r}")
-                return IriNode(ns + m.group(2))
-            return IriNode(iri)
+            return self._parse_node(iri)
         if text is not None:
             t = self.expand(text)
             if lang:

@@ -84,7 +84,7 @@ class TestSameAsFixture:
             .csv(f"{FIX}/linking/sameas_edges.csv")
             .select(F.col("src_iri").alias("src"), F.col("dst_iri").alias("dst"))
         )
-        comp = connected_components(edges, salt_hubs=8)
+        comp = connected_components(edges, small_graph_threshold=0)
         m = {r.node: r.component for r in comp.collect()}
         # chain c0..c5 collapses to its lexicographic min
         assert {m[f"http://x/chain_{i}"] for i in range(6)} == {"http://x/chain_0"}

@@ -5,6 +5,7 @@ distributed-equivalence (partitioning must not change results).
 import hashlib
 
 import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from cmc_knowledge_graph_text2ttl_spark.operators import (
@@ -63,6 +64,14 @@ class TestEndToEnd:
     def test_triples_produced(self, ranked):
         tri = explode_triples(ranked, winners_only=True)
         assert tri.count() > N_DOCS  # every doc family emits multiple triples
+
+    def test_winners_only_without_is_best_fails(self, spark, fixture_programs):
+        # results without a winner flag must not pass every candidate's
+        # triples off as the winners'
+        results = run_workflows(extract_text(synth_pages_df(spark, 4)), fixture_programs)
+        assert "is_best" not in results.columns
+        with pytest.raises(AnalysisException):
+            explode_triples(results, winners_only=True).schema
 
     def test_no_unexpected_errors(self, ranked):
         assert ranked.filter("error is not null").count() == 0

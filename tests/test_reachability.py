@@ -21,7 +21,7 @@ Both checks read the AST only; nothing is imported.
    are nodes too, so a use in ``f"{_helper(x)}"`` counts, while a word in
    a docstring does not.
 3. Every defaulted parameter of a public function (module level, or a
-   public method of a public class) in the CLI's import closure must be
+   public method of a public class) in any package module must be
    passed by some call in some repo ``.py`` file, tests included: a test
    that forces a guard or injects a fake is a real use. Calls match by
    function name; a positional argument, a keyword, or a ``*args`` /
@@ -344,13 +344,10 @@ def unset_parameters(functions, trees):
     ]
 
 
-def closure_unset_parameters(inside_cli=True):
-    """Unset parameters of the modules inside (or outside) the CLI's
-    import closure, against every repo file."""
+def package_unset_parameters():
+    """Unset parameters of every package module, against every repo file."""
     graph = ImportGraph()
-    cli = graph.reach([(m, None) for m in ROOT_MODULES])
-    mods = sorted(m for m in graph.paths if (m in cli) == inside_cli)
-    functions = [f for mod in mods for f in public_functions(graph.trees[mod], mod)]
+    functions = [f for mod in sorted(graph.paths) for f in public_functions(graph.trees[mod], mod)]
     return unset_parameters(functions, [_parse(p) for p in repo_files()])
 
 
@@ -539,12 +536,10 @@ def registry_closures():
 
 def family_map():
     """Markdown rows for every package module the CLI does not import:
-    module, line count, unset parameters (check 3's rule), and the
-    registry queries that reach it."""
+    module, line count, and the registry queries that reach it."""
     graph = ImportGraph()
     cli = graph.reach([(m, None) for m in ROOT_MODULES])
     closures = registry_closures()
-    unset = [p.split(":", 1)[0] for p in closure_unset_parameters(inside_cli=False)]
     rows = []
     for mod in sorted(graph.paths):
         if mod in cli or graph.is_package(mod):
@@ -553,7 +548,7 @@ def family_map():
         queries = [q[2:] for q, reached in closures.items() if mod in reached]
         path = graph.paths[mod].relative_to(PKG).as_posix()
         rows.append(
-            f"| `{path}` | {n_lines} | {unset.count(mod)} | {len(queries)} | {', '.join(queries)} |"
+            f"| `{path}` | {n_lines} | {len(queries)} | {', '.join(queries)} |"
         )
     return rows
 
@@ -571,7 +566,7 @@ def test_every_module_level_import_is_used():
 
 
 def test_every_defaulted_parameter_is_set_by_some_caller():
-    assert closure_unset_parameters() == []
+    assert package_unset_parameters() == []
 
 
 def test_every_public_method_is_referenced_outside_tests():
