@@ -947,7 +947,7 @@ def q_entity_link(spark, sf_dir):
             )
         ).alias("mention"),
     ).distinct()
-    out = link_mentions(mentions, LINK_DICT, LINK_PATTERNS, ignore_case=True)
+    out = link_mentions(mentions, LINK_DICT, LINK_PATTERNS)
     return out.select("doc_id", "mention", "canonical_iri", "linked")
 
 
@@ -1172,16 +1172,16 @@ def q_dedup_decontaminate(spark, sf_dir):
     column is required of it."""
     docs = _docs(spark, sf_dir)
     bench = docs.filter(F.col("doc_id") < 5).select("text")
-    return D.decontaminate(docs, bench, n=13, unit="word")
+    return D.decontaminate(docs, bench, unit="word")
 
 
 def q_dedup_ngram_jaccard(spark, sf_dir):
-    pairs = D.ngram_jaccard_pairs(_docs(spark, sf_dir), n=5, threshold=0.5)
+    pairs = D.ngram_jaccard_pairs(_docs(spark, sf_dir), threshold=0.5)
     return pairs.select("id_a", "id_b", _fl(F.col("jaccard")).alias("jaccard_scaled"))
 
 
 def q_dedup_minhash_signatures(spark, sf_dir):
-    return D.minhash_signatures(_docs(spark, sf_dir), n_hashes=8, shingle_n=5)
+    return D.minhash_signatures(_docs(spark, sf_dir), n_hashes=8)
 
 
 def q_dedup_minhash_lsh(spark, sf_dir):
@@ -1237,7 +1237,7 @@ def q_text_lang_id(spark, sf_dir):
 
 
 def q_text_fingerprint(spark, sf_dir):
-    return TS.fingerprint(_docs(spark, sf_dir), shingle_n=8)
+    return TS.fingerprint(_docs(spark, sf_dir))
 
 
 def q_text_pii(spark, sf_dir):
@@ -1428,7 +1428,7 @@ def q_corpus_safety(spark, sf_dir):
     )
     allowed = filter_blocked_domains(pages, blocklist)
     scrubbed = scrub_pii(allowed)  # id, text, n_email, n_ipv4, n_phone
-    verdict = c4_gopher_rules(scrubbed, text_col="text", id_col="id")
+    verdict = c4_gopher_rules(scrubbed, id_col="id")
     return (
         scrubbed.select(
             "id",
@@ -2316,7 +2316,7 @@ def q_entity_link_embedding(spark, sf_dir):
             "name"
         ),
     )
-    out = embedding_link(docs, ents, dim=32)
+    out = embedding_link(docs, ents)
     return out.select(
         "id", "entity_id", _fl(F.col("cosine")).alias("cosine_scaled")
     )
@@ -2393,7 +2393,7 @@ def q_ann_ivf_topk(spark, sf_dir):
     emb = _emb(spark, sf_dir)
     qv = [float(x) for x in emb.filter("vec_id = 1").first().embedding]
     cents = SIM.make_centroids(emb, n_cells=IVF_CELLS, quantize=IVF_Q)
-    top = SIM.ivf_topk(emb, qv, k=10, centroids=cents, n_probe=IVF_PROBE)
+    top = SIM.ivf_topk(emb, qv, centroids=cents, n_probe=IVF_PROBE)
     return top.select("id", _fl(F.col("cosine")).alias("cosine_scaled"))
 
 
@@ -3841,7 +3841,7 @@ def q_events_sessions(spark, sf_dir):
     from cmc_knowledge_graph_text2ttl_spark.operators.sessions import sessionize
 
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return sessionize(ev, gap_minutes=30).select(
+    return sessionize(ev).select(
         "user_id", "session_no", "session_start", "session_end", "n_events"
     )
 

@@ -68,7 +68,6 @@ def main(argv=None) -> int:
     from .sources import read_pages
     from .workflow.compile import compile_workflow_file
     from .workflow.remote import is_remote_graph, resolve_graphs
-    from .workflow.sparql import parse_ttl
 
     wf_paths = sorted(glob.glob(args.workflows))
     if not wf_paths:
@@ -90,7 +89,7 @@ def main(argv=None) -> int:
     graph_specs = {}
     if args.ontology:
         with open(args.ontology, "r", encoding="utf8") as fh:
-            graph_specs[args.ontology] = parse_ttl(fh.read())
+            graph_specs[args.ontology] = fh.read()  # named by its path
     for g in args.graph:
         if "=" not in g:
             print(f'invalid --graph "{g}"; must be NAME=SPEC', file=sys.stderr)

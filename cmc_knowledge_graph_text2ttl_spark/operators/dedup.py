@@ -140,9 +140,9 @@ def exact_duplicates(df: DataFrame, max_ids: int = 1000) -> DataFrame:
     )
 
 
-def ngram_jaccard_pairs(df: DataFrame, n: int = 5, threshold: float = 0.8) -> DataFrame:
+def ngram_jaccard_pairs(df: DataFrame, threshold: float = 0.8) -> DataFrame:
     """All pairs of (doc_id, text) rows (id_a < id_b) with shingle-set
-    Jaccard >= threshold.
+    (character 5-gram) Jaccard >= threshold.
 
     Exact (no approximation): shingle equijoin computes |A∩B| per pair,
     per-doc distinct counts give |A|,|B|.
@@ -154,7 +154,7 @@ def ngram_jaccard_pairs(df: DataFrame, n: int = 5, threshold: float = 0.8) -> Da
     path is minhash_lsh_pairs (candidates only, verification restricted
     to candidate ids).
     """
-    sh = shingles(df, "text", "doc_id", n).persist()
+    sh = shingles(df, "text", "doc_id").persist()
     sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("sz"))
     inter = (
         sh.alias("a")
@@ -176,15 +176,15 @@ def ngram_jaccard_pairs(df: DataFrame, n: int = 5, threshold: float = 0.8) -> Da
     return out
 
 
-def minhash_signatures(df: DataFrame, n_hashes: int = 16, shingle_n: int = 5) -> DataFrame:
-    """(id, h0..h{k-1}) minhash signature of (doc_id, text) rows via ONE
-    grouped aggregation.
+def minhash_signatures(df: DataFrame, n_hashes: int = 16) -> DataFrame:
+    """(id, h0..h{k-1}) minhash signature of (doc_id, text) rows' character
+    5-gram shingles via ONE grouped aggregation.
 
     The k min() aggregates are map-side combinable: each partition reduces
     its shingles locally before the single shuffle on id.
     """
     assert n_hashes <= MINHASH_MAX_HASHES
-    sh = shingles(df, "text", "doc_id", shingle_n)
+    sh = shingles(df, "text", "doc_id")
     # project the md5 ONCE per shingle — as an agg-function input it would
     # be re-evaluated per hash function (n_hashes x md5 per shingle)
     hx = sh.select("id", md5_int(F.col("shingle")).alias("x"))
@@ -430,12 +430,11 @@ def decontaminate(
     df: DataFrame,
     benchmark: DataFrame,
     bench_text_col: str = "text",
-    n: int = 13,
     unit: str = "word",
 ) -> DataFrame:
     """(id, contaminated) — GPT-3/Pile-style test-set decontamination:
     a training document (doc_id, text) is contaminated iff it shares at
-    least one ``n``-gram with ANY benchmark document.
+    least one 13-gram with ANY benchmark document.
 
     ``unit='word'`` (default) matches the published GPT-3/Pile recipe:
     13 lowercase word-grams. ``unit='char'`` is the character-gram
@@ -455,13 +454,13 @@ def decontaminate(
     if unit not in ("word", "char"):
         raise ValueError(f"unit must be 'word' or 'char', got {unit!r}")
     mk = word_shingles if unit == "word" else shingles
-    corpus_sh = mk(df, "text", "doc_id", n)
+    corpus_sh = mk(df, "text", "doc_id", 13)
     bench_sh = (
         mk(
             benchmark.select(F.lit(0).alias("__bench_id"), F.col(bench_text_col)),
             bench_text_col,
             "__bench_id",
-            n,
+            13,
         )
         .select("shingle")
         .distinct()

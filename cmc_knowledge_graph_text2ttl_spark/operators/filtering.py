@@ -124,10 +124,10 @@ def corpus_report(
 
 def c4_gopher_rules(
     docs: DataFrame,
-    text_col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """(id, n_words, n_sentences, mean_word_len_x100, keep, reasons) —
+    """(id, n_words, n_sentences, mean_word_len_x100, keep, reasons) of
+    each document's ``text`` column —
     the published C4 + Gopher document-level heuristics as pure column
     expressions (zero UDFs, map-side only):
 
@@ -139,20 +139,20 @@ def c4_gopher_rules(
     ``mean_word_len_x100`` is the floor-scaled integer (total
     non-space chars * 100 // words) — the partition-independent form
     every cross-engine mean in this repo uses."""
-    words = F.split(F.trim(F.col(text_col)), r"\s+")
+    words = F.split(F.trim(F.col("text")), r"\s+")
     n_words = F.when(
-        F.length(F.trim(F.col(text_col))) == 0, F.lit(0)
+        F.length(F.trim(F.col("text"))) == 0, F.lit(0)
     ).otherwise(F.size(words))
-    n_sent = F.length(F.col(text_col)) - F.length(
-        F.regexp_replace(F.col(text_col), r"[.!?]", "")
+    n_sent = F.length(F.col("text")) - F.length(
+        F.regexp_replace(F.col("text"), r"[.!?]", "")
     )
-    n_chars = F.length(F.regexp_replace(F.col(text_col), r"\s+", ""))
+    n_chars = F.length(F.regexp_replace(F.col("text"), r"\s+", ""))
     mwl100 = F.when(n_words > 0, (n_chars * 100).cast("bigint") / n_words)
     mwl100 = F.floor(mwl100).cast("bigint")
-    lower = F.lower(F.col(text_col))
+    lower = F.lower(F.col("text"))
     reasons = F.array_compact(
         F.array(
-            F.when(F.col(text_col).contains("{"), F.lit("curly_brace")),
+            F.when(F.col("text").contains("{"), F.lit("curly_brace")),
             F.when(lower.contains("lorem ipsum"), F.lit("lorem_ipsum")),
             F.when(lower.contains("enable javascript"), F.lit("javascript")),
             F.when(n_sent < 3, F.lit("too_few_sentences")),

@@ -27,6 +27,8 @@ from __future__ import annotations
 
 from typing import List, Tuple
 
+from .malformed import malformed_input
+
 __all__ = ["decode_flac"]
 
 _FIXED_COEFS = ([], [1], [2, -1], [3, -3, 1], [4, -6, 4, -1])
@@ -199,11 +201,13 @@ def _read_subframe(br: _Bits, blocksize: int, bps: int) -> List[int]:
     return samples
 
 
+@malformed_input("FLAC")
 def decode_flac(data: bytes) -> Tuple[int, int, int, List[int]]:
     """bytes → (channels, sample_rate, n_frames, interleaved samples)
     — the same contract as multimodal.decode_wav (n_frames = SAMPLE
     frames, i.e. samples per channel), so every consumer
-    (audio_features, audio_fingerprint) works unchanged."""
+    (audio_features, audio_fingerprint) works unchanged. Malformed
+    input raises ValueError."""
     if data[:4] != b"fLaC":
         raise ValueError("not a FLAC stream")
     pos = 4

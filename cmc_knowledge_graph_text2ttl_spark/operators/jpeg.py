@@ -28,6 +28,8 @@ from typing import Dict, List, Tuple
 
 import numpy as np
 
+from .malformed import malformed_input
+
 __all__ = ["decode_jpeg", "ZIGZAG"]
 
 # zigzag scan order: index i in the stream → position ZIGZAG[i] (row*8+col)
@@ -143,22 +145,12 @@ def _extend(v: int, t: int) -> int:
     return v if v >= (1 << (t - 1)) else v - (1 << t) + 1
 
 
+@malformed_input("JPEG")
 def decode_jpeg(data: bytes) -> Tuple[int, int, int, bytes]:
     """bytes → (width, height, channels, pixels row-major).
 
-    All malformed-input failures surface as ``ValueError`` (truncated
-    streams and missing tables would otherwise escape as IndexError/
-    KeyError past the callers' per-row error containment and kill the
-    whole Spark task instead of producing an error row)."""
-    try:
-        return _decode_jpeg_impl(data)
-    except (IndexError, KeyError, struct.error) as ex:
-        raise ValueError(
-            f"corrupt JPEG stream: {type(ex).__name__}: {ex}"
-        ) from ex
-
-
-def _decode_jpeg_impl(data: bytes) -> Tuple[int, int, int, bytes]:
+    Malformed input raises ``ValueError``: a truncated stream, a
+    missing table or a zero sampling factor included."""
     if data[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG")
     pos = 2

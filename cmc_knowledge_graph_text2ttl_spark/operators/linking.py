@@ -88,13 +88,12 @@ def link_mentions(
     mentions: DataFrame,
     dictionary: List[Tuple[str, str]],
     patterns: Optional[List[Tuple[str, str]]] = None,
-    ignore_case: bool = True,
 ) -> DataFrame:
-    """Full linking of the ``mention`` column: exact broadcast join first,
-    regex cascade on misses, identity (null canonical) otherwise — the
-    reference's mapping application order (processor.py:2067-2104) as a
-    distributed plan."""
-    out = link_exact(mentions, dictionary, ignore_case=ignore_case)
+    """Full linking of the ``mention`` column: case-insensitive exact
+    broadcast join first, regex cascade on misses, identity (null
+    canonical) otherwise — the reference's mapping application order
+    (processor.py:2067-2104) as a distributed plan."""
+    out = link_exact(mentions, dictionary)
     if patterns:
         out = link_patterns(out, patterns)
     return out.withColumn("linked", F.col("canonical_iri").isNotNull())
@@ -103,13 +102,13 @@ def link_mentions(
 def embedding_link(
     docs: DataFrame,
     entities: DataFrame,
-    dim: int = 32,
     threshold: Optional[float] = None,
 ) -> DataFrame:
     """(id, entity_id, cosine) — EMBEDDING-tier entity linking: each
     (doc_id, text) document links to the (entity_id, name) entity whose
-    feature-hash embedding (traindata.embed_documents — md5 buckets, ±tf
-    signs, all-integer) is most cosine-similar to the document's. The
+    32-dimensional feature-hash embedding (traindata.embed_documents —
+    md5 buckets, ±tf signs, all-integer) is most cosine-similar to the
+    document's. The
     complement of the dictionary tier (link_exact / link_patterns):
     surface-form misses still land on the right entity when the
     surrounding vocabulary overlaps.
@@ -130,6 +129,7 @@ def embedding_link(
     """
     from .traindata import embed_documents
 
+    dim = 32
     de = embed_documents(docs, "text", "doc_id", dim)
     ee = embed_documents(entities, "name", "entity_id", dim)
 
@@ -144,7 +144,7 @@ def embedding_link(
     # Hoist the per-ROW work out of the doc×entity loop: norms and the
     # int->double casts are O(N·dim) here but were O(N·E·dim) when
     # recomputed inside the cross-join expressions (three aggregate
-    # folds per PAIR). And because ``dim`` is a static parameter, the
+    # folds per PAIR). And because ``dim`` is a constant, the
     # per-pair dot unrolls into a codegen'd left-associative Add chain —
     # the identical ((0+x0)+x1)+... fold order as the old
     # zip_with/aggregate, so every cosine is bit-identical, without the

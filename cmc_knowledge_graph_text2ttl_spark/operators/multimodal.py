@@ -6,10 +6,15 @@ partitioning, dispatch. Codec support is pure-Python/stdlib:
 
 * header sniffing (PNG IHDR / GIF screen / JPEG SOF scan / WAV / MP4)
   gives type, format and pixel dimensions without decoding payloads;
-* ``decode_image`` is a REAL PNG decoder (stdlib ``zlib`` inflate +
-  scanline unfiltering, 8-bit gray/RGB/RGBA) — no external codec
-  library; other formats raise with a clear message and the
-  ``extract_features`` stage degrades to a marker feature;
+* ``sniff_media``'s format picks the decoder from one table per kind:
+  ``decode_image`` (PNG, GIF, JPEG, BMP, TIFF, lossless WebP, ICO),
+  ``decode_frames`` (animated GIF, AVI, APNG, animated WebP) and
+  ``decode_audio`` (WAV, AIFF, FLAC) — real pure-Python decoders, no
+  external codec library; other formats raise ``NotImplementedError``;
+* every public decoder carries ``malformed.malformed_input``, so a
+  malformed blob raises ``ValueError``, and every consumer catches
+  ``MEDIA_ERRORS`` per row — a bad blob is a skipped or error row,
+  never a failed task;
 * the deterministic fixture encoders (PNG, GIF, BMP, TIFF, WAV, ...)
   live in the repo-root ``fixture_writers.py``.
 
@@ -40,6 +45,10 @@ from pyspark.sql.types import (
 )
 
 from .columns import map_rows
+from .flac import decode_flac
+from .jpeg import decode_jpeg
+from .malformed import MEDIA_ERRORS, malformed_input
+from .vp8l import decode_webp, parse_webp_anim
 
 MEDIA_META_SCHEMA = StructType(
     [
@@ -520,20 +529,6 @@ _ADAM7 = (
 )
 
 
-def decode_png(data: bytes) -> Tuple[int, int, int, bytes]:
-    """Real pure-Python PNG decode: (width, height, channels, raw pixels).
-
-    Malformed input always surfaces as ``ValueError``/``zlib.error`` —
-    truncated chunks would otherwise escape as struct.error/IndexError
-    past the per-row containment in extract_features/resize_media and
-    kill the whole Spark task (same contract as decode_jpeg).
-    """
-    try:
-        return _decode_png_impl(data)
-    except (struct.error, IndexError) as ex:
-        raise ValueError(f"corrupt PNG stream: {type(ex).__name__}: {ex}") from ex
-
-
 def _png_unfilter(raw: bytes, off: int, nbytes: int, height: int, bpp: int):
     """Reverse per-scanline filters (None/Sub/Up/Average/Paeth, PNG
     spec §9) over one (sub)image of ``height`` rows × ``nbytes`` filtered
@@ -593,8 +588,9 @@ def _png_row_samples(line, width: int, spp: int, bitd: int):
     return vals
 
 
-def _decode_png_impl(data: bytes) -> Tuple[int, int, int, bytes]:
-    """(see :func:`decode_png`)
+@malformed_input("PNG")
+def decode_png(data: bytes) -> Tuple[int, int, int, bytes]:
+    """Real pure-Python PNG decode: (width, height, channels, raw pixels).
 
     stdlib only — zlib inflate of the IDAT stream, per-scanline reverse
     filtering, then sample assembly. Supports every PNG pixel format:
@@ -603,6 +599,8 @@ def _decode_png_impl(data: bytes) -> Tuple[int, int, int, bytes]:
     Adam7-interlaced. 16-bit samples reduce to their high byte; sub-byte
     gray scales to 0-255; palette output is RGB (RGBA when tRNS is
     present). Returns pixels row-major, ``channels`` bytes per pixel.
+    Malformed input raises ``ValueError`` (a corrupt IDAT stream's
+    ``zlib.error`` included).
     """
     if data[:8] != b"\x89PNG\r\n\x1a\n":
         raise ValueError("not a PNG")
@@ -687,94 +685,84 @@ def _decode_png_impl(data: bytes) -> Tuple[int, int, int, bytes]:
     return (width, height, spp, bytes(img))
 
 
-def decode_image(data: bytes):
-    """bytes → (width, height, channels, raw pixels). Real for PNG,
-    GIF, BMP, uncompressed TIFF, lossless WebP (VP8L — the common
-    thumbnail re-encode; lossy VP8 still raises) and JPEG
-    (``operators/jpeg.py``, pure Python + numpy); other formats raise
-    ``NotImplementedError`` — inject a decoder via
-    ``extract_features(decoder=...)``."""
-    if data[:8] == b"\x89PNG\r\n\x1a\n":
-        return decode_png(data)
-    if data[:6] in (b"GIF87a", b"GIF89a"):
-        return decode_gif(data)
-    if data[:2] == b"\xff\xd8":
-        from .jpeg import decode_jpeg
-
-        return decode_jpeg(data)
-    if data[:2] == b"BM":
-        return decode_bmp(data)
-    if data[:4] in (b"II*\x00", b"MM\x00*"):
-        return decode_tiff(data)
-    if data[:4] == b"RIFF" and data[8:12] == b"WEBP":
-        from .vp8l import decode_webp
-
-        return decode_webp(data)
-    if data[:4] == b"\x00\x00\x01\x00":
-        return decode_ico(data)
+def _decode_as(kind: str, table: dict, data: bytes):
+    """Decode ``data`` with ``table``'s decoder for its sniffed format;
+    a format the table lacks raises ``NotImplementedError``."""
     mtype, fmt, _, _ = sniff_media(data)
-    raise NotImplementedError(
-        f"no pure-Python decoder for {mtype}/{fmt}; PNG, GIF, BMP, "
-        "TIFF, lossless WebP, ICO and JPEG are supported — "
-        "inject decoder= for other codecs"
-    )
+    decode = table.get(fmt)
+    if decode is None:
+        raise NotImplementedError(
+            f"no pure-Python {kind} decoder for {mtype}/{fmt}; "
+            f"{', '.join(table)} are supported — inject decoder= for "
+            "other codecs"
+        )
+    return decode(data)
 
 
+def decode_image(data: bytes) -> Tuple[int, int, int, bytes]:
+    """bytes → (width, height, channels, raw pixels). Real for PNG,
+    GIF, JPEG (``operators/jpeg.py``, pure Python + numpy), BMP,
+    uncompressed/LZW/Deflate/PackBits TIFF, lossless WebP (VP8L — the
+    common thumbnail re-encode; lossy VP8 raises
+    ``NotImplementedError``) and ICO; other formats raise
+    ``NotImplementedError`` and malformed input ``ValueError``. Inject
+    another decoder via ``extract_features(decoder=...)``."""
+    return _decode_as("image", _IMAGE_DECODERS, data)
+
+
+@malformed_input("BMP")
 def decode_bmp(data: bytes) -> Tuple[int, int, int, bytes]:
     """Uncompressed Windows BMP (BI_RGB, 8-bit palette / 24 / 32-bit)
     → (w, h, channels, row-major RGB(A) pixels). BMP stores rows
     bottom-up (unless height < 0) with BGR byte order and 4-byte row
     padding — all normalized here."""
-    try:
-        if data[:2] != b"BM":
-            raise ValueError("not a BMP")
-        (pix_off,) = struct.unpack("<I", data[10:14])
-        (hdr_size,) = struct.unpack("<I", data[14:18])
-        if hdr_size < 40:
-            raise ValueError(f"BMP core-header size {hdr_size} unsupported")
-        w, h = struct.unpack("<ii", data[18:26])
-        planes, bpp = struct.unpack("<HH", data[26:30])
-        (comp,) = struct.unpack("<I", data[30:34])
-        if comp != 0:
-            raise ValueError(f"BMP compression {comp} unsupported (BI_RGB only)")
-        if bpp not in (8, 24, 32):
-            raise ValueError(f"BMP bit depth {bpp} unsupported")
-        top_down = h < 0
-        h = abs(h)
-        if w <= 0 or h <= 0 or w * h > 64_000_000:
-            raise ValueError(f"BMP dimensions {w}x{h} out of range")
-        palette = None
-        if bpp == 8:
-            (n_colors,) = struct.unpack("<I", data[46:50])
-            n_colors = n_colors or 256
-            pal_off = 14 + hdr_size
-            palette = data[pal_off : pal_off + 4 * n_colors]
-            if len(palette) < 4 * n_colors:
-                raise ValueError("BMP palette truncated")
-        stride = (w * bpp // 8 + 3) & ~3
-        ch = 4 if bpp == 32 else 3
-        out = bytearray(w * h * ch)
-        for row in range(h):
-            src = pix_off + (row if top_down else h - 1 - row) * stride
-            line = data[src : src + stride]
-            if len(line) < w * bpp // 8:
-                raise ValueError("BMP pixel data truncated")
-            for x in range(w):
-                o = (row * w + x) * ch
-                if bpp == 8:
-                    idx = line[x] * 4
-                    out[o] = palette[idx + 2]
-                    out[o + 1] = palette[idx + 1]
-                    out[o + 2] = palette[idx]
-                elif bpp == 24:
-                    b_, g, r = line[3 * x : 3 * x + 3]
-                    out[o], out[o + 1], out[o + 2] = r, g, b_
-                else:
-                    b_, g, r, a = line[4 * x : 4 * x + 4]
-                    out[o], out[o + 1], out[o + 2], out[o + 3] = r, g, b_, a
-        return (w, h, ch, bytes(out))
-    except (struct.error, IndexError) as ex:
-        raise ValueError(f"corrupt BMP stream: {type(ex).__name__}: {ex}") from ex
+    if data[:2] != b"BM":
+        raise ValueError("not a BMP")
+    (pix_off,) = struct.unpack("<I", data[10:14])
+    (hdr_size,) = struct.unpack("<I", data[14:18])
+    if hdr_size < 40:
+        raise ValueError(f"BMP core-header size {hdr_size} unsupported")
+    w, h = struct.unpack("<ii", data[18:26])
+    planes, bpp = struct.unpack("<HH", data[26:30])
+    (comp,) = struct.unpack("<I", data[30:34])
+    if comp != 0:
+        raise ValueError(f"BMP compression {comp} unsupported (BI_RGB only)")
+    if bpp not in (8, 24, 32):
+        raise ValueError(f"BMP bit depth {bpp} unsupported")
+    top_down = h < 0
+    h = abs(h)
+    if w <= 0 or h <= 0 or w * h > 64_000_000:
+        raise ValueError(f"BMP dimensions {w}x{h} out of range")
+    palette = None
+    if bpp == 8:
+        (n_colors,) = struct.unpack("<I", data[46:50])
+        n_colors = n_colors or 256
+        pal_off = 14 + hdr_size
+        palette = data[pal_off : pal_off + 4 * n_colors]
+        if len(palette) < 4 * n_colors:
+            raise ValueError("BMP palette truncated")
+    stride = (w * bpp // 8 + 3) & ~3
+    ch = 4 if bpp == 32 else 3
+    out = bytearray(w * h * ch)
+    for row in range(h):
+        src = pix_off + (row if top_down else h - 1 - row) * stride
+        line = data[src : src + stride]
+        if len(line) < w * bpp // 8:
+            raise ValueError("BMP pixel data truncated")
+        for x in range(w):
+            o = (row * w + x) * ch
+            if bpp == 8:
+                idx = line[x] * 4
+                out[o] = palette[idx + 2]
+                out[o + 1] = palette[idx + 1]
+                out[o + 2] = palette[idx]
+            elif bpp == 24:
+                b_, g, r = line[3 * x : 3 * x + 3]
+                out[o], out[o + 1], out[o + 2] = r, g, b_
+            else:
+                b_, g, r, a = line[4 * x : 4 * x + 4]
+                out[o], out[o + 1], out[o + 2], out[o + 3] = r, g, b_, a
+    return (w, h, ch, bytes(out))
 
 
 def _tiff_lzw_decode(data: bytes) -> bytes:
@@ -842,6 +830,7 @@ def _packbits_decode(data: bytes) -> bytes:
     return bytes(out)
 
 
+@malformed_input("TIFF")
 def decode_tiff(data: bytes) -> Tuple[int, int, int, bytes]:
     """TIFF (chunky planar, 8-bit gray or RGB(A), strip layout) →
     (w, h, channels, pixels). Both byte orders; multi-strip images
@@ -849,89 +838,82 @@ def decode_tiff(data: bytes) -> Tuple[int, int, int, bytes]:
     early change), Adobe/zlib Deflate (8), PackBits (32773); the
     horizontal-differencing Predictor (tag 317 = 2) is undone per row
     and channel after decompression."""
-    try:
-        end = "<" if data[:2] == b"II" else ">"
-        (ifd_off,) = struct.unpack(end + "I", data[4:8])
-        (n,) = struct.unpack(end + "H", data[ifd_off : ifd_off + 2])
-        tags: Dict[int, list] = {}
-        for k in range(n):
-            e = data[ifd_off + 2 + 12 * k : ifd_off + 14 + 12 * k]
-            tag, ftype, count = struct.unpack(end + "HHI", e[:8])
-            unit = {1: 1, 3: 2, 4: 4}.get(ftype)
-            if unit is None:
-                continue
-            fmt = {1: "B", 3: "H", 4: "I"}[ftype]
-            total = unit * count
-            raw = (
-                e[8 : 8 + total]
-                if total <= 4
-                else data[
-                    struct.unpack(end + "I", e[8:12])[0] : struct.unpack(
-                        end + "I", e[8:12]
-                    )[0]
-                    + total
-                ]
-            )
-            if len(raw) < total:
-                raise ValueError(f"TIFF tag {tag} value truncated")
-            tags[tag] = list(struct.unpack(f"{end}{count}{fmt}", raw))
-        w = tags.get(256, [None])[0]
-        h = tags.get(257, [None])[0]
-        if not w or not h:
-            raise ValueError("TIFF missing ImageWidth/ImageLength")
-        comp = tags.get(259, [1])[0]
-        if comp not in (1, 5, 8, 32773):
-            raise ValueError(
-                f"TIFF compression {comp} unsupported "
-                "(none/LZW/Deflate/PackBits)"
-            )
-        bits = tags.get(258, [8])
-        if any(b != 8 for b in bits):
-            raise ValueError(f"TIFF bits-per-sample {bits} unsupported")
-        spp = tags.get(277, [len(bits)])[0]
-        if spp not in (1, 3, 4):
-            raise ValueError(f"TIFF samples-per-pixel {spp} unsupported")
-        if tags.get(284, [1])[0] != 1:
-            raise ValueError("TIFF planar configuration 2 unsupported")
-        offsets = tags.get(273)
-        counts = tags.get(279)
-        if not offsets:
-            raise ValueError("TIFF missing StripOffsets")
-        if not counts:
-            counts = [w * h * spp // len(offsets)] * len(offsets)
-        rows_per_strip = tags.get(278, [h])[0]
-        out = bytearray()
-        for off, cnt in zip(offsets, counts):
-            chunk = data[off : off + cnt]
-            if len(chunk) < cnt:
-                raise ValueError("TIFF strip truncated")
-            if comp == 5:
-                chunk = _tiff_lzw_decode(chunk)
-            elif comp == 8:
-                try:
-                    chunk = zlib.decompress(chunk)
-                except zlib.error as ex:
-                    raise ValueError(f"TIFF deflate strip corrupt: {ex}") from ex
-            elif comp == 32773:
-                chunk = _packbits_decode(chunk)
-            out += chunk
-        if len(out) < w * h * spp:
-            raise ValueError("TIFF pixel data incomplete")
-        out = out[: w * h * spp]
-        if tags.get(317, [1])[0] == 2:  # horizontal differencing
-            stride = w * spp
-            for y in range(h):
-                base = y * stride
-                for x in range(spp, stride):
-                    out[base + x] = (out[base + x] + out[base + x - spp]) & 0xFF
-        elif tags.get(317, [1])[0] not in (1,):
-            raise ValueError(f"TIFF predictor {tags[317][0]} unsupported")
-        _ = rows_per_strip  # layout metadata; strips concatenate in order
-        return (w, h, spp, bytes(out))
-    except (struct.error, IndexError) as ex:
-        raise ValueError(f"corrupt TIFF stream: {type(ex).__name__}: {ex}") from ex
+    end = "<" if data[:2] == b"II" else ">"
+    (ifd_off,) = struct.unpack(end + "I", data[4:8])
+    (n,) = struct.unpack(end + "H", data[ifd_off : ifd_off + 2])
+    tags: Dict[int, list] = {}
+    for k in range(n):
+        e = data[ifd_off + 2 + 12 * k : ifd_off + 14 + 12 * k]
+        tag, ftype, count = struct.unpack(end + "HHI", e[:8])
+        unit = {1: 1, 3: 2, 4: 4}.get(ftype)
+        if unit is None:
+            continue
+        fmt = {1: "B", 3: "H", 4: "I"}[ftype]
+        total = unit * count
+        raw = (
+            e[8 : 8 + total]
+            if total <= 4
+            else data[
+                struct.unpack(end + "I", e[8:12])[0] : struct.unpack(
+                    end + "I", e[8:12]
+                )[0]
+                + total
+            ]
+        )
+        if len(raw) < total:
+            raise ValueError(f"TIFF tag {tag} value truncated")
+        tags[tag] = list(struct.unpack(f"{end}{count}{fmt}", raw))
+    w = tags.get(256, [None])[0]
+    h = tags.get(257, [None])[0]
+    if not w or not h:
+        raise ValueError("TIFF missing ImageWidth/ImageLength")
+    comp = tags.get(259, [1])[0]
+    if comp not in (1, 5, 8, 32773):
+        raise ValueError(
+            f"TIFF compression {comp} unsupported "
+            "(none/LZW/Deflate/PackBits)"
+        )
+    bits = tags.get(258, [8])
+    if any(b != 8 for b in bits):
+        raise ValueError(f"TIFF bits-per-sample {bits} unsupported")
+    spp = tags.get(277, [len(bits)])[0]
+    if spp not in (1, 3, 4):
+        raise ValueError(f"TIFF samples-per-pixel {spp} unsupported")
+    if tags.get(284, [1])[0] != 1:
+        raise ValueError("TIFF planar configuration 2 unsupported")
+    offsets = tags.get(273)
+    counts = tags.get(279)
+    if not offsets:
+        raise ValueError("TIFF missing StripOffsets")
+    if not counts:
+        counts = [w * h * spp // len(offsets)] * len(offsets)
+    out = bytearray()
+    for off, cnt in zip(offsets, counts):
+        chunk = data[off : off + cnt]
+        if len(chunk) < cnt:
+            raise ValueError("TIFF strip truncated")
+        if comp == 5:
+            chunk = _tiff_lzw_decode(chunk)
+        elif comp == 8:
+            chunk = zlib.decompress(chunk)
+        elif comp == 32773:
+            chunk = _packbits_decode(chunk)
+        out += chunk
+    if len(out) < w * h * spp:
+        raise ValueError("TIFF pixel data incomplete")
+    out = out[: w * h * spp]
+    if tags.get(317, [1])[0] == 2:  # horizontal differencing
+        stride = w * spp
+        for y in range(h):
+            base = y * stride
+            for x in range(spp, stride):
+                out[base + x] = (out[base + x] + out[base + x - spp]) & 0xFF
+    elif tags.get(317, [1])[0] not in (1,):
+        raise ValueError(f"TIFF predictor {tags[317][0]} unsupported")
+    return (w, h, spp, bytes(out))
 
 
+@malformed_input("ICO")
 def decode_ico(data: bytes) -> Tuple[int, int, int, bytes]:
     """ICO (favicon) decode → (w, h, channels, pixels): picks the
     LARGEST directory entry (ties: first) and decodes its payload —
@@ -943,57 +925,54 @@ def decode_ico(data: bytes) -> Tuple[int, int, int, bytes]:
     Favicons are among the most-duplicated assets on the web — this
     feeds them into the perceptual dHash path instead of leaving them
     sha256-exact-only."""
-    try:
-        if data[:4] != b"\x00\x00\x01\x00":
-            raise ValueError("not an ICO")
-        (n,) = struct.unpack("<H", data[4:6])
-        if n < 1:
-            raise ValueError("ICO has no images")
-        best = None
-        for k in range(n):
-            e = data[6 + 16 * k : 22 + 16 * k]
-            if len(e) < 16:
-                raise ValueError("ICO directory truncated")
-            bw = e[0] or 256
-            bh = e[1] or 256
-            size, off = struct.unpack("<II", e[8:16])
-            if best is None or bw * bh > best[0]:
-                best = (bw * bh, size, off)
-        _, size, off = best
-        payload = data[off : off + size]
-        if len(payload) < size:
-            raise ValueError("ICO image payload truncated")
-        if payload[:8] == b"\x89PNG\r\n\x1a\n":
-            return decode_png(payload)
-        if len(payload) < 40:
-            raise ValueError("ICO DIB header truncated")
-        (hdr_size,) = struct.unpack("<I", payload[0:4])
-        if hdr_size < 40:
-            raise ValueError(f"ICO DIB header size {hdr_size} unsupported")
-        w, h2 = struct.unpack("<ii", payload[4:12])
-        bpp = struct.unpack("<H", payload[14:16])[0]
-        patched = bytearray(payload)
-        # the DIB height covers XOR+AND planes — halve it
-        struct.pack_into("<i", patched, 8, h2 // 2)
-        if bpp <= 8:
-            (clr_used,) = struct.unpack("<I", payload[32:36])
-            if clr_used == 0:
-                # ICO convention: 0 means the full 2^bpp palette
-                struct.pack_into("<I", patched, 32, 1 << bpp)
-            pal_bytes = 4 * ((clr_used or (1 << bpp)))
-        else:
-            pal_bytes = 0
-        pix_off = 14 + hdr_size + pal_bytes
-        blob = (
-            b"BM"
-            + struct.pack("<I", 14 + len(patched))
-            + b"\x00\x00\x00\x00"
-            + struct.pack("<I", pix_off)
-            + bytes(patched)
-        )
-        return decode_bmp(blob)
-    except (struct.error, IndexError) as ex:
-        raise ValueError(f"corrupt ICO stream: {type(ex).__name__}: {ex}") from ex
+    if data[:4] != b"\x00\x00\x01\x00":
+        raise ValueError("not an ICO")
+    (n,) = struct.unpack("<H", data[4:6])
+    if n < 1:
+        raise ValueError("ICO has no images")
+    best = None
+    for k in range(n):
+        e = data[6 + 16 * k : 22 + 16 * k]
+        if len(e) < 16:
+            raise ValueError("ICO directory truncated")
+        bw = e[0] or 256
+        bh = e[1] or 256
+        size, off = struct.unpack("<II", e[8:16])
+        if best is None or bw * bh > best[0]:
+            best = (bw * bh, size, off)
+    _, size, off = best
+    payload = data[off : off + size]
+    if len(payload) < size:
+        raise ValueError("ICO image payload truncated")
+    if payload[:8] == b"\x89PNG\r\n\x1a\n":
+        return decode_png(payload)
+    if len(payload) < 40:
+        raise ValueError("ICO DIB header truncated")
+    (hdr_size,) = struct.unpack("<I", payload[0:4])
+    if hdr_size < 40:
+        raise ValueError(f"ICO DIB header size {hdr_size} unsupported")
+    w, h2 = struct.unpack("<ii", payload[4:12])
+    bpp = struct.unpack("<H", payload[14:16])[0]
+    patched = bytearray(payload)
+    # the DIB height covers XOR+AND planes — halve it
+    struct.pack_into("<i", patched, 8, h2 // 2)
+    if bpp <= 8:
+        (clr_used,) = struct.unpack("<I", payload[32:36])
+        if clr_used == 0:
+            # ICO convention: 0 means the full 2^bpp palette
+            struct.pack_into("<I", patched, 32, 1 << bpp)
+        pal_bytes = 4 * ((clr_used or (1 << bpp)))
+    else:
+        pal_bytes = 0
+    pix_off = 14 + hdr_size + pal_bytes
+    blob = (
+        b"BM"
+        + struct.pack("<I", 14 + len(patched))
+        + b"\x00\x00\x00\x00"
+        + struct.pack("<I", pix_off)
+        + bytes(patched)
+    )
+    return decode_bmp(blob)
 
 
 def _gif_lzw_decode(
@@ -1003,7 +982,12 @@ def _gif_lzw_decode(
     sizes up to 12 bits, CLEAR resets) → color indices. ``limit``
     stops decoding once that many indices exist — LZW expands up to
     ~2700×, so an unbounded decode of a crafted stream is a memory
-    bomb; callers pass the frame's pixel count."""
+    bomb; callers pass the frame's pixel count. A minimum code size
+    outside 1..11 raises before the code table exists: codes are at most
+    12 bits, and a corrupt size byte would otherwise ask for a table of
+    2**size entries."""
+    if not 1 <= min_code_size <= 11:
+        raise ValueError(f"GIF LZW minimum code size {min_code_size} out of range")
     clear = 1 << min_code_size
     end = clear + 1
     code_size = min_code_size + 1
@@ -1042,17 +1026,8 @@ def _gif_lzw_decode(
     return out
 
 
+@malformed_input("GIF")
 def decode_gif(data: bytes) -> Tuple[int, int, int, bytes]:
-    """Real pure-Python GIF decode with error containment: malformed
-    input raises ``ValueError``, never struct.error/IndexError (same
-    contract as decode_jpeg/decode_png)."""
-    try:
-        return _decode_gif_impl(data)
-    except (struct.error, IndexError) as ex:
-        raise ValueError(f"corrupt GIF stream: {type(ex).__name__}: {ex}") from ex
-
-
-def _decode_gif_impl(data: bytes) -> Tuple[int, int, int, bytes]:
     """Real pure-Python GIF decode: (width, height, 3, RGB pixels) of
     the FIRST image frame. stdlib only — logical screen descriptor,
     global/local color tables, extension-block skipping, sub-block
@@ -1118,6 +1093,7 @@ def _decode_gif_impl(data: bytes) -> Tuple[int, int, int, bytes]:
     raise ValueError("GIF contains no image data")
 
 
+@malformed_input("GIF")
 def decode_gif_frames(
     data: bytes, max_frames: Optional[int] = None
 ) -> Tuple[int, int, List[bytes]]:
@@ -1127,15 +1103,6 @@ def decode_gif_frames(
     visible, and disposal methods 0/1 (leave), 2 (restore background —
     zeros) and 3 (restore previous) apply between frames. Same LZW /
     interlace / allocation-guard core as :func:`decode_gif`."""
-    try:
-        return _decode_gif_frames_impl(data, max_frames)
-    except (struct.error, IndexError) as ex:
-        raise ValueError(f"corrupt GIF stream: {type(ex).__name__}: {ex}") from ex
-
-
-def _decode_gif_frames_impl(
-    data: bytes, max_frames: Optional[int]
-) -> Tuple[int, int, List[bytes]]:
     if data[:6] not in (b"GIF87a", b"GIF89a"):
         raise ValueError("not a GIF")
     sw, sh, packed, _bg, _ar = struct.unpack("<HHBBB", data[6:13])
@@ -1241,19 +1208,17 @@ FRAME_SCHEMA = StructType(
 )
 
 
-def video_frames_stub(data: bytes) -> Tuple[int, int, List[bytes]]:
-    """Frame-decoder slot for real video containers (mp4/webm): no
-    pure-Python codec exists for them, so this raises — rows land in
-    the skip path of :func:`sample_frames`, and a deployment with
-    PyAV/ffmpeg injects its own ``decoder=`` with this signature
-    ((w, h, [full-frame RGB bytes])) to light the same plumbing up.
-    MJPEG-in-AVI is NOT a stub — :func:`decode_mjpeg_avi` is a real
-    decoder (RIFF walk + the repo's own baseline/progressive JPEG
-    codec per frame)."""
-    mtype, fmt, _, _ = sniff_media(data)
-    raise NotImplementedError(
-        f"no pure-Python frame decoder for {mtype}/{fmt}; inject decoder="
-    )
+def decode_frames(data: bytes) -> Tuple[int, int, List[bytes]]:
+    """bytes → (w, h, [full-frame RGB bytes]) for animated GIF
+    (:func:`decode_gif_frames`), AVI (:func:`decode_avi_frames`: MJPEG
+    and uncompressed DIB), APNG (:func:`decode_apng_frames`) and
+    animated lossless WebP (:func:`decode_webp_anim_frames`). Real
+    video containers (mp4/webm) have no pure-Python codec and raise
+    ``NotImplementedError`` — rows land in the skip path of
+    :func:`sample_frames`, and a deployment with PyAV/ffmpeg injects
+    its own ``decoder=`` with this signature to light the same
+    plumbing up."""
+    return _decode_as("frame", _FRAME_DECODERS, data)
 
 
 def _riff_video_chunks(data: bytes, pos: int, end: int, out: List[bytes]) -> None:
@@ -1278,6 +1243,7 @@ def _riff_video_chunks(data: bytes, pos: int, end: int, out: List[bytes]) -> Non
         pos = body_end + (sz & 1)  # chunks are word-aligned
 
 
+@malformed_input("AVI")
 def decode_mjpeg_avi(data: bytes) -> Tuple[int, int, List[bytes]]:
     """REAL MJPEG-in-AVI frame decode: RIFF chunk walk collecting the
     '##dc'/'##db' video chunks (each a standalone JPEG), decoded with
@@ -1287,8 +1253,6 @@ def decode_mjpeg_avi(data: bytes) -> Tuple[int, int, List[bytes]]:
     expanded to RGB so the output contract matches decode_gif_frames.
     Malformed containers/frames raise ValueError (per-row isolation in
     sample_frames)."""
-    from .jpeg import decode_jpeg
-
     if data[:4] != b"RIFF" or data[8:12] != b"AVI ":
         raise ValueError("not an AVI container")
     chunks: List[bytes] = []
@@ -1325,6 +1289,7 @@ def _avi_video_strf(data: bytes) -> Tuple[int, int, int, bytes]:
     return (w, abs(h), bits, comp)
 
 
+@malformed_input("AVI")
 def decode_avi_frames(data: bytes) -> Tuple[int, int, List[bytes]]:
     """AVI video frames → (w, h, [full-frame RGB bytes]) for the two
     in-repo-decodable codecs: MJPEG ('MJPG' strf, each chunk a JPEG —
@@ -1403,12 +1368,7 @@ def _flatten_rgba(canvas: bytes, n_px: int) -> bytes:
     return bytes(rgb)
 
 
-def _compose_anim(
-    cw: int,
-    chh: int,
-    frames,
-    max_frames: Optional[int] = None,
-) -> List[bytes]:
+def _compose_anim(cw: int, chh: int, frames) -> List[bytes]:
     """Shared APNG/animated-WebP compositor: full-canvas RGB output per
     frame. ``frames`` yields (x, y, fw, fh, rgba, dispose, blend) with
     dispose 0=none / 1=background (clear region) / 2=previous (revert)
@@ -1455,8 +1415,6 @@ def _compose_anim(
                             )
                         canvas[ci + 4 * k + 3] = num_a // 255
         out.append(_flatten_rgba(canvas, cw * chh))
-        if max_frames is not None and len(out) >= max_frames:
-            break
         if dispose == 1:
             for r in range(fh):
                 ci = ((y + r) * cw + x) * 4
@@ -1466,9 +1424,8 @@ def _compose_anim(
     return out
 
 
-def decode_apng_frames(
-    data: bytes, max_frames: Optional[int] = None
-) -> Tuple[int, int, List[bytes]]:
+@malformed_input("APNG")
+def decode_apng_frames(data: bytes) -> Tuple[int, int, List[bytes]]:
     """REAL APNG decode → (canvas_w, canvas_h, [full-canvas RGB bytes
     per frame]): acTL/fcTL/fdAT chunk walk, each frame's compressed
     stream rebuilt into a standalone PNG and decoded with the repo's
@@ -1476,15 +1433,6 @@ def decode_apng_frames(
     free), then composited with the shared dispose/blend rules. A PNG
     without acTL decodes as its single frame; a default image (IDAT
     before the first fcTL) is not part of the animation, per spec."""
-    try:
-        return _decode_apng_impl(data, max_frames)
-    except (struct.error, IndexError) as ex:
-        raise ValueError(f"corrupt APNG stream: {type(ex).__name__}: {ex}") from ex
-
-
-def _decode_apng_impl(
-    data: bytes, max_frames: Optional[int]
-) -> Tuple[int, int, List[bytes]]:
     if data[:8] != b"\x89PNG\r\n\x1a\n":
         raise ValueError("not a PNG")
     pos = 8
@@ -1555,20 +1503,16 @@ def _decode_apng_impl(
             w, h, ch, px = decode_png(sub)
             yield (fx, fy, w, h, _to_rgba(px, ch), dispose, blend)
 
-    out = _compose_anim(cw, chh, gen(), max_frames)
-    return (cw, chh, out)
+    return (cw, chh, _compose_anim(cw, chh, gen()))
 
 
-def decode_webp_anim_frames(
-    data: bytes, max_frames: Optional[int] = None
-) -> Tuple[int, int, List[bytes]]:
+@malformed_input("WebP")
+def decode_webp_anim_frames(data: bytes) -> Tuple[int, int, List[bytes]]:
     """REAL animated-WebP decode → (canvas_w, canvas_h, [full-canvas
     RGB bytes per frame]): VP8X/ANIM/ANMF walk (vp8l.parse_webp_anim),
     each sub-bitstream decoded with the repo's VP8L decoder, composited
     with the shared dispose/blend rules. A non-animated WebP decodes as
     its single VP8L frame; lossy VP8 raises NotImplementedError."""
-    from .vp8l import decode_webp, parse_webp_anim
-
     try:
         cw, chh, frames = parse_webp_anim(data)
     except ValueError as ex:
@@ -1577,8 +1521,7 @@ def decode_webp_anim_frames(
         # VP8X without the anim flag / no VP8X at all: plain still image
         w, h, ch, px = decode_webp(data)
         return (w, h, [_flatten_rgba(_to_rgba(px, ch), w * h)])
-    out = _compose_anim(cw, chh, iter(frames), max_frames)
-    return (cw, chh, out)
+    return (cw, chh, _compose_anim(cw, chh, iter(frames)))
 
 
 def sample_frames(
@@ -1588,37 +1531,23 @@ def sample_frames(
 ) -> DataFrame:
     """Evenly-spaced frame sampling — the frame-sample primitive a
     video/animation training pipeline needs. The default decoder is
-    REAL for animated GIF (:func:`decode_gif_frames`), MJPEG-in-AVI
-    (:func:`decode_mjpeg_avi`), APNG (:func:`decode_apng_frames`) and
-    animated lossless WebP (:func:`decode_webp_anim_frames`), and
-    raises for other video containers (:func:`video_frames_stub`);
-    inject ``decoder=``
-    (bytes → (w, h, [RGB frames])) to back it with a real video codec
-    — batch shape, schema and sampling rule are identical. Emits
+    :func:`decode_frames` (animated GIF, AVI, APNG, animated lossless
+    WebP); inject ``decoder=`` (bytes → (w, h, [RGB frames]), raising
+    ``ValueError`` on malformed input and ``NotImplementedError`` on an
+    unsupported format) to back it with a real video codec — batch
+    shape, schema and sampling rule are identical. Emits
     per-sampled-frame per-channel exact means (integer sums, so
     partition-order independent); undecodable rows are skipped like
     resize_media."""
     if n_frames < 1:
         raise ValueError("n_frames must be >= 1")
 
-    def default_decoder(data: bytes) -> Tuple[int, int, List[bytes]]:
-        if data[:6] in (b"GIF87a", b"GIF89a"):
-            return decode_gif_frames(data)
-        if data[:4] == b"RIFF" and data[8:12] == b"AVI ":
-            return decode_avi_frames(data)
-        if data[:8] == b"\x89PNG\r\n\x1a\n":
-            return decode_apng_frames(data)
-        if data[:4] == b"RIFF" and data[8:12] == b"WEBP":
-            return decode_webp_anim_frames(data)
-        return video_frames_stub(data)
-
-    dec = decoder or default_decoder
+    dec = decoder or decode_frames
 
     def row_fn(mid, raw):
         try:
             sw, sh, frames = dec(bytes(raw))
-        except (ValueError, NotImplementedError, zlib.error):
-            # zlib.error: APNG/PNG frame streams surface it raw
+        except MEDIA_ERRORS:
             return
         total = len(frames)
         if total <= n_frames:
@@ -1650,15 +1579,6 @@ def _gif_interlace_order(height: int) -> List[int]:
     return order
 
 
-def decode_wav(data: bytes) -> Tuple[int, int, int, List[int]]:
-    """Error-contained wrapper: malformed WAV input raises ValueError
-    (struct.error/IndexError never escape the per-row containment)."""
-    try:
-        return _decode_wav_impl(data)
-    except (struct.error, IndexError) as ex:
-        raise ValueError(f"corrupt WAV stream: {type(ex).__name__}: {ex}") from ex
-
-
 def _f80_to_int(b: bytes) -> int:
     """80-bit IEEE 754 extended-precision BE → nearest int (the AIFF
     COMM sample-rate field; real rates are exact integers)."""
@@ -1674,6 +1594,7 @@ def _f80_to_int(b: bytes) -> int:
     return sign * v
 
 
+@malformed_input("AIFF")
 def decode_aiff(data: bytes) -> Tuple[int, int, int, List[int]]:
     """REAL pure-stdlib AIFF/AIFF-C decode → (channels, sample_rate,
     n_frames, interleaved samples): FORM chunk walk, COMM (channel
@@ -1682,13 +1603,6 @@ def decode_aiff(data: bytes) -> Tuple[int, int, int, List[int]]:
     unlike WAV); AIFF-C is accepted for compression 'NONE' (BE) and
     'sowt' (the Apple little-endian variant), anything else raises
     NotImplementedError. Malformed input raises ValueError."""
-    try:
-        return _decode_aiff_impl(data)
-    except (struct.error, IndexError) as ex:
-        raise ValueError(f"corrupt AIFF stream: {type(ex).__name__}: {ex}") from ex
-
-
-def _decode_aiff_impl(data: bytes) -> Tuple[int, int, int, List[int]]:
     if data[:4] != b"FORM" or data[8:12] not in (b"AIFF", b"AIFC"):
         raise ValueError("not an AIFF")
     is_aifc = data[8:12] == b"AIFC"
@@ -1751,25 +1665,8 @@ def decode_audio(data: bytes) -> Tuple[int, int, int, List[int]]:
     decorrelation, CRC-verified) and AIFF/AIFF-C PCM. One dispatcher
     so every audio consumer (features, fingerprints, near-dup) covers
     all containers with no caller changes. Other formats raise
-    NotImplementedError (per-row isolated everywhere)."""
-    if data[:4] == b"RIFF" and data[8:12] == b"WAVE":
-        return decode_wav(data)
-    if data[:4] == b"FORM" and data[8:12] in (b"AIFF", b"AIFC"):
-        return decode_aiff(data)
-    if data[:4] == b"fLaC":
-        from .flac import decode_flac
-
-        try:
-            return decode_flac(data)
-        except (struct.error, IndexError) as ex:
-            raise ValueError(
-                f"corrupt FLAC stream: {type(ex).__name__}: {ex}"
-            ) from ex
-    mtype, fmt, _, _ = sniff_media(data)
-    raise NotImplementedError(
-        f"no pure-Python audio decoder for {mtype}/{fmt}; WAV and FLAC "
-        "are supported"
-    )
+    NotImplementedError, malformed input ValueError."""
+    return _decode_as("audio", _AUDIO_DECODERS, data)
 
 
 def _mulaw_expand(b: int) -> int:
@@ -1796,7 +1693,8 @@ def _alaw_expand(b: int) -> int:
     return -s if sign else s
 
 
-def _decode_wav_impl(data: bytes) -> Tuple[int, int, int, List[int]]:
+@malformed_input("WAV")
+def decode_wav(data: bytes) -> Tuple[int, int, int, List[int]]:
     """Real pure-Python WAV decode: (channels, sample_rate, n_frames,
     samples) — stdlib only, RIFF/WAVE fmt+data chunk walk with unknown
     chunks skipped by declared size, as the spec requires. Formats:
@@ -1860,6 +1758,25 @@ def _decode_wav_impl(data: bytes) -> Tuple[int, int, int, List[int]]:
             f"WAV bit depth {bits} unsupported (8/16/24/32)"
         )
     return (channels, rate, len(samples) // channels, samples)
+
+
+# sniff_media's format → decoder, one table per kind
+_IMAGE_DECODERS = {
+    "png": decode_png,
+    "gif": decode_gif,
+    "jpeg": decode_jpeg,
+    "bmp": decode_bmp,
+    "tiff": decode_tiff,
+    "webp": decode_webp,
+    "ico": decode_ico,
+}
+_FRAME_DECODERS = {
+    "gif": decode_gif_frames,
+    "avi": decode_avi_frames,
+    "png": decode_apng_frames,
+    "webp": decode_webp_anim_frames,
+}
+_AUDIO_DECODERS = {"wav": decode_wav, "aiff": decode_aiff, "flac": decode_flac}
 
 
 # MPEG-1/2 Layer III bitrate (kbps) and sample-rate tables, header-only
@@ -2176,7 +2093,7 @@ def audio_features(df: DataFrame) -> DataFrame:
                 max((abs(s) for s in mono), default=0),
                 zc, None,
             )
-        except (ValueError, NotImplementedError, struct.error) as ex:
+        except MEDIA_ERRORS as ex:
             row = (str(mid), None, None, None, None, None, None, None,
                    f"{type(ex).__name__}: {ex}")
         yield row
@@ -2199,11 +2116,12 @@ def extract_features(df: DataFrame, decoder: Optional[Callable] = None) -> DataF
     """Decode + feature-extract stage (long format: one row per feature).
 
     `decoder(data: bytes) -> list[(feature, value)]`. The default decoder
-    is REAL for PNG (pure-stdlib :func:`decode_png`): it emits width,
-    height, channels and exact per-channel pixel means (integer sums, so
-    deterministic — no float accumulation order issues). Formats without
-    a pure-Python decoder land as a 'decode_unavailable' marker feature
-    so the pipeline shape is exercised end-to-end regardless.
+    is :func:`decode_image`: it emits width, height, channels and exact
+    per-channel pixel means (integer sums, so deterministic — no float
+    accumulation order issues). A decoder reports an unsupported format
+    as ``NotImplementedError`` (a 'decode_unavailable' marker feature)
+    and malformed input as ``ValueError`` (a 'decode_error' marker), so
+    the pipeline shape is exercised end-to-end regardless.
     """
 
     def default_decoder(data: bytes) -> List[tuple]:
@@ -2228,7 +2146,7 @@ def extract_features(df: DataFrame, decoder: Optional[Callable] = None) -> DataF
                 yield (str(mid), name, float(value))
         except NotImplementedError:
             yield (str(mid), "decode_unavailable", 0.0)
-        except (ValueError, zlib.error):
+        except ValueError:
             yield (str(mid), "decode_error", 0.0)
 
     return map_rows(df.select("media_id", "blob"), FEATURE_SCHEMA, lambda: row_fn)
@@ -2281,7 +2199,7 @@ def resize_media(
         data = bytes(raw) if raw is not None else b""
         try:
             w, h, ch, px = decode_image(data)
-        except (NotImplementedError, ValueError, zlib.error):
+        except MEDIA_ERRORS:
             return
         small = resize_nearest(px, w, h, ch, out_w, out_h)
         for c in range(ch):

@@ -27,7 +27,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
 from .columns import map_rows
-from .multimodal import decode_image, resize_nearest
+from .malformed import MEDIA_ERRORS
+from .multimodal import decode_audio, decode_image, resize_nearest
 
 __all__ = [
     "dhash_bands",
@@ -89,9 +90,7 @@ def image_dhash(df: DataFrame) -> DataFrame:
         try:
             w, h, ch, px = decode_image(bytes(raw))
             bands = dhash_bands(w, h, ch, px)
-        except (ValueError, NotImplementedError, IndexError):
-            # IndexError: a malformed decode result must skip the
-            # row, not kill the task (web corpora are adversarial)
+        except MEDIA_ERRORS:
             return
         yield (str(mid),) + bands
 
@@ -138,15 +137,15 @@ AUDIO_DHASH_SCHEMA = StructType(
 
 
 def audio_fingerprint(df: DataFrame) -> DataFrame:
-    """(media_id, b0, b1) per decodable WAV or FLAC (media_id, blob) row
-    (undecodable skipped) — a FLAC re-encode of a WAV lands on the
-    identical fingerprint because the decoded samples are bit-identical."""
-    from .multimodal import decode_audio
+    """(media_id, b0, b1) per decodable WAV, AIFF or FLAC (media_id,
+    blob) row (undecodable skipped) — a FLAC re-encode of a WAV lands on
+    the identical fingerprint because the decoded samples are
+    bit-identical."""
 
     def row_fn(mid, raw):
         try:
             ch, _rate, _nf, samples = decode_audio(bytes(raw))
-        except (ValueError, NotImplementedError):
+        except MEDIA_ERRORS:
             return
         yield (str(mid),) + audio_dhash_bands(ch, samples)
 

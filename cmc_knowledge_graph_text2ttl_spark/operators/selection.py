@@ -120,11 +120,11 @@ def classifier_scores(
     )
 
 
-def hashed_ngram_counts(df: DataFrame, n_buckets: int = 1024, bigrams: bool = True) -> DataFrame:
+def hashed_ngram_counts(df: DataFrame, n_buckets: int = 1024) -> DataFrame:
     """Per-(doc, bucket) hashed n-gram counts of (doc_id, text) rows →
     (id, bucket, tf).
 
-    Word unigrams (and bigrams when ``bigrams``) hash into
+    Word unigrams and bigrams hash into
     ``md5(gram) mod n_buckets`` — the repo's cross-engine md5 slice.
     Bigrams are built column-side (``transform`` over an index
     sequence), never via a positional self-join.
@@ -135,19 +135,16 @@ def hashed_ngram_counts(df: DataFrame, n_buckets: int = 1024, bigrams: bool = Tr
     base = df.where(F.length(F.trim(F.col("text"))) > 0).select(
         F.col("doc_id").alias("id"), words.alias("toks")
     )
-    grams = F.col("toks")
-    if bigrams:
-        # Spark's sequence(0, -1) counts DOWN (cf. dedup._positions), so
-        # the one-token doc needs an explicit empty branch.
-        bi = F.expr(
-            "CASE WHEN size(toks) >= 2 THEN "
-            "transform(sequence(0, size(toks) - 2),"
-            " i -> concat(toks[i], ' ', toks[i + 1])) "
-            "ELSE array() END"
-        )
-        grams = F.concat(F.col("toks"), bi)
+    # Spark's sequence(0, -1) counts DOWN (cf. dedup._positions), so
+    # the one-token doc needs an explicit empty branch.
+    bi = F.expr(
+        "CASE WHEN size(toks) >= 2 THEN "
+        "transform(sequence(0, size(toks) - 2),"
+        " i -> concat(toks[i], ' ', toks[i + 1])) "
+        "ELSE array() END"
+    )
     return (
-        base.select("id", F.explode(grams).alias("gram"))
+        base.select("id", F.explode(F.concat(F.col("toks"), bi)).alias("gram"))
         .select("id", (md5_int(F.col("gram")) % n_buckets).cast("bigint").alias("bucket"))
         .groupBy("id", "bucket")
         .agg(F.count(F.lit(1)).cast("bigint").alias("tf"))

@@ -18,8 +18,9 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def sessionize(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
+def sessionize(events: DataFrame) -> DataFrame:
     """(user_id, ts) events → one row per (user, session): bounds and counts.
+    A gap of more than 30 minutes starts a new session.
 
     Output: (user_id, session_no, session_start, session_end, n_events)
     with ``session_no`` 1-based per user in time order.
@@ -27,7 +28,7 @@ def sessionize(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
     w = Window.partitionBy("user_id").orderBy("ts")
     prev = F.lag("ts").over(w)
     # interval comparison works for both TIMESTAMP and TIMESTAMP_NTZ
-    gap = F.expr(f"INTERVAL {int(gap_minutes)} MINUTES")
+    gap = F.expr("INTERVAL 30 MINUTES")
     new_session = F.when(
         prev.isNull() | ((F.col("ts") - prev) > gap), 1
     ).otherwise(0)

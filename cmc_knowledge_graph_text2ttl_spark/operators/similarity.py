@@ -170,12 +170,11 @@ def make_centroids(emb: DataFrame, n_cells: int, quantize: int = 0) -> DataFrame
 def ivf_topk(
     emb: DataFrame,
     query: Sequence[float],
-    k: int = 10,
     n_probe: int = 4,
     centroids: DataFrame = None,
     assigned: DataFrame = None,
 ) -> DataFrame:
-    """Approximate top-k over (vec_id, embedding) rows: probe the n_probe
+    """Approximate top-10 over (vec_id, embedding) rows: probe the n_probe
     cells nearest to the query (of 16 k-means cells), then exact cosine
     within them. Pass pre-built `centroids`/`assigned`
     to amortize the index across queries (the production shape: the
@@ -194,4 +193,4 @@ def ivf_topk(
         ).collect()
     ]
     pruned = assigned.filter(F.col("cell_id").isin(probe_cells))
-    return cosine_topk(pruned, query, k=k)
+    return cosine_topk(pruned, query)

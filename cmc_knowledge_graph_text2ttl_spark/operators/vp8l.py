@@ -49,6 +49,8 @@ from __future__ import annotations
 import struct
 from typing import Dict, List, Optional, Sequence, Tuple
 
+from .malformed import malformed_input
+
 __all__ = ["decode_vp8l", "decode_webp"]
 
 # order in which code-length-code lengths are stored (spec constant)
@@ -538,11 +540,12 @@ def decode_vp8l(data: bytes) -> Tuple[int, int, int, bytes]:
     return (w, h, 4, bytes(out_b))
 
 
+@malformed_input("WebP")
 def decode_webp(data: bytes) -> Tuple[int, int, int, bytes]:
     """RIFF WebP container → decode the VP8L chunk. Lossy VP8 (and
     VP8X-wrapped lossy) raises NotImplementedError — a full DCT codec
     is out of scope; extended containers are walked for a VP8L chunk
-    first."""
+    first. Malformed input raises ValueError."""
     if data[:4] != b"RIFF" or data[8:12] != b"WEBP":
         raise ValueError("not a WebP container")
     pos = 12

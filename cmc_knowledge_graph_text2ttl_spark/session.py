@@ -47,10 +47,7 @@ def get_spark(
         # minhash) then pays multi-second janino+JIT recompilation on
         # EVERY run — measured 2x wall on dedup_minhash. Static conf, so
         # it must be set here, before the session exists.
-        .config(
-            "spark.sql.codegen.cache.maxEntries",
-            os.environ.get("SPARK_GRAFT_CODEGEN_CACHE", "2000"),
-        )
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():

@@ -109,31 +109,21 @@ def fetch_remote_graph(
 
 
 def resolve_graphs(
-    graph_specs: Dict[str, object],
+    graph_specs: Dict[str, str],
     transport: Optional[Transport] = None,
 ) -> Dict[str, List[GraphRow]]:
     """Normalize every graph spec to broadcastable GraphRow lists.
 
     Per-value dispatch:
 
-    * a list → already rows, passed through;
-    * a string that is a ``http(s)://`` URL → remote endpoint, batch
-      prefetched (the Stardog case);
+    * a ``http(s)://`` URL → remote endpoint, batch prefetched (the
+      Stardog case);
     * any other string → inline Turtle source, parsed with the TTL-lite
       reader (fixture ontologies).
 
     The result plugs straight into ``run_workflows(graphs=...)``.
     """
-    out: Dict[str, List[GraphRow]] = {}
-    for name, spec in graph_specs.items():
-        if isinstance(spec, list):
-            out[name] = spec
-        elif isinstance(spec, str) and is_remote_graph(spec):
-            out[name] = fetch_remote_graph(spec, transport)
-        elif isinstance(spec, str):
-            out[name] = parse_ttl(spec)
-        else:
-            raise ProcessorException(
-                f"Cannot resolve graph {name!r}: unsupported spec {type(spec)}"
-            )
-    return out
+    return {
+        name: fetch_remote_graph(spec, transport) if is_remote_graph(spec) else parse_ttl(spec)
+        for name, spec in graph_specs.items()
+    }

@@ -2952,6 +2952,26 @@ def encode_png(width: int, height: int, pixels: bytes, channels: int = 3) -> byt
     )
 
 
+def encode_png_corrupt_idat() -> bytes:
+    """2×2 RGB PNG whose IDAT is not a valid zlib stream: inflating it
+    raises ``zlib.error`` inside the PNG decoder."""
+    ihdr = struct.pack(">IIBBBBB", 2, 2, 8, 2, 0, 0, 0)
+    return (
+        b"\x89PNG\r\n\x1a\n"
+        + _png_chunk(b"IHDR", ihdr)
+        + _png_chunk(b"IDAT", b"\x78\x9c\xff\xff\xff garbage")
+        + _png_chunk(b"IEND", b"")
+    )
+
+
+def encode_jpeg_zero_sampling() -> bytes:
+    """8×8 gray baseline JPEG whose SOF sampling-factor byte (byte 82) is
+    0: the MCU geometry divides by the zero factor."""
+    blob = bytearray(encode_jpeg_blocks(8, 8, [[1] + [0] * 63]))
+    blob[82] = 0x00
+    return bytes(blob)
+
+
 def _png_pack_row(samples, bitd: int) -> bytes:
     """Flat sample list → one packed scanline (MSB-first for sub-byte)."""
     if bitd == 8:

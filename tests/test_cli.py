@@ -77,3 +77,31 @@ def test_malformed_name_value_option_exits_2(tmp_path, flag, value):
     assert proc.returncode == 2
     assert f'invalid {flag} "{value}"' in proc.stderr
     assert not (tmp_path / "wd").exists()
+
+
+def test_cli_ontology_graph_answers_select_lookups(spark, tmp_path):
+    pages = str(tmp_path / "pages.parquet")
+    spark.createDataFrame(list(synth_page_rows(30)), PAGES_SCHEMA).write.parquet(pages)
+    onto = os.path.join("fixtures", "ontology.ttl")
+    with open(os.path.join(REPO, "fixtures", "workflows_ops", "wf_query.yaml"), encoding="utf8") as fh:
+        src = fh.read()
+    assert src.count("from: ontology") == 2
+    wf = tmp_path / "wf_query.yaml"
+    wf.write_text(src.replace("from: ontology", f"from: {onto}"), encoding="utf8")
+    ttl = str(tmp_path / "ttl")
+
+    proc = _cli(
+        "--pages", pages, "--workflows", str(wf), "--workdir", str(tmp_path / "wd"),
+        "--master", "local[2]", "--buckets", "2", "--ontology", onto, "--ttl-out", ttl,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    classified = [
+        line.split(" ")[2]
+        for line in _text_dir(ttl).splitlines()
+        if " <http://example.org/prop/classifiedAs> " in line
+    ]
+    assert classified
+    assert set(classified) <= {
+        f"<http://example.org/kg/class_{c}>"
+        for c in ("Drug", "Stimulant", "Solvent", "Sugar", "Salt", "Acid")
+    }

@@ -108,7 +108,7 @@ class TestDecontaminate:
         corpus = spark.createDataFrame([(1, "abcdefghijklm tail")], ["doc_id", "text"])
         bench = spark.createDataFrame([("xx abcdefghijklm yy",)], ["text"])
         assert (
-            dedup.decontaminate(corpus, bench, n=13, unit="char").collect()[0].contaminated
+            dedup.decontaminate(corpus, bench, unit="char").collect()[0].contaminated
             is True
         )
         with pytest.raises(ValueError):
@@ -430,7 +430,7 @@ class TestMinHashLSH:
 
     def test_signature_matches_python(self, spark):
         df = spark.createDataFrame([(1, "abcdefghij")], ["doc_id", "text"])
-        sig = dedup.minhash_signatures(df, n_hashes=4, shingle_n=5).first()
+        sig = dedup.minhash_signatures(df, n_hashes=4).first()
         params = dedup._hash_params(4)
         shingles = py_shingles("abcdefghij", 5)
         for i, (a, b) in enumerate(params):
@@ -494,7 +494,7 @@ class TestEmbeddingOps:
                 approx = {
                     x.id
                     for x in similarity.ivf_topk(
-                        emb, q, k=10, n_probe=n_probe, centroids=cents, assigned=assigned
+                        emb, q, n_probe=n_probe, centroids=cents, assigned=assigned
                     ).collect()
                 }
                 vals.append(len(exact & approx) / 10)
@@ -660,7 +660,7 @@ class TestTextStats:
 
     def test_fingerprint_deterministic_and_matches_python(self, spark):
         df = spark.createDataFrame([(1, "abcdefghijklmno")], ["doc_id", "text"])
-        got = textstats.fingerprint(df, shingle_n=8).first().fingerprint
+        got = textstats.fingerprint(df).first().fingerprint
         text = "abcdefghijklmno"
         expect = min(
             int(hashlib.md5(text[i : i + 8].encode()).hexdigest()[:8], 16)
@@ -797,7 +797,7 @@ class TestSessionize:
         df = spark.createDataFrame(rows, "user_id string, ts timestamp")
         got = {
             (r.user_id, r.session_no): (r.n_events, r.session_start, r.session_end)
-            for r in sessionize(df, gap_minutes=30).collect()
+            for r in sessionize(df).collect()
         }
         assert got[("u1", 1)] == (2, at(0), at(10))
         assert got[("u1", 2)] == (2, at(50), at(55))
@@ -1552,7 +1552,7 @@ class TestGifFrames:
     def test_video_stub_raises_and_rows_skip(self, spark):
         fake_mp4 = b"\x00\x00\x00\x20ftypisom" + b"\x00" * 64
         with pytest.raises(NotImplementedError, match="decoder="):
-            mm.video_frames_stub(fake_mp4)
+            mm.decode_frames(fake_mp4)
         df = spark.createDataFrame(
             [("v", bytearray(fake_mp4))], "media_id string, blob binary")
         assert mm.sample_frames(df).collect() == []
@@ -1713,9 +1713,9 @@ class TestAnimFrames:
         assert not any(k[0] == "junk" for k in got)
 
     def test_corrupt_apng_rows_skip_not_kill(self, spark):
-        # a cut inside the zlib stream raises zlib.error from the PNG
-        # layer; sample_frames' skip path must contain it (a single
-        # truncated APNG in a crawl batch must never kill the task)
+        # a cut inside the zlib stream fails inside the PNG layer, which
+        # reports it as ValueError; sample_frames' skip path contains it
+        # (a single truncated APNG in a crawl batch must never kill the task)
         good = FW.encode_apng(4, 4, [
             (0, 0, 4, 4, self._solid(4, 4, (1, 2, 3, 255)), 0, 0),
             (0, 0, 4, 4, self._solid(4, 4, (9, 8, 7, 255)), 0, 0)])
@@ -2120,6 +2120,55 @@ class TestImageHash:
         out = media_dedup_clusters(df, star_edges=True, max_bucket=2)
         got = {(r.media_id, r.cluster_id) for r in out.collect()}
         assert got == {(f"h{k}", "h0") for k in range(6)}
+
+
+class TestMalformedMediaRows:
+    """A blob whose codec fails inside zlib (corrupt PNG IDAT) or divides
+    by zero (JPEG sampling factor 0, also inside an MJPEG AVI) is a
+    skipped row, or a decode_error row in extract_features — never a
+    failed job — and the good rows come out as without it."""
+
+    @staticmethod
+    def _frame(spark, rows):
+        return spark.createDataFrame(
+            [(m, bytearray(b)) for m, b in rows], "media_id string, blob binary")
+
+    def _good_and_bad(self):
+        jpeg = FW.encode_jpeg_blocks(8, 8, [[-60] + [4] * 5 + [0] * 58])
+        png = FW.encode_png(4, 3, bytes(range(0, 144, 4)), 3)
+        good = [("png", png), ("jpeg", jpeg),
+                ("avi", FW.encode_avi_mjpeg(8, 8, [jpeg, jpeg]))]
+        bad = [("bad_png", FW.encode_png_corrupt_idat()),
+               ("bad_jpeg", FW.encode_jpeg_zero_sampling()),
+               ("bad_avi", FW.encode_avi_mjpeg(
+                   8, 8, [FW.encode_jpeg_zero_sampling()]))]
+        return good, bad
+
+    def test_bad_rows_skip_or_error_and_good_rows_are_unchanged(self, spark):
+        from cmc_knowledge_graph_text2ttl_spark.operators.perceptual import (
+            image_dhash,
+        )
+
+        good, bad = self._good_and_bad()
+        bad_ids = {m for m, _ in bad}
+        ops = {
+            "dhash": image_dhash,
+            "features": mm.extract_features,
+            "resize": mm.resize_media,
+            "frames": mm.sample_frames,
+        }
+        for name, op in ops.items():
+            clean = sorted(map(tuple, op(self._frame(spark, good)).collect()))
+            mixed = sorted(map(tuple, op(self._frame(spark, good + bad)).collect()))
+            kept = [r for r in mixed if r[0] not in bad_ids]
+            assert kept == clean and clean, name
+            if name == "features":  # an AVI is no image: unavailable
+                assert {r for r in mixed if r[0] in bad_ids} == {
+                    ("bad_png", "decode_error", 0.0),
+                    ("bad_jpeg", "decode_error", 0.0),
+                    ("bad_avi", "decode_unavailable", 0.0)}
+            else:
+                assert kept == mixed, name
 
 
 class TestAudioFingerprint:

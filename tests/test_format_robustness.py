@@ -1,15 +1,19 @@
-"""Adversarial robustness sweep over the round-4 byte-level parsers:
-every truncation and a byte-flip grid of a valid fixture must either
-parse or raise a normal exception (per-row containment in extract_text
-catches Exception) — never hang, recurse infinitely, or allocate
-unboundedly. Deterministic, no hypothesis needed: the grids are
-exhaustive over truncation points and dense over flips."""
+"""Adversarial robustness sweep over the byte-level parsers: every
+truncation and a byte-flip grid of a valid fixture must either parse or
+raise a normal exception — never hang, recurse infinitely, or allocate
+unboundedly. Document readers may raise any exception (extract_one
+contains them all); media decoders, run through the dispatcher of their
+kind, may raise only ValueError or NotImplementedError (MEDIA_ERRORS,
+the two errors every media consumer catches per row). Deterministic, no
+hypothesis needed: the grids are exhaustive over truncation points and
+dense over flips."""
 
 import struct
 
 import pytest
 
 from cmc_knowledge_graph_text2ttl_spark.operators import multimodal as mm
+from cmc_knowledge_graph_text2ttl_spark.operators.malformed import MEDIA_ERRORS
 from cmc_knowledge_graph_text2ttl_spark.operators.extract import extract_one
 import fixture_writers as FW
 from fixture_writers import make_doc
@@ -66,9 +70,14 @@ def test_extract_one_never_escapes(name, builder):
         ("tiff_lzw_pred", lambda: FW.encode_tiff(
             9, 5, bytes((i * 7) % 256 for i in range(9 * 5 * 3)), 3,
             compression="lzw", predictor=True)),
+        ("jpeg", lambda: FW.encode_jpeg_blocks(
+            9, 5, [[1] + [3] * 5 + [0] * 58, [-20] + [0] * 63])),
+        ("gif", lambda: FW.encode_gif(
+            9, 5, [i % 4 for i in range(45)],
+            [(0, 0, 0), (90, 1, 1), (2, 200, 2), (3, 3, 255)])),
     ],
     ids=["png_adam7", "png_pal4", "bmp", "tiff", "webp_vp8l",
-         "tiff_lzw_pred"],
+         "tiff_lzw_pred", "jpeg", "gif"],
 )
 def test_image_decoders_raise_cleanly(name, builder):
     blob = builder()
@@ -76,12 +85,40 @@ def test_image_decoders_raise_cleanly(name, builder):
     for variant in _sweep(blob, step=5):
         try:
             mm.decode_image(variant)
-        except (ValueError, NotImplementedError) as ex:
+        except MEDIA_ERRORS as ex:
             assert str(ex)  # message present
-        except Exception as ex:  # zlib.error is contained by callers too
-            import zlib
 
-            assert isinstance(ex, zlib.error), (name, type(ex), ex)
+
+@pytest.mark.parametrize(
+    "builder,decode,message",
+    [
+        (FW.encode_png_corrupt_idat, mm.decode_image, "corrupt PNG stream: error"),
+        (FW.encode_jpeg_zero_sampling, mm.decode_image,
+         "corrupt JPEG stream: ZeroDivisionError"),
+        (lambda: FW.encode_avi_mjpeg(8, 8, [FW.encode_jpeg_zero_sampling()]),
+         mm.decode_frames, "corrupt JPEG stream: ZeroDivisionError"),
+    ],
+    ids=["png_corrupt_idat", "jpeg_zero_sampling", "mjpeg_avi_zero_sampling"],
+)
+def test_codec_internal_errors_surface_as_value_error(builder, decode, message):
+    """A corrupt IDAT fails inside zlib and a zero JPEG sampling factor
+    divides by zero: both come out as ValueError, naming the format."""
+    with pytest.raises(ValueError, match=message):
+        decode(builder())
+
+
+@pytest.mark.parametrize(
+    "blob",
+    [b"\xff\xd8\x00\x11" + bytes(40), b"BM" + bytes(20), b"\x00\x00\x01\x00\x01"],
+    ids=["jpeg_soi_without_marker", "bmp_under_26_bytes", "ico_under_8_bytes"],
+)
+def test_blobs_sniff_media_rejects_are_unsupported_not_malformed(blob):
+    """The decoder is picked from sniff_media's format, so a blob it does
+    not recognize is NotImplementedError (extract_features'
+    decode_unavailable), whatever its first bytes resemble."""
+    assert mm.sniff_media(blob)[:2] == ("unknown", None)
+    with pytest.raises(NotImplementedError, match="image decoder"):
+        mm.decode_image(blob)
 
 
 def test_exif_and_mp3_never_raise():
@@ -153,6 +190,18 @@ def _anim_fixtures():
             2, 44100, [((i * 37) % 4001) - 2000 for i in range(64)], 16)),
         ("avi_dib", lambda: FW.encode_avi_rgb(
             5, 3, [bytes((i * 11) % 256 for i in range(45))])),
+        ("mjpeg_avi", lambda: FW.encode_avi_mjpeg(8, 8, [
+            FW.encode_jpeg_blocks(8, 8, [[v] + [2] * 3 + [0] * 60])
+            for v in (-100, 7)])),
+        ("gif_anim", lambda: FW.encode_gif_animated(4, 4, [
+            {"indices": [1] * 16},
+            {"indices": [2] * 4, "x0": 1, "y0": 1, "w": 2, "h": 2},
+        ], [(0, 0, 0), (90, 1, 1), (2, 200, 2), (3, 3, 255)])),
+        ("wav", lambda: FW.encode_wav(
+            [((i * 37) % 4001) - 2000 for i in range(64)], 8000, 2)),
+        ("flac", lambda: FW.encode_flac(
+            [((i * 37) % 4001) - 2000 for i in range(256)], 44100,
+            block_size=64, subframe="fixed2")),
     ]
 
 
@@ -160,27 +209,17 @@ def _anim_fixtures():
     "name,builder", _anim_fixtures(), ids=[f[0] for f in _anim_fixtures()]
 )
 def test_round5_codecs_raise_cleanly(name, builder):
-    """Truncation + byte-flip grid over the round-5 additions: APNG,
-    animated WebP, AIFF, uncompressed-DIB AVI. Every variant must
-    decode or raise ValueError/NotImplementedError (zlib.error allowed
-    — contained by every caller) — never hang or escape with a
-    struct/Index error."""
-    import zlib
-
-    decoders = {
-        "apng": mm.decode_apng_frames,
-        "webp_anim": mm.decode_webp_anim_frames,
-        "aiff": mm.decode_aiff,
-        "avi_dib": mm.decode_avi_frames,
-    }
+    """Truncation + byte-flip grid over the frame and audio codecs
+    (APNG, animated WebP and GIF, DIB and MJPEG AVI; AIFF, WAV, FLAC),
+    each through the dispatcher of its kind. Every variant must decode
+    or raise ValueError/NotImplementedError — never hang or escape with
+    a struct/Index/zlib error."""
+    dec = mm.decode_audio if name in ("aiff", "wav", "flac") else mm.decode_frames
     blob = builder()
-    dec = decoders[name]
     out = dec(blob)
     assert out[0] > 0  # pristine blob decodes
     for variant in _sweep(blob, step=5):
         try:
             dec(variant)
-        except (ValueError, NotImplementedError) as ex:
+        except MEDIA_ERRORS as ex:
             assert str(ex)
-        except Exception as ex:
-            assert isinstance(ex, zlib.error), (name, type(ex), ex)

@@ -188,7 +188,7 @@ class TestEmbeddingLinking:
              (20, "football referee stadium goal")],
             ["entity_id", "name"])
         got = {r.id: (r.entity_id, r.cosine)
-               for r in L.embedding_link(docs, ents, dim=32).collect()}
+               for r in L.embedding_link(docs, ents).collect()}
         assert got[1][0] == 10 and got[3][0] == 10
         assert got[2][0] == 20
         assert all(c > 0.3 for _, c in got.values())

@@ -25,10 +25,15 @@ Both checks read the AST only; nothing is imported.
    passed by some call in some repo ``.py`` file, tests included: a test
    that forces a guard or injects a fake is a real use. Calls match by
    function name; a positional argument, a keyword, or a ``*args`` /
-   ``**kwargs`` forward sets a parameter. A function used as a value
-   (stored in a table, then called through a variable or a subscript)
-   also counts every such indirect call in that file as a call of it. An
-   option nothing sets is deleted by folding it into its default.
+   ``**kwargs`` forward sets a parameter, except that a constant of the
+   default's own type and value (``f(n=5)`` for ``def f(n=5)``) does
+   not: that option is configurable in name only. The benchmark's files
+   (``bench*.py`` and ``perfbench/``) are frozen with the benchmark, so
+   their calls count however they pass the value. A function used as a
+   value (stored in a table, then called through a variable or a
+   subscript) also counts every such indirect call in that file as a
+   call of it. An option nothing sets is deleted by folding it into its
+   default.
 4. Within the CLI's import closure, every top-level definition is reached
    from ``cli.py`` (following names from the CLI module and from each
    closure module's import-time statements, definition by definition),
@@ -279,20 +284,36 @@ def public_functions(tree, mod):
 
 
 def _defaulted(fn, is_method):
-    """(name, positional index or None) of each parameter with a default;
-    a method's index does not count ``self``/``cls``."""
+    """(name, positional index or None, default node) of each parameter
+    with a default; a method's index does not count ``self``/``cls``."""
     a = fn.args
     pos = (a.posonlyargs + a.args)[1 if is_method else 0:]
     first = len(pos) - len(a.defaults)
-    yield from ((arg.arg, i) for i, arg in enumerate(pos) if i >= first)
-    yield from ((arg.arg, None) for arg, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None)
+    yield from ((arg.arg, i, a.defaults[i - first]) for i, arg in enumerate(pos) if i >= first)
+    yield from ((arg.arg, None, d) for arg, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None)
 
 
-def _sets(call, name, index):
+def _is_default(arg, default):
+    """``arg`` is a constant of the same type and value as ``default``."""
     return (
-        any(k.arg in (None, name) for k in call.keywords)
+        isinstance(arg, ast.Constant)
+        and isinstance(default, ast.Constant)
+        and type(arg.value) is type(default.value)
+        and arg.value == default.value
+    )
+
+
+def _sets(call, frozen, name, index, default):
+    """``call`` passes parameter ``name`` a value other than its default
+    literal (any value, in a ``frozen`` file)."""
+
+    def counts(arg):
+        return frozen or not _is_default(arg, default)
+
+    return (
+        any(k.arg is None or (k.arg == name and counts(k.value)) for k in call.keywords)
         or any(isinstance(x, ast.Starred) for x in call.args)
-        or (index is not None and index < len(call.args))
+        or (index is not None and index < len(call.args) and counts(call.args[index]))
     )
 
 
@@ -318,16 +339,16 @@ def _name(node):
     return getattr(node, "id", getattr(node, "attr", None))
 
 
-def unset_parameters(functions, trees):
+def unset_parameters(functions, trees, frozen=()):
     """``label(param)`` of each defaulted parameter in ``functions`` that
-    no call in ``trees`` sets."""
+    no call in ``trees`` or in the ``frozen`` trees sets."""
     wanted = {fn.name for _, fn, _ in functions}
     calls = {}
-    for tree in trees:
+    for tree, is_frozen in [(t, False) for t in trees] + [(t, True) for t in frozen]:
         nodes = list(ast.walk(tree))
         file_calls = [n for n in nodes if isinstance(n, ast.Call)]
         for c in file_calls:
-            calls.setdefault(_name(c.func), []).append(c)
+            calls.setdefault(_name(c.func), []).append((c, is_frozen))
         callees = {id(c.func) for c in file_calls}
         escaped = {
             _name(n)
@@ -335,20 +356,31 @@ def unset_parameters(functions, trees):
             if id(n) not in callees and isinstance(getattr(n, "ctx", None), ast.Load)
         }
         for name in escaped & wanted:
-            calls[name] = calls.get(name, []) + _through_variables(tree)
+            calls.setdefault(name, []).extend((c, is_frozen) for c in _through_variables(tree))
     return [
         f"{label}({name})"
         for label, fn, is_method in functions
-        for name, index in _defaulted(fn, is_method)
-        if not any(_sets(c, name, index) for c in calls.get(fn.name, ()))
+        for name, index, default in _defaulted(fn, is_method)
+        if not any(_sets(c, f, name, index, default) for c, f in calls.get(fn.name, ()))
     ]
+
+
+def _is_frozen(path):
+    """A benchmark file: ``bench*.py`` at the root or under ``perfbench/``."""
+    parts = path.relative_to(REPO).parts
+    return parts[0] == "perfbench" or (len(parts) == 1 and parts[0].startswith("bench"))
 
 
 def package_unset_parameters():
     """Unset parameters of every package module, against every repo file."""
     graph = ImportGraph()
     functions = [f for mod in sorted(graph.paths) for f in public_functions(graph.trees[mod], mod)]
-    return unset_parameters(functions, [_parse(p) for p in repo_files()])
+    files = repo_files()
+    return unset_parameters(
+        functions,
+        [_parse(p) for p in files if not _is_frozen(p)],
+        [_parse(p) for p in files if _is_frozen(p)],
+    )
 
 
 def unreached_modules():
@@ -600,6 +632,13 @@ def test_positional_keyword_forwarded_and_indirect_calls_set_parameters():
         "for fn in table.values():\n    fn(x=1)\n"  # call through a variable
     )
     assert unset_parameters(functions, [callers]) == []
+    # a constant equal in type and value to the default sets nothing...
+    defaults = ast.parse("f(0, 1, c=2, d=3)\ng(x=0)\nK().m(0)\n")
+    assert unset_parameters(functions, [defaults]) == unset_parameters(functions, [nothing])
+    # ...unless its type differs (True == 1, but it is a bool)...
+    assert unset_parameters(functions, [ast.parse("f(0, True)\n")])[0] == "lib:f(c)"
+    # ...or the call is in a frozen file, whose calls count as written
+    assert unset_parameters(functions, [], [defaults]) == []
 
 
 def test_reexports_count_only_for_the_names_imported_through_them():

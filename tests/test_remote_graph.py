@@ -85,12 +85,11 @@ class TestPrefetch:
         ep = FakeEndpoint(ROWS)
         ttl = '@prefix x: <http://x/> . x:a x:p "v" .'
         out = resolve_graphs(
-            {"dim": "http://e/q", "onto": ttl, "raw": ROWS[:1]},
+            {"dim": "http://e/q", "onto": ttl},
             transport=ep,
         )
         assert out["dim"] == ROWS
         assert out["onto"] == [("http://x/a", "http://x/p", "literal", "v", None)]
-        assert out["raw"] == ROWS[:1]
 
     def test_prefetched_graph_answers_select(self):
         """End-to-end: remote graph → prefetch → MiniGraph → select with

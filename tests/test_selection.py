@@ -106,12 +106,12 @@ class TestQualityClassifier:
 class TestHashedNgrams:
     def test_single_token_doc_has_no_bigram(self, spark):
         df = _docs(spark, ["solo"])
-        got = sel.hashed_ngram_counts(df, bigrams=True).collect()
+        got = sel.hashed_ngram_counts(df).collect()
         assert sum(r.tf for r in got) == 1  # just the unigram
 
     def test_bigram_counts(self, spark):
         df = _docs(spark, ["a b c"])
-        got = sel.hashed_ngram_counts(df, bigrams=True).collect()
+        got = sel.hashed_ngram_counts(df).collect()
         assert sum(r.tf for r in got) == 3 + 2  # 3 unigrams + 2 bigrams
 
     def test_buckets_in_range(self, spark):
