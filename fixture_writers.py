@@ -19,12 +19,13 @@ from __future__ import annotations
 import gzip
 import hashlib
 import io
+import random
 import re
 import struct
 import tarfile
 import zipfile
 import zlib
-from typing import Dict, List, Optional, Sequence, Tuple, Union
+from typing import Any, Dict, List, Optional, Sequence, Tuple, Union
 
 from cmc_knowledge_graph_text2ttl_spark.operators.cfb import (
     _ENDOFCHAIN,
@@ -3171,3 +3172,278 @@ class _Buf:
 
     def flush(self) -> None:  # gzip calls this on close
         pass
+
+
+# ---------------------------------------------------------------------------
+# Match-family sweep (workflow/interpreter.py): seeded workflows that nest
+# the eight match ops up to three deep, seeded documents with tables,
+# key-value lines and sections, and one digest per workflow over every
+# document's full result. ``tools/make_goldens.py`` writes the digests to
+# ``fixtures/golden/match_sweep.csv``; ``tests/test_golden.py`` recomputes
+# them, so a change to any triple, stat, score, dump text, save-as request
+# or error message of any run shows.
+
+SWEEP_WORKFLOWS = 200
+SWEEP_DOCUMENTS = 60
+SWEEP_SEED = 17
+
+_SWEEP_WORDS = ("alpha", "beta", "Gamma", "delta", "x1", "y22", "Omega", "zeta9")
+
+# Patterns that never match the empty string: ``sequence-of`` takes only
+# these, because a zero-length lexer match does not move its cursor.
+_SWEEP_PATTERNS = (
+    r"<table>(.*?)</table>",
+    r"<tr>(.*?)</tr>",
+    r"<t[dh]>(.*?)</t[dh]>",
+    r"(\w+): ([^\n]*)",
+    r"== (\w+) ==\n([^=]*)",
+    r"\b([a-z]+)(\d*)\b",
+    r"(\d+)",
+    r"([A-Z]\w*)",
+    r"(alpha|beta)",
+    r"\w+",
+    r"(qq+)",
+)
+_SWEEP_EMPTY = (r"(\d*)", r"(y?)")
+_SWEEP_ROWS = (r"<table>(.*?)</table>", r"<tr>(.*?)</tr>")
+_SWEEP_CELLS = (r"<t[dh]>(.*?)</t[dh]>", r"<td>(.*?)</td>", r"(\w+)")
+
+
+def match_sweep_documents(n: int, seed: int) -> List[str]:
+    """``n`` short documents mixing tables, ``Key: value`` lines,
+    ``== Title ==`` sections and free words."""
+    rng = random.Random(seed)
+
+    def words(k):
+        return " ".join(rng.choice(_SWEEP_WORDS) for _ in range(k))
+
+    docs = []
+    for _ in range(n):
+        parts = []
+        for _ in range(rng.randint(1, 4)):
+            kind = rng.randrange(4)
+            if kind == 0:
+                rows = []
+                for r in range(rng.randint(1, 4)):
+                    tag = "th" if r == 0 and rng.random() < 0.5 else "td"
+                    cells = "".join(
+                        f"<{tag}>{words(rng.randint(0, 2))}</{tag}>"
+                        for _ in range(rng.randint(1, 4))
+                    )
+                    rows.append(f"<tr>{cells}</tr>")
+                parts.append("<table>" + "".join(rows) + "</table>")
+            elif kind == 1:
+                parts.append("\n".join(
+                    f"{rng.choice(_SWEEP_WORDS)}: {words(rng.randint(1, 3))}"
+                    for _ in range(rng.randint(1, 3))
+                ))
+            elif kind == 2:
+                parts.append(f"== {rng.choice(_SWEEP_WORDS)} ==\n{words(rng.randint(1, 5))}")
+            else:
+                parts.append(f"{words(rng.randint(1, 6))} {rng.randint(0, 999)}")
+        docs.append("\n".join(parts))
+    return docs
+
+
+class _SweepWorkflow:
+    """One seeded workflow; ``scope`` holds the match ids a body may name."""
+
+    def __init__(self, rng: random.Random) -> None:
+        self.rng = rng
+        self.n_ids = 0
+
+    def ident(self, scope: List[str]) -> Optional[str]:
+        if self.rng.random() < 0.15:
+            return None
+        self.n_ids += 1
+        scope.append(f"m{self.n_ids}")
+        return scope[-1]
+
+    def ref(self, scope: List[str]) -> str:
+        """A template reference a body may expand: mostly to a match in
+        scope, sometimes to a missing group, an unset id or a variable."""
+        rng = self.rng
+        if not scope or rng.random() < 0.1:
+            return rng.choice(("@{v}", "@{?nope.1}", "@{m1_count}", "@{v}", "@{nope.1}"))
+        m = rng.choice(scope)
+        if rng.random() < 0.05:
+            return f"@{{{m}.2}}"
+        return rng.choice((f"@{{{m}.1}}", f"@{{{m}.0}}", f"@{{{m}_count}}"))
+
+    def iri_ref(self, scope: List[str]) -> str:
+        """A reference an IRI can carry: ``:iri`` keeps only [A-Za-z0-9_-]."""
+        if not scope or self.rng.random() < 0.1:
+            return "@{n_count}"
+        m = self.rng.choice(scope)
+        return self.rng.choice((f"@{{{m}.1:iri}}", f"@{{{m}_count}}"))
+
+    def body(self, scope: List[str], depth: int) -> list:
+        rng = self.rng
+        steps = []
+        for _ in range(rng.randint(1, 3)):
+            k = rng.randrange(12)
+            if k < 3 and depth < 3:
+                steps.append(self.op(list(scope), depth + 1))
+            elif k < 6:
+                steps.append({
+                    "subject": f"http://s.example/{self.iri_ref(scope)}",
+                    "predicate": f"http://p.example/{rng.choice('abc')}{depth}",
+                    "object": rng.choice(("^", "")) + self.ref(scope),
+                })
+            elif k == 6:
+                steps.append({"set": "v", "to": self.ref(scope)})
+            elif k == 7:
+                steps.append({"replace": rng.choice((r"\d", "a", "<td>")), "with": "_"})
+            elif k == 8 and scope:
+                steps.append({"ifdef": f"{rng.choice(scope)}.1", "do": self.body(scope, 3)})
+            elif k == 9:
+                steps.append({"break": 1})
+            elif k == 10:
+                steps.append(rng.choice((
+                    {"dump": "_", "file": f"f-{self.iri_ref(scope)}"},
+                    {"save-as": f"s-{self.iri_ref(scope)}"},
+                )))
+            else:
+                steps.append({"pass": 1})
+        return steps
+
+    def pattern(self, empty_ok: bool = True) -> Any:
+        rng = self.rng
+        pool = _SWEEP_PATTERNS + (_SWEEP_EMPTY if empty_ok else ())
+        return rng.choice(pool)
+
+    def flags(self, step: dict) -> dict:
+        if self.rng.random() < 0.2:
+            step["flags"] = self.rng.choice(("I", "M", "I M", "I", "M", "I M", "BOGUS"))
+        return step
+
+    def op(self, scope: List[str], depth: int) -> dict:
+        rng = self.rng
+        kind = rng.randrange(8)
+        if kind == 0:
+            pattern = self.pattern()
+            if rng.random() < 0.25:
+                pattern = [self.pattern(), self.pattern()]
+            step = {"match": pattern}
+        elif kind == 1:
+            step = {"within": self.pattern()}
+            if rng.random() < 0.3:
+                step["group"] = rng.choice((1, 2))
+        elif kind in (2, 3):
+            kw = "match-every" if kind == 2 else "within-every"
+            step = {kw: rng.choice(_SWEEP_ROWS + _SWEEP_CELLS) if depth > 1 else self.pattern()}
+            if kind == 3 and rng.random() < 0.3:
+                step["group"] = rng.choice((1, 2))
+        elif kind == 4:
+            text = self.ref(scope) if scope and rng.random() < 0.7 else "alpha 12 <td>beta</td>"
+            step = {"with": text, "do": self.body(scope, depth)}
+            return step
+        elif kind == 5:
+            return self.sequence_of(scope, depth)
+        elif kind == 6:
+            return self.match_1(scope, depth)
+        else:
+            return self.match_dimensions(scope, depth)
+        ident = self.ident(scope)
+        if ident is not None:
+            step["as"] = ident
+        step["do"] = self.body(scope, depth)
+        if kind in (2, 3) and rng.random() < 0.3:
+            step["first"] = self.body(scope, depth)
+        return self.flags(step)
+
+    def sequence_of(self, scope: List[str], depth: int) -> dict:
+        rng = self.rng
+        entries = []
+        for _ in range(rng.randint(1, 3)):
+            inner = list(scope)
+            entry = {"match": self.pattern(empty_ok=False)}
+            if rng.random() < 0.15:
+                entry["match"] = [self.pattern(empty_ok=False), self.pattern(empty_ok=False)]
+            ident = self.ident(inner)
+            if ident is not None:
+                entry["as"] = ident
+            if rng.random() < 0.3:
+                entry["within-group"] = rng.choice((1, 2))
+            entry["do"] = self.body(inner, depth)
+            entries.append(self.flags(entry))
+        mode = "alternatives" if rng.random() < 0.6 else "steps"
+        return {"sequence-of": f"seq{depth}", mode: entries}
+
+    def match_1(self, scope: List[str], depth: int) -> dict:
+        rng = self.rng
+        step = {"match-1": rng.choice(_SWEEP_ROWS), "match-2": rng.choice(_SWEEP_CELLS)}
+        for name in ("as-1", "as-2", "header-as", "leading-as"):
+            if rng.random() < 0.7:
+                step[name] = self.ident(scope) or f"h{depth}"
+        step["do"] = self.body(scope, depth)
+        for name in ("first", "leading"):
+            if rng.random() < 0.4:
+                step[name] = self.body(scope, depth)
+        return self.flags(step)
+
+    def match_dimensions(self, scope: List[str], depth: int) -> dict:
+        rng = self.rng
+        patterns = list(rng.choice((
+            (r"<tr>(.*?)</tr>", r"<t[dh]>(.*?)</t[dh]>"),
+            (r"<table>(.*?)</table>", r"<tr>(.*?)</tr>", r"<t[dh]>(.*?)</t[dh]>"),
+            (r"<tr>(.*?)</tr>", r"(\w+)"),
+        )))
+        step: Dict[str, Any] = {"match-dimensions": patterns}
+        cell = self.ident(scope)
+        if cell is not None:
+            step["as"] = cell
+        if rng.random() < 0.8:
+            step["dimensions"] = [f"d{depth}{i}" for i in range(len(patterns))]
+        if rng.random() < 0.5:
+            step["pre"] = [{"pass": 1}]
+            if rng.random() < 0.7:
+                step["pre"].append({
+                    "tag-dimension": rng.randint(1, len(patterns)),
+                    "at": rng.randint(1, 2),
+                    "as": "hdr",
+                })
+        step["do"] = self.body(scope, depth)
+        n = len(patterns)
+        for _ in range(rng.randint(0, 2)):
+            key = "-".join(rng.choice(("1", "2", "*", "hdr")) for _ in range(n))
+            step[f"do-{key}"] = self.body(scope, depth)
+        return self.flags(step)
+
+
+def match_sweep_workflows(n: int, seed: int) -> List[Tuple[str, str]]:
+    """``n`` seeded ``(name, YAML source)`` workflows: a prefix, then one
+    to three match-family ops whose bodies nest more of them."""
+    import yaml
+
+    rng = random.Random(seed)
+    out = []
+    for i in range(n):
+        gen = _SweepWorkflow(rng)
+        plan = [gen.op([], 1) for _ in range(rng.randint(1, 3))]
+        out.append((f"sweep_{i:03d}", yaml.safe_dump(plan, sort_keys=False)))
+    return out
+
+
+def match_sweep_digests() -> List[Tuple[str, int, int, str]]:
+    """``(workflow, runs, error runs, sha256)`` per sweep workflow; the
+    hash covers, per document in order, the triples, ``no_matches``,
+    ``no_triples``, ``total_match_len``, the score's repr, the dump
+    texts, the save-as requests and the error."""
+    from cmc_knowledge_graph_text2ttl_spark.workflow import compile_workflow, run_document
+
+    docs = match_sweep_documents(SWEEP_DOCUMENTS, SWEEP_SEED)
+    rows = []
+    for i, (name, source) in enumerate(match_sweep_workflows(SWEEP_WORKFLOWS, SWEEP_SEED)):
+        program = compile_workflow(source, name, index=i)
+        h = hashlib.sha256()
+        errors = 0
+        for text in docs:
+            r = run_document(text, program)
+            errors += r.error is not None
+            h.update(repr((
+                r.triples, r.no_matches, r.no_triples, r.total_match_len, repr(r.score),
+                sorted(r.texts.items()), r.saved_as, r.error,
+            )).encode())
+        rows.append((name, len(docs), errors, h.hexdigest()))
+    return rows

@@ -1,7 +1,8 @@
 """Golden regression tests (FIXTURES.md §5): the distributed engine must
 reproduce the checked-in oracle goldens exactly — triples per workflow
 (canonical N-Triples), extraction byte hashes, and the stable best-of
-tie-break between the wf_alt_a/wf_alt_b competitors.
+tie-break between the wf_alt_a/wf_alt_b competitors. The interpreter
+alone must reproduce the match-family sweep's per-workflow digests.
 """
 
 import csv
@@ -20,6 +21,7 @@ from cmc_knowledge_graph_text2ttl_spark.sinks import triples_to_nt_lines
 from cmc_knowledge_graph_text2ttl_spark.sources import synth_pages_df
 from cmc_knowledge_graph_text2ttl_spark.workflow.compile import compile_workflow_file
 from cmc_knowledge_graph_text2ttl_spark.workflow.sparql import parse_ttl
+from fixture_writers import match_sweep_digests
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 GOLDEN = os.path.join(REPO, "fixtures", "golden")
@@ -97,3 +99,18 @@ def test_alt_tie_break_stable(spark):
         assert winners[u] == "wf_alt_a", u
     b_urls = [u for u, w in winners.items() if w == "wf_alt_b"]
     assert b_urls, "section docs must make wf_alt_b win somewhere"
+
+
+def test_match_sweep_matches_golden():
+    """Every result field of the seeded match-family sweep (triples, the
+    three stats, score, dump texts, save-as requests, error text) is what
+    the checked-in digests record."""
+    with open(f"{GOLDEN}/match_sweep.csv") as fh:
+        golden = [
+            (r["workflow"], int(r["runs"]), int(r["error_runs"]), r["sha256"])
+            for r in csv.DictReader(fh)
+        ]
+    got = match_sweep_digests()
+    assert len(golden) == 200
+    assert [g for g in got if g not in golden] == []
+    assert got == golden

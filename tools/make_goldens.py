@@ -1,5 +1,7 @@
 """Generate golden fixtures (FIXTURES.md §5): canonical N-Triples per
-workflow over the deterministic synth corpus + per-url text sha256 hashes.
+workflow over the deterministic synth corpus, per-url text sha256 hashes,
+and ``match_sweep.csv``: one sha256 per seeded match-family workflow over
+every field of its documents' results (``fixture_writers.match_sweep_digests``).
 
 Run from the repo root: python tools/make_goldens.py
 Goldens are produced by the SINGLE-PROCESS ORACLE interpreter — the Spark
@@ -13,6 +15,8 @@ import os
 import sys
 
 sys.path.insert(0, ".")
+
+from fixture_writers import match_sweep_digests
 
 from cmc_knowledge_graph_text2ttl_spark.operators.extract import extract_one
 from cmc_knowledge_graph_text2ttl_spark.operators.run import doc_vars_for_url
@@ -61,6 +65,11 @@ def main():
         with open(f"{OUT}/{prog.name}.nt", "w") as fh:
             fh.write("\n".join(sorted(lines)) + "\n")
         print(f"{prog.name}: {len(lines)} triples, {n_err} doc errors")
+
+    with open(f"{OUT}/match_sweep.csv", "w", newline="") as fh:
+        w = csv.writer(fh)
+        w.writerow(["workflow", "runs", "error_runs", "sha256"])
+        w.writerows(match_sweep_digests())
 
 
 if __name__ == "__main__":
