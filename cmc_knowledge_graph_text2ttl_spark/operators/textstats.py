@@ -191,20 +191,17 @@ def repetition_stats(
     )
 
 
-def fingerprint(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """(id, fingerprint) — winnowing-style document fingerprint: the
-    minimum md5-derived hash over character 8-gram shingles (one value
-    per doc; equal fingerprints ⇒ near-identical prefix content sets).
-    Short docs (< 8 chars) hash the whole text."""
-    t = F.col(text_col)
+def fingerprint(df: DataFrame) -> DataFrame:
+    """(id, fingerprint) — winnowing-style document fingerprint of
+    ``text``, keyed by ``doc_id``: the minimum md5-derived hash over
+    character 8-gram shingles (one value per doc; equal fingerprints ⇒
+    near-identical prefix content sets). Short docs (< 8 chars) hash the
+    whole text."""
+    t = F.col("text")
     pos = F.sequence(F.lit(1), F.greatest(F.length(t) - 8 + 1, F.lit(1)))
     shingle_hashes = F.transform(pos, lambda i: md5_int(t.substr(i, F.lit(8))))
     return df.select(
-        F.col(id_col).alias("id"),
+        F.col("doc_id").alias("id"),
         F.array_min(shingle_hashes).alias("fingerprint"),
     )
 

@@ -46,6 +46,14 @@ valid workflow can rely on them):
   here it works: per-row variable binding + body execution.
 * template expansion is capped at 100k rewrites (the reference loops
   forever on self-reproducing expansions).
+* a ``sequence-of`` alternative that wins with an empty match at the
+  cursor raises: the reference's lexer never moves its cursor past it and
+  loops forever (processor.py:1456-1618).
+* a triple whose subject, predicate or IRI object holds a character that
+  N-Triples ``IRIREF`` forbids raises: ``<>"{}|^``, the backtick, the
+  backslash and U+0000-U+0020. rdflib's ``URIRef.n3()`` rejects the same
+  set except the control characters U+0000-U+001F, which the reference
+  writes into a broken line.
 """
 
 from __future__ import annotations
@@ -96,6 +104,9 @@ _IFDEF_MATCH_REF = re.compile(r"(\w+)\.(\d+)")
 
 # A static ``lang:`` value: the N-Triples LANGTAG production.
 _LANG_TAG = re.compile(r"[a-zA-Z]+(-[a-zA-Z0-9]+)*")
+
+# A character the N-Triples IRIREF production forbids.
+_BAD_IRI_CHAR = re.compile(r'[<>"{}|^`\\\x00-\x20]')
 
 _MAX_TEMPLATE_REWRITES = 100_000
 
@@ -349,7 +360,6 @@ class DocInterpreter:
         self._text = text
         self._vars: Dict[str, Any] = dict(initial_vars or {})
         self._matches: Dict[str, re.Match] = {}
-        self._latest_match: Optional[re.Match] = None
         self._prefixes: Dict[str, str] = {}
         self._mappings: Dict[str, Tuple[dict, list, int]] = {}
         self._procedures: Dict[str, list] = {}
@@ -634,6 +644,9 @@ class DocInterpreter:
 
     def _add(self, s, p, o) -> None:
         row = node_to_row(s, p, o)
+        for iri in (row[0], row[1], row[3]) if row[2] == "iri" else row[:2]:
+            if _BAD_IRI_CHAR.search(iri):
+                raise ProcessorException(f"IRI {iri!r} holds a character N-Triples cannot write")
         self.result.no_triples += 1  # raw count incl. duplicates
         if row not in self._seen_triples:  # graph set semantics
             self._seen_triples.add(row)
@@ -930,11 +943,7 @@ class DocInterpreter:
         body = self._procedures.get(name)
         if body is None:
             raise ProcessorException(f"call: no procedure named {name} is defined")
-        outer_vars, outer_matches, outer_latest = (
-            self._vars,
-            self._matches,
-            self._latest_match,
-        )
+        outer_vars, outer_matches = self._vars, self._matches
         try:
             self._vars = dict(self._vars)
             self._matches = dict(self._matches)
@@ -955,7 +964,6 @@ class DocInterpreter:
         finally:
             self._vars = outer_vars
             self._matches = outer_matches
-            self._latest_match = outer_latest
 
     # -- matching ------------------------------------------------------------------
 
@@ -987,38 +995,64 @@ class DocInterpreter:
         body = r.plan("do")
         return (r.search(pattern, flags), ident, body)
 
+    def _on_text(self, text: str, run: Callable, *args) -> Any:
+        """``run(*args)`` with ``text`` as the current text: the match
+        family's one text scope."""
+        saved = self._text
+        try:
+            self._text = text
+            return run(*args)
+        finally:
+            self._text = saved
+
+    def _hit(self, m: re.Match, ident: Optional[str], count: Optional[int] = None) -> None:
+        """The match family's one match record: the stats, ``as:`` and,
+        given a count, ``<as>_count``."""
+        self._stat_match(len(m.group(0)))
+        if ident is not None:
+            self._matches[ident] = m
+            if count is not None:
+                self._vars[f"{ident}_count"] = count
+
+    def _seq_in_group(self, group: Optional[int], m: re.Match, body: list) -> None:
+        """Run ``body``, on the text of ``m``'s group when one is given."""
+        if group is None:
+            self._seq(body)
+        else:
+            self._on_text(m.group(group), self._seq, body)
+
     def _op_match(self, a: tuple) -> Tuple[bool, Any]:
         rx, ident, body = a
         m = self._search_any(rx)
         if m is not None:
-            self._latest_match = m
-            if ident is not None:
-                self._matches[ident] = m
-            self._stat_match(len(m.group(0)))
+            self._hit(m, ident)
             return self._seq(body)
         return (False, None)
 
     @staticmethod
     def _prep_match_every(r: _StepReader) -> tuple:
         pattern = r.get("match-every")
-        return (r.rx(pattern, r.flags()), r.get("as", str, optional=True), r.plan("do"),
+        return (r.rx(pattern, r.flags()), None, r.get("as", str, optional=True), r.plan("do"),
                 r.plan("first", optional=True))
 
-    def _op_match_every(self, a: tuple) -> Tuple[bool, Any]:
-        rx, ident, body, do_first = a
-        count = 1
-        for m in rx.finditer(self._text):
-            self._latest_match = m
-            self._stat_match(len(m.group(0)))
-            if ident is not None:
-                self._matches[ident] = m
-                self._vars[f"{ident}_count"] = count
-            if count == 1 and do_first is not None:
-                self._seq(do_first)
-            else:
-                self._seq(body)
-            count += 1
-        return (count > 1, None)
+    @staticmethod
+    def _prep_within_every(r: _StepReader) -> tuple:
+        pattern = r.get("within-every")
+        rx, group = r.rx(pattern, r.flags()), r.get("group", int, optional=True) or 1
+        body = r.plan("do")
+        return (rx, group, r.get("as", str, optional=True), body, r.plan("first", optional=True))
+
+    def _op_every(self, a: tuple) -> Tuple[bool, Any]:
+        """``match-every`` (``group`` None: each body runs on the current
+        text) and ``within-every`` (each body runs on its match's group).
+        Each keeps its own ``prepare``: the order it reads attributes in
+        decides which error a broken step reports."""
+        rx, group, ident, body, do_first = a
+        count = 0
+        for count, m in enumerate(rx.finditer(self._text), 1):
+            self._hit(m, ident, count)
+            self._seq_in_group(group, m, do_first if count == 1 and do_first is not None else body)
+        return (count > 0, None)
 
     @staticmethod
     def _prep_within(r: _StepReader) -> tuple:
@@ -1034,45 +1068,10 @@ class DocInterpreter:
         if m is not None:
             t = m.group(group_index)
             if t:
-                self._stat_match(len(m.group(0)))
-                if ident is not None:
-                    self._matches[ident] = m
-                saved = self._text
-                try:
-                    self._text = t
-                    self._seq(body)
-                finally:
-                    self._text = saved
+                self._hit(m, ident)
+                self._on_text(t, self._seq, body)
                 return (True, t)
         return (False, None)
-
-    @staticmethod
-    def _prep_within_every(r: _StepReader) -> tuple:
-        pattern = r.get("within-every")
-        return (r.rx(pattern, r.flags()), r.get("group", int, optional=True) or 1,
-                r.plan("do"), r.get("as", str, optional=True), r.plan("first", optional=True))
-
-    def _op_within_every(self, a: tuple) -> Tuple[bool, Any]:
-        rx, group_index, body, ident, do_first = a
-        count = 1
-        for m in rx.finditer(self._text):
-            self._latest_match = m
-            self._stat_match(len(m.group(0)))
-            t = m.group(group_index)
-            saved = self._text
-            try:
-                if ident is not None:
-                    self._matches[ident] = m
-                    self._vars[f"{ident}_count"] = count
-                self._text = t
-                if count == 1 and do_first is not None:
-                    self._seq(do_first)
-                else:
-                    self._seq(body)
-                count += 1
-            finally:
-                self._text = saved
-        return (count > 1, None)
 
     @staticmethod
     def _prep_with(r: _StepReader) -> tuple:
@@ -1081,17 +1080,7 @@ class DocInterpreter:
 
     def _op_with(self, a: tuple) -> Tuple[bool, Any]:
         text, body = a
-        text = self.expand(text)
-        body = _late(body)
-        if text is not None:
-            saved = self._text
-            try:
-                self._text = text
-                ok, result = self._seq(body)
-            finally:
-                self._text = saved
-            return (ok, result)
-        return (False, None)
+        return self._on_text(self.expand(text), self._seq, _late(body))
 
     # -- sequence-of (processor.py:1456-1618) -----------------------------------
 
@@ -1119,61 +1108,39 @@ class DocInterpreter:
             else:
                 rx = e.rx(pattern, flags)
             specs.append((rx, ident, e.get("within-group", int, optional=True), e.plan("do")))
-        return (alternatives is not None, specs, [s[1] for s in specs if s[1] is not None])
-
-    def _seq_in_group(self, group: Optional[int], m: re.Match, body: list) -> None:
-        """Run ``body``, on the text of ``m``'s group when one is given."""
-        if group is None:
-            self._seq(body)
-            return
-        saved = self._text
-        try:
-            self._text = m.group(group)
-            self._seq(body)
-        finally:
-            self._text = saved
+        return (seq_id, alternatives is not None, specs)
 
     def _op_sequence_of(self, a: tuple) -> Tuple[bool, Any]:
-        lexer, specs, idents = a
-        fire_counts = dict.fromkeys(idents, 0)
-        count = 0
-        start = 0
-        if lexer:
-            # Lexer loop: repeatedly take the earliest-starting match among
-            # all alternatives, advance the cursor past it.
-            while True:
-                earliest = None
-                earliest_spec = None
-                for spec in specs:
-                    m = self._search_any(spec[0], start)
-                    if m is not None and (earliest is None or m.start(0) < earliest.start(0)):
-                        earliest, earliest_spec = m, spec
-                if earliest is None:
-                    break
-                start = earliest.end(0)
-                count += 1
-                _, ident, group, body = earliest_spec
-                self._latest_match = earliest
-                self._stat_match(len(earliest.group(0)))
-                if ident is not None:
-                    self._matches[ident] = earliest
-                    fire_counts[ident] += 1
-                    self._vars[f"{ident}_count"] = fire_counts[ident]
-                self._seq_in_group(group, earliest, body)
-        else:
-            # Strict ordered steps: stop at the first non-matching step.
-            for rx, ident, group, body in specs:
-                m = self._search_any(rx, start)
-                if m is None:
-                    break
-                start = m.end(0)
-                count += 1
-                # steps mode does not track per-id counters in the reference
-                self._latest_match = m
-                self._stat_match(len(m.group(0)))
-                if ident is not None:
-                    self._matches[ident] = m
-                self._seq_in_group(group, m, body)
+        seq_id, lexer, specs = a
+        fire_counts: Dict[Optional[str], int] = {}
+        count = start = 0
+        while True:
+            if lexer:
+                # Lexer: take the earliest-starting match among all
+                # alternatives, advance the cursor past it.
+                m = spec = None
+                for s in specs:
+                    sm = self._search_any(s[0], start)
+                    if sm is not None and (m is None or sm.start(0) < m.start(0)):
+                        m, spec = sm, s
+                if m is not None and m.end(0) == start:  # the reference loops forever
+                    raise ProcessorException(f"sequence-of {seq_id}: an alternative matched "
+                                             f"the empty string at {start}; the cursor cannot advance")
+            elif count < len(specs):
+                # Strict ordered steps: stop at the first non-matching step.
+                spec = specs[count]
+                m = self._search_any(spec[0], start)
+            else:
+                break
+            if m is None:
+                break
+            start = m.end(0)
+            count += 1
+            _, ident, group, body = spec
+            fire_counts[ident] = fire_counts.get(ident, 0) + 1
+            # steps mode does not track per-id counters in the reference
+            self._hit(m, ident, fire_counts[ident] if lexer else None)
+            self._seq_in_group(group, m, body)
         return (count >= 1, None)
 
     # -- 2-D table matcher (DEPRECATED in reference; processor.py:1622-1707) -----
@@ -1190,44 +1157,38 @@ class DocInterpreter:
                 do_first, do_leading)
 
     def _op_match_1(self, a: tuple) -> Tuple[bool, Any]:
+        # match-1 adds nothing to the stats, so it records its matches itself
         (rx1, rx2, group_1, id_1, id_2, id_header, id_leading, body, do_first,
          do_leading) = a
         header_matches: List[re.Match] = []
-        count_1 = 1
-        for m1 in rx1.finditer(self._text):
-            t = m1.group(group_1)
-            saved = self._text
-            try:
-                self._latest_match = m1
-                if id_1 is not None:
-                    self._matches[id_1] = m1
-                    self._vars[f"{id_1}_count"] = count_1
-                self._text = t
-                count_2 = 1
-                for m2 in rx2.finditer(self._text):
-                    self._latest_match = m2
-                    if id_2 is not None:
-                        self._matches[id_2] = m2
-                        self._vars[f"{id_2}_count"] = count_2
-                    if count_1 == 1:
-                        header_matches.append(m2)
-                    if id_header is not None:
-                        self._matches[id_header] = header_matches[count_2 - 1]
-                        self._vars[f"{id_header}_count"] = count_2
-                    if count_2 == 1 and id_leading is not None:
-                        self._matches[id_leading] = m2
-                        self._vars[f"{id_leading}_count"] = count_1
-                    if count_1 == 1 and do_first is not None:
-                        self._seq(do_first)
-                    elif count_2 == 1 and do_leading is not None:
-                        self._seq(do_leading)
-                    else:
-                        self._seq(body)
-                    count_2 += 1
-                count_1 += 1
-            finally:
-                self._text = saved
-        return (count_1 > 1, None)
+
+        def row(count_1: int) -> None:
+            for count_2, m2 in enumerate(rx2.finditer(self._text), 1):
+                if id_2 is not None:
+                    self._matches[id_2] = m2
+                    self._vars[f"{id_2}_count"] = count_2
+                if count_1 == 1:
+                    header_matches.append(m2)
+                if id_header is not None:
+                    self._matches[id_header] = header_matches[count_2 - 1]
+                    self._vars[f"{id_header}_count"] = count_2
+                if count_2 == 1 and id_leading is not None:
+                    self._matches[id_leading] = m2
+                    self._vars[f"{id_leading}_count"] = count_1
+                if count_1 == 1 and do_first is not None:
+                    self._seq(do_first)
+                elif count_2 == 1 and do_leading is not None:
+                    self._seq(do_leading)
+                else:
+                    self._seq(body)
+
+        count_1 = 0
+        for count_1, m1 in enumerate(rx1.finditer(self._text), 1):
+            if id_1 is not None:
+                self._matches[id_1] = m1
+                self._vars[f"{id_1}_count"] = count_1
+            self._on_text(m1.group(group_1), row, count_1)
+        return (count_1 > 0, None)
 
     # -- N-dimensional matcher (processor.py:1711-1933) ---------------------------
 
@@ -1254,88 +1215,61 @@ class DocInterpreter:
     def _op_match_dimensions(self, a: tuple) -> Tuple[bool, Any]:
         rxs, cell_id, dimensions, body, pre_steps, cells = a
         counts: List[Optional[int]] = [None] * len(rxs)
+        last = len(rxs) - 1
+
+        def enter(dim: int, count: int) -> None:
+            counts[dim] = count
+            if dimensions:
+                self._vars[dimensions[dim]] = count
+
+        def scan(dim: int, text: str, leaf: Callable) -> list:
+            """The table under ``text`` from dimension ``dim`` on, as
+            nested lists of what ``leaf`` returns for each cell match."""
+            table = []
+            for count, m in enumerate(rxs[dim].finditer(text), 1):
+                enter(dim, count)
+                table.append(scan(dim + 1, m.group(1), leaf) if dim < last else leaf(m))
+            return table
+
+        def save_key(m: re.Match) -> re.Match:
+            if cell_id:
+                # pre-scan saves only the indexed key (processor.py:1789-1793)
+                self._matches[f"{cell_id}-" + "-".join(str(i) for i in counts)] = m
+            return m
+
+        def run_cell(m: re.Match) -> None:
+            """Final-dimension cell: stats, match save, most-specific body."""
+            self._stat_match(len(m.group(0)))
+            if cell_id:
+                save_key(m)
+                self._matches[cell_id] = m
+            self._on_text(m.group(1), self._seq, self._cell_ops(counts, cells) or body)
+
+        def walk(dim: int, table: list) -> None:
+            """Run the cells of a pre-scanned table; ``break:`` acts only
+            here and skips the rest of its row."""
+            for count, m in enumerate(table, 1):
+                enter(dim, count)
+                if dim < last:
+                    walk(dim + 1, m)
+                    self._break_dimension = False
+                elif self._break_dimension:
+                    break
+                else:
+                    run_cell(m)
+
         prev_matches = self.result.no_matches
-        if pre_steps is not None:
+        if pre_steps is None:
+            scan(0, self._text, run_cell)
+        else:
             self._dim_tags_stack.append([None] * len(dimensions))
             try:
-                dim_matches = self._prescan_dim(0, rxs, counts, dimensions, cell_id)
+                table = scan(0, self._text, save_key)
                 self._seq(pre_steps)
-                self._walk_dim(0, dim_matches, counts, dimensions, cell_id, body, cells)
+                walk(0, table)
             finally:
                 self._dim_tags_stack.pop()
-        else:
-            self._match_dim(0, rxs, counts, dimensions, cell_id, body, cells)
         return (self.result.no_matches > prev_matches, None)
-
-    def _prescan_dim(self, dim, rxs, counts, dimensions, cell_id) -> list:
-        dim_matches = []
-        count = 1
-        for m in rxs[dim].finditer(self._text):
-            counts[dim] = count
-            if dimensions:
-                self._vars[dimensions[dim]] = count
-            if dim < len(rxs) - 1:
-                saved = self._text
-                try:
-                    self._text = m.group(1)
-                    dim_matches.append(self._prescan_dim(dim + 1, rxs, counts, dimensions, cell_id))
-                finally:
-                    self._text = saved
-            else:
-                if cell_id:
-                    # pre-scan saves only the indexed key (processor.py:1789-1793)
-                    self._matches[f"{cell_id}-" + "-".join(str(i) for i in counts)] = m
-                dim_matches.append(m)
-            count += 1
-        return dim_matches
-
-    def _walk_dim(self, dim, dim_matches, counts, dimensions, cell_id, body, cells):
-        count = 1
-        for m in dim_matches:
-            counts[dim] = count
-            if dimensions:
-                self._vars[dimensions[dim]] = count
-            if dim < len(counts) - 1:
-                self._walk_dim(dim + 1, m, counts, dimensions, cell_id, body, cells)
-                self._break_dimension = False
-            else:
-                if self._break_dimension:
-                    break
-                self._run_cell(m, counts, cell_id, body, cells)
-            count += 1
-
-    def _match_dim(self, dim, rxs, counts, dimensions, cell_id, body, cells):
-        count = 1
-        for m in rxs[dim].finditer(self._text):
-            counts[dim] = count
-            if dimensions:
-                self._vars[dimensions[dim]] = count
-            if dim < len(rxs) - 1:
-                saved = self._text
-                try:
-                    self._text = m.group(1)
-                    self._match_dim(dim + 1, rxs, counts, dimensions, cell_id, body, cells)
-                finally:
-                    self._text = saved
-            else:
-                self._run_cell(m, counts, cell_id, body, cells)
-            count += 1
-
-    def _run_cell(self, m, counts, cell_id, body, cells):
-        """Final-dimension cell: stats, match save, most-specific body."""
-        self._stat_match(len(m.group(0)))
-        if cell_id:
-            self._matches[f"{cell_id}-" + "-".join(str(i) for i in counts)] = m
-            self._matches[cell_id] = m
-        ops = self._cell_ops(counts, cells)
-        if ops is None:
-            ops = body
-        saved = self._text
-        try:
-            self._text = m.group(1)
-            self._seq(ops)
-        finally:
-            self._text = saved
 
     def _cell_ops(self, counts, cells):
         """Most-specific do-<i>-<j> body: per dimension its tag, its index,
@@ -1440,10 +1374,12 @@ class DocInterpreter:
     def apply_mapping(self, name: str, value: str) -> str:
         """Exact-dict hit first, then ordered regex pairs, else identity.
 
-        The mapping-regex match becomes the latest match during replacement
-        expansion so ``@{N}`` refers to its groups (processor.py:2098-2101).
         Regex pairs are matched with ``re.match`` and NO flags — the
-        mapping's flags only affect the exact dict's lowercased copy.
+        mapping's flags only affect the exact dict's lowercased copy. The
+        reference makes the regex match the latest match for the
+        replacement (processor.py:2098-2101), but ``@{N}`` never reads the
+        latest match: it expands the variable ``N``, ``"None"`` when unset
+        (processor.py:2644).
         """
         mapping = self._mappings.get(name)
         if mapping is None:
@@ -1456,15 +1392,9 @@ class DocInterpreter:
             repl = exact.get(value.lower())
             if repl is not None:
                 return self.expand(repl)
-        saved_latest = self._latest_match
-        try:
-            for pat, repl in rx_pairs:
-                m = re.match(pat, value)
-                if m:
-                    self._latest_match = m
-                    return self.expand(repl)
-        finally:
-            self._latest_match = saved_latest
+        for pat, repl in rx_pairs:
+            if re.match(pat, value):
+                return self.expand(repl)
         return value
 
     # -- graph lookup (select:) ----------------------------------------------------
@@ -1536,9 +1466,9 @@ OPS: Dict[str, Tuple[Callable, Callable]] = {
     "call": (_I._prep_call, _I._op_call),
     "replace": (_I._prep_replace, _I._op_replace),
     "match": (_I._prep_match, _I._op_match),
-    "match-every": (_I._prep_match_every, _I._op_match_every),
+    "match-every": (_I._prep_match_every, _I._op_every),
     "within": (_I._prep_within, _I._op_within),
-    "within-every": (_I._prep_within_every, _I._op_within_every),
+    "within-every": (_I._prep_within_every, _I._op_every),
     "with": (_I._prep_with, _I._op_with),
     "sequence-of": (_I._prep_sequence_of, _I._op_sequence_of),
     "match-1": (_I._prep_match_1, _I._op_match_1),

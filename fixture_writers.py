@@ -27,6 +27,8 @@ import zipfile
 import zlib
 from typing import Any, Dict, List, Optional, Sequence, Tuple, Union
 
+import yaml
+
 from cmc_knowledge_graph_text2ttl_spark.operators.cfb import (
     _ENDOFCHAIN,
     _FATSECT,
@@ -3307,10 +3309,8 @@ class _SweepWorkflow:
                 steps.append({"pass": 1})
         return steps
 
-    def pattern(self, empty_ok: bool = True) -> Any:
-        rng = self.rng
-        pool = _SWEEP_PATTERNS + (_SWEEP_EMPTY if empty_ok else ())
-        return rng.choice(pool)
+    def pattern(self, empty_ok: bool = True) -> str:
+        return self.rng.choice(_SWEEP_PATTERNS + (_SWEEP_EMPTY if empty_ok else ()))
 
     def flags(self, step: dict) -> dict:
         if self.rng.random() < 0.2:
@@ -3336,8 +3336,7 @@ class _SweepWorkflow:
                 step["group"] = rng.choice((1, 2))
         elif kind == 4:
             text = self.ref(scope) if scope and rng.random() < 0.7 else "alpha 12 <td>beta</td>"
-            step = {"with": text, "do": self.body(scope, depth)}
-            return step
+            return {"with": text, "do": self.body(scope, depth)}
         elif kind == 5:
             return self.sequence_of(scope, depth)
         elif kind == 6:
@@ -3412,10 +3411,8 @@ class _SweepWorkflow:
 
 
 def match_sweep_workflows(n: int, seed: int) -> List[Tuple[str, str]]:
-    """``n`` seeded ``(name, YAML source)`` workflows: a prefix, then one
-    to three match-family ops whose bodies nest more of them."""
-    import yaml
-
+    """``n`` seeded ``(name, YAML source)`` workflows of one to three
+    match-family ops whose bodies nest more of them."""
     rng = random.Random(seed)
     out = []
     for i in range(n):

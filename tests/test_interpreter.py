@@ -11,6 +11,7 @@ import math
 import os
 import pickle
 import re
+import time
 
 import pytest
 import yaml
@@ -289,6 +290,33 @@ class TestTripleEmission:
         assert [(r[1], r[3]) for r in t] == [
             ("http://x/p1", "1"), ("http://x/p2", "2"), ("http://x/p2", "3"),
         ]
+
+    def test_iri_ntriples_cannot_write_is_an_error_row(self):
+        src = """
+- match: 'Name: (.*)'
+  as: n
+  do:
+    - subject: http://x/p_@{n.1}
+      predicate: http://x/q
+      object: v
+"""
+        res = run(src, 'Name: a b> "c"\n')
+        iri = 'http://x/p_a b> "c"\n'
+        assert res.error == f"IRI {iri!r} holds a character N-Triples cannot write"
+        assert res.triples == [] and res.no_triples == 0
+
+    @pytest.mark.parametrize("char", list('<>"{}|^`\\ ') + ["\x00", "\t", "\x1f"])
+    @pytest.mark.parametrize("term", ["subject", "predicate", "object"])
+    def test_forbidden_iri_characters_raise_in_every_iri_term(self, term, char):
+        """N-Triples IRIREF forbids these; U+0000-U+001F is a deviation
+        (rdflib lets control characters through)."""
+        step = {"subject": "http://x/s", "predicate": "http://x/p", "object": {"iri": "http://x/o"}}
+        step[term] = {"iri": "http://x/a@{v}"} if term == "object" else "http://x/a@{v}"
+        res = run(yaml.safe_dump([step]), doc_vars={"v": char})
+        assert res.error == f"IRI {'http://x/a' + char!r} holds a character N-Triples cannot write"
+        step["object"] = "^x@{v}"  # a literal object may hold any of them
+        step[term if term != "object" else "subject"] = "http://x/t"
+        assert run(yaml.safe_dump([step]), doc_vars={"v": char}).error is None
 
     def test_inverse_emits_reversed(self):
         src = """
@@ -643,6 +671,30 @@ class TestSequenceOf:
 """
         assert [r[3] for r in triples(src, "[abc] [de]")] == ["got-abc", "got-de"]
 
+    EMPTY_ALTERNATIVE = """
+- sequence-of: s
+  {mode}:
+    - match: '{pattern}'
+      do: [{{pass: 1}}]
+"""
+
+    @pytest.mark.parametrize("pattern, text, at", [("x*", "abc", 0), ("a*", "aab", 2)])
+    def test_empty_alternative_match_is_an_error_row_not_a_hang(self, pattern, text, at):
+        """The reference's lexer loops forever on an empty match at its
+        cursor (documented deviation): the document becomes an error row."""
+        t0 = time.monotonic()
+        res = run(self.EMPTY_ALTERNATIVE.format(mode="alternatives", pattern=pattern), text)
+        assert time.monotonic() - t0 < 1.0
+        assert res.error == (
+            f"sequence-of s: an alternative matched the empty string at {at}; "
+            "the cursor cannot advance"
+        )
+        assert res.no_matches == (1 if at else 0)
+
+    def test_empty_step_match_runs_once(self):
+        res = run(self.EMPTY_ALTERNATIVE.format(mode="steps", pattern="x*"), "abc")
+        assert res.error is None and res.no_matches == 1
+
 
 class TestMatchDimensions:
     TABLE = "<tr><td>h1</td><td>h2</td></tr><tr><td>a</td><td>b</td></tr><tr><td>c</td><td>d</td></tr>"
@@ -715,6 +767,29 @@ class TestMatchDimensions:
         # row 2: 'a' emitted, then 'b' breaks → 'b' body may run but break
         # happens before the emit for subsequent cells of that row; row 3 resumes
         assert "k-a" in vals and "k-c" in vals and "k-d" in vals
+
+    BREAK_ON_A = """
+- match-dimensions:
+    - '<tr>(.*?)</tr>'
+    - '<td>(.*?)</td>'
+  dimensions: [row, col]
+  as: cell
+{pre}  do:
+    - subject: http://e/s
+      predicate: http://e/p
+      object: "^k-@{{cell.1}}"
+    - if: "'@{{cell.1}}' == 'a'"
+      do: [{{break: now}}]
+"""
+
+    def test_break_in_prescanned_table_skips_rest_of_its_row(self):
+        """With pre:, break on row 2's first cell skips 'b'; row 3 runs."""
+        t = triples(self.BREAK_ON_A.format(pre="  pre: [{pass: x}]\n"), self.TABLE)
+        assert [r[3] for r in t] == ["k-h1", "k-h2", "k-a", "k-c", "k-d"]
+
+    def test_break_without_pre_stops_no_cell(self):
+        t = triples(self.BREAK_ON_A.format(pre=""), self.TABLE)
+        assert [r[3] for r in t] == ["k-h1", "k-h2", "k-a", "k-b", "k-c", "k-d"]
 
     def test_match1_deprecated_header_rebinding(self):
         src = """

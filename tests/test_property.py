@@ -324,6 +324,30 @@ _triple_st = st.tuples(
 )
 
 
+class TestIriProperties:
+    """Random template values in every IRI term give an error row or
+    IRIs that N-Triples can write."""
+
+    SRC = (
+        "- subject: 'http://x/s@{s}'\n"
+        "  predicate: 'http://x/p@{p}'\n"
+        "  object: {iri: 'http://x/o@{o}'}\n"
+    )
+    BAD = re.compile(r'[<>"{}|^`\\\x00-\x20]')
+
+    @settings(max_examples=200, deadline=None)
+    @given(st.text(max_size=8), st.text(max_size=8), st.text(max_size=8))
+    def test_emitted_iris_are_writable(self, s, p, o):
+        res = run_document("", wf(self.SRC), doc_vars={"s": s, "p": p, "o": o})
+        if not any(self.BAD.search(v) for v in (s, p, o)):
+            assert res.error is None
+        if res.error is None:
+            assert res.triples
+            for subj, pred, kind, lex, _, _ in res.triples:
+                assert kind == "iri"
+                assert not any(self.BAD.search(t) for t in (subj, pred, lex))
+
+
 class TestTermWriterProperties:
     @settings(max_examples=10, deadline=None)
     @given(st.lists(_triple_st, min_size=1, max_size=12))

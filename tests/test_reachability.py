@@ -32,7 +32,8 @@ Both checks read the AST only; nothing is imported.
    their calls count however they pass the value. A function used as a
    value (stored in a table, then called through a variable or a
    subscript) also counts every such indirect call in that file as a
-   call of it. An option nothing sets is deleted by folding it into its
+   call of it; only a bare name is that use, not an attribute of the
+   same name (a Row field ``r.fingerprint``). An option nothing sets is deleted by folding it into its
    default.
 4. Within the CLI's import closure, every top-level definition is reached
    from ``cli.py`` (following names from the CLI module and from each
@@ -351,9 +352,9 @@ def unset_parameters(functions, trees, frozen=()):
             calls.setdefault(_name(c.func), []).append((c, is_frozen))
         callees = {id(c.func) for c in file_calls}
         escaped = {
-            _name(n)
+            n.id
             for n in nodes
-            if id(n) not in callees and isinstance(getattr(n, "ctx", None), ast.Load)
+            if isinstance(n, ast.Name) and id(n) not in callees and isinstance(n.ctx, ast.Load)
         }
         for name in escaped & wanted:
             calls.setdefault(name, []).extend((c, is_frozen) for c in _through_variables(tree))
@@ -632,6 +633,10 @@ def test_positional_keyword_forwarded_and_indirect_calls_set_parameters():
         "for fn in table.values():\n    fn(x=1)\n"  # call through a variable
     )
     assert unset_parameters(functions, [callers]) == []
+    # reading an attribute named like a function (a Row field) does not
+    # use the function as a value, so a call through a variable sets nothing
+    attribute = ast.parse("r.g\nfn = pick()\nfn(x=1)\n")
+    assert unset_parameters(functions, [attribute]) == unset_parameters(functions, [nothing])
     # a constant equal in type and value to the default sets nothing...
     defaults = ast.parse("f(0, 1, c=2, d=3)\ng(x=0)\nK().m(0)\n")
     assert unset_parameters(functions, [defaults]) == unset_parameters(functions, [nothing])
