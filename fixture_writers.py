@@ -25,7 +25,7 @@ import struct
 import tarfile
 import zipfile
 import zlib
-from typing import Any, Dict, List, Optional, Sequence, Tuple, Union
+from typing import Any, Dict, Iterable, Iterator, List, Optional, Sequence, Tuple, Union
 
 import yaml
 
@@ -3422,6 +3422,14 @@ def match_sweep_workflows(n: int, seed: int) -> List[Tuple[str, str]]:
     return out
 
 
+def _result_fields(r) -> bytes:
+    """Every field of one run's result, as the sweep digests hash it."""
+    return repr((
+        r.triples, r.no_matches, r.no_triples, r.total_match_len, repr(r.score),
+        sorted(r.texts.items()), r.saved_as, r.error,
+    )).encode()
+
+
 def match_sweep_digests() -> List[Tuple[str, int, int, str]]:
     """``(workflow, runs, error runs, sha256)`` per sweep workflow; the
     hash covers, per document in order, the triples, ``no_matches``,
@@ -3438,9 +3446,232 @@ def match_sweep_digests() -> List[Tuple[str, int, int, str]]:
         for text in docs:
             r = run_document(text, program)
             errors += r.error is not None
-            h.update(repr((
-                r.triples, r.no_matches, r.no_triples, r.total_match_len, repr(r.score),
-                sorted(r.texts.items()), r.saved_as, r.error,
-            )).encode())
+            h.update(_result_fields(r))
         rows.append((name, len(docs), errors, h.hexdigest()))
+    return rows
+
+
+# ---------------------------------------------------------------------------
+# Emission-family sweep (workflow/interpreter.py): seeded workflows whose
+# subject/predicate/object steps nest ``predicates:``/``objects:`` lists up
+# to three deep, with every object-spec form, ``inverse:``, declared and
+# undeclared prefixes, the ``:iri``/``:trim``/``:norm`` template functions
+# and, now and then, an entry the interpreter rejects. The emissions run in
+# ``match-every`` bodies over the match sweep's kind of documents.
+# ``tools/make_goldens.py`` writes one digest per workflow, its compile
+# warnings or compile error included, to
+# ``fixtures/golden/emission_sweep.csv``; ``tests/test_golden.py``
+# recomputes them.
+
+EMISSION_WORKFLOWS = 300
+EMISSION_SEED = 18
+
+# The match-every patterns around the emissions, with their group counts.
+_EMISSION_SCANS = (
+    (r"(\w+): ([^\n]*)", 2),
+    (r"\b([a-z]+)(\d*)\b", 2),
+    (r"(\d+)", 1),
+    (r"([A-Z]\w*)", 1),
+    (r"<t[dh]>(.*?)</t[dh]>", 1),
+)
+
+
+class _EmissionWorkflow:
+    """One seeded workflow; its emissions expand the match ``m``, which
+    has ``groups`` groups."""
+
+    def __init__(self, rng: random.Random) -> None:
+        self.rng = rng
+        self.groups = 1
+
+    def odd(self, p: float = 0.02) -> bool:
+        """Whether to write, here, something the interpreter rejects."""
+        return self.rng.random() < p
+
+    def ref(self) -> str:
+        """A literal template over ``m``."""
+        g = self.rng.randint(1, self.groups)
+        return self.rng.choice((
+            f"@{{m.{g}}}", f"@{{m.{g}:trim}}", f"@{{m.{g}:norm}}", f"@{{m.{g}:iri}}",
+            "@{m_count}", "@{m.0}",
+        ))
+
+    def node(self, role: str) -> str:
+        """A subject, predicate, inverse or IRI-object template."""
+        rng = self.rng
+        if self.odd():
+            return rng.choice((f"zz:{role}", f"http://x.example/{role} @{{m.1}}", "v:v"))
+        return rng.choice((
+            f"ex:{role}-@{{m.1:iri}}", f"ex:{role}{rng.randint(0, 2)}",
+            f"http://{role}.example/@{{m_count}}", f"http://{role}.example/@{{m.1:iri}}",
+            f" ex:{role} ",
+        ))
+
+    def obj(self, iri: bool) -> Any:
+        """An object spec; ``iri`` asks for an IRI object, as ``inverse:``
+        needs one."""
+        rng = self.rng
+        if iri and not self.odd(0.2):
+            return {"iri": self.node("o")}
+        k = rng.randrange(10)
+        if k < 4:
+            return rng.choice((
+                "^" + self.ref(), self.ref(), f"v-{self.ref()}", "12", "-7", "+5", "2.50",
+                "1e3", " True ", "false", "^TRUE", "^12", "plain words",
+            ))
+        if k < 8:
+            return self.spec()
+        if self.odd(0.1):
+            return rng.choice((
+                [{"match": "qq+", "do": [{"pass": 1}]}],  # no step succeeds
+                [{"exec": "w = 1"}],
+                [{"match": "(unclosed", "do": [{"pass": 1}]}],
+            ))
+        return rng.choice((
+            [{"echo": self.ref()}],
+            [{"match": r"(\d+)", "as": "k", "do": [{"pass": 1}]}, {"echo": "none"}],
+            [{"match": "qq+", "do": [{"pass": 1}]},
+             {"set": "w", "to": rng.choice((5, 2.5, True, "7", ["a"]))}],
+            [{"set": "w", "to": rng.choice(("@{m.1}", 3, False))}],
+        ))
+
+    def spec(self) -> dict:
+        """A mapping object spec: one value attribute, with lang:, format:
+        or apply: where they apply."""
+        rng = self.rng
+        bad = self.odd(0.15)
+        kind = rng.choice(("text", "text", "iri", "integer", "float", "bool", "date", "datetime"))
+        if kind == "text":
+            spec: Dict[str, Any] = {"text": rng.choice((self.ref(), "", "plain"))}
+            if rng.random() < 0.4:
+                spec["lang"] = rng.choice(("en", "en-GB", "de", ""))
+        elif kind == "iri":
+            spec = {"iri": "" if bad else self.node("o")}
+        elif kind == "integer":
+            spec = {"integer": rng.choice(("", "x@{m_count}", "4.5") if bad else ("@{m_count}", "42", " 7 "))}
+        elif kind == "float":
+            spec = {"float": "x" if bad else rng.choice(("@{m_count}", "2.5", "", " ", "1e3"))}
+        elif kind == "bool":
+            spec = {"bool": rng.choice((self.ref(), "", "0", "none", "yes"))}
+        elif kind == "date":
+            spec = {"text": "", "date": "2024-03-02"}
+            if bad:
+                spec["date"] = rng.choice(("today", "2024-13-40", "02.03.2024"))
+            elif rng.random() < 0.3:
+                spec.update(date="02.03.2024", format="%d.%m.%Y")
+            if self.odd(0.1):
+                spec["format"] = "%Y"
+        else:
+            spec = {"text": "", "datetime": "2024-03-02 04:05", "format": "%Y-%m-%d %H:%M"}
+            if bad:
+                spec["datetime"] = rng.choice(("now", "03/02/24", "2024-03-02"))
+                if spec["datetime"] == "2024-03-02":
+                    del spec["format"]
+        if rng.random() < 0.1:
+            spec["apply"] = "m"  # read, never used
+        if self.odd():  # a second value attribute
+            spec["integer" if kind != "integer" else "float"] = "1"
+        if self.odd():  # no value attribute
+            spec.pop("text", None)
+            spec.pop(kind, None)
+            spec["date"] = "2024-03-02"
+        if self.odd():  # a non-string attribute value
+            spec[kind] = rng.choice((5, ["a"]))
+        if self.odd(0.01):  # a template is not a language tag: a compile error
+            spec["lang"] = "@{m.1}"
+        return spec
+
+    def tree(self, depth: int, subject: bool, predicate: bool, inverse: bool) -> Any:
+        """A triple step at ``depth``; the other arguments say whether its
+        scope gives it a subject, a predicate and an inverse."""
+        rng = self.rng
+        if depth > 1 and self.odd(0.03):
+            return rng.choice(("a string entry", 7, {"pass": 1}, {"echo": "x"}))
+        shape = rng.choice(("object", "object", "objects", "predicates") if depth <= 3 else ("object",))
+        if subject and (predicate or shape == "predicates"):
+            shape = "object"  # a list alone names no operation: a compile error
+        step: Dict[str, Any] = {}
+        if subject == self.odd():  # odd: a missing subject or a nested redefinition
+            step["subject"] = self.node("s")
+        if (shape != "predicates" and not predicate) != self.odd():
+            step["predicate"] = self.node("p")
+        if not step:
+            shape = "object"
+        if "predicate" in step and rng.random() < 0.25 or self.odd():
+            step["inverse"] = self.node("i")
+        inverse = inverse or "inverse" in step
+        if shape == "object":
+            step["object"] = self.obj(inverse)
+            if self.odd():
+                step["object"] = rng.choice(("", 0))  # falsy: nothing to emit
+        elif shape == "objects":
+            step["objects"] = [
+                self.tree(depth + 1, True, "predicate" in step, "inverse" in step)
+                for _ in range(rng.randint(1, 3))
+            ]
+        else:
+            step["predicates"] = [
+                self.tree(depth + 1, "subject" in step, False, False)
+                for _ in range(rng.randint(1, 3))
+            ]
+        if self.odd(0.05):  # an object next to an object list or a predicate list
+            step["object"] = self.obj(inverse)
+            if shape == "predicates" and rng.random() < 0.5:
+                step.setdefault("predicate", self.node("p"))
+        if self.odd():  # a non-string or non-list attribute value
+            name = rng.choice(("subject", "predicate", "inverse", "objects", "predicates"))
+            step[name] = rng.choice((5, "x", {"a": 1}))
+        return step
+
+    def workflow(self) -> list:
+        rng = self.rng
+        plan: list = []
+        if rng.random() < 0.95:
+            plan.append({"prefix": "ex", "iri": "http://ex.example/"})
+        if rng.random() < 0.5:
+            plan.append({"prefix": "v", "iri": "http://v.example/v#"})
+        for _ in range(rng.randint(1, 2)):
+            pattern, self.groups = rng.choice(_EMISSION_SCANS)
+            body = [self.tree(1, False, False, False) for _ in range(rng.randint(1, 3))]
+            plan.append({"match-every": pattern, "as": "m", "do": body})
+        return plan
+
+
+def emission_sweep_workflows(n: int, seed: int) -> List[Tuple[str, str]]:
+    """``n`` seeded ``(name, YAML source)`` emission workflows."""
+    rng = random.Random(seed)
+    return [
+        (f"emit_{i:03d}", yaml.safe_dump(_EmissionWorkflow(rng).workflow(), sort_keys=False))
+        for i in range(n)
+    ]
+
+
+def emission_sweep_results() -> Iterator[Tuple[str, Any, list]]:
+    """``(workflow, outcome, results)`` per emission sweep workflow: the
+    outcome is the compile error's text or the compile warnings, the
+    results one run per sweep document (none when the compile failed)."""
+    from cmc_knowledge_graph_text2ttl_spark.core.errors import WorkflowCompileError
+    from cmc_knowledge_graph_text2ttl_spark.workflow import compile_workflow, run_document
+
+    docs = match_sweep_documents(SWEEP_DOCUMENTS, EMISSION_SEED)
+    for i, (name, source) in enumerate(emission_sweep_workflows(EMISSION_WORKFLOWS, EMISSION_SEED)):
+        try:
+            program = compile_workflow(source, name, index=i)
+        except WorkflowCompileError as ex:
+            yield name, str(ex), []
+            continue
+        yield name, program.warnings, [run_document(text, program) for text in docs]
+
+
+def emission_sweep_digests(sweep: Iterable[Tuple[str, Any, list]]) -> List[Tuple[str, int, int, str]]:
+    """``(workflow, runs, error runs, sha256)`` per workflow of ``sweep``,
+    which :func:`emission_sweep_results` yields; the hash covers the
+    compile outcome and then every result field of each run, as in
+    :func:`match_sweep_digests`."""
+    rows = []
+    for name, outcome, results in sweep:
+        h = hashlib.sha256(repr(outcome).encode())
+        for r in results:
+            h.update(_result_fields(r))
+        rows.append((name, len(results), sum(r.error is not None for r in results), h.hexdigest()))
     return rows

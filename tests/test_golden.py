@@ -2,7 +2,8 @@
 reproduce the checked-in oracle goldens exactly — triples per workflow
 (canonical N-Triples), extraction byte hashes, and the stable best-of
 tie-break between the wf_alt_a/wf_alt_b competitors. The interpreter
-alone must reproduce the match-family sweep's per-workflow digests.
+alone must reproduce the match-family and emission-family sweeps'
+per-workflow digests.
 """
 
 import csv
@@ -21,7 +22,7 @@ from cmc_knowledge_graph_text2ttl_spark.sinks import triples_to_nt_lines
 from cmc_knowledge_graph_text2ttl_spark.sources import synth_pages_df
 from cmc_knowledge_graph_text2ttl_spark.workflow.compile import compile_workflow_file
 from cmc_knowledge_graph_text2ttl_spark.workflow.sparql import parse_ttl
-from fixture_writers import match_sweep_digests
+from fixture_writers import emission_sweep_digests, emission_sweep_results, match_sweep_digests
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 GOLDEN = os.path.join(REPO, "fixtures", "golden")
@@ -101,13 +102,57 @@ def test_alt_tie_break_stable(spark):
     assert b_urls, "section docs must make wf_alt_b win somewhere"
 
 
+def _golden_digests(name):
+    with open(f"{GOLDEN}/{name}") as fh:
+        return [
+            (r["workflow"], int(r["runs"]), int(r["error_runs"]), r["sha256"])
+            for r in csv.DictReader(fh)
+        ]
+
+
 def test_match_sweep_matches_golden():
     """Every result field of the seeded match-family sweep (triples, the
     three stats, score, dump texts, save-as requests, error text) is what
     the checked-in digests record."""
-    with open(f"{GOLDEN}/match_sweep.csv") as fh:
-        golden = [
-            (r["workflow"], int(r["runs"]), int(r["error_runs"]), r["sha256"])
-            for r in csv.DictReader(fh)
-        ]
-    assert match_sweep_digests() == golden
+    assert match_sweep_digests() == _golden_digests("match_sweep.csv")
+
+
+@pytest.fixture(scope="module")
+def emission_sweep():
+    return list(emission_sweep_results())
+
+
+def test_emission_sweep_matches_golden(emission_sweep):
+    """Every result field of the seeded emission-family sweep, each
+    workflow's compile warnings or compile error included, is what the
+    checked-in digests record."""
+    assert emission_sweep_digests(emission_sweep) == _golden_digests("emission_sweep.csv")
+
+
+# One message of each check the emission family makes: the tree checks,
+# the object-spec reads and the literal conversions.
+EMISSION_ERRORS = (
+    "subject already set to", "triple emission without a subject in scope",
+    "predicate already set to", "triple emission without a predicate in scope",
+    "object given but no predicate is in scope", "both a single object and an object list",
+    "Trying to define object for multiple predicates", "inverse: must accompany a predicate",
+    "is not a language tag", "defines more than one value attribute",
+    "lacks a value attribute", "yields no usable value",
+    "does not parse as an int literal", "does not parse as a float literal",
+    "date: today yields no value", "is not ISO-format", "date object:",
+    "datetime: now falls through", "datetime: requires a format", "datetime object:",
+    "produced no usable value during expansion", "no prefix declaration in scope",
+    "has invalid type", "is not a triple op", "workflow step must be a mapping",
+    "N-Triples cannot write", "invalid regex",
+)
+
+
+def test_emission_sweep_reaches_every_check(emission_sweep):
+    """The sweep fires every emission-family check at least once and
+    keeps at least 30% of its runs error-free."""
+    errors = [outcome for _, outcome, _ in emission_sweep if isinstance(outcome, str)]
+    errors += [r.error for _, _, results in emission_sweep for r in results if r.error]
+    assert [m for m in EMISSION_ERRORS if not any(m in e for e in errors)] == []
+    runs = [r for _, _, results in emission_sweep for r in results]
+    assert sum(r.error is None for r in runs) >= 0.3 * len(runs)
+    assert any(warnings for _, warnings, _ in emission_sweep if isinstance(warnings, list))

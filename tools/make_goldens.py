@@ -1,7 +1,9 @@
 """Generate golden fixtures (FIXTURES.md §5): canonical N-Triples per
 workflow over the deterministic synth corpus, per-url text sha256 hashes,
-and ``match_sweep.csv``: one sha256 per seeded match-family workflow over
-every field of its documents' results (``fixture_writers.match_sweep_digests``).
+``match_sweep.csv``: one sha256 per seeded match-family workflow over
+every field of its documents' results (``fixture_writers.match_sweep_digests``),
+and ``emission_sweep.csv``: the same per seeded emission-family workflow,
+its compile outcome included (``fixture_writers.emission_sweep_digests``).
 
 Run from the repo root: python tools/make_goldens.py
 Goldens are produced by the SINGLE-PROCESS ORACLE interpreter — the Spark
@@ -16,7 +18,7 @@ import sys
 
 sys.path.insert(0, ".")
 
-from fixture_writers import match_sweep_digests
+from fixture_writers import emission_sweep_digests, emission_sweep_results, match_sweep_digests
 
 from cmc_knowledge_graph_text2ttl_spark.operators.extract import extract_one
 from cmc_knowledge_graph_text2ttl_spark.operators.run import doc_vars_for_url
@@ -70,6 +72,11 @@ def main():
         w = csv.writer(fh)
         w.writerow(["workflow", "runs", "error_runs", "sha256"])
         w.writerows(match_sweep_digests())
+
+    with open(f"{OUT}/emission_sweep.csv", "w", newline="") as fh:
+        w = csv.writer(fh)
+        w.writerow(["workflow", "runs", "error_runs", "sha256"])
+        w.writerows(emission_sweep_digests(emission_sweep_results()))
 
 
 if __name__ == "__main__":
