@@ -1,11 +1,10 @@
 from .errors import ProcessorException, WorkflowCompileError
-from .terms import IriNode, LitNode, TripleOut, XSD
+from .terms import IriNode, LitNode, XSD
 
 __all__ = [
     "ProcessorException",
     "WorkflowCompileError",
     "IriNode",
     "LitNode",
-    "TripleOut",
     "XSD",
 ]

@@ -59,23 +59,3 @@ class LitNode:
     def __str__(self) -> str:  # template expansion binds str(term)
         return self.lexical
 
-
-# A flattened triple row as it appears in the `triples` DataFrame.
-# (subj, pred, obj_kind, obj_lexical, obj_lang, obj_datatype)
-TripleOut = tuple
-
-
-def node_to_row(subj, pred, obj) -> TripleOut:
-    """Flatten parsed terms into the engine's triple-row tuple."""
-    if isinstance(subj, IriNode):
-        s = subj.value
-    elif isinstance(subj, LitNode):
-        s = subj.lexical
-    else:
-        s = str(subj)
-    p = pred.value if isinstance(pred, IriNode) else str(pred)
-    if isinstance(obj, IriNode):
-        return (s, p, "iri", obj.value, None, None)
-    if isinstance(obj, LitNode):
-        return (s, p, "literal", obj.lexical, obj.lang, obj.datatype)
-    return (s, p, "literal", str(obj), None, None)

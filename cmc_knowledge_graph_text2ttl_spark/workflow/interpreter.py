@@ -14,7 +14,12 @@ step becomes a ``(handler, prepared args)`` pair, with attributes read and
 type-checked, flags resolved, regexes compiled, nested plans compiled and
 the ``do-<i>-<j>`` cell table built. Handlers run from those arguments and
 never read the YAML again. A step whose preparation fails compiles to a
-step that raises the same error when a document reaches it.
+step that raises the same error when a document reaches it. The same
+holds for triple emission: a ``subject``/``predicate``/``object`` step's
+``predicates:``/``objects:`` tree compiles to one flat tuple of
+``(subject, predicate, object spec, inverse)`` emissions, a failed entry's
+error standing in its place; ``_prep_literal`` picks an object spec's
+kind; and nodes stay strings until ``_emit`` builds the triple row.
 
 Semantic parity notes — the behaviors below reproduce the reference
 (`/root/reference/kg_text_to_ttl/text_to_turtle_processor.py`) including
@@ -69,7 +74,7 @@ from itertools import product
 from typing import TYPE_CHECKING, Any, Callable, Dict, List, Optional, Tuple
 
 from ..core.errors import ProcessorException, WorkflowCompileError
-from ..core.terms import IriNode, LitNode, XSD, node_to_row
+from ..core.terms import IriNode, LitNode, XSD
 
 if TYPE_CHECKING:
     from .compile import WorkflowProgram
@@ -110,11 +115,22 @@ _BAD_IRI_CHAR = re.compile(r'[<>"{}|^`\\\x00-\x20]')
 
 _MAX_TEMPLATE_REWRITES = 100_000
 
+_NOT_IRI_CHAR = re.compile(r"[^a-zA-Z0-9_-]")
+_LINE_BREAKS = re.compile(r"[\n\t\r]+")
+
+# Template functions by the name after the colon; an unknown name is ignored.
+_TEMPLATE_FUNCS: Dict[str, Callable[[str], str]] = {
+    "iri": lambda s: _NOT_IRI_CHAR.sub("_", s.strip()),
+    "trim": str.strip,
+    "norm": lambda s: _html.unescape(_LINE_BREAKS.sub(" ", s.strip())),
+}
+
 
 @lru_cache(maxsize=65536)
 def _parse_template(template: str):
     """Segment a template into (None, literal) and
-    (True, raw, optional, match_id, group, func) parts; None if no ref."""
+    (True, raw, optional, match_id, group, func) parts, ``func`` from
+    ``_TEMPLATE_FUNCS`` or None; None if no ref."""
     parts = []
     pos = 0
     found = False
@@ -123,7 +139,7 @@ def _parse_template(template: str):
         if m.start(0) > pos:
             parts.append((None, template[pos : m.start(0)]))
         gn: Any = int(m.group(4)) if m.group(4) else m.group(5)
-        func = m.group(6)[1:] if m.group(6) is not None else None
+        func = _TEMPLATE_FUNCS.get(m.group(6)[1:]) if m.group(6) is not None else None
         parts.append(
             (True, m.group(0), m.group(0).startswith("@{?"), m.group(2), gn, func)
         )
@@ -167,7 +183,9 @@ def resolve_flags(flags_src: Optional[str], init: int = 0) -> int:
 class DocResult:
     """Everything one (document, workflow) run produces."""
 
-    triples: List[tuple] = field(default_factory=list)  # deduped, in order
+    # (subj, pred, obj_kind, obj_lexical, obj_lang, obj_datatype) rows,
+    # deduped, in order
+    triples: List[tuple] = field(default_factory=list)
     no_matches: int = 0
     no_triples: int = 0  # raw adds incl. inverse + duplicates
     total_match_len: int = 0
@@ -185,7 +203,7 @@ QueryFn = Callable[[List[str], str, str], List[Dict[str, Any]]]
 # Compilation: YAML steps → (handler, prepared args)
 
 
-def _raise(interp: "DocInterpreter", error: Exception, **_) -> None:
+def _raise(interp: "DocInterpreter", error: Exception) -> None:
     """Handler of a step (or object spec) whose preparation failed."""
     raise copy.copy(error)
 
@@ -205,12 +223,15 @@ class _StepReader:
     of the step (nested plans, static patterns) is still compiled and
     checked. A ``late`` read returns its error instead: the handler raises
     it with :func:`_late` after the run-time work that the reference does
-    before reading that attribute.
+    before reading that attribute. ``scope`` is None, or for an entry of
+    a ``predicates:``/``objects:`` list the subject, predicate and inverse
+    its enclosing triple step implies.
     """
 
-    def __init__(self, step, path: str, kw: str, warnings: List[str], errors=None):
+    def __init__(self, step, path: str, kw: str, warnings: List[str], errors=None, scope=None):
         self.step, self.path, self.kw, self.warnings = step, path, kw, warnings
         self.errors: List[Exception] = [] if errors is None else errors
+        self.scope: Optional[tuple] = scope
 
     def fail(self, error: Exception) -> None:
         if not self.errors:
@@ -302,7 +323,7 @@ def _prepare(prepare: Callable, handler: Callable, r: _StepReader) -> tuple:
     return (_raise, r.errors[0]) if r.errors else (handler, args)
 
 
-def _compile_step(step: Any, path: str, warnings: List[str], triple_scope: bool = False) -> tuple:
+def _compile_step(step: Any, path: str, warnings: List[str], scope: Optional[tuple]) -> tuple:
     if not isinstance(step, dict):
         return (_raise, ProcessorException(f"workflow step must be a mapping, got {step!r}"))
     kw = next((k for k in OPS if k in step), None)
@@ -317,8 +338,8 @@ def _compile_step(step: Any, path: str, warnings: List[str], triple_scope: bool 
             "inside executor UDFs (trusted-workflow escape hatch)"
         )
     prepare, handler = OPS[kw]
-    compiled = _prepare(prepare, handler, _StepReader(step, path, kw, warnings))
-    if triple_scope and handler is not DocInterpreter._op_triple:
+    compiled = _prepare(prepare, handler, _StepReader(step, path, kw, warnings, scope=scope))
+    if scope is not None and handler is not DocInterpreter._op_triple:
         # The reference passes the implied subject/predicate kwargs to
         # every handler and crashes with a TypeError (processor.py:711-718);
         # raise the engine's typed error instead of dropping the terms.
@@ -329,12 +350,14 @@ def _compile_step(step: Any, path: str, warnings: List[str], triple_scope: bool 
     return compiled
 
 
-def compile_plan(plan, path: str, warnings: List[str], triple_scope: bool = False) -> list:
+def compile_plan(plan, path: str, warnings: List[str], scope: Optional[tuple] = None) -> list:
     """Compile a list of YAML steps; ``path`` names it in compile errors and
-    ``warnings``. Non-mapping steps compile to steps that raise; a step with
-    no keyword or a bad static regex raises :class:`WorkflowCompileError`."""
+    ``warnings``, and ``scope`` is the :class:`_StepReader` scope of a
+    ``predicates:``/``objects:`` list. Non-mapping steps compile to steps
+    that raise; a step with no keyword or a bad static regex raises
+    :class:`WorkflowCompileError`."""
     return [
-        _compile_step(step, f"{path}[{i}]", warnings, triple_scope)
+        _compile_step(step, f"{path}[{i}]", warnings, scope)
         for i, step in enumerate(plan)
     ]
 
@@ -455,14 +478,7 @@ class DocInterpreter:
                             f"template references undefined group/variable {raw}"
                         )
                     if func is not None:
-                        if func == "iri":
-                            ext = re.sub(r"[^a-zA-Z0-9_-]", "_", ext.strip())
-                        elif func == "trim":
-                            ext = ext.strip()
-                        elif func == "norm":
-                            ext = _html.unescape(
-                                re.sub(r"[\n\t\r]+", " ", ext.strip())
-                            )
+                        ext = func(ext)
                     out.append(ext or "")
                 result = "".join(out)
                 if "@{" not in result:
@@ -476,15 +492,15 @@ class DocInterpreter:
 
     # -- node / literal parsing (processor.py:2349-2524) ----------------------
 
-    def _parse_node(self, n: Any):
+    def _parse_node(self, n: str) -> str:
         n = self.expand(n)
         m = _PREFIX_REF.match(n)
         if m:
             ns = self._prefixes.get(m.group(1))
             if ns is None:
                 raise ProcessorException(f"no prefix declaration in scope for {m.group(1)!r}")
-            return IriNode(ns + m.group(2))
-        return IriNode(n)
+            return ns + m.group(2)
+        return n
 
     def _parse_plan_literal(self, a: tuple):
         """A list-valued object spec: the first successful sub-op's value."""
@@ -528,17 +544,17 @@ class DocInterpreter:
 
     @staticmethod
     def _prep_literal(r: _StepReader) -> tuple:
+        """A mapping object spec as ``(kind, value, lang, format)``."""
         names = ("text", "iri", "lang", "integer", "float", "bool", "date",
                  "datetime", "format", "apply")  # apply: is read, never used
-        values = [r.get(name, str, optional=True) for name in names]
-        lang = values[2]
+        values = {name: r.get(name, str, optional=True) for name in names}
+        lang = values["lang"]
         if lang and not _LANG_TAG.fullmatch(lang):
             raise WorkflowCompileError(
                 f"{r.path}: lang: {lang!r} is not a language tag "
                 "(lang: is not template-expanded)"
             )
-        ndef = [a for v, a in zip(values, names) if v is not None and a in (
-            "text", "iri", "integer", "float", "bool")]
+        ndef = [a for a in ("text", "iri", "integer", "float", "bool") if values[a] is not None]
         if len(ndef) > 1:
             raise ProcessorException(
                 f"object spec {r.step!r} defines more than one value attribute ({', '.join(ndef)})"
@@ -548,34 +564,39 @@ class DocInterpreter:
                 f"object spec {r.step!r} lacks a value attribute "
                 "(expected one of text:, iri:, integer:, float:, bool:)"
             )
-        return (*values[:9], r.step)
+        # NOTE: truthiness (not is-not-None) picks the kind, as in the
+        # reference: an empty-string integer: falls through to the next.
+        kind = next((k for k in ("integer", "float", "bool", "date", "datetime", "iri") if values[k]),
+                    "text" if values["text"] is not None else None)
+        if kind is None:
+            # The reference then crashes on expand(None)
+            # (processor.py:2473/2486). NOTE: apply: next to text: is
+            # silently IGNORED in the reference — the text: branch returns
+            # first.
+            raise ProcessorException(f"object spec {r.step!r} yields no usable value")
+        return (kind, values[kind], lang, values["format"])
 
     def _parse_structured_literal(self, a: tuple):
-        text, iri, lang, vint, vfloat, vbool, vdate, vdtime, fmt, l = a
-        # NOTE: truthiness checks (not is-not-None) reproduce the reference:
-        # an empty-string integer: falls through to the next branches.
-        if vint:
-            v = self.expand(vint)
+        kind, value, lang, fmt = a
+        if kind == "iri":
+            return IriNode(self._parse_node(value))
+        v = self.expand(value)
+        if kind == "text":
+            return LitNode(v, lang=lang or None)
+        if kind == "integer":
             try:
                 return LitNode(str(int(v)), datatype=XSD.integer)
             except ValueError:
                 raise ProcessorException(f"integer object: {v!r} does not parse as an int literal")
-        if vfloat:
-            v = self.expand(vfloat)
-            if v.strip() == "":
-                v = "nan"
+        if kind == "float":
             try:
-                return LitNode(str(float(v)), datatype=XSD.float)
+                return LitNode(str(float(v if v.strip() else "nan")), datatype=XSD.float)
             except ValueError:
                 raise ProcessorException(f"float object: {v!r} does not parse as a float literal")
-        if vbool:
-            v = self.expand(vbool)
-            if v.strip() == "":
-                v = "False"
-            b = str(v).lower().strip() not in ("false", "0", "0.0", "", "none")
+        if kind == "bool":
+            b = v.lower().strip() not in ("false", "0", "0.0", "", "none")
             return LitNode("true" if b else "false", datatype=XSD.boolean)
-        if vdate:
-            v = self.expand(vdate)
+        if kind == "date":
             if v.strip().lower() == "today":
                 # Reference quirk: computes date.today() but falls through
                 # without returning (processor.py:2422-2423) → ends in an
@@ -584,66 +605,46 @@ class DocInterpreter:
                     "date: today yields no value (reference semantics fall "
                     "through without returning)"
                 )
-            if fmt:
-                try:
-                    d = datetime.strptime(v, fmt).date()
-                    return LitNode(d.isoformat(), datatype=XSD.date)
-                except ValueError:
-                    raise ProcessorException(
-                        f"date object: {v!r} does not match format {fmt}"
-                    )
             try:
-                d = date.fromisoformat(v)
-                return LitNode(d.isoformat(), datatype=XSD.date)
+                d = datetime.strptime(v, fmt).date() if fmt else date.fromisoformat(v)
             except ValueError:
                 raise ProcessorException(
-                    f"date object: {v!r} is not ISO-format"
+                    f"date object: {v!r} does not match format {fmt}" if fmt
+                    else f"date object: {v!r} is not ISO-format"
                 )
-        if vdtime:
-            v = self.expand(vdtime)
-            if v.strip().lower() == "now":
-                raise ProcessorException(
-                    "Failed: datetime: now falls through in reference semantics"
-                )
-            if not fmt:
-                # Reference calls strptime(v, None) → TypeError (processor.py:2450).
-                raise ProcessorException(
-                    "Object datetime: requires a format: attribute"
-                )
-            try:
-                d = datetime.strptime(v, fmt)
-                return LitNode(d.isoformat(), datatype=XSD.dateTime)
-            except ValueError:
-                raise ProcessorException(
-                    f"datetime object: {v!r} does not match format {fmt}"
-                )
-        if iri:
-            return self._parse_node(iri)
-        if text is not None:
-            t = self.expand(text)
-            if lang:
-                return LitNode(t, lang=lang)
-            return LitNode(t)
-        # Only reachable with text=None; the reference then crashes on
-        # expand(None) (processor.py:2473/2486). NOTE: apply: next to text:
-        # is silently IGNORED in the reference — the text: branch returns
-        # first. We reproduce the error here.
-        raise ProcessorException(f"object spec {l!r} yields no usable value")
+            return LitNode(d.isoformat(), datatype=XSD.date)
+        if v.strip().lower() == "now":
+            raise ProcessorException(
+                "Failed: datetime: now falls through in reference semantics"
+            )
+        if not fmt:
+            # Reference calls strptime(v, None) → TypeError (processor.py:2450).
+            raise ProcessorException(
+                "Object datetime: requires a format: attribute"
+            )
+        try:
+            d = datetime.strptime(v, fmt)
+        except ValueError:
+            raise ProcessorException(
+                f"datetime object: {v!r} does not match format {fmt}"
+            )
+        return LitNode(d.isoformat(), datatype=XSD.dateTime)
 
     # -- triple emission (processor.py:2226-2332) ------------------------------
 
-    def _emit(self, subj, pred, obj, inverse=None) -> None:
-        s = self._parse_node(subj)
-        p = self._parse_node(pred)
+    def _emit(self, subj: str, pred: str, obj: tuple, inverse: Optional[str]) -> None:
+        s, p = self._parse_node(subj), self._parse_node(pred)
         parse, spec = obj
         o = parse(self, spec)
-        self._add(s, p, o)
+        if isinstance(o, IriNode):
+            row = (s, p, "iri", o.value, None, None)
+        else:
+            row = (s, p, "literal", o.lexical, o.lang, o.datatype)
+        self._add(row)
         if inverse:
-            i = self._parse_node(inverse)
-            self._add(o, i, s)
+            self._add((row[3], self._parse_node(inverse), "iri", s, None, None))
 
-    def _add(self, s, p, o) -> None:
-        row = node_to_row(s, p, o)
+    def _add(self, row: tuple) -> None:
         for iri in (row[0], row[1], row[3]) if row[2] == "iri" else row[:2]:
             if _BAD_IRI_CHAR.search(iri):
                 raise ProcessorException(f"IRI {iri!r} holds a character N-Triples cannot write")
@@ -654,22 +655,25 @@ class DocInterpreter:
 
     @staticmethod
     def _prep_triple(r: _StepReader) -> tuple:
+        """The step's tree as a flat tuple of ``(subject, predicate, object
+        spec, inverse)`` emissions in run order. A nested entry whose
+        preparation failed stands in its place as its error; this step's
+        own check errors raise here, so the step raises them when reached."""
         subject = r.get("subject", str, optional=True)
         predicate = r.get("predicate", str, optional=True)
         obj = r.get("object", optional=True)
         predicates = r.get("predicates", list, optional=True)
         objects = r.get("objects", list, optional=True)
         inverse = r.get("inverse", str, optional=True)
-        # predicates:/objects: entries are triple sub-steps
-        sub_predicates = predicates and compile_plan(
-            predicates, f"{r.path}.predicates", r.warnings, True)
-        objects = objects and compile_plan(objects, f"{r.path}.objects", r.warnings, True)
-        return (subject, predicate, r.object(obj, f"{r.path}.object") if obj else None,
-                predicates, sub_predicates, objects, inverse, r.step)
-
-    def _op_triple(self, a: tuple, implied_subject=None, implied_predicate=None,
-                   implied_inverse=None) -> Tuple[bool, Any]:
-        subject, predicate, obj, predicates, sub_predicates, objects, inverse, op = a
+        implied_subject, implied_predicate, implied_inverse = r.scope or (None, None, None)
+        # predicates: entries get only this step's own subject; objects:
+        # entries the subject in scope and this step's predicate and inverse
+        predicates = predicates and compile_plan(
+            predicates, f"{r.path}.predicates", r.warnings, (subject, None, None))
+        objects = objects and compile_plan(
+            objects, f"{r.path}.objects", r.warnings, (subject or implied_subject, predicate, inverse))
+        obj = obj and r.object(obj, f"{r.path}.object")
+        op = r.step
 
         if subject:
             if implied_subject:
@@ -678,18 +682,12 @@ class DocInterpreter:
             raise ProcessorException(f"triple emission without a subject in scope: {op!r}")
 
         if predicate or predicates:
-            if not (subject or implied_subject):
-                raise ProcessorException(
-                    f"predicate {predicate or predicates!r} given before any subject"
-                )
             if implied_predicate:
                 raise ProcessorException(f"predicate already set to {implied_predicate}; nested redefinition is not allowed")
         elif not implied_predicate:
             raise ProcessorException(f"triple emission without a predicate in scope: {op!r}")
 
         if obj or objects:
-            if not (subject or implied_subject):
-                raise ProcessorException(f"object given but no subject is in scope: {op!r}")
             if not (predicate or implied_predicate):
                 raise ProcessorException(f"object given but no predicate is in scope: {op!r}")
             if obj and objects:
@@ -703,25 +701,21 @@ class DocInterpreter:
         if inverse and not predicate:
             raise ProcessorException(f"inverse: must accompany a predicate definition: {op!r}")
 
-        if predicates:
-            for handler, args in sub_predicates:
-                handler(self, args, implied_subject=subject)
-        elif objects:
-            for handler, args in objects:
-                handler(
-                    self,
-                    args,
-                    implied_subject=(subject or implied_subject),
-                    implied_predicate=predicate,
-                    implied_inverse=inverse,
-                )
-        elif obj:
-            self._emit(
-                subject or implied_subject,
-                predicate or implied_predicate,
-                obj,
-                inverse=(inverse or implied_inverse),
+        if predicates or objects:
+            return tuple(
+                e for handler, args in predicates or objects
+                for e in (args if handler is DocInterpreter._op_triple else (args,))
             )
+        if obj:
+            return ((subject or implied_subject, predicate or implied_predicate, obj,
+                     inverse or implied_inverse),)
+        return ()
+
+    def _op_triple(self, emissions: tuple) -> Tuple[bool, Any]:
+        for e in emissions:
+            if isinstance(e, Exception):
+                raise copy.copy(e)
+            self._emit(*e)
         return (True, None)
 
     # -- infrastructure ops -----------------------------------------------------

@@ -7,6 +7,7 @@ procedure scoping, stats formulas. Reference line numbers cited per case.
 
 import copy
 import glob
+import inspect
 import math
 import os
 import pickle
@@ -19,7 +20,7 @@ import yaml
 from cmc_knowledge_graph_text2ttl_spark.core import ProcessorException, XSD
 from cmc_knowledge_graph_text2ttl_spark.core.errors import WorkflowCompileError
 from cmc_knowledge_graph_text2ttl_spark.workflow import compile_workflow_file, run_document
-from cmc_knowledge_graph_text2ttl_spark.workflow.interpreter import DocInterpreter, compile_plan
+from cmc_knowledge_graph_text2ttl_spark.workflow.interpreter import OPS, DocInterpreter, _raise, compile_plan
 
 from conftest import REPO, wf
 
@@ -1216,8 +1217,11 @@ class TestCompiledForm:
         ("- match-1: a\n  match-2: '(unclosed'\n  do: [{pass: 1}]", "wf[0]"),
         ("- match-dimensions: ['(a)', '(unclosed']\n  do: [{pass: 1}]", "wf[0]"),
         ("- mapping: m\n  pairs: [{from: a, to: b}, {re: '(unclosed', to: x}]", "wf[0]"),
+        ("- subject: http://e/s\n  predicates: [{predicate: http://e/p, object: x}]\n"
+         "  objects: [{object: [{match: '(unclosed', do: [{pass: 1}]}]}]", "wf[0].objects[0].object[0]"),
     ], ids=["object-list", "select-do", "select-else", "sequence-of-alternatives",
-            "sequence-of-steps-list", "match-1", "match-2", "match-dimensions", "mapping-re"])
+            "sequence-of-steps-list", "match-1", "match-2", "match-dimensions", "mapping-re",
+            "objects-beside-predicates"])
     def test_bad_static_regex_fails_compile(self, src, path):
         with pytest.raises(WorkflowCompileError, match=re.escape(path) + ": invalid regex"):
             wf(src)
@@ -1237,7 +1241,19 @@ class TestCompiledForm:
          "wf[0].object[0]"),
         ("- select: x\n  from: g\n  where: w\n  do: [{exec: 'x = 1'}]", "wf[0].do[0]"),
         ("- select: x\n  from: g\n  where: w\n  else: [{set: v, eval: '1'}]", "wf[0].else[0]"),
-    ], ids=["object-list", "select-do", "select-else"])
+        ("- subject: http://e/s\n  predicates: [{predicate: http://e/p, object: x}]\n"
+         "  objects: [{object: [{exec: 'x = 1'}]}]", "wf[0].objects[0].object[0]"),
+    ], ids=["object-list", "select-do", "select-else", "objects-beside-predicates"])
     def test_embedded_python_in_nested_plans_warns(self, src, path):
         warnings = wf(src).warnings
         assert len(warnings) == 1 and warnings[0].startswith(path + ": workflow embeds Python")
+
+    def test_every_handler_takes_interp_and_args(self):
+        """One handler signature: whatever a step holds is in its prepared
+        arguments, so no handler takes more than ``(interp, args)``."""
+        handlers = {h for _, h in OPS.values()} | {_raise}
+        for handler in handlers:
+            params = list(inspect.signature(handler).parameters.values())
+            assert len(params) == 2, handler.__name__
+            assert all(p.kind is p.POSITIONAL_OR_KEYWORD and p.default is p.empty
+                       for p in params), handler.__name__
