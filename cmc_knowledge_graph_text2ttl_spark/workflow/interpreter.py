@@ -1107,14 +1107,22 @@ class DocInterpreter:
     def _op_sequence_of(self, a: tuple) -> Tuple[bool, Any]:
         seq_id, lexer, specs = a
         fire_counts: Dict[Optional[str], int] = {}
+        # per alternative: (the text searched, its next match there)
+        ahead: List[tuple] = [(None, None)] * len(specs)
         count = start = 0
         while True:
             if lexer:
                 # Lexer: take the earliest-starting match among all
-                # alternatives, advance the cursor past it.
+                # alternatives, advance the cursor past it. A match at or
+                # after the cursor is the one a search from the cursor
+                # finds, so it is kept until the cursor passes it or a
+                # body's replace: makes a new text.
                 m = spec = None
-                for s in specs:
-                    sm = self._search_any(s[0], start)
+                for i, s in enumerate(specs):
+                    text, sm = ahead[i]
+                    if text is not self._text or sm is not None and sm.start(0) < start:
+                        sm = self._search_any(s[0], start)
+                        ahead[i] = (self._text, sm)
                     if sm is not None and (m is None or sm.start(0) < m.start(0)):
                         m, spec = sm, s
                 if m is not None and m.end(0) == start:  # the reference loops forever

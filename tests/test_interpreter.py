@@ -697,6 +697,47 @@ class TestSequenceOf:
         assert res.error is None and res.no_matches == 1
 
 
+    def test_lexer_keeps_each_alternatives_next_match(self, monkeypatch):
+        """An alternative's next match is kept until the cursor passes it,
+        so the lexer is linear: the far alternative is searched once to
+        find its match and once past it, not once per token."""
+        calls = []
+        search = DocInterpreter._search_any
+
+        def counting(interp, rx, start=0):
+            calls.append(rx.pattern)
+            return search(interp, rx, start)
+
+        monkeypatch.setattr(DocInterpreter, "_search_any", counting)
+        src = """
+- sequence-of: s
+  alternatives:
+    - match: 'a'
+      do: [{pass: 1}]
+    - match: 'END'
+      do: [{pass: 1}]
+"""
+        res = run(src, "a " * 50 + "END")
+        assert res.error is None and res.no_matches == 51
+        assert calls.count("END") == 2 and calls.count("a") == 51
+
+    def test_lexer_searches_again_after_a_body_replace(self):
+        """A body's replace: makes a new text, so a kept match of the
+        other alternative is searched again: the new z comes first."""
+        emit = "{subject: http://e/s, predicate: http://e/p, object: '^@{t.1}@{t_count}'}"
+        src = f"""
+- sequence-of: s
+  alternatives:
+    - match: '(x)'
+      as: t
+      do: [{{replace: q, with: z}}, {emit}]
+    - match: '(z)'
+      as: t
+      do: [{emit}]
+"""
+        assert [t[3] for t in triples(src, "x q x z")] == ["x1", "z2", "x3", "z4"]
+
+
 class TestMatchDimensions:
     TABLE = "<tr><td>h1</td><td>h2</td></tr><tr><td>a</td><td>b</td></tr><tr><td>c</td><td>d</td></tr>"
 
