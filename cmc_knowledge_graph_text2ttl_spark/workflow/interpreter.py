@@ -59,6 +59,9 @@ valid workflow can rely on them):
   backslash and U+0000-U+0020. rdflib's ``URIRef.n3()`` rejects the same
   set except the control characters U+0000-U+001F, which the reference
   writes into a broken line.
+* ``inverse:`` on a literal object raises after the forward triple: Turtle
+  has no literal subject, and the reference hands rdflib one for the
+  reversed triple.
 """
 
 from __future__ import annotations
@@ -642,6 +645,8 @@ class DocInterpreter:
             row = (s, p, "literal", o.lexical, o.lang, o.datatype)
         self._add(row)
         if inverse:
+            if row[2] != "iri":
+                raise ProcessorException(f"inverse: needs an IRI object, got the literal {row[3]!r}")
             self._add((row[3], self._parse_node(inverse), "iri", s, None, None))
 
     def _add(self, row: tuple) -> None:

@@ -143,7 +143,7 @@ EMISSION_ERRORS = (
     "datetime: now falls through", "datetime: requires a format", "datetime object:",
     "produced no usable value during expansion", "no prefix declaration in scope",
     "has invalid type", "is not a triple op", "workflow step must be a mapping",
-    "N-Triples cannot write", "invalid regex",
+    "N-Triples cannot write", "inverse: needs an IRI object", "invalid regex",
 )
 
 

@@ -332,6 +332,17 @@ class TestTripleEmission:
         assert (t[0][0], t[0][1], t[0][3]) == ("http://x/a", "http://x/partOf", "http://x/b")
         assert (t[1][0], t[1][1], t[1][3]) == ("http://x/b", "http://x/hasPart", "http://x/a")
 
+    @pytest.mark.parametrize("obj, literal", [
+        ("hello", "hello"), ("'a b'", "a b"), ("{integer: '7'}", "7"),
+    ])
+    def test_inverse_on_a_literal_object_is_an_error_row(self, obj, literal):
+        """Turtle has no literal subject: the forward triple stays and the
+        reversed one raises, where the reference wrote <hello> as an IRI."""
+        res = run(S.format(obj=obj) + "  inverse: http://x/q\n")
+        assert res.error == f"inverse: needs an IRI object, got the literal {literal!r}"
+        assert [r[:4] for r in res.triples] == [("http://e/s", "http://e/p", "literal", literal)]
+        assert res.no_triples == 1
+
     def test_graph_set_dedup_and_raw_count(self):
         # rdflib set semantics vs no_triples raw count (processor.py:2319-2320)
         src = """
