@@ -14,12 +14,8 @@ step becomes a ``(handler, prepared args)`` pair, with attributes read and
 type-checked, flags resolved, regexes compiled, nested plans compiled and
 the ``do-<i>-<j>`` cell table built. Handlers run from those arguments and
 never read the YAML again. A step whose preparation fails compiles to a
-step that raises the same error when a document reaches it. The same
-holds for triple emission: a ``subject``/``predicate``/``object`` step's
-``predicates:``/``objects:`` tree compiles to one flat tuple of
-``(subject, predicate, object spec, inverse)`` emissions, a failed entry's
-error standing in its place; ``_prep_literal`` picks an object spec's
-kind; and nodes stay strings until ``_emit`` builds the triple row.
+step that raises the same error when a document reaches it; a triple
+step's ``predicates:``/``objects:`` tree compiles to flat emissions.
 
 Semantic parity notes — the behaviors below reproduce the reference
 (`/root/reference/kg_text_to_ttl/text_to_turtle_processor.py`) including
@@ -355,10 +351,9 @@ def _compile_step(step: Any, path: str, warnings: List[str], scope: Optional[tup
 
 def compile_plan(plan, path: str, warnings: List[str], scope: Optional[tuple] = None) -> list:
     """Compile a list of YAML steps; ``path`` names it in compile errors and
-    ``warnings``, and ``scope`` is the :class:`_StepReader` scope of a
-    ``predicates:``/``objects:`` list. Non-mapping steps compile to steps
-    that raise; a step with no keyword or a bad static regex raises
-    :class:`WorkflowCompileError`."""
+    ``warnings``; ``scope`` is a ``predicates:``/``objects:`` list's scope.
+    Non-mapping steps compile to steps that raise; a step with no keyword
+    or a bad static regex raises :class:`WorkflowCompileError`."""
     return [
         _compile_step(step, f"{path}[{i}]", warnings, scope)
         for i, step in enumerate(plan)
@@ -1118,10 +1113,8 @@ class DocInterpreter:
         while True:
             if lexer:
                 # Lexer: take the earliest-starting match among all
-                # alternatives, advance the cursor past it. A match at or
-                # after the cursor is the one a search from the cursor
-                # finds, so it is kept until the cursor passes it or a
-                # body's replace: makes a new text.
+                # alternatives, advance the cursor past it. Each one's next
+                # match holds until the cursor passes it or the text changes.
                 m = spec = None
                 for i, s in enumerate(specs):
                     text, sm = ahead[i]
