@@ -3646,32 +3646,288 @@ def emission_sweep_workflows(n: int, seed: int) -> List[Tuple[str, str]]:
     ]
 
 
-def emission_sweep_results() -> Iterator[Tuple[str, Any, list]]:
-    """``(workflow, outcome, results)`` per emission sweep workflow: the
-    outcome is the compile error's text or the compile warnings, the
-    results one run per sweep document (none when the compile failed)."""
+def _sweep_results(workflows, docs, **run_kw) -> Iterator[Tuple[str, Any, list]]:
+    """``(workflow, outcome, results)`` per ``(name, source)`` workflow:
+    the outcome is the compile error's text or the compile warnings, the
+    results one ``run_document(text, program, **run_kw)`` per document
+    (none when the compile failed)."""
     from cmc_knowledge_graph_text2ttl_spark.core.errors import WorkflowCompileError
     from cmc_knowledge_graph_text2ttl_spark.workflow import compile_workflow, run_document
 
-    docs = match_sweep_documents(SWEEP_DOCUMENTS, EMISSION_SEED)
-    for i, (name, source) in enumerate(emission_sweep_workflows(EMISSION_WORKFLOWS, EMISSION_SEED)):
+    for i, (name, source) in enumerate(workflows):
         try:
             program = compile_workflow(source, name, index=i)
         except WorkflowCompileError as ex:
             yield name, str(ex), []
             continue
-        yield name, program.warnings, [run_document(text, program) for text in docs]
+        yield name, program.warnings, [run_document(text, program, **run_kw) for text in docs]
 
 
-def emission_sweep_digests(sweep: Iterable[Tuple[str, Any, list]]) -> List[Tuple[str, int, int, str]]:
+def emission_sweep_results() -> Iterator[Tuple[str, Any, list]]:
+    """:func:`_sweep_results` of the emission sweep workflows over the
+    match sweep's kind of documents."""
+    return _sweep_results(emission_sweep_workflows(EMISSION_WORKFLOWS, EMISSION_SEED),
+                          match_sweep_documents(SWEEP_DOCUMENTS, EMISSION_SEED))
+
+
+def sweep_digests(sweep: Iterable[Tuple[str, Any, list]], fields=_result_fields) -> List[Tuple[str, int, int, str]]:
     """``(workflow, runs, error runs, sha256)`` per workflow of ``sweep``,
-    which :func:`emission_sweep_results` yields; the hash covers the
-    compile outcome and then every result field of each run, as in
+    which :func:`_sweep_results` yields; the hash covers the compile
+    outcome and then ``fields`` of each run, as in
     :func:`match_sweep_digests`."""
     rows = []
     for name, outcome, results in sweep:
         h = hashlib.sha256(repr(outcome).encode())
         for r in results:
-            h.update(_result_fields(r))
+            h.update(fields(r))
         rows.append((name, len(results), sum(r.error is not None for r in results), h.hexdigest()))
     return rows
+
+
+# ---------------------------------------------------------------------------
+# Control-family sweep (workflow/interpreter.py): seeded workflows over the
+# ops that expand templates — variables, conditionals, procedures, ``with``,
+# diagnostics, mappings, ``tag-dimension`` and ``select`` — whose template
+# attributes draw from constants, variable and match refs (numbered, named,
+# optional, undefined), nested refs, a self-reproducing pair of variables
+# that hits the rewrite cap, known and unknown ``:func``s, ``@{`` with no
+# valid ref, and YAML values that are not strings. ``tools/make_goldens.py``
+# writes one digest per workflow, over its compile outcome and every result
+# field and log line of each run, to ``fixtures/golden/control_sweep.csv``;
+# ``tests/test_golden.py`` recomputes them.
+
+CONTROL_WORKFLOWS = 150
+CONTROL_DOCUMENTS = 40
+CONTROL_SEED = 19
+
+# The graph ``select:`` queries: one row per sweep word.
+_CONTROL_GRAPH = "\n".join(
+    f"<http://w.example/{w}> <http://w.example/k> "
+    + (f'"{w.upper()}" .' if i % 2 else f"<http://w.example/class_{i}> .")
+    for i, w in enumerate(_SWEEP_WORDS)
+)
+
+# The match-every scans around the bodies, with a named group or not.
+_CONTROL_SCANS = (
+    r"(?P<word>[a-z]+)(\d*)",
+    r"(\w+): (?P<word>[^\n]*)",
+    r"<t[dh]>(.*?)</t[dh]>",
+    r"([A-Z]\w*)",
+)
+
+
+class _ControlWorkflow:
+    """One seeded workflow; its bodies run inside a ``match-every`` that
+    saves the match ``m``."""
+
+    def __init__(self, rng: random.Random) -> None:
+        self.rng = rng
+        self.loops = 0  # for-each bodies open: they must not grow a list they iterate
+        self.in_procedure = False  # a procedure body calls none: no recursion
+
+    def odd(self, p: float = 0.04) -> bool:
+        """Whether to write, here, something the interpreter rejects."""
+        return self.rng.random() < p
+
+    def template(self) -> str:
+        return self.rng.choice((
+            "plain", "", "v=@{v}", "@{w}", "@{m.1}", "@{m.2}", "@{?m.2}", "@{m.0}",
+            "@{m.word}", "@{?q.1}", "@{m_count}", "@{nope}", "@{?nope}", "@{doc}",
+            "@{a-@{b}}", "x-@{a-@{b}:iri}", "@{m.1:iri}", "@{v:trim}", "@{m.0:norm}",
+            "@{v:upper}", "@{ v}", "a@{b", "@{}", "@{1a}", "@{3}", "@{lst}", "@{rv}",
+            "[@{m.1}|@{mv}]", "@{k}", "@{it}-@{it_count}",
+        ))
+
+    def value(self) -> Any:
+        """A template, or now and then a YAML value that is not a string."""
+        if self.odd(0.1):
+            # a container holds no ref: "@{v}" in v's own value would grow
+            # without bound until the rewrite cap
+            return self.rng.choice((5, 2.5, True, False, ["a", "@{"], {"k": "@{"}, None))
+        if self.odd(0.01):
+            return "@{q.1}"  # an undefined match: an error
+        return self.template()
+
+    def body(self, depth: int) -> list:
+        return [self.step(depth) for _ in range(self.rng.randint(1, 3))]
+
+    def nested(self, depth: int) -> list:
+        return self.body(depth + 1) if depth < 3 else [{"echo": self.template()}]
+
+    def step(self, depth: int) -> dict:
+        rng = self.rng
+        k = rng.randrange(16)
+        if k == 0:
+            step: Dict[str, Any] = {"set": rng.choice(("v", "w", "b", "a-@{b}", "v@{m_count}", "@{nope}"))}
+            if self.odd(0.15):
+                step["eval"] = rng.choice(("len('@{v}')", "'@{m.1}'.upper()", "1/0", "'@' + '{w}'"))
+            elif rng.random() < 0.2:
+                step["to"] = rng.choice(("1", "2", "alpha"))
+            else:
+                step["to"] = self.value()
+            return step
+        if k == 1:
+            return {"clear": rng.choice(("v", "lst", "@{b}", "w"))}
+        if k == 2:
+            # an element that names the list would double it on every append
+            name = "acc" if self.loops else rng.choice(("lst", "lst", "v", "l@{b}"))
+            element = self.value()
+            if isinstance(element, str) and ("@{v" in element or "@{lst" in element):
+                element = "e-@{m_count}"
+            return {"append": name, "element": element}
+        if k == 3:
+            self.loops += 1
+            step = {"for-each": rng.choice(("lst", "lst", "v", "nolist")), "do": self.nested(depth)}
+            self.loops -= 1
+            if rng.random() < 0.8:
+                step["as"] = "it"
+            return step
+        if k == 4:
+            cond = rng.choice((
+                "'@{v}' == 'None'", "@{m_count} > 1", "'@{m.1}'.startswith('a')",
+                "len('@{?m.2}') == 0", "@{nope} is None", "'@{a-@{b}}' != ''", "@{m.1}", "1 +",
+            ))
+            return {"if": self.value() if self.odd(0.1) else cond, "do": self.nested(depth)}
+        if k == 5:
+            cond = rng.choice(("v", "m.1", "m.2", "q.1", "@{b}", "lst", "a-@{b}", "rv"))
+            return {rng.choice(("ifdef", "ifndef")): self.value() if self.odd(0.1) else cond,
+                    "do": self.nested(depth)}
+        if k == 6 and not self.in_procedure:
+            step = {"call": rng.choice(("p1", "p1", "p2"))}
+            if rng.random() < 0.8:
+                step["with"] = {
+                    "x": self.value(),
+                    rng.choice(("y", "xm", "xq")): rng.choice(("~m", "~", self.template())),
+                }
+            if rng.random() < 0.5:
+                step["return"] = {rng.choice(("x", "v", "z")): "rv"}
+            return step
+        if k == 7:
+            return {"with": self.value(), "do": self.nested(depth)}
+        if k in (8, 9):
+            return {"echo": self.template() if not self.odd() else 7}
+        if k == 10:
+            step = {"dump": rng.choice(("_", "ct", self.template()))}
+            if rng.random() < 0.6:
+                step["file"] = "f-" + self.template()
+            return step
+        if k == 11:
+            return {"save-as": rng.choice((
+                self.value(), self.value(), {"file": self.template()}, {"bucket": self.template()},
+            )) if not self.odd() else {}}
+        if k == 12:
+            value = rng.choice(("@{m.1}", "@{m.0}", "@{m.word}", self.template()))
+            step = {"map": value, "apply": "mp" if not self.odd() else "nomap"}
+            if rng.random() < 0.8:
+                step["to"] = "mv"
+            return step
+        if k == 13:
+            return self.dimensions(depth)
+        if k == 14:
+            return self.select(depth)
+        return {"subject": "http://s.example/@{m_count}", "predicate": "http://p.example/v",
+                "object": rng.choice(("^" + self.template(), self.template(), {"text": self.template()}))}
+
+    def dimensions(self, depth: int) -> dict:
+        rng = self.rng
+        step: Dict[str, Any] = {
+            "match-dimensions": [r"<tr>(.*?)</tr>", r"<t[dh]>(.*?)</t[dh]>"],
+            "dimensions": ["row", "col"],
+            "as": "cell",
+            "pre": [{
+                "tag-dimension": rng.choice((1, 2, "2", "@{b}", "@{nope}", [1], 2.0)),
+                "at": rng.choice((1, 2, "1", "@{b}", "@{m_count}", 0, True)),
+                "as": "hdr",
+            }],
+            "do": [{"echo": "c@{row}.@{col}=@{cell.1}"}],
+            "do-*-hdr": self.nested(depth),
+        }
+        if self.odd(0.1):
+            del step["dimensions"]  # pre: without dimensions: raises
+        return step
+
+    def select(self, depth: int) -> dict:
+        rng = self.rng
+        step: Dict[str, Any] = {
+            "select": rng.choice(("k", "k s")),
+            "from": "words" if not self.odd() else "nograph",
+            "where": rng.choice((
+                "SELECT ?k WHERE { <http://w.example/@{m.1:iri}> <http://w.example/k> ?k . }",
+                'SELECT ?k ?s WHERE { ?s <http://w.example/k> ?k . FILTER(STR(?k) = "@{v}") }',
+                "SELECT ?k WHERE { <http://w.example/@{m.0}> <http://w.example/k> ?k . }",
+            )),
+        }
+        if rng.random() < 0.3:
+            step["as"] = "k s2"
+        if rng.random() < 0.4:
+            step["do"] = [{"echo": "row @{k}"}] + self.nested(depth)
+        if rng.random() < 0.4:
+            step["else"] = self.nested(depth)
+        return step
+
+    def workflow(self) -> list:
+        rng = self.rng
+        plan: list = []
+        if rng.random() < 0.7:
+            plan.append({"mapping": "mp", "pairs": self.pairs()})
+            if rng.random() < 0.5:
+                plan[-1]["flags"] = "I"
+        self.loops += 1  # a call may run in a for-each body
+        self.in_procedure = True
+        for name in ("p1", "p2"):
+            if rng.random() < 0.7:
+                plan.append({"procedure": name, "do": self.body(2)})
+        self.loops -= 1
+        self.in_procedure = False
+        if rng.random() < 0.5:
+            plan.append({"set": "b", "to": "1"})
+        plan.append({"match-every": rng.choice(_CONTROL_SCANS), "as": "m", "do": self.body(1)})
+        plan.extend(self.body(2))
+        if self.odd(0.03):
+            # a self-reproducing pair: expanding either hits the rewrite cap
+            # (a tenth of a second each, so on few documents)
+            plan.append({"if": "@{m_count} == 5",
+                         "do": [{"exec": "vars['v'] = '@' '{w}'; vars['w'] = '@' '{v}'"},
+                                {"echo": rng.choice(("@{v}", "[@{w}]"))}]})
+        plan.append({"echo": "v=@{v} w=@{w} mv=@{mv} rv=@{rv} lst=@{lst} k=@{k}"})
+        return plan
+
+    def pairs(self) -> list:
+        rng = self.rng
+        pairs = []
+        for _ in range(rng.randint(1, 4)):
+            if rng.random() < 0.6:
+                pair: Dict[str, Any] = {"from": rng.choice(_SWEEP_WORDS + ("ALPHA", "zeta"))}
+            else:
+                pair = {"re": rng.choice(("ze.*", r"(\w)\d+", "[A-Z]", "x"))}
+            if self.odd(0.2):  # not a string: each hit kind maps it
+                pair["to"] = rng.choice((5, 2.5, True, ["a"]))
+            else:
+                pair["to"] = self.value() if rng.random() < 0.3 else rng.choice(("M-@{v}", "R@{1}", "fixed"))
+            pairs.append(pair)
+        return pairs
+
+
+def control_sweep_workflows(n: int, seed: int) -> List[Tuple[str, str]]:
+    """``n`` seeded ``(name, YAML source)`` control workflows."""
+    rng = random.Random(seed)
+    return [
+        (f"ctl_{i:03d}", yaml.safe_dump(_ControlWorkflow(rng).workflow(), sort_keys=False))
+        for i in range(n)
+    ]
+
+
+def control_sweep_results() -> Iterator[Tuple[str, Any, list]]:
+    """:func:`_sweep_results` of the control sweep workflows, with a
+    ``doc`` variable, the sweep-word graph as ``words`` and the log kept."""
+    from cmc_knowledge_graph_text2ttl_spark.workflow.sparql import MiniGraph, make_query_fn, parse_ttl
+
+    query_fn = make_query_fn({"words": MiniGraph(parse_ttl(_CONTROL_GRAPH))})
+    return _sweep_results(control_sweep_workflows(CONTROL_WORKFLOWS, CONTROL_SEED),
+                          match_sweep_documents(CONTROL_DOCUMENTS, CONTROL_SEED),
+                          doc_vars={"doc": "d"}, query_fn=query_fn, collect_log=True)
+
+
+def logged_result_fields(r) -> bytes:
+    """Every result field of one run and its log."""
+    return _result_fields(r) + repr(r.log).encode()

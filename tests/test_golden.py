@@ -2,8 +2,8 @@
 reproduce the checked-in oracle goldens exactly — triples per workflow
 (canonical N-Triples), extraction byte hashes, and the stable best-of
 tie-break between the wf_alt_a/wf_alt_b competitors. The interpreter
-alone must reproduce the match-family and emission-family sweeps'
-per-workflow digests.
+alone must reproduce the match-family, emission-family and control-family
+sweeps' per-workflow digests.
 """
 
 import csv
@@ -22,7 +22,13 @@ from cmc_knowledge_graph_text2ttl_spark.sinks import triples_to_nt_lines
 from cmc_knowledge_graph_text2ttl_spark.sources import synth_pages_df
 from cmc_knowledge_graph_text2ttl_spark.workflow.compile import compile_workflow_file
 from cmc_knowledge_graph_text2ttl_spark.workflow.sparql import parse_ttl
-from fixture_writers import emission_sweep_digests, emission_sweep_results, match_sweep_digests
+from fixture_writers import (
+    control_sweep_results,
+    emission_sweep_results,
+    logged_result_fields,
+    match_sweep_digests,
+    sweep_digests,
+)
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 GOLDEN = os.path.join(REPO, "fixtures", "golden")
@@ -126,7 +132,15 @@ def test_emission_sweep_matches_golden(emission_sweep):
     """Every result field of the seeded emission-family sweep, each
     workflow's compile warnings or compile error included, is what the
     checked-in digests record."""
-    assert emission_sweep_digests(emission_sweep) == _golden_digests("emission_sweep.csv")
+    assert sweep_digests(emission_sweep) == _golden_digests("emission_sweep.csv")
+
+
+def test_control_sweep_matches_golden():
+    """Every result field and log line of the seeded control-family sweep,
+    each workflow's compile warnings included, is what the checked-in
+    digests record."""
+    assert sweep_digests(control_sweep_results(), logged_result_fields) == _golden_digests(
+        "control_sweep.csv")
 
 
 # One message of each check the emission family makes: the tree checks,

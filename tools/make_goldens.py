@@ -2,8 +2,10 @@
 workflow over the deterministic synth corpus, per-url text sha256 hashes,
 ``match_sweep.csv``: one sha256 per seeded match-family workflow over
 every field of its documents' results (``fixture_writers.match_sweep_digests``),
-and ``emission_sweep.csv``: the same per seeded emission-family workflow,
-its compile outcome included (``fixture_writers.emission_sweep_digests``).
+``emission_sweep.csv``: the same per seeded emission-family workflow, its
+compile outcome included (``fixture_writers.emission_sweep_results``), and
+``control_sweep.csv``: the same per seeded control-family workflow, each
+run's log included (``fixture_writers.control_sweep_results``).
 
 Run from the repo root: python tools/make_goldens.py
 Goldens are produced by the SINGLE-PROCESS ORACLE interpreter — the Spark
@@ -18,7 +20,13 @@ import sys
 
 sys.path.insert(0, ".")
 
-from fixture_writers import emission_sweep_digests, emission_sweep_results, match_sweep_digests
+from fixture_writers import (
+    control_sweep_results,
+    emission_sweep_results,
+    logged_result_fields,
+    match_sweep_digests,
+    sweep_digests,
+)
 
 from cmc_knowledge_graph_text2ttl_spark.operators.extract import extract_one
 from cmc_knowledge_graph_text2ttl_spark.operators.run import doc_vars_for_url
@@ -76,7 +84,12 @@ def main():
     with open(f"{OUT}/emission_sweep.csv", "w", newline="") as fh:
         w = csv.writer(fh)
         w.writerow(["workflow", "runs", "error_runs", "sha256"])
-        w.writerows(emission_sweep_digests(emission_sweep_results()))
+        w.writerows(sweep_digests(emission_sweep_results()))
+
+    with open(f"{OUT}/control_sweep.csv", "w", newline="") as fh:
+        w = csv.writer(fh)
+        w.writerow(["workflow", "runs", "error_runs", "sha256"])
+        w.writerows(sweep_digests(control_sweep_results(), logged_result_fields))
 
 
 if __name__ == "__main__":
