@@ -11,11 +11,12 @@ Python with zero Spark dependencies: the same class is
 ``OPS`` lists every keyword once with its ``prepare`` function and its
 handler. :func:`compile_plan` walks the YAML once, on the driver: each
 step becomes a ``(handler, prepared args)`` pair, with attributes read and
-type-checked, flags resolved, regexes compiled, nested plans compiled and
-the ``do-<i>-<j>`` cell table built. Handlers run from those arguments and
-never read the YAML again. A step whose preparation fails compiles to a
-step that raises the same error when a document reaches it; a triple
-step's ``predicates:``/``objects:`` tree compiles to flat emissions.
+type-checked, flags resolved, regexes compiled, template attributes
+segmented, nested plans compiled and the ``do-<i>-<j>`` cell table built.
+Handlers run from those arguments and never read the YAML again. A step
+whose preparation fails compiles to a step that raises the same error when
+a document reaches it; a triple step's ``predicates:``/``objects:`` tree
+compiles to flat emissions.
 
 Semantic parity notes — the behaviors below reproduce the reference
 (`/root/reference/kg_text_to_ttl/text_to_turtle_processor.py`) including
@@ -68,7 +69,6 @@ import importlib
 import re
 from dataclasses import dataclass, field
 from datetime import date, datetime
-from functools import lru_cache
 from itertools import product
 from typing import TYPE_CHECKING, Any, Callable, Dict, List, Optional, Tuple
 
@@ -125,53 +125,28 @@ _TEMPLATE_FUNCS: Dict[str, Callable[[str], str]] = {
 }
 
 
-@lru_cache(maxsize=65536)
-def _parse_template(template: str):
-    """Segment a template into (None, literal) and
-    (True, raw, optional, match_id, group, func) parts, ``func`` from
-    ``_TEMPLATE_FUNCS`` or None; None if no ref."""
-    parts = []
+def _segment(template: Any) -> tuple:
+    """``(template, parts)``: literal strings and ``(raw, optional, match_id,
+    group, func name)`` refs in order, or None when no ref is found. A value
+    that is not a string is its own one part: joining it fails when a
+    document expands it, as the reference's expansion does."""
+    if not isinstance(template, str):
+        return (template, (template,))
+    parts: List[Any] = []
     pos = 0
-    found = False
     for m in _TEMPLATE_REF.finditer(template):
-        found = True
         if m.start(0) > pos:
-            parts.append((None, template[pos : m.start(0)]))
+            parts.append(template[pos : m.start(0)])
         gn: Any = int(m.group(4)) if m.group(4) else m.group(5)
-        func = _TEMPLATE_FUNCS.get(m.group(6)[1:]) if m.group(6) is not None else None
-        parts.append(
-            (True, m.group(0), m.group(0).startswith("@{?"), m.group(2), gn, func)
-        )
+        func = m.group(6) and m.group(6)[1:]
+        parts.append((m.group(0), m.group(0).startswith("@{?"), m.group(2), gn,
+                      func if func in _TEMPLATE_FUNCS else None))
         pos = m.end(0)
-    if not found:
-        return None
+    if not parts:
+        return (template, None)
     if pos < len(template):
-        parts.append((None, template[pos:]))
-    return tuple(parts)
-
-
-@lru_cache(maxsize=4096)
-def _rx(pattern: str, flags: int) -> re.Pattern:
-    """Process-wide compiled-regex cache (amortizes across a whole Arrow
-    batch of documents on an executor)."""
-    return re.compile(pattern, flags)
-
-
-def resolve_flags(flags_src: Optional[str], init: int = 0) -> int:
-    """Build an ``re`` flag bit-vector from a whitespace-separated name list.
-
-    NOTE: the result is OR-ed onto ``init`` — match ops keep their DOTALL
-    default even when ``flags:`` is given (processor.py:2754-2760).
-    """
-    if flags_src is None:
-        return init
-    flags = init
-    for name in re.split(r"\s+", flags_src):
-        v = _FLAG_BY_NAME.get(name)
-        if v is None:
-            raise ProcessorException(f"unrecognized regex flag name {name!r}")
-        flags |= v
-    return flags
+        parts.append(template[pos:])
+    return (template, tuple(parts))
 
 
 # ---------------------------------------------------------------------------
@@ -222,9 +197,10 @@ class _StepReader:
     of the step (nested plans, static patterns) is still compiled and
     checked. A ``late`` read returns its error instead: the handler raises
     it with :func:`_late` after the run-time work that the reference does
-    before reading that attribute. ``scope`` is None, or for an entry of
-    a ``predicates:``/``objects:`` list the subject, predicate and inverse
-    its enclosing triple step implies.
+    before reading that attribute. A ``template`` read segments the value.
+    ``scope`` is None, or for an entry of a ``predicates:``/``objects:``
+    list the subject, predicate and inverse its enclosing triple step
+    implies.
     """
 
     def __init__(self, step, path: str, kw: str, warnings: List[str], errors=None, scope=None):
@@ -236,7 +212,8 @@ class _StepReader:
         if not self.errors:
             self.errors.append(error.with_traceback(None))
 
-    def get(self, name: str, expected_type=None, optional: bool = False, late: bool = False):
+    def get(self, name: str, expected_type=None, optional: bool = False, late: bool = False,
+            template: bool = False):
         try:
             val = self.step.get(name)  # a non-mapping entry fails here too
             if val is None:
@@ -247,7 +224,7 @@ class _StepReader:
                 raise ProcessorException(
                     f"Step attribute '{name}' has invalid type; expected {expected_type}"
                 )
-            return val
+            return _segment(val) if template else val
         except Exception as ex:
             if late:
                 return ex.with_traceback(None)
@@ -261,24 +238,28 @@ class _StepReader:
         return body
 
     def flags(self, init: int = re.DOTALL) -> int:
+        """The ``flags:`` names OR-ed onto ``init``: match ops keep their DOTALL
+        default even when ``flags:`` is given (processor.py:2754-2760)."""
         src = self.get("flags", str, optional=True)
-        try:
-            return resolve_flags(src, init)
-        except ProcessorException as ex:
-            self.fail(ex)
-            return init
+        flags = init
+        for name in () if src is None else re.split(r"\s+", src):
+            if name not in _FLAG_BY_NAME:
+                self.fail(ProcessorException(f"unrecognized regex flag name {name!r}"))
+                return init
+            flags |= _FLAG_BY_NAME[name]
+        return flags
 
     @staticmethod
     def rx(pattern, flags: int):
         """A single static pattern (None when its read failed)."""
-        return None if pattern is None else _rx(pattern, flags)
+        return None if pattern is None else re.compile(pattern, flags)
 
     @staticmethod
     def search(pattern, flags: int):
         """The pattern of match:/within:, a string or a list of strings."""
         if isinstance(pattern, list):
             # non-strings stay: the handler rejects one only if it gets to it
-            return [_rx(p, flags) if isinstance(p, str) else p for p in pattern]
+            return [re.compile(p, flags) if isinstance(p, str) else p for p in pattern]
         if isinstance(pattern, str) or pattern is None:
             return _StepReader.rx(pattern, flags)
         raise ProcessorException(
@@ -305,7 +286,7 @@ class _StepReader:
                 DocInterpreter._parse_structured_literal,
                 _StepReader(obj, path, "object", self.warnings),
             )
-        return (DocInterpreter._parse_literal, obj)
+        return (DocInterpreter._parse_literal, _segment(obj))
 
 
 def _prepare(prepare: Callable, handler: Callable, r: _StepReader) -> tuple:
@@ -429,31 +410,27 @@ class DocInterpreter:
         self.result.total_match_len += match_len
 
     # -- template expansion (processor.py:2599-2669) --------------------------
-    #
-    # Strategy: templates are program constants, so their (literal, ref)
-    # segmentation is parsed ONCE (module lru_cache) and refs evaluate
-    # left-to-right in a single pass. If any substitution re-introduces
-    # reference syntax (nesting like @{material-@{row}.1}, or values that
-    # contain "@{"), the joined result is expanded again — converging to
-    # exactly the reference's rewrite-until-no-refs fixpoint
-    # (processor.py:2622-2666) without its per-ref string rebuilding.
 
-    def expand(self, template: str) -> str:
-        # fast path: no reference syntax at all (common for fixed IRIs)
-        if isinstance(template, str) and "@{" not in template:
+    def expand(self, template: tuple) -> str:
+        """A template :func:`_segment` compiled: its refs evaluate left to
+        right in one pass. A result that still holds ``@{`` (nesting like
+        ``@{material-@{row}.1}``, or a value holding ``@{``) is segmented
+        and expanded again, which converges to the reference's
+        rewrite-until-no-refs fixpoint (processor.py:2622-2666)."""
+        template, parts = template
+        if parts is None:
             return template
         original = template
         try:
             for _ in range(_MAX_TEMPLATE_REWRITES):
-                parts = _parse_template(template)
-                if parts is None:  # contains "@{" but no valid ref
+                if parts is None:  # holds "@{" but no valid ref
                     return template
                 out = []
                 for part in parts:
-                    if part[0] is None:
-                        out.append(part[1])
+                    if part.__class__ is not tuple:
+                        out.append(part)
                         continue
-                    _, raw, optional, match_id, gn, func = part
+                    raw, optional, match_id, gn, func = part
                     try:
                         if match_id:
                             if match_id in self._matches:
@@ -476,21 +453,19 @@ class DocInterpreter:
                             f"template references undefined group/variable {raw}"
                         )
                     if func is not None:
-                        ext = func(ext)
+                        ext = _TEMPLATE_FUNCS[func](ext)
                     out.append(ext or "")
                 result = "".join(out)
-                if "@{" not in result:
+                if "@{" not in result or result == template:  # no ref made progress: fixpoint
                     return result
-                if result == template:
-                    return result  # no ref made progress; fixpoint
-                template = result
+                template, parts = _segment(result)
             raise ProcessorException("template expansion did not converge (rewrite limit hit)")
         except Exception as ex:
             raise ProcessorException(f"template expansion failed for: {original}") from ex
 
     # -- node / literal parsing (processor.py:2349-2524) ----------------------
 
-    def _parse_node(self, n: str) -> str:
+    def _parse_node(self, n: tuple) -> str:
         n = self.expand(n)
         m = _PREFIX_REF.match(n)
         if m:
@@ -518,9 +493,9 @@ class DocInterpreter:
             if isinstance(value, float):
                 return LitNode(str(value), datatype=XSD.float)
             return LitNode(str(value))
-        return self._parse_literal(value)
+        return self._parse_literal(_segment(value))
 
-    def _parse_literal(self, l: Any):
+    def _parse_literal(self, l: tuple):
         # Plain string: auto-coercion cascade (processor.py:2504-2524).
         l = self.expand(l)
         try:
@@ -572,7 +547,7 @@ class DocInterpreter:
             # silently IGNORED in the reference — the text: branch returns
             # first.
             raise ProcessorException(f"object spec {r.step!r} yields no usable value")
-        return (kind, values[kind], lang, values["format"])
+        return (kind, _segment(values[kind]), lang, values["format"])
 
     def _parse_structured_literal(self, a: tuple):
         kind, value, lang, fmt = a
@@ -707,8 +682,9 @@ class DocInterpreter:
                 for e in (args if handler is DocInterpreter._op_triple else (args,))
             )
         if obj:
-            return ((subject or implied_subject, predicate or implied_predicate, obj,
-                     inverse or implied_inverse),)
+            inverse = inverse or implied_inverse
+            return ((_segment(subject or implied_subject), _segment(predicate or implied_predicate),
+                     obj, inverse and _segment(inverse)),)
         return ()
 
     def _op_triple(self, emissions: tuple) -> Tuple[bool, Any]:
@@ -729,6 +705,11 @@ class DocInterpreter:
         """The keyword's own value, a string."""
         return r.get(r.kw, str)
 
+    @staticmethod
+    def _prep_template(r: _StepReader) -> tuple:
+        """The keyword's own value, a string template."""
+        return r.get(r.kw, str, template=True)
+
     def _op_pass(self, a: None) -> Tuple[bool, Any]:
         return (True, None)
 
@@ -743,8 +724,8 @@ class DocInterpreter:
 
     @staticmethod
     def _prep_dump(r: _StepReader) -> tuple:
-        what, fname = r.get("dump", str), r.get("file", str, optional=True)
-        return (what, what.strip() in ("_", "*", "ct", "current-text"), fname)
+        what, fname = r.get("dump", str), r.get("file", str, optional=True, template=True)
+        return (_segment(what), what.strip() in ("_", "*", "ct", "current-text"), fname)
 
     def _op_dump(self, a: tuple) -> Tuple[bool, Any]:
         what, current_text, fname = a
@@ -764,19 +745,19 @@ class DocInterpreter:
         return self._seq(body, return_first_success=True)
 
     @staticmethod
-    def _prep_save_as(r: _StepReader) -> Any:
+    def _prep_save_as(r: _StepReader) -> tuple:
         target = r.get("save-as")
-        if not isinstance(target, dict):
-            return target
-        t = _StepReader(target, r.path, r.kw, r.warnings, r.errors)
-        f_name, b_name = t.get("file", str, optional=True), t.get("bucket", str, optional=True)
-        if f_name is None and b_name is None:
-            raise ProcessorException(
-                "save-as needs a 'file' or 'bucket' attribute"
-            )
-        return f_name or b_name
+        if isinstance(target, dict):
+            t = _StepReader(target, r.path, r.kw, r.warnings, r.errors)
+            f_name, b_name = t.get("file", str, optional=True), t.get("bucket", str, optional=True)
+            if f_name is None and b_name is None:
+                raise ProcessorException(
+                    "save-as needs a 'file' or 'bucket' attribute"
+                )
+            target = f_name or b_name
+        return _segment(target)
 
-    def _op_save_as(self, f_name: Any) -> Tuple[bool, Any]:
+    def _op_save_as(self, f_name: tuple) -> Tuple[bool, Any]:
         f_name = self.expand(f_name)
         self.result.saved_as.append(f_name)
         return (True, f_name)
@@ -797,10 +778,12 @@ class DocInterpreter:
             raise ProcessorException(
                 f"set {var}: to: and eval: are mutually exclusive"
             )
-        return (var, value, expr, None if imps is None else re.split(r"\s+", imps))
+        # to: is a template only when it is a string
+        return (_segment(var), value, _segment(value) if isinstance(value, str) else None,
+                expr and _segment(expr), None if imps is None else re.split(r"\s+", imps))
 
     def _op_set(self, a: tuple) -> Tuple[bool, Any]:
-        var, value, expr, imports = a
+        var, value, template, expr, imports = a
         var = self.expand(var)  # dynamic variable names
         if expr:
             for mod in imports or ():
@@ -818,31 +801,31 @@ class DocInterpreter:
                 raise ProcessorException(
                     f"set {var}: eval: expression raised {ex}"
                 ) from ex
-        elif isinstance(value, str):
-            value = self.expand(value)
+        elif template is not None:
+            value = self.expand(template)
         self._vars[var] = value
         return (True, value)
 
-    def _op_clear(self, var: str) -> Tuple[bool, Any]:
+    def _op_clear(self, var: tuple) -> Tuple[bool, Any]:
         self._vars[self.expand(var)] = None
         return (True, None)
 
     @staticmethod
     def _prep_append(r: _StepReader) -> tuple:
-        return (r.get("append", str), r.get("element", late=True))
+        return (r.get("append", str, template=True), r.get("element", late=True, template=True))
 
     def _op_append(self, a: tuple) -> Tuple[bool, Any]:
-        var, value = a
+        var, element = a
         var = self.expand(var)
-        value = _late(value)
+        element = _late(element)
         lst = self._vars.get(var)
         if lst is None or lst == "":
             lst = []
         elif not isinstance(lst, list):
             lst = [lst]
-        lst.append(self.expand(value))
+        lst.append(self.expand(element))
         self._vars[var] = lst
-        return (True, value)
+        return (True, element[0])
 
     @staticmethod
     def _prep_for_each(r: _StepReader) -> tuple:
@@ -878,15 +861,16 @@ class DocInterpreter:
 
     @staticmethod
     def _prep_if(r: _StepReader) -> tuple:
-        return (r.get("if"), r.plan("do"))
+        return (r.get("if", template=True), r.plan("do"))
 
     def _op_if(self, a: tuple) -> Tuple[bool, Any]:
-        condition, body = a
+        template, body = a
         local_env = dict(self._vars)
         local_env["matches"] = self._matches
+        condition = template[0]
         try:
-            condition = self.expand(condition)
-            result = eval(str(condition), {}, local_env)
+            condition = self.expand(template)
+            result = eval(condition, {}, local_env)
         except Exception as ex:
             raise ProcessorException(f"if: condition does not evaluate: {condition}") from ex
         if result:
@@ -896,7 +880,7 @@ class DocInterpreter:
     @staticmethod
     def _prep_cond_def(r: _StepReader) -> tuple:
         # do: is read after the condition expands (late)
-        return (r.get(r.kw), r.plan("do", late=True), r.kw == "ifndef")
+        return (r.get(r.kw, template=True), r.plan("do", late=True), r.kw == "ifndef")
 
     def _op_cond_def(self, a: tuple) -> Tuple[bool, Any]:
         condition, body, negate = a
@@ -929,7 +913,8 @@ class DocInterpreter:
 
     @staticmethod
     def _prep_call(r: _StepReader) -> tuple:
-        return (r.get("call"), r.get("with", dict, optional=True),
+        name, args = r.get("call"), r.get("with", dict, optional=True) or {}
+        return (name, tuple((k, v, _segment(v)) for k, v in args.items()),
                 r.get("return", dict, optional=True))
 
     def _op_call(self, a: tuple) -> Tuple[bool, Any]:
@@ -941,15 +926,14 @@ class DocInterpreter:
         try:
             self._vars = dict(self._vars)
             self._matches = dict(self._matches)
-            if args is not None:
-                for arg_name, arg_value in args.items():
-                    if arg_value.startswith("~"):
-                        # pass-a-match convention (processor.py:1164-1169)
-                        match_name = arg_name[1:]
-                        if self._matches.get(match_name) is None:
-                            raise ProcessorException(f"replace: no stored match named {match_name}")
-                    else:
-                        self._vars[arg_name] = self.expand(arg_value)
+            for arg_name, arg_value, template in args:
+                if arg_value.startswith("~"):
+                    # pass-a-match convention (processor.py:1164-1169)
+                    match_name = arg_name[1:]
+                    if self._matches.get(match_name) is None:
+                        raise ProcessorException(f"replace: no stored match named {match_name}")
+                else:
+                    self._vars[arg_name] = self.expand(template)
             s, v = self._seq(body)
             if rtnv is not None:
                 for proc_var, caller_var in rtnv.items():
@@ -1070,7 +1054,7 @@ class DocInterpreter:
     @staticmethod
     def _prep_with(r: _StepReader) -> tuple:
         # do: is read after the text expands (late)
-        return (r.get("with"), r.plan("do", late=True))
+        return (r.get("with", template=True), r.plan("do", late=True))
 
     def _op_with(self, a: tuple) -> Tuple[bool, Any]:
         text, body = a
@@ -1098,7 +1082,7 @@ class DocInterpreter:
             pattern, flags = e.get("match"), e.flags()
             ident = e.get("as", str, optional=True)
             if isinstance(pattern, list):
-                rx = [_rx(p, flags) for p in pattern]
+                rx = [re.compile(p, flags) for p in pattern]
             else:
                 rx = e.rx(pattern, flags)
             specs.append((rx, ident, e.get("within-group", int, optional=True), e.plan("do")))
@@ -1205,7 +1189,7 @@ class DocInterpreter:
             for name, val in r.step.items()
             if re.match(r"do-(\*|[0-9A-Za-z_]+)-(\*|[0-9A-Za-z_]+)", name) and val
         }
-        rxs = [_rx(p, flags) for p in patterns or ()]
+        rxs = [re.compile(p, flags) for p in patterns or ()]
         if dimensions is not None and len(dimensions) != len(rxs):
             raise ProcessorException(
                 "match-dimensions: the dimension-name list length must equal the pattern count"
@@ -1290,13 +1274,16 @@ class DocInterpreter:
 
     @staticmethod
     def _prep_tag_dimension(r: _StepReader) -> tuple:
-        # at: and as: are each read after the value before them expands
-        return (r.get("tag-dimension"), r.get("at", late=True), r.get("as", str, late=True))
+        # the numbers expand as strings; at: and as: are each read after the
+        # value before them expands
+        dim_no, at = r.get("tag-dimension"), r.get("at", late=True)
+        at = at if isinstance(at, Exception) else _segment(str(at))
+        return (_segment(str(dim_no)), at, r.get("as", str, late=True))
 
     def _op_tag_dimension(self, a: tuple) -> Tuple[bool, Any]:
         dim_no, at_index, tag_name = a
-        dim_no = int(self.expand(str(dim_no)))
-        at_index = int(self.expand(str(_late(at_index))))
+        dim_no = int(self.expand(dim_no))
+        at_index = int(self.expand(_late(at_index)))
         tag_name = _late(tag_name)
         if not self._dim_tags_stack:
             raise ProcessorException(
@@ -1339,12 +1326,13 @@ class DocInterpreter:
                     raise ProcessorException(
                         f"Mapping element {p!r} has both a 'from' and a 're' attribute"
                     )
-                exact[f_text] = f_to
+                # an exact hit expands str(to:), an ignore-case hit to: itself
+                exact[f_text] = (_segment(str(f_to)), _segment(f_to))
                 if ignore_case:
-                    exact[f_text.lower()] = f_to
+                    exact[f_text.lower()] = exact[f_text]
             elif f_re:
                 # a non-string re: fails in re.match when a lookup reaches it
-                rx_pairs.append((_rx(f_re, 0) if isinstance(f_re, str) else f_re, f_to))
+                rx_pairs.append((re.compile(f_re) if isinstance(f_re, str) else f_re, _segment(f_to)))
             else:
                 raise ProcessorException(
                     f"Mapping element {p!r} has neither a 'from' nor a 're' attribute"
@@ -1359,7 +1347,7 @@ class DocInterpreter:
     @staticmethod
     def _prep_map(r: _StepReader) -> tuple:
         # apply: and to: are read after the value expands
-        return (r.get("map", str), r.get("apply", str, late=True),
+        return (r.get("map", str, template=True), r.get("apply", str, late=True),
                 r.get("to", optional=True, late=True))
 
     def _op_map(self, a: tuple) -> Tuple[bool, Any]:
@@ -1387,11 +1375,11 @@ class DocInterpreter:
         exact, rx_pairs, flags = mapping
         repl = exact.get(value)
         if repl is not None:
-            return self.expand(str(repl))
+            return self.expand(repl[0])
         if flags & re.IGNORECASE:
             repl = exact.get(value.lower())
             if repl is not None:
-                return self.expand(repl)
+                return self.expand(repl[1])
         for pat, repl in rx_pairs:
             if re.match(pat, value):
                 return self.expand(repl)
@@ -1401,7 +1389,8 @@ class DocInterpreter:
 
     @staticmethod
     def _prep_select(r: _StepReader) -> tuple:
-        selection, graph_id, where = r.get("select", str), r.get("from", str), r.get("where", str)
+        selection, graph_id = r.get("select", str), r.get("from", str)
+        where = r.get("where", str, template=True)
         # as:, else: and do: are read after where: expands
         return (selection, graph_id, where, r.get("as", str, optional=True, late=True),
                 r.plan("else", optional=True, late=True), r.plan("do", optional=True, late=True))
@@ -1454,7 +1443,7 @@ OPS: Dict[str, Tuple[Callable, Callable]] = {
     "pass": (_I._prep_nothing, _I._op_pass),
     "any-of": (_I._prep_any_of, _I._op_any_of),
     "set": (_I._prep_set, _I._op_set),
-    "clear": (_I._prep_keyword, _I._op_clear),
+    "clear": (_I._prep_template, _I._op_clear),
     "append": (_I._prep_append, _I._op_append),
     "for-each": (_I._prep_for_each, _I._op_for_each),
     "exec": (_I._prep_keyword, _I._op_exec),
@@ -1482,7 +1471,7 @@ OPS: Dict[str, Tuple[Callable, Callable]] = {
     "subject": (_I._prep_triple, _I._op_triple),
     "predicate": (_I._prep_triple, _I._op_triple),
     "object": (_I._prep_triple, _I._op_triple),
-    "echo": (_I._prep_keyword, _I._op_echo),
+    "echo": (_I._prep_template, _I._op_echo),
     "desc": (_I._prep_keyword, _I._op_desc),
     "dump": (_I._prep_dump, _I._op_dump),
 }

@@ -20,7 +20,7 @@ import yaml
 from cmc_knowledge_graph_text2ttl_spark.core import ProcessorException, XSD
 from cmc_knowledge_graph_text2ttl_spark.core.errors import WorkflowCompileError
 from cmc_knowledge_graph_text2ttl_spark.workflow import compile_workflow_file, run_document
-from cmc_knowledge_graph_text2ttl_spark.workflow.interpreter import OPS, DocInterpreter, _raise, compile_plan
+from cmc_knowledge_graph_text2ttl_spark.workflow.interpreter import OPS, DocInterpreter, _raise, _segment, compile_plan
 
 from conftest import REPO, wf
 
@@ -56,7 +56,7 @@ class TestTemplates:
             import yaml
 
             execute_plan(interp, yaml.safe_load(setup))
-        return interp.expand(template)
+        return interp.expand(_segment(template))
 
     def test_variable_expansion(self):
         assert self._expand("v=@{x}", {"x": "1"}) == "v=1"
@@ -82,7 +82,7 @@ class TestTemplates:
         import yaml
 
         execute_plan(interp, yaml.safe_load(setup))
-        assert interp.expand("@{m.1}/@{m.2}/@{m.word}") == "ab/c/ab"
+        assert interp.expand(_segment("@{m.1}/@{m.2}/@{m.word}")) == "ab/c/ab"
 
     def test_unknown_group_raises(self):
         import yaml
@@ -90,7 +90,7 @@ class TestTemplates:
         interp = DocInterpreter(text="abc")
         execute_plan(interp, yaml.safe_load("- match: 'a'\n  as: m\n  do: [{pass: x}]"))
         with pytest.raises(ProcessorException):
-            interp.expand("@{m.7}")
+            interp.expand(_segment("@{m.7}"))
 
     def test_nested_innermost_first(self):
         # @{material-@{row}.1} style nesting (docstring processor.py:2609)
@@ -101,7 +101,7 @@ class TestTemplates:
             interp,
             yaml.safe_load("- match: 'x=(\\d+)'\n  as: material-3\n  do: [{pass: x}]")
         )
-        assert interp.expand("@{material-@{row}.1}") == "43"
+        assert interp.expand(_segment("@{material-@{row}.1}")) == "43"
 
     def test_formatters(self):
         v = {"a": "  Hello, World!  ", "b": "x\n\ty&amp;z "}
@@ -118,7 +118,7 @@ class TestTemplates:
             interp,
             yaml.safe_load("- match: 'a(x)?(b)'\n  as: m\n  do: [{pass: x}]")
         )
-        assert interp.expand("[@{m.1}]") == "[]"
+        assert interp.expand(_segment("[@{m.1}]")) == "[]"
 
 
 # ---------------------------------------------------------------------------

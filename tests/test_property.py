@@ -15,7 +15,7 @@ from cmc_knowledge_graph_text2ttl_spark.core import XSD
 from cmc_knowledge_graph_text2ttl_spark.operators.extract import extract_one
 from cmc_knowledge_graph_text2ttl_spark.sinks import ntriples_line, triples_to_nt_lines
 from cmc_knowledge_graph_text2ttl_spark.workflow import run_document
-from cmc_knowledge_graph_text2ttl_spark.workflow.interpreter import DocInterpreter
+from cmc_knowledge_graph_text2ttl_spark.workflow.interpreter import DocInterpreter, _segment
 
 from conftest import wf
 
@@ -29,14 +29,14 @@ class TestLiteralCascadeProperties:
     @given(st.integers(min_value=-(10**15), max_value=10**15))
     def test_integers_roundtrip(self, i):
         interp = DocInterpreter()
-        lit = interp._parse_literal(str(i))
+        lit = interp._parse_literal(_segment(str(i)))
         assert lit.datatype == XSD.integer and lit.lexical == str(i)
 
     @given(st.floats(allow_nan=False, allow_infinity=False, width=64))
     def test_floats_coerce(self, f):
         s = repr(f)
         interp = DocInterpreter()
-        lit = interp._parse_literal(s)
+        lit = interp._parse_literal(_segment(s))
         # ints-in-disguise ("1e2" is a float literal; "100.0" too)
         if lit.datatype == XSD.integer:
             assert float(lit.lexical) == f
@@ -50,7 +50,7 @@ class TestLiteralCascadeProperties:
         if "@{" in s:
             return
         interp = DocInterpreter()
-        lit = interp._parse_literal(s)
+        lit = interp._parse_literal(_segment(s))
         assert lit is not None
 
     @given(text_st)
@@ -58,7 +58,7 @@ class TestLiteralCascadeProperties:
         if "@{" in s or s.strip() in ("true", "True", "TRUE", "false", "False", "FALSE"):
             return
         interp = DocInterpreter()
-        lit = interp._parse_literal("^" + s)
+        lit = interp._parse_literal(_segment("^" + s))
         # '^'+s: int('^..') always fails, so result is the string s...
         # unless s itself parses as number after the caret is kept — it
         # can't: '^' prefix kills int/float parses. Plain literal == s.
@@ -74,19 +74,19 @@ class TestTemplateProperties:
     def test_defined_vars_expand(self, vars_):
         interp = DocInterpreter(initial_vars=vars_)
         for name, val in vars_.items():
-            assert interp.expand("@{" + name + "}") == (val or "")
+            assert interp.expand(_segment("@{" + name + "}")) == (val or "")
 
     @given(text_st)
     def test_no_refs_identity(self, s):
         if "@{" in s:
             return
         interp = DocInterpreter()
-        assert interp.expand(s) == s
+        assert interp.expand(_segment(s)) == s
 
     @given(st.from_regex(r"[a-z]{1,8}", fullmatch=True))
     def test_undefined_var_is_None_literal(self, name):
         interp = DocInterpreter()
-        assert interp.expand("@{" + name + "}") == "None"
+        assert interp.expand(_segment("@{" + name + "}")) == "None"
 
 
 class TestExtractionProperties:
