@@ -31,6 +31,10 @@ its quirks, because triple-set agreement (P/R >= 0.95) is the gate:
   refs; an undefined variable expands to the literal string ``"None"``
   because the reference stringifies before its None-check
   (processor.py:2644) — replicated for byte parity;
+* ``break:`` skips the rest of the current row of the innermost running
+  ``pre:``-scanned ``match-dimensions`` table, the scope ``tag-dimension``
+  writes to; outside one it does nothing (not checked against the
+  reference's ``break_dimension``, processor.py:1970, 1817-1819);
 * the literal coercion cascade incl. the ``^`` string-escape, the
   empty-float→``nan`` rule, the falsy-value table for ``bool:``, and the
   fall-through (error) behavior of ``date: today`` / ``datetime: now``
@@ -367,8 +371,7 @@ class DocInterpreter:
         self._procedures: Dict[str, list] = {}
         self._imports: Dict[str, bool] = {}
         self._seen_triples: set = set()
-        self._dim_tags_stack: List[list] = []
-        self._break_dimension = False
+        self._tables: List[list] = []  # per running pre: table: [tags per dimension, break flag]
         self._collect_log = collect_log
         self._query_fn = query_fn
 
@@ -1230,14 +1233,14 @@ class DocInterpreter:
             self._on_text(m.group(1), self._seq, self._cell_ops(counts, cells) or body)
 
         def walk(dim: int, table: list) -> None:
-            """Run the cells of a pre-scanned table; ``break:`` acts only
-            here and skips the rest of its row."""
+            """Run the cells of a pre-scanned table; a ``break:`` in this
+            table skips the rest of its row."""
             for count, m in enumerate(table, 1):
                 enter(dim, count)
                 if dim < last:
                     walk(dim + 1, m)
-                    self._break_dimension = False
-                elif self._break_dimension:
+                    table_scope[1] = False
+                elif table_scope[1]:
                     break
                 else:
                     run_cell(m)
@@ -1246,19 +1249,20 @@ class DocInterpreter:
         if pre_steps is None:
             scan(0, self._text, run_cell)
         else:
-            self._dim_tags_stack.append([None] * len(dimensions))
+            table_scope = [[None] * len(dimensions), False]
+            self._tables.append(table_scope)
             try:
                 table = scan(0, self._text, save_key)
                 self._seq(pre_steps)
                 walk(0, table)
             finally:
-                self._dim_tags_stack.pop()
+                self._tables.pop()
         return (self.result.no_matches > prev_matches, None)
 
     def _cell_ops(self, counts, cells):
         """Most-specific do-<i>-<j> body: per dimension its tag, its index,
         then '*', depth-first (processor.py:1903-1933)."""
-        tags = self._dim_tags_stack[-1] if self._dim_tags_stack else None
+        tags = self._tables[-1][0] if self._tables else None
         choices = []
         for dim, count in enumerate(counts):
             tag = None
@@ -1285,11 +1289,11 @@ class DocInterpreter:
         dim_no = int(self.expand(dim_no))
         at_index = int(self.expand(_late(at_index)))
         tag_name = _late(tag_name)
-        if not self._dim_tags_stack:
+        if not self._tables:
             raise ProcessorException(
                 "tag-dimension is only valid inside a match-dimensions pre: scope"
             )
-        dim_tags = self._dim_tags_stack[-1]
+        dim_tags = self._tables[-1][0]
         if dim_no < 1 or dim_no > len(dim_tags):
             raise ProcessorException(
                 f"tag-dimension {dim_no} out of range 1..{len(dim_tags)}"
@@ -1304,7 +1308,8 @@ class DocInterpreter:
         return (True, None)
 
     def _op_break(self, a: None) -> Tuple[bool, Any]:
-        self._break_dimension = True
+        if self._tables:  # outside a pre: table, break: stops nothing
+            self._tables[-1][1] = True
         return (True, None)
 
     # -- mappings (the entity-linking dictionary; processor.py:1992-2104) --------

@@ -844,6 +844,35 @@ class TestMatchDimensions:
         t = triples(self.BREAK_ON_A.format(pre=""), self.TABLE)
         assert [r[3] for r in t] == ["k-h1", "k-h2", "k-a", "k-b", "k-c", "k-d"]
 
+    @pytest.mark.parametrize("first", [
+        "['<tr>(.*?)</tr>', '<td>(.*?)</td>']",
+        "['<td>(.*?)</td>']\n      dimensions: [k]\n      pre: [{pass: 1}]",
+    ], ids=["two-dimensional-without-pre", "one-dimensional-with-pre"])
+    def test_break_acts_only_in_the_table_that_ran_it(self, first):
+        """A break: in the first table does not reach the second one."""
+        src = f"""
+- within: '<t1>(.*?)</t1>'
+  do:
+    - match-dimensions: {first}
+      do: [{{break: 1}}]
+- within: '<t2>(.*?)</t2>'
+  do:
+    - match-dimensions: ['<tr>(.*?)</tr>', '<td>(.*?)</td>']
+      dimensions: [r, k]
+      as: cell
+      pre: [{{pass: 1}}]
+      do: [{{dump: _, file: 'f_@{{cell.1}}'}}]
+"""
+        text = "<t1>{}</t1><t2>{}</t2>".format(*(
+            "".join(f"<tr><td>{a}</td><td>{b}</td></tr>" for a, b in rows)
+            for rows in (("pq", "rs"), ("ab", "cd"))))
+        res = run(src, text)
+        assert res.error is None and sorted(res.texts) == ["f_a", "f_b", "f_c", "f_d"]
+
+    def test_pre_without_dimensions_raises(self):
+        src = "- match-dimensions: ['(a)']\n  pre: [{pass: 1}]\n  do: [{pass: 1}]\n"
+        assert run(src, "a").error == "TypeError: object of type 'NoneType' has no len()"
+
     def test_match1_deprecated_header_rebinding(self):
         src = """
 - match-1: '<tr>(.*?)</tr>'
