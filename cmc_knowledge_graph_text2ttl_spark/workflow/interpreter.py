@@ -63,6 +63,8 @@ valid workflow can rely on them):
 * ``inverse:`` on a literal object raises after the forward triple: Turtle
   has no literal subject, and the reference hands rdflib one for the
   reversed triple.
+* a mapping pair maps to ``str(to:)`` on every hit; the reference does so
+  only on an exact hit and fails to expand a non-string on the others.
 """
 
 from __future__ import annotations
@@ -1331,13 +1333,12 @@ class DocInterpreter:
                     raise ProcessorException(
                         f"Mapping element {p!r} has both a 'from' and a 're' attribute"
                     )
-                # an exact hit expands str(to:), an ignore-case hit to: itself
-                exact[f_text] = (_segment(str(f_to)), _segment(f_to))
+                exact[f_text] = _segment(str(f_to))
                 if ignore_case:
                     exact[f_text.lower()] = exact[f_text]
             elif f_re:
                 # a non-string re: fails in re.match when a lookup reaches it
-                rx_pairs.append((re.compile(f_re) if isinstance(f_re, str) else f_re, _segment(f_to)))
+                rx_pairs.append((re.compile(f_re) if isinstance(f_re, str) else f_re, _segment(str(f_to))))
             else:
                 raise ProcessorException(
                     f"Mapping element {p!r} has neither a 'from' nor a 're' attribute"
@@ -1365,7 +1366,8 @@ class DocInterpreter:
         return (True, mapped)
 
     def apply_mapping(self, name: str, value: str) -> str:
-        """Exact-dict hit first, then ordered regex pairs, else identity.
+        """Exact-dict hit first, then ordered regex pairs, else identity;
+        every hit expands its pair's ``str(to:)``.
 
         Regex pairs are matched with ``re.match`` and NO flags — the
         mapping's flags only affect the exact dict's lowercased copy. The
@@ -1379,12 +1381,10 @@ class DocInterpreter:
             raise ProcessorException(f"map: no mapping named {name} is defined")
         exact, rx_pairs, flags = mapping
         repl = exact.get(value)
-        if repl is not None:
-            return self.expand(repl[0])
-        if flags & re.IGNORECASE:
+        if repl is None and flags & re.IGNORECASE:
             repl = exact.get(value.lower())
-            if repl is not None:
-                return self.expand(repl[1])
+        if repl is not None:
+            return self.expand(repl)
         for pat, repl in rx_pairs:
             if re.match(pat, value):
                 return self.expand(repl)

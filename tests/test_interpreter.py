@@ -934,6 +934,13 @@ class TestMappings:
     def test_unknown_mapping_raises(self):
         assert "no mapping named" in run("- map: x\n  apply: nope\n").error
 
+    @pytest.mark.parametrize("value, mapped", [("abc", "5"), ("ABC", "5"), ("xyz", "7")],
+                             ids=["exact", "ignore-case", "regex"])
+    def test_non_string_to_maps_to_its_string_on_every_hit(self, value, mapped):
+        src = ("- mapping: m\n  flags: I\n  pairs: [{from: abc, to: 5}, {re: 'x.*', to: 7}]\n"
+               f"- map: {value}\n  apply: m\n  to: out\n" + S.format(obj="'^@{out}'"))
+        assert triples(src)[0][3] == mapped
+
 
 # ---------------------------------------------------------------------------
 # Stats & scoring (processor.py:2713-2725)
