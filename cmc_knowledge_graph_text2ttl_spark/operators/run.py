@@ -215,8 +215,9 @@ def run_workflows(
     ``select_best=True`` adds the ``is_best`` top-1 flag *inside the UDF*:
     all candidate rows of one document are produced together in one task,
     so the best-workflow selection needs NO shuffle at all — the window
-    variant (operators.best) exists for stats re-ranked from checkpoints,
-    but the hot path never moves the triple payloads across the cluster.
+    variant (operators.best) serves the ``kg_best_workflow`` query and the
+    frozen ``bench.py``, but the hot path never moves the triple payloads
+    across the cluster.
     The tie-break is identical to the reference's stable descending sort
     (runner.py:402-407): earliest workflow wins ties.
     """

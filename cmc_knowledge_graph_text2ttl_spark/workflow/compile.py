@@ -41,11 +41,11 @@ class WorkflowProgram:
     """A compiled, broadcast-ready workflow.
 
     ``plan`` is the list of compiled ``(handler, prepared args)`` steps and
-    ``source`` the YAML it was compiled from; ``name`` identifies the workflow
-    in the ``triples``/``doc_stats`` provenance columns; ``index`` is the
-    position in the submitted workflow list and provides the stable
-    tie-break for best-workflow selection (runner.py:402-407 relies on
-    Python's stable sort; we make the order explicit).
+    ``source`` the YAML it was compiled from; ``name`` fills the ``workflow``
+    column of the results and triples tables; ``index`` is the position in
+    the submitted workflow list and provides the stable tie-break for
+    best-workflow selection (runner.py:402-407 relies on Python's stable
+    sort; we make the order explicit).
     """
 
     name: str

@@ -19,7 +19,7 @@ import yaml
 
 from cmc_knowledge_graph_text2ttl_spark.core import ProcessorException, XSD
 from cmc_knowledge_graph_text2ttl_spark.core.errors import WorkflowCompileError
-from cmc_knowledge_graph_text2ttl_spark.workflow import compile_workflow_file, run_document
+from cmc_knowledge_graph_text2ttl_spark.workflow import compile_workflow_file, interpreter, run_document
 from cmc_knowledge_graph_text2ttl_spark.workflow.interpreter import OPS, DocInterpreter, _raise, _segment, compile_plan
 
 from conftest import REPO, wf
@@ -1335,6 +1335,20 @@ class TestCompiledForm:
     def test_embedded_python_in_nested_plans_warns(self, src, path):
         warnings = wf(src).warnings
         assert len(warnings) == 1 and warnings[0].startswith(path + ": workflow embeds Python")
+
+    def test_a_plan_without_nested_refs_segments_nothing_when_run(self, corpus, monkeypatch):
+        """Templates are segmented when the plan compiles: running the fixture
+        workflows, which hold no nested ref and no list object spec, on the
+        golden corpus segments no string."""
+        programs = [compile_workflow_file(p) for p in
+                    sorted(glob.glob(os.path.join(REPO, "fixtures", "workflows", "*.yaml")))]
+        calls = []
+        monkeypatch.setattr(interpreter, "_segment", lambda t: calls.append(t) or _segment(t))
+        results = [r for program in programs for r in self._results(program, corpus)]
+        assert sum(len(r.triples) for r in results) > 0 and calls == []
+
+    def test_interpreter_keeps_no_lru_cache(self):
+        assert "lru_cache" not in inspect.getsource(interpreter)
 
     def test_every_handler_takes_interp_and_args(self):
         """One handler signature: whatever a step holds is in its prepared
