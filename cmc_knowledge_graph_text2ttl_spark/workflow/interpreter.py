@@ -65,6 +65,15 @@ valid workflow can rely on them):
   reversed triple.
 * a mapping pair maps to ``str(to:)`` on every hit; the reference does so
   only on an exact hit and fails to expand a non-string on the others.
+* every step attribute is read once, when the step compiles, and a step's
+  first bad attribute is its error before any run-time work: a step that
+  is broken twice (its first template fails to expand and a later
+  attribute is missing or ill-typed) reports the attribute, where the
+  reference reports the expansion error it meets first.
+* a ``set`` with a list or mapping ``to:`` gives each document its own
+  copy, so ``append:`` grows that document's list only. Storing the
+  workflow's own value would let one document's appends reach every later
+  document the same plan runs (not checked against the reference's ``set``).
 """
 
 from __future__ import annotations
@@ -82,6 +91,8 @@ from ..core.errors import ProcessorException, WorkflowCompileError
 from ..core.terms import IriNode, LitNode, XSD
 
 if TYPE_CHECKING:
+    from types import ModuleType
+
     from .compile import WorkflowProgram
 
 # ---------------------------------------------------------------------------
@@ -188,22 +199,14 @@ def _raise(interp: "DocInterpreter", error: Exception) -> None:
     raise copy.copy(error)
 
 
-def _late(value: Any) -> Any:
-    """A ``late`` attribute read: raise its error here, in handler order."""
-    if isinstance(value, Exception):
-        raise copy.copy(value)
-    return value
-
-
 class _StepReader:
     """Reads one step's attributes once, on the driver.
 
     An attribute error is what the step raises when a document reaches it,
-    so the first one is kept in ``errors`` rather than raised, and the rest
-    of the step (nested plans, static patterns) is still compiled and
-    checked. A ``late`` read returns its error instead: the handler raises
-    it with :func:`_late` after the run-time work that the reference does
-    before reading that attribute. A ``template`` read segments the value.
+    before any run-time work, so the first one in read order is kept in
+    ``errors`` rather than raised, and the rest of the step (nested plans,
+    static patterns) is still compiled and checked. A ``template`` read
+    segments the value.
     ``scope`` is None, or for an entry of a ``predicates:``/``objects:``
     list the subject, predicate and inverse its enclosing triple step
     implies.
@@ -218,8 +221,7 @@ class _StepReader:
         if not self.errors:
             self.errors.append(error.with_traceback(None))
 
-    def get(self, name: str, expected_type=None, optional: bool = False, late: bool = False,
-            template: bool = False):
+    def get(self, name: str, expected_type=None, optional: bool = False, template: bool = False):
         try:
             val = self.step.get(name)  # a non-mapping entry fails here too
             if val is None:
@@ -232,16 +234,12 @@ class _StepReader:
                 )
             return _segment(val) if template else val
         except Exception as ex:
-            if late:
-                return ex.with_traceback(None)
             self.fail(ex)
             return None
 
-    def plan(self, name: str, optional: bool = False, late: bool = False):
-        body = self.get(name, list, optional, late)
-        if isinstance(body, list):
-            return compile_plan(body, f"{self.path}.{name}", self.warnings)
-        return body
+    def plan(self, name: str, optional: bool = False):
+        body = self.get(name, list, optional)
+        return None if body is None else compile_plan(body, f"{self.path}.{name}", self.warnings)
 
     def flags(self, init: int = re.DOTALL) -> int:
         """The ``flags:`` names OR-ed onto ``init``: match ops keep their DOTALL
@@ -371,7 +369,7 @@ class DocInterpreter:
         self._prefixes: Dict[str, str] = {}
         self._mappings: Dict[str, Tuple[dict, list, int]] = {}
         self._procedures: Dict[str, list] = {}
-        self._imports: Dict[str, bool] = {}
+        self._imports: Dict[str, ModuleType] = {}
         self._seen_triples: set = set()
         self._tables: List[list] = []  # per running pre: table: [tags per dimension, break flag]
         self._collect_log = collect_log
@@ -808,6 +806,8 @@ class DocInterpreter:
                 ) from ex
         elif template is not None:
             value = self.expand(template)
+        else:  # append: grows a list in place, so each document gets its own
+            value = copy.deepcopy(value)
         self._vars[var] = value
         return (True, value)
 
@@ -817,12 +817,11 @@ class DocInterpreter:
 
     @staticmethod
     def _prep_append(r: _StepReader) -> tuple:
-        return (r.get("append", str, template=True), r.get("element", late=True, template=True))
+        return (r.get("append", str, template=True), r.get("element", template=True))
 
     def _op_append(self, a: tuple) -> Tuple[bool, Any]:
         var, element = a
         var = self.expand(var)
-        element = _late(element)
         lst = self._vars.get(var)
         if lst is None or lst == "":
             lst = []
@@ -884,13 +883,11 @@ class DocInterpreter:
 
     @staticmethod
     def _prep_cond_def(r: _StepReader) -> tuple:
-        # do: is read after the condition expands (late)
-        return (r.get(r.kw, template=True), r.plan("do", late=True), r.kw == "ifndef")
+        return (r.get(r.kw, template=True), r.plan("do"), r.kw == "ifndef")
 
     def _op_cond_def(self, a: tuple) -> Tuple[bool, Any]:
         condition, body, negate = a
         condition = self.expand(condition)
-        body = _late(body)
         defined = False
         m = _IFDEF_MATCH_REF.match(condition)
         if m:
@@ -1058,12 +1055,11 @@ class DocInterpreter:
 
     @staticmethod
     def _prep_with(r: _StepReader) -> tuple:
-        # do: is read after the text expands (late)
-        return (r.get("with", template=True), r.plan("do", late=True))
+        return (r.get("with", template=True), r.plan("do"))
 
     def _op_with(self, a: tuple) -> Tuple[bool, Any]:
         text, body = a
-        return self._on_text(self.expand(text), self._seq, _late(body))
+        return self._on_text(self.expand(text), self._seq, body)
 
     # -- sequence-of (processor.py:1456-1618) -----------------------------------
 
@@ -1280,17 +1276,14 @@ class DocInterpreter:
 
     @staticmethod
     def _prep_tag_dimension(r: _StepReader) -> tuple:
-        # the numbers expand as strings; at: and as: are each read after the
-        # value before them expands
-        dim_no, at = r.get("tag-dimension"), r.get("at", late=True)
-        at = at if isinstance(at, Exception) else _segment(str(at))
-        return (_segment(str(dim_no)), at, r.get("as", str, late=True))
+        # the numbers expand as strings
+        dim_no, at = r.get("tag-dimension"), r.get("at")
+        return (_segment(str(dim_no)), _segment(str(at)), r.get("as", str))
 
     def _op_tag_dimension(self, a: tuple) -> Tuple[bool, Any]:
         dim_no, at_index, tag_name = a
         dim_no = int(self.expand(dim_no))
-        at_index = int(self.expand(_late(at_index)))
-        tag_name = _late(tag_name)
+        at_index = int(self.expand(at_index))
         if not self._tables:
             raise ProcessorException(
                 "tag-dimension is only valid inside a match-dimensions pre: scope"
@@ -1352,20 +1345,9 @@ class DocInterpreter:
 
     @staticmethod
     def _prep_map(r: _StepReader) -> tuple:
-        # apply: and to: are read after the value expands
-        return (r.get("map", str, template=True), r.get("apply", str, late=True),
-                r.get("to", optional=True, late=True))
+        return (r.get("map", str, template=True), r.get("apply", str), r.get("to", optional=True))
 
     def _op_map(self, a: tuple) -> Tuple[bool, Any]:
-        value, mapping, var = a
-        value = self.expand(value)
-        mapping, var = _late(mapping), _late(var)
-        mapped = self.apply_mapping(mapping, value)
-        if var is not None:
-            self._vars[var] = mapped
-        return (True, mapped)
-
-    def apply_mapping(self, name: str, value: str) -> str:
         """Exact-dict hit first, then ordered regex pairs, else identity;
         every hit expands its pair's ``str(to:)``.
 
@@ -1376,6 +1358,8 @@ class DocInterpreter:
         latest match: it expands the variable ``N``, ``"None"`` when unset
         (processor.py:2644).
         """
+        value, name, var = a
+        value = self.expand(value)
         mapping = self._mappings.get(name)
         if mapping is None:
             raise ProcessorException(f"map: no mapping named {name} is defined")
@@ -1383,12 +1367,12 @@ class DocInterpreter:
         repl = exact.get(value)
         if repl is None and flags & re.IGNORECASE:
             repl = exact.get(value.lower())
-        if repl is not None:
-            return self.expand(repl)
-        for pat, repl in rx_pairs:
-            if re.match(pat, value):
-                return self.expand(repl)
-        return value
+        if repl is None:
+            repl = next((to for pat, to in rx_pairs if re.match(pat, value)), None)
+        mapped = value if repl is None else self.expand(repl)
+        if var is not None:
+            self._vars[var] = mapped
+        return (True, mapped)
 
     # -- graph lookup (select:) ----------------------------------------------------
 
@@ -1396,17 +1380,14 @@ class DocInterpreter:
     def _prep_select(r: _StepReader) -> tuple:
         selection, graph_id = r.get("select", str), r.get("from", str)
         where = r.get("where", str, template=True)
-        # as:, else: and do: are read after where: expands
-        return (selection, graph_id, where, r.get("as", str, optional=True, late=True),
-                r.plan("else", optional=True, late=True), r.plan("do", optional=True, late=True))
+        var_ids = r.get("as", str, optional=True) or selection
+        else_steps, row_steps = r.plan("else", optional=True), r.plan("do", optional=True)
+        return (graph_id, where, re.split(r"\s+", selection), re.split(r"\s+", var_ids),
+                else_steps, row_steps)
 
     def _op_select(self, a: tuple) -> Tuple[bool, Any]:
-        selection, graph_id, where, var_ids, else_steps, row_steps = a
+        graph_id, where, select_vars, stored_vars, else_steps, row_steps = a
         where_clause = self.expand(where)
-        var_ids = _late(var_ids) or selection
-        else_steps, row_steps = _late(else_steps), _late(row_steps)
-        select_vars = re.split(r"\s+", selection)
-        stored_vars = re.split(r"\s+", var_ids)
         if self._query_fn is None:
             raise ProcessorException(
                 f"No query handler configured for select: from {graph_id}"

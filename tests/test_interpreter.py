@@ -13,6 +13,7 @@ import os
 import pickle
 import re
 import time
+from typing import Tuple
 
 import pytest
 import yaml
@@ -462,6 +463,26 @@ class TestControlFlow:
 """
         t = triples(src)
         assert [r[3] for r in t] == ["a-1", "b-2"]
+
+    def test_set_list_is_copied_per_document(self):
+        """append: grows the document's own copy of a list to:, not the
+        compiled plan's, so a later document of the same plan starts over."""
+        program = wf("- set: v\n  to: [a]\n- append: v\n  element: x\n- echo: '@{v}'\n")
+        logs = [run_document("", program, collect_log=True).log for _ in range(3)]
+        assert logs == [["ECHO: ['a', 'x']"]] * 3
+
+    def test_procedure_append_reaches_callers_list(self):
+        """call copies the variables shallowly: a procedure's append: grows
+        the caller's list in place, and that stays visible after the call."""
+        src = """
+- set: v
+  to: [a]
+- procedure: p
+  do: [{append: v, element: y}]
+- call: p
+- echo: '@{v}'
+"""
+        assert run(src, collect_log=True).log == ["ECHO: ['a', 'y']"]
 
     def test_for_each_missing_list_is_failure_not_error(self):
         src = """
@@ -1224,6 +1245,26 @@ class TestSmallGaps:
 # ---------------------------------------------------------------------------
 # The compiled form: steps are compiled once and never written back to
 
+# Steps whose first template is ``{t}`` and whose later attribute is missing
+# or ill-typed, with that attribute's error.
+BROKEN_LATER_ATTRIBUTE = {
+    "append": ("- append: '{t}'\n", "step is missing its required 'element' attribute"),
+    "ifdef": ("- ifdef: '{t}'\n  do: notalist\n",
+              "Step attribute 'do' has invalid type; expected <class 'list'>"),
+    "ifndef": ("- ifndef: '{t}'\n  do: notalist\n",
+               "Step attribute 'do' has invalid type; expected <class 'list'>"),
+    "with": ("- with: '{t}'\n  do: notalist\n",
+             "Step attribute 'do' has invalid type; expected <class 'list'>"),
+    "tag-dimension-at": ("- tag-dimension: '{t}'\n", "step is missing its required 'at' attribute"),
+    "tag-dimension-as": ("- tag-dimension: '{t}'\n  at: 1\n",
+                         "step is missing its required 'as' attribute"),
+    "map": ("- map: '{t}'\n", "step is missing its required 'apply' attribute"),
+    "select-do": ("- select: x\n  from: g\n  where: '{t}'\n  do: notalist\n",
+                  "Step attribute 'do' has invalid type; expected <class 'list'>"),
+    "select-as": ("- select: x\n  from: g\n  where: '{t}'\n  as: [x]\n",
+                  "Step attribute 'as' has invalid type; expected <class 'str'>"),
+}
+
 
 class TestCompiledForm:
     @pytest.fixture(scope="class")
@@ -1346,6 +1387,68 @@ class TestCompiledForm:
         monkeypatch.setattr(interpreter, "_segment", lambda t: calls.append(t) or _segment(t))
         results = [r for program in programs for r in self._results(program, corpus)]
         assert sum(len(r.triples) for r in results) > 0 and calls == []
+
+    @pytest.mark.parametrize("src, message", BROKEN_LATER_ATTRIBUTE.values(),
+                             ids=BROKEN_LATER_ATTRIBUTE.keys())
+    def test_bad_attribute_is_the_error_of_a_step_broken_twice(self, src, message):
+        """Every attribute is read when the step compiles: a bad one is the
+        step's error before its first template (an undefined match) expands."""
+        assert run(src.format(t="@{q.1}")).error == message
+
+    @pytest.mark.parametrize("src, message", BROKEN_LATER_ATTRIBUTE.values(),
+                             ids=BROKEN_LATER_ATTRIBUTE.keys())
+    def test_bad_attribute_is_the_error_of_a_step_broken_once(self, src, message):
+        assert run(src.format(t="1")).error == message
+
+    @staticmethod
+    def _held_errors(plan) -> Tuple[int, list]:
+        """The compiled plan's allowed errors (a ``_raise`` step's or object
+        spec's argument, an ``_op_triple`` emission) and any other error
+        its args hold."""
+        allowed, stray = [0], []
+
+        def walk(x):
+            if isinstance(x, Exception):
+                stray.append(x)
+            elif isinstance(x, tuple) and len(x) == 2 and x[0] is _raise:
+                assert isinstance(x[1], Exception)
+                allowed[0] += 1
+            elif isinstance(x, tuple) and len(x) == 2 and x[0] is DocInterpreter._op_triple:
+                allowed[0] += sum(isinstance(e, Exception) for e in x[1])
+                walk([e for e in x[1] if not isinstance(e, Exception)])
+            elif isinstance(x, (list, tuple)):
+                for y in x:
+                    walk(y)
+            elif isinstance(x, dict):
+                walk(list(x.values()))
+
+        walk(plan)
+        return allowed[0], stray
+
+    def test_compiled_args_hold_errors_only_in_raise_steps_and_emissions(self):
+        """No handler unwraps an error from its args: the steps above, the
+        fixture workflows and the control-sweep workflows hold an error only
+        where ``_raise`` or ``_op_triple`` raises it."""
+        from fixture_writers import CONTROL_SEED, CONTROL_WORKFLOWS, control_sweep_workflows
+
+        sources = [(name, src.format(t=t)) for name, (src, _) in BROKEN_LATER_ATTRIBUTE.items()
+                   for t in ("@{q.1}", "1")]
+        for path in sorted(glob.glob(os.path.join(REPO, "fixtures", "workflows", "*.yaml"))
+                           + glob.glob(os.path.join(REPO, "fixtures", "workflows_ops", "*.yaml"))):
+            with open(path) as fh:
+                sources.append((os.path.basename(path), fh.read()))
+        sources += control_sweep_workflows(CONTROL_WORKFLOWS, CONTROL_SEED)
+        allowed, stray = 0, {}
+        for name, src in sources:
+            try:
+                plan = wf(src).plan
+            except WorkflowCompileError:
+                continue
+            n, errors = self._held_errors(plan)
+            allowed += n
+            if errors:
+                stray[name] = errors
+        assert allowed >= len(BROKEN_LATER_ATTRIBUTE) * 2 and stray == {}
 
     def test_interpreter_keeps_no_lru_cache(self):
         assert "lru_cache" not in inspect.getsource(interpreter)
